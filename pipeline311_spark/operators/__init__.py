@@ -23,7 +23,6 @@ from pipeline311_spark.operators.aggregates import (  # noqa: F401
 )
 from pipeline311_spark.operators.merge import (  # noqa: F401
     upsert,
-    incremental_merge,
     latest_per_key,
 )
 from pipeline311_spark.operators.reconcile import (  # noqa: F401

@@ -95,8 +95,7 @@ def compact_parquet_dir(
     LOCAL-FS ONLY by design: the size walk and the two-rename atomic
     swap use ``os`` primitives (object stores have no atomic rename —
     a remote-capable compactor belongs to the table format:
-    Delta/Iceberg ``OPTIMIZE``, which the MERGE backend seam already
-    points at).  On a cluster this is the maintenance pass for the
+    Delta/Iceberg ``OPTIMIZE``).  On a cluster this is the maintenance pass for the
     local staging tier, not the object-store warehouse.
     """
     import math

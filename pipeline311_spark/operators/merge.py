@@ -3,15 +3,17 @@
 The reference upserts three ways — dbtools staged-CSV upsert
 (sync-db2.py:78-88), SQL ``ON CONFLICT DO UPDATE`` (sync-db2-viewer.py:
 56-79), and AGO delete-then-add (sync-db2-ago.py:629-643).  All are the
-same logical MERGE.  Without a transactional table format in this
-container (no Delta), the engine's portable kernel is the
-window-dedup MERGE: ``union`` + ``row_number() over (partition by pk
+same logical MERGE, and the engine has one kernel for it: the
+window-dedup MERGE, ``union`` + ``row_number() over (partition by pk
 order by version desc)`` = 1 — exactly-once per key, fully shuffled,
-scales to any size (no driver materialization).
+scales to any size (no driver materialization).  Warehouse writes go
+through :func:`pipeline311_spark.operators.merge_backends.upsert_into`;
+the watermark-incremental callers (pipelines, streaming) compose
+``max_watermark`` + ``watermark_filter`` + :func:`upsert`.
 
-At 100 TB: the shuffle is on the primary key (unique → no skew);
-with Delta/Iceberg available the same API maps to a native MERGE and
-gets file-skipping; either way nothing here collects to the driver.
+At 100 TB: the shuffle is on the primary key (unique → no skew), and
+the partitioned path below rewrites only touched partitions; nothing
+here collects to the driver.
 """
 
 from __future__ import annotations
@@ -47,34 +49,14 @@ def upsert(target: DataFrame, updates: DataFrame, key: str, version_col: str) ->
     return latest_per_key(t.unionByName(u), key, version_col, tiebreak="__src").drop("__src")
 
 
-def incremental_merge(
-    target: DataFrame,
-    source: DataFrame,
-    key: str,
-    watermark_col: str = "updated_datetime",
-    inclusive: bool = False,
-) -> DataFrame:
-    """T1: the whole incremental sync loop as one operator — read the
-    destination watermark (A1), pull newer source rows (F3/F4), MERGE
-    (K3).  ``inclusive`` selects the ``>=`` boundary (safe because the
-    MERGE is idempotent — SURVEY §7.5.5)."""
-    w = target.agg(F.max(watermark_col)).first()[0]
-    if w is None:
-        changed = source
-    else:
-        c = F.col(watermark_col)
-        changed = source.filter(c >= F.lit(w) if inclusive else c > F.lit(w))
-    return upsert(target, changed, key, watermark_col)
-
-
 def guard_no_warehouse_narrowing(spark, target_path: str, updates: DataFrame) -> None:
     """Guard BEFORE trusting ``updates.schema`` for a pruned warehouse
     read: a batch that silently lost a column would otherwise read the
     warehouse minus that column and write it back narrowed (silent data
     loss).  An empty warehouse (zero-row base write, no partition dirs)
     has no inferable schema — nothing to narrow, guard skipped.  Shared
-    by the partitioned MERGE below and the unpartitioned parquet
-    backend (operators/merge_backends.py).
+    by the partitioned MERGE below and the unpartitioned path of
+    ``upsert_into`` (operators/merge_backends.py).
 
     Only the two AnalysisException classes that mean "empty/absent
     warehouse" are swallowed: any OTHER failure of the schema read

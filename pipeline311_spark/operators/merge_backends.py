@@ -1,36 +1,16 @@
-"""Pluggable MERGE backends (K3/K4 at warehouse scale).
+"""The warehouse MERGE entry point (K3/K4 at warehouse scale).
 
-SCALE.md has argued since r2 that swapping the portable window-dedup
-MERGE for a transactional table format is "local to operators/merge.py"
-— this module turns that prose into a checked seam.  Every warehouse
-MERGE goes through :func:`upsert_into`, which dispatches to a named
-backend:
-
-* ``parquet`` (default, always available): the window-dedup kernel
-  (:func:`pipeline311_spark.operators.merge.upsert`) against a parquet
-  path — partition-pruned rewrite when ``partition_col`` is given
-  (:func:`merge_incremental_partitioned`), full lineage-broken rewrite
-  otherwise.  Exactly the semantics the k3 oracles gate.
-* ``delta``: a native ``DeltaTable.merge`` with the same
-  updates-win-on-version-tie semantics.  The delta-spark library is not
-  in this container, so the backend raises a clear ImportError at
-  construction; its exact builder-call chain and tie-break semantics
-  are contract-asserted against a recording, EXECUTING fake
-  (tests/fake_delta.py), and the live test runs wherever delta-spark
-  is installed.
-* ``sqlmerge``: the ANSI ``MERGE INTO`` statement for SQL-capable v2
-  catalogs (Iceberg, Delta-SQL, Unity) — same clause chain as the
-  Delta adapter, statement text contract-asserted.
-
-At 100 TB the seam is what matters: the call sites (sinks, streaming
-foreachBatch, the k3 queries) name a backend and a target ref, and the
-cluster's table format decides file-skipping vs dynamic-partition
-rewrite — no call-site rewrites to migrate.
+Every warehouse MERGE goes through :func:`upsert_into`: the window-dedup
+kernel (:func:`pipeline311_spark.operators.merge.upsert`) against a
+parquet path — partition-pruned rewrite when ``partition_col`` is given
+(:func:`merge_incremental_partitioned`), full lineage-broken rewrite
+otherwise.  Exactly the semantics the k3 oracles gate.
 
 Reference parity: the reference upserts via staged-CSV dbtools
 (sync-db2.py:78-88) and SQL ``ON CONFLICT DO UPDATE``
-(sync-db2-viewer.py:56-79); both map to ``upsert_into`` with the
-appropriate backend.
+(sync-db2-viewer.py:56-79); both map to ``upsert_into``.  A native
+table-format MERGE (Delta/Iceberg file-skipping) would be a local change
+inside this function; the call sites name only a target ref.
 """
 
 from __future__ import annotations
@@ -50,209 +30,6 @@ def _warehouse_exists(spark: SparkSession, target_ref: str) -> bool:
     return fs.exists(path)
 
 
-class ParquetWindowMergeBackend:
-    """Window-dedup MERGE into a parquet path (the portable default)."""
-
-    name = "parquet"
-
-    def upsert_into(
-        self,
-        spark: SparkSession,
-        target_ref: str,
-        updates: DataFrame,
-        key: str,
-        version_col: str,
-        partition_col: str | None = None,
-        assume_stable_partitions: bool = False,
-    ) -> None:
-        from pipeline311_spark.operators.merge import (
-            guard_no_warehouse_narrowing,
-            merge_incremental_partitioned,
-            upsert,
-        )
-
-        if partition_col is not None:
-            if not _warehouse_exists(spark, target_ref):
-                # First batch creates the partitioned warehouse (the
-                # pruned MERGE requires an existing target to read).
-                # An EMPTY first batch is a no-op instead: a zero-row
-                # partitionBy write produces a footer-less directory no
-                # schema can be inferred from — creation waits for the
-                # first batch that has rows.
-                if updates.isEmpty():
-                    return
-                updates.write.mode("overwrite").partitionBy(partition_col).parquet(
-                    target_ref
-                )
-                return
-            merge_incremental_partitioned(
-                spark, target_ref, updates, key, version_col, partition_col,
-                assume_stable_partitions=assume_stable_partitions,
-            )
-            return
-        if _warehouse_exists(spark, target_ref):
-            from pipeline311_spark.ext.cache import release_local_checkpoint
-
-            guard_no_warehouse_narrowing(spark, target_ref, updates)
-            target = spark.read.schema(updates.schema).parquet(target_ref)
-            merged = upsert(target, updates, key, version_col)
-            # break lineage: Spark refuses to overwrite a path it reads;
-            # release the checkpoint once the write (its only consumer)
-            # is done so per-batch merges don't accumulate pinned blocks
-            ck = merged.localCheckpoint(eager=True)
-            ck.write.mode("overwrite").parquet(target_ref)
-            release_local_checkpoint(ck)
-        else:
-            updates.write.mode("overwrite").parquet(target_ref)
-
-
-class DeltaMergeBackend:
-    """Native Delta Lake MERGE with window-kernel-identical semantics:
-    updates win when their version is >= the target's (ties included),
-    unmatched updates insert, unmatched target rows survive.
-
-    Requires the delta-spark package AND a session with the Delta
-    catalog/extension configured; raises a clear ImportError otherwise
-    (this container ships neither — the seam is exercised by the
-    skipped-if-absent test and by any deployment that has Delta)."""
-
-    name = "delta"
-
-    def __init__(self) -> None:
-        try:
-            from delta.tables import DeltaTable  # noqa: F401
-        except ImportError as e:  # pragma: no cover - absent in container
-            raise ImportError(
-                "DeltaMergeBackend requires the delta-spark package "
-                "(pip install delta-spark) and a Delta-enabled SparkSession; "
-                "fall back to backend='parquet' for the portable window-dedup MERGE"
-            ) from e
-
-    def upsert_into(
-        self,
-        spark: SparkSession,
-        target_ref: str,
-        updates: DataFrame,
-        key: str,
-        version_col: str,
-        partition_col: str | None = None,
-        assume_stable_partitions: bool = False,  # Delta MERGE needs no locator scan
-    ) -> None:  # pragma: no cover - requires delta-spark
-        from delta.tables import DeltaTable
-
-        if not DeltaTable.isDeltaTable(spark, target_ref):
-            writer = updates.write.format("delta").mode("overwrite")
-            if partition_col is not None:
-                writer = writer.partitionBy(partition_col)
-            writer.save(target_ref)
-            return
-        target = DeltaTable.forPath(spark, target_ref)
-        k = key.replace("`", "``")
-        v = version_col.replace("`", "``")
-        cond = f"t.`{k}` = u.`{k}`"
-        (
-            target.alias("t")
-            .merge(updates.alias("u"), cond)
-            .whenMatchedUpdateAll(condition=f"u.`{v}` >= t.`{v}`")
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-
-class SqlMergeBackend:
-    r"""ANSI ``MERGE INTO`` statement against a SQL-capable v2 catalog
-    table (Iceberg, Delta-SQL, Unity, …) — ``target_ref`` is a TABLE
-    IDENTIFIER here, not a path.  Emits the same clause chain and
-    tie-break semantics as :class:`DeltaMergeBackend` (updates win on
-    ``version >=`` ties, unmatched updates insert, unmatched target
-    rows survive), so all three backends are interchangeable through
-    :func:`upsert_into`.
-
-    The statement text is a PURE FUNCTION (:meth:`merge_statement`) so
-    the contract test can assert it exactly; this container ships no
-    v2 catalog with row-level-operation support, so execution is
-    contract-asserted via a recorded ``spark.sql`` (the same honest
-    boundary as the Delta adapter — tests/test_merge_backends.py).
-
-    Contract divergence to know (same as the Delta adapter, tested
-    there): the source batch must be KEY-UNIQUE — SQL MERGE raises
-    MERGE_CARDINALITY_VIOLATION when several source rows match one
-    target row, where the parquet window kernel would dedup them.
-    ``target_ref`` is split on dots and each part backtick-quoted
-    (``lake.db.cases`` → ``\`lake\`.\`db\`.\`cases\```) — it must be a
-    plain dotted identifier, never arbitrary SQL."""
-
-    name = "sqlmerge"
-
-    @staticmethod
-    def _q(ident: str) -> str:
-        """Backtick-quote one identifier part (embedded backticks are
-        legal in Spark via doubling — escape, don't trust)."""
-        return "`" + ident.replace("`", "``") + "`"
-
-    @classmethod
-    def _q_ref(cls, ref: str) -> str:
-        return ".".join(cls._q(p) for p in ref.split("."))
-
-    @classmethod
-    def merge_statement(cls, target_ref: str, source_view: str, key: str, version_col: str) -> str:
-        k, v = cls._q(key), cls._q(version_col)
-        return (
-            f"MERGE INTO {cls._q_ref(target_ref)} t USING {cls._q(source_view)} u "
-            f"ON t.{k} = u.{k} "
-            f"WHEN MATCHED AND u.{v} >= t.{v} THEN UPDATE SET * "
-            f"WHEN NOT MATCHED THEN INSERT *"
-        )
-
-    def upsert_into(
-        self,
-        spark: SparkSession,
-        target_ref: str,
-        updates: DataFrame,
-        key: str,
-        version_col: str,
-        partition_col: str | None = None,
-        assume_stable_partitions: bool = False,  # native MERGE needs no locator scan
-    ) -> None:
-        import uuid
-
-        # first batch creates the table (v2 create-from-DataFrame),
-        # honoring partition_col — same bootstrap contract as the
-        # parquet and Delta backends, so the backends stay genuinely
-        # interchangeable through upsert_into (review r6: MERGE INTO a
-        # missing table raises TABLE_OR_VIEW_NOT_FOUND, killing the
-        # first micro-batch of a streaming sink)
-        if not spark.catalog.tableExists(target_ref):
-            writer = updates.writeTo(target_ref)
-            if partition_col is not None:
-                from pyspark.sql import functions as F
-
-                writer = writer.partitionedBy(F.col(partition_col))
-            writer.create()
-            return
-        view = f"__merge_src_{uuid.uuid4().hex[:12]}"
-        updates.createOrReplaceTempView(view)
-        try:
-            spark.sql(self.merge_statement(target_ref, view, key, version_col))
-        finally:
-            spark.catalog.dropTempView(view)
-
-
-_BACKENDS = {
-    ParquetWindowMergeBackend.name: ParquetWindowMergeBackend,
-    DeltaMergeBackend.name: DeltaMergeBackend,
-    SqlMergeBackend.name: SqlMergeBackend,
-}
-
-
-def get_merge_backend(name: str = "parquet"):
-    try:
-        cls = _BACKENDS[name]
-    except KeyError:
-        raise ValueError(f"unknown merge backend {name!r}; have {sorted(_BACKENDS)}")
-    return cls()
-
-
 def upsert_into(
     spark: SparkSession,
     target_ref: str,
@@ -260,16 +37,50 @@ def upsert_into(
     key: str,
     version_col: str,
     partition_col: str | None = None,
-    backend: str = "parquet",
     assume_stable_partitions: bool = False,
 ) -> None:
-    """MERGE ``updates`` into the warehouse at ``target_ref`` through
-    the named backend (see module docstring).  Pass
-    ``assume_stable_partitions=True`` when the partition value is a
-    pure function of the immutable key — it skips the parquet
-    backend's per-batch (key, partition) locator scan for moved keys
-    (see operators/merge.merge_incremental_partitioned)."""
-    get_merge_backend(backend).upsert_into(
-        spark, target_ref, updates, key, version_col, partition_col,
-        assume_stable_partitions=assume_stable_partitions,
+    """MERGE ``updates`` into the parquet warehouse at ``target_ref``
+    (see module docstring).  Pass ``assume_stable_partitions=True`` when
+    the partition value is a pure function of the immutable key — it
+    skips the per-batch (key, partition) locator scan for moved keys
+    (see operators/merge.merge_incremental_partitioned).
+
+    The first batch into an absent warehouse is reduced to the latest
+    row per key before it is written, so it lands exactly as a MERGE
+    into an empty target would (re-running the batch changes nothing)."""
+    from pipeline311_spark.operators.merge import (
+        guard_no_warehouse_narrowing,
+        latest_per_key,
+        merge_incremental_partitioned,
+        upsert,
     )
+
+    if not _warehouse_exists(spark, target_ref):
+        # An EMPTY first batch into a partitioned warehouse is a no-op:
+        # a zero-row partitionBy write produces a footer-less directory
+        # no schema can be inferred from — creation waits for the first
+        # batch that has rows.
+        if partition_col is not None and updates.isEmpty():
+            return
+        writer = latest_per_key(updates, key, version_col).write.mode("overwrite")
+        if partition_col is not None:
+            writer = writer.partitionBy(partition_col)
+        writer.parquet(target_ref)
+        return
+    if partition_col is not None:
+        merge_incremental_partitioned(
+            spark, target_ref, updates, key, version_col, partition_col,
+            assume_stable_partitions=assume_stable_partitions,
+        )
+        return
+    from pipeline311_spark.ext.cache import release_local_checkpoint
+
+    guard_no_warehouse_narrowing(spark, target_ref, updates)
+    target = spark.read.schema(updates.schema).parquet(target_ref)
+    merged = upsert(target, updates, key, version_col)
+    # break lineage: Spark refuses to overwrite a path it reads;
+    # release the checkpoint once the write (its only consumer) is done
+    # so per-batch merges don't accumulate pinned blocks
+    ck = merged.localCheckpoint(eager=True)
+    ck.write.mode("overwrite").parquet(target_ref)
+    release_local_checkpoint(ck)

@@ -8,7 +8,7 @@ runs these instead of the five scripts:
 * :func:`reconcile`         = delete-removed-tickets.py
 
 Each is a pure DataFrame->DataFrame composition — storage/sink choices
-(parquet/Delta/JDBC/REST writer) are injected by the caller, so the
+(parquet/JDBC/REST writer) are injected by the caller, so the
 same flow runs on a laptop against parquet and on a cluster against a
 warehouse.  Medallion tiers per SURVEY §1.1: bronze = cleaned raw,
 silver = enterprise (adds objectid/lat/lon), gold = public viewer
@@ -24,7 +24,8 @@ from pipeline311_spark.functions.cleaning import clean_cases
 from pipeline311_spark.functions.geo import esri_point_feature, parse_point_ewkt
 from pipeline311_spark.functions.text import ago_sanitize
 from pipeline311_spark.functions.timeparse import to_local_string
-from pipeline311_spark.operators.filters import static_source_filter, time_range
+from pipeline311_spark.operators.aggregates import coalesced_max_watermark, max_watermark
+from pipeline311_spark.operators.filters import static_source_filter, time_range, watermark_filter
 from pipeline311_spark.operators.merge import merge_with_surrogate, upsert
 from pipeline311_spark.operators.reconcile import reconcile_deletes
 from pipeline311_spark.schemas import VIEWER_COLUMNS
@@ -46,9 +47,9 @@ def sync_raw(
     if window is not None:
         clean = time_range(clean, watermark_col, *window)
         return upsert(target, clean, key, watermark_col)
-    w = target.agg(F.max(watermark_col)).first()[0]
+    w = max_watermark(target, watermark_col)
     if w is not None:
-        clean = clean.filter(F.col(watermark_col) > F.lit(w))  # strict (F3)
+        clean = watermark_filter(clean, watermark_col, w)  # strict (F3)
     return upsert(target, clean, key, watermark_col)
 
 
@@ -69,10 +70,8 @@ def publish_enterprise(bronze: DataFrame, silver: DataFrame) -> DataFrame:
 def viewer_merge(silver: DataFrame, gold: DataFrame) -> DataFrame:
     """sync-db2-viewer.py: one MERGE with a coalesced watermark (A3/F5/K4)
     into the public projection; only viewer columns survive."""
-    w = gold.agg(
-        F.coalesce(F.max("updated_datetime"), F.lit("1970-01-01").cast("timestamp"))
-    ).first()[0]
-    changed = silver.filter(F.col("updated_datetime") > F.lit(w))
+    w = coalesced_max_watermark(gold, "updated_datetime")
+    changed = watermark_filter(silver, "updated_datetime", w)
     cols = [c for c in VIEWER_COLUMNS if c in silver.columns]
     validate_columns(gold.select(cols), cols)
     return upsert(gold, changed.select(gold.columns), "service_request_id", "updated_datetime")
@@ -90,7 +89,7 @@ def publish_features(
     (P16), ESRI feature structs (P18).  Feed the result to
     ``sinks.batched_foreach_writer`` with a REST sender for the real
     AGO push (K5-K7)."""
-    changed = silver.filter(F.col("updated_datetime") >= F.lit(published_watermark))
+    changed = watermark_filter(silver, "updated_datetime", published_watermark, inclusive=True)
     dup_guard(changed, "service_request_id")
     rendered = changed.select(
         "service_request_id",

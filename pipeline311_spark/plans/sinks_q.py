@@ -141,8 +141,7 @@ def q_merge_partitioned(spark, sf_dir):
             F.pmod(F.col("key") + 100000000, F.lit(16)).alias("bucket"),
         )
     )
-    # through the pluggable-backend seam: the portable window-dedup
-    # parquet backend here; a Delta deployment names backend="delta"
+    # the warehouse MERGE: partition-pruned window-dedup rewrite
     upsert_into(spark, path, updates, "key", "version", partition_col="bucket")
 
     # explicit schema: a zero-row partitioned write leaves no partition

@@ -91,10 +91,10 @@ FROM (
 def _parquet_upsert_batch_fn(out_dir: str):
     """foreachBatch kernel shared by the streaming MERGE queries: each
     micro-batch is reduced latest-per-key (intra-batch ties break on
-    event_id), then MERGEd into the serving table through the backend
-    seam (``upsert_into`` — updates win on ts ties; remote-safe
-    existence probe, lineage-broken rewrite).  This is the seam's
-    documented streaming call site, not a parallel implementation."""
+    event_id), then MERGEd into the serving table through
+    ``upsert_into`` (updates win on ts ties; remote-safe existence
+    probe, lineage-broken rewrite) — the warehouse MERGE path, not a
+    parallel implementation."""
     from pipeline311_spark.operators.merge import latest_per_key
     from pipeline311_spark.operators.merge_backends import upsert_into
 
@@ -121,7 +121,7 @@ def _serving_table_result(spark, out_dir: str):
 
 
 @register("stream_merge_latest", _STREAM_MERGE_SQL, covers=("T1", "K3", "O5"))
-def q_stream_merge(spark, sf_dir):
+def q_stream_merge_latest(spark, sf_dir):
     """The incremental MERGE executed through Structured Streaming:
     each micro-batch upserts into a parquet serving table via
     ``foreachBatch`` (the reference's whole sync loop, SURVEY §3.1,

@@ -21,8 +21,7 @@ contract-testable WITHOUT a network:
   540 s timeout; raises :class:`TransportError` on any network
   failure so ``fetch_all`` owns the retry policy;
 * tests drive :func:`fetch_all` through a RECORDING fake transport
-  (tests/test_rest_transport.py) — the same environment-boundary
-  treatment as the Delta adapter.
+  (tests/test_rest_transport.py) — no network needed.
 
 The DSv2 connector (sources/salesforce_sim.py) stands in for the
 remote API with a parquet-backed page store; a production deployment

@@ -1,17 +1,17 @@
 """Watermark-driven incremental execution (SURVEY T1; §1.4).
 
 The reference approximates a stream with scheduled batch + watermark
-("get all records updated since then", README.md:21).  The engine
-offers both forms:
+("get all records updated since then", README.md:21).
+:class:`IncrementalRunner` is the faithful batch equivalent: read the
+destination watermark, pull newer source rows, MERGE, write.  Late data
+is handled naturally because the watermark is the *destination* max
+while the pull is by *source* modify time.
 
-* :class:`IncrementalRunner` — the faithful batch equivalent: read the
-  destination watermark, pull newer source rows, MERGE, write.  Late
-  data is handled naturally because the watermark is the *destination*
-  max while the pull is by *source* modify time.
-* :func:`stream_merge` — the idiomatic upgrade: Structured Streaming
-  ``readStream -> withWatermark -> foreachBatch(merge)``, for when the
-  source is a real stream (file/kafka).  Each micro-batch applies the
-  same window-dedup MERGE kernel, so the two paths share semantics.
+The Structured Streaming form of the same loop is a ``foreachBatch``
+MERGE through :func:`pipeline311_spark.operators.merge_backends
+.upsert_into` (``plans/streaming_custom.py``: ``stream_merge_latest``,
+``stream_connector_incremental_sync``), so both paths share the
+window-dedup kernel.
 """
 
 from __future__ import annotations
@@ -19,8 +19,9 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
+from pipeline311_spark.operators.aggregates import max_watermark
+from pipeline311_spark.operators.filters import watermark_filter
 from pipeline311_spark.operators.merge import upsert
 
 
@@ -44,39 +45,14 @@ class IncrementalRunner:
         self.inclusive = inclusive
 
     def current_watermark(self, target: DataFrame):
-        return target.agg(F.max(self.watermark_col)).first()[0]
+        return max_watermark(target, self.watermark_col)
 
     def run_once(self) -> DataFrame:
         target = self.read_target()
         w = self.current_watermark(target)
         source = self.read_source_since(w)
         if w is not None:
-            c = F.col(self.watermark_col)
-            source = source.filter(c >= F.lit(w) if self.inclusive else c > F.lit(w))
+            source = watermark_filter(source, self.watermark_col, w, self.inclusive)
         merged = upsert(target, source, self.key, self.watermark_col)
         self.write_target(merged)
         return merged
-
-
-def stream_merge(
-    stream_df: DataFrame,
-    key: str,
-    watermark_col: str,
-    apply_batch: Callable[[DataFrame, int], None],
-    delay: str = "10 minutes",
-    checkpoint: str | None = None,
-    trigger_once: bool = True,
-):
-    """Structured Streaming twin of the incremental loop.  The caller's
-    ``apply_batch`` typically wraps :func:`pipeline311_spark.operators
-    .merge.upsert` against the serving table."""
-    writer = (
-        stream_df.withWatermark(watermark_col, delay)
-        .writeStream.foreachBatch(apply_batch)
-        .outputMode("update")
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -181,8 +181,7 @@ def running_totals_stream_tws(events_stream: DataFrame) -> DataFrame:
     speaks protobuf between the Python worker and the state server —
     ``google.protobuf`` must be installed or the query fails at start
     with STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE (this container
-    ships without it; the equivalence test is skipped-if-absent, the
-    same honest boundary as the Delta adapter)."""
+    ships without it; the equivalence test is skipped-if-absent)."""
     return events_stream.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=RunningTotalsProcessor(),
         outputStructType=OUTPUT_SCHEMA,

@@ -1,6 +1,6 @@
-"""The pluggable MERGE backend seam (operators/merge_backends.py):
-SCALE.md's "swap the window-dedup kernel for Delta is local to
-merge.py" claim as checked code."""
+"""The warehouse MERGE entry point (operators/merge_backends.py
+``upsert_into``): first-batch creation, unpartitioned and partitioned
+rewrites, the narrowing guard and the URI-safe existence probe."""
 
 from __future__ import annotations
 
@@ -37,53 +37,6 @@ def test_parquet_backend_partitioned_delegates_to_pruned_merge(spark, tmp_path):
     upsert_into(spark, path, updates, "key", "version", partition_col="bucket")
     got = {(r["key"], r["version"]) for r in spark.read.parquet(path).collect()}
     assert got == {(1, 1), (2, 1), (3, 2), (9, 1)}
-
-
-def test_unknown_backend_raises(spark):
-    from pipeline311_spark.operators.merge_backends import get_merge_backend
-
-    with pytest.raises(ValueError, match="unknown merge backend"):
-        get_merge_backend("iceberg-typo")
-
-
-def test_delta_backend_absent_raises_clear_importerror():
-    """In this container delta-spark is absent: constructing the
-    backend must fail with actionable guidance, not an opaque crash."""
-    try:
-        import delta  # noqa: F401
-
-        pytest.skip("delta-spark installed here; covered by the live test below")
-    except ImportError:
-        pass
-    from pipeline311_spark.operators.merge_backends import DeltaMergeBackend
-
-    with pytest.raises(ImportError, match="delta-spark"):
-        DeltaMergeBackend()
-
-
-def test_delta_backend_merge_semantics(spark, tmp_path):
-    """Runs only where delta-spark is installed (skipped in this
-    container): Delta MERGE through the seam must reproduce the window
-    kernel's semantics — updates win on version ties, unmatched
-    updates insert, unmatched target rows survive."""
-    pytest.importorskip("delta")
-    from pipeline311_spark.operators.merge_backends import upsert_into
-
-    path = str(tmp_path / "wh_delta")
-    base = spark.createDataFrame(
-        [(1, 1, "a"), (2, 1, "b")], "key long, version long, payload string"
-    )
-    upsert_into(spark, path, base, "key", "version", backend="delta")
-    updates = spark.createDataFrame(
-        [(2, 2, "b2"), (3, 1, "c"), (1, 1, "a-tie")],
-        "key long, version long, payload string",
-    )
-    upsert_into(spark, path, updates, "key", "version", backend="delta")
-    got = {
-        r["key"]: (r["version"], r["payload"])
-        for r in spark.read.format("delta").load(path).collect()
-    }
-    assert got == {1: (1, "a-tie"), 2: (2, "b2"), 3: (1, "c")}
 
 
 def test_parquet_backend_guards_warehouse_narrowing(spark, tmp_path):
@@ -138,178 +91,25 @@ def test_parquet_backend_empty_updates_batch(spark, tmp_path):
     assert rows == [(1, 10, "a"), (2, 11, "b")]
 
 
-# ---------------------------------------------------------------------------
-# Recording-fake contract tests (r6): delta-spark is not installable in
-# this container, so the adapter's exact builder-call chain and
-# tie-break semantics are asserted against tests/fake_delta.py — a
-# recording fake that also EXECUTES documented Delta MERGE semantics,
-# letting us prove backend-equivalence without the library.  The live
-# test above still runs wherever delta-spark exists.
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture
-def fake_delta(monkeypatch):
-    import sys
-    import types
-
-    from tests import fake_delta as fd
-
-    fd.reset()
-    delta_mod = types.ModuleType("delta")
-    tables_mod = types.ModuleType("delta.tables")
-    tables_mod.DeltaTable = fd.DeltaTable
-    delta_mod.tables = tables_mod
-    monkeypatch.setitem(sys.modules, "delta", delta_mod)
-    monkeypatch.setitem(sys.modules, "delta.tables", tables_mod)
-    yield fd
-    fd.reset()
-
-
-def test_delta_contract_clause_chain(spark, fake_delta):
-    """The adapter must emit EXACTLY merge(t.`k` = u.`k`) →
-    whenMatchedUpdateAll(u.`v` >= t.`v`) → whenNotMatchedInsertAll() →
-    execute() — the >= tie-break is what makes updates win on version
-    ties, matching the window kernel and ON CONFLICT DO UPDATE
-    (reference sync-db2-viewer.py:56-79)."""
+@pytest.mark.parametrize("partition_col", [None, "bucket"])
+def test_first_batch_into_absent_warehouse_keeps_latest_per_key(spark, tmp_path, partition_col):
+    """Creating the warehouse is a MERGE into an empty target: a first
+    batch carrying superseded versions of a key lands with only the
+    newest one, and re-running the same batch changes nothing."""
     from pipeline311_spark.operators.merge_backends import upsert_into
 
-    base = spark.createDataFrame(
-        [(1, 1, "a"), (2, 1, "b")], "key long, version long, payload string"
+    path = str(tmp_path / "wh_first")
+    batch = spark.createDataFrame(
+        [(1, 1, "old", 0), (1, 2, "new", 0), (2, 1, "x", 1)],
+        "key long, version long, payload string, bucket int",
     )
-    fake_delta.seed("/fake/wh", base)
-    updates = spark.createDataFrame(
-        [(2, 2, "b2"), (3, 1, "c"), (1, 1, "a-tie")],
-        "key long, version long, payload string",
-    )
-    upsert_into(spark, "/fake/wh", updates, "key", "version", backend="delta")
 
-    names = [c[0] for c in fake_delta.CALLS]
-    assert names == [
-        "isDeltaTable", "forPath", "alias", "merge",
-        "whenMatchedUpdateAll", "whenNotMatchedInsertAll", "execute",
-    ]
-    chain = {c[0]: c[1:] for c in fake_delta.CALLS if len(c) > 1}
-    assert chain["merge"] == ("t.`key` = u.`key`",)
-    assert chain["whenMatchedUpdateAll"] == ("u.`version` >= t.`version`",)
-    assert chain["alias"] == ("t",)
-
-    got = {r["key"]: (r["version"], r["payload"]) for r in fake_delta.stored("/fake/wh")}
-    assert got == {1: (1, "a-tie"), 2: (2, "b2"), 3: (1, "c")}
-
-
-def test_delta_contract_equals_parquet_backend_multibatch(spark, fake_delta, tmp_path):
-    """Backend equivalence through the seam: a randomized multi-batch
-    upsert sequence lands identically via the (faithfully executing)
-    Delta clause chain and via the parquet window kernel — the
-    SCALE.md 'swapping backends is semantics-neutral' claim as code."""
-    import random
-
-    from pipeline311_spark.operators.merge_backends import upsert_into
-
-    rng = random.Random(20240815)
-    schema = "key long, version long, payload string"
-    pq_path = str(tmp_path / "wh_pq")
-
-    first = [(k, 1, f"p{k}") for k in range(8)]
-    df0 = spark.createDataFrame(first, schema)
-    fake_delta.seed("/fake/eq", df0)
-    upsert_into(spark, pq_path, df0, "key", "version")
-
-    for _ in range(5):
-        keys = rng.sample(range(16), rng.randint(1, 6))  # unique per batch
-        batch = [(k, rng.randint(1, 4), f"v{rng.randint(0, 99)}") for k in keys]
-        bdf = spark.createDataFrame(batch, schema)
-        upsert_into(spark, "/fake/eq", bdf, "key", "version", backend="delta")
-        upsert_into(spark, pq_path, bdf, "key", "version")
-
-    delta_rows = sorted(
-        (r["key"], r["version"], r["payload"]) for r in fake_delta.stored("/fake/eq")
-    )
-    pq_rows = sorted(
-        (r["key"], r["version"], r["payload"])
-        for r in spark.read.parquet(pq_path).collect()
-    )
-    assert delta_rows == pq_rows
-
-
-def test_delta_contract_duplicate_source_keys_raise(spark, fake_delta):
-    """Real Delta rejects a source with multiple rows per merge key
-    (DELTA_MULTIPLE_SOURCE_ROW_MATCHING...); the fake must too, so the
-    seam's key-unique batch contract is enforced, not papered over."""
-    from pipeline311_spark.operators.merge_backends import upsert_into
-
-    base = spark.createDataFrame([(1, 1, "a")], "key long, version long, payload string")
-    fake_delta.seed("/fake/dup", base)
-    dup = spark.createDataFrame(
-        [(1, 2, "x"), (1, 3, "y")], "key long, version long, payload string"
-    )
-    with pytest.raises(ValueError, match="MULTIPLE_SOURCE_ROW"):
-        upsert_into(spark, "/fake/dup", dup, "key", "version", backend="delta")
-
-
-def test_sqlmerge_backend_statement_contract(spark, monkeypatch):
-    """The ANSI MERGE INTO backend must emit exactly the Delta clause
-    chain as SQL — same ON equality, same >=-tie matched condition,
-    UPDATE SET * / INSERT * — recorded through spark.sql (no v2
-    catalog with row-level ops ships in this container; same honest
-    boundary as the Delta recording fake)."""
-    from pipeline311_spark.operators.merge_backends import SqlMergeBackend, upsert_into
-
-    stmt = SqlMergeBackend.merge_statement("lake.db.cases", "src_v", "key", "version")
-    assert stmt == (
-        "MERGE INTO `lake`.`db`.`cases` t USING `src_v` u "
-        "ON t.`key` = u.`key` "
-        "WHEN MATCHED AND u.`version` >= t.`version` THEN UPDATE SET * "
-        "WHEN NOT MATCHED THEN INSERT *"
-    )
-    # identifier hygiene: embedded backticks escape by doubling, never
-    # break out of the quoted identifier
-    hostile = SqlMergeBackend.merge_statement("db.ca`ses", "v", "k`ey", "ver")
-    assert "`ca``ses`" in hostile and "t.`k``ey` = u.`k``ey`" in hostile
-
-    recorded = []
-    monkeypatch.setattr(spark, "sql", lambda q, **kw: recorded.append(q))
-    # tableExists must report True or the backend takes the create path
-    monkeypatch.setattr(spark.catalog, "tableExists", lambda ref: True)
-    updates = spark.createDataFrame(
-        [(1, 2, "x")], "key long, version long, payload string"
-    )
-    upsert_into(spark, "lake.db.cases", updates, "key", "version", backend="sqlmerge")
-    assert len(recorded) == 1
-    q = recorded[0]
-    # the source temp view is uuid-named; normalize it out
-    import re
-
-    assert re.fullmatch(
-        r"MERGE INTO `lake`\.`db`\.`cases` t USING `__merge_src_[0-9a-f]{12}` u "
-        r"ON t\.`key` = u\.`key` "
-        r"WHEN MATCHED AND u\.`version` >= t\.`version` THEN UPDATE SET \* "
-        r"WHEN NOT MATCHED THEN INSERT \*",
-        q,
-    ), q
-    # and the temp view was cleaned up after the statement
-    assert not any(v.name.startswith("__merge_src_") for v in spark.catalog.listTables())
-
-
-def test_sqlmerge_backend_first_batch_creates_table(spark):
-    """The bootstrap contract all three backends share: the first call
-    against a missing target CREATES it (v2 create-from-DataFrame) —
-    MERGE INTO a missing table would otherwise kill the first
-    micro-batch of a streaming sink.  The create path executes for
-    real against the session catalog."""
-    import uuid
-
-    from pipeline311_spark.operators.merge_backends import upsert_into
-
-    tbl = f"seam_boot_{uuid.uuid4().hex[:10]}"
-    try:
-        base = spark.createDataFrame(
-            [(1, 1, "a"), (2, 1, "b")], "key long, version long, payload string"
+    def rows():
+        return sorted(
+            (r["key"], r["version"], r["payload"]) for r in spark.read.parquet(path).collect()
         )
-        upsert_into(spark, tbl, base, "key", "version", backend="sqlmerge")
-        assert spark.catalog.tableExists(tbl)
-        got = {r["key"]: r["payload"] for r in spark.table(tbl).collect()}
-        assert got == {1: "a", 2: "b"}
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+    upsert_into(spark, path, batch, "key", "version", partition_col=partition_col)
+    assert rows() == [(1, 2, "new"), (2, 1, "x")]
+    upsert_into(spark, path, batch, "key", "version", partition_col=partition_col)
+    assert rows() == [(1, 2, "new"), (2, 1, "x")]

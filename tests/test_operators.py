@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from pipeline311_spark.operators.filters import time_range, watermark_filter
 from pipeline311_spark.operators.joins import anti_join, exists_probe, semi_join
 from pipeline311_spark.operators.merge import (
-    incremental_merge,
     latest_per_key,
     merge_with_surrogate,
     upsert,
@@ -70,13 +69,6 @@ def test_watermark_strict_vs_inclusive(target):
     incl = watermark_filter(target, "updated_datetime", w, inclusive=True)
     assert strict.count() == 1  # only pk=3
     assert incl.count() == 2  # boundary row replayed
-
-
-def test_incremental_merge_pulls_only_newer(target, updates):
-    merged = incremental_merge(target, updates, "pk", "updated_datetime")
-    out = {r["pk"]: r["val"] for r in merged.collect()}
-    # watermark = 2024-01-03; the tie row (==) is NOT pulled with strict >
-    assert out == {1: "old", 2: "new", 3: "old", 4: "new"}
 
 
 def test_merge_with_surrogate_ids(spark, updates):

@@ -80,16 +80,30 @@ def test_full_medallion_flow(spark, source):
     gold = viewer_merge(silver, empty_like(spark, silver))
     assert gold.count() == 3
 
+    # into a non-empty gold only rows strictly newer than its watermark
+    # flow: case 1 moved past it, case 2 sits exactly at it (tie)
+    ud = F.col("updated_datetime")
+    moved = (
+        silver.filter(F.col("service_request_id").isin(1, 2))
+        .withColumn("status", F.lit("Reopened"))
+        .withColumn("updated_datetime", F.when(
+            F.col("service_request_id") == 1, ud + F.expr("INTERVAL 1 DAY")).otherwise(ud))
+    )
+    g2 = {r["service_request_id"]: r["status"] for r in viewer_merge(moved, gold).collect()}
+    assert g2 == {1: "Reopened", 2: "Closed", 3: "Open"}
+
     # incremental: a newer update for case 1 flows through, stale ignored
     upd = spark.createDataFrame(
         [sf_row(1, status="Closed", updated="2024-03-16T12:00:00.000+0000"),
-         sf_row(2, updated="2024-01-01T00:00:00.000+0000")],  # stale
+         sf_row(2, updated="2024-01-01T00:00:00.000+0000"),  # stale
+         sf_row(3, status="Closed")],  # exactly at the bronze watermark
         SF_CASE_RAW,
     )
     bronze2 = sync_raw(upd, bronze)
     b2 = {r["service_request_id"]: r for r in bronze2.collect()}
     assert b2[1]["status"] == "Closed"
     assert b2[2]["status"] == "Closed"  # original newer row retained
+    assert b2[3]["status"] == "Open"  # strict > : the tie is not re-merged
 
     # feature publication: ESRI JSON with sanitized attrs
     feats = publish_features(

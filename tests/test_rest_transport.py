@@ -1,6 +1,5 @@
 """The S1 connector's HTTP seam (sources/rest_transport.py), driven
-through a RECORDING fake transport — the same environment-boundary
-treatment as the Delta adapter: SOQL text from pushed DSv2 filters,
+through a RECORDING fake transport: SOQL text from pushed DSv2 filters,
 query_all_iter-style cursor pagination, and the reference retry
 ladder (Retry(total=10, backoff_factor=3) — delete-removed-
 tickets.py:24-25) asserted without a network."""

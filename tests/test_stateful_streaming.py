@@ -83,9 +83,8 @@ def _protobuf_available() -> bool:
 @pytest.mark.skipif(
     not _protobuf_available(),
     reason="transformWithState's state protocol needs google.protobuf, "
-    "not installed in this container (same class of environment "
-    "boundary as the Delta adapter — the operator code is real, the "
-    "runtime dependency is absent)",
+    "not installed in this environment (the operator code is real, "
+    "the runtime dependency is absent)",
 )
 def test_transform_with_state_matches_apply_in_pandas(spark, tmp_path):
     """The Spark-4 transformWithState form must produce the SAME
@@ -312,8 +311,7 @@ def test_final_state_independent_of_batch_boundaries(spark, tmp_path, n_files, p
 # the live equivalence test above skips without google.protobuf (Spark's
 # state-server protocol), but everything WE own — the StatefulProcessor's
 # state handling, accumulation, and emit contract — executes here against
-# a recording fake of the handle/ValueState API, the same treatment as
-# the Delta adapter (tests/fake_delta.py).
+# a recording fake of the handle/ValueState API.
 # ---------------------------------------------------------------------------
 
 

@@ -144,9 +144,8 @@ def test_crash_resume_into_merge_matches_uninterrupted(spark, sf_dir):
     offsets + an IDEMPOTENT merge: a replayed batch (foreachBatch is
     at-least-once across restarts) upserts the same latest-per-key
     rows again, changing nothing.  A torn parquet overwrite mid-batch
-    is the failure mode the transactional MERGE backends
-    (operators/merge_backends.py delta seam) exist for, out of scope
-    for the parquet kernel."""
+    would need a transactional table format and is out of scope for
+    the parquet kernel."""
     from pipeline311_spark.plans.common import prep_session
     from pipeline311_spark.plans.streaming_custom import (
         EVENTS,

@@ -1,5 +1,5 @@
 """Tests for the incremental runner (T1), batched sink writer (K5-K7
-retry envelope), and the structured-streaming merge path."""
+retry envelope), and structured-streaming joins and session windows."""
 
 from __future__ import annotations
 
@@ -36,11 +36,13 @@ def test_incremental_runner_two_syncs(spark, tmp_path):
     merged = runner.run_once()
     assert merged.count() == 2
 
-    # second sync with one newer row and one stale row
+    # second sync with one newer row, one stale row and one row exactly
+    # at the target watermark (2024-01-02): strict > must not re-merge it
     source["df"] = spark.createDataFrame(
         [
             (2, "v2", ts("2024-01-05T00:00:00")),
             (1, "stale", ts("2023-12-01T00:00:00")),
+            (1, "tie", ts("2024-01-02T00:00:00")),
         ],
         "pk long, val string, updated_datetime timestamp",
     )
@@ -74,40 +76,6 @@ def test_batched_writer_raises_after_max_tries(spark):
 
     with pytest.raises(Exception):
         batched_foreach_writer(spark.range(5), always_fail, batch_size=2, max_tries=2, backoff_s=0.0)
-
-
-def test_stream_merge_foreachbatch(spark, tmp_path):
-    from pipeline311_spark.operators.merge import upsert
-    from pipeline311_spark.streaming.incremental import stream_merge
-
-    src_dir = str(tmp_path / "stream_src")
-    out_dir = str(tmp_path / "serve")
-    events = spark.createDataFrame(
-        [
-            (1, "a", ts("2024-01-01T00:00:00")),
-            (1, "b", ts("2024-01-02T00:00:00")),
-            (2, "c", ts("2024-01-01T12:00:00")),
-        ],
-        "pk long, val string, updated_datetime timestamp",
-    )
-    events.write.parquet(src_dir)
-    write_parquet(events.limit(0), out_dir)
-
-    stream = spark.readStream.schema(events.schema).parquet(src_dir)
-
-    def apply_batch(batch_df, batch_id):
-        current = spark.read.parquet(out_dir)
-        merged = upsert(current, batch_df, "pk", "updated_datetime")
-        merged.write.mode("overwrite").parquet(out_dir + ".tmp")
-        spark.read.parquet(out_dir + ".tmp").write.mode("overwrite").parquet(out_dir)
-
-    q = stream_merge(
-        stream, "pk", "updated_datetime", apply_batch,
-        checkpoint=str(tmp_path / "ckpt"), trigger_once=True,
-    )
-    q.awaitTermination(120)
-    final = {r["pk"]: r["val"] for r in spark.read.parquet(out_dir).collect()}
-    assert final == {1: "b", 2: "c"}
 
 
 def test_batched_writer_throttle_pauses_between_batches(spark, tmp_path):

@@ -26,8 +26,8 @@ STATIC = {
     "S10": ("operators/backfill.py partition_window_filter", "oracle gate (t2_backfill_window); tests/test_pipeline_e2e.py"),
     "K1": ("sinks/writers.py write_csv", "oracle gate (s9_csv_roundtrip: write_csv is the writer under test)"),
     "K2": ("df.write.parquet('s3a://...') — same line, S3A path (no S3 in container)", "oracle gate (export_hash_shards + ~20 store queries); no S3 endpoint in container"),
-    "K3": ("operators/merge.py upsert (window-dedup MERGE); merge_incremental_partitioned (partition-pruned warehouse MERGE)", "tests/test_operators.py, tests/test_merge_partitioned.py"),
-    "K4": ("operators/merge.py merge_with_surrogate + incremental watermark", "tests/test_operators.py"),
+    "K3": ("operators/merge.py upsert (window-dedup MERGE); operators/merge_backends.py upsert_into -> merge_incremental_partitioned (partition-pruned warehouse MERGE)", "tests/test_operators.py, tests/test_merge_backends.py, tests/test_merge_partitioned.py"),
+    "K4": ("operators/merge.py merge_with_surrogate; pipelines/philly311.py viewer_merge (coalesced_max_watermark + watermark_filter + upsert)", "tests/test_operators.py, tests/test_pipeline_e2e.py"),
     "K5": ("sinks/writers.py batched_foreach_writer (50-row batches, retry ladder)", "tests/test_streaming_sinks.py + oracle gate (k5_batched_writer_roundtrip)"),
     "K6": ("same writer; delete batches = key-list sends", "tests/test_streaming_sinks.py"),
     "K7": ("operators/merge.py upsert == delete-then-add semantics", "tests/test_operators.py"),
@@ -65,7 +65,7 @@ STATIC = {
     "O3": ("exceptAll/subtract/intersect", "oracle gate (q_setops, q_except_all, corpus_version_diff)"),
     "O4": ("df.limit / deterministic top-k", "oracle gate (q_topk_orders + every top-k twin)"),
     "O5": ("operators/merge.py latest_per_key (row_number window)", "tests/test_operators.py"),
-    "T1": ("streaming/incremental.py IncrementalRunner + stream_merge", "tests/test_streaming_sinks.py"),
+    "T1": ("streaming/incremental.py IncrementalRunner and pipelines/philly311.py sync_raw (max_watermark + watermark_filter + upsert); foreachBatch MERGE through upsert_into (plans/streaming_custom.py)", "tests/test_streaming_sinks.py, tests/test_pipeline_e2e.py, tests/test_stream_source.py"),
     "T2": ("operators/backfill.py", "oracle gate (t2_backfill_window); tests/test_pipeline_e2e.py"),
     "T3": ("sinks/writers.py batched_foreach_writer batch_size", "tests/test_streaming_sinks.py"),
     "T4": ("same writer: max_tries/backoff retry envelope", "tests/test_streaming_sinks.py"),
@@ -196,13 +196,6 @@ def main():
             file=sys.stderr,
         )
     if m:
-        new = re.sub(
-            r"\*\*Tests\*\*: \d+ pytest cases \(plus[^)]*\)",
-            f"**Tests**: {m.group(1)} collected pytest cases (two env-skipped: "
-            "live Delta adapter, live transformWithState)",
-            new,
-            flags=re.S,
-        )
         new = re.sub(
             r"\*\*Tests\*\*: \d+ collected pytest cases",
             f"**Tests**: {m.group(1)} collected pytest cases",
