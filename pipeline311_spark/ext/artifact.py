@@ -323,8 +323,11 @@ def skip_if_replayed(
 
 
 def read_log(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Log-dir read with explicit schema; absent dir folds to an empty
-    frame UNLESS it is mid-compaction-swap, which fails loudly."""
+    """Log-dir read with explicit schema.  A log no batch ever wrote
+    (empty source → zero micro-batches → the directory itself is
+    absent) folds to an empty frame instead of PATH_NOT_FOUND.  A dir
+    mid-compaction-swap fails loudly: serving it as empty would be
+    silent data loss."""
     if not os.path.isdir(path):
         if os.path.isdir(path + ".compact.old"):
             raise RuntimeError(

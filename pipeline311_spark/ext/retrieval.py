@@ -701,19 +701,6 @@ def bm25_index_delete_batch(
         release()
 
 
-def _read_log(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """Log-dir read with explicit schema; a log NO batch ever wrote
-    (empty source → zero micro-batches → the directory itself is
-    absent) folds to an empty frame instead of PATH_NOT_FOUND.  A dir
-    mid-compaction-swap fails loudly (serving empty would be silent
-    data loss) — since r9 the shared contract lives in
-    :mod:`pipeline311_spark.ext.artifact`, used by the MinHash gram
-    log too."""
-    from pipeline311_spark.ext.artifact import read_log
-
-    return read_log(spark, path, schema)
-
-
 def bm25_index_compact(spark: SparkSession, index_dir: str) -> None:
     """Fold the append-only delta log into a single BASE delta — the
     periodic maintenance pass the log needs (per-batch partitions
@@ -734,8 +721,9 @@ def bm25_index_compact(spark: SparkSession, index_dir: str) -> None:
     rename staging to live → remove .old (the layout-module pattern,
     LOCAL-FS by design; an object-store deployment swaps via the table
     format's OPTIMIZE).  A crash between the two renames is recovered
-    at the next call; :func:`_read_log` fails loudly in that window
-    instead of silently serving an empty artifact."""
+    at the next call; :func:`~pipeline311_spark.ext.artifact.read_log`
+    fails loudly in that window instead of silently serving an empty
+    artifact."""
     from pipeline311_spark.ext.artifact import (
         assert_quiesced,
         compact_swap,
@@ -749,7 +737,7 @@ def bm25_index_compact(spark: SparkSession, index_dir: str) -> None:
     # batch will later replay on top of the base
     assert_quiesced(index_dir)
     # recover any crashed swap BEFORE reading: in that window the only
-    # live copy of an artifact is its .old dir (and _read_log refuses
+    # live copy of an artifact is its .old dir (and read_log refuses
     # to serve it as empty); recover_log covers the postings' tombstone
     # sibling
     recover_log(os.path.join(index_dir, "postings"))
@@ -814,15 +802,19 @@ def load_bm25_index(spark: SparkSession, index_dir: str) -> Bm25Index:
     term-df sum now nets the delete batches' NEGATIVE deltas, dropping
     terms at df <= 0 (a fresh build over the remaining corpus has no
     zero rows); corpus sums net the negative one-row deltas for free."""
-    from pipeline311_spark.ext.artifact import apply_tombstones, tombstone_dir
+    from pipeline311_spark.ext.artifact import (
+        apply_tombstones,
+        read_log,
+        tombstone_dir,
+    )
 
-    postings = _read_log(
+    postings = read_log(
         spark, os.path.join(index_dir, "postings"), _POSTINGS_LOG_SCHEMA
     )
-    term_log = _read_log(
+    term_log = read_log(
         spark, os.path.join(index_dir, "term_stats"), _TERM_LOG_SCHEMA
     )
-    stats_log = _read_log(
+    stats_log = read_log(
         spark, os.path.join(index_dir, "corpus_stats"), _STATS_LOG_SCHEMA
     )
     return Bm25Index(

@@ -633,8 +633,8 @@ def q_retrieval_hybrid_rrf(spark, sf_dir):
 def hybrid_rrf_build(spark, sf_dir, out):
     """BUILD phase: write the BM25 artifacts under ``out`` and the
     residual-IVF-PQ store under ``out/ann``.  Split from the serve
-    phase (VERDICT r10 item 4) so bench.py can time the amortizable
-    per-corpus-version index build separately from the serving cost —
+    phase (VERDICT r10 item 4) so the amortizable per-corpus-version
+    index build can be timed separately from the serving cost —
     the r10 hybrid headline was ~80% this build.  Returns the read-back
     BM25 index triple."""
     import os
@@ -709,8 +709,8 @@ def hybrid_rrf_frame(spark, sf_dir, out):
     stored residual-IVF-PQ ANN index under ``out/ann`` (VERDICT r9
     item 3 — both rankers read per-corpus-version artifacts).  Split
     out so the plan-shape test can inspect the REAL serve plan, and
-    further split into build/serve halves so bench.py can time the
-    phases separately (VERDICT r10 item 4)."""
+    further split into build/serve halves so the two phases can be
+    timed separately (VERDICT r10 item 4)."""
     return hybrid_rrf_serve(
         spark, sf_dir, out, hybrid_rrf_build(spark, sf_dir, out)
     )

@@ -1,172 +1,14 @@
-"""Additional TPC-H-shaped analytics queries — the grouped-aggregate /
-subquery / disjunctive-predicate surface a user of a general engine
-expects (SURVEY §2.6 note: the reference has no GROUP BY, but the
-engine exposes the full Spark surface; the driver's oracle harness
-exercises it here).  Adapted to the driver's simplified columns.
+"""TPC-H q18 (large orders: HAVING over a grouped decimal sum, joined
+back to orders and customer), adapted to the simplified TPC-H columns
+of the test data.  ``perfbench``'s ``analytics_mix`` workload runs it.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pipeline311_spark.plans.common import (
-    REVENUE_SQL,
-    dec,
-    dsum,
-    one,
-    revenue_expr,
-    table,
-)
+from pipeline311_spark.plans.common import dec, table
 from pipeline311_spark.plans.registry import register
-
-# q04 — order priority with EXISTS
-_Q04_SQL = """
-SELECT o_orderpriority, COUNT(*) AS order_count
-FROM orders
-WHERE o_orderdate >= TIMESTAMP '1996-07-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '1996-10-01 00:00:00'
-  AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
-GROUP BY o_orderpriority
-"""
-
-
-@register("q04_order_priority", _Q04_SQL, covers=("J4", "F2"))
-def q04(spark, sf_dir):
-    o = table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1996-07-01") & (F.col("o_orderdate") < "1996-10-01")
-    )
-    li = table(spark, sf_dir, "lineitem")
-    late = li.join(o, li.l_orderkey == o.o_orderkey).filter(
-        F.col("l_shipdate") > F.col("o_orderdate")
-    ).select("l_orderkey").distinct().withColumnRenamed("l_orderkey", "o_orderkey")
-    return (
-        o.join(late, "o_orderkey", "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-    )
-
-
-# q06 — selective forecast revenue (single filtered sum)
-_Q06_SQL = """
-SELECT CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-       COUNT(*) AS n
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-  AND l_discount BETWEEN 0.02 AND 0.06
-  AND l_quantity < 24
-"""
-
-
-@register("q06_forecast_revenue", _Q06_SQL, covers=("F2", "A-class"))
-def q06(spark, sf_dir):
-    li = table(spark, sf_dir, "lineitem")
-    sel = li.filter(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1997-01-01")
-        & (F.col("l_discount") >= 0.02)
-        & (F.col("l_discount") <= 0.06)
-        & (F.col("l_quantity") < 24)
-    )
-    return sel.agg(
-        F.sum(dec("l_extendedprice") * dec("l_discount")).cast("double").alias("revenue"),
-        F.count("*").alias("n"),
-    )
-
-
-# q08 — market share: ratio of conditional decimal sums
-_Q08_SQL = f"""
-WITH volumes AS (
-  SELECT strftime(o_orderdate, '%Y') AS o_year,
-         CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2))) AS volume,
-         n_name
-  FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    JOIN customer ON o_custkey = c_custkey
-    JOIN nation ON c_nationkey = n_nationkey)
-SELECT o_year,
-       CAST(SUM(CASE WHEN n_name = 'NATION_7' THEN volume ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE)
-         / CAST(SUM(volume) AS DOUBLE) AS mkt_share,
-       CAST(SUM(volume) AS DOUBLE) AS total_volume
-FROM volumes GROUP BY o_year
-"""
-
-
-@register("q08_market_share", _Q08_SQL, covers=("J-class", "A-class"))
-def q08(spark, sf_dir):
-    li = table(spark, sf_dir, "lineitem")
-    o = table(spark, sf_dir, "orders")
-    c = table(spark, sf_dir, "customer")
-    n = table(spark, sf_dir, "nation")
-    vol = dec("l_extendedprice") * (one() - dec("l_discount"))
-    volumes = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .select(F.date_format("o_orderdate", "yyyy").alias("o_year"), vol.alias("volume"), "n_name")
-    )
-    target = F.sum(F.when(F.col("n_name") == "NATION_7", F.col("volume")).otherwise(F.lit(0).cast("decimal(18,2)")))
-    return volumes.groupBy("o_year").agg(
-        (target.cast("double") / F.sum("volume").cast("double")).alias("mkt_share"),
-        F.sum("volume").cast("double").alias("total_volume"),
-    )
-
-
-# q12 — shipmode-style CASE aggregation
-_Q12_SQL = """
-SELECT l_returnflag,
-       CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(SUM(CASE WHEN o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-GROUP BY l_returnflag
-"""
-
-
-@register("q12_priority_lines", _Q12_SQL, covers=("P10", "J-class"))
-def q12(spark, sf_dir):
-    li = table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1998-01-01")
-    )
-    o = table(spark, sf_dir, "orders")
-    hot = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(hot, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~hot, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
-
-
-# q14 — promo revenue share
-_Q14_SQL = """
-SELECT CAST(SUM(CASE WHEN p_type = 'PROMO'
-                     THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))
-                     ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) * 100
-         / CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-       AS promo_revenue_pct
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE l_shipdate >= TIMESTAMP '1997-03-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1997-04-01 00:00:00'
-"""
-
-
-@register("q14_promo_share", _Q14_SQL, covers=("J-class", "A-class"))
-def q14(spark, sf_dir):
-    li = table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1997-03-01") & (F.col("l_shipdate") < "1997-04-01")
-    )
-    p = table(spark, sf_dir, "part")
-    vol = dec("l_extendedprice") * (one() - dec("l_discount"))
-    promo = F.sum(F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0).cast("decimal(18,2)")))
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .agg((promo.cast("double") * 100 / F.sum(vol).cast("double")).alias("promo_revenue_pct"))
-    )
-
 
 # q18 — large orders (HAVING + join back)
 _Q18_SQL = """
@@ -195,63 +37,4 @@ def q18(spark, sf_dir):
         big.join(o, big.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .select("c_custkey", "c_name", "o_orderkey", "total_qty")
-    )
-
-
-# q19 — disjunctive bracketed predicates
-_Q19_SQL = f"""
-SELECT {REVENUE_SQL} AS revenue, COUNT(*) AS n
-FROM lineitem JOIN part ON l_partkey = p_partkey
-WHERE (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 20)
-   OR (p_brand = 'Brand#19' AND p_size BETWEEN 10 AND 30 AND l_quantity BETWEEN 10 AND 40)
-   OR (p_type = 'PROMO' AND p_size BETWEEN 1 AND 40 AND l_quantity BETWEEN 20 AND 50)
-"""
-
-
-@register("q19_disjunctive_brackets", _Q19_SQL, covers=("F7", "F1"))
-def q19(spark, sf_dir):
-    li = table(spark, sf_dir, "lineitem")
-    p = table(spark, sf_dir, "part")
-    j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-    b = F.col("p_brand")
-    s = F.col("p_size")
-    q = F.col("l_quantity")
-    pred = (
-        ((b == "Brand#13") & s.between(1, 15) & q.between(1, 20))
-        | ((b == "Brand#19") & s.between(10, 30) & q.between(10, 40))
-        | ((F.col("p_type") == "PROMO") & s.between(1, 40) & q.between(20, 50))
-    )
-    return j.filter(pred).agg(revenue_expr().alias("revenue"), F.count("*").alias("n"))
-
-
-# q22 — above-average-balance customers split by order-existence
-# (scalar subquery + semi/anti flag)
-_Q22_SQL = """
-WITH avg_bal AS (
-  SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS a
-  FROM customer WHERE c_acctbal > 0)
-SELECT c_mktsegment,
-       EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) AS has_orders,
-       COUNT(*) AS n_custs,
-       CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal
-FROM customer
-WHERE c_acctbal > (SELECT a FROM avg_bal)
-GROUP BY 1, 2
-"""
-
-
-@register("q22_rich_customers_by_activity", _Q22_SQL, covers=("J3", "J4", "A-class"))
-def q22(spark, sf_dir):
-    from pipeline311_spark.operators.joins import exists_probe
-
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders").withColumnRenamed("o_custkey", "c_custkey")
-    pos = c.filter(F.col("c_acctbal") > 0)
-    avg_bal = pos.agg(
-        (F.sum(dec("c_acctbal")).cast("double") / F.count("*")).alias("a")
-    ).first()["a"]
-    rich = c.filter(F.col("c_acctbal") > avg_bal)
-    flagged = exists_probe(rich, o, "c_custkey").withColumnRenamed("exists", "has_orders")
-    return flagged.groupBy("c_mktsegment", "has_orders").agg(
-        F.count("*").alias("n_custs"), dsum("c_acctbal").alias("total_bal")
     )

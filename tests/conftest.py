@@ -38,7 +38,7 @@ def sweep_map(fn, items, workers: int | None = None):
     are sequential only because driver code calls them sequentially).
 
     Exists for the registry-WIDE sweep tests, which each iterate all
-    ~218 queries and dominated the suite wall (plan audit 260 s, canon
+    ~190 queries and dominated the suite wall (plan audit 260 s, canon
     audit 193 s, empty-tables audit 165 s, hostile parity 212 s on a
     quiet machine — 55% of the whole suite).  Concurrent construction
     is safe for registry queries: every tmp store is uuid-named, every

@@ -171,11 +171,7 @@ _SINGLE_PARTITION_OK = {
     "f3_f4_watermark_boundary",
     "k9_truncate_reload",
     "o2_desc_scan_order",
-    "q06_forecast_revenue",
-    "q14_promo_share",
-    "q15_top_supplier",
     "q17_below_part_average",
-    "q19_disjunctive_brackets",
     "q_decile_stats",
     "q_events_funnel",
     "sample_rebalance_sources",
@@ -221,7 +217,12 @@ def test_registry_wide_plan_audit(registry_frames):
     single-partition stages outside the documented allowlist.
     Frames come from the shared parallel-construction fixture
     (round 12): this audit inspects only the returned plan, so it
-    shares one construction pass with the canon-safety audit."""
+    shares one construction pass with the canon-safety audit.  A stale
+    allowlist entry (a removed query) fails too, so the list never
+    outlives what it excuses."""
+    assert _SINGLE_PARTITION_OK <= set(registry_frames), sorted(
+        _SINGLE_PARTITION_OK - set(registry_frames)
+    )
     for name, df in sorted(registry_frames.items()):
         plan = explain_str(df)
         assert "CartesianProduct" not in plan, name

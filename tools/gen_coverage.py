@@ -45,9 +45,9 @@ STATIC = {
     "F2": ("operators/filters.py time_range", "tests/test_operators.py (time_range); oracle gate (f2_time_range)"),
     "F3": ("operators/filters.py watermark_filter(inclusive=False)", "tests/test_operators.py"),
     "F4": ("operators/filters.py watermark_filter(inclusive=True)", "tests/test_operators.py"),
-    "F5": ("scalar-subquery watermark (f3_f4 query)", "oracle gate (q11/q15/q17 scalar subqueries)"),
+    "F5": ("scalar-subquery watermark (f3_f4 query)", "oracle gate (q17 scalar subquery)"),
     "F6": ("key predicate / point lookup -> join (S5)", "oracle gate (j4_semi_probe); tests/test_operators.py (semi_join)"),
-    "F7": ("operators/filters.py key_in", "oracle gate (f8_in_list, q19)"),
+    "F7": ("operators/filters.py key_in", "oracle gate (f8_in_list)"),
     "F8": ("isin / semi-join", "oracle gate (f8_in_list)"),
     "J1": ("operators/merge.py upsert", "tests/test_operators.py"),
     "J2": ("operators/merge.py upsert (viewer variant w/ surrogate)", "tests/test_operators.py"),
@@ -108,8 +108,8 @@ STATIC = {
     "ext:bm25-update": ("BM25 document update = delete old id + fresh-id-guarded re-append + compact (plans/index_update.py)", "tests/test_index_update.py"),
     "ext:gram-update": ("gram-log document update under the id-reuse contract (plans/index_update.py)", "tests/test_index_update.py"),
     "ext:ann-update": ("ANN codes document update under the frozen quantizer (plans/index_update.py)", "tests/test_index_update.py"),
-    "A-class": ("groupBy/rollup/cube/distinct aggregates (Spark-native)", "oracle gate (54 aggregate queries); tests/test_canon_safety.py (decimal folds)"),
-    "J-class": ("equi/semi/anti joins, Catalyst-chosen strategy", "oracle gate (19 join queries); tests/test_connector_plans.py (broadcast/SMJ audit)"),
+    "A-class": ("groupBy/rollup/cube/distinct aggregates (Spark-native)", "oracle gate (every query listed); tests/test_canon_safety.py (decimal folds)"),
+    "J-class": ("equi/semi/anti joins, Catalyst-chosen strategy", "oracle gate (every query listed); tests/test_connector_plans.py (broadcast/SMJ audit)"),
 }
 
 

@@ -115,7 +115,7 @@ def main() -> None:
         "",
         "Reading note: SMJ counts are the static pre-AQE choice; at runtime AQE",
         "converts them to broadcast when the built side measures small, and the",
-        "remaining SMJs (fact⋈fact: q04/q21 semi-joins, full-outer, range join)",
+        "remaining SMJs (fact⋈fact joins such as the full-outer and range joins)",
         "are exactly the joins that SHOULD sort-merge at scale.",
         "",
         "| query | exchanges | reused | cached | BHJ | SMJ | BNLJ | py | flags |",
