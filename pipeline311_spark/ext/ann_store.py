@@ -16,11 +16,13 @@ Index contract (three parquet artifacts under one directory):
   (partition filters known before any job runs).
 * **codebook** ``(cid, cv)`` — the PQ codebook, |k| full-dim rows
   sliced per subspace at use (the plans/curation4.py convention).
-* **codes** ``(vec_id, code0..codeM-1)`` partitioned by ``pcell`` —
-  one row per corpus vector, M small ints instead of the raw floats
-  (4 codes ≈ 4 bytes vs 64 doubles = 512 bytes).  Partitioned by the
-  IVF cell, so a query's ``nprobe`` cells resolve to partition
-  DIRECTORIES: the serve scan is a pruned file read over codes only,
+* **codes** ``(vec_id, code0..codeM-1)`` — one row per corpus
+  vector, M small ints instead of the raw floats (4 codes ≈ 4 bytes vs
+  64 doubles = 512 bytes), stored as an append-only batch-id log (the
+  ext/artifact.py contract; a build is batch 0) partitioned by
+  ``pcell`` UNDER ``batch_id``.  Partitioned by the IVF cell, so a
+  query's ``nprobe`` cells resolve to partition DIRECTORIES across
+  every batch: the serve scan is a pruned file read over codes only,
   never the corpus and never the un-probed cells.  The partition
   value is prefixed (``'c' + cell``) so Hive-style partition-value
   inference can't re-type it (the sim_lsh_partitioned_probe lesson).
@@ -36,16 +38,18 @@ with ``list_reduce(list_prepend(0.0, ...))``; the residual subtraction
 is elementwise IEEE double in both engines.  All distances are
 COMPARED, never emitted (ranks + ids only reach hashed output).
 
-Incremental maintenance (:func:`ann_index_update`): the coarse
+Incremental maintenance (:func:`ann_codes_append_batch`): the coarse
 quantizer and codebook are FROZEN per corpus version (the production
 reality — codebooks are trained once on a seed sample and reused, else
 old codes would be invalidated), so a disjoint batch is assigned and
-encoded with the STORED artifacts and appended to its cell partitions.
-The merged index is REQUIRED to equal a fresh build over corpus ∪
-batch — trivially, because encode is a pure per-row function of the
-frozen artifacts; the registry query ``sim_ivfpq_incr_store`` proves
-it under the same DuckDB oracle as the from-scratch build, and
-tests/test_ann_store.py proves it on the artifacts themselves.
+encoded with the STORED artifacts and written as its own log batch;
+deletes tombstone vec ids (:func:`ann_codes_delete_batch`) and
+:func:`ann_codes_compact` folds the log to one base.  The folded index
+is REQUIRED to equal a fresh build over corpus ∪ batch — trivially,
+because encode is a pure per-row function of the frozen artifacts; the
+registry query ``sim_ivfpq_incr_store`` proves it under the same
+DuckDB oracle as the from-scratch build, and tests/test_ann_store.py
+proves it on the artifacts themselves.
 
 Reference parity note: the reference pipeline has no vector serving at
 all — this family extends the engine for the LLM-curation workloads
@@ -256,20 +260,21 @@ def ann_index_build(
     vec_col: str = "embedding",
     seeds: DataFrame | None = None,
 ) -> None:
-    """Build and WRITE the three artifacts.  ``seeds``: the quantizer
-    training frame (coarse centroids = its ``n_cells`` lowest ids, PQ
-    codebook = the residuals of the NEXT ``pq_k`` ids — the
-    deterministic data-derived seed convention, residual edition).
-    Defaults to
-    the corpus itself; the incremental path passes the FULL corpus head
-    explicitly so a base build and its updates share one frozen
-    quantizer.  Cost: one seed collect (metadata-scale) + ONE corpus
-    pass (assign is a broadcast join, encode a projection, the write
-    streams out partitioned by cell)."""
+    """Build and WRITE the three artifacts; the codes become batch 0 of
+    the codes log, REPLACING any existing store
+    (:func:`_write_codes_batch`).  ``seeds``: the quantizer training
+    frame (coarse centroids = its ``n_cells`` lowest ids, PQ codebook =
+    the residuals of the NEXT ``pq_k`` ids — the deterministic
+    data-derived seed convention, residual edition).  Defaults to the
+    corpus itself; the incremental path passes the FULL corpus head
+    explicitly so a base build and its appended batches share one
+    frozen quantizer.  Cost: one seed collect (metadata-scale) + ONE
+    corpus pass (assign is a broadcast join, encode a projection, the
+    write streams out partitioned by cell)."""
     v = _vec_frame(corpus, id_col, vec_col)
     seed_v = v if seeds is None else _vec_frame(seeds, id_col, vec_col)
     cents, cbook = ann_quantizer_build(spark, seed_v, out, n_cells, pq_k)
-    _encode_write(spark, v, out, cents, cbook, m, subdim, mode="overwrite")
+    _write_codes_batch(out, 0, _encode(spark, v, cents, cbook, m, subdim), replace=True)
 
 
 def ann_quantizer_build(
@@ -385,67 +390,6 @@ def _load_quantizer(
 _QUANTIZER_CACHE: dict = {}
 
 
-def ann_index_update(
-    spark: SparkSession,
-    out: str,
-    batch: DataFrame,
-    m: int = ANN_M,
-    subdim: int = ANN_SUBDIM,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    validate_disjoint: bool = False,
-) -> None:
-    """Assign + encode a NEW batch (vec ids disjoint from the indexed
-    corpus) with the STORED quantizer artifacts and append its code
-    rows to their cell partitions — per-batch cost is one batch pass;
-    the corpus codes are never rewritten.  Frozen-quantizer encode is a
-    pure per-row function, so the appended index is row-identical to a
-    fresh full build (oracle-gated: sim_ivfpq_incr_store).
-
-    ``validate_disjoint=True`` spends one semi-join probe of batch ids
-    against the stored codes (bounded by the batch side, first hit
-    short-circuits) and raises on overlap — the same opt-in guard as
-    ``bm25_index_update`` (ADVICE r8): an overlapping append would
-    serve the same vec_id twice."""
-    cents, cbook = _load_quantizer(spark, out)
-    v = _vec_frame(batch, id_col, vec_col)
-    if not cents:
-        if not v.take(1):
-            return  # empty increment against an empty index: a no-op day
-        # an empty-corpus BUILD legitimately stores zero centroids, but
-        # an UPDATE with real vectors against that index cannot encode
-        # anything — the silent alternative drops the whole batch while
-        # the caller believes it was indexed (review r9).  An EMPTY
-        # CODEBOOK with real centroids is different: the fresh build
-        # also stores zero codes (the undersized-corpus degradation,
-        # ann_quantizer_build), so appending zero rows keeps
-        # merged ≡ fresh — no raise (r10 hostile gate).
-        raise ValueError(
-            f"ann_index_update: the stored quantizer at {out} is empty "
-            "(centroids have no rows) — rebuild the index with seed "
-            "vectors before appending batches"
-        )
-    _warn_if_dead_codebook(cents, cbook, out, "ann_index_update")
-    if validate_disjoint:
-        # load the codes view only here (ADVICE r9: an unconditional
-        # load eagerly resolves all three paths — extra listing work,
-        # and a hard failure on a quantizer-only store even for calls
-        # that never touch codes)
-        index = load_ann_index(spark, out, m)
-        overlap = (
-            index.codes.select("vec_id")
-            .join(F.broadcast(v.select("vec_id").distinct()), "vec_id", "left_semi")
-            .take(1)
-        )
-        if overlap:
-            raise ValueError(
-                f"ann_index_update: batch vec_id {overlap[0]['vec_id']} is "
-                "already indexed — the disjoint-batch contract is violated "
-                "and the append would duplicate it"
-            )
-    _encode_write(spark, v, out, cents, cbook, m, subdim, mode="append")
-
-
 def _warn_if_dead_codebook(cents: dict, cbook: dict, out: str, who: str) -> None:
     """An empty codebook with real centroids (the undersized-corpus
     build degradation) encodes EVERY append to zero rows: value-correct
@@ -475,21 +419,39 @@ def _vec_frame(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     )
 
 
-def _encode_write(spark, v, out, cents, cbook, m, subdim, mode: str) -> None:
+def _encode(spark, v, cents, cbook, m, subdim) -> DataFrame:
+    """(vec_id, code*, pcell) for a (vec_id, v) frame under the frozen
+    quantizer dicts — zero rows with the stable schema when there are
+    no centroids (an empty-corpus build)."""
     if not cents:
-        empty = spark.createDataFrame([], _codes_schema(m))
-        empty.write.mode(mode).partitionBy("pcell").parquet(os.path.join(out, "codes"))
-        return
+        return spark.createDataFrame([], _codes_schema(m))
     centroids = meta_df(
         spark, [(int(i), vec) for i, vec in sorted(cents.items())], _centroid_schema("cell")
     )
-    codes = pq_codes(assign_cells(v, centroids), cbook, m, subdim)
-    codes.write.mode(mode).partitionBy("pcell").parquet(os.path.join(out, "codes"))
+    return pq_codes(assign_cells(v, centroids), cbook, m, subdim)
+
+
+def _write_codes_batch(out: str, batch_id: int, codes: DataFrame, replace: bool = False) -> None:
+    """Write ``codes`` as batch ``batch_id`` of the codes log, cell
+    partitions under the batch dir, inside an intent marker — the ONE
+    codes write of builds and appends alike.  ``replace=True`` (the
+    builds) first drops the old log, its tombstone sibling and the fold
+    markers (:func:`~pipeline311_spark.ext.artifact.reset_log`): a
+    rebuild must serve only its own corpus, never stale appended rows
+    or stale tombstones masking rebuilt ids."""
+    from pipeline311_spark.ext.artifact import reset_log, write_batch_partition, write_intent
+
+    path = os.path.join(out, "codes")
+    with write_intent(out, f"append-{int(batch_id)}"):
+        if replace:
+            reset_log(out, path)
+        write_batch_partition(codes, path, batch_id, partition_by=("pcell",))
 
 
 def load_ann_index(spark: SparkSession, out: str, m: int = ANN_M) -> AnnIndex:
     """Read-back views with explicit schemas (an index built from an
-    empty corpus has no code files to infer from)."""
+    empty corpus has no code files to infer from); ``codes`` is the
+    folded, tombstone-applied log view (:func:`load_ann_codes_log`)."""
     return AnnIndex(
         centroids=spark.read.schema(_centroid_schema("cell")).parquet(
             os.path.join(out, "centroids")
@@ -497,7 +459,7 @@ def load_ann_index(spark: SparkSession, out: str, m: int = ANN_M) -> AnnIndex:
         codebook=spark.read.schema(_centroid_schema("cid")).parquet(
             os.path.join(out, "codebook")
         ),
-        codes=spark.read.schema(_codes_schema(m)).parquet(os.path.join(out, "codes")),
+        codes=load_ann_codes_log(spark, out, m),
     )
 
 
@@ -525,6 +487,16 @@ def probe_cells_py(
     }
 
 
+#: Hard cap on the per-call query set of the ADC serve: each query adds
+#: nprobe per-cell LUTs of m*k literals to ONE expression tree, and the
+#: pruned-codes scan is exploded |queries|-fold — the bounded-query-set
+#: contract brute_force_topk documents, made structural (VERDICT r9
+#: nit 3: nothing stopped a 10^5-query caller from building a
+#: 10^5-literal plan).  Batch workloads beyond this should loop in
+#: caps, or rank via a join against a query TABLE instead of literals.
+SERVE_MAX_QUERIES = 128
+
+
 def ann_adc_topk_from_store(
     spark: SparkSession,
     out: str,
@@ -536,37 +508,18 @@ def ann_adc_topk_from_store(
 ) -> DataFrame:
     """Serve top-k from the STORED index: collect the two metadata
     artifacts, choose each query's ``nprobe`` cells driver-side, read
-    ONLY those cell partitions of the codes table (PartitionFilters —
-    plan-asserted in tests/test_ann_store.py), and rank by asymmetric
-    PQ distance computed from per-query LUT literals — the scan
-    projects M code columns into a distance, no join, no corpus touch.
+    ONLY those cell partitions of the folded codes log
+    (PartitionFilters across every batch dir — plan-asserted in
+    tests/test_ann_store.py), and rank by asymmetric PQ distance
+    computed from per-query LUT literals — the scan projects M code
+    columns into a distance, no join, no corpus touch.
 
     Output (query_id, rank, neighbor_id): ranks by (ADC distance,
     neighbor id); the double is compared, never emitted.  LUT entries
     are driver-side Python folds bit-identical to the oracle's
-    ``list_reduce`` (the sim_pq_adc_topk precedent)."""
-    return _serve_adc_topk(
-        spark, out, index_codes=load_ann_index(spark, out, m).codes,
-        qvecs=qvecs, k=k, nprobe=nprobe, m=m, subdim=subdim,
-    )
-
-
-#: Hard cap on the per-call query set of the ADC serve: each query adds
-#: nprobe per-cell LUTs of m*k literals to ONE expression tree, and the
-#: pruned-codes scan is exploded |queries|-fold — the bounded-query-set
-#: contract brute_force_topk documents, made structural (VERDICT r9
-#: nit 3: nothing stopped a 10^5-query caller from building a
-#: 10^5-literal plan).  Batch workloads beyond this should loop in
-#: caps, or rank via a join against a query TABLE instead of literals.
-SERVE_MAX_QUERIES = 128
-
-
-def _serve_adc_topk(spark, out, index_codes, qvecs, k, nprobe, m, subdim) -> DataFrame:
-    """The shared serve kernel (review r9: one home for the ranking):
-    driver-chosen probe cells -> pcell-pruned read of ``index_codes``
-    -> per-query LUT distance projection -> bounded top-k window.
-    ``qvecs`` is capped at :data:`SERVE_MAX_QUERIES` (driver-side
-    expression-tree cost is linear in it).
+    ``list_reduce`` (the sim_pq_adc_topk precedent).  ``qvecs`` is
+    capped at :data:`SERVE_MAX_QUERIES` (driver-side expression-tree
+    cost is linear in it).
 
     The cap is checked BEFORE the empty-store short-circuit —
     deliberately (adjudicated ADVICE r10): the bound is a structural
@@ -597,7 +550,8 @@ def _serve_adc_topk(spark, out, index_codes, qvecs, k, nprobe, m, subdim) -> Dat
         )
         for qid in sorted(qvecs)
     ]
-    pruned = index_codes.filter(F.col("pcell").isin(all_cells))
+    # codes read only now: a quantizer-less store may have no log yet
+    pruned = load_ann_codes_log(spark, out, m).filter(F.col("pcell").isin(all_cells))
     scored = (
         pruned.select("vec_id", "pcell", F.explode(F.array(*entries)).alias("qd"))
         .filter(F.array_contains(F.col("qd.cells"), F.col("pcell")))
@@ -642,11 +596,11 @@ def _residual_dist_case(
 
 
 # ---------------------------------------------------------------------------
-# Streaming maintenance of the codes artifact: an append-only log of
-# batch deltas (the ext/artifact.py contract shared with the BM25 index
-# and the MinHash gram log).  The quantizer artifacts are FROZEN — a
-# stream maintains ONLY the codes table: each micro-batch is assigned +
-# encoded with the stored centroids/codebook and dynamically overwrites
+# Maintenance of the codes artifact: an append-only log of batch deltas
+# (the ext/artifact.py contract shared with the BM25 index and the
+# MinHash gram log; a build is batch 0).  The quantizer artifacts are
+# FROZEN — appends maintain ONLY the codes table: each batch is
+# assigned + encoded with the stored centroids/codebook and overwrites
 # its own batch_id partition (replay-idempotent); pcell stays a
 # partition column UNDER batch_id, so the pruned serve read keeps its
 # PartitionFilters across batch directories, and compaction folds the
@@ -739,21 +693,8 @@ def ann_codes_append_batch(
             "before streaming batches"
         )
     _warn_if_dead_codebook(cents, cbook, out, "ann_codes_append_batch")
-    centroids = meta_df(
-        spark, [(int(i), vec) for i, vec in sorted(cents.items())], _centroid_schema("cell")
-    )
-    codes = pq_codes(
-        assign_cells(_vec_frame(batch_df, id_col, vec_col), centroids),
-        cbook,
-        m,
-        subdim,
-    )
-    from pipeline311_spark.ext.artifact import write_batch_partition, write_intent
-
-    with write_intent(out, f"append-{int(batch_id)}"):
-        write_batch_partition(
-            codes, os.path.join(out, "codes"), batch_id, partition_by=("pcell",)
-        )
+    v = _vec_frame(batch_df, id_col, vec_col)
+    _write_codes_batch(out, batch_id, _encode(spark, v, cents, cbook, m, subdim))
 
 
 def ann_codes_delete_batch(
@@ -844,25 +785,6 @@ def ann_codes_compact(spark: SparkSession, out: str, m: int = ANN_M) -> None:
     )
 
 
-def ann_adc_topk_from_log(
-    spark: SparkSession,
-    out: str,
-    qvecs: dict[int, list[float]],
-    k: int,
-    nprobe: int,
-    m: int = ANN_M,
-    subdim: int = ANN_SUBDIM,
-) -> DataFrame:
-    """Serve top-k from the LOG-form codes store — identical ranking to
-    :func:`ann_adc_topk_from_store`, reading the batch_id-partitioned
-    layout (pcell pruning still reaches the scan: a second-level
-    partition column prunes across batch directories)."""
-    return _serve_adc_topk(
-        spark, out, index_codes=load_ann_codes_log(spark, out, m),
-        qvecs=qvecs, k=k, nprobe=nprobe, m=m, subdim=subdim,
-    )
-
-
 # ---------------------------------------------------------------------------
 # Trained PQ codebook: k-means (Lloyd) per subspace with EXACT decimal
 # means.  The seed-centroid convention above keeps the DuckDB twins
@@ -914,7 +836,9 @@ def ann_index_build_trained(
     """The TRAINED-quantizer build: Lloyd-train the coarse cells on the
     corpus, assign, Lloyd-train the PQ codebook on the RESIDUALS (the
     codebook then models within-cell spread — the quantity residual
-    codes encode), write all three artifacts.  Serving is unchanged
+    codes encode), write all three artifacts (codes as batch 0 of the
+    codes log, replacing any existing store, like
+    :func:`ann_index_build`).  Serving is unchanged
     (:func:`ann_adc_topk_from_store` — the store layout doesn't know or
     care how its quantizer was trained; frozen-per-corpus-version and
     incremental-append semantics carry over verbatim).  Cost:
@@ -982,11 +906,9 @@ def ann_index_build_trained(
                 ],
                 F.concat(F.lit("c"), F.col("cell").cast("string")).alias("pcell"),
             )
-            codes.write.mode("overwrite").partitionBy("pcell").parquet(
-                os.path.join(out, "codes")
-            )
         else:
-            _encode_write(spark, v, out, cents, cbook, m, subdim, mode="overwrite")
+            codes = _encode(spark, v, cents, cbook, m, subdim)
+        _write_codes_batch(out, 0, codes, replace=True)
     finally:
         if resid is not None:
             resid.unpersist(False)

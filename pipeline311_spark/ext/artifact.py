@@ -1,8 +1,10 @@
 """Shared machinery for batch-id-partitioned APPEND-ONLY artifact logs.
 
-Two stored-index families maintain on-disk artifacts from streaming
-micro-batches — the BM25 triple (ext/retrieval.py) and, since r9, the
-MinHash gram table (ext/dedup.py).  Both follow one contract:
+Three stored-index families maintain on-disk artifacts from batches
+and streaming micro-batches — the BM25 triple (ext/retrieval.py), the
+MinHash gram table (ext/dedup.py) and the IVF-PQ codes
+(ext/ann_store.py).  For BM25 and IVF-PQ the log is the ONLY stored
+form: a one-shot build is batch 0.  All follow one contract:
 
 * **append**: every micro-batch writes its delta rows dynamically
   overwriting ONLY its own ``batch_id=<n>`` partition — so replayed
@@ -212,6 +214,13 @@ def folded_marker_path(root: str) -> str:
     return os.path.join(root, "_folded_batches.txt")
 
 
+def _folded_marker_paths(root: str) -> tuple[str, str]:
+    # the second name is the round-10 marker (delete-only guard): an
+    # index compacted under that version must keep its folded delete
+    # ids protected across the rename (review r11)
+    return folded_marker_path(root), os.path.join(root, "_folded_delete_batches.txt")
+
+
 def folded_batches(root: str) -> set[int]:
     """Batch ids (BOTH polarities — appends at >= 0, BM25 deletes in
     the negative key-space) that a past compaction of the family
@@ -228,11 +237,7 @@ def folded_batches(root: str) -> set[int]:
     The content probe runs ONLY when the batch id is in the folded
     set, so steady-state batches never pay it."""
     out: set[int] = set()
-    for p in (folded_marker_path(root),
-              os.path.join(root, "_folded_delete_batches.txt")):
-        # the second name is the round-10 marker (delete-only guard):
-        # an index compacted under that version must keep its folded
-        # delete ids protected across the rename (review r11)
+    for p in _folded_marker_paths(root):
         if os.path.isfile(p):
             with open(p) as f:
                 out.update(int(x) for x in f.read().split())
@@ -361,6 +366,22 @@ def recover_log(path: str) -> None:
     family using this entry point is correct by construction."""
     recover_swap(path)
     recover_swap(tombstone_dir(path))
+
+
+def reset_log(root: str, path: str) -> None:
+    """Drop the log at ``path`` — live dir, crashed-swap leftovers and
+    its tombstone sibling — plus the fold markers of the family rooted
+    at ``root``: what a full REBUILD does before writing its batch 0.
+    A rebuild that kept any of them would serve stale appended rows,
+    mask rebuilt ids behind stale tombstones (a leftover tombstone
+    ``.compact.old`` is resurrected by the next :func:`recover_log`),
+    or misread its own batch ids as post-fold replays."""
+    for p in (path, tombstone_dir(path)):
+        for suffix in ("", ".compact.old", ".compact.tmp"):
+            shutil.rmtree(p + suffix, ignore_errors=True)
+    for marker in _folded_marker_paths(root):
+        if os.path.isfile(marker):
+            os.remove(marker)
 
 
 def tombstone_schema(id_field: str) -> T.StructType:

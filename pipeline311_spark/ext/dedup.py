@@ -269,7 +269,7 @@ def ngram_jaccard_pairs(
     # garr array into every exploded gram row and evaluate the stats
     # per gram row (measured 18 s vs 0.3 s on a 20k-doc corpus).
     # Footprint ≈ the gram table, the same class as the MinHash
-    # reuse_grams cache; reclaim via cache_scope/clearCache.
+    # gram-array cache; reclaim via cache_scope/clearCache.
     rs = persist_tracked(_row_stats(per, n))
     groups = persist_tracked(_with_groups(rs.select("doc", "sz", "fp1", "fp2")))
     sh = rs.select("doc", "sz", "fp1", "fp2", F.explode("garr").alias("g"))
@@ -786,7 +786,6 @@ def minhash_dedup_pairs(
     n: int = 5,
     threshold: float = 0.5,
     seed: int = 42,
-    reuse_grams: bool = True,
     max_bucket: int = 200,
     max_group: int = IDENT_MAX_GROUP,
 ) -> DataFrame:
@@ -794,25 +793,15 @@ def minhash_dedup_pairs(
     candidates with exact Jaccard (set intersection restricted to the
     candidate docs).
 
-    ``reuse_grams`` picks between the two tokenize-once strategies:
-
-    * ``True`` (default): persist the per-doc gram ARRAY table
-      (:func:`_row_gram_arrays`; MEMORY_AND_DISK, ~8 B/distinct gram —
-      the same order as the corpus scan itself, one row per doc) and
-      feed BOTH the signature aggregation (via a map-side explode) and
-      the verify (arrays semi-joined directly — no collect_set
-      exchange) from it — one tokenize+hash pass total.  Right
-      whenever the cluster can cache ~1× the corpus across
-      memory+local disk.
-    * ``False``: recompute the candidate docs' grams from the source
-      text, restricted by a broadcast semi-join BEFORE any hashing —
-      zero cache footprint, two tokenize passes (the second only over
-      candidates).  Right at extreme corpus scale where caching the
-      gram table is unaffordable and candidates ≪ corpus.
-
-    Measured at sf0.1/local[32] on the r4 map-side-gram shape:
-    1.93 s vs 2.50 s (reuse vs recompute; was 2.75 s vs 3.98 s on the
-    r3 window-gram shape — see SCALE.md).
+    One tokenize+hash pass total: the per-doc gram ARRAY table
+    (:func:`_row_gram_arrays`; MEMORY_AND_DISK, ~8 B/distinct gram —
+    the same order as the corpus scan itself, one row per doc) is
+    persisted and feeds BOTH the signature aggregation (via a map-side
+    explode) and the verify (arrays semi-joined directly — no
+    collect_set exchange).  The cluster must be able to cache ~1× the
+    corpus across memory+local disk; beyond that, store the gram table
+    once per corpus version and start from
+    :func:`minhash_pairs_from_grams` (SCALE.md).
 
     Verify shape (see :func:`_jaccard_verify`): Jaccard over 60-bit
     shingle hashes equals Jaccard over the shingle strings up to md5
@@ -832,54 +821,24 @@ def minhash_dedup_pairs(
     (which now gates on distinct-content counts) and the exact-Jaccard
     verify only ever runs on pairs of DISTINCT gram sets.
 
-    Cache lifecycle: the gram table (``reuse_grams=True``), the
-    signature/group table, and the candidate set stay persisted because
-    the RETURNED DataFrame still reads them lazily.  Wrap the call and
+    Cache lifecycle: the gram table, the signature/group table, and
+    the candidate set stay persisted because the RETURNED DataFrame
+    still reads them lazily.  Wrap the call and
     the consuming action in :func:`pipeline311_spark.ext.cache.cache_scope`
     for deterministic reclaim; without a scope, reclaim remains
     ``spark.catalog.clearCache()``.  In a long-lived service, prefer
     materializing the gram table to storage once per corpus version
     (see SCALE.md) instead of executor cache."""
-    if reuse_grams:
-        # Persist the ARRAY form (one row per doc): the signature
-        # aggregation reads it through a map-side explode, and the
-        # verify semi-joins the arrays directly — no collect_set
-        # exchange to rebuild sets the scan already produced (r7;
-        # measured ~0.5 s off the bench verify tail).
-        arrays = persist_tracked(_row_gram_arrays(df, id_col, text_col, n))
-        return minhash_pairs_from_grams(
-            arrays.select("doc", F.explode("garr").alias("g")),
-            k=k, bands=bands, threshold=threshold, seed=seed, persist=False,
-            max_bucket=max_bucket, max_group=max_group, gram_arrays=arrays,
-        )
-    gh = _gram_hash_table(df, id_col, text_col, n, distinct=True)
-    sigg = persist_tracked(
-        _with_groups(gh.groupBy("doc").agg(*_minhash_aggs(k, seed), *_stat_aggs()))
-    )
-    reps = sigg.filter(F.col("doc") == F.col("rep"))
-    # Materialize the (tiny) candidate set once: downstream reuse would
-    # otherwise re-execute the whole signature+banding pipeline.  Group
-    # sizes ride the banding (carry) so the expansion cap needs no join.
-    cand = persist_tracked(
-        lsh_candidate_pairs(
-            reps, k, bands, max_bucket=max_bucket, distinct_pairs=False, carry=("gn",)
-        )
-    )
-    n_pairs = cand.count()
-    cand_docs = _probe_doc_ids(cand, n_pairs, alias="__id")
-    small = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t")).join(
-        F.broadcast(cand_docs), "__id", "left_semi"
-    )
-    doc_sets = _row_gram_arrays(small, "__id", "__t", n).select(
-        "doc", F.col("garr").alias("sset")
-    )
-    cross = _jaccard_verify(cand.distinct(), doc_sets, threshold)
-    return _expand_cross(
-        cross, sigg, ["jaccard"], gn_cols=("gn_a", "gn_b")
-    ).unionByName(
-        _ident_member_pairs(
-            sigg, max_group, group_key=("sz", "fp1", "fp2")
-        ).withColumn("jaccard", F.lit(1.0))
+    # Persist the ARRAY form (one row per doc): the signature
+    # aggregation reads it through a map-side explode, and the verify
+    # semi-joins the arrays directly — no collect_set exchange to
+    # rebuild sets the scan already produced (r7; measured ~0.5 s off
+    # the bench verify tail).
+    arrays = persist_tracked(_row_gram_arrays(df, id_col, text_col, n))
+    return minhash_pairs_from_grams(
+        arrays.select("doc", F.explode("garr").alias("g")),
+        k=k, bands=bands, threshold=threshold, seed=seed, persist=False,
+        max_bucket=max_bucket, max_group=max_group, gram_arrays=arrays,
     )
 
 
@@ -908,9 +867,8 @@ def minhash_pairs_from_grams(
     stats that ride the same aggregation are not.
 
     ``gram_arrays``: optional (doc, garr) ARRAY-form twin of ``gh``
-    (:func:`_row_gram_arrays`).  When provided (the
-    ``minhash_dedup_pairs(reuse_grams=True)`` path persists exactly
-    this), the verify semi-joins the arrays directly instead of
+    (:func:`_row_gram_arrays`).  When provided (what
+    :func:`minhash_dedup_pairs` persists), the verify semi-joins the arrays directly instead of
     rebuilding sets from exploded rows with a ``collect_set``
     exchange."""
     if persist:
@@ -1044,9 +1002,10 @@ def minhash_incremental_pairs(
     tables are exactly what previous runs already materialized — read
     them from storage and per-batch cost is
     O(batch + matching buckets), not O(corpus).  Verify grams are
-    recomputed restricted to candidate docs (the ``reuse_grams=False``
-    strategy), so the only corpus-proportional work left is the stored
-    signature scan.
+    recomputed from the source text restricted to candidate docs — a
+    broadcast semi-join before any hashing, zero cache footprint — so
+    the only corpus-proportional work left is the stored signature
+    scan.
 
     Plan shape: the two inputs are tagged and UNIONED BEFORE gram
     generation, so the self-contained form pays ONE tokenize pass and

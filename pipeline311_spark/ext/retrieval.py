@@ -22,14 +22,20 @@ Index contract (three tables, all parquet-friendly):
   avgdl) is stored because sums are combinable: an incremental batch
   merges by addition, no re-scan.
 
-Incremental maintenance (:func:`bm25_index_update`): batch postings
-are built from the batch alone; ``term_stats`` merges by per-term
-``df`` addition and ``corpus_stats`` by element addition — valid
-because batch doc ids are disjoint from the indexed corpus (the same
-disjointness contract as ``minhash_incremental_from_store``).  The
-merged index is REQUIRED to be row-identical to a fresh build over
-corpus ∪ batch; the registry query ``text_bm25_incr_store`` proves it
-under the oracle gate (same DuckDB twin as the from-scratch query).
+Incremental maintenance: the ONE stored form is an append-only log
+partitioned by batch id (the ext/artifact.py contract) — a build is
+batch 0 (:func:`bm25_index_append_batch`), and every later batch
+writes only its own deltas, built from the batch alone.
+:func:`load_bm25_index` folds the log: postings by union, ``term_stats``
+by per-term ``df`` addition and ``corpus_stats`` by element addition —
+valid because batch doc ids are disjoint (the same disjointness
+contract as ``minhash_incremental_from_store``).  Deletes ride the same
+folds (:func:`bm25_index_delete_batch`: a doc-id tombstone log plus
+NEGATIVE stat deltas), and :func:`bm25_index_compact` folds the log to
+one base.  The folded index is REQUIRED to be row-identical to a
+one-batch build over the live corpus; the registry queries
+``text_bm25_incr_store`` and ``text_bm25_delete_merge`` prove it under
+the oracle gate (same DuckDB twin as the from-scratch query).
 
 Scoring (:func:`bm25_score_topk`) keeps the r7 cross-engine
 discipline: per-term contributions are folded in SORTED TERM ORDER so
@@ -65,29 +71,17 @@ BM25_B = 0.75
 
 class Bm25Index(NamedTuple):
     """The stored-index triple.  Each member is a DataFrame view of the
-    artifact — storage-backed (parquet read) in production, in-memory
-    in the build-then-score convenience paths."""
+    folded artifact log (:func:`load_bm25_index`)."""
 
     postings: DataFrame  # term, doc_id, tf, dl
     term_stats: DataFrame  # term, df
     corpus_stats: DataFrame  # n_docs, sum_dl
 
 
-def build_bm25_postings(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(term, doc_id, tf, dl) from raw text — ONE corpus pass: tokenize
-    scan-side, explode, and a map-side-combined groupBy whose shuffle
-    carries (doc, term) partials, not the raw token stream.  NULL text
-    is absent from the index (the engine-wide failed-decode
-    convention)."""
-    return _postings_from_base(_bm25_token_base(df, id_col, text_col))
-
-
 def _bm25_token_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, dl, tk) — the ONE tokenize pass every BM25 artifact can
-    derive from.  Same expressions as :func:`build_bm25_postings` /
-    :func:`bm25_corpus_stats` (``dl = size(tokens(text))``; NULL text
-    absent), so frames derived from a shared base are row-identical to
-    the historical per-artifact recomputations."""
+    derive from (``dl = size(tokens(text))``; NULL text absent from
+    the index — the engine-wide failed-decode convention)."""
     return (
         df.filter(F.col(text_col).isNotNull())
         .select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("tk"))
@@ -96,9 +90,10 @@ def _bm25_token_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def _postings_from_base(base: DataFrame) -> DataFrame:
-    """(term, doc_id, tf, dl) from a token base — the explode/groupBy
-    half of :func:`build_bm25_postings` (zero-token docs vanish at the
-    explode, exactly as in the one-shot builder)."""
+    """(term, doc_id, tf, dl) from a token base — explode, then a
+    map-side-combined groupBy whose shuffle carries (doc, term)
+    partials, not the raw token stream (zero-token docs vanish at the
+    explode)."""
     return (
         base.select("doc_id", "dl", F.explode("tk").alias("tok"))
         .select("doc_id", "dl", F.lower("tok").alias("term"))
@@ -132,10 +127,10 @@ def bm25_batch_artifacts(
     the caller MUST materialize every frame it uses before calling the
     returned ``release()``.
 
-    Returns ``(postings, term_stats, corpus_stats, release)``; each
-    frame is row-identical to its historical recomputation
-    (:func:`build_bm25_postings` / :func:`bm25_term_stats` /
-    :func:`bm25_corpus_stats`) — same expressions over the same base.
+    Returns ``(postings, term_stats, corpus_stats, release)``.
+    ``corpus_stats`` (n_docs, sum_dl) comes from the base, not the
+    postings: zero-token docs count toward n_docs but produce no
+    posting rows.  Stored as SUMS so batches fold by addition.
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -154,196 +149,10 @@ def bm25_batch_artifacts(
     return postings, bm25_term_stats(postings), _corpus_stats_from_base(base), release
 
 
-def bm25_corpus_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(n_docs, sum_dl) — one map-side partial aggregate, one row back.
-    Stored as SUMS so incremental batches merge by addition."""
-    return _corpus_stats_from_base(_bm25_token_base(df, id_col, text_col))
-
-
 def bm25_term_stats(postings: DataFrame) -> DataFrame:
     """(term, df) from postings — postings are per-(doc, term) distinct
     by construction, so ``df`` is a plain map-side-combined count."""
     return postings.groupBy("term").agg(F.count("*").cast("long").alias("df"))
-
-
-def build_bm25_index(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Bm25Index:
-    """Build all three artifacts.  The term_stats aggregation reads the
-    postings plan; when the caller writes postings to storage first
-    (the production path — see ``text_bm25_from_store``), derive
-    term_stats from the STORED postings instead — the build is then
-    exactly TWO corpus passes: the postings tokenize and the
-    corpus-stats pass (stats cannot come from postings: zero-token
-    docs count toward n_docs but produce no posting rows)."""
-    postings = build_bm25_postings(df, id_col, text_col)
-    return Bm25Index(
-        postings=postings,
-        term_stats=bm25_term_stats(postings),
-        corpus_stats=bm25_corpus_stats(df, id_col, text_col),
-    )
-
-
-def bm25_index_update(
-    index: Bm25Index,
-    new: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    validate_disjoint: bool = False,
-) -> Bm25Index:
-    """Merge a NEW batch (doc ids disjoint from the indexed corpus)
-    into the index — the per-batch production shape: the corpus text is
-    never re-tokenized, only the batch is.
-
-    The merge-by-addition math is ONLY valid under that disjointness:
-    an overlapping batch silently double-counts postings, per-term df,
-    and n_docs/sum_dl (ADVICE r8).  ``validate_disjoint=True`` spends
-    one semi-join probe (batch ids vs the postings' doc ids — bounded
-    by the batch side, short-circuited at the first hit) and raises
-    ``ValueError`` on overlap; the debug switch for pipelines whose id
-    discipline isn't structural.  It cannot see an overlap on an
-    indexed ZERO-TOKEN doc (those have no posting rows) — callers with
-    empty-doc overlap risk must key batches structurally (file splits,
-    id ranges) as the streaming path does.
-
-    * postings: pure union — disjoint doc ids can't collide, so no
-      merge aggregation at all (an append write in storage terms).
-    * term_stats: per-term ``df`` addition over |batch vocabulary|
-      rows unioned with the stored |vocabulary| rows — a
-      dimension-scale aggregate, never the corpus.
-    * corpus_stats: two one-row frames summed.
-
-    The batch token base AND the batch postings are persisted
-    (tracked): the merged plan reads the postings from BOTH the
-    postings union and the term-stats aggregation, and corpus_stats
-    reads the base (which sees zero-token docs that produce no
-    postings) — so the batch text is tokenized ONCE per action (review
-    r8 pinned the postings; round 11 pins the base too, folding the
-    separate corpus-stats tokenize into the same pass, guide §1.2).
-    """
-    from pipeline311_spark.ext.cache import persist_tracked
-
-    batch_base = persist_tracked(_bm25_token_base(new, id_col, text_col))
-    batch_postings = persist_tracked(_postings_from_base(batch_base))
-    if validate_disjoint:
-        overlap = (
-            index.postings.select("doc_id")
-            .join(
-                F.broadcast(batch_postings.select("doc_id").distinct()),
-                "doc_id",
-                "left_semi",
-            )
-            .take(1)
-        )
-        if overlap:
-            raise ValueError(
-                f"bm25_index_update: batch doc_id {overlap[0]['doc_id']} is "
-                "already indexed — the disjoint-batch contract is violated "
-                "and merge-by-addition would double-count"
-            )
-    term_stats = (
-        index.term_stats.unionByName(bm25_term_stats(batch_postings))
-        .groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df"))
-    )
-    corpus_stats = (
-        index.corpus_stats.unionByName(_corpus_stats_from_base(batch_base))
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_dl").cast("long").alias("sum_dl"),
-        )
-    )
-    return Bm25Index(
-        postings=index.postings.unionByName(batch_postings),
-        term_stats=term_stats,
-        corpus_stats=corpus_stats,
-    )
-
-
-def bm25_index_delete(
-    index: Bm25Index,
-    removed: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    validate_contained: bool = False,
-) -> Bm25Index:
-    """Remove a batch of docs from the index — the exact DUAL of
-    :func:`bm25_index_update` (merge-by-SUBTRACTION, VERDICT r9 item 1:
-    this completes the reference's own delete-reconciliation lifecycle,
-    /root/reference/delete-removed-tickets.py:138-169, at the index
-    layer).  ``removed`` must carry the docs EXACTLY as indexed (same
-    text): the negative deltas are recomputed from it, which is the
-    only way n_docs can account for zero-token docs that left no
-    posting rows.  Ids must not repeat across delete batches (a
-    double-delete would double-subtract — the same contract as the
-    update path's disjointness).
-
-    * postings: anti-join on the removed doc ids — postings are
-      row-disjoint per doc, so no arithmetic is needed.
-    * term_stats: per-term df SUBTRACTION (a union with negated batch
-      df rows riding the same dimension-scale sum fold as the update),
-      dropping terms whose df reaches zero — a fresh build over the
-      remaining corpus has no such rows.
-    * corpus_stats: one negated one-row frame summed in.
-
-    ``validate_contained=True`` probes that every removed doc with
-    postings IS indexed (bounded by the batch side) and raises
-    otherwise — subtracting a never-indexed doc would silently corrupt
-    the stats.  Like the update guard, it cannot see zero-token docs.
-
-    The batch token base is persisted (tracked): term_stats (via the
-    postings) and corpus_stats both derive from it, so the removed
-    batch is tokenized ONCE per action instead of twice (guide §1.2).
-    """
-    from pipeline311_spark.ext.cache import persist_tracked
-
-    removed_base = persist_tracked(_bm25_token_base(removed, id_col, text_col))
-    removed_postings = _postings_from_base(removed_base)
-    if validate_contained:
-        # postings persisted only here: the guard probe and the
-        # term-stats aggregation both read the batch postings — on the
-        # default path term_stats is the ONE consumer and a pin would
-        # be pure overhead (review r10; the update path's pin has two
-        # consumers)
-        removed_postings = persist_tracked(removed_postings)
-        missing = (
-            removed_postings.select("doc_id")
-            .distinct()
-            .join(index.postings.select("doc_id"), "doc_id", "left_anti")
-            .take(1)
-        )
-        if missing:
-            raise ValueError(
-                f"bm25_index_delete: doc_id {missing[0]['doc_id']} is not "
-                "indexed — subtracting it would corrupt term/corpus stats"
-            )
-    removed_ids = removed.select(F.col(id_col).alias("doc_id")).distinct()
-    # re-select: the USING-join floats doc_id to the front, and the
-    # postings contract (and its artifact read-back) is column-ordered
-    postings = index.postings.join(removed_ids, "doc_id", "left_anti").select(
-        index.postings.columns
-    )
-    term_stats = (
-        index.term_stats.unionByName(
-            bm25_term_stats(removed_postings).withColumn(
-                "df", (-F.col("df")).cast("long")
-            )
-        )
-        .groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df"))
-        .filter(F.col("df") > 0)
-    )
-    corpus_stats = (
-        index.corpus_stats.unionByName(
-            _corpus_stats_from_base(removed_base).select(
-                (-F.col("n_docs")).cast("long").alias("n_docs"),
-                (-F.col("sum_dl")).cast("long").alias("sum_dl"),
-            )
-        )
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_dl").cast("long").alias("sum_dl"),
-        )
-    )
-    return Bm25Index(postings=postings, term_stats=term_stats, corpus_stats=corpus_stats)
 
 
 def bm25_score_topk(
@@ -435,9 +244,8 @@ def bm25_topk(
 # Streaming index maintenance: an append-only log of batch deltas
 # ---------------------------------------------------------------------------
 #
-# The foreachBatch shape of :func:`bm25_index_update`: instead of
-# read-merge-rewrite (a swap window per batch), the on-disk index is an
-# APPEND-ONLY LOG partitioned by batch id — postings rows, per-batch
+# The on-disk index is an APPEND-ONLY LOG partitioned by batch id
+# (read-merge-rewrite would open a swap window per batch) — postings rows, per-batch
 # term-df rows, and per-batch one-row corpus stats.  Loading folds the
 # deltas: postings read as-is (the union IS the merge, disjoint doc
 # ids), term df summed per term (|vocabulary|-scale), corpus stats
@@ -592,10 +400,13 @@ def bm25_index_delete_batch(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """The delete-side ``foreachBatch`` body — the log form of
-    :func:`bm25_index_delete`.  ``batch_df`` carries the removed docs
-    EXACTLY as indexed (same text; the in-memory dual's docstring
-    explains why ids alone can't maintain n_docs).  Three writes:
+    """The delete-side ``foreachBatch`` body (the reference's own
+    delete-reconciliation lifecycle, delete-removed-tickets.py, at the
+    index layer).  ``batch_df`` carries the removed docs EXACTLY as
+    indexed (same text): the negative deltas are recomputed from it,
+    which is the only way n_docs can account for zero-token docs that
+    left no posting rows.  Ids must not repeat across delete batches
+    (a double-delete would double-subtract).  Three writes:
 
     * ``postings_deleted`` (the shared ``tombstone_dir`` convention):
       the doc-id tombstone log

@@ -14,7 +14,6 @@ from pipeline311_spark.operators.filters import (  # noqa: F401
 from pipeline311_spark.operators.joins import (  # noqa: F401
     semi_join,
     anti_join,
-    exists_probe,
 )
 from pipeline311_spark.operators.aggregates import (  # noqa: F401
     max_watermark,

@@ -28,11 +28,3 @@ def anti_join(left: DataFrame, right: DataFrame, key: str, broadcast_right: bool
     chunk).  One line, any cardinality, no chunking."""
     r = F.broadcast(right) if broadcast_right else right
     return left.join(r.select(key).distinct(), key, "left_anti")
-
-
-def exists_probe(left: DataFrame, right: DataFrame, key: str) -> DataFrame:
-    """Annotate ``left`` with a boolean ``exists`` column instead of
-    filtering — used by the delete-then-add upsert emulation (K7,
-    sync-db2-ago.py:629-643) to split adds into delete+add batches."""
-    marks = right.select(key).distinct().withColumn("exists", F.lit(True))
-    return left.join(marks, key, "left").withColumn("exists", F.coalesce("exists", F.lit(False)))

@@ -4,15 +4,17 @@ round-8 BM25 artifact stack (VERDICT r8 item 1).
 
 * ``sim_ivfpq_from_store`` — train the frozen quantizer (coarse cells +
   PQ codebook from the deterministic corpus-head seeds), WRITE all
-  three artifacts, and serve ADC top-k from the store: the codes read
-  is partition-PRUNED to each query's nprobe cells (driver-computed
-  from the collected metadata-scale centroids → static PartitionFilters,
-  asserted in tests/test_ann_store.py).
+  three artifacts (the codes as batch 0 of the codes log), and serve
+  ADC top-k from the store: the codes read is partition-PRUNED to each
+  query's nprobe cells (driver-computed from the collected
+  metadata-scale centroids → static PartitionFilters, asserted in
+  tests/test_ann_store.py).
 * ``sim_ivfpq_incr_store`` — the per-batch maintenance path: index the
-  corpus minus a batch, then :func:`ann_index_update` assigns + encodes
-  the batch with the STORED artifacts and appends to its cell
-  partitions.  Same oracle: the split must be invisible — frozen-
-  quantizer encode is a pure per-row function, so merged ≡ fresh.
+  corpus minus a batch (batch 0), then
+  :func:`ann_codes_append_batch` assigns + encodes the batch with the
+  STORED artifacts as batch 1 of the log.  Same oracle: the split
+  must be invisible — frozen-quantizer encode is a pure per-row
+  function, so merged ≡ fresh.
 
 Both share ONE DuckDB twin that derives cell assignment, PQ codes,
 probe cells, and ADC ranking from the raw embeddings — the storage hop,
@@ -33,8 +35,8 @@ from pyspark.sql import functions as F
 
 from pipeline311_spark.ext.ann_store import (
     ann_adc_topk_from_store,
+    ann_codes_append_batch,
     ann_index_build,
-    ann_index_update,
 )
 from pipeline311_spark.plans.common import emb_table, materialize
 from pipeline311_spark.plans.curation4 import _PQ_K, _PQ_M, _PQ_SUBDIM, _pq_sqdist_sql
@@ -214,12 +216,12 @@ def q_ivfpq_incr_store(spark, sf_dir):
     try:
         e = emb_table(spark, sf_dir)
         # seeds = the FULL corpus head: the quantizer is frozen per
-        # corpus version and shared by the base build and every update
-        # (ext/ann_store.py module doc)
+        # corpus version and shared by the base build and every
+        # appended batch (ext/ann_store.py module doc)
         ann_index_build(
             spark, e.filter(~is_batch), out, n_cells=_ANN_CELLS, pq_k=_PQ_K, seeds=e
         )
-        ann_index_update(spark, out, e.filter(is_batch))
+        ann_codes_append_batch(e.filter(is_batch), 1, out)
         return ann_adc_topk_from_store(
             spark, out, _query_vecs(e), k=_ANN_K, nprobe=_ANN_NPROBE
         ).transform(materialize)
@@ -247,12 +249,7 @@ def q_stream_ann_index_maintain(spark, sf_dir):
     ADC top-k is served from the folded, pcell-pruned log.  Same oracle
     as sim_ivfpq_from_store: a corpus streamed in three batches must
     serve exactly what a one-shot build serves."""
-    from pipeline311_spark.ext.ann_store import (
-        ann_adc_topk_from_log,
-        ann_codes_append_batch,
-        ann_codes_compact,
-        ann_quantizer_build,
-    )
+    from pipeline311_spark.ext.ann_store import ann_codes_compact, ann_quantizer_build
     from pipeline311_spark.session import prep_session
 
     prep_session(spark)  # streaming bypasses table(): pin tz/conf here
@@ -289,7 +286,7 @@ def q_stream_ann_index_maintain(spark, sf_dir):
         )
         q.awaitTermination()
         ann_codes_compact(spark, idx)
-        return ann_adc_topk_from_log(
+        return ann_adc_topk_from_store(
             spark, idx, _query_vecs(e), k=_ANN_K, nprobe=_ANN_NPROBE
         ).transform(materialize)  # materialize before the cleanup
     finally:

@@ -80,10 +80,6 @@ def dec(col: Column | str, prec: int = 18, scale: int = 2) -> Column:
     return c.cast(f"decimal({prec},{scale})")
 
 
-def one() -> Column:
-    return F.lit(1).cast("decimal(18,2)")
-
-
 def dsum(col: Column | str) -> Column:
     """Exact sum of a 2-decimal metric, returned as double."""
     return F.sum(dec(col)).cast("double")
@@ -91,7 +87,8 @@ def dsum(col: Column | str) -> Column:
 
 def revenue_expr() -> Column:
     """sum(l_extendedprice * (1 - l_discount)) via exact decimals."""
-    return F.sum(dec("l_extendedprice") * (one() - dec("l_discount"))).cast("double")
+    one = F.lit(1).cast("decimal(18,2)")
+    return F.sum(dec("l_extendedprice") * (one - dec("l_discount"))).cast("double")
 
 
 REVENUE_SQL = (

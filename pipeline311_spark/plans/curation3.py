@@ -631,38 +631,31 @@ def q_retrieval_hybrid_rrf(spark, sf_dir):
 
 
 def hybrid_rrf_build(spark, sf_dir, out):
-    """BUILD phase: write the BM25 artifacts under ``out`` and the
-    residual-IVF-PQ store under ``out/ann``.  Split from the serve
-    phase (VERDICT r10 item 4) so the amortizable per-corpus-version
-    index build can be timed separately from the serving cost —
-    the r10 hybrid headline was ~80% this build.  Returns the read-back
-    BM25 index triple."""
-    import os
-
+    """BUILD phase: write the BM25 index log under ``out/bm25`` (the
+    corpus as batch 0) and the residual-IVF-PQ store under ``out/ann``
+    — sibling roots, so their intent markers and fold markers never
+    share a directory.  Split from the serve phase (VERDICT r10 item
+    4) so the amortizable per-corpus-version index build can be timed
+    separately from the serving cost — the r10 hybrid headline was ~80%
+    this build.  Returns the folded BM25 index triple."""
     from pipeline311_spark.ext.ann_store import ann_index_build
+    from pipeline311_spark.ext.artifact import run_jobs
+    from pipeline311_spark.ext.retrieval import bm25_index_append_batch, load_bm25_index
     from pipeline311_spark.plans.ann_store_q import _ANN_CELLS
     from pipeline311_spark.plans.common import emb_table
     from pipeline311_spark.plans.curation4 import _PQ_K
 
-    # function-local import: retrieval2 imports this module at top level
-    from pipeline311_spark.ext.artifact import run_jobs
-    from pipeline311_spark.plans.retrieval2 import _stored_index
-
+    bm25_dir = os.path.join(out, "bm25")
     # the two stores are fully independent (disjoint dirs, different
     # source tables) — build them concurrently (guide §2.6, round 11)
-    got: dict = {}
-
-    def _bm25() -> None:
-        got["index"] = _stored_index(spark, sf_dir, out)
-
     run_jobs(
-        _bm25,
+        lambda: bm25_index_append_batch(table(spark, sf_dir, "documents"), 0, bm25_dir),
         lambda: ann_index_build(
             spark, emb_table(spark, sf_dir), os.path.join(out, "ann"),
             n_cells=_ANN_CELLS, pq_k=_PQ_K,
         ),
     )
-    return got["index"]
+    return load_bm25_index(spark, bm25_dir)
 
 
 def hybrid_rrf_serve(spark, sf_dir, out, index):
@@ -705,7 +698,7 @@ def hybrid_rrf_serve(spark, sf_dir, out, index):
 
 def hybrid_rrf_frame(spark, sf_dir, out):
     """The fused frame pre-checkpoint: lexical ranks served from the
-    BM25 store written under ``out``, dense ranks served from the
+    BM25 store written under ``out/bm25``, dense ranks served from the
     stored residual-IVF-PQ ANN index under ``out/ann`` (VERDICT r9
     item 3 — both rankers read per-corpus-version artifacts).  Split
     out so the plan-shape test can inspect the REAL serve plan, and

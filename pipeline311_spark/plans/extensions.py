@@ -401,7 +401,7 @@ def q_minhash_incr_store(spark, sf_dir):
     from pipeline311_spark.ext.artifact import run_jobs
 
     # ONE gram pass feeds both artifact writes, overlapped (round 12,
-    # guide §2.6 — the _stored_index shape): the old form wrote grams,
+    # guide §2.6 — the BM25 batch-append shape): the old form wrote grams,
     # read them back, and only then computed+wrote signatures — a
     # serial parquet round trip between two writes whose contents both
     # derive from the same persisted gram table.  Signature rows are

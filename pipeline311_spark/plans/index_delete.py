@@ -7,13 +7,14 @@ the INDEX layer: a document deleted from the corpus stops serving from
 BM25, the MinHash gram store, and the ANN codes log without a full
 rebuild.
 
-* ``text_bm25_delete_merge`` — the in-memory merge-by-SUBTRACTION dual
-  of ``bm25_index_update``: postings anti-joined, per-term df and
-  n_docs/sum_dl decremented from the removed docs' own text.
-* ``text_bm25_delete_maintain`` — the log form: tombstones +
-  NEGATIVE term/corpus delta rows in the delete batch's own
-  (negative-key-space) partitions, then compaction physically drops
-  the deleted postings.
+* ``text_bm25_delete_merge`` — merge-by-SUBTRACTION on the index log:
+  the corpus is batch 0, the delete batch writes doc-id tombstones +
+  NEGATIVE term/corpus delta rows (decremented from the removed docs'
+  own text) in its own negative-key-space partitions, and the serve
+  reads the UNCOMPACTED fold — postings anti-joined at read time.
+* ``text_bm25_delete_maintain`` — the full log lifecycle: two append
+  batches, the delete batch, then compaction physically drops the
+  deleted postings before the serve.
 * ``dedup_minhash_delete_maintain`` — gram rows are row-disjoint per
   doc: a tombstone log anti-joined at read, dropped at compaction; the
   LSH pipeline then runs from the folded store.
@@ -46,7 +47,6 @@ from pyspark.sql import functions as F
 
 from pipeline311_spark.ext.retrieval import (
     bm25_index_compact,
-    bm25_index_delete,
     bm25_index_delete_batch,
     bm25_index_append_batch,
     bm25_topk,
@@ -75,7 +75,6 @@ from pipeline311_spark.plans.retrieval2 import (
     _BM25_TOPK,
     _drop_score,
     _query_frame,
-    _stored_index,
 )
 
 # the delete batch: a deterministic modulus slice, the incremental-
@@ -96,18 +95,19 @@ def _is_deleted(col: str = "doc_id"):
     covers=("ext:retrieval", "ext:bm25-delete", "J3", "K8"),
 )
 def q_bm25_delete_merge(spark, sf_dir):
-    """Index the FULL corpus, subtract the delete batch with
-    :func:`bm25_index_delete` (the exact dual of the incremental merge
-    — the corpus is never re-tokenized, only the removed docs are),
-    and serve: indistinguishable from a fresh build over the remaining
-    docs."""
+    """Index the FULL corpus as batch 0, subtract the delete batch with
+    :func:`bm25_index_delete_batch` (the corpus is never re-tokenized,
+    only the removed docs are), and serve from the UNCOMPACTED fold
+    (tombstones anti-joined, negative deltas summed at read time —
+    ``text_bm25_delete_maintain`` covers the compacted form):
+    indistinguishable from a fresh build over the remaining docs."""
     out = os.path.join(tempfile.gettempdir(), f"p311_bm25d_{uuid.uuid4().hex[:12]}")
     try:
-        index = _stored_index(spark, sf_dir, out)
-        removed = table(spark, sf_dir, "documents").filter(_is_deleted())
-        pruned = bm25_index_delete(index, removed, "doc_id", "text")
+        d = table(spark, sf_dir, "documents")
+        bm25_index_append_batch(d, 0, out)
+        bm25_index_delete_batch(d.filter(_is_deleted()), 0, out)
         return _drop_score(
-            bm25_topk(pruned, _query_frame(spark), k=_BM25_TOPK)
+            bm25_topk(load_bm25_index(spark, out), _query_frame(spark), k=_BM25_TOPK)
         ).transform(materialize)
     finally:
         shutil.rmtree(out, ignore_errors=True)
@@ -264,7 +264,7 @@ def q_ivfpq_delete_store(spark, sf_dir):
     serve from the folded, pcell-pruned log.  Must equal a fresh build
     over the remaining vectors under the SAME (full-corpus) quantizer."""
     from pipeline311_spark.ext.ann_store import (
-        ann_adc_topk_from_log,
+        ann_adc_topk_from_store,
         ann_codes_append_batch,
         ann_codes_compact,
         ann_codes_delete_batch,
@@ -286,7 +286,7 @@ def q_ivfpq_delete_store(spark, sf_dir):
             e.filter(_is_deleted("vec_id")).select("vec_id"), 0, out
         )
         ann_codes_compact(spark, out)
-        return ann_adc_topk_from_log(
+        return ann_adc_topk_from_store(
             spark, out, _query_vecs(e), k=_ANN_K, nprobe=_ANN_NPROBE
         ).transform(materialize)
     finally:

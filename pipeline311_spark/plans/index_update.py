@@ -209,7 +209,7 @@ def q_ivfpq_update_store(spark, sf_dir):
     folded pcell-pruned log.  Must equal a fresh build over the
     post-update vectors under the original quantizer."""
     from pipeline311_spark.ext.ann_store import (
-        ann_adc_topk_from_log,
+        ann_adc_topk_from_store,
         ann_codes_append_batch,
         ann_codes_compact,
         ann_codes_delete_batch,
@@ -235,7 +235,7 @@ def q_ivfpq_update_store(spark, sf_dir):
         )
         ann_codes_append_batch(revised, 2, out, validate_fresh_ids=True)
         ann_codes_compact(spark, out)
-        return ann_adc_topk_from_log(
+        return ann_adc_topk_from_store(
             spark, out, _query_vecs(e), k=_ANN_K, nprobe=_ANN_NPROBE
         ).transform(materialize)
     finally:

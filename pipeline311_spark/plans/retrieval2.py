@@ -3,21 +3,19 @@ maintained index (ext/retrieval.py) — the serving shape of lexical
 retrieval, mirroring the stored-gram contract the MinHash family
 established (dedup_minhash_from_store / dedup_minhash_incr_store).
 
-* ``text_bm25_from_store`` — build the index artifacts (postings +
-  corpus stats), WRITE them to parquet, read them back, and serve the
-  fixed query set from the store.  Same oracle as ``text_bm25_topk``:
-  the storage hop must be invisible in the result.  term_stats is
-  derived from the STORED postings, so the build is exactly TWO corpus
-  passes (the postings tokenize and the corpus-stats pass, which must
-  see zero-token docs that produce no postings) — and query time reads
-  only the store.
+* ``text_bm25_from_store`` — write the corpus as batch 0 of the
+  index log (:func:`bm25_index_append_batch`: postings, term-df and
+  corpus-stat artifacts from ONE tokenize pass), fold it back
+  (:func:`load_bm25_index`), and serve the fixed query set from the
+  store.  Same oracle as ``text_bm25_topk``: the storage hop must be
+  invisible in the result, and query time reads only the store.
 
-* ``text_bm25_incr_store`` — the per-batch maintenance path: index a
-  base corpus slice, store it, then merge a disjoint new batch with
-  :func:`bm25_index_update` (postings append + per-term df addition +
-  one-row stats addition — the corpus slice is never re-tokenized) and
-  serve from the merged index.  Same oracle again: the merged index
-  must be indistinguishable from a fresh full build.
+* ``text_bm25_incr_store`` — the per-batch maintenance path: the base
+  corpus slice is batch 0, a disjoint new batch is batch 1 (its
+  postings, per-term df deltas and one-row stat deltas — the corpus
+  slice is never re-tokenized), served from the UNCOMPACTED fold.
+  Same oracle again: the two-batch log must be indistinguishable from
+  a fresh full build.
 
 * ``retrieval_rrf_recency`` — N-ranker reciprocal-rank fusion
   (:func:`pipeline311_spark.ext.retrieval.rrf_fuse`): lexical (served
@@ -46,9 +44,10 @@ from pyspark.sql import functions as F
 
 from pipeline311_spark.ext.retrieval import (
     Bm25Index,
-    bm25_index_update,
+    bm25_index_append_batch,
     bm25_term_stats,
     bm25_topk,
+    load_bm25_index,
     rrf_fuse,
 )
 from pipeline311_spark.plans.common import emb_table, materialize, table
@@ -68,57 +67,6 @@ def _query_frame(spark):
     return meta_df(spark, list(_BM25_QUERIES), "query_id long, term string")
 
 
-def _stored_index(spark, sf_dir, out: str, doc_filter=None) -> Bm25Index:
-    """Build → write → read-back: postings and corpus stats become
-    parquet artifacts; term_stats derives from the STORED postings.
-    Build cost = ONE corpus pass (round 11, guide §1.2): the persisted
-    token base feeds both the postings write and the corpus-stats write
-    (stats can't come from postings — zero-token docs count toward
-    n_docs but produce no posting rows — but they CAN come from the
-    shared tokenize)."""
-    from pyspark.storagelevel import StorageLevel
-
-    from pipeline311_spark.ext.retrieval import (
-        _bm25_token_base,
-        _corpus_stats_from_base,
-        _postings_from_base,
-    )
-
-    d = table(spark, sf_dir, "documents")
-    if doc_filter is not None:
-        d = d.filter(doc_filter)
-    base = _bm25_token_base(d, "doc_id", "text").persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        postings = _postings_from_base(base)
-        stats = _corpus_stats_from_base(base)
-        # the two artifact writes share only the token-base cache,
-        # whose concurrent fill BlockManager serializes — overlap them
-        # (guide §2.6; round 11, second wave)
-        from pipeline311_spark.ext.artifact import run_jobs
-
-        run_jobs(
-            lambda: postings.write.mode("overwrite").parquet(
-                os.path.join(out, "postings")
-            ),
-            lambda: stats.write.mode("overwrite").parquet(
-                os.path.join(out, "corpus_stats")
-            ),
-        )
-    finally:
-        base.unpersist(False)
-    stored_postings = spark.read.schema(postings.schema).parquet(
-        os.path.join(out, "postings")
-    )
-    stored_stats = spark.read.schema(stats.schema).parquet(
-        os.path.join(out, "corpus_stats")
-    )
-    return Bm25Index(
-        postings=stored_postings,
-        term_stats=bm25_term_stats(stored_postings),
-        corpus_stats=stored_stats,
-    )
-
-
 def _drop_score(df):
     # ranks + integer stats only: the ln-based double is dropped before
     # the oracle hash (1-ulp ln hazard — plans/curation3.py)
@@ -133,9 +81,9 @@ def _drop_score(df):
 def q_bm25_from_store(spark, sf_dir):
     out = os.path.join(tempfile.gettempdir(), f"p311_bm25_{uuid.uuid4().hex[:12]}")
     try:
-        index = _stored_index(spark, sf_dir, out)
+        bm25_index_append_batch(table(spark, sf_dir, "documents"), 0, out)
         return _drop_score(
-            bm25_topk(index, _query_frame(spark), k=_BM25_TOPK)
+            bm25_topk(load_bm25_index(spark, out), _query_frame(spark), k=_BM25_TOPK)
         ).transform(materialize)  # materialize before the cleanup below
     finally:
         shutil.rmtree(out, ignore_errors=True)
@@ -157,11 +105,11 @@ def q_bm25_incr_store(spark, sf_dir):
     out = os.path.join(tempfile.gettempdir(), f"p311_bm25i_{uuid.uuid4().hex[:12]}")
     is_batch = F.col("doc_id") % _INCR_BATCH_MOD == _INCR_BATCH_RESIDUE
     try:
-        base_index = _stored_index(spark, sf_dir, out, doc_filter=~is_batch)
-        batch = table(spark, sf_dir, "documents").filter(is_batch)
-        merged = bm25_index_update(base_index, batch, "doc_id", "text")
+        d = table(spark, sf_dir, "documents")
+        bm25_index_append_batch(d.filter(~is_batch), 0, out)
+        bm25_index_append_batch(d.filter(is_batch), 1, out)
         return _drop_score(
-            bm25_topk(merged, _query_frame(spark), k=_BM25_TOPK)
+            bm25_topk(load_bm25_index(spark, out), _query_frame(spark), k=_BM25_TOPK)
         ).transform(materialize)
     finally:
         shutil.rmtree(out, ignore_errors=True)
@@ -230,14 +178,15 @@ def q_bm25_partitioned_store(spark, sf_dir):
     out = os.path.join(tempfile.gettempdir(), f"p311_bm25p_{uuid.uuid4().hex[:12]}")
     try:
         d = table(spark, sf_dir, "documents")
-        # one tokenize pass for both artifact writes (round 11, the
-        # _stored_index shape)
+        # one tokenize pass for both artifact writes (round 11)
         base = _bm25_token_base(d, "doc_id", "text").persist(
             StorageLevel.MEMORY_AND_DISK
         )
         postings = _postings_from_base(base).withColumn("tb", _term_bucket_col())
         stats = _corpus_stats_from_base(base)
-        # overlapped for the same reason as _stored_index (round 11)
+        # the two writes share only the token-base cache, whose
+        # concurrent fill BlockManager serializes — overlap them
+        # (guide §2.6; round 11, second wave)
         from pipeline311_spark.ext.artifact import run_jobs
 
         try:
@@ -251,7 +200,7 @@ def q_bm25_partitioned_store(spark, sf_dir):
             )
         finally:
             # ADVICE r11: release the token base even when a write
-            # fails, matching _stored_index
+            # fails
             base.unpersist(False)
         stored = spark.read.schema(postings.schema).parquet(
             os.path.join(out, "postings")
@@ -311,10 +260,6 @@ def _stream_maintained_topk(spark, sf_dir, compact: bool):
     idempotent), and serving folds the log.  Same oracle as every
     other BM25 form: a corpus streamed in THREE batches must serve
     exactly what a one-shot build serves."""
-    from pipeline311_spark.ext.retrieval import (
-        bm25_index_append_batch,
-        load_bm25_index,
-    )
     from pipeline311_spark.session import prep_session
 
     prep_session(spark)  # streaming bypasses table(): pin tz/conf here
@@ -422,9 +367,9 @@ def q_retrieval_rrf_recency(spark, sf_dir):
 
     out = os.path.join(tempfile.gettempdir(), f"p311_bm25r_{uuid.uuid4().hex[:12]}")
     try:
-        index = _stored_index(spark, sf_dir, out)
+        bm25_index_append_batch(table(spark, sf_dir, "documents"), 0, out)
         lex = (
-            bm25_topk(index, _query_frame(spark), k=_BM25_TOPK)
+            bm25_topk(load_bm25_index(spark, out), _query_frame(spark), k=_BM25_TOPK)
             .filter(F.col("query_id") < _RRF_QUERIES)
             .select("query_id", "doc_id", "rank")
         )

@@ -32,6 +32,21 @@ def sf_dir():
     return SF_DIR
 
 
+@pytest.fixture
+def fresh_bm25(spark, tmp_path_factory):
+    """Build a fresh one-batch BM25 index log over a frame and return
+    its fold — the reference every maintained (multi-batch, deleted,
+    compacted) index must equal artifact by artifact."""
+    from pipeline311_spark.ext.retrieval import bm25_index_append_batch, load_bm25_index
+
+    def build(df):
+        out = str(tmp_path_factory.mktemp("fresh_bm25"))
+        bm25_index_append_batch(df, 0, out)
+        return load_bm25_index(spark, out)
+
+    return build
+
+
 def sweep_map(fn, items, workers: int | None = None):
     """Map ``fn`` over ``items`` from a small driver thread pool and
     return results in item order (round 12, guide §2.6: Spark actions

@@ -1,9 +1,9 @@
 """Stored IVF+PQ dense index (ext/ann_store.py, plans/ann_store_q.py)
 — the properties the oracle twin can't see: incremental append ≡ fresh
 build on the ARTIFACTS, static partition pruning of the serve read,
-the disjointness guard, the driver/executor fold twins, and temp-store
-hygiene (the same checklist the BM25 store family carries in
-tests/test_retrieval_store.py)."""
+a rebuild replacing the whole codes log, the driver/executor fold
+twins, and temp-store hygiene (the same checklist the BM25 store
+family carries in tests/test_retrieval_store.py)."""
 
 from __future__ import annotations
 
@@ -16,8 +16,9 @@ from pyspark.sql import functions as F
 
 from pipeline311_spark.ext.ann_store import (
     ann_adc_topk_from_store,
+    ann_codes_append_batch,
+    ann_codes_delete_batch,
     ann_index_build,
-    ann_index_update,
     load_ann_index,
     probe_cells_py,
     sqdist_py,
@@ -42,7 +43,7 @@ def test_incremental_append_equals_fresh_build_artifacts(spark, tmp_path):
     fresh_dir, incr_dir = str(tmp_path / "fresh"), str(tmp_path / "incr")
     ann_index_build(spark, e, fresh_dir, n_cells=8, pq_k=4)
     ann_index_build(spark, e.filter(~is_batch), incr_dir, n_cells=8, pq_k=4, seeds=e)
-    ann_index_update(spark, incr_dir, e.filter(is_batch))
+    ann_codes_append_batch(e.filter(is_batch), 1, incr_dir)
 
     fresh, incr = load_ann_index(spark, fresh_dir), load_ann_index(spark, incr_dir)
     assert sorted(map(tuple, incr.codes.collect())) == sorted(
@@ -56,17 +57,54 @@ def test_incremental_append_equals_fresh_build_artifacts(spark, tmp_path):
     )
 
 
+def test_rebuild_replaces_appended_batches_and_tombstones(spark, tmp_path):
+    """A build REPLACES the store: the old codes log's appended
+    batches, its tombstones and its fold markers must not survive a
+    rebuild on the same dir — a stale batch-1 row would serve a vector
+    the new corpus lacks, and a stale tombstone would mask a rebuilt
+    id.  The rebuilt store must equal a build into a fresh dir."""
+    e = _emb(spark)
+    third = F.col("vec_id") % 3
+    out, fresh_dir = str(tmp_path / "idx"), str(tmp_path / "fresh")
+    ann_index_build(spark, e.filter(third == 0), out, n_cells=8, pq_k=4, seeds=e)
+    ann_codes_append_batch(e.filter(third == 1), 1, out)
+    ann_codes_delete_batch(
+        e.filter((third == 0) & (F.col("vec_id") % 2 == 0)).select("vec_id"), 0, out
+    )
+    # drops every batch-1 vector, re-indexes every tombstoned one
+    rebuilt = e.filter(third != 1)
+    ann_index_build(spark, rebuilt, out, n_cells=8, pq_k=4, seeds=e)
+    ann_index_build(spark, rebuilt, fresh_dir, n_cells=8, pq_k=4, seeds=e)
+
+    def snap(df):
+        return sorted(map(tuple, df.collect()))
+
+    got = snap(load_ann_index(spark, out).codes)
+    assert got == snap(load_ann_index(spark, fresh_dir).codes)
+    assert {r[0] for r in got} == {r["vec_id"] for r in rebuilt.select("vec_id").collect()}
+    qvecs = {
+        r["vec_id"]: [float(x) for x in r["embedding"]]
+        for r in e.filter(F.col("vec_id") < 4).collect()
+    }
+    served = snap(ann_adc_topk_from_store(spark, out, qvecs, k=5, nprobe=2))
+    assert served and served == snap(
+        ann_adc_topk_from_store(spark, fresh_dir, qvecs, k=5, nprobe=2)
+    )
+
+
 def test_serve_read_is_partition_pruned_to_probed_cells(spark, tmp_path):
     """The scale contract of the store: the codes scan carries the
-    probed cells as PartitionFilters (a directory-list read), never a
-    post-scan data filter — the text_bm25_partitioned_store assertion,
-    vector edition."""
+    probed cells as PartitionFilters (a directory-list read across
+    every batch dir of the log), never a post-scan data filter — the
+    text_bm25_partitioned_store assertion, vector edition."""
     import io
     from contextlib import redirect_stdout
 
     e = _emb(spark)
     out = str(tmp_path / "idx")
-    ann_index_build(spark, e, out, n_cells=8, pq_k=4)
+    is_batch = F.col("vec_id") % 5 == 2
+    ann_index_build(spark, e.filter(~is_batch), out, n_cells=8, pq_k=4, seeds=e)
+    ann_codes_append_batch(e.filter(is_batch), 1, out)
     qvecs = {
         r["vec_id"]: [float(x) for x in r["embedding"]]
         for r in e.filter(F.col("vec_id") < 2).collect()
@@ -84,22 +122,6 @@ def test_serve_read_is_partition_pruned_to_probed_cells(spark, tmp_path):
     # artifact that an engine upgrade could change spuriously)
     assert plan.count("Location:") == 1
     assert served.count() > 0
-
-
-def test_update_validate_disjoint_guard(spark, tmp_path):
-    """An overlapping batch would serve the same vec_id twice; the
-    opt-in probe must refuse (the bm25_index_update contract)."""
-    e = _emb(spark)
-    out = str(tmp_path / "idx")
-    ann_index_build(spark, e.filter(F.col("vec_id") < 50), out, n_cells=8, pq_k=4, seeds=e)
-
-    new = e.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 60))
-    ann_index_update(spark, out, new, validate_disjoint=True)  # disjoint: fine
-
-    with pytest.raises(ValueError, match="already indexed"):
-        ann_index_update(
-            spark, out, e.filter(F.col("vec_id") < 10), validate_disjoint=True
-        )
 
 
 def test_driver_probe_twin_matches_stored_assignment(spark, tmp_path):
@@ -148,24 +170,23 @@ def test_store_queries_do_not_leak_tmp_dirs(spark):
 
 
 def test_update_against_empty_quantizer_refuses(spark, tmp_path):
-    """An empty-corpus build stores zero centroids; an update against
+    """An empty-corpus build stores zero centroids; an append against
     it cannot encode anything and must refuse loudly instead of
     silently dropping the batch (review r9)."""
     e = _emb(spark)
     out = str(tmp_path / "idx")
     ann_index_build(spark, e.filter(F.lit(False)), out, n_cells=8, pq_k=4)
     with pytest.raises(ValueError, match="quantizer .* is empty"):
-        ann_index_update(spark, out, e.filter(F.col("vec_id") < 5))
+        ann_codes_append_batch(e.filter(F.col("vec_id") < 5), 1, out)
 
 
 def test_codes_log_replay_idempotent_and_compacts_lossless(spark, tmp_path):
     """The streamed codes log (third delta-log instance): replayed
     micro-batches overwrite their own batch_id partition, compaction
     folds to batch_id=-1 without changing the folded view, and the
-    log-form serve ranks identically to the one-shot store serve."""
+    streamed, compacted log serves exactly what a one-shot build
+    serves."""
     from pipeline311_spark.ext.ann_store import (
-        ann_adc_topk_from_log,
-        ann_codes_append_batch,
         ann_codes_compact,
         ann_quantizer_build,
         load_ann_codes_log,
@@ -198,7 +219,7 @@ def test_codes_log_replay_idempotent_and_compacts_lossless(spark, tmp_path):
     }
     assert bids == {-1}
 
-    # log-form serve == store-form serve (same kernel, different layout)
+    # streamed + compacted serve == one-shot build serve
     store = str(tmp_path / "store")
     ann_index_build(spark, e, store, n_cells=8, pq_k=4)
     qvecs = {
@@ -206,7 +227,7 @@ def test_codes_log_replay_idempotent_and_compacts_lossless(spark, tmp_path):
         for r in e.filter(F.col("vec_id") < 3).collect()
     }
     got = sorted(
-        map(tuple, ann_adc_topk_from_log(spark, idx, qvecs, k=5, nprobe=2).collect())
+        map(tuple, ann_adc_topk_from_store(spark, idx, qvecs, k=5, nprobe=2).collect())
     )
     want = sorted(
         map(tuple, ann_adc_topk_from_store(spark, store, qvecs, k=5, nprobe=2).collect())
@@ -311,12 +332,7 @@ def test_trained_build_is_deterministic_and_serves_unchanged(spark, tmp_path):
     means — the determinism requirement), and the store serves through
     the UNCHANGED pruned path; an incremental append against the
     trained (frozen) quantizer still works."""
-    from pipeline311_spark.ext.ann_store import (
-        ann_adc_topk_from_store,
-        ann_index_build_trained,
-        ann_index_update,
-        load_ann_index,
-    )
+    from pipeline311_spark.ext.ann_store import ann_index_build_trained
 
     e = _emb(spark)
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
@@ -349,7 +365,7 @@ def test_trained_build_is_deterministic_and_serves_unchanged(spark, tmp_path):
     is_b = F.col("vec_id") % 7 == 3
     c_dir = str(tmp_path / "c")
     ann_index_build_trained(spark, e.filter(~is_b), c_dir, n_cells=8, pq_k=4, iters=1)
-    ann_index_update(spark, c_dir, e.filter(is_b))
+    ann_codes_append_batch(e.filter(is_b), 1, c_dir)
     cents, cbook = _load_quantizer(spark, c_dir)
     cents_df = spark.createDataFrame(
         sorted((int(i), vec) for i, vec in cents.items()), _centroid_schema("cell")
@@ -380,10 +396,8 @@ def test_tiny_corpus_degrades_to_empty_serve_not_crash(spark, tmp_path):
     and serves zero rows — the documented degradation (ANN below
     |cells| vectors is meaningless; brute force is the tool), matching
     the twin's LIMIT/OFFSET semantics so hostile/tiny corpora stay
-    parity-green (r10 hostile-gate regression).  Updates and streamed
-    appends against such a store are zero-row no-ops, not errors."""
-    from pipeline311_spark.ext.ann_store import ann_codes_append_batch
-
+    parity-green (r10 hostile-gate regression).  Appends against such
+    a store are zero-row no-ops, not errors."""
     e = _emb(spark).filter(F.col("vec_id") < 7)
     out = str(tmp_path / "idx")
     ann_index_build(spark, e, out, n_cells=8, pq_k=4)
@@ -395,9 +409,9 @@ def test_tiny_corpus_degrades_to_empty_serve_not_crash(spark, tmp_path):
         for r in e.filter(F.col("vec_id") < 2).collect()
     }
     assert ann_adc_topk_from_store(spark, out, qv, k=5, nprobe=2).count() == 0
-    ann_index_update(spark, out, _emb(spark).filter(F.col("vec_id") == 7))
+    ann_codes_append_batch(_emb(spark).filter(F.col("vec_id") == 7), 1, out)
     assert load_ann_index(spark, out).codes.count() == 0
-    ann_codes_append_batch(_emb(spark).filter(F.col("vec_id") == 8), 0, out)
+    ann_codes_append_batch(_emb(spark).filter(F.col("vec_id") == 8), 2, out)
 
 
 def test_serve_query_cap_wins_over_empty_store(spark, tmp_path):

@@ -224,7 +224,7 @@ def test_folded_all_deleted_append_replay_still_skipped(spark, tmp_path):
     )
 
 
-def test_partial_first_attempt_heals_on_replay(spark, tmp_path):
+def test_partial_first_attempt_heals_on_replay(spark, tmp_path, fresh_bm25):
     """Review r11 second wave: a FRESH stream recycling a folded batch
     id that crashed mid-multi-artifact write must not see its own
     partial first attempt as a replay — the healing replay rewrites
@@ -232,10 +232,7 @@ def test_partial_first_attempt_heals_on_replay(spark, tmp_path):
     intent marker."""
     from pyspark.sql import functions as SF
 
-    from pipeline311_spark.ext.retrieval import (
-        build_bm25_index,
-        build_bm25_postings,
-    )
+    from pipeline311_spark.ext.retrieval import bm25_batch_artifacts
 
     out = str(tmp_path / "bm25")
     d = _docs(spark)
@@ -246,14 +243,15 @@ def test_partial_first_attempt_heals_on_replay(spark, tmp_path):
     fresh = d.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 260))
     # simulate the crashed first attempt of the recycled batch 0:
     # postings written, stats not, intent marker left behind
+    postings, _, _, release = bm25_batch_artifacts(fresh, persist_postings=False)
     (
-        build_bm25_postings(fresh)
-        .withColumn("batch_id", SF.lit(0).cast("long"))
+        postings.withColumn("batch_id", SF.lit(0).cast("long"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch_id")
         .parquet(os.path.join(out, "postings"))
     )
+    release()
     marker = _touch_marker(out, "append-0")
     with pytest.raises(RuntimeError, match="in-flight batch"):
         bm25_index_compact(spark, out)  # blocked, as designed
@@ -261,7 +259,7 @@ def test_partial_first_attempt_heals_on_replay(spark, tmp_path):
     # from the probe), complete the triple, and clear the marker
     bm25_index_append_batch(fresh, 0, out)
     assert not os.path.exists(marker)
-    want = build_bm25_index(base.unionByName(fresh))
+    want = fresh_bm25(base.unionByName(fresh))
     got = load_bm25_index(spark, out)
     assert sorted(map(tuple, got.corpus_stats.collect())) == sorted(
         map(tuple, want.corpus_stats.collect())
@@ -273,7 +271,7 @@ def test_partial_first_attempt_heals_on_replay(spark, tmp_path):
 
 
 def test_delete_replay_skips_when_compaction_crashes_after_tombstone_fold(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, fresh_bm25
 ):
     """Review r11 wave three: the compactors fold tombstones FIRST so
     a crash between the tombstone fold and the artifact folds leaves
@@ -282,7 +280,6 @@ def test_delete_replay_skips_when_compaction_crashes_after_tombstone_fold(
     nothing) instead of double-subtracting, and a later compaction
     completes the fold."""
     import pipeline311_spark.ext.artifact as art
-    from pipeline311_spark.ext.retrieval import build_bm25_index
 
     out = str(tmp_path / "bm25")
     d = _docs(spark)
@@ -312,7 +309,7 @@ def test_delete_replay_skips_when_compaction_crashes_after_tombstone_fold(
             sorted(map(tuple, ix.corpus_stats.collect())),
         )
 
-    want = build_bm25_index(d.join(deleted.select("doc_id"), "doc_id", "left_anti"))
+    want = fresh_bm25(d.join(deleted.select("doc_id"), "doc_id", "left_anti"))
     expected = (
         sorted(map(tuple, want.term_stats.collect())),
         sorted(map(tuple, want.corpus_stats.collect())),

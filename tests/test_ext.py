@@ -66,16 +66,6 @@ def test_minhash_dedup_pairs(docs):
     assert not any(2 in p for p in got)
 
 
-def test_minhash_verify_strategies_agree(docs):
-    # reuse_grams=True (persisted gram table) and False (recompute
-    # restricted to candidates) are two physical plans for the same
-    # operator — results must be identical.
-    kw = dict(k=8, bands=4, n=3, threshold=0.5)
-    reuse = minhash_dedup_pairs(docs, "doc_id", "text", reuse_grams=True, **kw)
-    recomp = minhash_dedup_pairs(docs, "doc_id", "text", reuse_grams=False, **kw)
-    assert sorted(map(tuple, reuse.collect())) == sorted(map(tuple, recomp.collect()))
-
-
 def test_minhash_incremental_equals_filtered_full(spark):
     # The incremental contract: existing=even ids, new=odd ids must
     # yield exactly the full run's pairs restricted to >=1 new member
@@ -117,10 +107,9 @@ def test_minhash_incremental_equals_filtered_full(spark):
     assert sorted(tuple(r) for r in store.collect()) == want
 
 
-def test_minhash_reuse_grams_plan_reads_cache(docs):
-    # reuse_grams=True: the verify branch must read the persisted gram
-    # table (InMemoryTableScan), never re-scan the source text;
-    # reuse_grams=False: the verify branch re-reads the source.
+def test_minhash_verify_plan_reads_gram_cache(docs):
+    # the verify branch must read the persisted gram table
+    # (InMemoryTableScan), never re-scan the source text
     def plan_of(df):
         spark = df.sparkSession
         return df._jdf.queryExecution().explainString(
@@ -128,12 +117,10 @@ def test_minhash_reuse_grams_plan_reads_cache(docs):
         )
 
     kw = dict(k=8, bands=4, n=3, threshold=0.5)
-    reuse = plan_of(minhash_dedup_pairs(docs, "doc_id", "text", reuse_grams=True, **kw))
-    # the verify branch must be fed from the persisted gram table (a
-    # string-negative check on the recompute plan is impossible here:
-    # InMemoryRelation nodes print their stored child plan, so source
-    # scan text appears inside cache descriptions in both modes)
-    assert "InMemoryTableScan" in reuse
+    plan = plan_of(minhash_dedup_pairs(docs, "doc_id", "text", **kw))
+    # a string-negative check on source-scan text is impossible here:
+    # InMemoryRelation nodes print their stored child plan
+    assert "InMemoryTableScan" in plan
 
 
 def test_minhash_unigram_signatures(docs):

@@ -1,6 +1,6 @@
 """Deletion maintenance for the three stored index families (round 10,
 VERDICT r9 item 1) — the properties the delete-maintain oracles can't
-see: the subtraction dual equals a fresh build ON THE ARTIFACTS,
+see: the uncompacted delete fold equals a fresh build ON THE ARTIFACTS,
 compaction PHYSICALLY drops tombstoned rows while retaining the
 tombstone ids, delete batches replay idempotently, and a delete landing
 in a crashed compaction swap recovers instead of orphaning the log."""
@@ -15,9 +15,7 @@ from pyspark.sql import functions as F
 from pipeline311_spark.ext.retrieval import (
     bm25_index_append_batch,
     bm25_index_compact,
-    bm25_index_delete,
     bm25_index_delete_batch,
-    build_bm25_index,
     load_bm25_index,
 )
 
@@ -51,46 +49,31 @@ def _is_del():
     return F.col("doc_id") % 9 == 4
 
 
-def test_bm25_delete_dual_equals_fresh_build_artifacts(spark):
-    """full build + merge-by-subtraction == fresh build over the
-    remaining corpus, on all three artifacts (values, not just served
-    ranks) — including n_docs seeing zero-token deleted docs."""
+def test_bm25_delete_dual_equals_fresh_build_artifacts(spark, tmp_path, fresh_bm25):
+    """full build + merge-by-subtraction, served from the UNCOMPACTED
+    fold == a fresh append of the remaining corpus, on all three
+    artifacts (values, not just served ranks) — including n_docs
+    seeing zero-token deleted docs."""
     d = _docs(spark)
-    fresh = build_bm25_index(d.filter(~_is_del()), "doc_id", "text")
-    pruned = bm25_index_delete(
-        build_bm25_index(d, "doc_id", "text"), d.filter(_is_del()), "doc_id", "text"
-    )
-    assert _index_snaps(pruned) == _index_snaps(fresh)
+    idx = str(tmp_path / "idx")
+    bm25_index_append_batch(d, 0, idx)
+    bm25_index_delete_batch(d.filter(_is_del()), 0, idx)
+    want = _index_snaps(fresh_bm25(d.filter(~_is_del())))
+    assert _index_snaps(load_bm25_index(spark, idx)) == want
 
 
-def test_bm25_delete_validate_contained_guard(spark):
-    d = _docs(spark)
-    index = build_bm25_index(d.filter(F.col("doc_id") < 50), "doc_id", "text")
-    # contained: fine
-    bm25_index_delete(
-        index, d.filter(F.col("doc_id") < 5), validate_contained=True
-    ).corpus_stats.collect()
-    with pytest.raises(ValueError, match="not indexed"):
-        bm25_index_delete(
-            index,
-            d.filter((F.col("doc_id") >= 50) & (F.col("doc_id") < 60)),
-            validate_contained=True,
-        ).corpus_stats.collect()
-
-
-def test_bm25_delete_log_replay_compaction_and_physical_drop(spark, tmp_path):
-    """The log form: delete batch folds to the same artifacts as the
-    in-memory dual, replays idempotently (its own negative-key-space
-    partitions), and compaction physically drops deleted postings while
-    retaining the tombstone ids."""
+def test_bm25_delete_log_replay_compaction_and_physical_drop(spark, tmp_path, fresh_bm25):
+    """The log form over two append batches: the delete batch folds to
+    a fresh build of the remaining docs, replays idempotently (its own
+    negative-key-space partitions), and compaction physically drops
+    deleted postings while retaining the tombstone ids."""
     d = _docs(spark)
     idx = str(tmp_path / "idx")
     for i in range(2):
         bm25_index_append_batch(d.filter(F.col("doc_id") % 2 == i), i, idx)
     bm25_index_delete_batch(d.filter(_is_del()), 0, idx)
 
-    fresh = build_bm25_index(d.filter(~_is_del()), "doc_id", "text")
-    want = _index_snaps(fresh)
+    want = _index_snaps(fresh_bm25(d.filter(~_is_del())))
     assert _index_snaps(load_bm25_index(spark, idx)) == want
 
     # replay the delete batch: dynamic overwrite of its own partitions
@@ -197,7 +180,6 @@ def test_ann_codes_delete_compact_drop_and_serve(spark, tmp_path):
     physically drops tombstoned rows, and the pruned log serve ranks
     like a store built without the deleted vectors."""
     from pipeline311_spark.ext.ann_store import (
-        ann_adc_topk_from_log,
         ann_adc_topk_from_store,
         ann_codes_append_batch,
         ann_codes_compact,
@@ -205,6 +187,7 @@ def test_ann_codes_delete_compact_drop_and_serve(spark, tmp_path):
         ann_index_build,
         ann_quantizer_build,
         load_ann_codes_log,
+        load_ann_index,
     )
 
     e = _emb(spark)
@@ -219,11 +202,7 @@ def test_ann_codes_delete_compact_drop_and_serve(spark, tmp_path):
     # twin store: same (full-corpus) quantizer, remaining vectors only
     store = str(tmp_path / "store")
     ann_index_build(spark, e.filter(~is_del), store, n_cells=8, pq_k=4, seeds=e)
-    want = _snap(
-        spark.read.parquet(os.path.join(store, "codes")).select(
-            "vec_id", "code0", "code1", "code2", "code3", "pcell"
-        )
-    )
+    want = _snap(load_ann_index(spark, store).codes)
     assert _snap(load_ann_codes_log(spark, idx)) == want
 
     ann_codes_compact(spark, idx)
@@ -236,7 +215,7 @@ def test_ann_codes_delete_compact_drop_and_serve(spark, tmp_path):
         r["vec_id"]: [float(x) for x in r["embedding"]]
         for r in e.filter(F.col("vec_id") < 3).collect()
     }
-    got = _snap(ann_adc_topk_from_log(spark, idx, qvecs, k=5, nprobe=2))
+    got = _snap(ann_adc_topk_from_store(spark, idx, qvecs, k=5, nprobe=2))
     assert got == _snap(ann_adc_topk_from_store(spark, store, qvecs, k=5, nprobe=2))
     assert got
 

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pipeline311_spark.operators.filters import time_range, watermark_filter
-from pipeline311_spark.operators.joins import anti_join, exists_probe, semi_join
+from pipeline311_spark.operators.joins import anti_join, semi_join
 from pipeline311_spark.operators.merge import (
     latest_per_key,
     merge_with_surrogate,
@@ -94,8 +94,6 @@ def test_time_range_half_open(spark, target):
 def test_semi_anti_exists(spark, target, updates):
     assert {r["pk"] for r in semi_join(target, updates, "pk").collect()} == {2, 3}
     assert {r["pk"] for r in anti_join(target, updates, "pk").collect()} == {1}
-    marked = {r["pk"]: r["exists"] for r in exists_probe(updates, target, "pk").collect()}
-    assert marked == {2: True, 3: True, 4: False}
 
 
 def test_latest_per_key_tiebreak(spark):

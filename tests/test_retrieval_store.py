@@ -1,8 +1,8 @@
 """Stored BM25 index + N-ranker RRF (ext/retrieval.py,
 plans/retrieval2.py) — the properties the oracle twins can't see:
-incremental-merge ≡ fresh-build on the ARTIFACTS themselves (the
-oracle only compares final top-k), fixed-order fusion math, and
-temp-store hygiene."""
+multi-batch log fold ≡ fresh one-batch build on the ARTIFACTS
+themselves (the oracle only compares final top-k), fixed-order fusion
+math, and temp-store hygiene."""
 
 from __future__ import annotations
 
@@ -14,9 +14,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from pipeline311_spark.ext.retrieval import (
-    bm25_index_update,
+    bm25_index_append_batch,
     bm25_topk,
-    build_bm25_index,
+    load_bm25_index,
     rrf_fuse,
 )
 
@@ -27,17 +27,20 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_incremental_update_equals_fresh_build(spark):
-    """The index triple after merging a disjoint batch is row-identical
-    to a fresh build over the union — the contract that makes the
-    stored index maintainable without corpus re-tokenization."""
+def test_incremental_update_equals_fresh_build(spark, tmp_path, fresh_bm25):
+    """The index triple folded from two disjoint append batches is
+    row-identical to one append of the union — the contract that makes
+    the stored index maintainable without corpus re-tokenization."""
     base = _docs(
         spark,
         [(1, "spark merge join"), (2, "merge merge vector"), (3, None), (4, "")],
     )
     batch = _docs(spark, [(10, "spark spark customer"), (11, "join")])
-    merged = bm25_index_update(build_bm25_index(base), batch)
-    fresh = build_bm25_index(base.unionByName(batch))
+    idx = str(tmp_path / "idx")
+    bm25_index_append_batch(base, 0, idx)
+    bm25_index_append_batch(batch, 1, idx)
+    merged = load_bm25_index(spark, idx)
+    fresh = fresh_bm25(base.unionByName(batch))
 
     for got, want in zip(merged, fresh):
         g = sorted(map(tuple, got.collect()))
@@ -50,7 +53,7 @@ def test_incremental_update_equals_fresh_build(spark):
     assert stats == {"n_docs": 5, "sum_dl": 10}
 
 
-def test_bm25_topk_from_index_matches_query_local_path(spark):
+def test_bm25_topk_from_index_matches_query_local_path(spark, fresh_bm25):
     """Serving from the index reproduces the query-local plan's result
     exactly (same scoring kernel, same ints in → same doubles out)."""
     from pipeline311_spark.plans.curation3 import (
@@ -59,7 +62,7 @@ def test_bm25_topk_from_index_matches_query_local_path(spark):
         bm25_scored_frame,
     )
 
-    index = build_bm25_index(
+    index = fresh_bm25(
         spark.read.parquet(f"{SF}/documents.parquet").filter(
             F.col("text").isNotNull()
         )
@@ -134,14 +137,15 @@ def test_bm25_partitioned_postings_prune_vocabulary_reads(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from pipeline311_spark.ext.retrieval import build_bm25_postings
+    from pipeline311_spark.ext.retrieval import bm25_batch_artifacts
     from pipeline311_spark.plans.retrieval2 import (
         _term_bucket_col,
         _term_bucket_py,
     )
 
     d = spark.read.parquet(f"{SF}/documents.parquet")
-    postings = build_bm25_postings(d).withColumn("tb", _term_bucket_col())
+    postings, _, _, release = bm25_batch_artifacts(d, persist_postings=False)
+    postings = postings.withColumn("tb", _term_bucket_col())
 
     # driver twin == Column twin on the real vocabulary
     got = {r["term"]: r["tb"] for r in postings.select("term", "tb").distinct().collect()}
@@ -149,6 +153,7 @@ def test_bm25_partitioned_postings_prune_vocabulary_reads(spark, tmp_path):
 
     out = str(tmp_path / "postings")
     postings.write.mode("overwrite").partitionBy("tb").parquet(out)
+    release()
     back = spark.read.schema(postings.schema).parquet(out)
     probe = back.filter(F.col("tb").isin(sorted(set(got.values()))[:2]))
     buf = io.StringIO()
@@ -194,17 +199,11 @@ def test_rrf_fuse_rejects_empty_rankings(spark):
         rrf_fuse([])
 
 
-def test_bm25_stream_checkpoint_resume_processes_only_new_files(spark, tmp_path):
+def test_bm25_stream_checkpoint_resume_processes_only_new_files(spark, tmp_path, fresh_bm25):
     """Operational property of the streaming index maintenance: a
     restarted availableNow stream resumes from its checkpoint — files
     already folded into the index are NOT reprocessed, new files are,
     and the final index equals a fresh one-shot build."""
-    from pipeline311_spark.ext.retrieval import (
-        bm25_index_append_batch,
-        build_bm25_index,
-        load_bm25_index,
-    )
-
     src = str(tmp_path / "src")
     idx = str(tmp_path / "idx")
     ckpt = str(tmp_path / "ckpt")
@@ -234,7 +233,7 @@ def test_bm25_stream_checkpoint_resume_processes_only_new_files(spark, tmp_path)
     run_stream()  # restart: same checkpoint, only the new file folds in
 
     ix = load_bm25_index(spark, idx)
-    fresh = build_bm25_index(a.unionByName(b))
+    fresh = fresh_bm25(a.unionByName(b))
     assert sorted(map(tuple, ix.postings.collect())) == sorted(
         map(tuple, fresh.postings.collect())
     )
@@ -250,17 +249,14 @@ def test_bm25_stream_checkpoint_resume_processes_only_new_files(spark, tmp_path)
     assert len(bids) == 2
 
 
-def test_bm25_index_compact_preserves_serve_and_survives_new_batches(spark, tmp_path):
+def test_bm25_index_compact_preserves_serve_and_survives_new_batches(
+    spark, tmp_path, fresh_bm25
+):
     """Compaction folds the delta log into a batch_id=-1 base without
     changing what the index serves; a post-compaction stream restarting
     at batch 0 appends WITHOUT clobbering the base (real ids >= 0);
     and a crashed swap window fails loudly then recovers."""
-    from pipeline311_spark.ext.retrieval import (
-        bm25_index_append_batch,
-        bm25_index_compact,
-        build_bm25_index,
-        load_bm25_index,
-    )
+    from pipeline311_spark.ext.retrieval import bm25_index_compact
 
     idx = str(tmp_path / "idx")
     a = _docs(spark, [(1, "spark merge"), (2, "merge vector")])
@@ -291,7 +287,7 @@ def test_bm25_index_compact_preserves_serve_and_survives_new_batches(spark, tmp_
     # a fresh-checkpoint stream restarts numbering at 0 — must append,
     # never overwrite the base
     bm25_index_append_batch(c, 0, idx)
-    fresh = build_bm25_index(a.unionByName(b).unionByName(c))
+    fresh = fresh_bm25(a.unionByName(b).unionByName(c))
     ix = load_bm25_index(spark, idx)
     assert sorted(map(tuple, ix.postings.collect())) == sorted(
         map(tuple, fresh.postings.collect())
@@ -369,18 +365,13 @@ def test_compact_crash_between_renames_recovers_end_to_end(spark, tmp_path, monk
     assert not glob.glob(os.path.join(idx, "*.compact.*"))
 
 
-def test_compact_stale_old_dir_does_not_wedge_next_compaction(spark, tmp_path):
+def test_compact_stale_old_dir_does_not_wedge_next_compaction(spark, tmp_path, fresh_bm25):
     """The OTHER crash window (ADVICE r8): a crash AFTER the
     staging->live rename but BEFORE the .old cleanup leaves a stale
     non-empty .compact.old next to a healthy live dir.  The next
     compaction used to raise OSError renaming onto it — it must instead
     drop the stale dir (live is authoritative) and complete."""
-    from pipeline311_spark.ext.retrieval import (
-        bm25_index_append_batch,
-        bm25_index_compact,
-        build_bm25_index,
-        load_bm25_index,
-    )
+    from pipeline311_spark.ext.retrieval import bm25_index_compact
 
     idx = str(tmp_path / "idx")
     a = _docs(spark, [(1, "spark merge"), (2, "merge")])
@@ -397,30 +388,13 @@ def test_compact_stale_old_dir_does_not_wedge_next_compaction(spark, tmp_path):
     bm25_index_append_batch(b, 1, idx)
     bm25_index_compact(spark, idx)  # must not raise
 
-    fresh = build_bm25_index(a.unionByName(b))
+    fresh = fresh_bm25(a.unionByName(b))
     got = load_bm25_index(spark, idx)
     assert sorted(map(tuple, got.postings.collect())) == sorted(
         map(tuple, fresh.postings.collect())
     )
     assert got.corpus_stats.collect() == fresh.corpus_stats.collect()
     assert not glob.glob(os.path.join(idx, "*.compact.*"))
-
-
-def test_bm25_index_update_validate_disjoint_guard(spark):
-    """The merge-by-addition math silently corrupts on an overlapping
-    batch; the opt-in probe must catch it (ADVICE r8)."""
-    from pipeline311_spark.ext.retrieval import build_bm25_index
-
-    base = _docs(spark, [(1, "spark merge"), (2, "merge join")])
-    index = build_bm25_index(base)
-
-    ok = bm25_index_update(index, _docs(spark, [(10, "join")]), validate_disjoint=True)
-    assert ok.corpus_stats.collect()[0]["n_docs"] == 3
-
-    with pytest.raises(ValueError, match="already indexed"):
-        bm25_index_update(
-            index, _docs(spark, [(2, "different text")]), validate_disjoint=True
-        )
 
 
 def test_rrf_fuse_duplicate_pairs_contribute_best_rank(spark):

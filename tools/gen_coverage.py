@@ -52,7 +52,7 @@ STATIC = {
     "J1": ("operators/merge.py upsert", "tests/test_operators.py"),
     "J2": ("operators/merge.py upsert (viewer variant w/ surrogate)", "tests/test_operators.py"),
     "J3": ("operators/joins.py anti_join; operators/reconcile.py", "tests/test_operators.py"),
-    "J4": ("operators/joins.py semi_join / exists_probe", "tests/test_operators.py"),
+    "J4": ("operators/joins.py semi_join", "tests/test_operators.py"),
     "A1": ("operators/aggregates.py max_watermark", "tests/test_connector_plans.py; oracle gate (a1_max_watermark)"),
     "A2": ("same (source-agnostic)", "same scan, source-agnostic (a1_max_watermark)"),
     "A3": ("operators/aggregates.py coalesced_max_watermark", "oracle gate (a3_coalesced_watermark incl. empty-source NULL fold)"),
@@ -97,7 +97,7 @@ STATIC = {
     "ext:sampling": ("ext/sampling.py (temperature/importance weighting, quota fill, per-key caps, two-phase running sums)", "tests/test_properties.py"),
     "ext:ann-log": ("ANN codes as a batch_id delta log: foreachBatch append, compaction, pruned log serve (ext/ann_store.py)", "tests/test_ann_store.py"),
     "ext:gram-log": ("MinHash gram table delta log: append/compact/serve cycle (ext/dedup.py)", "tests/test_gram_log.py"),
-    "ext:bm25-delete": ("BM25 merge-by-subtraction delete dual (ext/retrieval.bm25_index_delete)", "tests/test_index_delete.py"),
+    "ext:bm25-delete": ("BM25 merge-by-subtraction uncompacted log delete (ext/retrieval.bm25_index_delete_batch)", "tests/test_index_delete.py"),
     "ext:bm25-delete-log": ("BM25 log-form deletion: tombstones + negative stat deltas in the negative batch-id key-space (bm25_index_delete_batch)", "tests/test_index_delete.py"),
     "ext:gram-delete": ("gram-log tombstone deletion + compaction drop (ext/dedup.gram_log_delete_batch)", "tests/test_index_delete.py"),
     "ext:ann-delete": ("ANN codes-log tombstone deletion + compaction drop (ext/ann_store.ann_codes_delete_batch)", "tests/test_index_delete.py"),
