@@ -66,6 +66,15 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pipeline311_spark.ext.artifact import (
+    RowLog,
+    admit_append,
+    append_rows,
+    compact_log,
+    delete_rows,
+    load_rows,
+    run_jobs,
+)
 from pipeline311_spark.ext.hashing import meta_df
 from pipeline311_spark.ext.similarity import as_double, ensure_parallelism, sqdist
 
@@ -261,11 +270,12 @@ def ann_index_build(
     seeds: DataFrame | None = None,
 ) -> None:
     """Build and WRITE the three artifacts; the codes become batch 0 of
-    the codes log, REPLACING any existing store
-    (:func:`_write_codes_batch`).  ``seeds``: the quantizer training
-    frame (coarse centroids = its ``n_cells`` lowest ids, PQ codebook =
-    the residuals of the NEXT ``pq_k`` ids — the deterministic
-    data-derived seed convention, residual edition).  Defaults to the
+    the codes log, REPLACING any existing store (``append_rows(...,
+    replace=True)`` drops the old log, its tombstones and the fold
+    marker first: a rebuild serves only its own corpus).  ``seeds``:
+    the quantizer training frame (coarse centroids = its ``n_cells``
+    lowest ids, PQ codebook = the residuals of the NEXT ``pq_k`` ids —
+    the deterministic data-derived seed convention, residual edition).  Defaults to the
     corpus itself; the incremental path passes the FULL corpus head
     explicitly so a base build and its appended batches share one
     frozen quantizer.  Cost: one seed collect (metadata-scale) + ONE
@@ -274,7 +284,7 @@ def ann_index_build(
     v = _vec_frame(corpus, id_col, vec_col)
     seed_v = v if seeds is None else _vec_frame(seeds, id_col, vec_col)
     cents, cbook = ann_quantizer_build(spark, seed_v, out, n_cells, pq_k)
-    _write_codes_batch(out, 0, _encode(spark, v, cents, cbook, m, subdim), replace=True)
+    append_rows(out, _codes_log(m), 0, _encode(spark, v, cents, cbook, m, subdim), replace=True)
 
 
 def ann_quantizer_build(
@@ -332,8 +342,6 @@ def ann_quantizer_build(
     # remain a loud error above.
     # two independent metadata-scale writes — overlap their per-action
     # overhead (guide §2.6, round 11)
-    from pipeline311_spark.ext.artifact import run_jobs
-
     run_jobs(
         lambda: meta_df(
             spark, [(int(i), vec) for i, vec in sorted(cents.items())], _centroid_schema("cell")
@@ -429,23 +437,6 @@ def _encode(spark, v, cents, cbook, m, subdim) -> DataFrame:
         spark, [(int(i), vec) for i, vec in sorted(cents.items())], _centroid_schema("cell")
     )
     return pq_codes(assign_cells(v, centroids), cbook, m, subdim)
-
-
-def _write_codes_batch(out: str, batch_id: int, codes: DataFrame, replace: bool = False) -> None:
-    """Write ``codes`` as batch ``batch_id`` of the codes log, cell
-    partitions under the batch dir, inside an intent marker — the ONE
-    codes write of builds and appends alike.  ``replace=True`` (the
-    builds) first drops the old log, its tombstone sibling and the fold
-    markers (:func:`~pipeline311_spark.ext.artifact.reset_log`): a
-    rebuild must serve only its own corpus, never stale appended rows
-    or stale tombstones masking rebuilt ids."""
-    from pipeline311_spark.ext.artifact import reset_log, write_batch_partition, write_intent
-
-    path = os.path.join(out, "codes")
-    with write_intent(out, f"append-{int(batch_id)}"):
-        if replace:
-            reset_log(out, path)
-        write_batch_partition(codes, path, batch_id, partition_by=("pcell",))
 
 
 def load_ann_index(spark: SparkSession, out: str, m: int = ANN_M) -> AnnIndex:
@@ -596,26 +587,28 @@ def _residual_dist_case(
 
 
 # ---------------------------------------------------------------------------
-# Maintenance of the codes artifact: an append-only log of batch deltas
-# (the ext/artifact.py contract shared with the BM25 index and the
-# MinHash gram log; a build is batch 0).  The quantizer artifacts are
-# FROZEN — appends maintain ONLY the codes table: each batch is
-# assigned + encoded with the stored centroids/codebook and overwrites
-# its own batch_id partition (replay-idempotent); pcell stays a
-# partition column UNDER batch_id, so the pruned serve read keeps its
-# PartitionFilters across batch directories, and compaction folds the
-# accreted batch dirs into the batch_id=-1 base.
+# Maintenance of the codes artifact: a tombstoned row log (the
+# ext/artifact.py lifecycle; a build is batch 0).  The quantizer
+# artifacts are FROZEN — appends maintain ONLY the codes: each batch is
+# assigned + encoded with the stored centroids/codebook.  ``pcell``
+# stays a partition column UNDER batch_id, so the pruned serve read
+# keeps its PartitionFilters across batch directories and the base.
 # ---------------------------------------------------------------------------
 
 
-def _codes_log_schema(m: int) -> T.StructType:
-    return T.StructType(
-        [T.StructField("vec_id", T.LongType())]
-        + [T.StructField(f"code{j}", T.LongType()) for j in range(m)]
-        + [
-            T.StructField("batch_id", T.LongType()),
-            T.StructField("pcell", T.StringType()),
-        ]
+def _codes_log(m: int) -> RowLog:
+    return RowLog(
+        "codes",
+        T.StructType(
+            [T.StructField("vec_id", T.LongType())]
+            + [T.StructField(f"code{j}", T.LongType()) for j in range(m)]
+            + [
+                T.StructField("batch_id", T.LongType()),
+                T.StructField("pcell", T.StringType()),
+            ]
+        ),
+        "vec_id",
+        ("pcell",),
     )
 
 
@@ -629,58 +622,20 @@ def ann_codes_append_batch(
     vec_col: str = "embedding",
     validate_fresh_ids: bool = False,
 ) -> None:
-    """The ``foreachBatch`` body: encode one micro-batch with the
-    STORED quantizer and append its code rows to the batch-id log.
-    Recovers a crashed compaction swap first (the appender contract,
-    review r9).  Raises if the quantizer is empty — a stream cannot
-    encode against an untrained index.  ``validate_fresh_ids``
-    (ADVICE r10) refuses a re-appended tombstoned vec id — the
-    retained tombstone would mask its code row forever."""
-    from pipeline311_spark.ext.artifact import (
-        assert_fresh_ids,
-        folded_batches,
-        recover_swap,
-        skip_if_replayed,
-        tombstone_dir,
-    )
-
+    """The ``foreachBatch`` body: behind the shared append guard, encode
+    one micro-batch with the STORED quantizer and append its code rows
+    (a replayed post-fold batch would duplicate base rows, and a
+    duplicated neighbor eats a top-k slot at serve).  Raises if the
+    quantizer is empty — a stream cannot encode against an untrained
+    index.  ``validate_fresh_ids`` refuses a re-appended tombstoned vec
+    id."""
     spark = batch_df.sparkSession
-    recover_swap(os.path.join(out, "codes"))
-    if int(batch_id) in folded_batches(out):
-        # post-fold replay guard (review r11): replayed code rows
-        # duplicate base rows and a duplicated neighbor eats a top-k
-        # slot at serve; skip replays, let fresh id-space recycling
-        # (disjoint vec ids) proceed.  Probe = RAW codes ∪ tombstones
-        # minus this batch's own partition (skip_if_replayed) — the
-        # masked serving view would hide a folded-then-fully-deleted
-        # batch and let its replay recreate forever-masked rows.
-        from pipeline311_spark.ext.artifact import read_log, tombstone_schema
-
-        c_path = os.path.join(out, "codes")
-        # own-partition exclusion only on the append stream's own log;
-        # tombstones are the delete stream's namespace (wave three)
-        probe = read_log(spark, c_path, _codes_log_schema(m)).filter(
-            F.col("batch_id") != int(batch_id)
-        ).select("vec_id").unionByName(
-            read_log(
-                spark, tombstone_dir(c_path), tombstone_schema("vec_id")
-            ).select("vec_id")
-        )
-        if skip_if_replayed(
-            batch_df.select(F.col(id_col).alias("vec_id")),
-            out,
-            batch_id,
-            probe,
-            "vec_id",
-            "ann_codes_append_batch",
-        ):
-            return
-    if validate_fresh_ids:
-        assert_fresh_ids(
-            batch_df.select(F.col(id_col).alias("vec_id")),
-            tombstone_dir(os.path.join(out, "codes")),
-            "vec_id",
-        )
+    log = _codes_log(m)
+    ids = batch_df.select(F.col(id_col).alias("vec_id"))
+    if not admit_append(
+        out, log, ids, batch_id, "ann_codes_append_batch", validate_fresh_ids
+    ):
+        return
     cents, cbook = _load_quantizer(spark, out, use_cache=True)
     if not cents:
         # empty-CODEBOOK-with-centroids appends zero rows below, the
@@ -694,95 +649,33 @@ def ann_codes_append_batch(
         )
     _warn_if_dead_codebook(cents, cbook, out, "ann_codes_append_batch")
     v = _vec_frame(batch_df, id_col, vec_col)
-    _write_codes_batch(out, batch_id, _encode(spark, v, cents, cbook, m, subdim))
+    append_rows(out, log, batch_id, _encode(spark, v, cents, cbook, m, subdim))
 
 
 def ann_codes_delete_batch(
     ids: DataFrame, batch_id: int, out: str, id_col: str = "vec_id"
 ) -> None:
-    """Tombstone one batch of DELETED vec ids (VERDICT r9 item 1): code
-    rows are row-disjoint per vector, so deletion is a sibling
-    ``codes_deleted`` tombstone log — anti-joined by
-    :func:`load_ann_codes_log`, physically dropped at
-    :func:`ann_codes_compact`.  Replay-idempotent (each delete batch
-    overwrites its own tombstone partition); the quantizer artifacts
-    are untouched — deletion never retrains a frozen quantizer."""
-    from pipeline311_spark.ext.artifact import (
-        tombstone_append,
-        tombstone_dir,
-        write_intent,
+    """Tombstone one batch of DELETED vec ids.  Code rows are
+    row-disjoint per vector; the quantizer artifacts are untouched —
+    deletion never retrains a frozen quantizer."""
+    # a delete reads no code schema, so the code count m is immaterial
+    delete_rows(
+        out, _codes_log(ANN_M), ids.select(F.col(id_col).alias("vec_id")), batch_id
     )
-
-    with write_intent(out, f"delete-{int(batch_id)}"):
-        tombstone_append(
-            ids.select(F.col(id_col).alias("vec_id")),
-            batch_id,
-            tombstone_dir(os.path.join(out, "codes")),
-            "vec_id",
-        )
 
 
 def load_ann_codes_log(spark: SparkSession, out: str, m: int = ANN_M) -> DataFrame:
-    """Fold the codes log back to the serving view (vec_id, code*,
-    pcell): the union of batch partitions IS the merge (disjoint vec
-    ids), minus tombstoned vectors (anti-join against the
-    metadata-scale deleted set; absent log = no-op — the pcell
-    PartitionFilters still reach the codes scan through the join's
-    left side).  Refuses loudly mid-compaction-swap."""
-    from pipeline311_spark.ext.artifact import (
-        apply_tombstones,
-        read_log,
-        tombstone_dir,
-    )
-
-    path = os.path.join(out, "codes")
-    codes = read_log(spark, path, _codes_log_schema(m)).drop("batch_id")
-    return apply_tombstones(spark, codes, tombstone_dir(path), "vec_id")
+    """The serving view (vec_id, code*, pcell): every batch, tombstoned
+    vectors removed; the pcell PartitionFilters still reach the codes
+    scan through the anti-join's left side."""
+    return load_rows(spark, out, _codes_log(m))
 
 
 def ann_codes_compact(spark: SparkSession, out: str, m: int = ANN_M) -> None:
-    """Fold the per-batch code partitions into the ``batch_id = -1``
-    base via the shared crash-recoverable swap; tombstoned vectors are
-    physically dropped (the fold reads through
-    :func:`load_ann_codes_log`) and the tombstone log folded-but-
-    retained (ext/artifact.py module note)."""
-    from pipeline311_spark.ext.artifact import (
-        assert_quiesced,
-        compact_swap,
-        compact_tombstones,
-        recover_log,
-        tombstone_dir,
-    )
-
-    # quiescence contract, enforced (VERDICT r10 item 3)
-    assert_quiesced(out)
-    # record the batches this fold absorbs BEFORE folding (review r11)
-    from pipeline311_spark.ext.artifact import record_folded_batches
-
-    record_folded_batches(out, "codes")
-    path = os.path.join(out, "codes")
-    # recovers the tombstone sibling too — it is READ below (through
-    # load_ann_codes_log), and a compaction crashed inside
-    # compact_tombstones would otherwise brick every later compact/load
-    # (review r10)
-    recover_log(path)
-    if not os.path.isdir(path):
-        return
-    # fold tombstones FIRST (review r11 wave three — the fold-order
-    # half of the replay-guard contract, see ext/artifact.py
-    # skip_if_replayed): a delete batch's fold evidence must reach the
-    # -1 base before any crash window can strand it in an excluded
-    # partition
-    compact_tombstones(spark, tombstone_dir(path), "vec_id")
-    from pipeline311_spark.ext.artifact import write_batch_partition
-
-    base = load_ann_codes_log(spark, out, m)
-    compact_swap(
-        path,
-        lambda staging: write_batch_partition(
-            base, staging, -1, partition_by=("pcell",)
-        ),
-    )
+    """Fold the codes log to its ``batch_id = -1`` base (still
+    sub-partitioned by ``pcell``), tombstoned vectors physically
+    dropped (ext/artifact.py ``compact_log``)."""
+    compact_log(spark, out, _codes_log(m))
 
 
 # ---------------------------------------------------------------------------
@@ -908,7 +801,7 @@ def ann_index_build_trained(
             )
         else:
             codes = _encode(spark, v, cents, cbook, m, subdim)
-        _write_codes_batch(out, 0, codes, replace=True)
+        append_rows(out, _codes_log(m), 0, codes, replace=True)
     finally:
         if resid is not None:
             resid.unpersist(False)

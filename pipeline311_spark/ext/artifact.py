@@ -1,66 +1,94 @@
-"""Shared machinery for batch-id-partitioned APPEND-ONLY artifact logs.
+"""The lifecycle of a batch-id-partitioned, tombstoned row log — the one
+stored form of the BM25 index (ext/retrieval.py), the MinHash gram
+table (ext/dedup.py) and the IVF-PQ codes (ext/ann_store.py).  This
+module is the only code that knows how such a log is appended,
+deleted, loaded and compacted; a family describes its log as a
+:class:`RowLog` (and BM25 its stat sums as :class:`SumLog`\\ s) and
+calls :func:`admit_append` / :func:`append_rows`, :func:`delete_rows`,
+:func:`load_rows` / :func:`load_sum` and :func:`compact_log`.
 
-Three stored-index families maintain on-disk artifacts from batches
-and streaming micro-batches — the BM25 triple (ext/retrieval.py), the
-MinHash gram table (ext/dedup.py) and the IVF-PQ codes
-(ext/ann_store.py).  For BM25 and IVF-PQ the log is the ONLY stored
-form: a one-shot build is batch 0.  All follow one contract:
+Layout: under a family ``root``, the row log ``root/<sub>`` holds one
+``batch_id=<n>`` partition per batch (:func:`write_batch_partition`;
+a one-shot build is batch 0), its tombstone sibling ``<sub>_deleted``
+(:func:`tombstone_dir`) holds deleted ids per delete batch, and
+``root/_intent`` / ``root/_folded_batches.txt`` hold the intent
+markers and the fold marker.  Row ids are disjoint across batches and
+never reused: a re-added document carries a NEW id, or its old
+tombstone masks it.
 
-* **append**: every micro-batch writes its delta rows dynamically
-  overwriting ONLY its own ``batch_id=<n>`` partition — so replayed
-  batches (crash-recovery's at-least-once delivery) are idempotent.
-  Corollary (round 12): CONCURRENT append batches with DISTINCT batch
-  ids and disjoint doc/vec ids are safe from one driver — each batch
-  writes only its own directory, declares its own intent marker, and
-  shares no mutable state (``recover_swap`` is a no-op read when no
-  swap crashed, ``folded_batches`` is a directory listing) — so a bulk
-  backfill may overlap its batches via :func:`run_jobs`.  What stays
-  single-writer: a Structured Streaming checkpoint serializes ITS OWN
-  batches (the engine's trigger loop), and compaction still requires
-  full quiescence across every writer.
-* **read** (:func:`read_log`): explicit schema (a log no batch ever
-  wrote has no files to infer from → empty frame), and a loud refusal
-  when the directory is mid-compaction-swap — in that window the only
-  live copy sits in ``.compact.old`` and serving an empty frame would
-  be silent data loss.
-* **compact** (:func:`recover_swap` + :func:`compact_swap`): fold the
-  accreted per-batch partitions into a single ``batch_id = -1`` base
-  (real micro-batch ids are >= 0, so even a FRESH checkpoint restarting
-  at 0 can never overwrite the base).  Compaction requires a QUIESCED
-  log — no uncommitted batch on any writing stream: folding eats the
-  per-batch partitions, so a pre-compaction batch replayed AFTER the
-  fold would re-add rows/deltas the base already contains (the same
-  reason a table OPTIMIZE coordinates with writers).  Every caller in
-  this repo compacts after ``awaitTermination`` — and since round 11
-  the contract is ENFORCED, not just documented: batch writers declare
-  in-flight work via :func:`write_intent` markers and every family's
-  compactor calls :func:`assert_quiesced`, refusing loudly while any
-  marker is present (VERDICT r10 item 3).  Swap mechanics: write staging →
-  rename live to ``.old`` → rename staging to live → remove ``.old``
-  (LOCAL-FS by design; an object-store deployment swaps via the table
-  format's OPTIMIZE).  A crash between the two renames is recovered by
-  the next :func:`recover_swap`; a crash AFTER the live rename but
-  before cleanup leaves a stale non-empty ``.old`` which the next
-  :func:`compact_swap` drops (live is authoritative — ADVICE r8).
-* **delete** (:func:`tombstone_append` + :func:`apply_tombstones`,
-  round 10 — VERDICT r9 item 1): row-disjoint artifacts (gram rows,
-  ANN code rows, BM25 postings) delete by TOMBSTONE — a sibling
-  batch-id log of deleted ids, anti-joined at read time and physically
-  dropped from the main artifact at compaction.  Tombstone rows are
-  RETAINED across compactions (folded to their own ``batch_id = -1``
-  base, :func:`compact_tombstones`).  What retention buys, precisely:
-  the QUIESCENCE contract above is the actual correctness guarantee —
-  if it is violated (compaction runs while the separate append stream
-  still has an uncommitted pre-delete batch, which later replays), the
-  replayed partition re-adds rows the base already holds, so
-  duplicates and double-counted stats occur REGARDLESS of tombstones;
-  retention merely narrows that blast radius by keeping deleted ids
-  deleted through it (review r10 — retention is belt-and-braces, not a
-  substitute for quiescence).  The corollary contract: ids are never
-  reused (already implied by the engine-wide disjoint-batch contract)
-  — a re-added document must carry a NEW id or the old tombstone masks
-  it.  Tombstone volume is |deleted ids| — metadata-scale next to the
-  corpus-sized artifact it guards.
+* **Append** (:func:`admit_append`, then :func:`append_rows`).  The
+  guard runs, in order: crash-swap recovery of every log dir
+  (:func:`recover_family` — appending into a compaction's
+  between-renames window would resurrect a partial live dir and
+  orphan the pre-crash log); the post-fold replay guard
+  (:func:`replayed_after_fold`, below); and, on request, the
+  ids-never-reused check (:func:`assert_fresh_ids`).  The write then
+  overwrites ONLY the batch's own partition under an intent marker
+  (:func:`write_intent`), so an at-least-once replay of an uncompacted
+  batch is idempotent.  Batches with DISTINCT batch ids and disjoint
+  ids may run concurrently from one driver (:func:`run_jobs`): each
+  writes only its own directories and declares its own marker.
+* **Delete** (:func:`delete_rows`): ids land in the tombstone log
+  under a ``delete-<n>`` intent marker (:func:`tombstone_append`,
+  which recovers its own dir first); replay overwrites the same
+  tombstone partition.
+* **Load** (:func:`load_rows`): :func:`read_log` with the explicit
+  schema (an absent log is an empty frame; a log mid-compaction-swap
+  refuses loudly — serving it as empty would be silent data loss),
+  ``batch_id`` dropped, tombstoned ids anti-joined out
+  (:func:`apply_tombstones`; no tombstone log, no join).
+* **Compact** (:func:`compact_log`), in this order:
+  :func:`assert_quiesced` (no intent marker on the root — folding eats
+  the per-batch partitions, so a pre-compaction batch replayed after
+  the fold would re-add rows the base already holds; every compactor
+  refuses instead of corrupting) → :func:`recover_family` →
+  :func:`record_folded_batches` (marker FIRST: the recorded partitions
+  are still durably in the log, so a skipped replay after a crashed
+  fold loses nothing) → :func:`compact_tombstones` FIRST, retaining
+  the ids → the row log and every sum-log folded through their loaders
+  and swapped (:func:`compact_swap`) to a ``batch_id = -1`` base.  Real
+  batch ids are >= 0, so a FRESH stream restarting at 0 never
+  overwrites the base.  Swap: write staging → rename live to ``.old``
+  → rename staging to live → drop ``.old`` (LOCAL-FS by design; an
+  object store swaps via the table format's OPTIMIZE).  A crash
+  between the renames is recovered by the next :func:`recover_swap`; a
+  stale ``.old`` after the live rename is dropped by the next swap.
+  Every fold is value-preserving, so a crash between the per-log swaps
+  serves the same values.
+
+The post-fold replay guard (:func:`replayed_after_fold`): a batch whose
+id is in the fold marker may be a REPLAY of a folded batch (skip it
+with a warning — re-applying double-counts) or a fresh stream recycling
+the id space (proceed).  Any id overlap with a probe decides it, and
+the probe follows three rules:
+
+1. probe the RAW log ∪ tombstones, never the masked serving view — a
+   folded batch whose rows were all deleted is invisible there, yet its
+   replay would recreate masked rows or re-add netted stat deltas;
+2. exclude the batch's own partition from the writer's OWN log, so a
+   fresh stream's partial first attempt heals on replay instead of
+   being skipped forever (a fold moves rows to ``-1``, so true replays
+   stay visible);
+3. never exclude from the tombstone sibling when appending — delete
+   batches are numbered in the delete stream's own checkpoint, so equal
+   numbers are common.
+
+Folding tombstones first closes the last window: no crash leaves a
+folded batch's only evidence in its own (excluded) partition.
+
+Tombstones are RETAINED across compactions (folded to their own
+``-1`` base).  Quiescence is the actual guarantee; retention only
+narrows the blast radius if it is violated, by keeping deleted ids
+deleted.  Tombstone volume is |deleted ids|, metadata-scale next to
+the log it guards.
+
+**BM25 extension — sum-logs** (:class:`SumLog`): ``term_stats`` and
+``corpus_stats`` are per-batch stat DELTAS beside the postings row log,
+folded by summation.  They ride the same append intent and the same
+compaction (recovered, recorded, folded and swapped with the row log);
+a delete writes NEGATIVE deltas into them at a caller-chosen key
+(``sums_batch_id``).  BM25 alone guards that key against a post-fold
+replay (ext/retrieval.py), since only stat deltas can double-subtract.
 """
 
 from __future__ import annotations
@@ -68,10 +96,31 @@ from __future__ import annotations
 import os
 import shutil
 from contextlib import contextmanager
-from typing import Callable, Iterator
+from typing import Callable, Iterator, NamedTuple, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+
+class RowLog(NamedTuple):
+    """A family's tombstoned row log: ``root/<sub>``, read with
+    ``schema`` (``batch_id`` included), rows keyed by ``id_field``,
+    optionally sub-partitioned under each batch dir."""
+
+    sub: str
+    schema: T.StructType
+    id_field: str
+    partition_by: tuple[str, ...] = ()
+
+
+class SumLog(NamedTuple):
+    """A stat-delta log riding beside a row log (``root/<sub>``): per-batch
+    deltas, summed by ``fold`` into the serving view."""
+
+    sub: str
+    schema: T.StructType
+    fold: Callable[[DataFrame], DataFrame]
 
 
 def run_jobs(*thunks: Callable[[], None]) -> None:
@@ -123,27 +172,17 @@ def write_batch_partition(
 
     Read-back identical: :func:`read_log`'s explicit schema fills
     ``batch_id`` from the directory name (the column must NOT be in
-    ``df`` — it would collide with the inferred partition column), and
-    nested ``partition_by`` levels are laid out exactly as
-    ``partitionBy("batch_id", *partition_by)`` would.  The replay
-    contract is unchanged: a replayed batch still overwrites ONLY its
-    own directory.  One deliberate difference: an all-empty batch now
-    leaves an empty ``batch_id=<n>`` dir where the dynamic committer
-    left nothing — read_log folds it to zero rows, and the post-fold
-    replay guard treats the recorded-then-replayed empty batch as a
-    skip (strictly narrower than the documented zero-token residual
-    window).
+    ``df``), and nested ``partition_by`` levels are laid out exactly as
+    ``partitionBy("batch_id", *partition_by)`` would.  An all-empty
+    batch leaves an empty ``batch_id=<n>`` dir, which reads as zero
+    rows.
 
-    Crash window (ADVICE r11): plain ``overwrite`` deletes the existing
+    Crash window: plain ``overwrite`` deletes the existing
     ``batch_id=<n>`` dir at job start, so a crash mid-replay leaves the
-    partition empty/partial for the whole rewrite, where the dynamic
-    committer preserved old content until its commit-time move.  This
-    is acceptable under the marker-then-replay contract — only batches
-    whose intent marker is still present (i.e. never committed cleanly)
-    are ever rewritten, so no committed content sits in the window —
-    but a serve racing the replay of that uncommitted batch can
-    transiently miss its rows (serve paths read the log as-is; only
-    compaction checks intent markers)."""
+    partition partial for the whole rewrite.  Only batches whose intent
+    marker is still present (never committed cleanly) are ever
+    rewritten, so no committed content sits in the window; a serve
+    racing that replay can transiently miss its rows."""
     if "batch_id" in df.columns:
         raise ValueError(
             "write_batch_partition: drop the batch_id column — the "
@@ -164,22 +203,17 @@ def intent_dir(root: str) -> str:
 
 @contextmanager
 def write_intent(root: str, key: str) -> Iterator[None]:
-    """Declare an in-flight batch write on the artifact family rooted
-    at ``root`` — the runtime ENFORCEMENT of the quiescence contract
-    (VERDICT r10 item 3: the module note above states that compacting
-    a non-quiesced log corrupts it, but until round 11 nothing
-    detected a violation — at scale, an ops mistake silently
-    double-counts).  The marker (one empty file named ``key``) exists
-    exactly while a batch write is in flight; :func:`assert_quiesced`
-    makes compaction refuse loudly while any marker is present.
+    """Declare an in-flight batch write on the family rooted at
+    ``root``: one empty marker file named ``key`` exists exactly while
+    the write is in flight, and :func:`assert_quiesced` makes
+    compaction refuse while any marker is present.
 
     ``key`` must be the batch's DETERMINISTIC identity (e.g.
     ``append-<batch_id>``): a writer that crashes mid-write leaves its
-    marker behind — which is CORRECT, because that batch is exactly
-    the uncommitted work that makes compaction unsafe — and the
-    stream's at-least-once replay of the same batch recreates and then
-    clears the same marker, so a recovered stream self-heals the
-    block.  The marker is removed ONLY on clean completion."""
+    marker behind — correctly, since that batch is the uncommitted work
+    that makes compaction unsafe — and the stream's at-least-once
+    replay of the same batch recreates and then clears the same marker.
+    The marker is removed ONLY on clean completion."""
     d = intent_dir(root)
     os.makedirs(d, exist_ok=True)
     marker = os.path.join(d, key)
@@ -190,13 +224,10 @@ def write_intent(root: str, key: str) -> Iterator[None]:
 
 
 def assert_quiesced(root: str) -> None:
-    """Refuse to compact an artifact family with in-flight batch
-    writes: folding eats the per-batch partitions, so a pre-compaction
-    batch replayed AFTER the fold re-adds rows/deltas the base already
-    contains (the module-note corruption, now detected instead of
-    documented).  Recovery: let the writing stream finish (its replay
-    clears the marker), or — if the writer is known dead with its
-    checkpoint discarded — remove the marker file by hand."""
+    """Refuse to compact a family with in-flight batch writes (module
+    note).  Recovery: let the writing stream finish (its replay clears
+    the marker), or — if the writer is known dead with its checkpoint
+    discarded — remove the marker file by hand."""
     d = intent_dir(root)
     if not os.path.isdir(d):
         return
@@ -214,57 +245,35 @@ def folded_marker_path(root: str) -> str:
     return os.path.join(root, "_folded_batches.txt")
 
 
-def _folded_marker_paths(root: str) -> tuple[str, str]:
-    # the second name is the round-10 marker (delete-only guard): an
-    # index compacted under that version must keep its folded delete
-    # ids protected across the rename (review r11)
-    return folded_marker_path(root), os.path.join(root, "_folded_delete_batches.txt")
-
-
 def folded_batches(root: str) -> set[int]:
-    """Batch ids (BOTH polarities — appends at >= 0, BM25 deletes in
-    the negative key-space) that a past compaction of the family
-    rooted at ``root`` has absorbed into its ``batch_id = -1`` base.
-    A batch replayed AFTER its fold re-adds rows/deltas the base
-    already contains — appends double-ADD exactly as deletes
-    double-subtract (review r11: the first cut guarded only the delete
-    side) — so appenders and deleters consult this set and, when their
-    batch id is in it, distinguish a true at-least-once REPLAY (batch
-    content already present in the folded artifact → skip with a loud
-    warning) from a deliberately FRESH stream recycling the id space
-    after compaction (disjoint content → proceed: its rows are new,
-    and dynamic overwrite of the long-gone partition is harmless).
-    The content probe runs ONLY when the batch id is in the folded
-    set, so steady-state batches never pay it."""
-    out: set[int] = set()
-    for p in _folded_marker_paths(root):
-        if os.path.isfile(p):
-            with open(p) as f:
-                out.update(int(x) for x in f.read().split())
-    return out
+    """Batch ids (appends at >= 0, BM25 delete keys in the negative
+    key-space) that a past compaction of the family rooted at ``root``
+    has absorbed into its ``batch_id = -1`` base."""
+    p = folded_marker_path(root)
+    if not os.path.isfile(p):
+        return set()
+    with open(p) as f:
+        return {int(x) for x in f.read().split()}
 
 
-def record_folded_batches(root: str, log_subdir: str) -> None:
-    """Called at the START of compaction, BEFORE any fold: unions the
-    batch-id partitions currently in ``root/log_subdir`` (and, via
-    :func:`folded_batches`, everything previously recorded) into the
-    marker.  Marker-first ordering is crash-safe — the recorded
-    batches' partitions are already durably in the log, so a replay
-    skipped after a marker write that preceded a crashed fold loses
-    nothing (the partitions it would have rewritten still exist)."""
-    d = os.path.join(root, log_subdir)
-    seen: set[int] = set()
-    if os.path.isdir(d):
-        for name in os.listdir(d):
-            if name.startswith("batch_id="):
-                bid = int(name.split("=", 1)[1])
-                if bid != -1:  # -1 is the base itself, never a batch
-                    seen.add(bid)
-    folded = folded_batches(root) | seen
-    if folded:
+def record_folded_batches(root: str, subs: Sequence[str]) -> None:
+    """Union the batch-id partitions currently in each ``root/<sub>``
+    (and everything previously recorded) into the fold marker — at the
+    START of compaction, before any fold (module note)."""
+    seen = folded_batches(root)
+    for sub in subs:
+        d = os.path.join(root, sub)
+        if os.path.isdir(d):
+            seen.update(
+                int(name.split("=", 1)[1])
+                for name in os.listdir(d)
+                if name.startswith("batch_id=")
+            )
+    seen.discard(-1)  # the base itself, never a batch
+    if seen:
         tmp = folded_marker_path(root) + ".tmp"
         with open(tmp, "w") as f:
-            f.write("\n".join(str(b) for b in sorted(folded)))
+            f.write("\n".join(str(b) for b in sorted(seen)))
         os.replace(tmp, folded_marker_path(root))
 
 
@@ -272,45 +281,10 @@ def skip_if_replayed(
     batch_ids: DataFrame, root: str, batch_id: int, probe_ids: DataFrame,
     id_field: str, who: str,
 ) -> bool:
-    """The post-fold replay guard's shared decision: returns True (and
-    warns) when this batch is a replay of one a compaction already
-    folded — any id overlap between the batch and ``probe_ids``
-    counts, because fresh batches are id-disjoint by the engine-wide
-    contract, so overlap can only mean replay (or an id-collision that
-    is illegal anyway).  Empty batches skip too: an empty replayed
-    partition adds nothing.  Callers invoke this ONLY when
-    ``batch_id`` is already in :func:`folded_batches`.
-
-    The CALLER builds ``probe_ids``, and three rules matter (review
-    r11, waves two and three):
-
-    * probe the RAW log UNION the tombstone log, not the
-      tombstone-masked serving view — a folded batch whose docs were
-      all subsequently deleted is invisible in the masked view, and
-      its replay would re-add positive stat deltas the base already
-      netted (BM25) or permanently recreate masked rows (gram/ANN).
-      Deleted-or-live, a replayed id is ALWAYS in raw ∪ tombstones.
-    * EXCLUDE the batch's own partition from the caller's OWN log (the
-      log its stream writes, filtered ``batch_id != this batch``): a
-      fresh stream recycling a folded id that crashed
-      mid-multi-artifact-write must see its partial first attempt as
-      its own, so the healing replay rewrites it (and clears the
-      intent marker) instead of being misclassified and skipped
-      forever.  Fold moves rows to ``batch_id = -1``, so true replays
-      stay detectable.
-    * apply NO exclusion to the tombstone sibling when the caller is
-      an APPENDER: tombstone partitions are numbered in the DELETE
-      stream's independent checkpoint namespace, and both streams
-      restarting at 0 makes an id collision the common case — wave
-      three found the single-filter version wrongly excluded a
-      same-numbered delete batch's tombstones and let a
-      folded-then-fully-deleted append replay through.
-
-    The compactors' fold ORDER is part of this contract: tombstones
-    fold to their ``-1`` base FIRST (:func:`compact_tombstones` runs
-    before any artifact swap), so there is no crash window in which a
-    folded batch's only probe evidence sits in its own (excluded)
-    partition — wave three's delete-side double-subtract scenario."""
+    """The replay decision: True (with a warning) when the batch's ids
+    overlap ``probe_ids`` — fresh batches are id-disjoint, so overlap
+    can only mean replay.  Empty batches skip too: an empty replayed
+    partition adds nothing."""
     import warnings
 
     ids = batch_ids.select(id_field)
@@ -321,10 +295,39 @@ def skip_if_replayed(
             f"of {root} and its content is present in the base — skipping the "
             "replayed write (re-applying would double-count); a deliberately "
             "fresh stream recycling this batch id must carry disjoint ids",
-            stacklevel=3,
+            stacklevel=4,
         )
         return True
     return False
+
+
+def replayed_after_fold(
+    root: str,
+    fold_key: int,
+    batch_id: int,
+    ids: DataFrame,
+    own: tuple[str, T.StructType],
+    also: Sequence[tuple[str, T.StructType]] = (),
+    *,
+    who: str,
+) -> bool:
+    """The post-fold replay guard (module note): False unless
+    ``fold_key`` is in the fold marker — steady-state batches never pay
+    the probe.  Otherwise probe ``ids`` (one column, the id field)
+    against the writer's ``own`` log (path, schema) minus partition
+    ``batch_id``, unioned with the ``also`` logs unfiltered, and skip
+    on overlap."""
+    if int(fold_key) not in folded_batches(root):
+        return False
+    spark, id_field = ids.sparkSession, ids.columns[0]
+    probe = (
+        read_log(spark, *own)
+        .filter(F.col("batch_id") != int(batch_id))
+        .select(id_field)
+    )
+    for path, schema in also:
+        probe = probe.unionByName(read_log(spark, path, schema).select(id_field))
+    return skip_if_replayed(ids, root, batch_id, probe, id_field, who)
 
 
 def read_log(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
@@ -352,36 +355,32 @@ def recover_swap(path: str) -> None:
 
 
 def tombstone_dir(path: str) -> str:
-    """THE naming convention binding an artifact log to its tombstone
-    sibling (``<log>_deleted``) — what lets :func:`recover_log` recover
-    both without each family hand-rolling the pair (review r10: two of
-    three compactors forgot the sibling and bricked themselves on a
-    crash inside compact_tombstones)."""
+    """The naming convention binding a row log to its tombstone sibling
+    (``<log>_deleted``)."""
     return path + "_deleted"
 
 
-def recover_log(path: str) -> None:
-    """Recover crashed compaction swaps on a log dir AND its tombstone
-    sibling — call before any read-for-compaction.  A fourth artifact
-    family using this entry point is correct by construction."""
-    recover_swap(path)
-    recover_swap(tombstone_dir(path))
+def recover_family(root: str, log: RowLog, sums: Sequence[SumLog] = ()) -> None:
+    """Recover crashed compaction swaps on every log dir of a family —
+    the row log, its tombstone sibling and each sum-log."""
+    path = os.path.join(root, log.sub)
+    for p in (path, tombstone_dir(path), *(os.path.join(root, s.sub) for s in sums)):
+        recover_swap(p)
 
 
 def reset_log(root: str, path: str) -> None:
     """Drop the log at ``path`` — live dir, crashed-swap leftovers and
-    its tombstone sibling — plus the fold markers of the family rooted
+    its tombstone sibling — plus the fold marker of the family rooted
     at ``root``: what a full REBUILD does before writing its batch 0.
     A rebuild that kept any of them would serve stale appended rows,
     mask rebuilt ids behind stale tombstones (a leftover tombstone
-    ``.compact.old`` is resurrected by the next :func:`recover_log`),
-    or misread its own batch ids as post-fold replays."""
+    ``.compact.old`` is resurrected by the next recovery), or misread
+    its own batch ids as post-fold replays."""
     for p in (path, tombstone_dir(path)):
         for suffix in ("", ".compact.old", ".compact.tmp"):
             shutil.rmtree(p + suffix, ignore_errors=True)
-    for marker in _folded_marker_paths(root):
-        if os.path.isfile(marker):
-            os.remove(marker)
+    if os.path.isfile(folded_marker_path(root)):
+        os.remove(folded_marker_path(root))
 
 
 def tombstone_schema(id_field: str) -> T.StructType:
@@ -395,14 +394,9 @@ def tombstone_schema(id_field: str) -> T.StructType:
 
 
 def tombstone_append(ids: DataFrame, batch_id: int, path: str, id_field: str) -> None:
-    """Append one delete-batch of ids to the tombstone log at ``path``
-    — the delete-side ``foreachBatch`` body.  Same idempotence shape as
-    the data appenders: each write overwrites ONLY its own
-    ``batch_id`` partition (:func:`write_batch_partition`), and a
-    crashed compaction swap is recovered FIRST (the appender contract,
-    review r9)."""
-    from pyspark.sql import functions as F
-
+    """Write one delete-batch of ids to the tombstone log at ``path``,
+    overwriting ONLY its own ``batch_id`` partition, after recovering a
+    crashed compaction swap of that log."""
     recover_swap(path)
     write_batch_partition(
         ids.select(F.col(id_field).cast("long").alias(id_field)).distinct(),
@@ -415,10 +409,14 @@ def apply_tombstones(
     spark: SparkSession, rows: DataFrame, path: str, id_field: str
 ) -> DataFrame:
     """``rows`` minus every id in the tombstone log at ``path`` — ONE
-    left-anti join against the (metadata-scale) deleted-id set; an
-    absent log folds to a no-op.  No broadcast hint: the deleted set is
+    left-anti join against the (metadata-scale) deleted-id set.  No
+    tombstone log at plan-construction time returns ``rows`` as they
+    are: an empty frame of unknown size would plan a sort-merge
+    anti-join for nothing.  No broadcast hint: the deleted set is
     usually tiny (AQE broadcasts it) but is not structurally bounded,
     so the planner keeps the choice."""
+    if not os.path.isdir(path) and not os.path.isdir(path + ".compact.old"):
+        return rows
     ts = read_log(spark, path, tombstone_schema(id_field)).select(id_field)
     # re-select: the USING-join floats the id column to the front, and
     # artifact readers are column-ordered (explicit schemas)
@@ -426,17 +424,15 @@ def apply_tombstones(
 
 
 def assert_fresh_ids(batch: DataFrame, path: str, id_field: str) -> None:
-    """Opt-in guard for the ids-never-reused contract (ADVICE r10):
-    re-appending a previously deleted id is silently inconsistent —
-    the retained tombstone masks the row forever, and for BM25 the
-    append's positive stat deltas still count it, skewing
-    n_docs/avgdl/idf with no error.  One semi-join of the append
-    batch's ids against the (metadata-scale) tombstone log at
-    ``path``; raises on the first hit with examples.  Mirrors the
-    validate_disjoint/validate_contained convention: the check costs
-    one extra batch-side job, so appenders take it as an opt-in
-    ``validate_fresh_ids`` flag — the update-maintenance paths (which
-    re-append by CONSTRUCTION near deleted ids) turn it on."""
+    """Opt-in guard for the ids-never-reused contract: re-appending a
+    previously deleted id is silently inconsistent — the retained
+    tombstone masks the row forever, and for BM25 the append's positive
+    stat deltas still count it, skewing n_docs/avgdl/idf with no error.
+    One semi-join of the batch's ids against the tombstone log at
+    ``path``; raises on the first hit with examples.  It costs one
+    batch-side job, so appenders take it as the ``validate_fresh_ids``
+    flag — the update-maintenance paths (which re-append near deleted
+    ids by construction) turn it on."""
     ts = read_log(
         batch.sparkSession, path, tombstone_schema(id_field)
     ).select(id_field)
@@ -452,8 +448,7 @@ def assert_fresh_ids(batch: DataFrame, path: str, id_field: str) -> None:
 
 def compact_tombstones(spark: SparkSession, path: str, id_field: str) -> None:
     """Fold the tombstone log to its ``batch_id = -1`` base, RETAINING
-    the ids (module note: retention is what keeps a replayed
-    pre-delete append batch from resurrecting deleted rows)."""
+    the ids (module note)."""
     recover_swap(path)
     if not os.path.isdir(path):
         return
@@ -485,3 +480,124 @@ def compact_swap(path: str, write_staging: Callable[[str], None]) -> None:
         os.rename(path, old)
     os.rename(staging, path)
     shutil.rmtree(old, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# The four lifecycle steps (module note)
+# ---------------------------------------------------------------------------
+
+
+def admit_append(
+    root: str,
+    log: RowLog,
+    ids: DataFrame,
+    batch_id: int,
+    who: str,
+    validate_fresh_ids: bool = False,
+    sums: Sequence[SumLog] = (),
+) -> bool:
+    """The append guard: recover every log dir, skip a post-fold replay
+    (own log minus this partition ∪ all tombstones), then optionally
+    refuse reused ids.  ``ids`` is the batch's one-column id frame named
+    ``log.id_field``.  Returns False when the batch must not be
+    written."""
+    recover_family(root, log, sums)
+    path = os.path.join(root, log.sub)
+    tombstones = tombstone_dir(path)
+    if replayed_after_fold(
+        root, batch_id, batch_id, ids, (path, log.schema),
+        ((tombstones, tombstone_schema(log.id_field)),), who=who,
+    ):
+        return False
+    if validate_fresh_ids:
+        assert_fresh_ids(ids, tombstones, log.id_field)
+    return True
+
+
+def _sum_writes(
+    root: str, sums: Sequence[tuple[SumLog, DataFrame]], batch_id: int
+) -> list[Callable[[], None]]:
+    return [
+        lambda s=s, df=df: write_batch_partition(df, os.path.join(root, s.sub), batch_id)
+        for s, df in sums
+    ]
+
+
+def append_rows(
+    root: str,
+    log: RowLog,
+    batch_id: int,
+    rows: DataFrame,
+    sums: Sequence[tuple[SumLog, DataFrame]] = (),
+    replace: bool = False,
+) -> None:
+    """Write one batch's rows (and sum-log deltas) to their own
+    ``batch_id`` partitions under one ``append-<n>`` intent marker.  The
+    writes are independent actions on disjoint dirs and run
+    concurrently (:func:`run_jobs`).  ``replace=True`` (a full rebuild)
+    first drops the old row log, its tombstones and the fold marker
+    (:func:`reset_log`)."""
+    path = os.path.join(root, log.sub)
+    with write_intent(root, f"append-{int(batch_id)}"):
+        if replace:
+            reset_log(root, path)
+        run_jobs(
+            lambda: write_batch_partition(rows, path, batch_id, log.partition_by),
+            *_sum_writes(root, sums, batch_id),
+        )
+
+
+def delete_rows(
+    root: str,
+    log: RowLog,
+    ids: DataFrame,
+    batch_id: int,
+    sums: Sequence[tuple[SumLog, DataFrame]] = (),
+    sums_batch_id: int | None = None,
+) -> None:
+    """Tombstone one delete batch of ``ids`` (one column, the id field)
+    under a ``delete-<n>`` intent marker; sum-log deltas, if any, are
+    written concurrently at ``sums_batch_id``."""
+    path = os.path.join(root, log.sub)
+    with write_intent(root, f"delete-{int(batch_id)}"):
+        run_jobs(
+            lambda: tombstone_append(ids, batch_id, tombstone_dir(path), log.id_field),
+            *_sum_writes(root, sums, batch_id if sums_batch_id is None else sums_batch_id),
+        )
+
+
+def load_rows(spark: SparkSession, root: str, log: RowLog) -> DataFrame:
+    """The serving view of a row log: every batch, tombstones applied."""
+    path = os.path.join(root, log.sub)
+    rows = read_log(spark, path, log.schema).drop("batch_id")
+    return apply_tombstones(spark, rows, tombstone_dir(path), log.id_field)
+
+
+def load_sum(spark: SparkSession, root: str, s: SumLog) -> DataFrame:
+    """The serving view of a sum-log: its deltas folded."""
+    return s.fold(read_log(spark, os.path.join(root, s.sub), s.schema))
+
+
+def compact_log(
+    spark: SparkSession, root: str, log: RowLog, sums: Sequence[SumLog] = ()
+) -> None:
+    """Fold a row log (tombstoned rows physically dropped) and its
+    sum-logs to ``batch_id = -1`` bases, in the module-note order."""
+    assert_quiesced(root)
+    recover_family(root, log, sums)
+    path = os.path.join(root, log.sub)
+    if not os.path.isdir(path):
+        return  # nothing ever appended
+    record_folded_batches(root, [log.sub, *(s.sub for s in sums)])
+    compact_tombstones(spark, tombstone_dir(path), log.id_field)
+    folds = [(path, load_rows(spark, root, log), log.partition_by)] + [
+        (os.path.join(root, s.sub), load_sum(spark, root, s), ()) for s in sums
+    ]
+    run_jobs(
+        *[
+            lambda p=p, df=df, pb=pb: compact_swap(
+                p, lambda staging: write_batch_partition(df, staging, -1, pb)
+            )
+            for p, df, pb in folds
+        ]
+    )

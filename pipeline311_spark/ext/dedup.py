@@ -18,7 +18,16 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from pipeline311_spark.ext.artifact import (
+    RowLog,
+    admit_append,
+    append_rows,
+    compact_log,
+    delete_rows,
+    load_rows,
+)
 from pipeline311_spark.ext.cache import persist_tracked
 from pipeline311_spark.ext.hashing import (
     jvm_memo,
@@ -1275,27 +1284,25 @@ def minhash_incremental_from_store(
 
 
 # ---------------------------------------------------------------------------
-# Streaming maintenance of the stored gram table: an append-only log of
-# batch deltas (VERDICT r8 item 6 — the delta-log + foreachBatch +
-# compaction cycle the BM25 index got in r8, applied to the MinHash
-# family's per-corpus-version gram artifact).  The gram table needs no
-# stat folding at read time: rows are per-(doc, gram) and batch doc ids
-# are disjoint, so the union of batch partitions IS the merge —
-# signatures, banding, and verify all run FROM the folded log exactly
-# as they run from the batch-written store (minhash_pairs_from_grams).
+# The stored gram table as a tombstoned row log (the ext/artifact.py
+# lifecycle).  Rows are per-(doc, gram) and batch doc ids are disjoint,
+# so the union of batch partitions IS the merge — signatures, banding
+# and verify all run FROM the folded log exactly as they run from a
+# batch-written store (minhash_pairs_from_grams).
 # ---------------------------------------------------------------------------
 
 
-def _gram_log_schema() -> "T.StructType":
-    from pyspark.sql import types as T
-
-    return T.StructType(
+_GRAM_LOG = RowLog(
+    "grams",
+    T.StructType(
         [
             T.StructField("doc", T.LongType()),
             T.StructField("g", T.LongType()),
             T.StructField("batch_id", T.LongType()),
         ]
-    )
+    ),
+    "doc",
+)
 
 
 def gram_log_append_batch(
@@ -1309,169 +1316,40 @@ def gram_log_append_batch(
 ) -> None:
     """Append one micro-batch's per-doc DISTINCT gram rows (the stored-
     table contract of :func:`minhash_pairs_from_grams`) — the
-    ``foreachBatch`` body.  Idempotent under replay: each write
-    dynamically overwrites ONLY its own ``batch_id`` partition.
-    ``validate_fresh_ids`` (ADVICE r10) refuses a re-appended
-    tombstoned doc id — the retained tombstone would mask it forever.
-
-    Recovers a crashed compaction swap FIRST (review r9): an append
-    landing in the between-renames window (live dir absent, the only
-    copy in ``.compact.old``) would otherwise resurrect a partial live
-    dir holding just this batch — served silently, and the next
-    compaction would delete the orphaned ``.old`` with every pre-crash
-    batch in it."""
-    import os
-
-    from pipeline311_spark.ext.artifact import (
-        assert_fresh_ids,
-        folded_batches,
-        recover_swap,
-        skip_if_replayed,
-        tombstone_dir,
-    )
-
-    recover_swap(os.path.join(store_dir, "grams"))
-    if int(batch_id) in folded_batches(store_dir):
-        # post-fold replay guard (review r11): a replayed append
-        # recreates gram rows the folded base already holds —
-        # duplicates are MIN-idempotent for signatures but inflate any
-        # set-size denominator downstream; skip replays, let fresh
-        # id-space recycling (disjoint docs) proceed.  Probe = RAW
-        # grams ∪ tombstones minus this batch's own partition
-        # (skip_if_replayed) — the masked view would hide a
-        # folded-then-deleted batch.
-        from pipeline311_spark.ext.artifact import read_log, tombstone_schema
-
-        g_path = os.path.join(store_dir, "grams")
-        # own-partition exclusion only on the append stream's own log;
-        # tombstones are the delete stream's namespace (wave three)
-        probe = read_log(
-            batch_df.sparkSession, g_path, _gram_log_schema()
-        ).filter(F.col("batch_id") != int(batch_id)).select("doc").unionByName(
-            read_log(
-                batch_df.sparkSession, tombstone_dir(g_path), tombstone_schema("doc")
-            ).select("doc")
+    ``foreachBatch`` body, behind the shared append guard.  A replayed
+    post-fold batch would recreate gram rows the base already holds:
+    MIN-idempotent for signatures, but inflating set-size denominators
+    downstream.  ``validate_fresh_ids`` refuses a re-appended
+    tombstoned doc id."""
+    ids = batch_df.select(F.col(id_col).alias("doc"))
+    if admit_append(
+        store_dir, _GRAM_LOG, ids, batch_id, "gram_log_append_batch", validate_fresh_ids
+    ):
+        append_rows(
+            store_dir, _GRAM_LOG, batch_id,
+            _gram_hash_table(batch_df, id_col, text_col, n, distinct=True),
         )
-        if skip_if_replayed(
-            batch_df.select(F.col(id_col).alias("doc")),
-            store_dir,
-            batch_id,
-            probe,
-            "doc",
-            "gram_log_append_batch",
-        ):
-            return
-    if validate_fresh_ids:
-        # the gram tombstone log's id field is "doc" (the gram table's
-        # own id column), not the caller-facing id_col
-        assert_fresh_ids(
-            batch_df.select(F.col(id_col).alias("doc")),
-            tombstone_dir(os.path.join(store_dir, "grams")),
-            "doc",
-        )
-    gh = _gram_hash_table(batch_df, id_col, text_col, n, distinct=True)
-    from pipeline311_spark.ext.artifact import write_batch_partition, write_intent
-
-    with write_intent(store_dir, f"append-{int(batch_id)}"):
-        write_batch_partition(gh, os.path.join(store_dir, "grams"), batch_id)
 
 
 def gram_log_delete_batch(
     ids: DataFrame, batch_id: int, store_dir: str, id_col: str = "doc_id"
 ) -> None:
-    """Tombstone one batch of DELETED doc ids (VERDICT r9 item 1 — the
-    delete half of the gram-store lifecycle, the index-layer mirror of
-    the table-layer reconciliation the reference runs,
-    /root/reference/delete-removed-tickets.py:138-169).  Gram rows are
-    row-disjoint per doc, so deletion needs no stat folding: the ids
-    land in a sibling ``grams_deleted`` tombstone log (replay-
-    idempotent, same batch-partition contract as the appender) and
-    :func:`load_gram_log` anti-joins them out; compaction physically
-    drops them from the gram base."""
-    import os
-
-    from pipeline311_spark.ext.artifact import (
-        tombstone_append,
-        tombstone_dir,
-        write_intent,
-    )
-
-    with write_intent(store_dir, f"delete-{int(batch_id)}"):
-        tombstone_append(
-            ids.select(F.col(id_col).alias("doc")),
-            batch_id,
-            tombstone_dir(os.path.join(store_dir, "grams")),
-            "doc",
-        )
+    """Tombstone one batch of DELETED doc ids — the index-layer mirror
+    of the reference's table-layer reconciliation
+    (delete-removed-tickets.py:138-169).  Gram rows are row-disjoint
+    per doc, so deletion needs no stat folding."""
+    delete_rows(store_dir, _GRAM_LOG, ids.select(F.col(id_col).alias("doc")), batch_id)
 
 
 def load_gram_log(spark, store_dir: str) -> DataFrame:
-    """Fold the log back into the (doc, g) gram table: the union of
-    batch partitions is the merge (disjoint doc ids), minus the
-    tombstoned docs (one anti-join against the metadata-scale deleted
-    set; absent tombstone log = no-op).  Refuses loudly
-    mid-compaction-swap (ext/artifact.py)."""
-    import os
-
-    from pipeline311_spark.ext.artifact import (
-        apply_tombstones,
-        read_log,
-        tombstone_dir,
-    )
-
-    path = os.path.join(store_dir, "grams")
-    grams = read_log(spark, path, _gram_log_schema()).drop("batch_id")
-    return apply_tombstones(spark, grams, tombstone_dir(path), "doc")
+    """The (doc, g) gram table: every batch, tombstoned docs removed."""
+    return load_rows(spark, store_dir, _GRAM_LOG)
 
 
 def gram_log_compact(spark, store_dir: str) -> None:
-    """Fold the per-batch partitions into the single ``batch_id = -1``
-    base (file-count pressure — the same reason bm25_index_compact
-    exists); value-preserving, crash-recoverable via the shared
-    two-rename swap.  Tombstoned docs are PHYSICALLY DROPPED from the
-    gram base (the fold reads through :func:`load_gram_log`); the
-    tombstone log itself is folded but retained (ext/artifact.py module
-    note: retention keeps replayed pre-delete append batches from
-    resurrecting deleted docs).  A crash between the two swaps is
-    value-preserving: grams-compacted + tombstones-unfolded anti-joins
-    ids that no longer exist."""
-    import os
-
-    from pipeline311_spark.ext.artifact import (
-        assert_quiesced,
-        compact_swap,
-        compact_tombstones,
-        recover_log,
-        tombstone_dir,
-    )
-
-    # quiescence contract, enforced (VERDICT r10 item 3)
-    assert_quiesced(store_dir)
-    # record the batches this fold absorbs BEFORE folding (review r11)
-    from pipeline311_spark.ext.artifact import record_folded_batches
-
-    record_folded_batches(store_dir, "grams")
-    path = os.path.join(store_dir, "grams")
-    # recovers the tombstone sibling too — it is READ below (through
-    # load_gram_log), and a compaction crashed inside
-    # compact_tombstones would otherwise brick every later
-    # compact/load (review r10)
-    recover_log(path)
-    if not os.path.isdir(path):
-        return  # nothing ever appended
-    # fold tombstones FIRST (review r11 wave three — the fold-order
-    # half of the replay-guard contract, see ext/artifact.py
-    # skip_if_replayed): a delete batch's fold evidence must reach the
-    # -1 base before any crash window can strand it in an excluded
-    # partition
-    compact_tombstones(spark, tombstone_dir(path), "doc")
-    from pipeline311_spark.ext.artifact import write_batch_partition
-
-    base = load_gram_log(spark, store_dir)
-    compact_swap(
-        path,
-        lambda staging: write_batch_partition(base, staging, -1),
-    )
+    """Fold the log to its ``batch_id = -1`` base, tombstoned docs
+    physically dropped (ext/artifact.py ``compact_log``)."""
+    compact_log(spark, store_dir, _GRAM_LOG)
 
 
 # ---------------------------------------------------------------------------

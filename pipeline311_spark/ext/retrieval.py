@@ -23,7 +23,8 @@ Index contract (three tables, all parquet-friendly):
   merges by addition, no re-scan.
 
 Incremental maintenance: the ONE stored form is an append-only log
-partitioned by batch id (the ext/artifact.py contract) — a build is
+partitioned by batch id (the ext/artifact.py lifecycle: postings are
+its tombstoned row log, the two stats its sum-logs) — a build is
 batch 0 (:func:`bm25_index_append_batch`), and every later batch
 writes only its own deltas, built from the batch alone.
 :func:`load_bm25_index` folds the log: postings by union, ``term_stats``
@@ -63,6 +64,20 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from pipeline311_spark.ext.artifact import (
+    RowLog,
+    SumLog,
+    admit_append,
+    append_rows,
+    compact_log,
+    delete_rows,
+    load_rows,
+    load_sum,
+    recover_family,
+    replayed_after_fold,
+    tombstone_dir,
+    tombstone_schema,
+)
 from pipeline311_spark.ext.textstats import tokens
 
 BM25_K1 = 1.2
@@ -241,41 +256,70 @@ def bm25_topk(
 
 
 # ---------------------------------------------------------------------------
-# Streaming index maintenance: an append-only log of batch deltas
+# Index maintenance: the postings row log plus two stat sum-logs
 # ---------------------------------------------------------------------------
 #
-# The on-disk index is an APPEND-ONLY LOG partitioned by batch id
-# (read-merge-rewrite would open a swap window per batch) — postings rows, per-batch
-# term-df rows, and per-batch one-row corpus stats.  Loading folds the
-# deltas: postings read as-is (the union IS the merge, disjoint doc
-# ids), term df summed per term (|vocabulary|-scale), corpus stats
-# summed (rows = batches).  Replayed micro-batches (crash-recovery's
-# at-least-once delivery) are IDEMPOTENT because each append
-# dynamically overwrites only its own batch_id partition.
+# The lifecycle (append guard, tombstone delete, load, compaction) is
+# ext/artifact.py's; this module knows only the BM25 artifacts: postings
+# are the tombstoned row log, and the per-batch term-df rows and one-row
+# corpus stats are sum-logs folded by addition (deletes ride them as
+# NEGATIVE deltas).
 
-_POSTINGS_LOG_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("tf", T.LongType()),
-        T.StructField("dl", T.LongType()),
-        T.StructField("batch_id", T.LongType()),
-    ]
+_POSTINGS = RowLog(
+    "postings",
+    T.StructType(
+        [
+            T.StructField("term", T.StringType()),
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("tf", T.LongType()),
+            T.StructField("dl", T.LongType()),
+            T.StructField("batch_id", T.LongType()),
+        ]
+    ),
+    "doc_id",
 )
-_TERM_LOG_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("df", T.LongType()),
-        T.StructField("batch_id", T.LongType()),
-    ]
+
+
+def _fold_term_stats(log: DataFrame) -> DataFrame:
+    # terms netted to df <= 0 by deletes drop out: a fresh build over
+    # the remaining corpus has no zero rows
+    return (
+        log.groupBy("term")
+        .agg(F.sum("df").cast("long").alias("df"))
+        .filter(F.col("df") > 0)
+    )
+
+
+def _fold_corpus_stats(log: DataFrame) -> DataFrame:
+    return log.agg(
+        F.sum("n_docs").cast("long").alias("n_docs"),
+        F.sum("sum_dl").cast("long").alias("sum_dl"),
+    )
+
+
+_TERM_STATS = SumLog(
+    "term_stats",
+    T.StructType(
+        [
+            T.StructField("term", T.StringType()),
+            T.StructField("df", T.LongType()),
+            T.StructField("batch_id", T.LongType()),
+        ]
+    ),
+    _fold_term_stats,
 )
-_STATS_LOG_SCHEMA = T.StructType(
-    [
-        T.StructField("n_docs", T.LongType()),
-        T.StructField("sum_dl", T.LongType()),
-        T.StructField("batch_id", T.LongType()),
-    ]
+_CORPUS_STATS = SumLog(
+    "corpus_stats",
+    T.StructType(
+        [
+            T.StructField("n_docs", T.LongType()),
+            T.StructField("sum_dl", T.LongType()),
+            T.StructField("batch_id", T.LongType()),
+        ]
+    ),
+    _fold_corpus_stats,
 )
+_SUMS = (_TERM_STATS, _CORPUS_STATS)
 
 
 def bm25_index_append_batch(
@@ -287,108 +331,36 @@ def bm25_index_append_batch(
     validate_fresh_ids: bool = False,
 ) -> None:
     """Append one micro-batch's index deltas (the ``foreachBatch``
-    body).  Doc ids must be disjoint across batches (file-split or
-    keyed sources give this for free).  Idempotent under replay: every
-    write overwrites ONLY its own ``batch_id=<n>`` directory
-    (:func:`~pipeline311_spark.ext.artifact.write_batch_partition`), so
-    re-delivering a batch rewrites the same rows.
+    body), behind the shared append guard
+    (:func:`~pipeline311_spark.ext.artifact.admit_append`).  Doc ids
+    must be disjoint across batches; a replayed uncompacted batch
+    rewrites the same rows.  ``validate_fresh_ids`` refuses a
+    re-appended deleted id — for BM25 a reused id is SILENTLY
+    inconsistent (the tombstone masks its postings, but the positive
+    stat deltas still count it); the update-maintenance path turns it
+    on (plans/index_update.py).
 
-    ``validate_fresh_ids`` (ADVICE r10): semi-join the batch's ids
-    against the postings tombstone log and refuse a re-appended
-    deleted id — for BM25 specifically, a reused id is SILENTLY
-    inconsistent (tombstone masks its postings forever, but the
-    append's positive stat deltas still skew n_docs/avgdl/idf).  The
-    update-maintenance path turns it on (plans/index_update.py).
-
-    Recovers a crashed compaction swap on each artifact FIRST (review
-    r9): appending into the between-renames window would resurrect a
-    partial live dir and orphan the pre-crash log in ``.compact.old``,
-    which the next compaction deletes — silent data loss."""
-    from pipeline311_spark.ext.artifact import (
-        assert_fresh_ids,
-        folded_batches,
-        recover_swap,
-        skip_if_replayed,
-        tombstone_dir,
-        write_intent,
-    )
-
-    for sub in ("postings", "term_stats", "corpus_stats"):
-        recover_swap(os.path.join(index_dir, sub))
-    if int(batch_id) in folded_batches(index_dir):
-        # post-fold replay guard (review r11: appends double-ADD stats
-        # exactly as deletes double-subtract — the first cut guarded
-        # only the delete side).  Content probe against RAW postings ∪
-        # tombstones, excluding this batch's own partition (see
-        # skip_if_replayed for why both rules matter): a replayed
-        # batch overlaps; a fresh stream recycling the id space
-        # carries disjoint ids and proceeds.  (A replayed batch of
-        # ONLY zero-token docs leaves neither postings nor — having
-        # nothing to delete — tombstones, and slips through to
-        # double-count n_docs: the residual window, documented; real
-        # batches carry tokens.)
-        from pipeline311_spark.ext.artifact import read_log, tombstone_schema
-
-        spark_ = batch_df.sparkSession
-        p_path = os.path.join(index_dir, "postings")
-        # own-partition exclusion applies ONLY to the append stream's
-        # own log; the tombstone sibling is numbered in the DELETE
-        # stream's independent namespace and is never excluded here
-        # (skip_if_replayed's contract, review r11 wave three)
-        probe = read_log(spark_, p_path, _POSTINGS_LOG_SCHEMA).filter(
-            F.col("batch_id") != int(batch_id)
-        ).select("doc_id").unionByName(
-            read_log(
-                spark_, tombstone_dir(p_path), tombstone_schema("doc_id")
-            ).select("doc_id")
-        )
-        if skip_if_replayed(
-            batch_df.select(F.col(id_col).alias("doc_id")),
-            index_dir,
-            batch_id,
-            probe,
-            "doc_id",
-            "bm25_index_append_batch",
-        ):
-            return
-    if validate_fresh_ids:
-        assert_fresh_ids(
-            batch_df.select(F.col(id_col).alias("doc_id")),
-            tombstone_dir(os.path.join(index_dir, "postings")),
-            "doc_id",
-        )
-    # ONE tokenize pass for all three artifacts (guide §1.2): the
-    # persisted token base feeds postings and corpus_stats, the
-    # persisted postings feed term_stats — the naive per-artifact
-    # builders re-tokenized the batch three times per micro-batch.
+    Residual window of the post-fold replay guard: a replayed batch of
+    ONLY zero-token docs leaves neither postings nor tombstones to
+    probe, and double-counts n_docs; real batches carry tokens."""
+    ids = batch_df.select(F.col(id_col).alias("doc_id"))
+    if not admit_append(
+        index_dir, _POSTINGS, ids, batch_id, "bm25_index_append_batch",
+        validate_fresh_ids, _SUMS,
+    ):
+        return
+    # ONE tokenize pass for all three artifacts; the three concurrent
+    # writes share the persisted caches, whose fill BlockManager
+    # serializes under the block write lock, so it runs once while the
+    # three per-write driver costs overlap
     postings, term_stats, corpus_stats, release = bm25_batch_artifacts(
         batch_df, id_col, text_col
     )
-    from pipeline311_spark.ext.artifact import write_batch_partition
-
-    def _append(df: DataFrame, sub: str) -> None:
-        write_batch_partition(df, os.path.join(index_dir, sub), batch_id)
-
-    # quiescence intent spans all three artifact writes: a crash
-    # mid-triple leaves the marker, and compaction refuses until this
-    # batch replays (ext/artifact.py, VERDICT r10 item 3).  All three
-    # writes run concurrently (guide §2.6: independent actions,
-    # disjoint paths).  They share the persisted token base / postings
-    # caches, and racing the fill is SAFE and faster: BlockManager
-    # serializes per-partition computation under a block write lock
-    # (one thread computes, the others block then read), so the fill
-    # happens once while the three fixed per-action costs overlap —
-    # measured 1.15 s -> 0.87 s per batch at sf0.1 vs the previous
-    # postings-first sequencing (round 11, second wave).
-    from pipeline311_spark.ext.artifact import run_jobs
-
     try:
-        with write_intent(index_dir, f"append-{int(batch_id)}"):
-            run_jobs(
-                lambda: _append(postings, "postings"),
-                lambda: _append(term_stats, "term_stats"),
-                lambda: _append(corpus_stats, "corpus_stats"),
-            )
+        append_rows(
+            index_dir, _POSTINGS, batch_id, postings,
+            ((_TERM_STATS, term_stats), (_CORPUS_STATS, corpus_stats)),
+        )
     finally:
         release()
 
@@ -406,242 +378,80 @@ def bm25_index_delete_batch(
     indexed (same text): the negative deltas are recomputed from it,
     which is the only way n_docs can account for zero-token docs that
     left no posting rows.  Ids must not repeat across delete batches
-    (a double-delete would double-subtract).  Three writes:
+    (a double-delete would double-subtract).
 
-    * ``postings_deleted`` (the shared ``tombstone_dir`` convention):
-      the doc-id tombstone log
-      (:func:`pipeline311_spark.ext.artifact.tombstone_append`) —
-      :func:`load_bm25_index` anti-joins it out of the postings fold.
-    * ``term_stats`` / ``corpus_stats``: NEGATIVE delta rows riding the
-      SAME sum folds the append deltas ride — written at batch id
-      ``-(batch_id + 2)``, the negative key-space, because a delete
-      stream checkpoints independently of the append stream: its
-      micro-batch numbering restarts at 0 and a raw id would
-      dynamically overwrite the append stream's partition (and ``-1``
-      is the compaction base).  The mapping is injective, so replayed
-      delete batches stay idempotent.
+    The doc ids go to the postings tombstone log; the NEGATIVE
+    ``term_stats`` / ``corpus_stats`` deltas go to batch id
+    ``-(batch_id + 2)``, the negative key-space, because a delete
+    stream checkpoints independently of the append stream: its
+    numbering restarts at 0 and a raw id would overwrite the append
+    stream's partition (and ``-1`` is the compaction base).  The
+    mapping is injective, so replayed delete batches stay idempotent.
 
-    Recovers crashed compaction swaps on every artifact first (the
-    appender contract)."""
-    from pipeline311_spark.ext.artifact import (
-        folded_batches,
-        read_log,
-        recover_log,
-        recover_swap,
-        skip_if_replayed,
-        tombstone_append,
-        tombstone_dir,
-        tombstone_schema,
-        write_intent,
+    The BM25-only guard: once a compaction has folded this batch's
+    negative deltas, replaying it would re-subtract what the base has
+    netted.  Its probe is the tombstone log — the delete stream's own
+    log — minus this batch's own partition: a true replay's ids sit in
+    the folded tombstone base (folded FIRST by the compactor), while a
+    fresh delete stream recycling the id space carries not-yet-deleted
+    ids and proceeds."""
+    recover_family(index_dir, _POSTINGS, _SUMS)
+    neg_bid = -(int(batch_id) + 2)
+    ids = batch_df.select(F.col(id_col).alias("doc_id"))
+    own = (
+        tombstone_dir(os.path.join(index_dir, _POSTINGS.sub)),
+        tombstone_schema("doc_id"),
     )
-
-    recover_log(os.path.join(index_dir, "postings"))  # + tombstone sibling
-    for sub in ("term_stats", "corpus_stats"):
-        recover_swap(os.path.join(index_dir, sub))
-    neg_bid_int = -(int(batch_id) + 2)
-    if neg_bid_int in folded_batches(index_dir):
-        # ADVICE r10: this delete batch's negative stat deltas were
-        # already FOLDED into the compaction base — replaying it would
-        # re-subtract df/n_docs/sum_dl the base has netted (the
-        # tombstone half is retention-protected, the stat half was
-        # not).  Content probe against the tombstone log EXCLUDING this
-        # batch's own partition (a crashed first attempt must heal on
-        # replay — skip_if_replayed; the tombstone log IS the delete
-        # stream's own log, so the exclusion is in-namespace here): a
-        # true replay's ids sit in the folded tombstone base — which
-        # the compactor folds FIRST, so no crash window strands the
-        # evidence in the excluded partition; a fresh delete stream
-        # recycling the id space carries not-yet-deleted ids and
-        # proceeds.
-        ts_probe = read_log(
-            batch_df.sparkSession,
-            tombstone_dir(os.path.join(index_dir, "postings")),
-            tombstone_schema("doc_id"),
-        ).filter(F.col("batch_id") != int(batch_id)).select("doc_id")
-        if skip_if_replayed(
-            batch_df.select(F.col(id_col).alias("doc_id")),
-            index_dir,
-            batch_id,
-            ts_probe,
-            "doc_id",
-            "bm25_index_delete_batch",
-        ):
-            return
-    # ONE tokenize pass for both negative deltas (guide §1.2): the
-    # postings frame has a single consumer (term_stats), so only the
-    # token base is persisted.
+    if replayed_after_fold(
+        index_dir, neg_bid, batch_id, ids, own, who="bm25_index_delete_batch"
+    ):
+        return
+    # ONE tokenize pass for both negative deltas; the postings frame has
+    # a single consumer (term_stats), so only the token base persists
     _removed_postings, term_stats, corpus_stats, release = bm25_batch_artifacts(
         batch_df, id_col, text_col, persist_postings=False
     )
     try:
-        with write_intent(index_dir, f"delete-{int(batch_id)}"):
-            from pipeline311_spark.ext.artifact import write_batch_partition
-
-            def _append_neg(df: DataFrame, sub: str) -> None:
-                write_batch_partition(
-                    df, os.path.join(index_dir, sub), neg_bid_int
-                )
-
-            from pipeline311_spark.ext.artifact import run_jobs
-
-            # all three writes are independent (tombstone reads only
-            # ids; the two stat deltas share the token-base cache,
-            # whose concurrent fill BlockManager serializes under the
-            # block write lock) — overlap them (guide §2.6; round 11,
-            # second wave: same measurement as the append triple)
-            run_jobs(
-                lambda: tombstone_append(
-                    batch_df.select(F.col(id_col).alias("doc_id")),
-                    batch_id,
-                    tombstone_dir(os.path.join(index_dir, "postings")),
-                    "doc_id",
-                ),
-                lambda: _append_neg(
-                    term_stats.withColumn("df", (-F.col("df")).cast("long")),
-                    "term_stats",
-                ),
-                lambda: _append_neg(
+        delete_rows(
+            index_dir,
+            _POSTINGS,
+            ids,
+            batch_id,
+            (
+                (_TERM_STATS, term_stats.withColumn("df", (-F.col("df")).cast("long"))),
+                (
+                    _CORPUS_STATS,
                     corpus_stats.select(
                         (-F.col("n_docs")).cast("long").alias("n_docs"),
                         (-F.col("sum_dl")).cast("long").alias("sum_dl"),
                     ),
-                    "corpus_stats",
                 ),
-            )
+            ),
+            sums_batch_id=neg_bid,
+        )
     finally:
         release()
 
 
 def bm25_index_compact(spark: SparkSession, index_dir: str) -> None:
-    """Fold the append-only delta log into a single BASE delta — the
-    periodic maintenance pass the log needs (per-batch partitions
-    accrete forever; scan planning degrades with file count, the same
-    pressure operators/layout.compact_parquet_dir exists for).
-
-    The base is written at ``batch_id = -1``: real micro-batch ids are
-    always >= 0, so even a brand-new stream with a FRESH checkpoint
-    (which restarts numbering at 0) can never dynamically overwrite
-    the compacted base.  Serving is unchanged because compaction is
-    value-preserving per artifact — the fold of (base + later deltas)
-    equals the fold of the original log — which also makes a crash
-    BETWEEN the three artifact swaps harmless: a half-compacted index
-    (postings compacted, term_stats still log-form) folds to the same
-    values.
-
-    Swap mechanics per artifact: write staging → rename live to .old →
-    rename staging to live → remove .old (the layout-module pattern,
-    LOCAL-FS by design; an object-store deployment swaps via the table
-    format's OPTIMIZE).  A crash between the two renames is recovered
-    at the next call; :func:`~pipeline311_spark.ext.artifact.read_log`
-    fails loudly in that window instead of silently serving an empty
-    artifact."""
-    from pipeline311_spark.ext.artifact import (
-        assert_quiesced,
-        compact_swap,
-        recover_log,
-        recover_swap,
-        tombstone_dir,
-    )
-
-    # enforce the quiescence contract FIRST (VERDICT r10 item 3): an
-    # in-flight batch write means folding would eat partitions whose
-    # batch will later replay on top of the base
-    assert_quiesced(index_dir)
-    # recover any crashed swap BEFORE reading: in that window the only
-    # live copy of an artifact is its .old dir (and read_log refuses
-    # to serve it as empty); recover_log covers the postings' tombstone
-    # sibling
-    recover_log(os.path.join(index_dir, "postings"))
-    for sub in ("term_stats", "corpus_stats"):
-        recover_swap(os.path.join(index_dir, sub))
-    # record EVERY batch this fold will absorb — appends and deletes —
-    # BEFORE folding (ADVICE r10 + review r11; marker-first ordering is
-    # crash-safe, see ext/artifact.record_folded_batches)
-    from pipeline311_spark.ext.artifact import (
-        compact_tombstones,
-        record_folded_batches,
-    )
-
-    record_folded_batches(index_dir, "term_stats")
-    # fold tombstones FIRST (review r11 wave three): the replay guard
-    # excludes a delete batch's own tombstone partition, so the
-    # evidence that a delete was folded must reach the -1 base BEFORE
-    # any stat fold can eat its negative partitions — a crash between
-    # stat folds and a LAST tombstone fold would otherwise strand the
-    # only evidence in the excluded partition and let the replay
-    # double-subtract.  Value-preserving in every crash window: a
-    # folded tombstone log anti-joins identically, and un-folded stat
-    # partitions are still live for the replay to rewrite.
-    compact_tombstones(
-        spark, tombstone_dir(os.path.join(index_dir, "postings")), "doc_id"
-    )
-    folded = load_bm25_index(spark, index_dir)
-    if not os.path.isdir(os.path.join(index_dir, "postings")):
-        return  # nothing ever appended — no log to fold
-    parts = {
-        "postings": folded.postings,
-        "term_stats": folded.term_stats,
-        "corpus_stats": folded.corpus_stats,
-    }
-    # the three per-artifact swaps are independent (disjoint dirs, and
-    # the docstring above proves any crash BETWEEN them folds to the
-    # same values) — run them concurrently (guide §2.6, round 11)
-    from pipeline311_spark.ext.artifact import run_jobs, write_batch_partition
-
-    run_jobs(
-        *[
-            lambda sub=sub, df=df: compact_swap(
-                os.path.join(index_dir, sub),
-                lambda staging, df=df: write_batch_partition(df, staging, -1),
-            )
-            for sub, df in parts.items()
-        ]
-    )
-    # the fold above read THROUGH the tombstones (load_bm25_index), so
-    # deleted postings are physically gone from the base; the tombstone
-    # ids themselves were folded-but-retained FIRST (see the fold-order
-    # note above)
+    """Fold the log — postings with deleted docs physically dropped, and
+    both sum-logs — to ``batch_id = -1`` bases
+    (:func:`~pipeline311_spark.ext.artifact.compact_log`).  Serving is
+    unchanged: each fold is value-preserving, so even a crash between
+    the per-artifact swaps (postings compacted, term_stats still
+    log-form) serves the same values."""
+    compact_log(spark, index_dir, _POSTINGS, _SUMS)
 
 
 def load_bm25_index(spark: SparkSession, index_dir: str) -> Bm25Index:
-    """Fold the append-only log back into the serving triple.  Explicit
-    schemas: an index that never saw a batch (or an empty corpus) has
-    no part files to infer from.
-
-    Delete-awareness (round 10): postings anti-join the
-    ``postings_deleted`` tombstone log (absent log = no-op); the
-    term-df sum now nets the delete batches' NEGATIVE deltas, dropping
-    terms at df <= 0 (a fresh build over the remaining corpus has no
-    zero rows); corpus sums net the negative one-row deltas for free."""
-    from pipeline311_spark.ext.artifact import (
-        apply_tombstones,
-        read_log,
-        tombstone_dir,
-    )
-
-    postings = read_log(
-        spark, os.path.join(index_dir, "postings"), _POSTINGS_LOG_SCHEMA
-    )
-    term_log = read_log(
-        spark, os.path.join(index_dir, "term_stats"), _TERM_LOG_SCHEMA
-    )
-    stats_log = read_log(
-        spark, os.path.join(index_dir, "corpus_stats"), _STATS_LOG_SCHEMA
-    )
+    """Fold the log back into the serving triple: postings minus
+    tombstoned docs, per-term df and corpus sums netting the delete
+    batches' negative deltas.  Explicit schemas: an index that never
+    saw a batch has no part files to infer from."""
     return Bm25Index(
-        postings=apply_tombstones(
-            spark,
-            postings.drop("batch_id"),
-            tombstone_dir(os.path.join(index_dir, "postings")),
-            "doc_id",
-        ),
-        term_stats=term_log.groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df"))
-        .filter(F.col("df") > 0),
-        corpus_stats=stats_log.agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("sum_dl").cast("long").alias("sum_dl"),
-        ),
+        postings=load_rows(spark, index_dir, _POSTINGS),
+        term_stats=load_sum(spark, index_dir, _TERM_STATS),
+        corpus_stats=load_sum(spark, index_dir, _CORPUS_STATS),
     )
 
 

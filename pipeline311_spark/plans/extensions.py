@@ -313,33 +313,35 @@ def q_minhash(spark, sf_dir):
 
 @register("dedup_minhash_from_store", _minhash_pairs_sql(), covers=("ext:dedup", "K2"))
 def q_minhash_from_store(spark, sf_dir):
-    """The stored-gram-table production path: materialize the (doc, g)
-    table to parquet once (the per-corpus-version artifact SCALE.md
-    prescribes), then run the whole LSH pipeline FROM the store —
-    signatures, banding, and verify all read the stored table, no
-    re-tokenization.  Same oracle as dedup_minhash_lsh: the storage
-    hop must be invisible in the result."""
+    """The stored-gram-table production path: write the corpus as batch
+    0 of the gram log (:func:`gram_log_append_batch`, the per-corpus-
+    version artifact SCALE.md prescribes), then run the whole LSH
+    pipeline FROM the folded log (:func:`load_gram_log`) — signatures,
+    banding, and verify all read the stored table, no re-tokenization.
+    Same oracle as dedup_minhash_lsh: the storage hop must be invisible
+    in the result."""
     import os
     import shutil
     import tempfile
     import uuid
 
-    from pipeline311_spark.ext.dedup import _gram_hash_table, minhash_pairs_from_grams
+    from pipeline311_spark.ext.dedup import (
+        gram_log_append_batch,
+        load_gram_log,
+        minhash_pairs_from_grams,
+    )
 
-    d = table(spark, sf_dir, "documents")
     out = os.path.join(
         tempfile.gettempdir(),
         f"p311_grams_{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:12]}",
     )
-    # try/finally + eager checkpoint (review r7): each invocation
-    # otherwise leaves a corpus-sized gram parquet dir in /tmp forever
-    # (oracle sweeps × 3 SFs and bench reps each minted a fresh uuid)
+    # try/finally + eager materialize: each invocation
+    # otherwise leaves a corpus-sized gram store in /tmp forever
     try:
-        frame = _gram_hash_table(d, "doc_id", "text", _MH_N, distinct=True)
-        frame.write.mode("overwrite").parquet(out)
-        stored = spark.read.schema(frame.schema).parquet(out)
+        gram_log_append_batch(table(spark, sf_dir, "documents"), 0, out, n=_MH_N)
         return minhash_pairs_from_grams(
-            stored, k=_MH_K, bands=_MH_BANDS, threshold=_MH_THRESHOLD, seed=_MH_SEED, persist=False
+            load_gram_log(spark, out),
+            k=_MH_K, bands=_MH_BANDS, threshold=_MH_THRESHOLD, seed=_MH_SEED, persist=False,
         ).transform(materialize)  # materialize before the cleanup
     finally:
         shutil.rmtree(out, ignore_errors=True)

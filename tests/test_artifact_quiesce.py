@@ -171,34 +171,47 @@ def test_folded_append_batch_replay_is_skipped(spark, tmp_path):
     ).count()
 
 
-def test_folded_ann_append_replay_is_skipped(spark, tmp_path):
-    """The same post-fold replay guard on the ANN codes log: a
-    replayed code batch would duplicate base rows and a duplicated
-    neighbor eats a top-k slot at serve."""
+@pytest.mark.parametrize("family", ["ann", "gram"])
+def test_folded_ann_append_replay_is_skipped(spark, tmp_path, family):
+    """The same post-fold replay guard on the ANN codes log and the
+    MinHash gram log: a replayed code batch would duplicate base rows
+    and a duplicated neighbor eats a top-k slot at serve; replayed gram
+    rows inflate set-size denominators downstream."""
     from pipeline311_spark.ext.ann_store import (
         ann_codes_append_batch,
         ann_codes_compact,
         ann_quantizer_build,
         load_ann_codes_log,
     )
+    from pipeline311_spark.ext.dedup import (
+        gram_log_append_batch,
+        gram_log_compact,
+        load_gram_log,
+    )
 
-    out = str(tmp_path / "ann")
-    e = spark.read.parquet(f"{SF}/embeddings.parquet").filter(
-        F.col("embedding").isNotNull()
-    )
-    v = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
-    ann_quantizer_build(spark, v, out, n_cells=4, pq_k=4)
-    ann_codes_append_batch(e.filter(F.col("vec_id") < 200), 0, out)
-    ann_codes_compact(spark, out)
-    n = load_ann_codes_log(spark, out).count()
+    out = str(tmp_path / family)
+    if family == "ann":
+        e = spark.read.parquet(f"{SF}/embeddings.parquet").filter(
+            F.col("embedding").isNotNull()
+        )
+        v = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+        ann_quantizer_build(spark, v, out, n_cells=4, pq_k=4)
+        rows, key = e, "vec_id"
+        append, compact, load = (
+            ann_codes_append_batch, ann_codes_compact, load_ann_codes_log
+        )
+    else:
+        rows, key = _docs(spark), "doc_id"
+        append, compact, load = gram_log_append_batch, gram_log_compact, load_gram_log
+    append(rows.filter(F.col(key) < 200), 0, out)
+    compact(spark, out)
+    n = load(spark, out).count()
     with pytest.warns(UserWarning, match="already folded"):
-        ann_codes_append_batch(e.filter(F.col("vec_id") < 200), 0, out)
-    assert load_ann_codes_log(spark, out).count() == n
-    # disjoint vec ids under the recycled batch id proceed
-    ann_codes_append_batch(
-        e.filter((F.col("vec_id") >= 200) & (F.col("vec_id") < 300)), 0, out
-    )
-    assert load_ann_codes_log(spark, out).count() > n
+        append(rows.filter(F.col(key) < 200), 0, out)
+    assert load(spark, out).count() == n
+    # disjoint ids under the recycled batch id proceed
+    append(rows.filter((F.col(key) >= 200) & (F.col(key) < 300)), 0, out)
+    assert load(spark, out).count() > n
 
 
 def test_folded_all_deleted_append_replay_still_skipped(spark, tmp_path):

@@ -1,8 +1,12 @@
-"""Static guard for the scripts outside the test suite (``tools/*.py``
-and ``__spark_entry__.py``): no test runs them, so a deleted module,
-function or query would otherwise only surface when someone next
-launches the script.  Parses the sources with :mod:`ast`; no
-script is executed and no Spark session starts."""
+"""Static guards, parsed with :mod:`ast`; no script is executed and no
+Spark session starts.
+
+* The scripts outside the test suite (``tools/*.py`` and
+  ``__spark_entry__.py``): no test runs them, so a deleted module,
+  function or query would otherwise only surface when someone next
+  launches the script.
+* The stored-index log lifecycle keeps one owner, ``ext/artifact.py``.
+"""
 
 from __future__ import annotations
 
@@ -101,3 +105,41 @@ def test_script_registry_keys_are_registered():
         if key not in REGISTRY
     )
     assert not stale, stale
+
+
+#: The log-lifecycle steps only ``ext/artifact.py`` may call: the
+#: families go through its append guard, delete, load and compactor, so
+#: the step order cannot fork again per family.
+LIFECYCLE_STEPS = {
+    "skip_if_replayed",
+    "record_folded_batches",
+    "compact_tombstones",
+    "compact_swap",
+    "assert_quiesced",
+}
+
+
+def _identifiers(tree):
+    """Every name a module binds, reads or imports, at any depth."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            yield node.id
+        elif isinstance(node, ast.Attribute):
+            yield node.attr
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield node.name
+        elif isinstance(node, ast.alias):
+            yield node.name.rsplit(".", 1)[-1]
+            if node.asname:
+                yield node.asname
+
+
+def test_log_lifecycle_has_one_owner():
+    owner = os.path.join(REPO, PACKAGE, "ext", "artifact.py")
+    forked = sorted(
+        f"{os.path.relpath(path, REPO)}: {name}"
+        for path in glob.glob(os.path.join(REPO, PACKAGE, "**", "*.py"), recursive=True)
+        if os.path.abspath(path) != owner
+        for name in set(_identifiers(_tree(path))) & LIFECYCLE_STEPS
+    )
+    assert not forked, forked
