@@ -77,6 +77,7 @@ from pipeline311_spark.ext.artifact import (
 )
 from pipeline311_spark.ext.hashing import meta_df
 from pipeline311_spark.ext.similarity import as_double, ensure_parallelism, sqdist
+from pipeline311_spark.sinks.writers import write_parquet
 
 ANN_M = 4          # PQ sub-vector count
 ANN_SUBDIM = 16    # dims per sub-vector (4 x 16 = the fixture's 64)
@@ -343,12 +344,18 @@ def ann_quantizer_build(
     # two independent metadata-scale writes — overlap their per-action
     # overhead (guide §2.6, round 11)
     run_jobs(
-        lambda: meta_df(
-            spark, [(int(i), vec) for i, vec in sorted(cents.items())], _centroid_schema("cell")
-        ).write.mode("overwrite").parquet(os.path.join(out, "centroids")),
-        lambda: meta_df(
-            spark, [(int(i), vec) for i, vec in sorted(cbook.items())], _centroid_schema("cid")
-        ).write.mode("overwrite").parquet(os.path.join(out, "codebook")),
+        lambda: write_parquet(
+            meta_df(
+                spark, [(int(i), vec) for i, vec in sorted(cents.items())], _centroid_schema("cell")
+            ),
+            os.path.join(out, "centroids"),
+        ),
+        lambda: write_parquet(
+            meta_df(
+                spark, [(int(i), vec) for i, vec in sorted(cbook.items())], _centroid_schema("cid")
+            ),
+            os.path.join(out, "codebook"),
+        ),
     )
     return cents, cbook
 
@@ -766,9 +773,7 @@ def ann_index_build_trained(
     centroids_df = meta_df(
         spark, [(int(i), vec) for i, vec in sorted(cents.items())], _centroid_schema("cell")
     )
-    centroids_df.write.mode("overwrite").parquet(
-        os.path.join(out, "centroids")
-    )
+    write_parquet(centroids_df, os.path.join(out, "centroids"))
     resid = None
     try:
         if cents:
@@ -784,9 +789,12 @@ def ann_index_build_trained(
             )
         else:
             cbook = {}
-        meta_df(
-            spark, [(int(i), vec) for i, vec in sorted(cbook.items())], _centroid_schema("cid")
-        ).write.mode("overwrite").parquet(os.path.join(out, "codebook"))
+        write_parquet(
+            meta_df(
+                spark, [(int(i), vec) for i, vec in sorted(cbook.items())], _centroid_schema("cid")
+            ),
+            os.path.join(out, "codebook"),
+        )
         if resid is not None and cbook:
             # encode from the SAME cached residuals: identical
             # expressions to pq_codes over a fresh assign (pq_code_col

@@ -102,6 +102,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pipeline311_spark.sinks.writers import write_parquet
+
 
 class RowLog(NamedTuple):
     """A family's tombstoned row log: ``root/<sub>``, read with
@@ -188,10 +190,9 @@ def write_batch_partition(
             "write_batch_partition: drop the batch_id column — the "
             "directory name provides it at read time"
         )
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(os.path.join(path, f"batch_id={int(batch_id)}"))
+    write_parquet(
+        df, os.path.join(path, f"batch_id={int(batch_id)}"), partition_by=list(partition_by)
+    )
 
 
 def intent_dir(root: str) -> str:

@@ -83,23 +83,32 @@ _HEX = "0123456789abcdef"
 
 
 def meta_df(spark, rows, schema):
-    """Metadata-scale local DataFrame on ONE slice (round-11 guide §1
-    measurement): ``createDataFrame(list)`` slices driver rows into
-    ``defaultParallelism`` Python partitions, and every downstream
-    single-task action (a ``coalesce(1)`` artifact write, a broadcast
-    build) then evaluates all 32 partitions SEQUENTIALLY through the
-    Python-worker protocol at ~140 ms each — ~4.5 s per action on this
-    box for an 8-row centroid frame, measured.  One slice makes it one
-    worker round-trip (~0.3 s).  Row→InternalRow conversion is byte-
-    identical to the default path (same serializer, same schema
-    application) — ONLY the slice count changes.  For metadata-scale
-    frames (centroids, codebooks, query sets, offsets) a single slice
-    is also the right production shape: they are broadcast or
-    coalesce(1)-written anyway."""
-    rows = list(rows)
-    if not rows:
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+    """Metadata-scale local DataFrame (centroids, codebooks, query sets,
+    offsets) from driver ``rows`` — tuples in ``schema`` order;
+    ``schema`` is a DDL string or a ``StructType``.
+
+    The rows travel to the JVM as an Arrow table, so no Python worker
+    runs, neither to build the frame nor in any action on it.  A
+    parallelized row list is instead decoded by a Python worker in
+    every action that reads it: the first such action starts the worker
+    daemon, and each partition costs a worker round-trip (the default
+    ``defaultParallelism`` slices of an 8-row centroid frame cost
+    ~4.5 s per action on a 32-CPU host).  A small Arrow table becomes
+    a JVM-side local relation; ``coalesce(1)`` keeps the frame on one
+    partition, so a write of it is one task and one file."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.table(
+        [pa.array(col, type=f.type) for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def ensure_parallelism(df, min_parts: int | None = None):

@@ -86,10 +86,16 @@ def parent_id(col: Column | str) -> Column:
     cast, so other spellings of zero ('00', ' 0') survive as 0 — only
     the exact string '0' (or int 0) nulls out.  Python ``int('12.0')``
     raises, so non-integral strings null out — ``try_cast`` to long
-    matches (Spark try_cast('12.0' as long) is NULL).
+    matches (Spark try_cast('12.0' as long) is NULL).  Spark's cast
+    also trims ASCII control characters around the digits, which
+    ``int()`` rejects ('0\\x1f' raises), so a value holding one nulls
+    out too.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.cast("string") == "0", F.lit(None)).otherwise(c.try_cast("long"))
+    s = c.cast("string")
+    return F.when(
+        (s == "0") | s.rlike(r"[\x00-\x08\x0e-\x1f\x7f]"), F.lit(None)
+    ).otherwise(c.try_cast("long"))
 
 
 def private_flag(col: Column | str) -> Column:

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pipeline311_spark.sinks.writers import parquet_writer
+
 
 def write_bucketed(
     df: DataFrame,
@@ -37,7 +39,7 @@ def write_bucketed(
     """Persist ``df`` as a bucketed parquet table (optionally external
     at ``path``), hash-bucketed on ``bucket_cols``, sorted within each
     bucket by ``sort_cols`` (defaults to the bucket columns)."""
-    w = df.write.mode(mode).format("parquet").bucketBy(n_buckets, *bucket_cols)
+    w = parquet_writer(df).mode(mode).bucketBy(n_buckets, *bucket_cols)
     w = w.sortBy(*(sort_cols or bucket_cols))
     if path is not None:
         w = w.option("path", path)

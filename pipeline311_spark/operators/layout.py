@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pipeline311_spark.sinks.writers import write_parquet
+
 
 def zorder_key(x: Column, y: Column, bits: int = 16) -> Column:
     """Morton code: interleave the low ``bits`` of two non-negative
@@ -70,7 +72,7 @@ def write_zordered(
         if num_files
         else clustered.repartitionByRange("__z")
     )
-    part.sortWithinPartitions("__z").drop("__z").write.mode("overwrite").parquet(path)
+    write_parquet(part.sortWithinPartitions("__z").drop("__z"), path)
 
 
 def compact_parquet_dir(
@@ -120,7 +122,7 @@ def compact_parquet_dir(
     if sort_within_by:
         df = df.sortWithinPartitions(*sort_within_by)
     staging = path.rstrip("/") + ".compact.tmp"
-    df.write.mode("overwrite").parquet(staging)
+    write_parquet(df, staging)
     # Swap by two renames — the compacted data is written ONCE
     # (posix/HDFS rename; an object-store deployment would swap the
     # table-format manifest instead).  The swap is NOT atomic: a crash

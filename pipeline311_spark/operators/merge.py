@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pipeline311_spark.sinks.writers import parquet_writer
+
 
 def latest_per_key(df: DataFrame, key: str, version_col: str, tiebreak: str | None = None) -> DataFrame:
     """O5: keep the newest row per key.  ``tiebreak`` orders exact
@@ -222,16 +224,23 @@ def merge_incremental_partitioned(
     )
     merged = merged.localCheckpoint(eager=True)
     # written partitions by RENDERING too, same identity as `touched`
-    # (''/sentinel fold into None — all write __HIVE_DEFAULT_PARTITION__)
-    written = {
-        _canon_render(r[0])
-        for r in merged.select(F.col(partition_col).cast("string")).distinct().collect()
-    }
+    # (''/sentinel fold into None — all write __HIVE_DEFAULT_PARTITION__).
+    # With stable partitions no touched partition can come out empty:
+    # every one holds an update row, and the MERGE keeps one row per
+    # key in the key's only partition — so skip the collect.
+    if assume_stable_partitions:
+        written = touched
+    else:
+        written = {
+            _canon_render(r[0])
+            for r in merged.select(F.col(partition_col).cast("string")).distinct().collect()
+        }
     (
-        merged.write.mode("overwrite")
+        parquet_writer(merged)
+        .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partition_col)
-        .parquet(target_path)
+        .save(target_path)
     )
     # a touched partition with NO surviving rows was not rewritten by
     # the dynamic overwrite — drop its directory so the superseded

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pipeline311_spark.sinks.writers import write_parquet
+
 
 def _warehouse_exists(spark: SparkSession, target_ref: str) -> bool:
     """Existence probe through the Hadoop FileSystem API so the answer
@@ -62,10 +64,11 @@ def upsert_into(
         # batch that has rows.
         if partition_col is not None and updates.isEmpty():
             return
-        writer = latest_per_key(updates, key, version_col).write.mode("overwrite")
-        if partition_col is not None:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(target_ref)
+        write_parquet(
+            latest_per_key(updates, key, version_col),
+            target_ref,
+            partition_by=[partition_col] if partition_col is not None else None,
+        )
         return
     if partition_col is not None:
         merge_incremental_partitioned(
@@ -82,5 +85,5 @@ def upsert_into(
     # release the checkpoint once the write (its only consumer) is done
     # so per-batch merges don't accumulate pinned blocks
     ck = merged.localCheckpoint(eager=True)
-    ck.write.mode("overwrite").parquet(target_ref)
+    write_parquet(ck, target_ref)
     release_local_checkpoint(ck)

@@ -1,4 +1,5 @@
 from pipeline311_spark.sinks.writers import (  # noqa: F401
+    parquet_writer,
     write_parquet,
     write_csv,
     overwrite_reload,

@@ -7,6 +7,28 @@ sync-db2-ago.py:249-380) generalizes to ``batched_foreach_writer``:
 batching + retry/backoff live per-partition in the executor, the
 DataFrame stays distributed, and batch size/retry policy are parameters
 (reference defaults preserved).
+
+**One parquet writer.**  Every table the package persists — the
+bronze MERGE, the first-batch and unpartitioned rewrites, the Z-order
+and compaction rewrites, bucketed tables, and every row, sum and
+tombstone log of the stored indexes — is written through
+:func:`parquet_writer`; no other module outside ``plans/`` reads
+``DataFrame.write`` (``tests/test_tools_imports.py`` enforces it).
+
+* **Codec.**  :data:`PARQUET_CODEC` (zstd) is a module constant, not a
+  parameter or a session conf: a conf would only reach the sessions
+  that set it, and the benchmark and ``__spark_entry__.py`` callers
+  bring their own.  Against Spark's default snappy, zstd cuts the
+  persisted bytes by a fifth to a quarter (SCALE.md, "Storage codec"),
+  and Spark, DuckDB and pyarrow all read it.
+* **Overwrite contract.**  The writer sets no save mode and no
+  ``partitionOverwriteMode``; each call site keeps its own.  A
+  partitioned ``overwrite`` follows the session's
+  ``partitionOverwriteMode`` unless the call site sets it.  The
+  partitioned MERGE sets ``dynamic`` itself.  A stored-index batch
+  write (``ext/artifact.write_batch_partition``) overwrites its own
+  ``batch_id=`` directory and, in the default static mode, replaces
+  every sub-directory a crashed attempt left there.
 """
 
 from __future__ import annotations
@@ -14,14 +36,24 @@ from __future__ import annotations
 import time
 from typing import Callable, Iterable
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame, DataFrameWriter, Row
+
+#: Compression codec of every parquet file the package persists.
+PARQUET_CODEC = "zstd"
+
+
+def parquet_writer(df: DataFrame) -> DataFrameWriter:
+    """The package's one parquet writer for ``df``: format and codec
+    set, save mode and partitioning left to the caller (see the module
+    docstring's overwrite contract)."""
+    return df.write.format("parquet").option("compression", PARQUET_CODEC)
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    w = df.write.mode(mode)
+    w = parquet_writer(df).mode(mode)
     if partition_by:
         w = w.partitionBy(*partition_by)
-    w.parquet(path)
+    w.save(path)
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -6,6 +6,7 @@ Spark session starts.
   function or query would otherwise only surface when someone next
   launches the script.
 * The stored-index log lifecycle keeps one owner, ``ext/artifact.py``.
+* Persisted tables have one parquet writer, ``sinks/writers.py``.
 """
 
 from __future__ import annotations
@@ -143,3 +144,34 @@ def test_log_lifecycle_has_one_owner():
         for name in set(_identifiers(_tree(path))) & LIFECYCLE_STEPS
     )
     assert not forked, forked
+
+
+def _dataframe_write_reads(tree):
+    """Line numbers where a module reads a ``.write`` attribute without
+    calling it: ``df.write`` is a property, while a file's or a
+    stream's ``write`` is a method call (``f.write(text)``)."""
+    called = {
+        id(node.func)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+    }
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr == "write" and id(node) not in called:
+            yield node.lineno
+
+
+def test_persisted_tables_have_one_writer():
+    """Every persisted-table write goes through ``sinks/writers.py``
+    (one codec, one overwrite contract); the query plans under
+    ``plans/`` write their own temporary outputs."""
+    root = os.path.join(REPO, PACKAGE)
+    exempt_file = os.path.join(root, "sinks", "writers.py")
+    exempt_dir = os.path.join(root, "plans") + os.sep
+    stray = sorted(
+        f"{os.path.relpath(path, REPO)}:{line}"
+        for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True)
+        if os.path.abspath(path) != exempt_file
+        and not os.path.abspath(path).startswith(exempt_dir)
+        for line in _dataframe_write_reads(_tree(path))
+    )
+    assert not stray, stray

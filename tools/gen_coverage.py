@@ -25,7 +25,7 @@ STATIC = {
     "S9": ("sources/readers.py read_csv (explicit schema)", "oracle gate (s9_csv_roundtrip write+read-back); tests/test_empty_increment.py"),
     "S10": ("operators/backfill.py partition_window_filter", "oracle gate (t2_backfill_window); tests/test_pipeline_e2e.py"),
     "K1": ("sinks/writers.py write_csv", "oracle gate (s9_csv_roundtrip: write_csv is the writer under test)"),
-    "K2": ("df.write.parquet('s3a://...') — same line, S3A path (no S3 in container)", "oracle gate (export_hash_shards + ~20 store queries); no S3 endpoint in container"),
+    "K2": ("sinks/writers.py parquet_writer / write_parquet (the one zstd parquet writer) — same line with an s3a:// path (no S3 in container)", "oracle gate (export_hash_shards + ~20 store queries); tests/test_parquet_codec.py (zstd + DuckDB read-back); tests/test_tools_imports.py (one-writer guard); no S3 endpoint in container"),
     "K3": ("operators/merge.py upsert (window-dedup MERGE); operators/merge_backends.py upsert_into -> merge_incremental_partitioned (partition-pruned warehouse MERGE)", "tests/test_operators.py, tests/test_merge_backends.py, tests/test_merge_partitioned.py"),
     "K4": ("operators/merge.py merge_with_surrogate; pipelines/philly311.py viewer_merge (coalesced_max_watermark + watermark_filter + upsert)", "tests/test_operators.py, tests/test_pipeline_e2e.py"),
     "K5": ("sinks/writers.py batched_foreach_writer (50-row batches, retry ladder)", "tests/test_streaming_sinks.py + oracle gate (k5_batched_writer_roundtrip)"),
