@@ -16,6 +16,19 @@ markers and the fold marker.  Row ids are disjoint across batches and
 never reused: a re-added document carries a NEW id, or its old
 tombstone masks it.
 
+A log type may declare a clustering key (``RowLog.cluster_by``; only
+the BM25 postings set it, to ``term``).  Every row-log write — an
+appended batch and the compacted base alike (:func:`_write_rows`) —
+then hash-repartitions its rows on that key and sorts each task by
+``(key, id)``.  Each file of a batch dir holds its own set of keys,
+in order, so the term dictionary and footer are written once instead
+of once per hash partition, and row-group min/max stats can skip by
+term.  The write has to do it: the rows are usually a persisted
+frame, and Spark runs a cached plan without AQE, so its shuffle
+partitions reach the writer as they are; only a write-time exchange
+coalesces them (AQE merges small hash buckets, so a small batch is
+one file).
+
 * **Append** (:func:`admit_append`, then :func:`append_rows`).  The
   guard runs, in order: crash-swap recovery of every log dir
   (:func:`recover_family` — appending into a compaction's
@@ -108,12 +121,15 @@ from pipeline311_spark.sinks.writers import write_parquet
 class RowLog(NamedTuple):
     """A family's tombstoned row log: ``root/<sub>``, read with
     ``schema`` (``batch_id`` included), rows keyed by ``id_field``,
-    optionally sub-partitioned under each batch dir."""
+    optionally sub-partitioned under each batch dir, and optionally
+    clustered: every row-log write lays its rows out sorted by
+    ``(*cluster_by, id_field)`` (:func:`_write_rows`)."""
 
     sub: str
     schema: T.StructType
     id_field: str
     partition_by: tuple[str, ...] = ()
+    cluster_by: tuple[str, ...] = ()
 
 
 class SumLog(NamedTuple):
@@ -151,8 +167,16 @@ def run_jobs(*thunks: Callable[[], None]) -> None:
         return
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
+    # Spark local properties (job group, description) and job tags live
+    # per thread: wrapping here, in the caller's thread, carries them
+    # into the pool threads.  Each wrap clones the properties, and each
+    # thunk needs its own clone: SQL execution writes its execution ids
+    # into them, so a shared one would cross the concurrent writes' ids
+    spark = SparkSession.active()
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
         errs = [f.exception() for f in futures]
         for e in errs:
             if e is not None:
@@ -515,6 +539,19 @@ def admit_append(
     return True
 
 
+def _write_rows(rows: DataFrame, path: str, batch_id: int, log: RowLog) -> None:
+    """The one row-log write (an appended batch or the ``-1`` base):
+    a clustered log is hash-repartitioned on ``cluster_by`` and sorted
+    within each task by ``(*partition_by, *cluster_by, id_field)``
+    (module note; the partition columns lead so the writer's own
+    per-partition sort is already satisfied)."""
+    if log.cluster_by:
+        rows = rows.repartition(*log.cluster_by).sortWithinPartitions(
+            *log.partition_by, *log.cluster_by, log.id_field
+        )
+    write_batch_partition(rows, path, batch_id, log.partition_by)
+
+
 def _sum_writes(
     root: str, sums: Sequence[tuple[SumLog, DataFrame]], batch_id: int
 ) -> list[Callable[[], None]]:
@@ -543,7 +580,7 @@ def append_rows(
         if replace:
             reset_log(root, path)
         run_jobs(
-            lambda: write_batch_partition(rows, path, batch_id, log.partition_by),
+            lambda: _write_rows(rows, path, batch_id, log),
             *_sum_writes(root, sums, batch_id),
         )
 
@@ -591,14 +628,14 @@ def compact_log(
         return  # nothing ever appended
     record_folded_batches(root, [log.sub, *(s.sub for s in sums)])
     compact_tombstones(spark, tombstone_dir(path), log.id_field)
-    folds = [(path, load_rows(spark, root, log), log.partition_by)] + [
-        (os.path.join(root, s.sub), load_sum(spark, root, s), ()) for s in sums
-    ]
+    rows = load_rows(spark, root, log)
+    folds = [(os.path.join(root, s.sub), load_sum(spark, root, s)) for s in sums]
     run_jobs(
+        lambda: compact_swap(path, lambda staging: _write_rows(rows, staging, -1, log)),
         *[
-            lambda p=p, df=df, pb=pb: compact_swap(
-                p, lambda staging: write_batch_partition(df, staging, -1, pb)
+            lambda p=p, df=df: compact_swap(
+                p, lambda staging: write_batch_partition(df, staging, -1)
             )
-            for p, df, pb in folds
-        ]
+            for p, df in folds
+        ],
     )

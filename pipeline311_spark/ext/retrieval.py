@@ -261,9 +261,10 @@ def bm25_topk(
 #
 # The lifecycle (append guard, tombstone delete, load, compaction) is
 # ext/artifact.py's; this module knows only the BM25 artifacts: postings
-# are the tombstoned row log, and the per-batch term-df rows and one-row
-# corpus stats are sum-logs folded by addition (deletes ride them as
-# NEGATIVE deltas).
+# are the tombstoned row log, clustered by term (each file holds its
+# own terms, sorted by (term, doc_id): the inverted-file layout), and
+# the per-batch term-df rows and one-row corpus stats are sum-logs
+# folded by addition (deletes ride them as NEGATIVE deltas).
 
 _POSTINGS = RowLog(
     "postings",
@@ -277,6 +278,7 @@ _POSTINGS = RowLog(
         ]
     ),
     "doc_id",
+    cluster_by=("term",),
 )
 
 

@@ -21,6 +21,8 @@ SURVEY §7.5:
 
 from __future__ import annotations
 
+import functools
+import unicodedata
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -63,13 +65,45 @@ def bounded_truncate(col: Column | str, n: int) -> Column:
     return F.substring(c, 1, n)
 
 
+@functools.lru_cache(maxsize=1)
+def _int_translation() -> tuple[str, str]:
+    """The (from, to) strings of one ``translate`` that does what
+    Python's ``int()`` does to a string before parsing it: each Unicode
+    decimal digit (category Nd, e.g. '٣') becomes its ASCII digit, and
+    each non-ASCII whitespace character a space.  Built from Python's
+    own Unicode tables, not the JVM's (Java 17 knows Unicode 13, so
+    its ``\\p{Nd}`` misses digits Python's ``re`` and ``int()``
+    accept).  Every Nd digit lies below U+20000."""
+    src, dst = [], []
+    for cp in range(0x80, 0x20000):
+        ch = chr(cp)
+        digit = unicodedata.decimal(ch, -1)
+        if digit >= 0 or ch.isspace():
+            src.append(ch)
+            dst.append(str(digit) if digit >= 0 else " ")
+    return "".join(src), "".join(dst)
+
+
+def _ascii_digits(c: Column) -> Column:
+    """``c`` as a string through :func:`_int_translation`; an ASCII
+    value (as many UTF-8 bytes as characters) passes untranslated, so
+    ASCII rows skip the per-character dictionary lookup."""
+    s = c.cast("string")
+    return F.when(F.octet_length(s) == F.length(s), s).otherwise(
+        F.translate(s, *_int_translation())
+    )
+
+
 def district_number(col: Column | str) -> Column:
     """P5: extract first digit-run as int; no digits/NULL -> NULL;
     value > 100 -> NULL (common.py:147-169).  '22nd District' -> 22,
-    '911' -> NULL, 0 -> 0 (falsy guard skips the >100 check)."""
+    '911' -> NULL, 0 -> 0 (falsy guard skips the >100 check).  The
+    reference's ``re`` ``\\d`` is any Unicode decimal digit: the value is
+    translated to ASCII digits first, so one ASCII class finds the same
+    run ('٣7' -> 37).  A run too long for a long is > 100 -> NULL."""
     c = F.col(col) if isinstance(col, str) else col
-    first = F.regexp_extract(c, r"(\d+)", 1)
-    num = F.when(first != "", first.cast("long"))
+    first = F.regexp_extract(_ascii_digits(c), r"([0-9]+)", 1)
+    num = F.when(first != "", first.try_cast("long"))
     return F.when(num > 100, F.lit(None)).otherwise(num).cast("int")
 
 
@@ -89,13 +123,16 @@ def parent_id(col: Column | str) -> Column:
     matches (Spark try_cast('12.0' as long) is NULL).  Spark's cast
     also trims ASCII control characters around the digits, which
     ``int()`` rejects ('0\\x1f' raises), so a value holding one nulls
-    out too.
+    out too.  ``int()`` also reads Unicode decimal digits and strips
+    Unicode whitespace ('\\u3000٣' -> 3), which ``try_cast`` rejects, so
+    a value the plain cast rejects is cast again after the translation
+    to ASCII, which only a value holding a non-ASCII character pays for.
     """
     c = F.col(col) if isinstance(col, str) else col
     s = c.cast("string")
     return F.when(
         (s == "0") | s.rlike(r"[\x00-\x08\x0e-\x1f\x7f]"), F.lit(None)
-    ).otherwise(c.try_cast("long"))
+    ).otherwise(F.coalesce(c.try_cast("long"), _ascii_digits(s).try_cast("long")))
 
 
 def private_flag(col: Column | str) -> Column:

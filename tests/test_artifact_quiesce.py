@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pipeline311_spark.ext.artifact import (
     assert_quiesced,
     intent_dir,
+    run_jobs,
     write_intent,
 )
 from pipeline311_spark.ext.retrieval import (
@@ -333,3 +334,46 @@ def test_delete_replay_skips_when_compaction_crashes_after_tombstone_fold(
     assert stats() == expected
     bm25_index_compact(spark, out)  # a later compaction completes
     assert stats() == expected
+
+
+def test_run_jobs_keeps_the_callers_job_group(spark):
+    """The concurrent writes run from pool threads, which start with no
+    Spark local properties of their own: every job a two-thunk
+    ``run_jobs`` starts must still be billed to the caller's job
+    group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup("run_jobs_caller", "two concurrent counts")
+    try:
+        run_jobs(lambda: spark.range(10).count(), lambda: spark.range(20).count())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(tracker.getJobIdsForGroup("run_jobs_caller")) >= 2
+    assert not set(tracker.getJobIdsForGroup()) - ungrouped
+
+
+def test_run_jobs_gives_each_thunk_its_own_local_properties(spark):
+    """SQL execution writes its execution ids into the running thread's
+    local properties, so concurrent thunks sharing one properties
+    object would bill their jobs to each other's executions: a
+    property one thunk sets stays invisible to the other thunk and to
+    the caller."""
+    import threading
+
+    sc = spark.sparkContext
+    both_set = threading.Barrier(2, timeout=60)
+    seen = {}
+
+    def thunk(name):
+        def run():
+            sc.setLocalProperty("run_jobs.test.owner", name)
+            both_set.wait()
+            seen[name] = sc.getLocalProperty("run_jobs.test.owner")
+
+        return run
+
+    run_jobs(thunk("a"), thunk("b"))
+    assert seen == {"a": "a", "b": "b"}
+    assert sc.getLocalProperty("run_jobs.test.owner") is None

@@ -93,6 +93,28 @@ def test_scalar_kernels_match_reference_python(spark, values):
         assert row["c"] == py_clean(v)
 
 
+def test_int_kernels_match_python_beside_every_code_point(spark):
+    """``int()`` and ``re``'s ``\\d`` read every Unicode decimal digit
+    and ``int()`` strips Unicode whitespace: '7' before, after and
+    without each of U+0000..U+3000, plus digits beyond the JVM's Unicode
+    tables (Tangsa U+16AC3, Unicode 14), the SMP's mathematical and
+    segmented digits, and a district run too long for a long."""
+    cps = [*range(0x3001), 0x16AC3, 0x1D7D5, 0x1FBF7]
+    values = [v for cp in cps for v in (chr(cp) + "7", "7" + chr(cp), chr(cp))]
+    values += ["9" * 25 + "x", "　٣ ", "٣7x", "+٣", "٠"]
+    got = (
+        spark.createDataFrame([(v,) for v in values], "v string")
+        .select("v", district_number("v").alias("d"), parent_id("v").alias("p"))
+        .collect()
+    )
+    bad = [
+        (r["v"], r["d"], r["p"])
+        for r in got
+        if r["d"] != py_district(r["v"]) or r["p"] != py_parent(r["v"])
+    ]
+    assert len(got) == len(values) and not bad, bad[:10]
+
+
 keys = st.integers(min_value=0, max_value=8)
 versions = st.integers(min_value=0, max_value=5)
 tables = st.lists(st.tuples(keys, versions), min_size=0, max_size=15)

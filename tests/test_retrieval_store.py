@@ -442,3 +442,67 @@ def test_hybrid_rrf_serve_plan_reads_store_not_corpus_text(spark, tmp_path):
     # the dense serve reads M small ints per vector, never the floats
     assert "embedding#" not in plan
     assert fused.count() > 0
+
+
+def _assert_postings_term_clustered(idx):
+    """Each ``batch_id=`` dir's files are sorted by (term, doc_id) and
+    hold disjoint term sets; each file's row-group ``term`` ranges
+    ascend (meeting at most at a boundary term), and at least one file
+    spans several row groups."""
+    import pyarrow.parquet as pq
+
+    batch_dirs = glob.glob(os.path.join(idx, "postings", "batch_id=*"))
+    assert batch_dirs
+    split_files = 0
+    for d in batch_dirs:
+        seen = set()
+        for f in glob.glob(os.path.join(d, "*.parquet")):
+            t = pq.read_table(f, columns=["term", "doc_id"])
+            keys = list(zip(t["term"].to_pylist(), t["doc_id"].to_pylist()))
+            assert keys == sorted(keys), f
+            terms = {k[0] for k in keys}
+            assert not terms & seen, f
+            seen |= terms
+            meta = pq.ParquetFile(f).metadata
+            ranges = [
+                (meta.row_group(g).column(0).statistics.min,
+                 meta.row_group(g).column(0).statistics.max)
+                for g in range(meta.num_row_groups)
+            ]
+            assert all(lo <= hi for lo, hi in ranges), ranges
+            assert all(a[1] <= b[0] for a, b in zip(ranges, ranges[1:])), ranges
+            split_files += meta.num_row_groups > 1
+    assert split_files, "the block size left every file one row group"
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_bm25_postings_are_term_clustered_on_append_and_compact(spark, tmp_path, aqe):
+    """Every postings write — each appended batch and the compacted
+    base — is term-clustered.  With AQE on a batch this small is one
+    file; with AQE off it stays one file per hash bucket, so the
+    one-term-one-file check has several files to compare.  A small
+    ``parquet.block.size`` makes a batch span several row groups, whose
+    ascending term ranges are what a pushed term filter prunes on."""
+    import random
+
+    from pipeline311_spark.ext.retrieval import bm25_index_compact, bm25_index_delete_batch
+
+    rng = random.Random(7)
+    words = [f"w{i:03d}" for i in range(300)]
+    docs = _docs(spark, [(i, " ".join(rng.choices(words, k=20))) for i in range(400)])
+    idx = str(tmp_path / "idx")
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    hconf.setInt("parquet.block.size", 4096)
+    try:
+        bm25_index_append_batch(docs.filter("doc_id < 200"), 0, idx)
+        bm25_index_append_batch(docs.filter("doc_id >= 200"), 1, idx)
+        _assert_postings_term_clustered(idx)
+        bm25_index_delete_batch(docs.filter("doc_id < 20"), 0, idx)
+        bm25_index_compact(spark, idx)
+        assert os.listdir(os.path.join(idx, "postings")) == ["batch_id=-1"]
+        _assert_postings_term_clustered(idx)
+    finally:
+        hconf.unset("parquet.block.size")
+        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)

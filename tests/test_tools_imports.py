@@ -110,8 +110,10 @@ def test_script_registry_keys_are_registered():
 
 #: The log-lifecycle steps only ``ext/artifact.py`` may call: the
 #: families go through its append guard, delete, load and compactor, so
-#: the step order cannot fork again per family.
+#: the step order cannot fork again per family, and no family writes a
+#: batch dir itself and skips its log's layout (``RowLog.cluster_by``).
 LIFECYCLE_STEPS = {
+    "write_batch_partition",
     "skip_if_replayed",
     "record_folded_batches",
     "compact_tombstones",

@@ -76,9 +76,9 @@ STATIC = {
     "P2": ("functions/geo.py point_ewkt_from_xy", "tests/test_cleaning.py"),
     "P3": ("functions/cleaning.py clean_description", "tests/test_cleaning.py"),
     "P4": ("functions/cleaning.py bounded_truncate", "tests/test_cleaning.py"),
-    "P5": ("functions/cleaning.py district_number", "tests/test_cleaning.py"),
+    "P5": ("functions/cleaning.py district_number (Unicode digits translated to ASCII first, as re's \\d reads them)", "tests/test_cleaning.py, tests/test_properties.py (sweep beside every code point to U+3000)"),
     "P6": ("functions/cleaning.py lower_trim", "tests/test_cleaning.py"),
-    "P7": ("functions/cleaning.py parent_id", "tests/test_cleaning.py"),
+    "P7": ("functions/cleaning.py parent_id (int(): Unicode digits and whitespace accepted)", "tests/test_cleaning.py, tests/test_properties.py (sweep beside every code point to U+3000)"),
     "P8": ("functions/cleaning.py private_flag", "tests/test_cleaning.py"),
     "P9": ("functions/timeparse.py lenient_timestamp", "tests/test_cleaning.py"),
     "P10": ("functions/cleaning.py status_notes_col", "tests/test_cleaning.py"),
@@ -92,7 +92,7 @@ STATIC = {
     "ext:graph": ("ext/graph.py (iterative min-label connected components; dup clusters)", "tests/test_properties.py (vs union-find)"),
     "ext:versioning": ("plans/curation4.py (snapshot diff; dirty-shard incremental export report)", "tests/test_curation4.py"),
     "ext:quantize": ("ext/quantize.py int8 + plans/curation4.py PQ encode/ADC/recall", "tests/test_curation4.py (python replays)"),
-    "ext:retrieval": ("stored BM25 index: postings/df/stats artifacts, incremental merge, vocabulary-pruned serve (ext/retrieval.py, plans/retrieval2.py); dense top-k; N-ranker RRF fusion (rrf_fuse); MMR rerank", "tests/test_retrieval_store.py, tests/test_curation3.py, tests/test_curation4.py"),
+    "ext:retrieval": ("stored BM25 index: term-clustered postings (sorted by term, doc_id)/df/stats artifacts, incremental merge, vocabulary-pruned serve (ext/retrieval.py, plans/retrieval2.py); dense top-k; N-ranker RRF fusion (rrf_fuse); MMR rerank", "tests/test_retrieval_store.py (incl. the clustered layout), tests/test_curation3.py, tests/test_curation4.py"),
     "ext:export": ("deterministic hash-shard export + dirty-shard incremental report (plans/curation3.py, plans/curation4.py)", "tests/test_curation3.py"),
     "ext:sampling": ("ext/sampling.py (temperature/importance weighting, quota fill, per-key caps, two-phase running sums)", "tests/test_properties.py"),
     "ext:ann-log": ("ANN codes as a batch_id delta log: foreachBatch append, compaction, pruned log serve (ext/ann_store.py)", "tests/test_ann_store.py"),
