@@ -2,8 +2,8 @@
 (IVF coarse cells + product-quantization codes) — the vector-side twin
 of the BM25 artifact stack (ext/retrieval.py) and the answer to
 VERDICT r8 item 1: until round 9 the IVF layout and the PQ codes were
-rebuilt inside every query (sim_ivf_partitioned_probe trains and
-serves in one plan; sim_pq_encode re-derives the codebook per run).
+rebuilt inside every query (sim_pq_encode re-derives the codebook
+per run).
 A serving deployment stores them once per corpus version.
 
 Index contract (three parquet artifacts under one directory):
@@ -865,10 +865,9 @@ def pq_train_codebook(
     while DuckDB rounds the exact binary expansion, and the two can
     disagree in the 15th place.  With ``exact_decimals=d`` set, values
     are rounded to ``d`` decimals FIRST and summed as decimal(28,d) —
-    the q_kmeans_update-proven fold (plans/analytics13.py) where both
-    engines sum identical exact decimals and the only double op is one
-    division of bit-identical operands — so a one-step training query
-    can carry a bit-exact DuckDB twin (sim_ann_cells_train_step)."""
+    both engines sum identical exact decimals and the only double op is
+    one division of bit-identical operands — so a one-step training
+    query can carry a bit-exact DuckDB twin (sim_ann_cells_train_step)."""
     cbook = {
         r["vec_id"]: [float(x) for x in r["v"]]
         for r in v.orderBy("vec_id").limit(pq_k).collect()
@@ -909,7 +908,7 @@ def pq_train_codebook(
             # division (cast the sum to double BEFORE dividing — a
             # decimal division has engine-specific result scale,
             # whereas double/int division of identical operands is one
-            # unique IEEE result on both engines; q_kmeans_update)
+            # unique IEEE result on both engines)
             mean_expr = (
                 F.sum(
                     F.round("val", exact_decimals).cast(

@@ -34,7 +34,6 @@ from pipeline311_spark.ext.hashing import (
     affine,
     ensure_parallelism,
     hash_params,
-    portable_hash,
     portable_hash64,
 )
 from pipeline311_spark.ext.textstats import fingerprint, normalize_text, tokens
@@ -107,111 +106,8 @@ def exact_dup_groups(df: DataFrame, id_col: str, text_col: str, key: Column | No
 
 
 # ---------------------------------------------------------------------------
-# Cross-document repeated-span removal
-# ---------------------------------------------------------------------------
-
-
-def cross_doc_span_removal(
-    df: DataFrame, id_col: str, text_col: str, n: int = 13, min_df: int = 2
-) -> DataFrame:
-    """Remove every ≥``n``-token span that repeats ACROSS documents —
-    the substring-level exact-dedup operator doc-level MinHash cannot
-    express (VERDICT r8 item 2: a 500-token boilerplate block shared by
-    otherwise-distinct docs survives doc-level near-dup entirely).
-    Semantics are the frequent-span boilerplate-removal variant: a
-    token is dropped iff it sits inside an ``n``-gram occurring in
-    ≥ ``min_df`` DISTINCT docs — deterministic, order-free, and every
-    occurrence goes (the eval-decontamination convention generalized
-    from eval-grams to corpus-grams, plans/analytics12.py).
-
-    Output (doc_id, n_tokens, n_removed, cleaned): original whitespace
-    token count, tokens dropped, and the surviving tokens re-joined by
-    single spaces (a fully-boilerplate doc cleans to ``''``).  NULL
-    text is excluded (the engine-wide failed-decode convention).
-
-    Scale shape — linear, never pairwise: the gram stream is map-side
-    (split → transform → explode, the contamination shape); per-gram
-    doc frequency is ONE count-distinct aggregate (map-side partial on
-    (g, doc)); hits are a shuffle join of the gram stream against the
-    frequent-gram set (NOT broadcast — its size is the corpus's
-    boilerplate density, the decontamination AQE lesson); coverage
-    expansion is bounded by hits × n; and the final anti-join +
-    re-assembly shuffle on (doc, position) is token-stream scale,
-    partitioned by doc.  The gram stream is NOT cached — both consumers
-    recompute the map-side explode (corpus-scale caches lose at 100 TB;
-    the text_contamination_13gram precedent).  At 100 TB the gram
-    strings would ride as 60-bit hashes (_gram_hash_table) with the
-    fold mirrored in the oracle, as the MinHash family does."""
-    doc = F.col(id_col).alias("doc")
-    toks = ensure_parallelism(
-        df.filter(F.col(text_col).isNotNull()).select(
-            doc, F.split(F.col(text_col), " ").alias("t")
-        )
-    )
-    # (doc, i, g): 1-based gram start positions, gram strings
-    grams = toks.filter(F.size("t") >= n).select(
-        "doc",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("t") - (n - 1)),
-                lambda i: F.struct(
-                    i.alias("i"), F.concat_ws(" ", F.slice(F.col("t"), i, n)).alias("g")
-                ),
-            )
-        ).alias("x"),
-    ).select("doc", F.col("x.i").alias("i"), F.col("x.g").alias("g"))
-    boiler = (
-        grams.groupBy("g")
-        .agg(F.count_distinct("doc").alias("df"))
-        .filter(F.col("df") >= min_df)
-        .select("g")
-    )
-    covered = (
-        grams.join(boiler, "g")
-        .select("doc", F.explode(F.sequence(F.col("i"), F.col("i") + (n - 1))).alias("p"))
-        .distinct()
-    )
-    toks_pos = toks.select(
-        "doc", F.posexplode("t").alias("p0", "tok")
-    ).select("doc", (F.col("p0") + 1).alias("p"), "tok")
-    kept = toks_pos.join(covered, ["doc", "p"], "left_anti")
-    cleaned = kept.groupBy("doc").agg(
-        F.count("*").cast("long").alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("p", "tok"))), lambda s: s["tok"]
-            ),
-            " ",
-        ).alias("cleaned"),
-    )
-    base = toks.select("doc", F.size("t").cast("long").alias("n_tokens"))
-    return base.join(cleaned, "doc", "left").select(
-        F.col("doc").alias("doc_id"),
-        "n_tokens",
-        (F.col("n_tokens") - F.coalesce(F.col("n_kept"), F.lit(0)))
-        .cast("long")
-        .alias("n_removed"),
-        F.coalesce(F.col("cleaned"), F.lit("")).alias("cleaned"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Shingling + n-gram Jaccard
 # ---------------------------------------------------------------------------
-
-
-def word_shingles(col: Column | str, n: int = 5) -> Column:
-    """Distinct word n-grams of normalized text, joined by single spaces."""
-    toks = tokens(normalize_text(col))
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
-    return F.array_distinct(F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>")))
-
-
-def _shingle_table(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    return ensure_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("doc"), F.explode(word_shingles(text_col, n)).alias("shingle")
-    )
 
 
 def ngram_jaccard_pairs(

@@ -163,10 +163,6 @@ def affine(h: Column, a: int, b: int) -> Column:
     return (h * F.lit(a) + F.lit(b)) % F.lit(MOD)
 
 
-def affine_sql(expr: str, a: int, b: int) -> str:
-    return f"(({expr}) * {a} + {b}) % {MOD}"
-
-
 def hash_params(k: int, seed: int = 42) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs via a fixed LCG — no RNG state, same
     on every run and in generated oracle SQL."""

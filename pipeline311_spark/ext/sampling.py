@@ -1,4 +1,5 @@
-"""Deterministic sampling & split assignment (training-data pipeline).
+"""Deterministic hash buckets and the two-phase running sum
+(training-data pipeline).
 
 ``sample()``/``randomSplit()`` are seed-dependent but *partitioning*-
 dependent too — rerunning on a repartitioned 100 TB corpus yields a
@@ -14,16 +15,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from pipeline311_spark.ext.hashing import (
-    MOD,
-    portable_hash,
-    portable_hash64,
-    portable_hash64_sql,
-    portable_hash_sql,
-)
-
-#: 2^60 — the portable hash is 60 bits, so ``h / 2^60`` is uniform on [0, 1).
-_HASH_SPAN = 1 << 60
+from pipeline311_spark.ext.hashing import portable_hash, portable_hash_sql
 
 
 def hash_bucket(col: Column | str, buckets: int = 100) -> Column:
@@ -33,208 +25,6 @@ def hash_bucket(col: Column | str, buckets: int = 100) -> Column:
 
 def hash_bucket_sql(expr: str, buckets: int = 100) -> str:
     return f"({portable_hash_sql(f'CAST({expr} AS VARCHAR)')}) % {buckets}"
-
-
-def deterministic_sample(df: DataFrame, id_col: str, pct: int, buckets: int = 100) -> DataFrame:
-    """Keep ~pct% of rows, stable under reruns/repartitioning."""
-    return df.filter(hash_bucket(id_col, buckets) < pct)
-
-
-def cap_per_key(
-    df: DataFrame, key_col: str, id_col: str, cap: int, rank_col: str = "keep_rank"
-) -> DataFrame:
-    """Keep at most ``cap`` rows per ``key_col`` (the per-domain /
-    per-source document cap every web-scale curation pipeline applies
-    so one hot domain can't dominate the training mixture).
-
-    Priority is ``row_number`` ordered by the portable hash of the
-    stable id (id itself as tiebreak) — a deterministic uniform
-    subsample of each key's rows, stable across reruns, repartitioning,
-    and engines, unlike "first N seen" which depends on scan order.
-
-    Scale: the ``rank <= cap`` filter on a ``row_number`` window is
-    rewritten by Spark into WindowGroupLimit — each map task pre-trims
-    to its local top-``cap`` per key BEFORE the exchange, so a
-    pathological hot key ships at most ``cap × n_partitions`` rows, not
-    its full row count, and the post-shuffle per-key sort is bounded.
-    """
-    w = Window.partitionBy(key_col).orderBy(
-        portable_hash(F.col(id_col).cast("string")), F.col(id_col)
-    )
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= cap)
-
-
-def temperature_keep(id_col: Column | str, n_col: Column | str, n_min_col: Column | str) -> Column:
-    """α=0.5 temperature-mixing keep predicate (exact integer math).
-
-    The standard multilingual-LM source-flattening rule: sample source
-    *s* at rate ``sqrt(n_min / n_s)``, so kept sizes grow ∝ sqrt(n_s)
-    (the smallest source is kept whole, big sources are damped).  The
-    test is ``u < sqrt(n_min / n_s)`` for a per-doc uniform ``u`` —
-    squared into ``u30² · n_s < n_min · 2^60`` so BOTH engines evaluate
-    pure integers (Spark decimal(38,0), DuckDB HUGEINT): no sqrt, no
-    doubles, no cross-engine ulp hazard.  ``u30`` is the top 30 bits of
-    the portable md5 hash of the stable id (salted ``'t:'`` so the draw
-    is independent of the bucket-sampling family's).
-
-    Scale: a per-row codegen'd predicate — the only other input is the
-    tiny per-source counts aggregate broadcast back onto the corpus.
-    """
-    idc = F.col(id_col) if isinstance(id_col, str) else id_col
-    n = F.col(n_col) if isinstance(n_col, str) else n_col
-    n_min = F.col(n_min_col) if isinstance(n_min_col, str) else n_min_col
-    u30 = F.shiftright(portable_hash64(F.concat(F.lit("t:"), idc.cast("string"))), 30)
-    d38 = "decimal(38,0)"
-    lhs = (u30 * u30).cast(d38) * n.cast(d38)
-    rhs = n_min.cast(d38) * F.lit(_HASH_SPAN).cast(d38)
-    return lhs < rhs
-
-
-def temperature_keep_sql(id_expr: str, n_expr: str, n_min_expr: str) -> str:
-    """DuckDB twin of :func:`temperature_keep` (HUGEINT exact)."""
-    h = portable_hash64_sql(f"'t:' || CAST({id_expr} AS VARCHAR)")
-    u30 = f"(({h}) >> 30)"
-    return (
-        f"(CAST({u30} * {u30} AS HUGEINT) * CAST({n_expr} AS HUGEINT)"
-        f" < CAST({n_min_expr} AS HUGEINT) * CAST({_HASH_SPAN} AS HUGEINT))"
-    )
-
-
-def weight_bernoulli_keep(id_col: Column | str, w_col: Column | str, max_w_col: Column | str) -> Column:
-    """Weight-proportional Bernoulli keep predicate (exact integer math).
-
-    Keeps each row independently with probability ``w / max_w`` — the
-    quality-weighted downsampling step of a curation pipeline (weight =
-    any non-negative integer score; here callers pass character/token
-    counts or integerized quality).  Test: ``u60 · max_w < w · 2^60``
-    in decimal(38,0) / HUGEINT — bit-exact on both engines, and stable
-    under reruns/repartitioning because ``u60`` hashes the stable id
-    (salted ``'w:'``).  ``w = 0`` rows are never kept; an all-zero
-    corpus (``max_w = 0``) keeps nothing rather than dividing by zero —
-    the comparison form never divides.
-    """
-    idc = F.col(id_col) if isinstance(id_col, str) else id_col
-    w = F.col(w_col) if isinstance(w_col, str) else w_col
-    mw = F.col(max_w_col) if isinstance(max_w_col, str) else max_w_col
-    u60 = portable_hash64(F.concat(F.lit("w:"), idc.cast("string")))
-    d38 = "decimal(38,0)"
-    return u60.cast(d38) * mw.cast(d38) < w.cast(d38) * F.lit(_HASH_SPAN).cast(d38)
-
-
-def weight_bernoulli_keep_sql(id_expr: str, w_expr: str, max_w_expr: str) -> str:
-    """DuckDB twin of :func:`weight_bernoulli_keep`."""
-    h = portable_hash64_sql(f"'w:' || CAST({id_expr} AS VARCHAR)")
-    return (
-        f"(CAST({h} AS HUGEINT) * CAST({max_w_expr} AS HUGEINT)"
-        f" < CAST({w_expr} AS HUGEINT) * CAST({_HASH_SPAN} AS HUGEINT))"
-    )
-
-
-def _bucketed_running_sum(
-    keyed: DataFrame,
-    part_col: str,
-    order_cols: list[str],
-    val_col: str,
-    out_col: str,
-    offset_keep: Column | None = None,
-) -> DataFrame:
-    """The shared core of the two-phase running-sum decompositions:
-    ``keyed`` carries a ``__bucket`` column whose ASCENDING order is
-    the order of ``order_cols`` (the caller's invariant).  Per-(part,
-    bucket) totals → exclusive bucket offsets via a window over that
-    dimension-scale table → within-bucket running sums plus the
-    broadcast offset = the exact global inclusive cumsum in ``out_col``
-    (``__off`` also remains for callers that filter on it).
-    ``offset_keep``: optional predicate over ``__off`` that drops whole
-    buckets BEFORE their per-doc window runs (the budget-fill
-    early-exit).
-
-    The offsets join back is NULL-SAFE on ``part_col``: the window twin
-    keeps a NULL partition value as its own partition, and a plain
-    equi-join would silently drop those rows from both phases
-    (ADVICE r8)."""
-    W = Window
-    totals = keyed.groupBy(part_col, "__bucket").agg(F.sum(val_col).alias("__btot"))
-    off_w = (
-        W.partitionBy(part_col)
-        .orderBy("__bucket")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    offsets = totals.withColumn(
-        "__off", F.sum("__btot").over(off_w) - F.col("__btot")
-    ).select(
-        F.col(part_col).alias("__part_o"),
-        F.col("__bucket").alias("__bucket_o"),
-        "__off",
-    )
-    if offset_keep is not None:
-        offsets = offsets.filter(offset_keep)
-    doc_w = (
-        W.partitionBy(part_col, "__bucket")
-        .orderBy(*order_cols)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    return (
-        keyed.join(
-            F.broadcast(offsets),
-            F.col(part_col).eqNullSafe(F.col("__part_o"))
-            & F.col("__bucket").eqNullSafe(F.col("__bucket_o")),
-        )
-        .drop("__part_o", "__bucket_o")
-        .withColumn(out_col, F.col("__off") + F.sum(val_col).over(doc_w))
-    )
-
-
-def token_budget_fill_two_phase(
-    df: DataFrame,
-    source_col: str,
-    id_col: str,
-    tokens_col: str,
-    budget: int,
-    n_buckets: int = 32,
-) -> DataFrame:
-    """Scalable two-phase form of the per-source token-budget quota
-    fill (plans/curation2.sample_token_budget_fill): keep each doc iff
-    its INCLUSIVE running token sum — per source, in (portable-hash,
-    id) order — fits ``budget``.
-
-    The single-window form sorts each source in one partition; this
-    form survives a source larger than a partition by decomposing the
-    running sum exactly (the surrogate-id trick, operators/merge.py):
-
-    1. range-bucket each doc by its hash key (``hk div ceil(MOD/nb)``
-       — bucket order IS hash order, equal keys land together, so
-       bucket-asc + within-bucket (hk, id) order reproduces the global
-       (hk, id) order exactly);
-    2. per-(source, bucket) token totals — a tiny aggregate
-       (sources × nb rows);
-    3. exclusive bucket offsets via a window over that tiny table
-       (dimension-bounded, never the corpus);
-    4. within-(source, bucket) inclusive running sums — nb-way
-       parallel windows — plus the broadcast offset = the exact global
-       inclusive cumsum.
-
-    Integer math end to end, so the kept set is IDENTICAL to the
-    single-window form (property-tested), and the same DuckDB oracle
-    gates both.  Early-exit at scale: a bucket whose offset already
-    exceeds ``budget`` is dropped before its per-doc window runs —
-    with budget ≪ corpus almost every bucket short-circuits."""
-    step = (MOD + n_buckets - 1) // n_buckets
-    keyed = df.withColumn(
-        "__hk", portable_hash(F.col(id_col).cast("string"))
-    ).withColumn("__bucket", F.expr(f"__hk div {step}"))
-    return (
-        _bucketed_running_sum(
-            keyed,
-            source_col,
-            ["__hk", id_col],
-            tokens_col,
-            out_col="__cum",
-            offset_keep=F.col("__off") <= budget,
-        )
-        .filter(F.col("__cum") <= budget)
-        .drop("__hk", "__bucket", "__off", "__cum")
-    )
 
 
 def running_sum_two_phase(
@@ -251,8 +41,8 @@ def running_sum_two_phase(
     PRECEDING)``, for when one partition value outgrows a task (the
     dominant-source hazard of sequence packing).
 
-    Same exact decomposition as :func:`token_budget_fill_two_phase`,
-    but ordered by a NUMERIC id column instead of the hash key:
+    The running sum is decomposed exactly (the surrogate-id trick,
+    operators/merge.py), ordered by a NUMERIC id column:
 
     1. range-bucket by id value (``(id - lo) div step`` — monotone in
        id, so bucket-asc + within-bucket id order IS the global order);
@@ -270,6 +60,11 @@ def running_sum_two_phase(
     bucket — exactly the window twin's NULLS FIRST.  ``order_col`` must
     be unique within each ``part_col`` group (both forms are
     order-ambiguous otherwise).
+
+    The offsets join back is NULL-SAFE on ``part_col``: the window twin
+    keeps a NULL partition value as its own partition, and a plain
+    equi-join would silently drop those rows from both phases
+    (ADVICE r8).
 
     The input is persisted (tracked) BEFORE the bounds aggregate: the
     bounds job warms the cache, and the two plan consumers of the
@@ -295,19 +90,30 @@ def running_sum_two_phase(
             F.expr(f"(`{order_col}` - {lo_i}) div {step}"), F.lit(-1).cast("long")
         ),
     )
-    return _bucketed_running_sum(
-        keyed, part_col, [order_col], val_col, out_col=out_col
-    ).select(*df.columns, out_col)
-
-
-def train_test_split(
-    df: DataFrame, id_col: str, train_pct: int = 80, val_pct: int = 10, buckets: int = 100
-) -> DataFrame:
-    """Add a ``split`` column: train / val / test by hash range."""
-    b = hash_bucket(id_col, buckets)
-    split = (
-        F.when(b < train_pct, "train")
-        .when(b < train_pct + val_pct, "val")
-        .otherwise("test")
+    totals = keyed.groupBy(part_col, "__bucket").agg(F.sum(val_col).alias("__btot"))
+    off_w = (
+        Window.partitionBy(part_col)
+        .orderBy("__bucket")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return df.withColumn("split", split)
+    offsets = totals.withColumn(
+        "__off", F.sum("__btot").over(off_w) - F.col("__btot")
+    ).select(
+        F.col(part_col).alias("__part_o"),
+        F.col("__bucket").alias("__bucket_o"),
+        "__off",
+    )
+    doc_w = (
+        Window.partitionBy(part_col, "__bucket")
+        .orderBy(order_col)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return (
+        keyed.join(
+            F.broadcast(offsets),
+            F.col(part_col).eqNullSafe(F.col("__part_o"))
+            & F.col("__bucket").eqNullSafe(F.col("__bucket_o")),
+        )
+        .withColumn(out_col, F.col("__off") + F.sum(val_col).over(doc_w))
+        .select(*df.columns, out_col)
+    )

@@ -30,12 +30,12 @@ def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, v: acc + v))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Pairwise convenience form: three folds per evaluation.  In every
-    join-then-score path below, the per-SIDE norms are precomputed
-    before the join (:func:`cosine_pre`) so each candidate pair pays one
-    fold (the dot), not three — at scale that is the difference between
-    O(pairs·dim) and O(3·pairs·dim) interpreted work.
+def cosine_pre(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
+    """Cosine with both norms precomputed per input row: every
+    join-then-score path computes the per-SIDE norms before the join,
+    so each candidate pair pays one fold (the dot), not three — at
+    scale that is the difference between O(pairs·dim) and
+    O(3·pairs·dim) interpreted work.
 
     ``try_divide``: a ZERO vector (failed encode, padding row — they
     happen in real embedding tables) has norm 0, and a plain ``/``
@@ -43,13 +43,6 @@ def cosine(a: Column, b: Column) -> Column:
     Undefined similarity is NULL, which every downstream
     ``>= threshold`` filter and ``ORDER BY`` treats as not-similar —
     zero vectors silently never pair or rank, they don't kill the job."""
-    return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
-
-
-def cosine_pre(a: Column, b: Column, norm_a: Column, norm_b: Column) -> Column:
-    """Cosine with both norms precomputed per input row (bit-identical
-    to :func:`cosine`: same dot fold, same sqrt products, same
-    NULL-on-zero-norm semantics)."""
     return F.try_divide(dot(a, b), norm_a * norm_b)
 
 
@@ -302,67 +295,6 @@ def ivf_assign(
     )
 
 
-def ivf_probe_cells(
-    queries: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    nprobe: int = 2,
-) -> DataFrame:
-    """Each query's ``nprobe`` closest centroid cells (max cosine,
-    centroid-id tiebreak): (query_id, qv, qn, centroid_id) rows —
-    shared by the in-memory ANN and the partitioned-store probe so the
-    tie-break/ordering semantics exist exactly once."""
-    c = F.broadcast(
-        centroids.select(F.col(id_col).alias("centroid_id"), as_double(vec_col).alias("cv"))
-        .withColumn("ccn", l2_norm(F.col("cv")))
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")
-    ).withColumn("qn", l2_norm(F.col("qv")))
-    probe_w = Window.partitionBy("query_id").orderBy(F.col("c_sim").desc(), F.col("centroid_id"))
-    return (
-        q.join(c)
-        .select(
-            "query_id", "qv", "qn", "centroid_id",
-            cosine_pre(F.col("qv"), F.col("cv"), F.col("qn"), F.col("ccn")).alias("c_sim"),
-        )
-        .withColumn("__pr", F.row_number().over(probe_w))
-        .filter(F.col("__pr") <= nprobe)
-        .select("query_id", "qv", "qn", "centroid_id")
-    )
-
-
-def ivf_ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    nprobe: int = 2,
-) -> DataFrame:
-    """IVF-style ANN: assign the corpus to centroid cells once, then for
-    each query scan only its ``nprobe`` closest cells.  Exact cosine
-    within the probed cells; recall is governed by nprobe."""
-    cells = ivf_assign(corpus, centroids, id_col, vec_col).withColumnRenamed(
-        id_col, "neighbor_id"
-    )
-    probes = ivf_probe_cells(queries, centroids, id_col, vec_col, nprobe)
-    scored = (
-        F.broadcast(probes)
-        .join(cells, "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_pre(F.col("qv"), F.col("v"), F.col("qn"), F.col("nv")).alias("cos_sim"),
-        )
-    )  # each vector lives in exactly one cell, so probes can't duplicate pairs
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
 def embedding_near_dup_pairs(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -539,59 +471,3 @@ def semantic_dedup_keep(
     )
     kept = small.join(dropped, id_col, "left_anti").select(id_col, "centroid_id")
     return kept.unionByName(oversized.select(id_col, "centroid_id"))
-
-
-def kmeans_iterate(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    rounds: int = 2,
-) -> DataFrame:
-    """Lloyd's k-means for a FIXED number of rounds, centroids carried
-    as a DataFrame between iterations — the iterative-algorithm shape
-    (each round: broadcast-centroid assignment scan + one (cluster,
-    dim) hash aggregate; k·dim rows flow between rounds, never the
-    corpus).  Returns the final assignment (id, centroid_id).
-
-    Cross-engine determinism (the reason this is oracle-checkable, see
-    q_kmeans_update's hazard note): each centroid element is an exact
-    DECIMAL sum of 6-decimal-rounded members followed by ONE double
-    division — bit-identical on every engine — so round r+1's
-    assignment compares identical doubles everywhere; squared-distance
-    ties break by centroid id.  A cluster that loses all members drops
-    out (deterministically, on both engines).
-
-    Empty input / convergence: fixed rounds, no driver-side loop state
-    beyond the plan itself; at 100 TB each round is one scan + one
-    k·dim aggregate, and `localCheckpoint` between rounds would cap the
-    lineage if rounds grew large (at rounds ≤ 4 the chained plan is
-    fine)."""
-    v = corpus.select(F.col(id_col).alias("__id"), as_double(vec_col).alias("v"))
-    cent = centroids.select(
-        F.col("centroid_id").alias("c_id"), F.col("cv")
-    )
-    sq = sqdist(F.col("v"), F.col("cv"))  # the one shared fold definition
-    nearest = Window.partitionBy("__id").orderBy("sqdist", "c_id")
-    assigned = None
-    for _ in range(rounds):
-        assigned = (
-            v.crossJoin(F.broadcast(cent))
-            .withColumn("sqdist", sq)
-            .withColumn("__rn", F.row_number().over(nearest))
-            .filter("__rn = 1")
-            .select("__id", "v", "c_id")
-        )
-        dims = assigned.select("c_id", F.posexplode("v").alias("pos", "val"))
-        cent_dims = dims.groupBy("c_id", "pos").agg(
-            (
-                F.sum(F.round("val", 6).cast("decimal(18,6)")).cast("double")
-                / F.count("*")
-            ).alias("cval")
-        )
-        cent = cent_dims.groupBy("c_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cval"))), lambda x: x["cval"]
-            ).alias("cv")
-        )
-    return assigned.select(F.col("__id").alias(id_col), F.col("c_id").alias("centroid_id"))

@@ -199,58 +199,6 @@ def chunk_token_windows(
     )
 
 
-def repetition_metrics(df, id_col: str, text_col: str, max_n: int = 3):
-    """Within-doc repetition quality signals (the Gopher-filter family,
-    Rae et al. 2021 §A1.1): per doc, the fraction of tokens claimed by
-    the most frequent token / bigram and the fraction of trigram
-    occurrences that are repeats.  Boilerplate, keyword-stuffed, and
-    looping generated text score high; clean prose scores low.
-
-    Shape: ONE explode emits (doc, n, gram) rows for n = 1..max_n
-    (grams built per-row with slice+array_join — no window, no
-    pre-explode shuffle), then two hash aggregations — (doc, n, gram)
-    counts, then per-(doc, n) totals — both map-side-combinable; the
-    final per-doc pivot is a third key-bounded aggregation.  Every
-    stage keys on the doc id, so skew is bounded by document length,
-    not corpus size.
-    """
-    from pipeline311_spark.ext.hashing import ensure_parallelism
-
-    toks = tokens(normalize_text(text_col))
-    d = ensure_parallelism(df.select(F.col(id_col).alias("doc"), toks.alias("tk")))
-
-    def gram_structs(n: int) -> Column:
-        if n == 1:
-            mk = lambda i: F.element_at(F.col("tk"), i)  # noqa: E731
-        else:
-            mk = lambda i: F.array_join(F.slice(F.col("tk"), i, n), " ")  # noqa: E731
-        return F.when(
-            F.size("tk") >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size("tk") - n + 1),
-                lambda i: F.struct(F.lit(n).alias("n"), mk(i).alias("g")),
-            ),
-        ).otherwise(F.array().cast("array<struct<n:int,g:string>>"))
-
-    allgrams = F.concat(*[gram_structs(n) for n in range(1, max_n + 1)])
-    ex = d.select("doc", F.explode(allgrams).alias("x")).select(
-        "doc", F.col("x.n").alias("n"), F.col("x.g").alias("g")
-    )
-    counts = ex.groupBy("doc", "n", "g").agg(F.count("*").alias("c"))
-    per_n = counts.groupBy("doc", "n").agg(
-        F.sum("c").alias("total"),
-        F.max("c").alias("mx"),
-        F.coalesce(F.sum(F.when(F.col("c") > 1, F.col("c"))), F.lit(0)).alias("dup"),
-    )
-    pick = lambda n, c: F.max(F.when(F.col("n") == n, c))  # noqa: E731
-    return per_n.groupBy("doc").agg(
-        pick(1, F.col("total")).cast("long").alias("n_tokens"),
-        pick(1, F.col("mx") / F.col("total")).alias("top_token_frac"),
-        pick(2, F.col("mx") / F.col("total")).alias("top_bigram_frac"),
-        pick(3, F.col("dup") / F.col("total")).alias("dup_trigram_frac"),
-    ).withColumnRenamed("doc", id_col)
-
-
 def remove_boilerplate_lines(
     df,
     id_col: str,

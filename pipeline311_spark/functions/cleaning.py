@@ -127,12 +127,16 @@ def parent_id(col: Column | str) -> Column:
     Unicode whitespace ('\\u3000٣' -> 3), which ``try_cast`` rejects, so
     a value the plain cast rejects is cast again after the translation
     to ASCII, which only a value holding a non-ASCII character pays for.
+    That second cast also drops each single ``_`` between two digits,
+    as ``int()`` reads PEP 515 digit groups ('1_0' -> 10); a leading,
+    trailing or doubled ``_`` stays, so the value still nulls out.
     """
     c = F.col(col) if isinstance(col, str) else col
     s = c.cast("string")
+    grouped = F.regexp_replace(_ascii_digits(s), r"(?<=[0-9])_(?=[0-9])", "")
     return F.when(
         (s == "0") | s.rlike(r"[\x00-\x08\x0e-\x1f\x7f]"), F.lit(None)
-    ).otherwise(F.coalesce(c.try_cast("long"), _ascii_digits(s).try_cast("long")))
+    ).otherwise(F.coalesce(c.try_cast("long"), grouped.try_cast("long")))
 
 
 def private_flag(col: Column | str) -> Column:

@@ -297,9 +297,8 @@ def q_stream_ann_index_maintain(spark, sf_dir):
 # item 1): the driver's set-cover sample must carry the ext:ann-train
 # tag, and until round 11 its only carrier was the rows-only audit
 # below — so every CORRECTNESS_r{N} recorded one structural
-# `err: no_oracle`.  A SINGLE training step IS SQL-re-derivable (the
-# q_kmeans_update precedent, plans/analytics13.py): seeds are the
-# n_cells lowest-id vectors, every vector joins its nearest seed
+# `err: no_oracle`.  A SINGLE training step IS SQL-re-derivable: seeds
+# are the n_cells lowest-id vectors, every vector joins its nearest seed
 # (exact double sqdist, ties to the lowest cell — the shared
 # pq_code_col argmin), and the new centroid is the exact-decimal mean
 # (round-6 → decimal(28,6) sum → ONE double division; see

@@ -97,10 +97,6 @@ REVENUE_SQL = (
 )
 
 
-def dsum_sql(col: str) -> str:
-    return f"CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE)"
-
-
 def fmt_ts(col: Column | str, micros: bool = True) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS" if micros else "yyyy-MM-dd HH:mm:ss"

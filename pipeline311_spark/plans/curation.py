@@ -1,8 +1,8 @@
 """End-to-end curation pipeline: the engine's production use case as
 ONE oracle-gated flow — language filter → quality gate → exact dedup →
 context-window chunking.  Every stage reuses an operator that is also
-verified standalone (text_quality_scores, dedup_exact_groups,
-text_chunk_windows); this query proves they COMPOSE: filters stay
+verified on its own (text_quality_scores, dedup_exact_groups, and the
+chunk_token_windows property test); this query proves they COMPOSE: filters stay
 pushed through the dedup window, chunking stays map-side, and the whole
 flow is a single declarative plan Catalyst optimizes end to end.
 

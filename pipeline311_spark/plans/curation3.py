@@ -4,9 +4,8 @@ pipeline.
 
 * ``text_bm25_topk`` — Okapi BM25 (k1=1.2, b=0.75) top-k documents for
   a fixed set of query term-sets, the lexical-retrieval complement to
-  the dense ``retrieval_end_to_end`` flow (reference analogue: the
-  engine's text operators feed curation the same way tf-idf does —
-  plans/analytics2.py; BM25 is the production lexical ranker).
+  the dense ``retrieval_end_to_end`` flow (BM25 is the production
+  lexical ranker).
 
   Scale shape (r8): exactly TWO corpus passes — one map-side aggregate
   for the corpus stats (n_docs, avgdl) and one token explode that is
@@ -298,9 +297,8 @@ def q_export_hash_shards(spark, sf_dir):
 # ONE declarative plan — language filter → quality gate → exact dedup →
 # 13-gram benchmark decontamination → deterministic 80% sample →
 # token-budget sequence packing → balanced shard assignment.  Every
-# stage is an operator that is ALSO verified standalone
-# (text_quality_scores, dedup_exact_groups, text_contamination_13gram,
-# sample_deterministic_20pct, text_pack_sequences, export_hash_shards);
+# stage is an operator that is ALSO verified standalone where one
+# exists (text_quality_scores, dedup_exact_groups, export_hash_shards);
 # this query proves they COMPOSE into the production flow under the
 # same oracle gate.
 #
@@ -309,8 +307,8 @@ def q_export_hash_shards(spark, sf_dir):
 # decontamination anti join (eval grams broadcast into a map-side
 # join; the hit-id side is AQE-sized, not force-broadcast — its
 # cardinality is the corpus's contamination density), and (3) the per-
-# source packing window (the two-phase bucket decomposition in
-# plans/curation2.py is the documented alternative when one source
+# source packing window (the two-phase bucket decomposition of
+# q_curation_pipeline_pack2phase is the alternative when one source
 # outgrows a partition).  Sampling and shard assignment are pure row
 # math.  A 100 TB corpus flows scan → filter → one hash window → anti
 # join → one range-ish window → map-side shard tag.
@@ -381,6 +379,31 @@ FROM packed
 """
 
 
+def _grams(df):
+    """``_FP_GRAM_N``-grams per doc: map-side only (split → transform →
+    explode).
+
+    Deliberately NOT deduplicated here — the consumer broadcasts a
+    ``.distinct()`` of the tiny eval side, so a pre-join shuffle of the
+    full training gram stream would be pure waste at scale.
+    """
+    t = F.split(F.col("text"), " ")
+    return (
+        df.select("doc_id", "source", t.alias("t"))
+        .filter(F.size("t") >= _FP_GRAM_N)
+        .select(
+            "doc_id",
+            "source",
+            F.explode(
+                F.transform(
+                    F.sequence(F.lit(1), F.size("t") - (_FP_GRAM_N - 1)),
+                    lambda i: F.concat_ws(" ", F.slice(F.col("t"), i, _FP_GRAM_N)),
+                )
+            ).alias("g"),
+        )
+    )
+
+
 def _full_pipeline_frame(spark, sf_dir, two_phase_packing: bool):
     """The flagship plan with the packing stage selectable:
 
@@ -392,14 +415,12 @@ def _full_pipeline_frame(spark, sf_dir, two_phase_packing: bool):
       broadcast offsets, n_buckets-way parallel windows.  The
       dominant-source escape hatch — at production scale switch when
       the largest source's post-sample row count outgrows what one
-      task can sort (the same trigger curation2.py documents for the
-      budget fill).  Both paths are gated by ONE oracle."""
+      task can sort.  Both paths are gated by ONE oracle."""
     from pyspark.sql.window import Window
 
     from pipeline311_spark.ext.dedup import exact_dedup
     from pipeline311_spark.ext.sampling import hash_bucket
     from pipeline311_spark.ext.textstats import quality_score
-    from pipeline311_spark.plans.analytics12 import _grams
 
     d = table(spark, sf_dir, "documents")
     base = d.filter(
@@ -474,7 +495,7 @@ def q_curation_pipeline_pack2phase(spark, sf_dir):
     """The SAME flagship semantics under the SAME oracle, with the
     packing stage on the two-phase bucket decomposition — two
     oracle-gated plans for one spec pins the decomposition's exactness
-    at every scale factor (the sample_budget_fill_scalable pattern)."""
+    at every scale factor."""
     return _full_pipeline_frame(spark, sf_dir, two_phase_packing=True)
 
 

@@ -416,8 +416,8 @@ def q_dsir(spark, sf_dir):
 _PQ_M = 4          # sub-vector count
 _PQ_SUBDIM = 16    # dims per sub-vector (4 x 16 = 64)
 _PQ_K = 4          # centroids per subspace
-# seed centroids = the _PQ_K lowest vec_ids (deterministic, mirrors the
-# q_kmeans_assign convention of data-derived seeds)
+# seed centroids = the _PQ_K lowest vec_ids (deterministic,
+# data-derived seeds)
 
 
 def _pq_sqdist_sql(a: str, b: str, j: int) -> str:

@@ -453,7 +453,7 @@ WHERE split_a <> split_b
 def q_cross_split_leakage(spark, sf_dir):
     """Train/test contamination detector: near-dup pairs (full MinHash
     kernel, same params as dedup_minhash_lsh) whose two docs land in
-    DIFFERENT hash-assigned splits (train_test_split buckets).  The
+    DIFFERENT hash-assigned splits (hash_bucket ranges).  The
     split label is computed per pair member from the stable-id hash —
     no join against a split table, zero extra shuffles on top of the
     dedup kernel itself."""

@@ -97,26 +97,12 @@ from pipeline311_spark.plans import extras  # noqa: E402,F401
 from pipeline311_spark.plans import tpch_more  # noqa: E402,F401
 from pipeline311_spark.plans import streaming_custom  # noqa: E402,F401
 from pipeline311_spark.plans import connector  # noqa: E402,F401
-from pipeline311_spark.plans import analytics2  # noqa: E402,F401
 from pipeline311_spark.plans import analytics3  # noqa: E402,F401
-from pipeline311_spark.plans import temporal_q  # noqa: E402,F401
-from pipeline311_spark.plans import analytics6  # noqa: E402,F401
-from pipeline311_spark.plans import analytics7  # noqa: E402,F401
-from pipeline311_spark.plans import analytics8  # noqa: E402,F401
-from pipeline311_spark.plans import scd2  # noqa: E402,F401
 from pipeline311_spark.plans import coverage_fill  # noqa: E402,F401
 from pipeline311_spark.plans import analytics9  # noqa: E402,F401
-from pipeline311_spark.plans import analytics11  # noqa: E402,F401
-from pipeline311_spark.plans import analytics12  # noqa: E402,F401
-from pipeline311_spark.plans import analytics13  # noqa: E402,F401
-from pipeline311_spark.plans import analytics14  # noqa: E402,F401
 from pipeline311_spark.plans import sinks_q  # noqa: E402,F401
 from pipeline311_spark.plans import curation  # noqa: E402,F401
-from pipeline311_spark.plans import curation2  # noqa: E402,F401
 from pipeline311_spark.plans import curation3  # noqa: E402,F401
-from pipeline311_spark.plans import analytics15  # noqa: E402,F401
-from pipeline311_spark.plans import analytics17  # noqa: E402,F401
-from pipeline311_spark.plans import analytics18  # noqa: E402,F401
 from pipeline311_spark.plans import curation4  # noqa: E402,F401
 from pipeline311_spark.plans import retrieval2  # noqa: E402,F401
 from pipeline311_spark.plans import ann_store_q  # noqa: E402,F401

@@ -18,7 +18,6 @@ from pipeline311_spark.plans.common import (
     REVENUE_SQL,
     dec,
     dsum,
-    dsum_sql,
     fmt_ts,
     fmt_ts_sql,
     revenue_expr,

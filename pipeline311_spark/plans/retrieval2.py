@@ -157,7 +157,7 @@ def _term_bucket_py(term: str) -> str:
 )
 def q_bm25_partitioned_store(spark, sf_dir):
     """The retrieval scale layout made concrete (the analogue of
-    sim_lsh_partitioned_probe / sim_ivf_partitioned_probe): postings
+    sim_lsh_partitioned_probe): postings
     WRITTEN ``partitionBy(term-hash-bucket)``, so a query set's
     vocabulary resolves to a directory list — a partition-pruned file
     read, never a postings scan.  The query terms are plan literals,

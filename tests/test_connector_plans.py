@@ -98,52 +98,6 @@ def test_partitioned_write_prunes_reads(spark, sf_dir, tmp_path):
     assert back.count() == want
 
 
-def test_salted_agg_plan_two_phases(spark, sf_dir):
-    # the salted aggregation must show two aggregate exchanges (salted
-    # partial + final merge), never a single hot-key exchange
-    plan = explain_str(REGISTRY["q_salted_agg"].fn(spark, sf_dir))
-    assert plan.count("Exchange") >= 2
-
-
-def test_q07_dimension_joins_broadcast(spark, sf_dir):
-    plan = explain_str(REGISTRY["q07_volume_shipping"].fn(spark, sf_dir))
-    # both nation joins broadcast; the shipdate filter reaches the scan
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "PushedFilters: [IsNotNull(l_shipdate)" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_chunking_is_map_side_only(spark, sf_dir):
-    plan = explain_str(REGISTRY["text_chunk_windows"].fn(spark, sf_dir))
-    # scan -> generate(explode) -> project: no shuffle anywhere
-    assert "Exchange" not in plan.replace("ReusedExchange", "")
-    assert "Generate" in plan
-
-
-def test_kmeans_assign_broadcasts_centroids(spark, sf_dir):
-    plan = explain_str(REGISTRY["q_kmeans_assign"].fn(spark, sf_dir))
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-
-
-def test_contamination_broadcasts_eval_grams(spark, sf_dir):
-    plan = explain_str(REGISTRY["text_contamination_13gram"].fn(spark, sf_dir))
-    # eval grams are the broadcast build side; the training-side source
-    # filter reaches the parquet scan; probe side has no pre-join shuffle
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "PushedFilters: [IsNotNull(source), Not(EqualTo(source,src0))]" in plan
-
-
-def test_pack_sequences_single_exchange_on_source(spark, sf_dir):
-    plan = explain_str(REGISTRY["text_pack_sequences"].fn(spark, sf_dir))
-    # per-source window packing: the window partitions by source, and the
-    # downstream groupBy(source, pack_id) reuses that partitioning, so
-    # exactly one hash exchange total (never a global single-partition
-    # sort); formatted explain names each node twice (tree + details)
-    assert plan.count("Exchange") == 2
-    assert "SinglePartition" not in plan
-
-
 def test_minhash_gram_path_shuffle_budget(spark, sf_dir):
     """The r4 gram rework's scale claim, asserted on the physical plan:
     gram generation is a pure scan-side map (its only possible Exchange
@@ -172,31 +126,13 @@ _SINGLE_PARTITION_OK = {
     "k9_truncate_reload",
     "o2_desc_scan_order",
     "q17_below_part_average",
-    "q_decile_stats",
-    "q_events_funnel",
-    "sample_rebalance_sources",
     "t2_backfill_window",
     # bloom filter assembly: global agg over ≤ m/64 pre-reduced word
     # rows (bit_or combined map-side) into the one-row broadcast filter
     # — bytes, not data, cross the single partition (operators/bloom.py)
     "j3_bloom_reconcile",
-    "text_contamination_bloom",
-    # scalar-over-dimension aggregates: min over the per-source counts
-    # table (≤ one row per source) / max over one scalar column — the
-    # classic broadcast-watermark shape, bytes not data
-    "sample_temperature_mixture",
-    "sample_weight_bernoulli",
-    # sketch finalization: global agg over ≤ 256 registers (HLL) /
-    # ≤ 4096 pre-summed counters + the 10-row probe (CMS) — the sketch
-    # IS the single-partition payload, fixed-size by construction
-    "sketch_hll_distinct",
-    "sketch_hll_merge",
-    "sketch_countmin_heavy",
-    # one-row rule-counter aggregate (a handful of longs) unpivoted to
-    # the per-rule report — bytes, not data, cross the single partition
-    "audit_expectations",
     # corpus-stats scalar (N docs + avg doc length, one row) broadcast
-    # into the scoring join — the broadcast-watermark shape again; the
+    # into the scoring join — the broadcast-watermark shape; the
     # matched-token aggregation itself stays hash-partitioned
     "text_bm25_topk",
     # inherits text_bm25_topk's corpus-stats scalar (it fuses that
@@ -207,7 +143,7 @@ _SINGLE_PARTITION_OK = {
     # bytes, not data, cross the single partition
     "text_vocab_coverage",
     # feature-model totals: one aggregate over the 8192-row hashed
-    # feature table (fixed-size by construction, like the sketches)
+    # feature table (fixed-size by construction)
     "sample_importance_dsir",
 }
 
@@ -236,12 +172,8 @@ def test_aqe_skew_join_split_fires(spark):
     FINAL adaptive plan carry a skew-split SMJ ('skew=true'), i.e. the
     oversized partition was subdivided at runtime.  Thresholds are
     lowered to make test-scale bytes trigger the same code path that
-    256 MB partitions trigger at 100 TB.  Complementary to
-    salted_join/q_salted_join: AQE splits oversized partitions of an
-    existing shuffle; salting is for the cases AQE can't touch
-    (aggregation hot GROUPS, broadcast-ineligible replays) — see
-    operators/skew.py and the tools/skew_probe.py measurements in
-    SCALE.md."""
+    256 MB partitions trigger at 100 TB (see the tools/skew_probe.py
+    measurements in SCALE.md)."""
     confs = {
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",

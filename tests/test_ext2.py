@@ -1,149 +1,13 @@
-"""Unit tests for sampling, quantization, rollup maintenance, and
-salted aggregation operators."""
+"""Unit test for the flagship curation pipeline's decontamination
+gram generator."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
-
-from pipeline311_spark.ext.quantize import dequantize, quantize_int8
-from pipeline311_spark.ext.sampling import deterministic_sample, train_test_split
-from pipeline311_spark.operators.rollup_maint import merge_rollup, rollup_delta
-from pipeline311_spark.operators.skew import salted_agg
-
-
-def test_deterministic_sample_stable_under_repartition(spark):
-    df = spark.range(0, 1000).withColumnRenamed("id", "doc_id")
-    a = {r["doc_id"] for r in deterministic_sample(df, "doc_id", 20).collect()}
-    b = {
-        r["doc_id"]
-        for r in deterministic_sample(df.repartition(17), "doc_id", 20).collect()
-    }
-    assert a == b  # partitioning-independent
-    assert 100 < len(a) < 320  # ~20%
-
-
-def test_train_test_split_partitions_everything(spark):
-    df = spark.range(0, 500).withColumnRenamed("id", "doc_id")
-    s = train_test_split(df, "doc_id")
-    counts = {r["split"]: r["n"] for r in s.groupBy("split").agg(F.count("*").alias("n")).collect()}
-    assert sum(counts.values()) == 500
-    assert counts["train"] > counts["val"] and counts["train"] > counts["test"]
-    # disjoint + deterministic
-    again = train_test_split(df, "doc_id")
-    assert s.select("doc_id", "split").subtract(again.select("doc_id", "split")).count() == 0
-
-
-def test_quantize_roundtrip_fidelity(spark):
-    df = spark.createDataFrame(
-        [(1, [0.5, -1.0, 0.25, 0.125]), (2, [0.0, 0.0, 0.0, 0.0])],
-        "vec_id long, embedding array<float>",
-    )
-    from pipeline311_spark.ext.similarity import as_double
-
-    qs = df.select("vec_id", quantize_int8(as_double("embedding")).alias("qs"))
-    deq = qs.select("vec_id", dequantize(F.col("qs")).alias("d"), F.col("qs.q").alias("q"))
-    rows = {r["vec_id"]: r for r in deq.collect()}
-    # max-abs element is exactly representable post-quantization
-    assert rows[1]["q"][1] == -127
-    assert abs(rows[1]["d"][1] - (-1.0)) < 1e-12
-    assert all(abs(a - b) < 0.01 for a, b in zip(rows[1]["d"], [0.5, -1.0, 0.25, 0.125]))
-    # zero vector survives (scale fallback, no div-by-zero)
-    assert rows[2]["d"] == [0.0, 0.0, 0.0, 0.0]
-
-
-def test_rollup_maintenance_equals_full(spark):
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 2.0), ("b", 5.0), ("a", 3.0), ("b", 7.0)], "k string, v double"
-    )
-    hist, delta = df.limit(3), df.subtract(df.limit(3))
-    partials = {"n": F.count("*"), "s": F.sum("v"), "mx": F.max("v")}
-    merges = {"n": F.sum("n"), "s": F.sum("s"), "mx": F.max("mx")}
-    merged = merge_rollup(
-        rollup_delta(hist, ["k"], partials), rollup_delta(delta, ["k"], partials), ["k"], merges
-    )
-    full = df.groupBy("k").agg(F.count("*").alias("n"), F.sum("v").alias("s"), F.max("v").alias("mx"))
-    assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, full.collect()))
-
-
-def test_salted_agg_equals_plain(spark):
-    df = spark.range(0, 10_000).select(
-        (F.col("id") % 3).cast("string").alias("k"), F.col("id").alias("v")
-    )
-    out = salted_agg(
-        df,
-        key="k",
-        partial_aggs={"pn": F.count("*"), "ps": F.sum("v")},
-        merge_aggs={"n": F.sum("pn"), "s": F.sum("ps")},
-        salt_on="v",
-        buckets=8,
-    )
-    plain = df.groupBy("k").agg(F.count("*").alias("n"), F.sum("v").alias("s"))
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_salted_join_equals_plain(spark):
-    from pipeline311_spark.operators.skew import salted_join
-
-    # skewed big side: 90% of rows share key 0
-    big = spark.range(0, 5_000).select(
-        F.when(F.col("id") % 10 < 9, 0).otherwise(F.col("id") % 7).alias("k"),
-        F.col("id").alias("rid"),
-    )
-    small = spark.range(0, 7).select(
-        F.col("id").alias("k"), F.concat(F.lit("dim_"), F.col("id")).alias("name")
-    )
-    out = salted_join(big, small, key="k", salt_on="rid", buckets=8)
-    plain = big.join(small, "k")
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, plain.collect()))
-    # left join keeps unmatched big rows exactly once
-    big2 = big.withColumn("k", F.col("k") + 100)  # no matches at all
-    out_l = salted_join(big2, small, key="k", salt_on="rid", buckets=8, how="left")
-    assert out_l.count() == big2.count()
-    assert out_l.filter(F.col("name").isNotNull()).count() == 0
-
-
-def test_rebalance_sources_invariants(spark, sf_dir):
-    from pipeline311_spark.plans import REGISTRY
-
-    rows = {r["source"]: r for r in REGISTRY["sample_rebalance_sources"].fn(spark, sf_dir).collect()}
-    smallest = min(r["n_total"] for r in rows.values())
-    for r in rows.values():
-        assert 0 <= r["n_kept"] <= r["n_total"]
-        # every shard is cut toward the smallest one: expected kept count
-        # is n_total * bucket_limit/10000 ≈ smallest (hash-bucket variance)
-        assert r["bucket_limit"] == (10_000 * smallest) // r["n_total"]
-    # determinism: a repartitioned rerun selects identical counts
-    again = {r["source"]: r["n_kept"] for r in REGISTRY["sample_rebalance_sources"].fn(spark, sf_dir).collect()}
-    assert again == {s: r["n_kept"] for s, r in rows.items()}
-
-
-def test_pack_sequences_partitions_everything(spark, sf_dir):
-    from pipeline311_spark.plans import REGISTRY
-    from pipeline311_spark.plans.common import table
-
-    d = table(spark, sf_dir, "documents")
-    totals = {
-        r["source"]: (r["n"], r["tok"])
-        for r in d.groupBy("source")
-        .agg(F.count("*").alias("n"), F.sum(F.size(F.split("text", " "))).alias("tok"))
-        .collect()
-    }
-    packs = REGISTRY["text_pack_sequences"].fn(spark, sf_dir).collect()
-    by_src: dict = {}
-    for r in packs:
-        by_src.setdefault(r["source"], []).append(r)
-    for src, rows in by_src.items():
-        # packs cover every doc and every token exactly once
-        assert sum(r["n_docs"] for r in rows) == totals[src][0]
-        assert sum(r["pack_tokens"] for r in rows) == totals[src][1]
-        # pack ids are contiguous from 0 (greedy cumulative assignment)
-        ids = sorted(r["pack_id"] for r in rows)
-        assert ids == list(range(len(ids)))
 
 
 def test_contamination_skips_short_docs(spark):
-    from pipeline311_spark.plans.analytics12 import _grams
+    from pipeline311_spark.plans.curation3 import _grams
 
     df = spark.createDataFrame(
         [(1, "only five words right here now", "srcX"),
@@ -153,59 +17,3 @@ def test_contamination_skips_short_docs(spark):
     g = _grams(df)
     assert g.filter(F.col("doc_id") == 1).count() == 0  # < 13 tokens -> no grams
     assert g.filter(F.col("doc_id") == 2).count() == 20 - 13 + 1
-
-
-def test_cap_per_key_semantics_and_stability(spark):
-    from pipeline311_spark.ext.sampling import cap_per_key
-
-    df = spark.range(0, 600).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 3).cast("string").alias("src")
-    )
-    capped = cap_per_key(df, "src", "doc_id", cap=50)
-    counts = {r["src"]: r["n"] for r in capped.groupBy("src").agg(F.count("*").alias("n")).collect()}
-    assert counts == {"0": 50, "1": 50, "2": 50}
-    # deterministic under repartitioning: same kept set, same ranks
-    a = sorted((r["doc_id"], r["keep_rank"]) for r in capped.collect())
-    b = sorted(
-        (r["doc_id"], r["keep_rank"])
-        for r in cap_per_key(df.repartition(13), "src", "doc_id", cap=50).collect()
-    )
-    assert a == b
-    # under-cap keys pass through whole
-    small = cap_per_key(df.filter("doc_id < 30"), "src", "doc_id", cap=50)
-    assert small.count() == 30
-
-
-def test_cap_per_key_plan_uses_window_group_limit(spark):
-    from pipeline311_spark.ext.sampling import cap_per_key
-
-    df = spark.range(0, 100).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 3).cast("string").alias("src")
-    )
-    plan = cap_per_key(df, "src", "doc_id", cap=5)._jdf.queryExecution().executedPlan().toString()
-    # rank<=cap must be pushed into a map-side partial group limit so a
-    # hot key never ships its full row count through the exchange
-    assert "WindowGroupLimit" in plan
-
-
-def test_repetition_metrics_flag_looping_text(spark):
-    from pipeline311_spark.ext.textstats import repetition_metrics
-
-    df = spark.createDataFrame(
-        [
-            (1, "spam spam spam spam"),                      # one token everywhere
-            (2, "alpha beta gamma delta epsilon zeta"),      # all distinct
-            (3, "ab"),                                       # too short for trigrams
-        ],
-        "doc_id long, text string",
-    )
-    rows = {r["doc_id"]: r for r in repetition_metrics(df, "doc_id", "text").collect()}
-    assert rows[1]["n_tokens"] == 4
-    assert rows[1]["top_token_frac"] == 1.0
-    assert rows[1]["top_bigram_frac"] == 1.0          # "spam spam" x3 of 3
-    assert rows[1]["dup_trigram_frac"] == 1.0         # "spam spam spam" x2 of 2
-    assert rows[2]["top_token_frac"] == pytest.approx(1 / 6)
-    assert rows[2]["dup_trigram_frac"] == 0.0         # 4 distinct trigrams
-    assert rows[3]["n_tokens"] == 1
-    assert rows[3]["top_bigram_frac"] is None         # no bigrams
-    assert rows[3]["dup_trigram_frac"] is None

@@ -11,8 +11,8 @@ driver's own canonicalization (imported from check_oracle).
 Queries whose oracle references any other table are skipped (the
 hostile dir ships documents/events/embeddings).  Scope: the TPC-H
 relational tables follow the spec's NOT NULL key constraints — their
-hostile counterparts are governed by the audit_referential_integrity /
-audit_expectations gates, not synthetic NULL keys (primary-key
+hostile counterparts are governed by the audit_referential_integrity
+gate, not synthetic NULL keys (primary-key
 NULLness is out of contract); the dirty-in-practice tables are the
 three covered here.  Id columns (doc_id / vec_id / event_id) stay
 non-NULL in the hostile fixtures for the same reason — and note that
@@ -76,7 +76,7 @@ HOSTILE_DOCS = [
     (10, "unicode café naïve résumé tokens", "fr", "web", 32),
     (11, "the and of to a the and of to a", "en", "books", 31),
     # trailing-newline SOURCE: Java-regex '$' matches before it, RE2
-    # '$' does not — the anchor class audit_expectations' \z avoids
+    # '$' does not — a pattern anchored with \z agrees on both
     (12, "plain text here", "en", "web\n", 15),
 ]
 

@@ -34,7 +34,7 @@ STATIC = {
     "K8": ("operators/reconcile.py reconcile_deletes (tombstone archive)", "tests/test_operators.py"),
     "K9": ("sinks/writers.py overwrite_reload", "oracle gate (k9_truncate_reload write+read-back)"),
     "K10": ("N/A — stale/broken seed path in reference (SURVEY §2.9.4)", "N/A — dead code in the reference itself (SURVEY §2.9.4)"),
-    "P13": ("functions/text.py ago_sanitize", "oracle gate (pipeline_gold_projection, text_pii_redaction)"),
+    "P13": ("functions/text.py ago_sanitize", "oracle gate (pipeline_gold_projection)"),
     "P14": ("coalesce/nullif edge conventions (plans/pipeline_clean.py gold projection)", "tests/test_canon_safety.py; oracle gate (pipeline_gold_projection)"),
     "P15": ("functions/timeparse.py utc_string_relocalize (fixes reference bug §2.9.3)", "tests/test_functions_misc.py (utc_string_relocalize)"),
     "P16": ("functions/timeparse.py to_local_string", "tests/test_functions_misc.py (to_local_string); oracle gate (p16_dst_offset_format)"),
@@ -91,10 +91,10 @@ STATIC = {
     "ext:layout": ("operators/layout.py (Z-order clustered writes for 2-D scan pruning)", "tests/test_layout.py"),
     "ext:graph": ("ext/graph.py (iterative min-label connected components; dup clusters)", "tests/test_properties.py (vs union-find)"),
     "ext:versioning": ("plans/curation4.py (snapshot diff; dirty-shard incremental export report)", "tests/test_curation4.py"),
-    "ext:quantize": ("ext/quantize.py int8 + plans/curation4.py PQ encode/ADC/recall", "tests/test_curation4.py (python replays)"),
+    "ext:quantize": ("plans/curation4.py PQ encode/ADC/recall + ext/ann_store.py residual PQ codes", "tests/test_curation4.py (python replays)"),
     "ext:retrieval": ("stored BM25 index: term-clustered postings (sorted by term, doc_id)/df/stats artifacts, incremental merge, vocabulary-pruned serve (ext/retrieval.py, plans/retrieval2.py); dense top-k; N-ranker RRF fusion (rrf_fuse); MMR rerank", "tests/test_retrieval_store.py (incl. the clustered layout), tests/test_curation3.py, tests/test_curation4.py"),
     "ext:export": ("deterministic hash-shard export + dirty-shard incremental report (plans/curation3.py, plans/curation4.py)", "tests/test_curation3.py"),
-    "ext:sampling": ("ext/sampling.py (temperature/importance weighting, quota fill, per-key caps, two-phase running sums)", "tests/test_properties.py"),
+    "ext:sampling": ("ext/sampling.py (hash buckets, two-phase running sums) + plans/curation4.py importance weighting", "tests/test_properties.py"),
     "ext:ann-log": ("ANN codes as a batch_id delta log: foreachBatch append, compaction, pruned log serve (ext/ann_store.py)", "tests/test_ann_store.py"),
     "ext:gram-log": ("MinHash gram table delta log: append/compact/serve cycle (ext/dedup.py)", "tests/test_gram_log.py"),
     "ext:bm25-delete": ("BM25 merge-by-subtraction uncompacted log delete (ext/retrieval.bm25_index_delete_batch)", "tests/test_index_delete.py"),
@@ -154,7 +154,7 @@ def main():
     # README registry counts are GENERATED, never hand-edited: every
     # "N registry queries" / "N/N at sf..." mention is rewritten from
     # the live registry so the docs can't drift from the code again
-    # (r5 verdict: README said 176 after audit_expectations made 177).
+    # (r5 verdict: README said 176 after the registry grew to 177).
     import re
 
     readme = os.path.join(repo, "README.md")

@@ -1,6 +1,7 @@
 """ANN recall/fan-out probe (r8, VERDICT r7 punch #6): put NUMBERS on
-the recall-vs-candidate-fraction trade for the three ANN paths —
-single-bucket LSH, multi-probe LSH, and IVF — against exact
+the recall-vs-candidate-fraction trade for the ANN paths —
+single-bucket LSH, multi-probe LSH, and the stored IVF-PQ index
+(ext/ann_store.py) — against exact
 brute-force cosine, at sf0.1 and on perturbation-amplified corpora
 (tools/scale_amplify.py's embedding builder: replica i rotates the
 vector, preserving norms/distribution while growing bucket occupancy
@@ -36,7 +37,6 @@ PLANES = 8
 SEED = 7
 DIM = 64
 IVF_C = 16
-IVF_NPROBE = 2
 
 
 def _clustered_embeddings(spark, n: int, g: int = 8, dim: int = DIM, spread: float = 0.08):
@@ -153,9 +153,6 @@ def main() -> None:
     )
     from pipeline311_spark.ext.similarity import (
         brute_force_topk,
-        ivf_ann_topk,
-        ivf_assign,
-        ivf_probe_cells,
         lsh_ann_topk,
         lsh_bucket,
         lsh_multiprobe_topk,
@@ -183,7 +180,6 @@ def main() -> None:
             corpus = spark.read.parquet(path).filter(F.col("embedding").isNotNull())
             n_corpus = corpus.count()
             queries = corpus.filter(F.col("vec_id") < Q)
-            centroids = corpus.filter(F.col("vec_id") < IVF_C)
 
             exact = {
                 (r["query_id"], r["neighbor_id"])
@@ -214,23 +210,9 @@ def main() -> None:
                 )
                 return pairs / (Q * n_corpus)
 
-            def fanout_ivf(nprobe: int = IVF_NPROBE) -> float:
-                cells = ivf_assign(corpus, centroids, "vec_id", "embedding")
-                probes = ivf_probe_cells(
-                    queries, centroids, "vec_id", "embedding", nprobe
-                )
-                pairs = (
-                    probes.select("query_id", "centroid_id")
-                    .join(cells.select("vec_id", "centroid_id"), "centroid_id")
-                    .filter(F.col("query_id") != F.col("vec_id"))
-                    .count()
-                )
-                return pairs / (Q * n_corpus)
-
             # the trade curve: LSH at the registry's 8 planes and a
-            # wider 4-plane setting, multi-probe for both, IVF at
-            # nprobe 2 and 4 — recall climbs with fan-out; the probe
-            # makes the slope a number
+            # wider 4-plane setting, multi-probe for both — recall
+            # climbs with fan-out; the probe makes the slope a number
             methods = {
                 "lsh_p8": (
                     lambda: lsh_ann_topk(
@@ -255,14 +237,6 @@ def main() -> None:
                         corpus, queries, k=K, n_planes=4, seed=SEED, dim=DIM
                     ),
                     lambda: fanout_lsh(True, 4),
-                ),
-                "ivf_np2": (
-                    lambda: ivf_ann_topk(corpus, queries, centroids, k=K, nprobe=2),
-                    lambda: fanout_ivf(2),
-                ),
-                "ivf_np4": (
-                    lambda: ivf_ann_topk(corpus, queries, centroids, k=K, nprobe=4),
-                    lambda: fanout_ivf(4),
                 ),
             }
 

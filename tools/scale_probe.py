@@ -34,7 +34,6 @@ DEFAULT = [
     "sim_bruteforce_topk",
     "sim_lsh_ann_topk",
     "text_lang_id",
-    "text_contamination_13gram",
     "k3_upsert_merge",
     "q_sessionize",
 ]

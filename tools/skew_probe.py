@@ -1,17 +1,14 @@
 """Skewed fact⋈fact join probe (r6 punch #7): measure, at bench scale
-on local[32], the three ways to execute a join whose left side rides
-one pathological hot key:
+on local[32], two ways to execute a join whose left side rides one
+pathological hot key:
 
 * ``aqe_skew``   — plain sort-merge join, AQE skew-join splitting ON
                    (the SCALE.md default claim).  The executed plan is
                    checked to actually contain ``skew=true``.
 * ``no_aqe``     — the same join with skew splitting OFF: the
                    pathological baseline (one reducer drags the stage).
-* ``salted``     — operators/skew.salted_join: explicit key salting +
-                   small-side replication (the fallback for cases AQE
-                   can't split).
 
-All three must return the same row count (they're the same join).
+Both must return the same row count (they're the same join).
 Prints one JSON line; paste the numbers into SCALE.md.
 
 Usage: python tools/skew_probe.py [n_left_millions (default 20)]
@@ -30,8 +27,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
-
-    from pipeline311_spark.operators.skew import salted_join
 
     n_m = float(sys.argv[1]) if len(sys.argv) > 1 else 20.0
     n_left = int(n_m * 1_000_000)
@@ -93,16 +88,6 @@ def main() -> None:
     plan = agg._jdf.queryExecution().executedPlan().toString()
     skew_fired = "skew=true" in plan
     run_plain(False, "no_aqe")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-
-    def run_salted():
-        j = salted_join(left, right, "k", salt_on="payload", buckets=cpus * 2)
-        agg = j.agg(F.count(F.lit(1)).alias("n"), F.sum(F.col("payload") % 97).alias("s"))
-        (row,), secs = timed(agg.collect)
-        counts["salted"] = row["n"]
-        results["salted"] = secs
-
-    run_salted()
     assert len(set(counts.values())) == 1, f"row counts diverge: {counts}"
     print(
         json.dumps(
