@@ -1,13 +1,13 @@
 """North-star extensions: the operations a large-scale training-data
 pipeline needs, designed shuffle-first for 100 TB.
 
-* dedup.py      exact, MinHash+LSH, SimHash, n-gram Jaccard, embedding
-                cosine near-dup
-* similarity.py brute-force cosine top-k baseline + LSH-bucketed ANN
+* dedup.py      exact, MinHash+LSH and n-gram Jaccard near-dup pairs,
+                and the stored gram log
+* similarity.py cosine / squared-L2 kernels and brute-force top-k
+* retrieval.py, ann_store.py  stored BM25 and IVF-PQ indexes
 * textstats.py  language-ID, quality scoring, token counting,
                 document fingerprinting
-* multimodal.py opaque binary columns with typed metadata; decode /
-                feature-extract plumbing (libs stubbed)
+* multimodal.py opaque binary columns with typed metadata (manifest)
 
 Design rules: no driver-side materialization, candidate generation is
 always key-bucketed (band join) so the pair space never goes O(n^2),

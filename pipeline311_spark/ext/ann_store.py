@@ -1,10 +1,8 @@
 """Dense retrieval as a STORED, incrementally maintained ANN index
 (IVF coarse cells + product-quantization codes) — the vector-side twin
-of the BM25 artifact stack (ext/retrieval.py) and the answer to
-VERDICT r8 item 1: until round 9 the IVF layout and the PQ codes were
-rebuilt inside every query (sim_pq_encode re-derives the codebook
-per run).
-A serving deployment stores them once per corpus version.
+of the BM25 artifact stack (ext/retrieval.py).  A serving deployment
+stores the IVF layout and the PQ codes once per corpus version instead
+of rebuilding them inside every query.
 
 Index contract (three parquet artifacts under one directory):
 
@@ -25,7 +23,7 @@ Index contract (three parquet artifacts under one directory):
   every batch: the serve scan is a pruned file read over codes only,
   never the corpus and never the un-probed cells.  The partition
   value is prefixed (``'c' + cell``) so Hive-style partition-value
-  inference can't re-type it (the sim_lsh_partitioned_probe lesson).
+  inference can't re-type it as an int.
 
 Metric conventions (shared with the oracle twins, bit-identical):
 cell assignment and probing use FULL-dimension squared L2, PQ encode
@@ -46,10 +44,8 @@ encoded with the STORED artifacts and written as its own log batch;
 deletes tombstone vec ids (:func:`ann_codes_delete_batch`) and
 :func:`ann_codes_compact` folds the log to one base.  The folded index
 is REQUIRED to equal a fresh build over corpus ∪ batch — trivially,
-because encode is a pure per-row function of the frozen artifacts; the
-registry query ``sim_ivfpq_incr_store`` proves it under the same
-DuckDB oracle as the from-scratch build, and tests/test_ann_store.py
-proves it on the artifacts themselves.
+because encode is a pure per-row function of the frozen artifacts;
+tests/test_ann_store.py proves it on the artifacts themselves.
 
 Reference parity note: the reference pipeline has no vector serving at
 all — this family extends the engine for the LLM-curation workloads
@@ -117,8 +113,7 @@ def assign_cells(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
     expression, blows up at the 2^12-2^16 cells a 100 TB corpus uses).
     Centroids are broadcast — one corpus scan, no shuffle until the
     per-vector top-1 window (which AQE sizes off |cells|·|corpus|
-    candidate rows, the same shape as
-    :func:`pipeline311_spark.ext.similarity.ivf_assign`).  Distances
+    candidate rows).  Distances
     are compared, never emitted."""
     c = F.broadcast(centroids.select("cell", "cv"))
     scored = ensure_parallelism(vectors.select("vec_id", "v")).join(c).select(
@@ -147,11 +142,10 @@ def pq_codes(
     most of the quantization loss at identical code size (SCALE.md).
     The subtraction is an elementwise double op (``zip_with``), so the
     DuckDB twin's ``p[1] - p[2]`` is bit-identical and the exact oracle
-    gate survives.  Raw (non-residual) PQ remains available as the
-    cell-less query-local path (plans/curation4 sim_pq_*)."""
+    gate survives."""
     if not codebook:
         # stable schema, zero rows: with no codebook there is nothing
-        # an ADC query could rank (mirrors _pq_codes_projection)
+        # an ADC query could rank
         return assigned.filter(F.lit(False)).select(
             F.col("vec_id"),
             *[F.lit(None).cast("long").alias(f"code{j}") for j in range(m)],
@@ -219,7 +213,16 @@ def pq_code_col(j: int, codebook: dict[int, list[float]], subdim: int, v_col: st
 def _adc_dist_sql(
     qv: Sequence[float], codebook: dict[int, list[float]], m: int, subdim: int
 ) -> str:
-    """The ADC distance as a SQL string (see :func:`adc_dist_expr`)."""
+    """The ADC distance over ``code0..code{m-1}`` columns as a SQL
+    string: per-subspace LUT entries computed DRIVER-side with the
+    shared :func:`sqdist_py` fold and injected as a MAP literal keyed by
+    centroid id (exactly k entries per subspace — an array indexed by
+    id would carry max(id)+1 slots, and the residual seed convention
+    offsets codebook ids by n_cells, which at a production 2^16 cells
+    would pad every LUT with 65k NULL literals) — the scan projects M
+    small ints into a distance, no joins.  One string per call
+    (:func:`_dlit`): same element_at/map operators, same left-to-right
+    + fold, bit-identical results, no per-literal py4j cost."""
     cids = sorted(codebook)
     terms = []
     for j in range(m):
@@ -238,24 +241,6 @@ def _adc_dist_sql(
     for t in terms[1:]:
         dist = f"({dist} + {t})"
     return dist
-
-
-def adc_dist_expr(
-    qv: Sequence[float], codebook: dict[int, list[float]], m: int, subdim: int
-) -> Column:
-    """The ADC distance expression over ``code0..code{m-1}`` columns:
-    per-subspace LUT entries computed DRIVER-side with the shared
-    :func:`sqdist_py` fold and injected as a MAP literal keyed by
-    centroid id (exactly k entries per subspace — an array indexed by
-    id would carry max(id)+1 slots, and the residual seed convention
-    offsets codebook ids by n_cells, which at a production 2^16 cells
-    would pad every LUT with 65k NULL literals; review r10) — the scan
-    projects M small ints into a distance, no joins.  Shared by the
-    query-local sim_pq_adc_topk and the stored-index serve (review
-    r9).  One ``F.expr`` string per call (:func:`_dlit`): same
-    element_at/map operators, same left-to-right + fold, bit-identical
-    results, no per-literal py4j cost."""
-    return F.expr(_adc_dist_sql(qv, codebook, m, subdim))
 
 
 def ann_index_build(
@@ -358,7 +343,6 @@ def ann_quantizer_build(
         ),
     )
     return cents, cbook
-
 
 
 def _load_quantizer(
@@ -515,7 +499,7 @@ def ann_adc_topk_from_store(
     Output (query_id, rank, neighbor_id): ranks by (ADC distance,
     neighbor id); the double is compared, never emitted.  LUT entries
     are driver-side Python folds bit-identical to the oracle's
-    ``list_reduce`` (the sim_pq_adc_topk precedent).  ``qvecs`` is
+    ``list_reduce``.  ``qvecs`` is
     capped at :data:`SERVE_MAX_QUERIES` (driver-side expression-tree
     cost is linear in it).
 
@@ -579,7 +563,7 @@ def _residual_dist_case(
     """Residual-ADC distance for ONE query: codes quantize
     ``v − centroid[cell]`` (:func:`pq_codes`), so the query-side LUT
     must be built from the query's residual against the SAME cell —
-    a CASE over ``pcell`` with one :func:`adc_dist_expr` branch per
+    a CASE over ``pcell`` with one :func:`_adc_dist_sql` branch per
     probed cell (nprobe branches of m·k literals; rows of un-probed
     cells fall out of the surrounding ``cells`` filter, so the missing
     ELSE is never observed).  Residuals subtract driver-side in plain
@@ -711,129 +695,13 @@ def ann_cells_train(
     This IS :func:`pq_train_codebook` with ONE subspace spanning the
     full dimension: same lowest-id seed convention, same exact-decimal
     means (cross-run deterministic), same single-pass-per-iteration
-    shape.  Multi-iteration training breaks SQL-expressibility, so its
-    consumers are audit-gated (sim_ivfpq_trained_audit) — but a SINGLE
-    Lloyd step in ``exact_decimals`` mode IS oracle-exact, and the
+    shape.  Multi-iteration training breaks SQL-expressibility — but a
+    SINGLE Lloyd step in ``exact_decimals`` mode IS oracle-exact, and the
     registry gates it bit-for-bit against DuckDB
     (sim_ann_cells_train_step, VERDICT r10 item 1)."""
     return pq_train_codebook(
         v, pq_k=n_cells, m=1, subdim=dim, iters=iters, exact_decimals=exact_decimals
     )
-
-
-def ann_index_build_trained(
-    spark: SparkSession,
-    corpus: DataFrame,
-    out: str,
-    n_cells: int,
-    pq_k: int,
-    m: int = ANN_M,
-    subdim: int = ANN_SUBDIM,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """The TRAINED-quantizer build: Lloyd-train the coarse cells on the
-    corpus, assign, Lloyd-train the PQ codebook on the RESIDUALS (the
-    codebook then models within-cell spread — the quantity residual
-    codes encode), write all three artifacts (codes as batch 0 of the
-    codes log, replacing any existing store, like
-    :func:`ann_index_build`).  Serving is unchanged
-    (:func:`ann_adc_topk_from_store` — the store layout doesn't know or
-    care how its quantizer was trained; frozen-per-corpus-version and
-    incremental-append semantics carry over verbatim).  Cost:
-    2·``iters`` + 2 corpus passes, each a broadcast-join/projection
-    with a metadata-scale shuffle — the standard distributed k-means
-    shape.
-
-    The assign+residual pass is computed ONCE and persisted
-    (MEMORY_AND_DISK, spillable — the same ~1x-corpus cache budget the
-    BM25 token base takes): the codebook seed collect, every Lloyd
-    iteration, and the final encode all read the cached residuals
-    instead of re-running the broadcast-assign join + top-1 window per
-    consumer (round 11, guide §1.2 — the lazy ``resid`` lineage was
-    recomputed 4x: seed collect, each iteration, encode).  The cached
-    rows are the evaluated output of the identical ``zip_with``
-    subtraction, so codes and codebook are bit-identical to the
-    recompute-every-time plan."""
-    from pipeline311_spark.ext.cache import persist_tracked
-
-    v = _vec_frame(corpus, id_col, vec_col)
-    first = v.select(F.size("v").alias("d")).take(1)
-    dim = int(first[0]["d"]) if first else m * subdim
-    cents = ann_cells_train(v, n_cells, dim, iters=iters)
-    if first and not cents:
-        # a non-empty corpus training zero cells writes an index that
-        # serves nothing (review r10 — the quantizer-build guard,
-        # trained edition)
-        raise ValueError(
-            "ann_index_build_trained: a non-empty corpus trained zero "
-            "cells — n_cells must be >= 1"
-        )
-    centroids_df = meta_df(
-        spark, [(int(i), vec) for i, vec in sorted(cents.items())], _centroid_schema("cell")
-    )
-    write_parquet(centroids_df, os.path.join(out, "centroids"))
-    resid = None
-    try:
-        if cents:
-            resid = persist_tracked(
-                assign_cells(v, centroids_df).select(
-                    "vec_id",
-                    "cell",
-                    F.zip_with("v", "cv", lambda a, b: a - b).alias("v"),
-                )
-            )
-            cbook = pq_train_codebook(
-                resid, pq_k=pq_k, m=m, subdim=subdim, iters=iters
-            )
-        else:
-            cbook = {}
-        write_parquet(
-            meta_df(
-                spark, [(int(i), vec) for i, vec in sorted(cbook.items())], _centroid_schema("cid")
-            ),
-            os.path.join(out, "codebook"),
-        )
-        if resid is not None and cbook:
-            # encode from the SAME cached residuals: identical
-            # expressions to pq_codes over a fresh assign (pq_code_col
-            # on the residual column, pcell from the assigned cell)
-            codes = resid.select(
-                "vec_id",
-                *[
-                    pq_code_col(j, cbook, subdim, v_col="v").alias(f"code{j}")
-                    for j in range(m)
-                ],
-                F.concat(F.lit("c"), F.col("cell").cast("string")).alias("pcell"),
-            )
-        else:
-            codes = _encode(spark, v, cents, cbook, m, subdim)
-        append_rows(out, _codes_log(m), 0, codes, replace=True)
-    finally:
-        if resid is not None:
-            resid.unpersist(False)
-
-
-def cell_balance_py(codes_pops: dict[str, int]) -> tuple[int, int]:
-    """(max, lower-median) cell population from a collected
-    {pcell: count} map — the skew statistic nprobe pruning's worst case
-    depends on (a hot cell makes every probe that hits it scan-heavy).
-    Driver-side over |cells| values — metadata-scale, deterministic
-    (integer counts, sorted fold).
-
-    Caller contract (ADVICE r10): the map must cover the FULL trained
-    cell domain with explicit zeros for empty cells — a groupBy over
-    stored codes alone never emits a zero-population cell, which
-    biases the median upward and hides exactly the imbalance this
-    audit exists to expose (empty cells are wasted quantizer capacity
-    concentrated onto the hot ones).  Both callers fill from the
-    centroid set: plans/ann_store_q.q_ivfpq_trained_audit and
-    tools/recall_probe.py."""
-    if not codes_pops:
-        return (0, 0)
-    pops = sorted(codes_pops.values())
-    return (pops[-1], pops[(len(pops) - 1) // 2])
 
 
 def pq_train_codebook(

@@ -1,5 +1,5 @@
-"""Deduplication operators (north star): exact, n-gram Jaccard,
-MinHash+LSH, SimHash, embedding-cosine near-dup.
+"""Deduplication operators (north star): exact, n-gram Jaccard and
+MinHash+LSH, with the stored gram log the MinHash path serves from.
 
 Scale design (the part that matters at 100 TB):
 
@@ -14,7 +14,6 @@ Scale design (the part that matters at 100 TB):
 """
 
 from __future__ import annotations
-
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -34,7 +33,6 @@ from pipeline311_spark.ext.hashing import (
     affine,
     ensure_parallelism,
     hash_params,
-    portable_hash64,
 )
 from pipeline311_spark.ext.textstats import fingerprint, normalize_text, tokens
 
@@ -652,36 +650,6 @@ def _bucket_pairs_expr(carry: tuple[str, ...] = ()) -> Column:
     )
 
 
-def lsh_dropped_buckets(
-    sig: DataFrame, k: int = 16, bands: int = 4, max_bucket: int = 200
-) -> DataFrame:
-    """Observability for the ``max_bucket`` gate (ADVICE r4): the
-    (band, key, n) rows :func:`lsh_candidate_pairs` would DROP at this
-    cap.  Since the content collapse, a drop can only hit buckets with
-    > max_bucket DISTINCT gram sets (identical docs collapse to one
-    rep and are reported via group expansion regardless), i.e. heavily
-    templated near-but-not-identical corpora — run this audit when
-    recall matters, and either raise ``max_bucket`` or pass
-    ``max_bucket=None`` (no gate) with eyes open.
-
-    Takes the RAW per-doc signature table (:func:`minhash_signatures`)
-    and counts DISTINCT signatures per bucket — the signature-space
-    image of the pipeline's collapsed-representative count, so a
-    500-identical-doc bucket audits as n=1, exactly as the real gate
-    sees it (a raw ``count(*)`` here would report phantom drops the
-    pipeline never makes).  Two distinct gram sets colliding to one
-    full signature (~2^-60·k per pair) audit as one — negligible."""
-    sig_cols = [c for c in sig.columns if c.startswith("mh")]
-    banded = sig.select(
-        F.struct(*sig_cols).alias("__sig"), F.explode(_band_expr(k, bands)).alias("bk")
-    ).select("__sig", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    return (
-        banded.groupBy("band", "key")
-        .agg(F.countDistinct("__sig").alias("n"))
-        .filter(F.col("n") > max_bucket)
-    )
-
-
 def minhash_dedup_pairs(
     df: DataFrame,
     id_col: str,
@@ -878,307 +846,6 @@ def _jaccard_verify(
     )
 
 
-def minhash_incremental_pairs(
-    existing: DataFrame,
-    new: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 16,
-    bands: int = 4,
-    n: int = 5,
-    threshold: float = 0.5,
-    seed: int = 42,
-    max_bucket: int = 200,
-    max_group: int = IDENT_MAX_GROUP,
-) -> DataFrame:
-    """Incremental MinHash-LSH: near-dup pairs that involve at least one
-    NEW doc — the production shape for a growing corpus, where each
-    arriving batch is deduped against everything ingested so far
-    without re-finding old-old pairs or re-verifying the corpus.
-
-    Identical pair semantics to running :func:`minhash_dedup_pairs`
-    over ``existing ∪ new`` and keeping pairs with a new member: the
-    bucket size-gate sees combined bucket sizes, so gating decisions
-    match the full run exactly (ids must be disjoint across the two
-    inputs — caller contract).
-
-    Cost model at scale: signatures here are computed from both inputs
-    for self-containment, but the existing side's signature/banded
-    tables are exactly what previous runs already materialized — read
-    them from storage and per-batch cost is
-    O(batch + matching buckets), not O(corpus).  Verify grams are
-    recomputed from the source text restricted to candidate docs — a
-    broadcast semi-join before any hashing, zero cache footprint — so
-    the only corpus-proportional work left is the stored signature
-    scan.
-
-    Plan shape: the two inputs are tagged and UNIONED BEFORE gram
-    generation, so the self-contained form pays ONE tokenize pass and
-    ONE signature shuffle over existing∪new (the flag rides the gram
-    rows into the groupBy key — (doc, is_new) has the same cardinality
-    as doc under the disjoint-ids contract), not one pipeline per
-    side."""
-    tagged = existing.select(
-        F.col(id_col).alias("__id"), F.col(text_col).alias("__t"), F.lit(False).alias("is_new")
-    ).unionByName(
-        new.select(
-            F.col(id_col).alias("__id"), F.col(text_col).alias("__t"), F.lit(True).alias("is_new")
-        )
-    )
-    gh = _gram_hash_table(tagged, "__id", "__t", n, distinct=True, extra=("is_new",))
-    sig = gh.groupBy("doc", "is_new").agg(*_minhash_aggs(k, seed), *_stat_aggs())
-    sigg = persist_tracked(_with_groups_flagged(sig))
-    reps = sigg.filter(F.col("doc") == F.col("rep"))
-    # _incremental_candidates persists + counts its result internally —
-    # the probe-id broadcast below and the verify join both reuse that
-    # materialization (no caller-side persist: doubling it re-registers
-    # the same handle and pays an extra count job, review r7)
-    cand = _incremental_candidates(
-        reps.select(
-            "doc", F.col("g_new").alias("is_new"), "rep_new", "gn",
-            *[f"mh{i}" for i in range(k)],
-        ),
-        k, bands, max_bucket,
-    )
-    # cand is persisted+counted inside _incremental_candidates, so the
-    # recount for the probe-set distinct gate reads cached blocks
-    cand_docs = _probe_doc_ids(cand, cand.count(), alias="__id")
-    small = tagged.join(F.broadcast(cand_docs), "__id", "left_semi")
-    doc_sets = _row_gram_arrays(small, "__id", "__t", n).select(
-        "doc", F.col("garr").alias("sset")
-    )
-    cross = _jaccard_verify(cand, doc_sets, threshold)
-    return _flag_expand_ident(cross, sigg, max_group)
-
-
-def _with_groups_flagged(sig: DataFrame) -> DataFrame:
-    """:func:`_with_groups` plus the flag columns the incremental paths
-    need: ``rep_new`` (is the representative itself a new doc) and
-    ``g_new`` (does the group contain ANY new doc).  One narrow window
-    shuffle, same as the unflagged variant."""
-    w = Window.partitionBy("sz", "fp1", "fp2")
-    mn = F.min(F.struct(F.col("doc"), F.col("is_new"))).over(w)
-    return (
-        sig.withColumn("rep", mn["doc"])
-        .withColumn("rep_new", mn["is_new"])
-        .withColumn("gn", F.count("*").over(w))
-        .withColumn("g_new", F.max(F.col("is_new").cast("int")).over(w) == 1)
-    )
-
-
-def _flag_expand_ident(
-    cross: DataFrame, sigg: DataFrame, max_group: int, cross_cap: int = CROSS_MAX_PAIRS
-) -> DataFrame:
-    """Expansion + identical-group pairs for the incremental paths:
-    exactly the full-run expansion (:func:`_expand_cross` /
-    :func:`_ident_member_pairs`) filtered to member pairs with >= 1 NEW
-    doc — so the result provably equals the full re-dedup filtered to
-    pairs involving a new member, star/clique/bridge semantics
-    included.  The cross-group cap (``CROSS_MAX_PAIRS``) gates on group
-    sizes known BEFORE the exploding membership joins — carried onto
-    ``cross`` through the banding (``_incremental_candidates`` emits
-    ``gn_a/gn_b`` and ``rep_new_a/rep_new_b``), so the gate is a pure
-    row filter with zero added stages, same as the full run; a capped
-    pair's bridge edge survives iff either REP doc is new — which is
-    exactly "the full run's bridge, filtered to new members"."""
-    # same single-plan shape as _expand_cross: the cap rides the join
-    # condition; a capped pair matches nothing and coalesces to the
-    # rep↔rep bridge row (no filter-split + union re-running the verify)
-    small = F.col("gn_a") * F.col("gn_b") <= F.lit(cross_cap)
-    a = sigg.select(
-        F.col("rep").alias("__ra"), F.col("doc").alias("__ma"), F.col("is_new").alias("__na")
-    )
-    b = sigg.select(
-        F.col("rep").alias("__rb"), F.col("doc").alias("__mb"), F.col("is_new").alias("__nb")
-    )
-    keep_new = F.when(
-        small, F.col("__na") | F.col("__nb")
-    ).otherwise(F.col("rep_new_a") | F.col("rep_new_b"))
-    expanded = (
-        cross.join(a, (F.col("doc_a") == F.col("__ra")) & small, "left")
-        .join(b, (F.col("doc_b") == F.col("__rb")) & small, "left")
-        .filter(keep_new)
-        .select(
-            F.least(F.coalesce("__ma", "doc_a"), F.coalesce("__mb", "doc_b")).alias("doc_a"),
-            F.greatest(F.coalesce("__ma", "doc_a"), F.coalesce("__mb", "doc_b")).alias("doc_b"),
-            "jaccard",
-        )
-    )
-    # clique via bucket-collect with a gn-gated buffer, pair gen
-    # array-side with the >=1-new filter inline — grouped by the content
-    # key the _with_groups_flagged window already partitioned on, so the
-    # aggregation rides that partitioning with zero added exchange
-    small = sigg.filter((F.col("gn") <= max_group) & (F.col("gn") >= 2))
-    members = small.groupBy("sz", "fp1", "fp2").agg(
-        F.sort_array(F.collect_set(F.struct("doc", "is_new"))).alias("members")
-    )
-    m = F.col("members")
-    pair_expr = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.filter(
-                F.transform(
-                    F.slice(m, i + 2, F.greatest(F.size(m) - i - 1, F.lit(0))),
-                    lambda y: F.struct(
-                        x["doc"].alias("doc_a"),
-                        y["doc"].alias("doc_b"),
-                        (x["is_new"] | y["is_new"]).alias("has_new"),
-                    ),
-                ),
-                lambda p: p["has_new"],
-            ),
-        )
-    )
-    clique = members.select(F.explode(pair_expr).alias("p")).select(
-        F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b")
-    )
-    star = sigg.filter(
-        (F.col("gn") > max_group)
-        & (F.col("doc") != F.col("rep"))
-        & (F.col("rep_new") | F.col("is_new"))
-    ).select(F.col("rep").alias("doc_a"), F.col("doc").alias("doc_b"))
-    ident = clique.unionByName(star).withColumn("jaccard", F.lit(1.0))
-    return expanded.unionByName(ident)
-
-
-def _incremental_candidates(sig: DataFrame, k: int, bands: int, max_bucket: int) -> DataFrame:
-    """Band a flagged signature table (doc, is_new, rep_new, gn, mh*) —
-    since the r5 content collapse, one REPRESENTATIVE row per distinct
-    gram set, with ``is_new`` meaning "the group contains any new doc"
-    — and emit the distinct candidate rep pairs with >=1 flagged
-    member, persisted + counted (the tiny materialization every caller
-    reuses).  ``rep_new`` (the rep doc's OWN flag) and ``gn`` (group
-    size) ride the banding into the pair output as ``rep_new_a/b`` /
-    ``gn_a/b``, so the downstream expansion cap and bridge filter
-    (:func:`_flag_expand_ident`) need no sizes join.
-
-    The bucket size-gate sees COMBINED rep counts (existing + new
-    content groups together), so gating matches a full re-dedup
-    exactly; buckets with no new-flagged group are dropped before
-    membership collection — the incremental work-pruning (their pairs
-    could only ever expand to old-old member pairs)."""
-    banded = sig.select(
-        "doc", "is_new", "rep_new", "gn", F.explode(_band_expr(k, bands)).alias("bk")
-    ).select(
-        "doc", "is_new", "rep_new", "gn",
-        F.col("bk.band").alias("band"), F.col("bk.key").alias("key"),
-    )
-    wsz = Window.partitionBy("band", "key")
-    buckets = (
-        banded.withColumn("n", F.count("*").over(wsz))
-        .withColumn("n_new", F.sum(F.col("is_new").cast("int")).over(wsz))
-        .filter((F.col("n") >= 2) & (F.col("n") <= max_bucket) & (F.col("n_new") >= 1))
-        .groupBy("band", "key")
-        .agg(
-            F.sort_array(
-                F.collect_set(F.struct("doc", "is_new", "rep_new", "gn"))
-            ).alias("members")
-        )
-    )
-    m = F.col("members")
-    pairs = F.flatten(
-        F.transform(
-            m,
-            lambda x, i: F.filter(
-                F.transform(
-                    F.slice(m, i + 2, F.greatest(F.size(m) - i - 1, F.lit(0))),
-                    lambda y: F.struct(
-                        x["doc"].alias("doc_a"),
-                        y["doc"].alias("doc_b"),
-                        x["rep_new"].alias("rep_new_a"),
-                        y["rep_new"].alias("rep_new_b"),
-                        x["gn"].alias("gn_a"),
-                        y["gn"].alias("gn_b"),
-                        (x["is_new"] | y["is_new"]).alias("has_new"),
-                    ),
-                ),
-                lambda p: p["has_new"],
-            ),
-        )
-    )
-    cand = (
-        buckets.select(F.explode(pairs).alias("p"))
-        .select(
-            F.col("p.doc_a").alias("doc_a"),
-            F.col("p.doc_b").alias("doc_b"),
-            F.col("p.rep_new_a").alias("rep_new_a"),
-            F.col("p.rep_new_b").alias("rep_new_b"),
-            F.col("p.gn_a").alias("gn_a"),
-            F.col("p.gn_b").alias("gn_b"),
-        )
-        .distinct()
-    )
-    cand = persist_tracked(cand)
-    cand.count()
-    return cand
-
-
-def minhash_incremental_from_store(
-    existing_sig: DataFrame,
-    existing_grams: DataFrame,
-    new: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 16,
-    bands: int = 4,
-    n: int = 5,
-    threshold: float = 0.5,
-    seed: int = 42,
-    max_bucket: int = 200,
-    max_group: int = IDENT_MAX_GROUP,
-) -> DataFrame:
-    """The true per-batch production shape of incremental dedup: the
-    corpus side arrives as the STORED signature table (doc, mh0..mh*)
-    and STORED gram table (doc, g) that previous runs materialized
-    (see :func:`minhash_pairs_from_grams` / dedup_minhash_from_store) —
-    the corpus text is never re-tokenized.  Per-batch work is the
-    batch's own gram+signature pipeline, one banding pass over
-    stored ∪ batch signatures, and exact-Jaccard verify over grams
-    restricted to candidate docs (stored grams for the corpus side,
-    the batch's for the new side).  Result provably equals
-    :func:`minhash_incremental_pairs` on the same inputs (oracle-gated:
-    dedup_minhash_incr_store).
-
-    ``existing_sig``/``existing_grams`` must come from the same corpus
-    version with the same (k, n, seed); ids disjoint from ``new``.
-    ``existing_grams`` rows are per-doc DISTINCT (the stored-table
-    contract, :func:`minhash_pairs_from_grams`) — the corpus-side
-    content stats are re-derived from them with one combinable
-    aggregation (3 longs per doc across the wire)."""
-    new_gh = persist_tracked(_gram_hash_table(new, id_col, text_col, n, distinct=True))
-    new_sig = new_gh.groupBy("doc").agg(*_minhash_aggs(k, seed), *_stat_aggs()).withColumn(
-        "is_new", F.lit(True)
-    )
-    old_stats = existing_grams.select("doc", "g").groupBy("doc").agg(*_stat_aggs())
-    old_sig = (
-        existing_sig.select("doc", *[f"mh{i}" for i in range(k)])
-        .join(old_stats, "doc")
-        .withColumn("is_new", F.lit(False))
-    )
-    sigg = persist_tracked(_with_groups_flagged(old_sig.unionByName(new_sig)))
-    reps = sigg.filter(F.col("doc") == F.col("rep"))
-    # _incremental_candidates persists + counts internally (see
-    # minhash_incremental_pairs) — both probe-id broadcasts reuse it
-    cand = _incremental_candidates(
-        reps.select(
-            "doc", F.col("g_new").alias("is_new"), "rep_new", "gn",
-            *[f"mh{i}" for i in range(k)],
-        ),
-        k, bands, max_bucket,
-    )
-    # recount reads _incremental_candidates' cached blocks (see above)
-    cand_docs = _probe_doc_ids(cand, cand.count())
-    # corpus side: sets rebuilt from the STORED exploded gram rows (the
-    # on-disk contract — no array form exists); batch side: map-side
-    # arrays would save the collect_set only for the (tiny) new docs,
-    # so both ride one union + one aggregation instead of two plans
-    cand_grams = existing_grams.select("doc", "g").join(
-        F.broadcast(cand_docs), "doc", "left_semi"
-    ).unionByName(new_gh.join(F.broadcast(cand_docs), "doc", "left_semi"))
-    cross = _jaccard_verify(cand, _sets_from_grams(cand_grams), threshold)
-    return _flag_expand_ident(cross, sigg, max_group)
-
-
 # ---------------------------------------------------------------------------
 # The stored gram table as a tombstoned row log (the ext/artifact.py
 # lifecycle).  Rows are per-(doc, gram) and batch doc ids are disjoint,
@@ -1246,165 +913,3 @@ def gram_log_compact(spark, store_dir: str) -> None:
     """Fold the log to its ``batch_id = -1`` base, tombstoned docs
     physically dropped (ext/artifact.py ``compact_log``)."""
     compact_log(spark, store_dir, _GRAM_LOG)
-
-
-# ---------------------------------------------------------------------------
-# SimHash
-# ---------------------------------------------------------------------------
-
-# 60 bits = the full entropy of portable_hash64 (md5-derived), and with
-# 4 bands it gives 15-bit band keys (32k buckets per band).  The
-# amplified-corpus probe (tools/scale_amplify.py) caught the old 32-bit
-# default SATURATING: 8-bit band keys → 256 buckets, bucket occupancy
-# grows linearly with corpus size, and within-bucket pair generation
-# quadratically — 4.2M "near" pairs at 80k docs, mostly band-collision
-# false positives.  Wider keys keep occupancy (and pair volume) linear.
-SIMHASH_BITS = 60
-
-
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS) -> DataFrame:
-    """Per-doc SimHash: token hashes vote ±1 per bit; the sign vector is
-    the signature.  Token hashes are the 60-bit md5-based
-    ``portable_hash64`` (codegen'd; every signature bit carries real
-    entropy).
-
-    Shape: explode tokens, hash each ONCE (codegen'd), then one
-    groupBy with ``bits`` codegen'd ``sum`` aggregates.  Map-side
-    partial aggregation collapses each doc to one 33-long row before
-    the shuffle, so the exchange moves signatures, not token rows.
-    The earlier row-wise formulation (``transform`` + 32 ``aggregate``
-    lambdas over the hash array) avoided the shuffle but re-evaluated
-    interpreted higher-order lambdas per bit — measured ~20% slower
-    at sf0.1 despite zero exchanges.  Integer addition is commutative,
-    so both formulations are bit-identical (verified exceptAll == 0)."""
-    th = ensure_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("doc"),
-        F.explode(tokens(normalize_text(text_col))).alias("tok"),
-    ).select("doc", portable_hash64(F.col("tok")).alias("h"))
-    aggs, sig = _simhash_exprs(bits)
-    votes = th.groupBy("doc").agg(*aggs)
-    return votes.select("doc", sig.cast("long").alias("simhash"))
-
-
-@jvm_memo(maxsize=8)
-def _simhash_exprs(bits: int) -> tuple[tuple[Column, ...], Column]:
-    """Memoized per-bit vote aggregates + signature assembly (~0.5 s of
-    py4j-bound driver time to build `bits` agg trees; immutable
-    unresolved expressions over fixed intermediate names)."""
-    aggs = tuple(
-        F.sum(F.shiftright("h", i).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"b{i}")
-        for i in range(bits)
-    )
-    sig = sum(
-        (F.when(F.col(f"b{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0)) for i in range(bits)),
-        start=F.lit(0),
-    )
-    return aggs, sig
-
-
-def simhash_near_pairs(
-    sig: DataFrame,
-    bits: int = SIMHASH_BITS,
-    bands: int = 4,
-    max_hamming: int = 3,
-    max_bucket: int | None = 200,
-    max_group: int = IDENT_MAX_GROUP,
-) -> DataFrame:
-    """Hamming-near pairs via band join (a pair within ``max_hamming``
-    of ``bands`` bands must agree on ≥1 band when max_hamming < bands),
-    verified with an exact popcount.
-
-    Signature-level collapse (r5): hamming distance depends ONLY on the
-    signatures, so docs sharing a signature are collapsed to one
-    representative (min doc id) before banding — EXACT, no fingerprint
-    involved.  Same-signature groups emit their hamming-0 pairs by
-    expansion (clique up to ``max_group``, star beyond — see
-    ``IDENT_MAX_GROUP``), so a degenerate signature shared by millions
-    of boilerplate docs — the strongest duplicates in the corpus, and
-    the pairs the r4 ``max_bucket`` gate silently dropped — is always
-    reported, while the band self-join only ever sees distinct
-    signatures.
-
-    ``max_bucket`` drops band buckets with more than the cap's worth of
-    DISTINCT signatures before the self-join — the same spill-safe
-    window gate as :func:`lsh_candidate_pairs`.  A dropped bucket costs
-    recall only for cross-signature pairs whose OTHER agreeing bands
-    are also oversaturated; with ``bits``/``bands`` sized so keys don't
-    saturate (see SIMHASH_BITS note) the cap never triggers on healthy
-    data."""
-    w = Window.partitionBy("simhash")
-    # Persisted (tracked): the signature aggregation beneath feeds four
-    # branches of the returned plan (reps→band join, both expansion
-    # sides, identical-group pairs) — without the pin each branch could
-    # re-run the per-bit vote aggregation over the corpus (exchange
-    # reuse across union arms is not guaranteed under AQE).
-    groups = persist_tracked(
-        sig.select("doc", "simhash")
-        .withColumn("rep", F.min("doc").over(w))
-        .withColumn("gn", F.count("*").over(w))
-    )
-    # gn rides the banding so the expansion cap needs no sizes join
-    reps = groups.filter(F.col("doc") == F.col("rep")).select("doc", "simhash", "gn")
-    if bands < 1 or bits % bands:
-        # zero-width bands would key every signature to mask 0 — one
-        # global bucket, then the size gate drops everything (silent)
-        raise ValueError(f"bands must divide bits (got bits={bits}, bands={bands})")
-    width = bits // bands
-    mask = (1 << width) - 1
-    banded = reps.select(
-        "doc",
-        "simhash",
-        "gn",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(bi).alias("band"),
-                    F.shiftright(F.col("simhash"), bi * width).bitwiseAND(F.lit(mask)).alias("key"),
-                )
-                for bi in range(bands)
-            ])
-        ).alias("bk"),
-    ).select(
-        "doc", "simhash", "gn", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    wsz = Window.partitionBy("band", "key")
-    if max_bucket is not None:
-        banded = banded.withColumn("n", F.count("*").over(wsz)).filter(
-            F.col("n") <= max_bucket
-        ).drop("n")
-    a, b = banded.alias("a"), banded.alias("b")
-    cross = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-            F.col("a.gn").alias("gn_a"),
-            F.col("b.gn").alias("gn_b"),
-        )
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    # Expansion: rep↔rep pairs back to member↔member, sig columns
-    # following the least/greatest member swap — the shared kernel
-    # (:func:`_expand_cross`, same join-side sizing argument; gn rode
-    # the band join, so the cap is a pure row filter).
-    expanded = _expand_cross(
-        cross, groups, ["sig_a", "sig_b", "hamming"],
-        swap_cols=(("sig_a", "sig_b"),), gn_cols=("gn_a", "gn_b"),
-    )
-    ident = _ident_member_pairs(
-        groups, max_group, carry=("simhash",), group_key=("simhash",)
-    ).select(
-        "doc_a", "doc_b",
-        F.col("simhash").alias("sig_a"), F.col("simhash").alias("sig_b"),
-        F.lit(0).cast("integer").alias("hamming"),
-    )
-    return expanded.withColumn("hamming", F.col("hamming").cast("integer")).unionByName(ident)

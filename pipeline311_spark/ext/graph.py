@@ -1,5 +1,5 @@
 """Connected components over a pair/edge table — the dup-cluster
-builder that turns pairwise near-dup hits (MinHash/SimHash/Jaccard
+builder that turns pairwise near-dup hits (MinHash/Jaccard
 pairs) into groups with a canonical keeper per group.
 
 Algorithm: iterative min-label propagation (a.k.a. hash-to-min).

@@ -5,7 +5,7 @@ fine for a one-shot query, wrong at corpus scale where retrieval is a
 serving workload: the index must be a per-corpus-version ARTIFACT,
 built once, stored, and incrementally maintained, exactly like the
 stored gram table the MinHash family uses (ext/dedup.py,
-``minhash_pairs_from_grams`` / ``minhash_incremental_from_store``).
+``minhash_pairs_from_grams``).
 
 Index contract (three tables, all parquet-friendly):
 
@@ -30,7 +30,7 @@ writes only its own deltas, built from the batch alone.
 :func:`load_bm25_index` folds the log: postings by union, ``term_stats``
 by per-term ``df`` addition and ``corpus_stats`` by element addition —
 valid because batch doc ids are disjoint (the same disjointness
-contract as ``minhash_incremental_from_store``).  Deletes ride the same
+contract as the gram log's).  Deletes ride the same
 folds (:func:`bm25_index_delete_batch`: a doc-id tombstone log plus
 NEGATIVE stat deltas), and :func:`bm25_index_compact` folds the log to
 one base.  The folded index is REQUIRED to be row-identical to a

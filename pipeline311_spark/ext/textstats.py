@@ -47,36 +47,10 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
 
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """Token-count proxy for BPE vocabularies: whitespace tokens plus
-    one extra piece per punctuation mark (a BPE splits those off).
-    Pure arithmetic — cheap, portable (no lookahead regex, which RE2
-    lacks), good enough for length filtering."""
-    c = F.col(col) if isinstance(col, str) else col
-    return token_count(c) + punct_count(c)
-
-
 def marker_hits(col: Column | str, markers: list[str]) -> Column:
     toks = tokens(col)
     arr = F.array([F.lit(m) for m in markers])
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, F.lower(t))))
-
-
-def lang_scores(col: Column | str) -> dict[str, Column]:
-    return {lang: marker_hits(col, ms) for lang, ms in LANG_MARKERS.items()}
-
-
-def lang_id(col: Column | str, min_hits: int = 1) -> Column:
-    """Predicted language = argmax of marker hits (first-listed wins
-    ties); fewer than ``min_hits`` -> 'und'.
-
-    Single-Column convenience form: tokenization is re-inlined by
-    CollapseProject into every per-language score (L+ evaluations per
-    row).  For the hot path use :func:`lang_scores_on_tokens` +
-    :func:`lang_pred_from_scores` across staged selects (see
-    plans' text_lang_id) — tokens and scores each evaluate once."""
-    scores = lang_scores(col)
-    return lang_pred_from_scores(scores, min_hits)
 
 
 def lang_scores_on_tokens(toks_lower: Column) -> dict[str, Column]:
@@ -195,73 +169,5 @@ def chunk_token_windows(
             F.col("chunk_idx").cast("long"),
             F.size("__chunk").cast("long").alias("n_chunk_tokens"),
             F.array_join("__chunk", " ").alias("chunk_text"),
-        )
-    )
-
-
-def remove_boilerplate_lines(
-    df,
-    id_col: str,
-    text_col: str,
-    max_df: int = 2,
-    min_chars: int = 5,
-):
-    """Cross-document boilerplate LINE removal (the C4/RefinedWeb
-    curation step): a line whose normalized form (lower + trim)
-    appears in more than ``max_df`` DISTINCT documents is navigation /
-    header / footer boilerplate and is dropped from every document;
-    surviving lines are reassembled in original order.  Lines shorter
-    than ``min_chars`` after normalization never count toward (or get
-    dropped by) the frequency gate — short separators are content, not
-    boilerplate.
-
-    Plan shape at 100 TB: one explode of lines (scan-side), document
-    frequency via per-doc-DISTINCT collapse then a count on the line
-    key (the same df-gate shape as the n-gram ``max_df``), a LEFT ANTI
-    join against the (small — boilerplate is by definition the heavy
-    tail) drop set, and one groupBy(doc) to reassemble.  Docs whose
-    every line was dropped survive with empty text (LEFT join back to
-    the corpus), NULL-text docs emit no row (the registry NULL-text
-    convention).  Returns (id, n_lines, n_kept, clean_text).
-    """
-    lines = (
-        df.filter(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).alias("__id"),
-            F.posexplode(F.split(F.col(text_col), "\n")).alias("__pos", "__line"),
-        )
-        .withColumn("__norm", F.lower(F.trim("__line")))
-    )
-    drop = (
-        lines.filter(F.length("__norm") >= min_chars)
-        .select("__id", "__norm")
-        .distinct()
-        .groupBy("__norm")
-        .agg(F.count("*").alias("__df"))
-        .filter(F.col("__df") > max_df)
-        .select("__norm")
-    )
-    kept = lines.join(F.broadcast(drop), "__norm", "left_anti")
-    reassembled = kept.groupBy("__id").agg(
-        F.count("*").alias("n_kept"),
-        F.concat_ws(
-            "\n",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("__pos", "__line"))),
-                lambda s: s["__line"],
-            ),
-        ).alias("clean_text"),
-    )
-    base = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("__id"),
-        F.size(F.split(F.col(text_col), "\n")).cast("long").alias("n_lines"),
-    )
-    return (
-        base.join(reassembled, "__id", "left")
-        .select(
-            F.col("__id").alias(id_col),
-            "n_lines",
-            F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-            F.coalesce("clean_text", F.lit("")).alias("clean_text"),
         )
     )

@@ -8,7 +8,6 @@ pandas UDF.
 
 from pipeline311_spark.functions.cleaning import (  # noqa: F401
     clean_cases,
-    rename_projection,
     point_ewkt,
     clean_description,
     bounded_truncate,

@@ -34,12 +34,6 @@ from pipeline311_spark.schemas import FIELD_MAP, TEXT_FIELDS
 from pipeline311_spark.ext.hashing import jvm_memo
 
 
-def rename_projection(df: DataFrame, field_map: dict[str, str] | None = None) -> DataFrame:
-    """P1: rename-projection of the 32 mapped columns (common.py:117)."""
-    fm = field_map or FIELD_MAP
-    return df.select([F.col(src).alias(dest) for dest, src in fm.items()])
-
-
 def point_ewkt(lon: Column | str, lat: Column | str) -> Column:
     """P2 — see functions/geo.py."""
     lon = F.col(lon) if isinstance(lon, str) else lon
@@ -162,7 +156,7 @@ def text_field_guard(col: Column | str, max_len: int = 2000) -> Column:
 
 
 def clean_cases(df: DataFrame, field_map: dict[str, str] | None = None) -> DataFrame:
-    """The full kernel: Salesforce-shaped strings in, CASE_CLEAN out.
+    """The full kernel: Salesforce-shaped strings in, the bronze columns out.
 
     One declarative ``select`` — Catalyst fuses every expression into a
     single whole-stage-codegen projection; the only Python hop is the

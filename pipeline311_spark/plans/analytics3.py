@@ -1,5 +1,5 @@
-"""Third batch: outer/null-safe joins, correlated subqueries, grouping
-sets, JSON extraction, and connected-components dup clustering."""
+"""Correlated subqueries (TPC-H q17) and connected-components dup
+clustering."""
 
 from __future__ import annotations
 
@@ -16,61 +16,6 @@ from pipeline311_spark.plans.extensions import (
     _NGRAM_JACCARD_SQL,
 )
 from pipeline311_spark.plans.registry import register
-
-# ---------------------------------------------------------------------------
-# Full outer join with both dangling sides
-# ---------------------------------------------------------------------------
-
-_FULL_OUTER_SQL = """
-WITH rich AS (SELECT c_custkey, c_name FROM customer WHERE c_acctbal > 5000),
-cnt AS (SELECT o_custkey AS c_custkey, COUNT(*) AS n_orders FROM orders GROUP BY 1)
-SELECT coalesce(rich.c_custkey, cnt.c_custkey) AS custkey,
-       rich.c_name AS name,
-       coalesce(cnt.n_orders, 0) AS n_orders
-FROM rich FULL OUTER JOIN cnt ON rich.c_custkey = cnt.c_custkey
-"""
-
-
-@register("q_full_outer", _FULL_OUTER_SQL, covers=("J1", "J-class"))
-def q_full_outer(spark, sf_dir):
-    c = table(spark, sf_dir, "customer")
-    o = table(spark, sf_dir, "orders")
-    rich = c.filter(F.col("c_acctbal") > 5000).select("c_custkey", "c_name")
-    cnt = o.groupBy(F.col("o_custkey").alias("c_custkey")).agg(F.count("*").alias("n_orders"))
-    j = rich.join(cnt, "c_custkey", "full_outer")
-    return j.select(
-        F.col("c_custkey").alias("custkey"),
-        F.col("c_name").alias("name"),
-        F.coalesce("n_orders", F.lit(0)).alias("n_orders"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Null-safe equality join (<=> / IS NOT DISTINCT FROM)
-# ---------------------------------------------------------------------------
-
-_NULL_SAFE_SQL = """
-WITH k AS (
-  SELECT DISTINCT CASE WHEN value > 100 THEN event_type END AS k
-  FROM events WHERE user_id < 10)
-SELECT a.k AS k_a, b.k AS k_b
-FROM k a JOIN k b ON a.k IS NOT DISTINCT FROM b.k
-"""
-
-
-@register("q_null_safe_join", _NULL_SAFE_SQL, covers=("J-class", "P14"))
-def q_null_safe(spark, sf_dir):
-    e = table(spark, sf_dir, "events")
-    k = (
-        e.filter(F.col("user_id") < 10)
-        .select(F.when(F.col("value") > 100, F.col("event_type")).alias("k"))
-        .distinct()
-    )
-    a, b = k.alias("a"), k.alias("b")
-    return a.join(b, F.col("a.k").eqNullSafe(F.col("b.k"))).select(
-        F.col("a.k").alias("k_a"), F.col("b.k").alias("k_b")
-    )
-
 
 # ---------------------------------------------------------------------------
 # Correlated scalar subquery (TPC-H q17 shape): items far below their
@@ -96,49 +41,6 @@ def q17(spark, sf_dir):
     return small.agg(
         F.count("*").alias("n_small"), F.sum(dec("l_extendedprice")).cast("double").alias("small_revenue")
     )
-
-
-# ---------------------------------------------------------------------------
-# GROUPING SETS
-# ---------------------------------------------------------------------------
-
-_GSETS_SQL = """
-SELECT l_returnflag, l_linestatus, COUNT(*) AS n
-FROM lineitem
-GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-"""
-
-
-@register("q_grouping_sets", _GSETS_SQL, covers=("A-class",))
-def q_gsets(spark, sf_dir):
-    li = table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("li_gsets")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus, COUNT(*) AS n
-        FROM li_gsets
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        """
-    )
-
-
-# ---------------------------------------------------------------------------
-# Structured JSON extraction (from_json with schema)
-# ---------------------------------------------------------------------------
-
-_FROM_JSON_SQL = """
-SELECT CASE WHEN json_valid(props)
-            THEN CAST(json_extract(props, '$.k') AS BIGINT) % 10 END AS k_mod,
-       COUNT(*) AS n
-FROM events GROUP BY 1
-"""
-
-
-@register("q_from_json", _FROM_JSON_SQL, covers=("P10", "S1"))
-def q_from_json(spark, sf_dir):
-    e = table(spark, sf_dir, "events")
-    parsed = e.select(F.from_json("props", "k BIGINT").alias("p"))
-    return parsed.groupBy((F.col("p.k") % 10).alias("k_mod")).agg(F.count("*").alias("n"))
 
 
 # ---------------------------------------------------------------------------
@@ -173,36 +75,3 @@ def q_dup_clusters(spark, sf_dir):
         d, "doc_id", "text", n=_JACCARD_N, threshold=_JACCARD_THRESHOLD, max_df=_JACCARD_MAX_DF
     ).select("doc_a", "doc_b")
     return dup_clusters(pairs)
-
-
-# ---------------------------------------------------------------------------
-# The deduplicated corpus itself: drop every near-dup cluster member
-# except the canonical (min-id) one.  The drop-set is cluster members
-# only — tiny relative to the corpus — so the anti-join broadcasts and
-# the full corpus flows through one scan with no shuffle.
-# ---------------------------------------------------------------------------
-
-_SURVIVORS_SQL = f"""{_REACH_PREFIX},
-dropped AS (SELECT node FROM reach GROUP BY node HAVING node <> MIN(r))
-SELECT d.doc_id, d.lang, d.source
-FROM documents d WHERE d.doc_id NOT IN (SELECT node FROM dropped)
-"""
-
-
-@register("dedup_surviving_corpus", _SURVIVORS_SQL, covers=("ext:dedup", "ext:graph", "J3"))
-def q_surviving_corpus(spark, sf_dir):
-    """The fuzzy-dedup deliverable users actually ship: the corpus with
-    non-canonical near-dup cluster members removed (n-gram Jaccard
-    pairs → connected components → keep each cluster's min id)."""
-    d = table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(
-        d, "doc_id", "text", n=_JACCARD_N, threshold=_JACCARD_THRESHOLD, max_df=_JACCARD_MAX_DF
-    ).select("doc_a", "doc_b")
-    dropped = (
-        dup_clusters(pairs)
-        .filter(F.col("doc_id") != F.col("cluster"))
-        .select("doc_id")
-    )
-    return d.join(F.broadcast(dropped), "doc_id", "left_anti").select(
-        "doc_id", "lang", "source"
-    )

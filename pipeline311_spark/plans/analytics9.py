@@ -1,57 +1,11 @@
-"""Ninth batch: self-trained unigram-LM document scoring (the cheap
-perplexity-style quality filter) and a referential-integrity audit."""
+"""A referential-integrity audit."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pipeline311_spark.ext.textstats import normalize_text, tokens
 from pipeline311_spark.plans.common import table
 from pipeline311_spark.plans.registry import register
-
-# ---------------------------------------------------------------------------
-# Unigram LM scoring: p(tok) from corpus frequencies (add-one
-# smoothing); doc score = mean token log-prob, rounded 6 for
-# cross-engine ln safety.  Low scores = unusual token mix — the classic
-# first-pass perplexity proxy for training-data quality filtering.
-# ---------------------------------------------------------------------------
-
-_LM_SQL = """
-WITH norm AS (
-  SELECT doc_id, trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) AS nt FROM documents),
-tok AS (
-  SELECT doc_id, unnest(CASE WHEN nt = '' THEN [] ELSE string_split(nt, ' ') END) AS term
-  FROM norm),
-vocab AS (SELECT term, COUNT(*) AS tf FROM tok GROUP BY term),
-totals AS (SELECT COUNT(*) AS n_tok, (SELECT COUNT(*) FROM vocab) AS v FROM tok),
-scored AS (
-  SELECT tok.doc_id,
-         ln((vocab.tf + 1.0) / ((SELECT n_tok FROM totals) + (SELECT v FROM totals))) AS lp
-  FROM tok JOIN vocab USING (term))
-SELECT doc_id,
-       COUNT(*) AS n_tokens,
-       round(CAST(SUM(CAST(round(lp, 9) AS DECIMAL(28,12))) AS DOUBLE) / COUNT(*), 6) AS avg_logprob
-FROM scored GROUP BY doc_id
-"""
-
-
-@register("text_unigram_lm_score", _LM_SQL, covers=("ext:text",))
-def q_lm_score(spark, sf_dir):
-    d = table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(tokens(normalize_text("text"))).alias("term"))
-    vocab = tok.groupBy("term").agg(F.count("*").alias("tf"))
-    n_tok = tok.count()
-    v = vocab.count()
-    lp = F.round(F.log((F.col("tf") + 1.0) / F.lit(float(n_tok + v))), 9)
-    scored = tok.join(vocab, "term").select("doc_id", lp.alias("lp"))
-    # exact decimal sum of pre-rounded log-probs -> order-independent mean
-    return scored.groupBy("doc_id").agg(
-        F.count("*").alias("n_tokens"),
-        F.round(
-            F.sum(F.col("lp").cast("decimal(28,12)")).cast("double") / F.count("*"), 6
-        ).alias("avg_logprob"),
-    )
-
 
 # ---------------------------------------------------------------------------
 # Referential-integrity audit: dangling-FK counts across the star
@@ -97,37 +51,3 @@ def q_ri_audit(spark, sf_dir):
         "lineitem_dangling_part long, lineitem_dangling_supp long, "
         "customer_dangling_nation long",
     )
-
-
-# ---------------------------------------------------------------------------
-# Bloom-gated deletion reconciliation (J3 at 100 TB): the destination
-# key set ships as a few-KB Bloom filter probed map-side on the source
-# scan — definite-missing keys are confirmed deletions with zero join
-# work; only false positives reach the exact anti-join.  The result is
-# EXACTLY the plain anti-join (no false negatives), which is the
-# oracle: a simple NOT EXISTS twin.
-# ---------------------------------------------------------------------------
-
-_BLOOM_RECON_SQL = """
-SELECT o_orderkey, o_custkey
-FROM orders o
-WHERE NOT EXISTS (
-  SELECT 1 FROM customer c WHERE c.c_acctbal > 5000 AND c.c_custkey = o.o_custkey)
-"""
-
-
-@register("j3_bloom_reconcile", _BLOOM_RECON_SQL, covers=("J3", "S3", "K6"))
-def q_bloom_reconcile(spark, sf_dir):
-    """operators/bloom.py end-to-end: orders whose customer is not in
-    the surviving (acctbal > 5000) set — the delete-removed-tickets
-    reconciliation shape (delete-removed-tickets.py:114's chunked
-    IN-lists, replaced by one broadcastable filter)."""
-    from pipeline311_spark.operators.bloom import anti_join_bloom
-
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    dest = (
-        table(spark, sf_dir, "customer")
-        .filter(F.col("c_acctbal") > 5000)
-        .select(F.col("c_custkey").alias("o_custkey"))
-    )
-    return anti_join_bloom(o, dest, "o_custkey")

@@ -9,17 +9,9 @@ round-8 BM25 artifact stack (VERDICT r8 item 1).
   query's nprobe cells (driver-computed from the collected
   metadata-scale centroids → static PartitionFilters, asserted in
   tests/test_ann_store.py).
-* ``sim_ivfpq_incr_store`` — the per-batch maintenance path: index the
-  corpus minus a batch (batch 0), then
-  :func:`ann_codes_append_batch` assigns + encodes the batch with the
-  STORED artifacts as batch 1 of the log.  Same oracle: the split
-  must be invisible — frozen-quantizer encode is a pure per-row
-  function, so merged ≡ fresh.
-
-Both share ONE DuckDB twin that derives cell assignment, PQ codes,
-probe cells, and ADC ranking from the raw embeddings — the storage hop,
-the pruning, and the incremental append must all be invisible in the
-result.  Scale shape: serve touches |probed cells| code partitions
+Its DuckDB twin derives cell assignment, PQ codes, probe cells, and
+ADC ranking from the raw embeddings — the storage hop and the pruning
+must be invisible in the result.  Scale shape: serve touches |probed cells| code partitions
 (M small ints per vector), the corpus floats are read only at build;
 per-batch update cost is one batch pass.
 """
@@ -46,11 +38,6 @@ _ANN_CELLS = 8
 _ANN_NPROBE = 3
 _ANN_Q = 4
 _ANN_K = 5
-# the incremental split: a deterministic modulus batch (oracle-free —
-# the oracle only sees the merged result, which must equal a full
-# fresh build; the bm25_incr_store convention)
-_ANN_BATCH_MOD = 5
-_ANN_BATCH_RESIDUE = 2
 
 
 def _sqdist_full_sql(a: str, b: str) -> str:
@@ -206,30 +193,6 @@ def q_ivfpq_from_store(spark, sf_dir):
 
 
 @register(
-    "sim_ivfpq_incr_store",
-    _ivfpq_sql(),
-    covers=("ext:similarity", "ext:quantize", "T1", "K2"),
-)
-def q_ivfpq_incr_store(spark, sf_dir):
-    out = os.path.join(tempfile.gettempdir(), f"p311_ivfpqi_{uuid.uuid4().hex[:12]}")
-    is_batch = F.col("vec_id") % _ANN_BATCH_MOD == _ANN_BATCH_RESIDUE
-    try:
-        e = emb_table(spark, sf_dir)
-        # seeds = the FULL corpus head: the quantizer is frozen per
-        # corpus version and shared by the base build and every
-        # appended batch (ext/ann_store.py module doc)
-        ann_index_build(
-            spark, e.filter(~is_batch), out, n_cells=_ANN_CELLS, pq_k=_PQ_K, seeds=e
-        )
-        ann_codes_append_batch(e.filter(is_batch), 1, out)
-        return ann_adc_topk_from_store(
-            spark, out, _query_vecs(e), k=_ANN_K, nprobe=_ANN_NPROBE
-        ).transform(materialize)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-@register(
     "stream_ann_index_maintain",
     _ivfpq_sql(),
     # ext:ann-log is the log-form artifact family's OWN tag (VERDICT r9
@@ -374,118 +337,3 @@ def q_ann_cells_train_step(spark, sf_dir):
     from pipeline311_spark.ext.hashing import meta_df
 
     return meta_df(spark, rows, "cell long, dim int, centroid double")
-
-
-# Trained-quantizer audit: k-means training breaks SQL-expressibility
-# (the oracle cannot re-derive Lloyd iterations), so this query is
-# rows-only-gated by design and its OUTPUT is the audit.  Since round
-# 10 it audits the FULL trained production shape (VERDICT r9 item 4):
-# Lloyd-trained coarse cells, Lloyd-trained codebook over the
-# RESIDUALS, residual codes stored and served through the real
-# pcell-pruned store path — reporting per-query recall against the
-# exact L2 ranker PLUS the cell-balance statistic (max/median cell
-# population) that bounds nprobe pruning's worst case.  Everything is
-# still cross-run deterministic (exact decimal means, shared
-# argmin/LUT expressions, integer overlap counts and populations,
-# recall = exact int division).
-_TRAIN_PQ_K = 16
-_TRAIN_ITERS = 2
-_AUDIT_K = 10
-
-
-@register(
-    "sim_ivfpq_trained_audit",
-    None,
-    covers=("ext:similarity", "ext:quantize", "ext:ann-train", "A-class"),
-)
-def q_ivfpq_trained_audit(spark, sf_dir):
-    from pipeline311_spark.ext.ann_store import (
-        ann_adc_topk_from_store,
-        ann_index_build_trained,
-        cell_balance_py,
-        load_ann_index,
-    )
-    from pipeline311_spark.ext.similarity import brute_force_topk
-
-    out = os.path.join(tempfile.gettempdir(), f"p311_ivfpqt_{uuid.uuid4().hex[:12]}")
-    empty = (
-        "query_id long, n_overlap long, recall double, "
-        "max_cell long, med_cell long"
-    )
-    try:
-        e = emb_table(spark, sf_dir)
-        qvecs = _query_vecs(e)
-        # the exact ground-truth ranking is INDEPENDENT of the trained
-        # build — overlap the two heavy passes (guide §2.6, round 11);
-        # the exact frame is checkpointed inside its thread so the work
-        # really runs concurrently, not at first downstream read
-        from pipeline311_spark.ext.artifact import run_jobs
-
-        got: dict = {}
-
-        def _exact() -> None:
-            got["exact"] = (
-                brute_force_topk(
-                    e,
-                    e.filter(F.col("vec_id") < _ANN_Q),
-                    k=_AUDIT_K,
-                    metric="sqdist",
-                )
-                .select("query_id", "neighbor_id")
-                .transform(materialize)
-            )
-
-        run_jobs(
-            lambda: ann_index_build_trained(
-                spark, e, out,
-                n_cells=_ANN_CELLS, pq_k=_TRAIN_PQ_K,
-                m=_PQ_M, subdim=_PQ_SUBDIM, iters=_TRAIN_ITERS,
-            ),
-            _exact,
-        )
-        if not qvecs:
-            return spark.createDataFrame([], empty)
-        adc = ann_adc_topk_from_store(
-            spark, out, qvecs, k=_AUDIT_K, nprobe=_ANN_NPROBE
-        ).select("query_id", "neighbor_id")
-        # cell balance from the stored codes: |cells| counts, ONE
-        # metadata-scale collect — filled to the FULL trained cell
-        # domain with explicit zeros (ADVICE r10: a groupBy over codes
-        # never emits an empty cell, which biased med_cell upward and
-        # hid the very imbalance the audit measures)
-        idx = load_ann_index(spark, out)
-        pops = {
-            r["pcell"]: r["n"]
-            for r in idx.codes.groupBy("pcell")
-            .agg(F.count("*").cast("long").alias("n"))
-            .collect()
-        }
-        cells = [r["cell"] for r in idx.centroids.select("cell").collect()]
-        max_cell, med_cell = cell_balance_py(
-            {f"c{c}": pops.get(f"c{c}", 0) for c in cells}
-        )
-        exact = got["exact"]
-        hits = adc.select(
-            F.col("query_id").alias("aq"), F.col("neighbor_id").alias("hit")
-        )
-        return (
-            exact.join(
-                hits,
-                (exact["query_id"] == hits["aq"])
-                & (exact["neighbor_id"] == hits["hit"]),
-                "left",
-            )
-            .groupBy("query_id")
-            .agg(
-                F.count("hit").cast("long").alias("n_overlap"),
-                # denominator = the exact rows this query actually has,
-                # not the constant k: on a corpus with < k non-self
-                # vectors a perfect index must audit at 1.0 (review r9)
-                (F.count("hit").cast("double") / F.count("*")).alias("recall"),
-            )
-            .withColumn("max_cell", F.lit(max_cell).cast("long"))
-            .withColumn("med_cell", F.lit(med_cell).cast("long"))
-            .transform(materialize)  # materialize before the cleanup
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)

@@ -1,65 +1,14 @@
-"""Query through the Python-DataSource Salesforce-style connector
-(sources/salesforce_sim.py): paginated partitions + source-side filter
-pushdown, end-to-end against the oracle."""
+"""Connector scans under the oracle gate: a live JDBC scan (S4) with
+a pushed predicate and a partitioned read."""
 
 from __future__ import annotations
 
 import os
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pipeline311_spark.plans.common import table
 from pipeline311_spark.plans.registry import register
-from pipeline311_spark.session import prep_session
-
-_DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ]
-)
-
-_CONNECTOR_SQL = """
-SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars, MIN(doc_id) AS min_doc
-FROM documents
-WHERE n_chars > 200 AND lang IN ('en', 'de', 'fr')
-GROUP BY lang
-"""
-
-
-@register("s1_connector_pushdown", _CONNECTOR_SQL, covers=("S1", "S7", "T4"))
-def q_connector(spark, sf_dir):
-    prep_session(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    from pipeline311_spark.sources import salesforce_sim
-
-    try:
-        salesforce_sim.register(spark)
-    except Exception:
-        pass  # already registered in this session
-    df = (
-        spark.read.format("sf_cases")
-        .schema(_DOCS_SCHEMA)
-        .option("path", os.path.join(sf_dir, "documents.parquet"))
-        .option("pagesize", 200)
-        .load()
-    )
-    # n_chars > 200 pushes to the source (pyarrow predicate); the IN
-    # filter is returned unsupported and evaluated by Spark post-scan.
-    return (
-        df.filter((F.col("n_chars") > 200) & F.col("lang").isin("en", "de", "fr"))
-        .groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-            F.min("doc_id").alias("min_doc"),
-        )
-    )
-
 
 # ---------------------------------------------------------------------------
 # S4: live JDBC scan under the oracle gate.  Embedded Derby (on Spark's

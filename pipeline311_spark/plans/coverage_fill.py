@@ -1,5 +1,5 @@
 """Last coverage fills: F8 IN-list predicate, O2 desc-order scan,
-P15 UTC-string relocalization, S6 schema-as-data scan."""
+P15 UTC-string relocalization."""
 
 from __future__ import annotations
 
@@ -79,17 +79,3 @@ def q_p15(spark, sf_dir):
         .alias("s"),
     )
     return src.select("event_id", utc_string_relocalize("s").alias("localized"))
-
-
-# S6: the information_schema scan — a table's schema AS data
-_S6_SQL = """
-SELECT CAST(ROW_NUMBER() OVER () AS BIGINT) AS ordinal, column_name
-FROM (DESCRIBE events)
-"""
-
-
-@register("s6_schema_scan", _S6_SQL, covers=("S6",))
-def q_s6(spark, sf_dir):
-    e = table(spark, sf_dir, "events")
-    rows = [(i + 1, c) for i, c in enumerate(e.columns)]
-    return spark.createDataFrame(rows, "ordinal long, column_name string")

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 
 from pipeline311_spark.ext.dedup import exact_dedup
 from pipeline311_spark.ext.textstats import chunk_token_windows, quality_score
-from pipeline311_spark.plans.common import emb_table, table
+from pipeline311_spark.plans.common import table
 from pipeline311_spark.plans.extensions import (
     _norm_sql,
     _quality_feat_cols_sql,
@@ -72,54 +72,6 @@ FROM s
 # top-k hit set against the documents scan; at 100 TB the hit-id join
 # is exactly the point lookup pattern (S5/F6) — never a corpus join.
 # ---------------------------------------------------------------------------
-
-_RETR_K = 5
-_RETR_QUERIES = 3
-
-
-def _retrieval_sql() -> str:
-    from pipeline311_spark.plans.extensions import _N_QUERIES, _cos_sql  # noqa: F401
-
-    return f"""
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL),
-q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < {_RETR_QUERIES}),
-scored AS (
-  SELECT query_id, e.vec_id AS neighbor_id, {_cos_sql('qv', 'v')} AS cos_sim
-  FROM q JOIN e ON e.vec_id != query_id),
-topk AS (
-  SELECT query_id, neighbor_id, cos_sim, CAST(rn AS BIGINT) AS rank
-  FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-        FROM scored) t
-  WHERE rn <= {_RETR_K})
-SELECT query_id, rank, neighbor_id, cos_sim, d.lang AS hit_lang,
-       md5(d.text) AS hit_text_md5
-FROM topk JOIN documents d ON d.doc_id = neighbor_id
-"""
-
-
-@register("retrieval_end_to_end", _retrieval_sql(),
-          covers=("ext:similarity", "ext:retrieval", "S5", "F6"))
-def q_retrieval_end_to_end(spark, sf_dir):
-    from pipeline311_spark.ext.similarity import brute_force_topk
-
-    e = emb_table(spark, sf_dir)
-    docs = table(spark, sf_dir, "documents")
-    hits = brute_force_topk(
-        e, e.filter(F.col("vec_id") < _RETR_QUERIES), "vec_id", "embedding", k=_RETR_K
-    )
-    return (
-        F.broadcast(hits.select("query_id", F.col("rank").cast("long"), "neighbor_id", "cos_sim"))
-        .join(docs, F.col("doc_id") == F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            "cos_sim",
-            F.col("lang").alias("hit_lang"),
-            F.md5("text").alias("hit_text_md5"),
-        )
-    )
-
 
 @register(
     "curation_end_to_end",

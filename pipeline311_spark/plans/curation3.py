@@ -1,46 +1,25 @@
-"""Round-7 curation additions: classic BM25 retrieval scoring and the
-deterministic shuffle → balanced-shard export step of a training-data
-pipeline.
+"""Classic BM25 retrieval scoring and the flagship curation pipeline.
 
-* ``text_bm25_topk`` — Okapi BM25 (k1=1.2, b=0.75) top-k documents for
-  a fixed set of query term-sets, the lexical-retrieval complement to
-  the dense ``retrieval_end_to_end`` flow (BM25 is the production
-  lexical ranker).
+* :func:`bm25_scored_frame` — Okapi BM25 (k1=1.2, b=0.75) top-k
+  documents for a fixed set of query term-sets, computed query-locally;
+  the stored index's serve (``ext/retrieval.py``) must reproduce it
+  exactly (``tests/test_retrieval_store.py``).
 
-  Scale shape (r8): exactly TWO corpus passes — one map-side aggregate
+  Scale shape: exactly TWO corpus passes — one map-side aggregate
   for the corpus stats (n_docs, avgdl) and one token explode that is
   filtered to the query vocabulary BEFORE the aggregation, so the only
   shuffle carries matched tokens (|matches| ≈ docs × query terms hit
   rate, never the corpus token stream).  Per-doc length rides the
   exploded rows, so scoring needs no third corpus scan, and the
   aggregated ``hits`` table is persisted so the df/idf derivation and
-  the scoring join read it once (VERDICT r7 — Spark did not reuse the
-  exchange, so the explode subtree genuinely ran per consumer; a
-  window over (query_id, term) would avoid the persist but stragglers
-  on high-df terms).  Per-term
-  contributions are folded in sorted term
-  order (both engines), so the floating sum is order-identical; the
-  emitted columns are the RANKS and integer stats only — the ln-based
-  score itself stays engine-internal, because DuckDB's ``ln`` and the
-  JVM's ``Math.log`` may differ by 1 ulp and a value landing on a
-  rounding boundary would flip the hashed value (ADVICE r7).
-
-* ``export_hash_shards`` — the terminal export of a curated corpus
-  into N balanced shards with a DETERMINISTIC pseudo-random order
-  (portable 60-bit hash of the doc id as both the shard assigner and
-  the within-shard sort key).  Re-running the export on the same
-  corpus yields byte-identical shard membership and order — the
-  property data-loader pipelines need for resumable/reproducible
-  training.  The query writes real parquet (partitionBy(shard), one
-  sorted file per shard), reads it back, and reports per-shard
-  stats; the oracle computes the same assignment declaratively, so
-  the write+read round trip is verified, not just executed
-  (pattern: k3_merge_partitioned / k5 roundtrip, plans/sinks_q.py).
-
-  Scale shape: ONE hash-partition exchange on the shard key with
-  in-task sort (sortWithinPartitions — no global ordering barrier),
-  then a file-per-shard write; at 100 TB shard count scales with the
-  corpus and every stage stays embarrassingly parallel.
+  the scoring join read it once (Spark did not reuse the exchange, so
+  the explode subtree genuinely ran per consumer).  Per-term
+  contributions are folded in sorted term order (both engines), so the
+  floating sum is order-identical; registry queries emit the RANKS and
+  integer stats only — the ln-based score itself stays
+  engine-internal, because DuckDB's ``ln`` and the JVM's ``Math.log``
+  may differ by 1 ulp and a value landing on a rounding boundary would
+  flip the hashed value.
 """
 
 from __future__ import annotations
@@ -127,7 +106,7 @@ WHERE rn <= {_BM25_TOPK}
 
 def bm25_scored_frame(spark, sf_dir):
     """BM25 top-k WITH the double score column (engine-internal form —
-    the registry query drops the score before hashing, ADVICE r7).
+    registry queries drop the score before hashing).
 
     Query-local path: the corpus is tokenized per run but filtered to
     the query VOCABULARY before any shuffle — right for one-shot
@@ -192,114 +171,13 @@ def bm25_scored_frame(spark, sf_dir):
     )
 
 
-@register("text_bm25_topk", _bm25_sql(),
-          covers=("ext:text", "ext:similarity", "ext:retrieval", "O4"))
-def q_bm25_topk(spark, sf_dir):
-    # ranks + integer stats only: the ln-based double score is dropped
-    # before the oracle hash (DuckDB ln vs JVM Math.log can differ by
-    # 1 ulp at a rounding boundary — ADVICE r7); ordering still uses it
-    return bm25_scored_frame(spark, sf_dir).select(
-        "query_id", "rank", "doc_id", "tf_sum", "dl"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Deterministic shuffle → balanced shard export
-# ---------------------------------------------------------------------------
-
-_N_SHARDS = 8
-_OKEY_MOD = 1_000_003  # checksum modulus: sum fits a long at any corpus size
-
-
-def _shards_sql() -> str:
-    h_shard = portable_hash64_sql("concat('shard:', CAST(doc_id AS VARCHAR))")
-    h_order = portable_hash64_sql("concat('order:', CAST(doc_id AS VARCHAR))")
-    return f"""
-WITH a AS (
-  SELECT doc_id,
-         ({h_shard}) % {_N_SHARDS} AS shard,
-         ({h_order}) AS okey,
-         CAST({{ntok}} AS BIGINT) AS n_tokens
-  FROM documents WHERE text IS NOT NULL)
-SELECT shard, COUNT(*)::BIGINT AS n_docs,
-       SUM(n_tokens)::BIGINT AS sum_tokens,
-       MIN(okey)::BIGINT AS min_okey, MAX(okey)::BIGINT AS max_okey,
-       SUM(okey % {_OKEY_MOD})::BIGINT AS okey_checksum
-FROM a GROUP BY shard ORDER BY shard
-"""
-
-
-def _shards_sql_filled() -> str:
-    from pipeline311_spark.plans.extensions import _ntok_sql
-
-    return _shards_sql().replace("{ntok}", _ntok_sql())
-
-
-def export_hash_shards_frame(spark, sf_dir):
-    """The pre-export frame: deterministic shard + order key per doc."""
-    d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    return d.select(
-        "doc_id",
-        F.pmod(
-            portable_hash64(F.concat(F.lit("shard:"), F.col("doc_id").cast("string"))),
-            F.lit(_N_SHARDS),
-        ).alias("shard"),
-        portable_hash64(
-            F.concat(F.lit("order:"), F.col("doc_id").cast("string"))
-        ).alias("okey"),
-        token_count("text").cast("long").alias("n_tokens"),
-    )
-
-
-def write_hash_shards(frame, out_dir: str) -> None:
-    """ONE exchange on the shard key, in-task sort by (shard, okey) —
-    no global ordering barrier — then a sorted file per shard dir."""
-    (
-        frame.repartition(_N_SHARDS, "shard")
-        .sortWithinPartitions("shard", "okey")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(out_dir)
-    )
-
-
-@register(
-    "export_hash_shards", _shards_sql_filled(), covers=("ext:export", "K2", "T3")
-)
-def q_export_hash_shards(spark, sf_dir):
-    out = os.path.join(tempfile.gettempdir(), f"p311_shards_{uuid.uuid4().hex[:12]}")
-    try:
-        frame = export_hash_shards_frame(spark, sf_dir)
-        write_hash_shards(frame, out)
-        # explicit schema on read-back (review r7): an EMPTY corpus
-        # writes only _SUCCESS, and schema inference over zero part
-        # files raises UNABLE_TO_INFER_SCHEMA — the registry-wide
-        # empty-table gate exercises exactly that
-        back = spark.read.schema(frame.schema).parquet(out)
-        return (
-            back.groupBy(F.col("shard").cast("bigint").alias("shard"))
-            .agg(
-                F.count("*").cast("long").alias("n_docs"),
-                F.sum("n_tokens").cast("long").alias("sum_tokens"),
-                F.min("okey").cast("long").alias("min_okey"),
-                F.max("okey").cast("long").alias("max_okey"),
-                F.sum(F.col("okey") % _OKEY_MOD).cast("long").alias("okey_checksum"),
-            )
-            .orderBy("shard")
-            .transform(materialize)  # materialize before the cleanup below
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
 # ---------------------------------------------------------------------------
 # Flagship composition: the full RefinedWeb-style curation pipeline as
 # ONE declarative plan — language filter → quality gate → exact dedup →
 # 13-gram benchmark decontamination → deterministic 80% sample →
 # token-budget sequence packing → balanced shard assignment.  Every
 # stage is an operator that is ALSO verified standalone where one
-# exists (text_quality_scores, dedup_exact_groups, export_hash_shards);
-# this query proves they COMPOSE into the production flow under the
+# exists (text_quality_scores, dedup_exact_groups); this query proves they COMPOSE into the production flow under the
 # same oracle gate.
 #
 # Scale shape: filters and gram generation are scan-side; the plan's
@@ -307,9 +185,7 @@ def q_export_hash_shards(spark, sf_dir):
 # decontamination anti join (eval grams broadcast into a map-side
 # join; the hit-id side is AQE-sized, not force-broadcast — its
 # cardinality is the corpus's contamination density), and (3) the per-
-# source packing window (the two-phase bucket decomposition of
-# q_curation_pipeline_pack2phase is the alternative when one source
-# outgrows a partition).  Sampling and shard assignment are pure row
+# source packing window.  Sampling and shard assignment are pure row
 # math.  A 100 TB corpus flows scan → filter → one hash window → anti
 # join → one range-ish window → map-side shard tag.
 # ---------------------------------------------------------------------------
@@ -404,18 +280,10 @@ def _grams(df):
     )
 
 
-def _full_pipeline_frame(spark, sf_dir, two_phase_packing: bool):
-    """The flagship plan with the packing stage selectable:
-
-    * ``two_phase_packing=False`` — per-source running-sum window (one
-      shuffle partitioned by source; sort bounded by the largest single
-      source).  Right while every source fits a task.
-    * ``True`` — the exact bucket decomposition
-      (ext/sampling.running_sum_two_phase): id-range buckets +
-      broadcast offsets, n_buckets-way parallel windows.  The
-      dominant-source escape hatch — at production scale switch when
-      the largest source's post-sample row count outgrows what one
-      task can sort.  Both paths are gated by ONE oracle."""
+def _full_pipeline_frame(spark, sf_dir):
+    """The flagship plan.  Packing is a per-source running-sum window
+    (one shuffle partitioned by source; sort bounded by the largest
+    single source) — right while every source fits a task."""
     from pyspark.sql.window import Window
 
     from pipeline311_spark.ext.dedup import exact_dedup
@@ -444,27 +312,15 @@ def _full_pipeline_frame(spark, sf_dir, two_phase_packing: bool):
     tok = sampled.select(
         "doc_id", "source", F.size(F.split("text", " ")).cast("long").alias("n_tok")
     )
-    if two_phase_packing:
-        from pipeline311_spark.ext.sampling import running_sum_two_phase
-
-        packed = running_sum_two_phase(
-            tok, "source", "doc_id", "n_tok", out_col="__cum", n_buckets=8
-        ).withColumn(
-            "pack_id",
-            F.floor((F.col("__cum") - F.col("n_tok")) / _FP_BUDGET).cast("bigint"),
-        ).drop("__cum")
-    else:
-        w = (
-            Window.partitionBy("source")
-            .orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        packed = tok.withColumn(
-            "pack_id",
-            F.floor(
-                (F.sum("n_tok").over(w) - F.col("n_tok")) / _FP_BUDGET
-            ).cast("bigint"),
-        )
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    packed = tok.withColumn(
+        "pack_id",
+        F.floor((F.sum("n_tok").over(w) - F.col("n_tok")) / _FP_BUDGET).cast("bigint"),
+    )
     return packed.select(
         "doc_id",
         "source",
@@ -483,75 +339,7 @@ def _full_pipeline_frame(spark, sf_dir, two_phase_packing: bool):
     covers=("ext:text", "ext:dedup", "ext:sampling", "ext:export", "F1", "O5", "J4"),
 )
 def q_curation_full_pipeline(spark, sf_dir):
-    return _full_pipeline_frame(spark, sf_dir, two_phase_packing=False)
-
-
-@register(
-    "curation_pipeline_pack2phase",
-    _full_pipeline_sql(),
-    covers=("ext:text", "ext:dedup", "ext:sampling", "ext:export", "O5"),
-)
-def q_curation_pipeline_pack2phase(spark, sf_dir):
-    """The SAME flagship semantics under the SAME oracle, with the
-    packing stage on the two-phase bucket decomposition — two
-    oracle-gated plans for one spec pins the decomposition's exactness
-    at every scale factor."""
-    return _full_pipeline_frame(spark, sf_dir, two_phase_packing=True)
-
-
-# ---------------------------------------------------------------------------
-# Stored gram table, ARRAY form — the r7-preferred per-corpus-version
-# artifact: one row per doc (doc, garr) instead of one row per gram.
-# Smaller on disk, and a reload feeds BOTH the signature aggregation
-# (map-side explode) and the exact-Jaccard verify (arrays semi-joined
-# directly) with ZERO set-rebuild aggregation — the exploded (doc, g)
-# store (dedup_minhash_from_store) must pay a collect_set exchange to
-# get its verify sets back.  Same oracle as dedup_minhash_lsh: the
-# storage hop must be invisible in the result.
-# ---------------------------------------------------------------------------
-
-
-def _minhash_from_array_store_sql() -> str:
-    from pipeline311_spark.plans.extensions import _minhash_pairs_sql
-
-    return _minhash_pairs_sql()
-
-
-@register(
-    "dedup_minhash_from_array_store",
-    _minhash_from_array_store_sql(),
-    covers=("ext:dedup", "ext:export", "K2"),
-)
-def q_minhash_from_array_store(spark, sf_dir):
-    from pipeline311_spark.ext.dedup import _row_gram_arrays, minhash_pairs_from_grams
-    from pipeline311_spark.plans.extensions import (
-        _MH_BANDS,
-        _MH_K,
-        _MH_N,
-        _MH_SEED,
-        _MH_THRESHOLD,
-    )
-
-    d = table(spark, sf_dir, "documents")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"p311_garr_{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:12]}",
-    )
-    try:
-        frame = _row_gram_arrays(d, "doc_id", "text", _MH_N)
-        frame.write.mode("overwrite").parquet(out)
-        stored = spark.read.schema(frame.schema).parquet(out)
-        return minhash_pairs_from_grams(
-            stored.select("doc", F.explode("garr").alias("g")),
-            k=_MH_K,
-            bands=_MH_BANDS,
-            threshold=_MH_THRESHOLD,
-            seed=_MH_SEED,
-            persist=False,
-            gram_arrays=stored,
-        ).transform(materialize)  # materialize before the cleanup
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+    return _full_pipeline_frame(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -570,8 +358,8 @@ def q_minhash_from_array_store(spark, sf_dir):
 # rankers (each already scale-shaped); fusion is free.
 #
 # Query-id alignment: BM25 term-set ids {0, 1} pair with query vectors
-# vec_id {0, 1} (the testdata convention retrieval_end_to_end
-# established: embedding vec_id aligns with documents doc_id).
+# vec_id {0, 1} (the testdata convention: embedding vec_id aligns with
+# documents doc_id).
 # ---------------------------------------------------------------------------
 
 _RRF_C = 60
@@ -632,9 +420,7 @@ WHERE rn <= {_BM25_TOPK}
 )
 def q_retrieval_hybrid_rrf(spark, sf_dir):
     """Hybrid fusion with the lexical side served from the STORED BM25
-    index (VERDICT r8 item 3: this query used to rank lexically via the
-    query-local q_bm25_topk while only retrieval_rrf_recency read the
-    store) — the serve plan touches postings + corpus-stats artifacts,
+    index — the serve plan touches postings + corpus-stats artifacts,
     never the corpus text (plan-shape asserted in
     tests/test_retrieval_store.py over :func:`hybrid_rrf_frame`)."""
     import os

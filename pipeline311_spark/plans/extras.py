@@ -1,7 +1,6 @@
 """Remaining operator coverage: sessionization (advanced windowing),
 CSV sink/scan round-trip (K1/S9), EWKT geometry build/parse + ESRI
-encoding (P2/P18), rename projection (P1/P17), static source filter
-(F1), count probes (A4/A5/A7), truncate+reload (K9).
+encoding (P2/P18), count probes (A4/A5/A7), truncate+reload (K9).
 """
 
 from __future__ import annotations
@@ -14,6 +13,8 @@ from pyspark.sql import functions as F
 
 from pipeline311_spark.plans.common import dsum, table
 from pipeline311_spark.plans.registry import register
+from pipeline311_spark.sinks.writers import overwrite_reload, write_csv
+from pipeline311_spark.sources.readers import read_csv
 
 # ---------------------------------------------------------------------------
 # Sessionization: gap-based session assignment via lag + running sum —
@@ -92,7 +93,7 @@ def q_csv_roundtrip(spark, sf_dir):
         tempfile.gettempdir(),
         f"p311_csv_{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:12]}",
     )
-    d.write.mode("overwrite").option("header", True).csv(out)
+    write_csv(d, out)
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -100,138 +101,9 @@ def q_csv_roundtrip(spark, sf_dir):
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    back = spark.read.schema(schema).option("header", True).csv(out)
+    back = read_csv(spark, out, schema)
     return back.groupBy("lang").agg(
         F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars")
-    )
-
-
-# ---------------------------------------------------------------------------
-# S9+K1 (JSONL flavor): JSON-lines sink then scan (explicit schema — no
-# inference pass over the data).  JSONL is the interchange format of
-# training corpora, and the text column (quotes, newlines-as-\n,
-# non-ASCII) is exactly what must survive the encode/decode — verified
-# per language with a portable md5-derived fingerprint sum that any
-# mangling would shift.  Oracle reads the original parquet: the round
-# trip itself is what's being checked.
-# ---------------------------------------------------------------------------
-
-
-def _jsonl_sql() -> str:
-    from pipeline311_spark.ext.hashing import portable_hash_sql
-
-    return f"""
-SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-       CAST(SUM({portable_hash_sql('text')}) AS BIGINT) AS text_fp_sum
-FROM documents GROUP BY lang
-"""
-
-
-@register("s_jsonl_roundtrip", _jsonl_sql(), covers=("S9", "K1"))
-def q_jsonl_roundtrip(spark, sf_dir):
-    import uuid
-
-    from pyspark.sql import types as T
-
-    from pipeline311_spark.ext.hashing import portable_hash
-
-    d = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars", "text")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"p311_jsonl_{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:12]}",
-    )
-    d.write.mode("overwrite").json(out)
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("lang", T.StringType()),
-            T.StructField("n_chars", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    back = spark.read.schema(schema).json(out)
-    return back.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.sum(portable_hash("text")).alias("text_fp_sum"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# S9+K1 (ORC flavor): columnar sink in a second native format — ORC
-# timestamps/strings/longs must survive the round trip; same
-# fingerprint-sum verification as the JSONL twin, oracle reads the
-# original parquet.
-# ---------------------------------------------------------------------------
-
-
-@register("s_orc_roundtrip", _jsonl_sql(), covers=("S9", "K1", "K2"))
-def q_orc_roundtrip(spark, sf_dir):
-    import uuid
-
-    from pipeline311_spark.ext.hashing import portable_hash
-
-    d = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars", "text")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"p311_orc_{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:12]}",
-    )
-    d.write.mode("overwrite").orc(out)
-    back = spark.read.orc(out)  # ORC is self-describing: schema from footer
-    return back.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.sum(portable_hash("text")).alias("text_fp_sum"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Z-order layout (operators/layout.py): the Morton key must be
-# bit-identical across engines (pure integer math — no float hazard),
-# and the per-cell stats show the key maps 2-D locality onto 1-D
-# ranges (each z-cell covers a narrow x AND y window — the property
-# that makes range-partitioned files skippable on both filter columns).
-# ---------------------------------------------------------------------------
-
-_Z_BITS = 8
-_Z_CELL_SHIFT = 10  # 2^16 z-space -> 64 cells
-
-
-def _zorder_sql() -> str:
-    terms = " + ".join(
-        f"((((x >> {i}) & 1) << {2 * i}) + (((y >> {i}) & 1) << {2 * i + 1}))"
-        for i in range(_Z_BITS)
-    )
-    return f"""
-WITH b AS (SELECT o_custkey % 256 AS x, dayofyear(o_orderdate) % 256 AS y FROM orders),
-z AS (SELECT x, y, ({terms}) AS zval FROM b)
-SELECT CAST(zval >> {_Z_CELL_SHIFT} AS BIGINT) AS zcell,
-       COUNT(*) AS n, CAST(SUM(zval) AS BIGINT) AS z_sum,
-       CAST(MIN(x) AS BIGINT) AS x_min, CAST(MAX(x) AS BIGINT) AS x_max,
-       CAST(MIN(y) AS BIGINT) AS y_min, CAST(MAX(y) AS BIGINT) AS y_max
-FROM z GROUP BY 1
-"""
-
-
-@register("layout_zorder_stats", _zorder_sql(), covers=("ext:layout",))
-def q_zorder_stats(spark, sf_dir):
-    from pipeline311_spark.operators.layout import zorder_key
-
-    o = table(spark, sf_dir, "orders")
-    b = o.select(
-        (F.col("o_custkey") % 256).cast("long").alias("x"),
-        (F.dayofyear("o_orderdate") % 256).cast("long").alias("y"),
-    )
-    z = b.withColumn("zval", zorder_key(F.col("x"), F.col("y"), bits=_Z_BITS))
-    return z.groupBy(
-        F.shiftright("zval", _Z_CELL_SHIFT).cast("long").alias("zcell")
-    ).agg(
-        F.count("*").alias("n"),
-        F.sum("zval").cast("long").alias("z_sum"),
-        F.min("x").alias("x_min"),
-        F.max("x").alias("x_max"),
-        F.min("y").alias("y_min"),
-        F.max("y").alias("y_max"),
     )
 
 
@@ -252,7 +124,7 @@ def q_truncate_reload(spark, sf_dir):
 
     p = table(spark, sf_dir, "part")
     out = os.path.join(tempfile.gettempdir(), f"p311_seed_{uuid.uuid4().hex[:12]}")
-    p.write.mode("overwrite").parquet(out)
+    overwrite_reload(p, out)
     back = spark.read.parquet(out)
     return back.agg(F.count("*").alias("n_parts"), dsum("p_retailprice").alias("total_price"))
 
@@ -308,171 +180,6 @@ def q_geometry(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# P18 (non-point layers): POLYGON / MULTIPOLYGON / LINESTRING WKT ->
-# ESRI rings/paths JSON.  WKT fixtures are synthesized from p_partkey
-# (kind = key % 4: polygon-with-hole / multipolygon / linestring /
-# empty); the Spark side must PARSE the WKT, the oracle reconstructs
-# the expected JSON directly from the same arithmetic — a wrong parser
-# (e.g. one that keeps interior rings) hash-mismatches.  Coordinates
-# are .5/.25 binary fractions so double->string renders identically in
-# both engines.
-# ---------------------------------------------------------------------------
-
-_GEO2_SR = ',"spatial_reference":{"wkid":4326}}'
-
-
-def _geo2_sql() -> str:
-    x0, y0 = "CAST(-(p_partkey % 120 + 0.5) AS DOUBLE)", "CAST(p_partkey % 60 + 0.25 AS DOUBLE)"
-
-    def v(e):  # render a double expression as VARCHAR
-        return f"CAST({e} AS VARCHAR)"
-
-    def pt(dx, dy):
-        return f"'[' || {v(f'x0 + {dx}')} || ',' || {v(f'y0 + {dy}')} || ']'"
-
-    tri = f"{pt(0,0)} || ',' || {pt(2,0)} || ',' || {pt(0,2)} || ',' || {pt(0,0)}"
-    tri_a = f"{pt(0,0)} || ',' || {pt(1,0)} || ',' || {pt(0,1)} || ',' || {pt(0,0)}"
-    tri_b = f"{pt(3,0)} || ',' || {pt(4,0)} || ',' || {pt(3,1)} || ',' || {pt(3,0)}"
-    path = f"{pt(0,0)} || ',' || {pt(1,1)} || ',' || {pt(2,0)}"
-    mpts = f"{pt(0,0)} || ',' || {pt(1,1)}"
-    return f"""
-WITH src AS (
-  SELECT p_partkey, p_partkey % 5 AS kind, {x0} AS x0, {y0} AS y0 FROM part)
-SELECT p_partkey, CAST(kind AS BIGINT) AS kind,
-  CASE kind
-    WHEN 0 THEN '{{"rings":[[' || {tri} || ']]{_GEO2_SR}'
-    WHEN 1 THEN '{{"rings":[[' || {tri_a} || '],[' || {tri_b} || ']]{_GEO2_SR}'
-    WHEN 2 THEN '{{"paths":[[' || {path} || ']]{_GEO2_SR}'
-    WHEN 3 THEN '{{"points":[' || {mpts} || ']{_GEO2_SR}'
-    ELSE '{{"rings":[]{_GEO2_SR}'
-  END AS esri_geom,
-  CAST(CASE kind WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 1 WHEN 3 THEN 2 ELSE 0 END AS BIGINT) AS n_parts,
-  CAST(CASE kind WHEN 0 THEN 4 WHEN 1 THEN 8 WHEN 2 THEN 3 WHEN 3 THEN 2 ELSE 0 END AS BIGINT) AS n_points
-FROM src
-"""
-
-
-@register("p18_polygon_paths", _geo2_sql(), covers=("P18", "P2"))
-def q_polygon_paths(spark, sf_dir):
-    from pipeline311_spark.functions.geo import (
-        esri_multipoint_geometry_json,
-        esri_polygon_geometry_json,
-        esri_polyline_geometry_json,
-        parse_wkt_multipoint,
-        parse_wkt_path,
-        parse_wkt_rings,
-    )
-
-    p = table(spark, sf_dir, "part")
-    x0 = (-((F.col("p_partkey") % 120) + F.lit(0.5))).cast("double")
-    y0 = ((F.col("p_partkey") % 60) + F.lit(0.25)).cast("double")
-    kind = (F.col("p_partkey") % 5).cast("long")
-
-    def s(c):
-        return c.cast("string")
-
-    def xy(dx, dy):
-        return F.concat(s(x0 + dx), F.lit(" "), s(y0 + dy))
-
-    def seq(*pts):
-        return F.concat_ws(", ", *pts)
-
-    # kind 0: polygon WITH an interior ring the encoder must drop
-    poly = F.concat(
-        F.lit("POLYGON (("), seq(xy(0, 0), xy(2, 0), xy(0, 2), xy(0, 0)), F.lit("), ("),
-        seq(xy(0.5, 0.5), xy(1, 0.5), xy(0.5, 1), xy(0.5, 0.5)), F.lit("))"),
-    )
-    mpoly = F.concat(
-        F.lit("MULTIPOLYGON ((("), seq(xy(0, 0), xy(1, 0), xy(0, 1), xy(0, 0)),
-        F.lit(")), (("), seq(xy(3, 0), xy(4, 0), xy(3, 1), xy(3, 0)), F.lit(")))"),
-    )
-    line = F.concat(F.lit("LINESTRING ("), seq(xy(0, 0), xy(1, 1), xy(2, 0)), F.lit(")"))
-    # kind 3: the parenthesized MULTIPOINT spelling (the bare spelling
-    # is unit-tested; the parser strips inner parens either way)
-    mpoint = F.concat(
-        F.lit("MULTIPOINT (("), xy(0, 0), F.lit("), ("), xy(1, 1), F.lit("))")
-    )
-    wkt = (
-        F.when(kind == 0, poly)
-        .when(kind == 1, mpoly)
-        .when(kind == 2, line)
-        .when(kind == 3, mpoint)
-        .otherwise(F.lit(""))
-    )
-    src = p.select("p_partkey", kind.alias("kind"), wkt.alias("wkt"))
-    rings = parse_wkt_rings("wkt")
-    pth = parse_wkt_path("wkt")
-    mpts = parse_wkt_multipoint("wkt")
-    n_parts = (
-        F.when(F.col("kind") == 2, F.when(F.size(pth) > 0, 1).otherwise(0))
-        .when(F.col("kind") == 3, F.size(mpts))
-        .otherwise(F.size(rings))
-    )
-    n_points = (
-        F.when(F.col("kind") == 2, F.size(pth))
-        .when(F.col("kind") == 3, F.size(mpts))
-        .otherwise(F.aggregate(rings, F.lit(0), lambda acc, r: acc + F.size(r)))
-    )
-    return src.select(
-        "p_partkey",
-        "kind",
-        F.when(F.col("kind") == 2, esri_polyline_geometry_json("wkt"))
-        .when(F.col("kind") == 3, esri_multipoint_geometry_json("wkt"))
-        .otherwise(esri_polygon_geometry_json("wkt"))
-        .alias("esri_geom"),
-        n_parts.cast("long").alias("n_parts"),
-        n_points.cast("long").alias("n_points"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# P1/P17: rename projection + key lowercasing
-# ---------------------------------------------------------------------------
-
-_P1_SQL = """
-SELECT n_nationkey AS nation_id, n_name AS name, n_regionkey AS region_id FROM nation
-"""
-
-
-@register("p1_rename_projection", _P1_SQL, covers=("P1", "P17"))
-def q_rename(spark, sf_dir):
-    from pipeline311_spark.functions.cleaning import rename_projection
-
-    n = table(spark, sf_dir, "nation")
-    out = rename_projection(
-        n, {"NATION_ID": "n_nationkey", "NAME": "n_name", "REGION_ID": "n_regionkey"}
-    )
-    return out.toDF(*[c.lower() for c in out.columns])  # P17
-
-
-# ---------------------------------------------------------------------------
-# F1: static source filter (exclusion rule)
-# ---------------------------------------------------------------------------
-
-_F1_SQL = """
-SELECT event_type, COUNT(*) AS n
-FROM events
-WHERE event_type != 'error' AND event_type NOT IN ('signup', '')
-GROUP BY event_type
-"""
-
-
-@register("f1_static_filter", _F1_SQL, covers=("F1",))
-def q_static_filter(spark, sf_dir):
-    from pipeline311_spark.operators.filters import static_source_filter
-
-    e = table(spark, sf_dir, "events")
-    filtered = static_source_filter(
-        e,
-        record_type_id="event_type",
-        record_type="event_type",
-        excluded_id="error",
-        excluded_types=("signup", ""),
-    )
-    return filtered.groupBy("event_type").agg(F.count("*").alias("n"))
-
-
-# ---------------------------------------------------------------------------
 # A4/A5/A7: count probes
 # ---------------------------------------------------------------------------
 
@@ -492,185 +199,4 @@ def q_count_probes(spark, sf_dir):
     matched = count_matched(cust, orders.withColumnRenamed("o_custkey", "c_custkey"), "c_custkey")
     return spark.createDataFrame(
         [(total, matched)], "source_count long, matched_customers long"
-    )
-
-
-# ---------------------------------------------------------------------------
-# P16 with offset rendering, exercised ACROSS both 2024 DST boundaries
-# (SURVEY §7.5.1 — the reference's to_char(..., 'TZH:TZM') twin).  The
-# testdata's events all live in January, so event-id-derived day shifts
-# spread them over a full year; the oracle hard-codes the two 2024
-# America/New_York transitions (07:00Z Mar 10 / 06:00Z Nov 3) as ground
-# truth the engine's from_utc_timestamp-derived offsets must reproduce.
-# ---------------------------------------------------------------------------
-
-_DST_OFFSET_SQL = """
-WITH s AS (
-  SELECT event_id, ts + (event_id % 365) * INTERVAL 1 DAY AS t FROM events)
-SELECT event_id,
-       strftime(timezone('America/New_York', t AT TIME ZONE 'UTC'), '%Y-%m-%d %H:%M:%S')
-       || ' ' ||
-       CASE WHEN t >= TIMESTAMP '2024-03-10 07:00:00' AND t < TIMESTAMP '2024-11-03 06:00:00'
-            THEN '-04:00' ELSE '-05:00' END AS local_ts
-FROM s
-"""
-
-
-@register("p16_dst_offset_format", _DST_OFFSET_SQL, covers=("P16", "P9"))
-def q_dst_offset_format(spark, sf_dir):
-    from pipeline311_spark.functions.timeparse import to_local_string_with_offset
-
-    e = table(spark, sf_dir, "events")
-    shifted = e.select(
-        "event_id",
-        F.expr("timestampadd(DAY, CAST(event_id % 365 AS INT), ts)").alias("t"),
-    )
-    return shifted.select("event_id", to_local_string_with_offset("t").alias("local_ts"))
-
-
-# ---------------------------------------------------------------------------
-# Lake operations: schema-evolution read and small-file compaction —
-# both proven by content-identity roundtrips through real writes.
-# ---------------------------------------------------------------------------
-
-_EVOLVE_SQL = """
-WITH unioned AS (
-  SELECT doc_id, lang, NULL::BIGINT AS n_chars FROM documents WHERE doc_id % 2 = 0
-  UNION ALL
-  SELECT doc_id, lang, n_chars FROM documents WHERE doc_id % 2 = 1)
-SELECT lang, COUNT(*) AS n_docs, COUNT(n_chars) AS n_evolved,
-       CAST(COALESCE(SUM(n_chars), 0) AS BIGINT) AS total_chars
-FROM unioned GROUP BY lang
-"""
-
-
-@register("s_schema_evolution_roundtrip", _EVOLVE_SQL, covers=("S9", "K2", "S6"))
-def q_schema_evolution(spark, sf_dir):
-    """Schema evolution across table versions: v1 files lack a column
-    later versions carry; ``mergeSchema`` reconciles at read and the
-    missing column surfaces as NULL — exercised through a real
-    two-generation parquet write, not a mock."""
-    import uuid
-
-    d = table(spark, sf_dir, "documents")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"p311_evolve_{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:12]}",
-    )
-    d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang").write.mode(
-        "overwrite"
-    ).parquet(out)
-    d.filter(F.col("doc_id") % 2 == 1).select("doc_id", "lang", "n_chars").write.mode(
-        "append"
-    ).parquet(out)
-    back = spark.read.option("mergeSchema", "true").parquet(out)
-    return back.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.count("n_chars").alias("n_evolved"),
-        F.coalesce(F.sum("n_chars"), F.lit(0)).alias("total_chars"),
-    )
-
-
-_COMPACT_SQL = """
-SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-       CAST(SUM(doc_id) AS BIGINT) AS id_sum
-FROM documents GROUP BY lang
-"""
-
-
-@register("k_compact_small_files", _COMPACT_SQL, covers=("K2", "T3", "ext:layout"))
-def q_compact_small_files(spark, sf_dir):
-    """Small-file compaction roundtrip: fragment documents into many
-    tiny files (a micro-batch sink's worst case), compact to the target
-    file size, and prove content identity through the oracle.  The
-    file-count reduction itself is asserted in tests/test_layout.py."""
-    import uuid
-
-    from pipeline311_spark.operators.layout import compact_parquet_dir
-
-    d = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"p311_compact_{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:12]}",
-    )
-    d.repartition(64).write.mode("overwrite").parquet(out)  # 64 shards of a tiny table
-    compact_parquet_dir(spark, out, target_file_bytes=64 * 1024 * 1024)
-    back = spark.read.parquet(out)
-    return back.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-        F.sum("doc_id").alias("id_sum"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# P19 (real reprojection): EPSG:4326 -> Web Mercator (3857) and
-# NAD83 / Pennsylvania South ftUS (2272) — the reference's actual State
-# Plane zone (its Centerline_2272x__c/y__c fields) — in pure Column
-# math, no pyproj, no UDF (functions/geo.py).  The oracle twin runs the
-# SAME formula with the SAME precomputed constant literals; coordinates
-# are rounded to integer feet/meters because per-row transcendentals
-# (sin/tan/pow/ln) may differ by ~1 ulp between libms, and an integer
-# grid makes the boundary-flip probability ~1e-9 per value.
-# ---------------------------------------------------------------------------
-
-def _p19_sql() -> str:
-    from pipeline311_spark.functions.geo import (
-        _LCC2272_AF, _LCC2272_E, _LCC2272_E_HALF, _LCC2272_FE_FT,
-        _LCC2272_LON0, _LCC2272_N, _LCC2272_N_RAD, _LCC2272_RHO0,
-        _M_TO_FTUS, _PI_4, _RAD, _RAD_2, _WEBMERC_R, _WEBMERC_X,
-    )
-
-    return f"""
-WITH pts AS (
-  SELECT p_partkey,
-         -80.0 + (p_partkey % 500) * 0.01 AS lon,
-         39.72 + (p_partkey % 130) * 0.01 AS lat
-  FROM part),
-lcc AS (
-  SELECT p_partkey, lon, lat,
-         {_LCC2272_E!r} * sin(lat * {_RAD!r}) AS esin
-  FROM pts),
-rho_t AS (
-  SELECT p_partkey, lon, lat,
-         {_LCC2272_AF!r} * pow(
-           tan({_PI_4!r} - lat * {_RAD_2!r})
-             / pow((1.0 - esin) / (1.0 + esin), {_LCC2272_E_HALF!r}),
-           {_LCC2272_N!r}) AS rho,
-         (lon - {_LCC2272_LON0!r}) * {_LCC2272_N_RAD!r} AS theta
-  FROM lcc)
-SELECT p_partkey,
-       CAST(round(lon * {_WEBMERC_X!r}, 0) AS BIGINT) AS x_3857,
-       CAST(round({_WEBMERC_R!r} * ln(tan({_PI_4!r} + lat * {_RAD_2!r})), 0) AS BIGINT) AS y_3857,
-       CAST(round(rho * sin(theta) * {_M_TO_FTUS!r} + {_LCC2272_FE_FT!r}, 0) AS BIGINT) AS e_2272_ft,
-       CAST(round(({_LCC2272_RHO0!r} - rho * cos(theta)) * {_M_TO_FTUS!r}, 0) AS BIGINT) AS n_2272_ft
-FROM rho_t
-"""
-
-
-@register("p19_reproject_real", _p19_sql(), covers=("P19", "P2"))
-def q_reproject_real(spark, sf_dir):
-    """P19 beyond the reference's identity case: forward Web Mercator +
-    forward Lambert Conformal Conic to the city's own State Plane zone
-    (EPSG:2272), both as whole-stage-codegen'd Column expressions over
-    synthetic in-zone coordinates (sync-db2-ago.py:40-42 is the pyproj
-    transformer this replaces; config.py:5-6 pins identity in the
-    reference's own config)."""
-    from pipeline311_spark.functions.geo import (
-        reproject_4326_to_2272,
-        reproject_4326_to_3857,
-    )
-
-    p = table(spark, sf_dir, "part")
-    lon = F.lit(-80.0) + (F.col("p_partkey") % 500) * F.lit(0.01)
-    lat = F.lit(39.72) + (F.col("p_partkey") % 130) * F.lit(0.01)
-    src = p.select("p_partkey", lon.alias("lon"), lat.alias("lat"))
-    x, y = reproject_4326_to_3857(F.col("lon"), F.col("lat"))
-    e, n = reproject_4326_to_2272(F.col("lon"), F.col("lat"))
-    return src.select(
-        "p_partkey",
-        F.round(x, 0).cast("long").alias("x_3857"),
-        F.round(y, 0).cast("long").alias("y_3857"),
-        F.round(e, 0).cast("long").alias("e_2272_ft"),
-        F.round(n, 0).cast("long").alias("n_2272_ft"),
     )

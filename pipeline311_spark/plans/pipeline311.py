@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from pipeline311_spark.operators.backfill import partition_window_filter
 from pipeline311_spark.operators.joins import anti_join, semi_join
 from pipeline311_spark.operators.merge import latest_per_key, upsert
-from pipeline311_spark.operators.reconcile import reconcile_deletes
 from pipeline311_spark.plans.common import dsum, fmt_ts, fmt_ts_sql, table
 from pipeline311_spark.plans.registry import register
 
@@ -50,24 +49,6 @@ def a3_watermark(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # F2/F3/F4 — range + watermark boundary semantics (strict vs inclusive)
 # ---------------------------------------------------------------------------
-
-_F2_SQL = """
-SELECT event_type, COUNT(*) AS n
-FROM events
-WHERE ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts < TIMESTAMP '2024-01-12 00:00:00'
-GROUP BY event_type
-"""
-
-
-@register("f2_time_range", _F2_SQL, covers=("F2",))
-def f2_range(spark, sf_dir):
-    from pipeline311_spark.operators.filters import time_range
-
-    e = table(spark, sf_dir, "events")
-    return time_range(e, "ts", "2024-01-10 00:00:00", "2024-01-12 00:00:00").groupBy(
-        "event_type"
-    ).agg(F.count("*").alias("n"))
-
 
 # Watermark = max ts among user_id < 5 — a deterministic mid-range instant
 # that exists in the data, so > vs >= differ by exactly the boundary rows.
@@ -174,29 +155,6 @@ def o5_latest(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# J3/K8 — deletion reconciliation + tombstone archive
-# ---------------------------------------------------------------------------
-
-_K8_SQL = """
-SELECT event_type, COUNT(*) AS n_archived
-FROM events
-WHERE event_id % 10 = 0
-GROUP BY event_type
-"""
-
-
-@register("k8_tombstone_archive", _K8_SQL, covers=("K8", "J3", "O3"))
-def k8_tombstone(spark, sf_dir):
-    e = table(spark, sf_dir, "events")
-    raw = e
-    viewer = e.select("event_id", "event_type", "ts")
-    source_ids = e.filter(F.col("event_id") % 10 != 0).select("event_id")
-    tombstones = spark.createDataFrame([], raw.schema)
-    state = reconcile_deletes(raw, viewer, tombstones, source_ids, key="event_id")
-    return state["tombstones"].groupBy("event_type").agg(F.count("*").alias("n_archived"))
-
-
-# ---------------------------------------------------------------------------
 # T2/S10 — partition-pruned backfill window
 # ---------------------------------------------------------------------------
 
@@ -215,70 +173,4 @@ def t2_backfill(spark, sf_dir):
     win = partition_window_filter(o, "o_orderdate", year=1997, month=3)
     return win.agg(
         F.count("*").alias("n_orders"), dsum("o_totalprice").alias("window_total")
-    )
-
-
-# ---------------------------------------------------------------------------
-# A6 — dup guard as data
-# ---------------------------------------------------------------------------
-
-_A6_SQL = """
-SELECT event_type, COUNT(*) AS n, COUNT(DISTINCT event_id) AS n_distinct,
-       COUNT(*) = COUNT(DISTINCT event_id) AS is_unique
-FROM events GROUP BY event_type
-"""
-
-
-@register("a6_dup_guard", _A6_SQL, covers=("A6", "A5"))
-def a6_guard(spark, sf_dir):
-    e = table(spark, sf_dir, "events")
-    return e.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.countDistinct("event_id").alias("n_distinct"),
-        (F.count("*") == F.countDistinct("event_id")).alias("is_unique"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# P3/P5/P12 — cleaning kernel, generic twins (documents/part)
-# ---------------------------------------------------------------------------
-
-_P5_SQL = """
-SELECT CAST(CASE WHEN regexp_extract(source, '([0-9]+)', 1) = '' THEN NULL
-            WHEN CAST(regexp_extract(source, '([0-9]+)', 1) AS BIGINT) > 100 THEN NULL
-            ELSE CAST(regexp_extract(source, '([0-9]+)', 1) AS BIGINT) END AS INTEGER) AS src_num,
-       COUNT(*) AS n_docs
-FROM documents GROUP BY 1
-"""
-
-
-@register("p5_district_extract", _P5_SQL, covers=("P5",))
-def p5_extract(spark, sf_dir):
-    from pipeline311_spark.functions.cleaning import district_number
-
-    d = table(spark, sf_dir, "documents")
-    return d.groupBy(district_number("source").alias("src_num")).agg(
-        F.count("*").alias("n_docs")
-    )
-
-
-_P3_SQL = r"""
-SELECT doc_id,
-       substring(regexp_replace(('<''' || text || '''>'), '^[\<\>'']+|[\<\>'']+$', '', 'g'), 1, 100) AS cleaned_prefix,
-       substring(coalesce(text, ''), 1, 50) AS guarded_prefix
-FROM documents
-"""
-
-
-@register("p3_p12_clean_truncate", _P3_SQL, covers=("P3", "P4", "P12"))
-def p3_clean(spark, sf_dir):
-    from pipeline311_spark.functions.text import strip_edge_chars
-    from pipeline311_spark.functions.cleaning import text_field_guard
-
-    d = table(spark, sf_dir, "documents")
-    dirty = F.concat(F.lit("<'"), F.col("text"), F.lit("'>"))
-    return d.select(
-        "doc_id",
-        F.substring(strip_edge_chars(dirty), 1, 100).alias("cleaned_prefix"),
-        text_field_guard("text", 50).alias("guarded_prefix"),
     )

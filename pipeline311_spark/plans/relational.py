@@ -1,5 +1,5 @@
 """Relational query surface: scans, filters, joins, aggregates, sorts,
-set-ops, windows, pivot, rollup/cube (SURVEY §2.1, §2.4-§2.7 — the
+windows, rollup/cube (SURVEY §2.1, §2.4-§2.7 — the
 operator classes the reference exercises, generalized to the driver's
 TPC-H-ish tables, plus the grouped-aggregate surface Spark gives for
 free per SURVEY §2.6 note).
@@ -16,7 +16,6 @@ from pyspark.sql import Window
 
 from pipeline311_spark.plans.common import (
     REVENUE_SQL,
-    dec,
     dsum,
     fmt_ts,
     fmt_ts_sql,
@@ -261,168 +260,9 @@ def q_window_rank(spark, sf_dir):
     )
 
 
-_WINDOW_RUNNING_SQL = """
-SELECT o_custkey, o_orderkey,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-         PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_spend
-FROM orders
-"""
-
-
-@register("q_window_running", _WINDOW_RUNNING_SQL, covers=("O5",))
-def q_window_running(spark, sf_dir):
-    o = table(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        F.sum(dec("o_totalprice")).over(w).cast("double").alias("running_spend"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# set operations (O3)
-# ---------------------------------------------------------------------------
-
-_SETOPS_SQL = """
-(SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
- INTERSECT
- SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')
-EXCEPT
-SELECT o_custkey FROM orders WHERE o_orderstatus = 'P'
-"""
-
-
-@register("q_setops", _SETOPS_SQL, covers=("O3",))
-def q_setops(spark, sf_dir):
-    o = table(spark, sf_dir, "orders")
-    by_status = lambda s: o.filter(F.col("o_orderstatus") == s).select("o_custkey")  # noqa: E731
-    return by_status("O").intersect(by_status("F")).subtract(by_status("P"))
-
-
-_EXCEPT_ALL_SQL = """
-SELECT user_id FROM events WHERE event_type = 'click'
-EXCEPT ALL
-SELECT user_id FROM events WHERE event_type = 'error'
-"""
-
-
-@register("q_except_all", _EXCEPT_ALL_SQL, covers=("O3",))
-def q_except_all(spark, sf_dir):
-    e = table(spark, sf_dir, "events")
-    clicks = e.filter(F.col("event_type") == "click").select("user_id")
-    errors = e.filter(F.col("event_type") == "error").select("user_id")
-    return clicks.exceptAll(errors)
-
-
-# ---------------------------------------------------------------------------
-# pivot
-# ---------------------------------------------------------------------------
-
-_PIVOT_SQL = """
-SELECT o_orderpriority,
-       COUNT(CASE WHEN o_orderstatus = 'O' THEN 1 END) AS n_open,
-       COUNT(CASE WHEN o_orderstatus = 'F' THEN 1 END) AS n_finished,
-       COUNT(CASE WHEN o_orderstatus = 'P' THEN 1 END) AS n_pending
-FROM orders GROUP BY o_orderpriority
-"""
-
-
-@register("q_pivot_status", _PIVOT_SQL, covers=("A-class",))
-def q_pivot(spark, sf_dir):
-    o = table(spark, sf_dir, "orders")
-    p = o.groupBy("o_orderpriority").pivot("o_orderstatus", ["O", "F", "P"]).count()
-    return p.select(
-        "o_orderpriority",
-        F.coalesce("O", F.lit(0)).alias("n_open"),
-        F.coalesce("F", F.lit(0)).alias("n_finished"),
-        F.coalesce("P", F.lit(0)).alias("n_pending"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# scalar/string kernel (P4/P5/P6 generalized — SURVEY §2.3)
-# ---------------------------------------------------------------------------
-
-_STRING_SQL = """
-SELECT p_partkey,
-       lower(trim(p_type)) AS type_norm,
-       substring(p_name, 1, 12) AS name_trunc,
-       CAST(CASE WHEN regexp_extract(p_brand, '([0-9]+)', 1) = '' THEN NULL
-            ELSE CAST(regexp_extract(p_brand, '([0-9]+)', 1) AS BIGINT) END AS BIGINT) AS brand_num,
-       concat(p_brand, ':', p_type) AS brand_type
-FROM part
-"""
-
-
-@register("q_string_kernel", _STRING_SQL, covers=("P4", "P5", "P6"))
-def q_string_kernel(spark, sf_dir):
-    from pipeline311_spark.functions.cleaning import bounded_truncate, lower_trim
-
-    p = table(spark, sf_dir, "part")
-    first_num = F.regexp_extract("p_brand", r"([0-9]+)", 1)
-    return p.select(
-        "p_partkey",
-        lower_trim("p_type").alias("type_norm"),
-        bounded_truncate("p_name", 12).alias("name_trunc"),
-        F.when(first_num != "", first_num.cast("long")).alias("brand_num"),
-        F.concat("p_brand", F.lit(":"), "p_type").alias("brand_type"),
-    )
-
-
-_CASE_SQL = """
-SELECT CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 'hot'
-            WHEN o_orderpriority = '3-MEDIUM' THEN 'warm'
-            ELSE 'cold' END AS priority_class,
-       COUNT(*) AS n,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-FROM orders GROUP BY 1
-"""
-
-
-@register("q_case_conditional", _CASE_SQL, covers=("P8", "P10"))
-def q_case(spark, sf_dir):
-    o = table(spark, sf_dir, "orders")
-    cls = (
-        F.when(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "hot")
-        .when(F.col("o_orderpriority") == "3-MEDIUM", "warm")
-        .otherwise("cold")
-    )
-    return o.groupBy(cls.alias("priority_class")).agg(
-        F.count("*").alias("n"), dsum("o_totalprice").alias("total")
-    )
-
-
 # ---------------------------------------------------------------------------
 # semi-structured extraction + time bucketing (events)
 # ---------------------------------------------------------------------------
-
-_JSON_SQL = """
-SELECT event_type,
-       COUNT(*) AS n,
-       CAST(SUM(CAST(nullif(regexp_extract(props, '"k": ([0-9]+)', 1), '') AS BIGINT)) AS BIGINT) AS sum_k,
-       CAST(SUM(CAST(nullif(regexp_extract(props, '"k": ([0-9]+)', 1), '') AS BIGINT)) AS DOUBLE) / COUNT(*) AS avg_k
-FROM events GROUP BY event_type
-"""
-
-
-@register("q_json_extract", _JSON_SQL, covers=("P5", "S1"))
-def q_json(spark, sf_dir):
-    e = table(spark, sf_dir, "events")
-    # non-matching/NULL props extract '' — nullif it so the ANSI cast
-    # cannot crash (NULL-on-no-match, the reference's lenient semantics)
-    k = F.nullif(F.regexp_extract("props", r'"k": ([0-9]+)', 1), F.lit("")).cast("long")
-    return e.groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum(k).alias("sum_k"),
-        (F.sum(k).cast("double") / F.count("*")).alias("avg_k"),
-    )
-
 
 _HOURLY_SQL = f"""
 SELECT {fmt_ts_sql("date_trunc('hour', ts)", micros=False)} AS hour,
@@ -439,19 +279,3 @@ def q_hourly(spark, sf_dir):
     return e.groupBy(
         fmt_ts(F.date_trunc("hour", "ts"), micros=False).alias("hour"), "event_type"
     ).agg(F.count("*").alias("n"), dsum("value").alias("sum_value"))
-
-
-_MONTHLY_SQL = """
-SELECT strftime(o_orderdate, '%Y-%m') AS month,
-       COUNT(*) AS n_orders,
-       CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS monthly_total
-FROM orders GROUP BY 1
-"""
-
-
-@register("q_monthly_revenue", _MONTHLY_SQL, covers=("T2", "A-class"))
-def q_monthly(spark, sf_dir):
-    o = table(spark, sf_dir, "orders")
-    return o.groupBy(F.date_format("o_orderdate", "yyyy-MM").alias("month")).agg(
-        F.count("*").alias("n_orders"), dsum("o_totalprice").alias("monthly_total")
-    )

@@ -1,13 +1,13 @@
 """Round-8 retrieval promotion: BM25 as a STORED, incrementally
 maintained index (ext/retrieval.py) — the serving shape of lexical
-retrieval, mirroring the stored-gram contract the MinHash family
-established (dedup_minhash_from_store / dedup_minhash_incr_store).
+retrieval, mirroring the MinHash family's stored-gram contract
+(``stream_minhash_maintain``).
 
 * ``text_bm25_from_store`` — write the corpus as batch 0 of the
   index log (:func:`bm25_index_append_batch`: postings, term-df and
   corpus-stat artifacts from ONE tokenize pass), fold it back
   (:func:`load_bm25_index`), and serve the fixed query set from the
-  store.  Same oracle as ``text_bm25_topk``: the storage hop must be
+  store.  Its oracle is the one-shot BM25 top-k: the storage hop must be
   invisible in the result, and query time reads only the store.
 
 * ``text_bm25_incr_store`` — the per-batch maintenance path: the base
@@ -128,7 +128,7 @@ _BM25_TERM_BUCKETS = 16
 def _term_bucket_col():
     """'t' + (portable_hash64(term) mod buckets) — prefixed so a
     numeric-looking partition value survives Hive-style inference
-    verbatim (the sim_lsh_partitioned_probe lesson)."""
+    verbatim (Hive-style inference would re-type '7' as an int)."""
     from pipeline311_spark.ext.hashing import portable_hash64
 
     return F.concat(
@@ -156,14 +156,13 @@ def _term_bucket_py(term: str) -> str:
     covers=("ext:retrieval", "ext:export", "K2", "O4"),
 )
 def q_bm25_partitioned_store(spark, sf_dir):
-    """The retrieval scale layout made concrete (the analogue of
-    sim_lsh_partitioned_probe): postings
+    """The retrieval scale layout made concrete: postings
     WRITTEN ``partitionBy(term-hash-bucket)``, so a query set's
     vocabulary resolves to a directory list — a partition-pruned file
     read, never a postings scan.  The query terms are plan literals,
     their buckets are computed DRIVER-side from the same md5 hash, and
     the ``isin`` filter lands in the scan's PartitionFilters
-    (asserted in tests/test_layout.py).  A term's postings live
+    (asserted in tests/test_retrieval_store.py).  A term's postings live
     entirely in its bucket (hash-partitioning by the join key), so
     per-term df derived from the pruned read is exact.  Same oracle as
     every other BM25 form: the layout must be invisible in the result."""
@@ -298,9 +297,15 @@ def _stream_maintained_topk(spark, sf_dir, compact: bool):
 # ---------------------------------------------------------------------------
 
 
-def _rrf_recency_sql() -> str:
-    from pipeline311_spark.plans.extensions import _cos_sql
+_DOT = "list_reduce(list_transform(list_zip({a}, {b}), p -> p[1] * p[2]), (x, y) -> x + y)"
+_NORMV = "sqrt(list_reduce(list_transform({a}, x -> x * x), (x, y) -> x + y))"
 
+
+def _cos_sql(a: str, b: str) -> str:
+    return f"{_DOT.format(a=a, b=b)} / ({_NORMV.format(a=a)} * {_NORMV.format(a=b)})"
+
+
+def _rrf_recency_sql() -> str:
     qids = ", ".join(f"({q})" for q in range(_RRF_QUERIES))
     return f"""
 WITH lex AS (

@@ -90,116 +90,6 @@ def q_batched_writer_roundtrip(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# K3 at scale: partition-pruned incremental MERGE into a parquet
-# warehouse (VERDICT "What's missing" #1).  The oracle re-implements the
-# MERGE independently: updates win on key match (version tie included —
-# ON CONFLICT semantics), unmatched target rows survive, new keys (in
-# brand-new partitions) insert.
-# ---------------------------------------------------------------------------
-
-_MERGE_PART_SQL = """
-WITH base AS (
-  SELECT o_orderkey AS key, o_totalprice AS price, o_orderdate AS version,
-         o_orderkey % 16 AS bucket
-  FROM orders),
-upd AS (
-  SELECT key, price + 10 AS price, version, bucket FROM base WHERE key % 7 = 0
-  UNION ALL
-  SELECT key + 100000000, price + 5 AS price, version, (key + 100000000) % 16 AS bucket
-  FROM base WHERE key % 13 = 0),
-merged AS (
-  SELECT * FROM upd
-  UNION ALL
-  SELECT * FROM base WHERE key NOT IN (SELECT key FROM upd))
-SELECT bucket, COUNT(*) AS n_rows,
-       CAST(SUM(CAST(price AS DECIMAL(18,2))) AS DOUBLE) AS total_price
-FROM merged GROUP BY bucket
-"""
-
-
-@register("k3_merge_partitioned", _MERGE_PART_SQL, covers=("K3", "K4", "J1", "T1"))
-def q_merge_partitioned(spark, sf_dir):
-    from pipeline311_spark.operators.merge_backends import upsert_into
-    from pipeline311_spark.plans.common import dsum
-
-    path = os.path.join(tempfile.gettempdir(), f"p311_mergepart_{uuid.uuid4().hex[:12]}")
-    base = table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("key"),
-        F.col("o_totalprice").alias("price"),
-        F.col("o_orderdate").alias("version"),
-        F.pmod("o_orderkey", F.lit(16)).alias("bucket"),
-    )
-    base.write.mode("overwrite").partitionBy("bucket").parquet(path)
-
-    updates = base.filter(F.col("key") % 7 == 0).withColumn(
-        "price", F.col("price") + 10
-    ).unionByName(
-        base.filter(F.col("key") % 13 == 0).select(
-            (F.col("key") + 100000000).alias("key"),
-            (F.col("price") + 5).alias("price"),
-            F.col("version"),
-            F.pmod(F.col("key") + 100000000, F.lit(16)).alias("bucket"),
-        )
-    )
-    # the warehouse MERGE: partition-pruned window-dedup rewrite
-    upsert_into(spark, path, updates, "key", "version", partition_col="bucket")
-
-    # explicit schema: a zero-row partitioned write leaves no partition
-    # dirs to infer from (the empty-increment case)
-    back = spark.read.schema(base.schema).parquet(path)
-    return back.groupBy(F.col("bucket").cast("long").alias("bucket")).agg(
-        F.count("*").alias("n_rows"), dsum("price").alias("total_price")
-    )
-
-
-# ---------------------------------------------------------------------------
-# K3/K4 write-back: the MERGE result lands in a real JDBC database
-# (embedded Derby — the same ``df.write.format("jdbc")`` call points at
-# Postgres on a cluster, reference ``sync-db2.py:78-88``) and is read
-# BACK through the JDBC scan before being checked against the oracle:
-# the roundtrip itself is what is under test.
-# ---------------------------------------------------------------------------
-
-_K3_JDBC_SQL = """
-WITH unioned AS (
-  SELECT *, 0 AS src FROM events WHERE event_id % 2 = 0
-  UNION ALL
-  SELECT *, 1 AS src FROM events WHERE event_id % 2 = 1
-),
-ranked AS (
-  SELECT user_id, event_id, event_type, ts,
-         ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, src DESC) AS rn
-  FROM unioned
-)
-SELECT user_id, event_id, event_type,
-       strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS ts_str
-FROM ranked WHERE rn = 1
-"""
-
-
-@register("k3_jdbc_writeback", _K3_JDBC_SQL, covers=("K3", "K4", "S4"))
-def q_jdbc_writeback(spark, sf_dir):
-    from pipeline311_spark.operators.merge import upsert
-    from pipeline311_spark.sources.readers import read_jdbc
-
-    e = table(spark, sf_dir, "events").select("user_id", "event_id", "event_type", "ts")
-    target = e.filter(F.col("event_id") % 2 == 0)
-    updates = e.filter(F.col("event_id") % 2 == 1)
-    merged = upsert(target, updates, key="user_id", version_col="ts").select(
-        "user_id",
-        "event_id",
-        "event_type",
-        F.date_format("ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("ts_str"),
-    )
-    db = os.path.join(tempfile.gettempdir(), f"p311_k3db_{uuid.uuid4().hex[:12]}")
-    url = f"jdbc:derby:{db};create=true"
-    merged.write.format("jdbc").option("url", url).option("dbtable", "merged").mode(
-        "overwrite"
-    ).save()
-    return read_jdbc(spark, url, "merged")
-
-
-# ---------------------------------------------------------------------------
 # T5 + T6 under the oracle gate: `df.observe` progress telemetry
 # (reference's print-every-50k counter, sync-db2.py:64-67) plus the
 # throttled batched writer (politeness pause,

@@ -210,48 +210,6 @@ def _sf_raw_schema() -> T.StructType:
 #: (REST JSON), per FIXTURES.md `sf_cases_raw`.
 SF_CASE_RAW = _sf_raw_schema()
 
-#: Bronze output of the cleaning kernel: FIELD_MAP's 31 dests + derived
-#: description_full / status_notes / shape (FIXTURES.md).
-CASE_CLEAN = T.StructType(
-    [
-        T.StructField("service_request_id", T.LongType(), False),
-        T.StructField("status", T.StringType()),
-        T.StructField("service_name", T.StringType()),
-        T.StructField("service_code", T.StringType()),
-        T.StructField("description", T.StringType()),
-        T.StructField("description_full", T.StringType()),
-        T.StructField("status_notes", T.StringType()),
-        T.StructField("agency_responsible", T.StringType()),
-        T.StructField("service_notice", T.StringType()),
-        T.StructField("requested_datetime", T.TimestampType()),
-        T.StructField("updated_datetime", T.TimestampType()),
-        T.StructField("expected_datetime", T.TimestampType()),
-        T.StructField("closed_datetime", T.TimestampType()),
-        T.StructField("address", T.StringType()),
-        T.StructField("zipcode", T.StringType()),
-        T.StructField("media_url", T.StringType()),
-        T.StructField("private_case", T.IntegerType()),
-        T.StructField("subject", T.StringType()),
-        T.StructField("type_", T.StringType()),
-        T.StructField("police_district", T.IntegerType()),
-        T.StructField("council_district_num", T.IntegerType()),
-        T.StructField("pinpoint_area", T.StringType()),
-        T.StructField("parent_service_request_id", T.LongType()),
-        T.StructField("li_district", T.StringType()),
-        T.StructField("sanitation_district", T.StringType()),
-        T.StructField("service_request_origin", T.StringType()),
-        T.StructField("service_type", T.StringType()),
-        T.StructField("record_id", T.StringType()),
-        T.StructField("vehicle_model", T.StringType()),
-        T.StructField("vehicle_make", T.StringType()),
-        T.StructField("vehicle_color", T.StringType()),
-        T.StructField("vehicle_body_style", T.StringType()),
-        T.StructField("vehicle_license_plate", T.StringType()),
-        T.StructField("vehicle_license_plate_state", T.StringType()),
-        T.StructField("shape", T.StringType()),  # EWKT 'SRID=4326;POINT (x y)'
-    ]
-)
-
 #: Enterprise/silver header whitelist (sync-db2-ago.py:441-444).
 ENTERPRISE_COLUMNS = [
     "objectid",

@@ -7,8 +7,6 @@ projection/filter pushdown (config.py:99-145) becomes the default.
 
 from pipeline311_spark.sources.readers import (  # noqa: F401
     load_table,
-    load_tables,
-    read_parquet,
     read_csv,
     read_jdbc,
 )

@@ -21,13 +21,6 @@ from pipeline311_spark.schemas import TESTDATA_SCHEMAS
 TESTDATA_TABLES = tuple(TESTDATA_SCHEMAS)
 
 
-def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
 def read_csv(spark: SparkSession, path: str, schema: T.StructType, header: bool = True) -> DataFrame:
     """S9 (seed.py:25-36 csv.DictReader) — explicit schema, no inference."""
     return spark.read.schema(schema).option("header", header).csv(path)
@@ -110,7 +103,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     return normalize_event_time(df, TESTDATA_SCHEMAS.get(name))
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}

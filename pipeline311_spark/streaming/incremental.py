@@ -9,9 +9,7 @@ while the pull is by *source* modify time.
 
 The Structured Streaming form of the same loop is a ``foreachBatch``
 MERGE through :func:`pipeline311_spark.operators.merge_backends
-.upsert_into` (``plans/streaming_custom.py``: ``stream_merge_latest``,
-``stream_connector_incremental_sync``), so both paths share the
-window-dedup kernel.
+.upsert_into``, so both paths share the window-dedup kernel.
 """
 
 from __future__ import annotations

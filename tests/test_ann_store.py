@@ -162,9 +162,7 @@ def test_store_queries_do_not_leak_tmp_dirs(spark):
 
     pat = os.path.join(tempfile.gettempdir(), "p311_ivfpq*")
     before = set(glob.glob(pat))
-    for name in ("sim_ivfpq_from_store", "sim_ivfpq_incr_store"):
-        rows = REGISTRY[name].fn(spark, SF).collect()
-        assert rows, name
+    assert REGISTRY["sim_ivfpq_from_store"].fn(spark, SF).collect()
     after = set(glob.glob(pat))
     assert after == before, f"leaked temp dirs: {sorted(after - before)}"
 
@@ -324,70 +322,6 @@ def test_codes_log_crashed_swap_refusal_recovery_and_append_window(spark, tmp_pa
 
     ann_codes_compact(spark, idx)
     assert snap() == full
-
-
-def test_trained_build_is_deterministic_and_serves_unchanged(spark, tmp_path):
-    """ann_index_build_trained (Lloyd cells + residual-trained
-    codebook): two runs produce bit-identical artifacts (exact decimal
-    means — the determinism requirement), and the store serves through
-    the UNCHANGED pruned path; an incremental append against the
-    trained (frozen) quantizer still works."""
-    from pipeline311_spark.ext.ann_store import ann_index_build_trained
-
-    e = _emb(spark)
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    for out in (a, b):
-        ann_index_build_trained(spark, e, out, n_cells=8, pq_k=4, iters=1)
-    ia, ib = load_ann_index(spark, a), load_ann_index(spark, b)
-    for fa, fb in ((ia.centroids, ib.centroids), (ia.codebook, ib.codebook), (ia.codes, ib.codes)):
-        assert sorted(map(tuple, fa.collect())) == sorted(map(tuple, fb.collect()))
-
-    qvecs = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in e.filter(F.col("vec_id") < 2).collect()
-    }
-    served = ann_adc_topk_from_store(spark, a, qvecs, k=5, nprobe=2)
-    assert served.count() > 0
-
-    # frozen-trained quantizer: an append must really ENCODE with the
-    # stored artifacts (review r10: an empty append exercised nothing)
-    # — build on corpus-minus-batch, append the batch, and the batch's
-    # stored code rows must equal a recompute from the loaded trained
-    # quantizer (residual assign+encode, the production path)
-    from pipeline311_spark.ext.ann_store import (
-        _centroid_schema,
-        _load_quantizer,
-        _vec_frame,
-        assign_cells,
-        pq_codes,
-    )
-
-    is_b = F.col("vec_id") % 7 == 3
-    c_dir = str(tmp_path / "c")
-    ann_index_build_trained(spark, e.filter(~is_b), c_dir, n_cells=8, pq_k=4, iters=1)
-    ann_codes_append_batch(e.filter(is_b), 1, c_dir)
-    cents, cbook = _load_quantizer(spark, c_dir)
-    cents_df = spark.createDataFrame(
-        sorted((int(i), vec) for i, vec in cents.items()), _centroid_schema("cell")
-    )
-    want = sorted(
-        map(
-            tuple,
-            pq_codes(
-                assign_cells(
-                    _vec_frame(e.filter(is_b), "vec_id", "embedding"), cents_df
-                ),
-                cbook,
-            ).collect(),
-        )
-    )
-    batch_ids = {r["vec_id"] for r in e.filter(is_b).select("vec_id").collect()}
-    got = sorted(
-        t
-        for t in map(tuple, load_ann_index(spark, c_dir).codes.collect())
-        if t[0] in batch_ids
-    )
-    assert got == want and got
 
 
 def test_tiny_corpus_degrades_to_empty_serve_not_crash(spark, tmp_path):

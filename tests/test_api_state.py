@@ -80,8 +80,7 @@ def test_hostile_session_timezone_pinned(spark, sf_dir):
 
     sensitive = (
         "q_hourly_rollup",
-        "p16_dst_offset_format",
-        "q_session_window_native",
+        "p15_utc_relocalize",
         "stream_windowed_counts",
     )
     baseline = {

@@ -39,22 +39,6 @@ def test_connector_reader_pushdown_unit(sf_dir):
     assert all(r[0] > 10 for r in rows)
 
 
-def test_connector_query_matches_plain_scan(spark, sf_dir):
-    got = {
-        r["lang"]: (r["n_docs"], r["total_chars"])
-        for r in REGISTRY["s1_connector_pushdown"].fn(spark, sf_dir).collect()
-    }
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    want = {
-        r["lang"]: (r["n"], r["t"])
-        for r in docs.filter("n_chars > 200 AND lang IN ('en','de','fr')")
-        .groupBy("lang")
-        .agg(F.count("*").alias("n"), F.sum("n_chars").alias("t"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_flagship_plan_quality(spark, sf_dir):
     plan = explain_str(REGISTRY["q05_nation_revenue"].fn(spark, sf_dir))
     # filters pushed into the parquet scan
@@ -127,24 +111,10 @@ _SINGLE_PARTITION_OK = {
     "o2_desc_scan_order",
     "q17_below_part_average",
     "t2_backfill_window",
-    # bloom filter assembly: global agg over ≤ m/64 pre-reduced word
-    # rows (bit_or combined map-side) into the one-row broadcast filter
-    # — bytes, not data, cross the single partition (operators/bloom.py)
-    "j3_bloom_reconcile",
-    # corpus-stats scalar (N docs + avg doc length, one row) broadcast
-    # into the scoring join — the broadcast-watermark shape; the
-    # matched-token aggregation itself stays hash-partitioned
-    "text_bm25_topk",
-    # inherits text_bm25_topk's corpus-stats scalar (it fuses that
-    # ranker's output); the fusion itself is bounded-top-k per query
+    # the BM25 ranker's corpus-stats scalar (N docs + avg doc length,
+    # one row) broadcast into the scoring join — the broadcast-watermark
+    # shape; the fusion itself is bounded-top-k per query
     "retrieval_hybrid_rrf",
-    # rank/cumulative-coverage window over the V=50 rows that survive
-    # the TakeOrdered top-V, plus the one-row token-total scalar —
-    # bytes, not data, cross the single partition
-    "text_vocab_coverage",
-    # feature-model totals: one aggregate over the 8192-row hashed
-    # feature table (fixed-size by construction)
-    "sample_importance_dsir",
 }
 
 

@@ -1,84 +1,20 @@
-"""BM25 + hash-shard export (plans/curation3.py) — the properties the
-oracle twin can't see: within-file ordering, shard balance, and
-re-run determinism of the export."""
+"""BM25 scoring and rank fusion (plans/curation3.py) — the properties
+the oracle twin can't see."""
 
 from __future__ import annotations
 
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from pipeline311_spark.plans.curation3 import (
-    _N_SHARDS,
-    export_hash_shards_frame,
-    write_hash_shards,
-)
-
 SF = "/root/testdata/sf0.001"
-
-
-def test_shard_files_internally_sorted_by_okey(spark, tmp_path):
-    """Each shard directory holds files whose rows are ascending in the
-    deterministic order key — the property a data loader streams on."""
-    out = str(tmp_path / "shards")
-    write_hash_shards(export_hash_shards_frame(spark, SF), out)
-    shard_dirs = [d for d in os.listdir(out) if d.startswith("shard=")]
-    assert len(shard_dirs) == _N_SHARDS
-    import pyarrow.parquet as pq
-
-    for d in shard_dirs:
-        full = os.path.join(out, d)
-        for f in os.listdir(full):
-            if not f.endswith(".parquet"):
-                continue
-            okeys = pq.read_table(os.path.join(full, f), columns=["okey"])[
-                "okey"
-            ].to_pylist()
-            assert okeys == sorted(okeys), f"{d}/{f} not sorted by okey"
-
-
-def test_shard_export_is_deterministic_and_balanced(spark, tmp_path):
-    """Two independent exports of the same corpus agree row-for-row
-    (shard membership AND order), and no shard is pathologically
-    skewed (hash assignment, not range)."""
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    frame = export_hash_shards_frame(spark, SF)
-    write_hash_shards(frame, a)
-    write_hash_shards(frame, b)
-
-    ra = spark.read.parquet(a).orderBy("shard", "okey").collect()
-    rb = spark.read.parquet(b).orderBy("shard", "okey").collect()
-    assert ra == rb
-
-    counts = [
-        r["n"]
-        for r in spark.read.parquet(a)
-        .groupBy("shard")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    ]
-    assert len(counts) == _N_SHARDS
-    total = sum(counts)
-    for c in counts:
-        # binomial(total, 1/8) stays well inside ±60% of the mean
-        assert abs(c - total / _N_SHARDS) < 0.6 * total / _N_SHARDS, counts
 
 
 def test_bm25_ranks_term_frequency_over_length(spark):
     """Sanity on semantics (the oracle checks cross-engine parity, not
     IR sense): every returned doc contains at least one query term,
     ranks are dense from 1, and scores are non-increasing."""
-    from pipeline311_spark.plans.curation3 import (
-        _BM25_TOPK,
-        bm25_scored_frame,
-        q_bm25_topk,
-    )
+    from pipeline311_spark.plans.curation3 import _BM25_TOPK, bm25_scored_frame
 
-    # the hashed registry output drops the ln-based double score
-    # (ADVICE r7: DuckDB ln vs JVM Math.log is a 1-ulp hazard) — the
-    # monotonicity check runs on the engine-internal scored frame
-    assert "bm25" not in q_bm25_topk(spark, SF).columns
+    # registry outputs drop the ln-based double score (DuckDB ln vs JVM
+    # Math.log is a 1-ulp hazard) — the monotonicity check runs on the
+    # engine-internal scored frame
     rows = bm25_scored_frame(spark, SF).collect()
     assert rows, "BM25 returned nothing"
     by_q: dict = {}
@@ -91,25 +27,6 @@ def test_bm25_ranks_term_frequency_over_length(spark):
         scores = [r["bm25"] for r in rs]
         assert scores == sorted(scores, reverse=True)
         assert all(r["tf_sum"] >= 1 for r in rs)
-
-
-def test_from_store_queries_do_not_leak_tmp_dirs(spark):
-    """Review r7: every invocation of the stored-gram queries minted a
-    fresh uuid parquet dir under /tmp and never removed it — oracle
-    sweeps and bench reps accumulated corpus-sized dirs forever.  Both
-    now checkpoint eagerly and rmtree in a finally."""
-    import glob
-    import tempfile
-
-    from pipeline311_spark.plans import REGISTRY
-
-    pat = os.path.join(tempfile.gettempdir(), "p311_g*")
-    before = set(glob.glob(pat))
-    for name in ("dedup_minhash_from_store", "dedup_minhash_from_array_store"):
-        rows = REGISTRY[name].fn(spark, SF).collect()
-        assert rows, name
-    after = set(glob.glob(pat))
-    assert after == before, f"leaked temp dirs: {sorted(after - before)}"
 
 
 def test_rrf_fusion_semantics(spark):

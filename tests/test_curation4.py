@@ -1,44 +1,11 @@
-"""Round-8 additions (plans/curation4.py) — properties the oracle twin
-can't see: survivor/cluster consistency, diff-status partitioning, PQ
-assignment optimality, coverage monotonicity, and DSIR sign semantics."""
+"""Corpus snapshot diff (plans/curation4.py) — the diff-status
+partitioning the oracle twin can't see."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from pipeline311_spark.plans import REGISTRY
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_minhash_surviving_agrees_with_clusters(spark):
-    """Survivors = corpus minus non-keeper cluster members, and every
-    dropped doc's cluster keeper IS a survivor (no orphan clusters)."""
-    from pipeline311_spark.ext.dedup import minhash_dedup_pairs
-    from pipeline311_spark.ext.graph import dup_clusters
-    from pipeline311_spark.plans.common import table
-    from pipeline311_spark.plans.extensions import (
-        _MH_BANDS,
-        _MH_K,
-        _MH_N,
-        _MH_SEED,
-        _MH_THRESHOLD,
-    )
-
-    d = table(spark, SF, "documents")
-    pairs = minhash_dedup_pairs(
-        d, "doc_id", "text",
-        k=_MH_K, bands=_MH_BANDS, n=_MH_N, threshold=_MH_THRESHOLD, seed=_MH_SEED,
-    ).select("doc_a", "doc_b")
-    clusters = {r["doc_id"]: r["cluster"] for r in dup_clusters(pairs).collect()}
-    survivors = {
-        r["doc_id"] for r in REGISTRY["dedup_minhash_surviving"].fn(spark, SF).collect()
-    }
-    all_docs = {r["doc_id"] for r in d.select("doc_id").collect()}
-    dropped = {doc for doc, c in clusters.items() if doc != c}
-    assert survivors == all_docs - dropped
-    for doc in dropped:
-        assert clusters[doc] in survivors, f"keeper of {doc} was dropped"
 
 
 def test_version_diff_statuses_partition_the_union(spark):
@@ -73,294 +40,3 @@ def test_version_diff_statuses_partition_the_union(spark):
         else:
             expect = "unchanged"
         assert r["status"] == expect, (i, r["status"], expect)
-
-
-def test_vocab_coverage_monotone_and_bounded(spark):
-    rows = sorted(
-        REGISTRY["text_vocab_coverage"].fn(spark, SF).collect(),
-        key=lambda r: r["rank"],
-    )
-    assert rows and rows[0]["rank"] == 1
-    cnts = [r["cnt"] for r in rows]
-    assert cnts == sorted(cnts, reverse=True), "counts not non-increasing"
-    covs = [r["coverage"] for r in rows]
-    assert covs == sorted(covs), "coverage not cumulative"
-    assert 0.0 < covs[0] <= covs[-1] <= 1.0
-
-
-def test_dsir_sign_tracks_target_likeness(spark):
-    """Docs whose tokens are relatively more frequent in the target
-    sub-corpus score higher; the selected flag is exactly the
-    above-corpus-mean set, and target docs are never scored."""
-    from pipeline311_spark.plans.common import table
-    from pipeline311_spark.plans.curation4 import _DSIR_TARGET
-
-    rows = REGISTRY["sample_importance_dsir"].fn(spark, SF).collect()
-    assert rows
-    d = table(spark, SF, "documents")
-    target_ids = {
-        r["doc_id"]
-        for r in d.filter(F.col("source") == _DSIR_TARGET).select("doc_id").collect()
-    }
-    # exact decimal SUM mirroring the plan's order-independent decimal
-    # aggregation (then the same double division) — a float
-    # accumulation could round the other way at a boundary
-    from decimal import Decimal
-
-    mean_lr = round(
-        float(sum(Decimal(str(r["avg_log_ratio"])) for r in rows)) / len(rows), 6
-    )
-    for r in rows:
-        assert r["doc_id"] not in target_ids
-        assert r["selected"] == (r["avg_log_ratio"] > mean_lr), r
-        assert r["n_tokens"] >= 1
-    assert any(r["selected"] for r in rows) and any(not r["selected"] for r in rows)
-
-
-def test_pq_codes_are_nearest_centroids(spark):
-    """Brute-force re-check in Python: every emitted code is the argmin
-    squared-L2 centroid for its sub-vector (ties to the lower id)."""
-    from pipeline311_spark.plans.common import emb_table
-    from pipeline311_spark.plans.curation4 import _PQ_K, _PQ_M, _PQ_SUBDIM
-
-    vecs = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in emb_table(spark, SF).collect()
-    }
-    cents = {i: vecs[i] for i in sorted(vecs) if i < _PQ_K}
-    rows = REGISTRY["sim_pq_encode"].fn(spark, SF).collect()
-    assert len(rows) == len(vecs)
-    for r in rows:
-        v = vecs[r["vec_id"]]
-        for j in range(_PQ_M):
-            sub = v[j * _PQ_SUBDIM : (j + 1) * _PQ_SUBDIM]
-            best = min(
-                (
-                    (
-                        sum((x - y) * (x - y) for x, y in zip(sub, cv[j * _PQ_SUBDIM : (j + 1) * _PQ_SUBDIM])),
-                        cid,
-                    )
-                    for cid, cv in cents.items()
-                )
-            )[1]
-            assert r[f"code{j}"] == best, (r["vec_id"], j)
-
-
-def test_mmr_selection_properties(spark):
-    """Rank 1 is the pure-relevance winner, ranks are dense, selections
-    are distinct members of the candidate pool, and every later pick
-    maximizes the MMR score against the already-selected set (verified
-    with an independent Python greedy over engine-computed sims)."""
-    from pipeline311_spark.ext.similarity import brute_force_topk
-    from pipeline311_spark.plans.common import emb_table
-    from pipeline311_spark.plans.curation4 import (
-        _MMR_K,
-        _MMR_LAMBDA,
-        _MMR_POOL,
-        _MMR_QUERIES,
-    )
-
-    rows = REGISTRY["retrieval_mmr_diversified"].fn(spark, SF).collect()
-    assert rows
-    e = emb_table(spark, SF)
-    cand = brute_force_topk(
-        e, e.filter(F.col("vec_id") < _MMR_QUERIES), k=_MMR_POOL
-    ).collect()
-    rel = {(r["query_id"], r["neighbor_id"]): r["cos_sim"] for r in cand}
-    vecs = {r["vec_id"]: [float(x) for x in r["embedding"]] for r in e.collect()}
-
-    def cos(a, b):
-        va, vb = vecs[a], vecs[b]
-        dot = 0.0
-        for x, y in zip(va, vb):
-            dot += x * y
-        na = nb = 0.0
-        for x in va:
-            na += x * x
-        for y in vb:
-            nb += y * y
-        return dot / ((na**0.5) * (nb**0.5))
-
-    by_q: dict = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r)
-    assert set(by_q) == set(range(_MMR_QUERIES))
-    for qid, rs in by_q.items():
-        rs.sort(key=lambda r: r["rank"])
-        assert [r["rank"] for r in rs] == list(range(1, len(rs) + 1))
-        assert len(rs) == min(_MMR_K, _MMR_POOL)
-        picked = [r["doc_id"] for r in rs]
-        assert len(set(picked)) == len(picked)
-        pool = sorted(d for (q, d) in rel if q == qid)
-        assert set(picked) <= set(pool)
-        # independent greedy replay (python cosine differs from the
-        # engine fold only in never-observed last-ulp ties)
-        sel: list = []
-        remaining = list(pool)
-        while remaining and len(sel) < _MMR_K:
-            best, best_s = None, None
-            for d in remaining:
-                if not sel:
-                    s = rel[(qid, d)]
-                else:
-                    s = _MMR_LAMBDA * rel[(qid, d)] - (1 - _MMR_LAMBDA) * max(
-                        cos(d, x) for x in sel
-                    )
-                if best_s is None or s > best_s:
-                    best, best_s = d, s
-            sel.append(best)
-            remaining.remove(best)
-        assert picked == sel, (qid, picked, sel)
-
-
-def test_pq_adc_matches_python_replay(spark):
-    """Independent replay: encode + LUT + ADC ranking recomputed in
-    plain Python from the raw vectors must reproduce the engine's
-    top-k exactly (same fold order, same tiebreaks)."""
-    from pipeline311_spark.plans.common import emb_table
-    from pipeline311_spark.plans.curation4 import (
-        _PQ_ADC_K,
-        _PQ_ADC_QUERIES,
-        _PQ_K,
-        _PQ_M,
-        _PQ_SUBDIM,
-    )
-
-    vecs = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in emb_table(spark, SF).collect()
-    }
-    cents = {i: vecs[i] for i in sorted(vecs) if i < _PQ_K}
-
-    def sq(a, b, j):
-        acc = 0.0
-        for x, y in zip(
-            a[j * _PQ_SUBDIM : (j + 1) * _PQ_SUBDIM],
-            b[j * _PQ_SUBDIM : (j + 1) * _PQ_SUBDIM],
-        ):
-            acc += (x - y) * (x - y)
-        return acc
-
-    codes = {
-        vid: [
-            min((sq(v, cv, j), cid) for cid, cv in cents.items())[1]
-            for j in range(_PQ_M)
-        ]
-        for vid, v in vecs.items()
-    }
-    expect = []
-    for qid in sorted(v for v in vecs if v < _PQ_ADC_QUERIES):
-        dists = []
-        for vid, cd in codes.items():
-            if vid == qid:
-                continue
-            d = None
-            for j in range(_PQ_M):
-                t = sq(vecs[qid], cents[cd[j]], j)
-                d = t if d is None else d + t
-            dists.append((d, vid))
-        dists.sort()
-        expect += [
-            (qid, r + 1, vid) for r, (_, vid) in enumerate(dists[:_PQ_ADC_K])
-        ]
-    rows = sorted(
-        (r["query_id"], r["rank"], r["neighbor_id"])
-        for r in REGISTRY["sim_pq_adc_topk"].fn(spark, SF).collect()
-    )
-    assert rows == sorted(expect)
-
-
-def test_pq_recall_audit_consistent_with_members(spark):
-    """One row per query; recall is exactly n_overlap/k; n_overlap
-    equals the TRUE intersection |ADC ∩ exact| with the exact-L2 top-k
-    recomputed independently in Python (the mirrored-wrong-together
-    bug class the ground-truth layer exists for)."""
-    from pipeline311_spark.plans.common import emb_table
-    from pipeline311_spark.plans.curation4 import _PQ_ADC_K, _PQ_ADC_QUERIES
-
-    rows = {r["query_id"]: r for r in REGISTRY["sim_pq_recall_audit"].fn(spark, SF).collect()}
-    assert set(rows) == set(range(_PQ_ADC_QUERIES))
-    adc = REGISTRY["sim_pq_adc_topk"].fn(spark, SF).collect()
-    adc_sets: dict = {}
-    for r in adc:
-        adc_sets.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    vecs = {
-        r["vec_id"]: [float(x) for x in r["embedding"]]
-        for r in emb_table(spark, SF).collect()
-    }
-
-    def exact_topk(qid):
-        qv = vecs[qid]
-        dists = sorted(
-            (sum((x - y) * (x - y) for x, y in zip(qv, v)), vid)
-            for vid, v in vecs.items()
-            if vid != qid
-        )
-        return {vid for _, vid in dists[:_PQ_ADC_K]}
-
-    for qid, r in rows.items():
-        assert 0 <= r["n_overlap"] <= _PQ_ADC_K
-        assert r["recall"] == r["n_overlap"] / _PQ_ADC_K
-        truth = len(adc_sets.get(qid, set()) & exact_topk(qid))
-        assert r["n_overlap"] == truth, (qid, r["n_overlap"], truth)
-
-
-def test_incremental_shards_consistent_with_diff(spark):
-    """Shard rollup equals a Python rollup of the per-doc diff with the
-    same hash assignment; dirty is exactly 'any non-unchanged member'."""
-    from pipeline311_spark.plans.curation4 import _EIS_SHARDS
-
-    diff = {r["doc_id"]: r["status"] for r in REGISTRY["corpus_version_diff"].fn(spark, SF).collect()}
-    shards = {r["shard"]: r for r in REGISTRY["export_incremental_shards"].fn(spark, SF).collect()}
-    import hashlib
-
-    def shard_of(doc_id):
-        h = hashlib.md5(f"shard:{doc_id}".encode()).hexdigest()[:15]
-        return int(h, 16) % _EIS_SHARDS
-
-    expect: dict = {}
-    for d, s in diff.items():
-        e = expect.setdefault(shard_of(d), {"n_docs": 0, "n_added": 0, "n_changed": 0, "n_removed": 0, "dirty": False})
-        if s != "removed":
-            e["n_docs"] += 1
-        if s in ("added", "changed", "removed"):
-            e[f"n_{s}"] += 1
-            e["dirty"] = True
-    assert set(shards) == set(expect)
-    for sh, e in expect.items():
-        r = shards[sh]
-        for k, v in e.items():
-            assert r[k] == v, (sh, k, r[k], v)
-    assert any(r["dirty"] for r in shards.values())
-
-
-def test_per_source_gate_keeps_top_mass(spark):
-    """Per source: everything kept scores >= everything dropped, the
-    kept mass reaches the ceil(q%) target, and removing the threshold
-    bucket would drop below target (threshold minimality)."""
-    from pipeline311_spark.ext.textstats import quality_score
-    from pipeline311_spark.plans.common import table
-    from pipeline311_spark.plans.curation4 import _PSQ_BUCKETS, _PSQ_PCT
-
-    d = table(spark, SF, "documents").filter(F.col("text").isNotNull())
-    scored = d.select(
-        "doc_id", "source",
-        F.floor(quality_score("text") * _PSQ_BUCKETS).cast("long").alias("qb"),
-    ).collect()
-    kept = REGISTRY["sample_per_source_quality_gate"].fn(spark, SF).collect()
-    kept_ids = {r["doc_id"] for r in kept}
-    by_src: dict = {}
-    for r in scored:
-        by_src.setdefault(r["source"], []).append(r)
-    assert kept_ids and kept_ids < {r["doc_id"] for r in scored}
-    for src, rows in by_src.items():
-        k = [r for r in rows if r["doc_id"] in kept_ids]
-        dmin = min((r["qb"] for r in rows if r["doc_id"] not in kept_ids), default=None)
-        assert k, f"source {src} kept nothing"
-        thr = min(r["qb"] for r in k)
-        if dmin is not None:
-            assert thr > dmin  # kept strictly above every dropped bucket
-        target = (_PSQ_PCT * len(rows) + 99) // 100
-        assert len(k) >= target
-        # minimality: without the threshold bucket the mass is < target
-        assert len([r for r in k if r["qb"] > thr]) < target

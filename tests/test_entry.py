@@ -33,12 +33,9 @@ def test_registry_contract(spark):
     assert len(qs) >= 40
     # every oracle key has a query
     assert set(oracles) <= set(qs)
-    # oracle coverage: only explicitly non-SQL ops may omit the oracle
-    # (multimodal returns arrays the hash can't canon; the trained-PQ
-    # audit's Lloyd iterations are not SQL-re-derivable — its OUTPUT is
-    # the audit, plans/ann_store_q.py)
+    # oracle coverage: every registered query carries an oracle
     missing = set(qs) - set(oracles)
-    assert missing <= {"multimodal_image_features", "sim_ivfpq_trained_audit"}
+    assert not missing, missing
 
 
 @pytest.mark.parametrize("name", ["q01_pricing_summary", "k3_upsert_merge", "dedup_exact_groups"])
@@ -69,12 +66,7 @@ def test_driver_sample_spans_every_covers_tag():
     from pipeline311_spark import plans
 
     assert list(plans.queries()) == order
-    # every driver-sampled query must be HASH-checkable (VERDICT r10
-    # item 1: the rows-only trained audit rode the sample for two
-    # rounds as a structural `err: no_oracle`; the oracled one-step
-    # trainer is registered ahead of it with the same covers set so
-    # the greedy cover always picks the checkable carrier)
+    # every driver-sampled query must be HASH-checkable
     unoracled_head = [n for n in head if REGISTRY[n].oracle is None]
     assert unoracled_head == [], f"rows-only queries in driver sample: {unoracled_head}"
     assert "sim_ann_cells_train_step" in head
-    assert "sim_ivfpq_trained_audit" not in head

@@ -3,28 +3,24 @@ multimodal) — semantic properties, not just row counts."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
 from pyspark.sql import functions as F
 
 from pipeline311_spark.ext.dedup import (
     exact_dedup,
     minhash_dedup_pairs,
-    minhash_incremental_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
-    simhash,
-    simhash_near_pairs,
 )
-from pipeline311_spark.ext.multimodal import (
-    decode_image_features,
-    documents_as_media,
-    frame_sample,
-    media_manifest,
+from pipeline311_spark.ext.multimodal import documents_as_media, media_manifest
+from pipeline311_spark.ext.similarity import brute_force_topk
+from pipeline311_spark.ext.textstats import (
+    lang_pred_from_scores,
+    lang_scores_on_tokens,
+    quality_score,
+    token_count,
+    tokens,
 )
-from pipeline311_spark.ext.similarity import brute_force_topk, lsh_ann_topk
-from pipeline311_spark.ext.textstats import lang_id, quality_score, token_count
 
 DOCS = [
     (0, "the quick brown fox jumps over the lazy dog near the river bank today"),
@@ -64,47 +60,6 @@ def test_minhash_dedup_pairs(docs):
     assert got[(0, 3)] == 1.0
     assert (0, 1) in got
     assert not any(2 in p for p in got)
-
-
-def test_minhash_incremental_equals_filtered_full(spark):
-    # The incremental contract: existing=even ids, new=odd ids must
-    # yield exactly the full run's pairs restricted to >=1 new member
-    # (and MUST NOT re-find old-old pairs).  doc 4 is an even near-dup
-    # of doc 0 so the full run contains an even-even pair to exclude.
-    docs = spark.createDataFrame(
-        DOCS + [(4, "the quick brown fox jumps over the lazy dog near the river bank tonight")],
-        "doc_id long, text string",
-    )
-    kw = dict(k=8, bands=4, n=3, threshold=0.5)
-    full_rows = minhash_dedup_pairs(docs, "doc_id", "text", **kw).collect()
-    inc = minhash_incremental_pairs(
-        docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1"), "doc_id", "text", **kw
-    )
-    want = sorted(tuple(r) for r in full_rows if r["doc_a"] % 2 == 1 or r["doc_b"] % 2 == 1)
-    got = sorted(tuple(r) for r in inc.collect())
-    assert got == want and len(got) > 0
-    # and the full run has at least one even-even pair that inc excludes
-    assert any(r["doc_a"] % 2 == 0 and r["doc_b"] % 2 == 0 for r in full_rows)
-
-    # the from-store path (stored corpus signatures + grams, batch-only
-    # recompute) must produce the identical pair set
-    from pipeline311_spark.ext.dedup import (
-        _gram_hash_table,
-        _signatures_from_grams,
-        minhash_incremental_from_store,
-    )
-
-    existing = docs.filter("doc_id % 2 = 0")
-    gh = _gram_hash_table(existing, "doc_id", "text", 3)
-    store = minhash_incremental_from_store(
-        _signatures_from_grams(gh, 8, 42),
-        gh,
-        docs.filter("doc_id % 2 = 1"),
-        "doc_id",
-        "text",
-        k=8, bands=4, n=3, threshold=0.5,
-    )
-    assert sorted(tuple(r) for r in store.collect()) == want
 
 
 def test_minhash_verify_plan_reads_gram_cache(docs):
@@ -151,15 +106,6 @@ def test_lsh_hot_bucket_capped(spark):
     assert (100, 101) in {(r["doc_a"], r["doc_b"]) for r in pairs}  # small bucket survives
 
 
-def test_simhash_identical_and_near(docs):
-    sig = simhash(docs, "doc_id", "text")
-    pairs = simhash_near_pairs(sig, max_hamming=6)
-    rows = {r["doc"]: r["simhash"] for r in sig.collect()}
-    assert rows[0] == rows[3]
-    got = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in pairs.collect()}
-    assert got[(0, 3)] == 0
-
-
 VECS = [
     (0, [1.0, 0.0, 0.0]),
     (1, [0.9, 0.1, 0.0]),
@@ -182,51 +128,15 @@ def test_brute_force_topk_ordering(vecs):
     assert res[0]["cos_sim"] <= 1.0 + 1e-12
 
 
-def test_lsh_ann_same_bucket_recall(vecs):
-    q = vecs.filter("vec_id = 0")
-    res = lsh_ann_topk(vecs, q, k=3, n_planes=4, dim=3)
-    ids = {r["neighbor_id"] for r in res.collect()}
-    # near-identical direction vectors must share the bucket
-    assert 1 in ids and 4 in ids
-    assert 3 not in ids  # opposite vector differs on every hyperplane
-
-
-def test_lsh_multiprobe_widens_recall(vecs):
-    from pipeline311_spark.ext.similarity import lsh_multiprobe_topk
-
-    q = vecs.filter("vec_id = 0")
-    single = {r["neighbor_id"] for r in lsh_ann_topk(vecs, q, k=4, n_planes=4, dim=3).collect()}
-    multi = {r["neighbor_id"] for r in lsh_multiprobe_topk(vecs, q, k=4, n_planes=4, dim=3).collect()}
-    # probing 1-bit-flipped buckets can only ADD candidates
-    assert single <= multi
-    assert 1 in multi and 4 in multi
-    # no duplicate (query, neighbor) rows: each corpus vector lives in
-    # exactly one bucket, so at most one probe can match it
-    rows = lsh_multiprobe_topk(vecs, q, k=10, n_planes=4, dim=3).collect()
-    pairs = [(r["query_id"], r["neighbor_id"]) for r in rows]
-    assert len(pairs) == len(set(pairs))
-
-
-def test_lsh_bucket_requires_dim_and_runs_no_job(spark, vecs):
-    from pipeline311_spark.ext.similarity import lsh_bucket
-
-    with pytest.raises(ValueError, match="dim is required"):
-        lsh_bucket(vecs, "vec_id", "embedding", n_planes=4)
-    # plan construction with dim given must not trigger a Spark job
-    sc = spark.sparkContext
-    sc.setJobGroup("lsh-plan-audit", "plan construction only")
-    try:
-        _plan = lsh_bucket(vecs, "vec_id", "embedding", n_planes=4, dim=3)
-        jobs = sc.statusTracker().getJobIdsForGroup("lsh-plan-audit")
-    finally:
-        sc.setJobGroup("", "")
-    assert list(jobs) == []
-
-
 def test_textstats_basics(docs):
-    out = docs.select(
+    # language ID in the staged form text_lang_id runs: lowered tokens
+    # once, then the per-language scores, then the argmax
+    staged = docs.select(
+        "doc_id", "text", F.transform(tokens("text"), F.lower).alias("__tl")
+    )
+    out = staged.select(
         token_count("text").alias("n"),
-        lang_id("text").alias("lang"),
+        lang_pred_from_scores(lang_scores_on_tokens(F.col("__tl"))).alias("lang"),
         quality_score("text").alias("q"),
     ).collect()
     assert all(r["n"] > 5 for r in out)
@@ -234,38 +144,10 @@ def test_textstats_basics(docs):
     assert all(0.0 <= r["q"] <= 1.0 for r in out)
 
 
-def test_multimodal_manifest_and_decode(docs):
+def test_multimodal_manifest(docs):
     media = documents_as_media(docs)
     man = {r["media_id"]: r for r in media_manifest(media).collect()}
     assert man[0]["byte_len"] == len(DOCS[0][1].encode())
-    feats = {r["media_id"]: r for r in decode_image_features(media).collect()}
-    assert feats[0]["byte_len"] == man[0]["byte_len"]
-    assert len(feats[0]["features"]) == 8
-    assert all(0 <= f <= 1 for f in feats[0]["features"])
-    # deterministic: same payload -> same features
-    again = {r["media_id"]: r for r in decode_image_features(media).collect()}
-    assert feats[0]["features"] == again[0]["features"]
-
-
-def test_frame_sample_shapes(docs):
-    media = documents_as_media(docs)
-    frames = frame_sample(media, every_bytes=16, max_frames=3).collect()
-    by_doc = {}
-    for r in frames:
-        by_doc.setdefault(r["media_id"], []).append(r)
-    assert all(len(v) <= 3 for v in by_doc.values())
-    assert all(len(bytes(r["frame"])) <= 16 for r in frames)
-
-
-def test_decode_real_codec_degrades_non_png_to_null_features(docs):
-    """r6: fake=False is REAL now (stdlib PNG codec) — document text
-    bytes are not PNGs, so every row degrades to NULL features while
-    byte_len/sha survive (the quarantine contract; see
-    tests/test_codecs.py for actual-PNG decoding)."""
-    out = decode_image_features(documents_as_media(docs), fake=False).collect()
-    assert len(out) == len(DOCS)
-    assert all(r["features"] is None for r in out)
-    assert all(r["byte_len"] >= 0 and len(r["sha256"]) == 64 for r in out)
 
 
 def test_connected_components_clusters(spark):
@@ -288,35 +170,6 @@ def test_connected_components_clusters(spark):
     assert keepers == {1, 10, 20}
 
 
-def test_multiprobe_recall_on_testdata(spark, sf_dir):
-    """Quantified recall@k on real embeddings: multi-probe must dominate
-    single-probe against the brute-force ground truth."""
-    from pipeline311_spark.ext.similarity import lsh_multiprobe_topk
-    from pipeline311_spark.plans.common import table
-
-    e = table(spark, sf_dir, "embeddings")
-    q = e.filter("vec_id < 5")
-    kw = dict(k=5, n_planes=8, seed=7, dim=64)
-
-    def topk_sets(df):
-        out = {}
-        for r in df.collect():
-            out.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-        return out
-
-    truth = topk_sets(brute_force_topk(e, q, k=5))
-    single = topk_sets(lsh_ann_topk(e, q, **kw))
-    multi = topk_sets(lsh_multiprobe_topk(e, q, **kw))
-
-    def recall(approx):
-        hits = sum(len(truth[qid] & approx.get(qid, set())) for qid in truth)
-        total = sum(len(s) for s in truth.values())
-        return hits / total
-
-    assert recall(multi) >= recall(single)
-    assert recall(multi) > 0  # probes must find some true neighbors
-
-
 def test_connected_components_long_chain_converges(spark):
     # adversarial worst case: a 40-node path graph (diameter 39) —
     # min-label propagation must still converge inside max_iter because
@@ -334,41 +187,6 @@ def test_connected_components_long_chain_converges(spark):
     assert {r["component"] for r in cc} == {0}
 
 
-def test_semantic_dedup_keep_rules(spark):
-    from pipeline311_spark.ext.similarity import semantic_dedup_keep
-
-    # two well-separated clusters; in-cluster ids 0/1/2 are near-identical
-    # (drop 1 and 2, keep 0), id 3 is same-cluster but dissimilar (kept)
-    corpus = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0, 0.0]),
-            (1, [0.999, 0.01, 0.0]),
-            (2, [0.998, 0.02, 0.0]),
-            (3, [0.6, 0.0, 0.8]),       # x-cluster, but far from 0/1/2
-            (10, [0.0, 1.0, 0.0]),
-            (11, [0.0, 0.999, 0.01]),
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    cents = spark.createDataFrame(
-        [(100, [1.0, 0.0, 0.0]), (200, [0.0, 1.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    kept = {
-        (r["vec_id"], r["centroid_id"])
-        for r in semantic_dedup_keep(corpus, cents, threshold=0.95).collect()
-    }
-    assert kept == {(0, 100), (3, 100), (10, 200)}
-
-    # oversized-cluster exemption: with max_cluster below the x-cluster
-    # size, that cluster is kept WHOLE (no pruning), the other still prunes
-    kept2 = {
-        r["vec_id"]
-        for r in semantic_dedup_keep(corpus, cents, threshold=0.95, max_cluster=3).collect()
-    }
-    assert kept2 == {0, 1, 2, 3, 10}
-
-
 def test_degenerate_identical_corpus_star_pairs(spark):
     """The ultimate hot bucket: EVERY doc identical.  Since the r5
     content collapse, the fuzzy generators no longer drop these pairs
@@ -383,8 +201,6 @@ def test_degenerate_identical_corpus_star_pairs(spark):
         exact_dup_groups,
         minhash_dedup_pairs,
         ngram_jaccard_pairs,
-        simhash,
-        simhash_near_pairs,
     )
 
     d = spark.range(500).select(
@@ -400,8 +216,6 @@ def test_degenerate_identical_corpus_star_pairs(spark):
     assert {r["doc_b"] for r in mh} == set(range(1, 500))
     ng = ngram_jaccard_pairs(d, "doc_id", "text", n=5, threshold=0.2, max_df=50).collect()
     assert len(ng) == 499 and all(r["doc_a"] == 0 and r["jaccard"] == 1.0 for r in ng)
-    sh = simhash_near_pairs(simhash(d, "doc_id", "text")).collect()
-    assert len(sh) == 499 and all(r["doc_a"] == 0 and r["hamming"] == 0 for r in sh)
 
 
 def test_identical_group_clique_and_cross_recall(spark):
@@ -523,46 +337,13 @@ def test_jvm_memo_keyed_on_gateway(spark, monkeypatch):
     build.cache_clear()
 
 
-def test_lsh_dropped_buckets_audits_distinct_content(spark):
-    """The max_bucket audit counts DISTINCT signatures per bucket — the
-    signature-space image of the pipeline's content collapse — so a
-    pile of identical docs audits as n=1 (no phantom drop), while many
-    distinct-but-colliding docs are reported."""
-    from pipeline311_spark.ext.dedup import lsh_dropped_buckets, minhash_signatures
-
-    docs = spark.createDataFrame(
-        [(i, "same exact text repeated for every single document here") for i in range(30)],
-        "doc_id long, text string",
-    )
-    sig = minhash_signatures(docs, "doc_id", "text", k=8, n=3)
-    # 30 identical docs: the real gate sees ONE rep per bucket -> audit
-    # must report nothing at any cap >= 1
-    assert lsh_dropped_buckets(sig, k=8, bands=4, max_bucket=1).count() == 0
-
-    distinct = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta eta theta iota w{i}") for i in range(12)],
-        "doc_id long, text string",
-    )
-    dsig = minhash_signatures(distinct, "doc_id", "text", k=8, n=3)
-    # shared 8-gram prefix collides some bands across genuinely distinct
-    # docs; with a cap of 1 every multi-signature bucket is reported
-    dropped = lsh_dropped_buckets(dsig, k=8, bands=4, max_bucket=1)
-    assert dropped.count() > 0
-    assert dropped.agg({"n": "max"}).first()[0] > 1
-
-
 def test_band_math_rejects_non_divisible(spark):
-    """bands that don't divide k/bits would silently produce zero-width
-    band keys (one global bucket, size-gated to nothing) — both band
-    builders must fail loudly instead."""
+    """bands that don't divide k would silently produce zero-width
+    band keys (one global bucket, size-gated to nothing) — the band
+    builder must fail loudly instead."""
     import pytest as _pytest
 
-    from pipeline311_spark.ext.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-        simhash,
-        simhash_near_pairs,
-    )
+    from pipeline311_spark.ext.dedup import lsh_candidate_pairs, minhash_signatures
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
@@ -572,9 +353,6 @@ def test_band_math_rejects_non_divisible(spark):
         lsh_candidate_pairs(sig, k=8, bands=3)
     with _pytest.raises(ValueError, match="bands must divide k"):
         lsh_candidate_pairs(sig, k=8, bands=16)
-    ssig = simhash(docs, "doc_id", "text")
-    with _pytest.raises(ValueError, match="bands must divide bits"):
-        simhash_near_pairs(ssig, bands=7)
 
 
 def test_dedup_family_handles_null_and_empty_text(spark):
@@ -587,8 +365,6 @@ def test_dedup_family_handles_null_and_empty_text(spark):
         exact_dup_groups,
         minhash_dedup_pairs,
         ngram_jaccard_pairs,
-        simhash,
-        simhash_near_pairs,
     )
 
     docs = spark.createDataFrame(
@@ -605,8 +381,6 @@ def test_dedup_family_handles_null_and_empty_text(spark):
     assert {(r["doc_a"], r["doc_b"]) for r in mh} == {(4, 5)}
     nj = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.3).collect()
     assert {(r["doc_a"], r["doc_b"]) for r in nj} == {(4, 5)}
-    sp = simhash_near_pairs(simhash(docs, "doc_id", "text"), max_hamming=3).collect()
-    assert {(r["doc_a"], r["doc_b"]) for r in sp} == {(4, 5)}
     exact_dup_groups(docs, "doc_id", "text").collect()  # must not raise
     # and the fingerprints behind it: 4/5 collide, NULL text -> NULL fp
     fp = {
@@ -621,12 +395,8 @@ def test_dedup_family_handles_null_and_empty_text(spark):
 def test_zero_vectors_never_crash_similarity(spark):
     """A zero embedding (failed encode / padding row) must not kill
     the job under ANSI DIVIDE_BY_ZERO: its cosine is NULL (undefined),
-    so it ranks below every real neighbor and never pairs."""
-    from pipeline311_spark.ext.similarity import (
-        brute_force_topk,
-        embedding_near_dup_pairs,
-        semantic_dedup_keep,
-    )
+    so it ranks below every real neighbor."""
+    from pipeline311_spark.ext.similarity import brute_force_topk
 
     rows = [(1, [0.0, 0.0, 0.0]), (2, [1.0, 2.0, 3.0]), (3, [1.0, 2.0, 3.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
@@ -634,13 +404,6 @@ def test_zero_vectors_never_crash_similarity(spark):
 
     top = brute_force_topk(df, q, k=2).collect()
     assert sorted(r["neighbor_id"] for r in top) == [2, 3]  # zero vector outranked
-
-    pairs = embedding_near_dup_pairs(df, threshold=0.9, n_planes=2, dim=3).collect()
-    assert sorted((r["id_a"], r["id_b"]) for r in pairs) == [(2, 3)]
-
-    cents = spark.createDataFrame([(0, [1.0, 0.0, 0.0])], "vec_id long, embedding array<double>")
-    kept = semantic_dedup_keep(df, cents, threshold=0.95).collect()
-    assert {r["vec_id"] for r in kept} >= {1, 2}  # no crash; zero vec survives
 
 
 def test_connected_components_raises_on_nonconvergence(spark):

@@ -32,10 +32,8 @@ def _reencode(src_events: str, out_dir: str, unit: str, tz: str | None) -> str:
     [
         "q_hourly_rollup",
         "q_sessionize",
-        "q_session_window_native",
         # streaming paths probe the footer themselves — armor them too
         "stream_windowed_counts",
-        "stream_session_window",
     ],
 )
 def test_queries_invariant_across_ts_encodings(spark, sf_dir, tmp_path, qname):

@@ -15,12 +15,10 @@ hostile counterparts are governed by the audit_referential_integrity
 gate, not synthetic NULL keys (primary-key
 NULLness is out of contract); the dirty-in-practice tables are the
 three covered here.  Id columns (doc_id / vec_id / event_id) stay
-non-NULL in the hostile fixtures for the same reason — and note that
-a few oracles (dedup_surviving_corpus, dedup_semantic_keep,
-k3_merge_partitioned) use NOT IN over id subqueries, which is only
-safe while ids are non-NULL; adding NULL ids would hit the classic
-NOT-IN three-valued row wipe on the ORACLE side, not an engine bug.
-The J3/J4 reconciliation oracles themselves use NOT EXISTS.
+non-NULL in the hostile fixtures for the same reason — an oracle
+that used NOT IN over an id subquery would hit the classic NOT-IN
+three-valued row wipe on NULL ids on the ORACLE side, not an engine
+bug; the J3/J4 reconciliation oracles use NOT EXISTS.
 
 Usage: python tools/check_hostile_docs.py [query ...]
 """

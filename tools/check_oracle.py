@@ -10,7 +10,7 @@ Two consequences the old local canon masked:
   2. pandas' hash-based canonicalization crashes on unhashable cells
      (lists/dicts), so any query returning array/struct/map columns
      errors out in the driver even when registered oracle-less
-     (confirmed driver err: multimodal_image_features).
+     (confirmed driver err on a multimodal query returning arrays).
 
 This gate therefore:
   - fetches the oracle via ``fetchdf()`` (pandas), exactly like the

@@ -15,8 +15,8 @@ Amplification preserves workload SHAPE:
   linearly, and candidate generation sees a genuinely larger corpus,
   not one degenerate 16-member dup group per doc.
 * embeddings: replica i rotates the vector by i positions — different
-  directions, same norm/distribution, so LSH bucket occupancy grows
-  linearly instead of piling replicas into the same buckets.
+  directions, same norm/distribution, so IVF cell occupancy grows
+  linearly instead of piling replicas into the same cells.
 
 Ids are offset per replica (disjoint).  Corpora are written to /tmp
 parquet once (build time excluded from op timings); ops are timed
@@ -91,8 +91,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     # args: [max_factor] [op ...] — a non-numeric first arg is an op
-    # filter with the default factor (review r6: 'scale_amplify.py
-    # bloom' crashed on int('bloom'))
+    # filter with the default factor
     args = sys.argv[1:]
     if args and args[0].isdigit():
         max_factor, args = int(args[0]), args[1:]
@@ -102,7 +101,7 @@ def main() -> None:
     env_f = os.environ.get("SPARK_GRAFT_AMPLIFY_FACTORS")
     if env_f:  # e.g. "64" to run one factor in its own process
         factors = [int(x) for x in env_f.split(",")]
-    only = set(args)  # optional op-name filter (e.g. just 'bloom')
+    only = set(args)  # optional op-name filter (e.g. just 'lang_id')
 
     spark = (
         SparkSession.builder.master(f"local[{os.cpu_count() or 8}]")
@@ -120,69 +119,21 @@ def main() -> None:
         exact_dup_groups,
         minhash_dedup_pairs,
         ngram_jaccard_pairs,
-        simhash,
-        simhash_near_pairs,
     )
-    from pipeline311_spark.ext.similarity import (
-        brute_force_topk,
-        embedding_near_dup_pairs,
-        lsh_ann_topk,
+    from pipeline311_spark.ext.similarity import brute_force_topk
+    from pipeline311_spark.ext.textstats import (
+        lang_pred_from_scores,
+        lang_scores_on_tokens,
+        tokens,
     )
-    from pipeline311_spark.ext.textstats import lang_id
 
-    # -- Bloom-gated reconciliation (r6 punch #8): measure the fp-rate
-    # degradation past auto_m_bits' 2^26-bit broadcast cap, not just
-    # assert it.  dest scales to 32M keys at x64 (past the ~6.7M-key
-    # point where bits/key drops below 10); source is dest plus an
-    # equal count of known-missing keys, so the measured fp rate is
-    # exact: maybes among the known-missing half / half size.  The
-    # anti-join output must stay EXACTLY the missing half at every
-    # factor — degradation costs probe-side work, never correctness.
-    if not only or "bloom" in only:
-        from pipeline311_spark.operators.bloom import (
-            anti_join_bloom,
-            auto_m_bits,
-            bloom_build,
-            bloom_might_contain,
+    def lang_guess(d):
+        """Language ID in text_lang_id's staged form: lowered tokens
+        once, then the per-language scores, then the argmax."""
+        toks = d.select(F.transform(tokens("text"), F.lower).alias("__tl"))
+        return toks.select(
+            lang_pred_from_scores(lang_scores_on_tokens(F.col("__tl"))).alias("lang_guess")
         )
-
-        for m in factors:
-            n_dest = 500_000 * m
-            dest = spark.range(n_dest).select(F.col("id").alias("k"))
-            source = spark.range(2 * n_dest).select(F.col("id").alias("k"))
-            m_bits = auto_m_bits(dest, "k")
-            t0 = time.time()
-            n_anti = anti_join_bloom(source, dest, "k", m_bits=m_bits).count()
-            secs = round(time.time() - t0, 3)
-            bl = bloom_build(dest, "k", m_bits)
-            # fp measured EXACTLY on a 2M-key sample of the known-missing
-            # half (the full half only tightens the 4th decimal)
-            n_probe = min(n_dest, 2_000_000)
-            missing = spark.range(n_dest, n_dest + n_probe).select(F.col("id").alias("k"))
-            fp = (
-                bloom_might_contain(missing, "k", bl, m_bits)
-                .filter("__maybe")
-                .count()
-                / n_probe
-            )
-            print(
-                json.dumps(
-                    {
-                        "op": "anti_join_bloom",
-                        "factor": m,
-                        "n_dest": n_dest,
-                        "m_bits": m_bits,
-                        "bits_per_key": round(m_bits / n_dest, 2),
-                        "fp_rate": round(fp, 5),
-                        "anti_rows_exact": n_anti == n_dest,
-                        "secs": secs,
-                    }
-                ),
-                flush=True,
-            )
-    if only == {"bloom"}:
-        spark.stop()
-        return
 
     base = tempfile.mkdtemp(prefix="p311_amplify_")
     docs_path = {}
@@ -221,33 +172,15 @@ def main() -> None:
         "ngram_jaccard_pairs": lambda m: ngram_jaccard_pairs(
             docs(m), "doc_id", "text", n=5, threshold=0.2, max_df=50
         ),
-        "simhash_pairs": lambda m: simhash_near_pairs(
-            simhash(docs(m), "doc_id", "text"), bands=4, max_hamming=3
-        ),
-        "lang_id": lambda m: docs(m)
-        .select(lang_id(F.col("text")).alias("lang_guess"))
-        .groupBy("lang_guess")
-        .count(),
+        "lang_id": lambda m: lang_guess(docs(m)).groupBy("lang_guess").count(),
         "brute_force_topk": lambda m: brute_force_topk(
             embs(m), embs(m).filter(F.col("vec_id") < 10), k=10
-        ),
-        "lsh_ann_topk": lambda m: lsh_ann_topk(
-            embs(m), embs(m).filter(F.col("vec_id") < 10), k=10, n_planes=8, dim=64
-        ),
-        # n_planes follows the documented sizing rule (~log2(n/occupancy),
-        # occupancy ≈ 8): bucket population stays constant as the corpus
-        # grows, so the within-bucket self-join stays linear overall
-        "emb_near_dup_pairs": lambda m: embedding_near_dup_pairs(
-            embs(m),
-            threshold=0.95,
-            n_planes=max(8, (2000 * m // 8 - 1).bit_length()),
-            dim=64,
         ),
     }
 
     # warm codegen paths
     OPS["minhash_dedup_pairs"](1).count()
-    OPS["lsh_ann_topk"](1).count()
+    OPS["brute_force_topk"](1).count()
 
     for name, fn in OPS.items():
         if only and name not in only:

@@ -29,10 +29,6 @@ DEFAULT = [
     "q05_nation_revenue",
     "q18_large_orders",
     "dedup_exact_groups",
-    "dedup_minhash_lsh",
-    "dedup_simhash_pairs",
-    "sim_bruteforce_topk",
-    "sim_lsh_ann_topk",
     "text_lang_id",
     "k3_upsert_merge",
     "q_sessionize",
@@ -57,7 +53,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the JVM/codegen so sf0.001 numbers aren't all JIT
-    for w in ("q05_nation_revenue", "dedup_minhash_lsh"):
+    for w in ("q05_nation_revenue", "dedup_exact_groups"):
         plans.REGISTRY[w].fn(spark, SFS[0]).count()
 
     for name in names:
