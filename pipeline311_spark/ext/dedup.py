@@ -1,5 +1,5 @@
-"""Deduplication operators (north star): exact, n-gram Jaccard and
-MinHash+LSH, with the stored gram log the MinHash path serves from.
+"""Deduplication operators (north star): exact, n-gram Jaccard,
+MinHash+LSH (with the stored gram log it serves from) and SimHash.
 
 Scale design (the part that matters at 100 TB):
 
@@ -33,6 +33,7 @@ from pipeline311_spark.ext.hashing import (
     affine,
     ensure_parallelism,
     hash_params,
+    portable_hash64,
 )
 from pipeline311_spark.ext.textstats import fingerprint, normalize_text, tokens
 
@@ -913,3 +914,161 @@ def gram_log_compact(spark, store_dir: str) -> None:
     """Fold the log to its ``batch_id = -1`` base, tombstoned docs
     physically dropped (ext/artifact.py ``compact_log``)."""
     compact_log(spark, store_dir, _GRAM_LOG)
+
+
+# 60 bits = the full entropy of portable_hash64 (md5-derived), and with
+# 4 bands it gives 15-bit band keys (32k buckets per band).  The
+# amplified-corpus probe (tools/scale_amplify.py) caught the old 32-bit
+# default SATURATING: 8-bit band keys → 256 buckets, bucket occupancy
+# grows linearly with corpus size, and within-bucket pair generation
+# quadratically — 4.2M "near" pairs at 80k docs, mostly band-collision
+# false positives.  Wider keys keep occupancy (and pair volume) linear.
+SIMHASH_BITS = 60
+
+
+def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS) -> DataFrame:
+    """Per-doc SimHash: token hashes vote ±1 per bit; the sign vector is
+    the signature.  Token hashes are the 60-bit md5-based
+    ``portable_hash64`` (codegen'd; every signature bit carries real
+    entropy).
+
+    Shape: explode tokens, hash each ONCE (codegen'd), then one
+    groupBy with ``bits`` codegen'd ``sum`` aggregates.  Map-side
+    partial aggregation collapses each doc to one 33-long row before
+    the shuffle, so the exchange moves signatures, not token rows.
+    The earlier row-wise formulation (``transform`` + 32 ``aggregate``
+    lambdas over the hash array) avoided the shuffle but re-evaluated
+    interpreted higher-order lambdas per bit — measured ~20% slower
+    at sf0.1 despite zero exchanges.  Integer addition is commutative,
+    so both formulations are bit-identical (verified exceptAll == 0)."""
+    th = ensure_parallelism(df.select(id_col, text_col)).select(
+        F.col(id_col).alias("doc"),
+        F.explode(tokens(normalize_text(text_col))).alias("tok"),
+    ).select("doc", portable_hash64(F.col("tok")).alias("h"))
+    aggs, sig = _simhash_exprs(bits)
+    votes = th.groupBy("doc").agg(*aggs)
+    return votes.select("doc", sig.cast("long").alias("simhash"))
+
+
+@jvm_memo(maxsize=8)
+def _simhash_exprs(bits: int) -> tuple[tuple[Column, ...], Column]:
+    """Memoized per-bit vote aggregates + signature assembly (~0.5 s of
+    py4j-bound driver time to build `bits` agg trees; immutable
+    unresolved expressions over fixed intermediate names)."""
+    aggs = tuple(
+        F.sum(F.shiftright("h", i).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"b{i}")
+        for i in range(bits)
+    )
+    sig = sum(
+        (F.when(F.col(f"b{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0)) for i in range(bits)),
+        start=F.lit(0),
+    )
+    return aggs, sig
+
+
+def simhash_near_pairs(
+    sig: DataFrame,
+    bits: int = SIMHASH_BITS,
+    bands: int = 4,
+    max_hamming: int = 3,
+    max_bucket: int | None = 200,
+    max_group: int = IDENT_MAX_GROUP,
+) -> DataFrame:
+    """Hamming-near pairs via band join (a pair within ``max_hamming``
+    of ``bands`` bands must agree on ≥1 band when max_hamming < bands),
+    verified with an exact popcount.
+
+    Signature-level collapse (r5): hamming distance depends ONLY on the
+    signatures, so docs sharing a signature are collapsed to one
+    representative (min doc id) before banding — EXACT, no fingerprint
+    involved.  Same-signature groups emit their hamming-0 pairs by
+    expansion (clique up to ``max_group``, star beyond — see
+    ``IDENT_MAX_GROUP``), so a degenerate signature shared by millions
+    of boilerplate docs — the strongest duplicates in the corpus, and
+    the pairs the r4 ``max_bucket`` gate silently dropped — is always
+    reported, while the band self-join only ever sees distinct
+    signatures.
+
+    ``max_bucket`` drops band buckets with more than the cap's worth of
+    DISTINCT signatures before the self-join — the same spill-safe
+    window gate as :func:`lsh_candidate_pairs`.  A dropped bucket costs
+    recall only for cross-signature pairs whose OTHER agreeing bands
+    are also oversaturated; with ``bits``/``bands`` sized so keys don't
+    saturate (see SIMHASH_BITS note) the cap never triggers on healthy
+    data."""
+    w = Window.partitionBy("simhash")
+    # Persisted (tracked): the signature aggregation beneath feeds four
+    # branches of the returned plan (reps→band join, both expansion
+    # sides, identical-group pairs) — without the pin each branch could
+    # re-run the per-bit vote aggregation over the corpus (exchange
+    # reuse across union arms is not guaranteed under AQE).
+    groups = persist_tracked(
+        sig.select("doc", "simhash")
+        .withColumn("rep", F.min("doc").over(w))
+        .withColumn("gn", F.count("*").over(w))
+    )
+    # gn rides the banding so the expansion cap needs no sizes join
+    reps = groups.filter(F.col("doc") == F.col("rep")).select("doc", "simhash", "gn")
+    if bands < 1 or bits % bands:
+        # zero-width bands would key every signature to mask 0 — one
+        # global bucket, then the size gate drops everything (silent)
+        raise ValueError(f"bands must divide bits (got bits={bits}, bands={bands})")
+    width = bits // bands
+    mask = (1 << width) - 1
+    banded = reps.select(
+        "doc",
+        "simhash",
+        "gn",
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(bi).alias("band"),
+                    F.shiftright(F.col("simhash"), bi * width).bitwiseAND(F.lit(mask)).alias("key"),
+                )
+                for bi in range(bands)
+            ])
+        ).alias("bk"),
+    ).select(
+        "doc", "simhash", "gn", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
+    wsz = Window.partitionBy("band", "key")
+    if max_bucket is not None:
+        banded = banded.withColumn("n", F.count("*").over(wsz)).filter(
+            F.col("n") <= max_bucket
+        ).drop("n")
+    a, b = banded.alias("a"), banded.alias("b")
+    cross = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.doc") < F.col("b.doc")),
+        )
+        .select(
+            F.col("a.doc").alias("doc_a"),
+            F.col("b.doc").alias("doc_b"),
+            F.col("a.simhash").alias("sig_a"),
+            F.col("b.simhash").alias("sig_b"),
+            F.col("a.gn").alias("gn_a"),
+            F.col("b.gn").alias("gn_b"),
+        )
+        .distinct()
+        .withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+    # Expansion: rep↔rep pairs back to member↔member, sig columns
+    # following the least/greatest member swap — the shared kernel
+    # (:func:`_expand_cross`, same join-side sizing argument; gn rode
+    # the band join, so the cap is a pure row filter).
+    expanded = _expand_cross(
+        cross, groups, ["sig_a", "sig_b", "hamming"],
+        swap_cols=(("sig_a", "sig_b"),), gn_cols=("gn_a", "gn_b"),
+    )
+    ident = _ident_member_pairs(
+        groups, max_group, carry=("simhash",), group_key=("simhash",)
+    ).select(
+        "doc_a", "doc_b",
+        F.col("simhash").alias("sig_a"), F.col("simhash").alias("sig_b"),
+        F.lit(0).cast("integer").alias("hamming"),
+    )
+    return expanded.withColumn("hamming", F.col("hamming").cast("integer")).unionByName(ident)

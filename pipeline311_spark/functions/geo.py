@@ -3,9 +3,19 @@
 The reference's primary geometry surface is 2D points in EPSG:4326
 serialized as EWKT ``SRID=4326;POINT (x y)`` (common.py:119-128;
 config.py:5-6), read back via ``st_astext`` and encoded to ESRI feature
-JSON (sync-db2-ago.py:171-246).  SURVEY §2.3 P2/P18/P19.  Pure Column
-expressions (regexp), no shapely, no UDFs; an empty point geometry
-encodes as NaN x/y, the reference's point-layer convention.
+JSON (sync-db2-ago.py:171-246).  SURVEY §2.3 P2/P18/P19.  The AGO sink
+also publishes POLYGON / MULTIPOLYGON / LINESTRING layers
+(sync-db2-ago.py:97-126 dispatcher; :60-96 format_ring/format_path;
+:177-205 per-layer empty-geometry conventions) — re-expressed here as
+pure Column expressions (regexp + split + transform), no shapely, no
+UDFs.  Reference parity notes:
+
+* ``format_ring`` reads ``poly.exterior`` only — interior rings (holes)
+  are DROPPED, for both POLYGON and each member of a MULTIPOLYGON.
+* Empty geometry by layer type: point -> NaN x/y; polyline ->
+  ``{"paths": []}``; polygon -> ``{"rings": []}``.
+* No geometry UDT is needed: WKT strings + typed nested arrays cover
+  the used surface.
 """
 
 from __future__ import annotations
@@ -76,3 +86,210 @@ def esri_point_feature(shape: Column | str, attrs: list[Column]) -> Column:
         F.struct(pt["srid"].alias("wkid")).alias("spatial_reference"),
     )
     return F.struct(F.struct(*attrs).alias("attributes"), geometry.alias("geometry"))
+
+
+def _coords(s: Column) -> Column:
+    """``"x y, x y, ..."`` -> ``array<array<double>>`` of [x, y] pairs."""
+    return F.transform(
+        F.split(s, r",\s*"),
+        lambda p: F.transform(F.split(F.trim(p), r"\s+"), lambda t: t.cast("double")),
+    )
+
+
+def parse_wkt_rings(col: Column | str) -> Column:
+    """POLYGON / MULTIPOLYGON WKT -> exterior rings as
+    ``array<array<array<double>>>`` (ESRI "rings").
+
+    One entry per polygon: the ``((`` that opens each polygon is
+    followed immediately by its exterior ring; interior rings open with
+    a single ``(`` and are skipped — exactly the reference's
+    ``poly.exterior``-only behavior (sync-db2-ago.py:73-84).
+    ``POLYGON EMPTY`` / NULL / non-areal WKT -> empty array.
+    """
+    c = F.col(col) if isinstance(col, str) else col
+    # [^()]* (not [^)]*): MULTIPOLYGON opens with three parens — the
+    # capture must start after the innermost one.
+    exteriors = F.regexp_extract_all(c, F.lit(r"\(\(([^()]*)\)"), F.lit(1))
+    return F.coalesce(
+        F.transform(exteriors, _coords),
+        F.array().cast("array<array<array<double>>>"),
+    )
+
+
+def parse_wkt_path(col: Column | str) -> Column:
+    """LINESTRING WKT -> ``array<array<double>>`` of [x, y] coords
+    (one ESRI "path"; sync-db2-ago.py:85-96).  Empty/NULL -> empty."""
+    c = F.col(col) if isinstance(col, str) else col
+    body = F.regexp_extract(c, r"LINESTRING\s*\(([^)]*)\)", 1)
+    return F.when(
+        F.coalesce(body, F.lit("")) == "", F.array().cast("array<array<double>>")
+    ).otherwise(_coords(body))
+
+
+def _pt_json(p: Column) -> Column:
+    return F.concat(F.lit("["), p[0].cast("string"), F.lit(","), p[1].cast("string"), F.lit("]"))
+
+
+def _ring_json(r: Column) -> Column:
+    return F.concat(F.lit("["), F.array_join(F.transform(r, _pt_json), ","), F.lit("]"))
+
+
+_SR_JSON = f',"spatial_reference":{{"wkid":{SRID}}}}}'
+
+
+def esri_polygon_geometry_json(shape: Column | str) -> Column:
+    """P18 for polygon layers: WKT -> ``{"rings": [...], ...}`` JSON
+    string.  Blank/NULL shape -> ``{"rings": []}`` (the polygon-layer
+    empty convention, sync-db2-ago.py:199-205).  MULTIPOLYGON emits one
+    ring per member polygon (:106-115); POLYGON emits one (:116-120)."""
+    c = F.col(shape) if isinstance(shape, str) else shape
+    rings = F.when(
+        F.coalesce(F.trim(c), F.lit("")) == "",
+        F.array().cast("array<array<array<double>>>"),
+    ).otherwise(parse_wkt_rings(c))
+    return F.concat(
+        F.lit('{"rings":['),
+        F.array_join(F.transform(rings, _ring_json), ","),
+        F.lit("]" + _SR_JSON),
+    )
+
+
+def esri_polyline_geometry_json(shape: Column | str) -> Column:
+    """P18 for polyline layers: LINESTRING WKT -> ``{"paths": [[...]]}``
+    JSON string; blank/NULL -> ``{"paths": []}`` (sync-db2-ago.py:
+    192-198, 242-249)."""
+    c = F.col(shape) if isinstance(shape, str) else shape
+    path = parse_wkt_path(c)
+    return F.concat(
+        F.lit('{"paths":['),
+        F.when(F.size(path) > 0, _ring_json(path)).otherwise(F.lit("")),
+        F.lit("]" + _SR_JSON),
+    )
+
+
+def parse_wkt_multipoint(col: Column | str) -> Column:
+    """MULTIPOINT WKT -> ``array<array<double>>`` of [x, y] coords.
+    Accepts both WKT spellings — ``MULTIPOINT (10 40, 40 30)`` and
+    ``MULTIPOINT ((10 40), (40 30))`` (inner parens stripped before the
+    coordinate split).  Empty/NULL -> empty array."""
+    c = F.col(col) if isinstance(col, str) else col
+    body = F.regexp_extract(c, r"MULTIPOINT\s*\((.*)\)", 1)
+    flat = F.regexp_replace(body, r"[()]", "")
+    return F.when(
+        F.coalesce(flat, F.lit("")) == "", F.array().cast("array<array<double>>")
+    ).otherwise(_coords(flat))
+
+
+def esri_multipoint_geometry_json(shape: Column | str) -> Column:
+    """P18 for multipoint layers: MULTIPOINT WKT ->
+    ``{"points": [[x,y],...], ...}`` JSON string; blank/NULL ->
+    ``{"points": []}``.  The one WKT arm the reference itself never
+    implemented (sync-db2-ago.py:246 raises NotImplementedError for
+    non-point/polygon/line geometries) — included so a publishing user
+    with a multipoint layer is not the first to hit that wall."""
+    c = F.col(shape) if isinstance(shape, str) else shape
+    pts = parse_wkt_multipoint(c)
+    return F.concat(
+        F.lit('{"points":['),
+        F.array_join(F.transform(pts, _pt_json), ","),
+        F.lit("]" + _SR_JSON),
+    )
+
+
+def reproject_identity(x: Column, y: Column, in_srid: int = SRID, out_srid: int = SRID):
+    """P19: coordinate reprojection.  For the reference's configured
+    4326->4326 this is the identity (sync-db2-ago.py:40-42 hoists a
+    pyproj Transformer that never changes anything).  Real CRS changes
+    for the two targets a Philadelphia GIS pipeline actually uses are
+    implemented below in pure Column math — no pyproj, no UDF:
+    :func:`reproject_4326_to_3857` (Web Mercator, the basemap CRS) and
+    :func:`reproject_4326_to_2272` (NAD83 / Pennsylvania South ftUS,
+    the city's State Plane zone that ``Centerline_2272x__c/y__c`` —
+    see the reference field map — are expressed in).
+    """
+    if in_srid == out_srid:
+        return x, y
+    if (in_srid, out_srid) == (4326, 3857):
+        return reproject_4326_to_3857(x, y)
+    if (in_srid, out_srid) == (4326, 2272):
+        return reproject_4326_to_2272(x, y)
+    if (in_srid, out_srid) == (3857, 4326):
+        return reproject_3857_to_4326(x, y)
+    raise NotImplementedError(
+        f"reprojection {in_srid}->{out_srid} not implemented; supported: "
+        "identity, 4326->3857 (Web Mercator), 4326->2272 (PA South ftUS)"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Real reprojection in pure Column math (P19 capability surface).
+#
+# Cross-engine determinism notes (these feed DuckDB oracle twins):
+# * All projection constants are precomputed Python doubles embedded as
+#   identical literals on both engines (never recomputed per engine —
+#   e.g. RADIANS() is avoided because Spark's Math.toRadians computes
+#   d/180*PI while DuckDB computes d*(PI/180), which differ in the last
+#   ulp; an explicit multiply by the same literal is exactly rounded and
+#   therefore bit-identical).
+# * Per-row transcendentals (sin/cos/tan/ln/pow) are evaluated by each
+#   engine's libm and may differ by ~1 ulp; oracle-gated queries must
+#   round projected coordinates (integer feet/meters keeps the
+#   boundary-flip probability ~1e-9 per value).
+# ---------------------------------------------------------------------------
+
+_RAD = 0.017453292519943295  # pi/180
+_RAD_2 = 0.008726646259971648  # pi/360
+_PI_4 = 0.7853981633974483  # pi/4
+_M_TO_FTUS = 3.2808333333333333  # 3937/1200 (US survey feet per meter)
+_WEBMERC_R = 6378137.0
+_WEBMERC_X = 111319.49079327358  # R * pi/180
+
+# NAD83 / Pennsylvania South (EPSG:2272): Lambert Conformal Conic 2SP on
+# GRS80; std parallels 40°58' / 39°56', origin 39°20'N 77°45'W, false
+# easting 1,968,500 ftUS.  Derived constants (Snyder, "Map Projections —
+# A Working Manual", eq. 15-1..15-9) precomputed from those parameters:
+_LCC2272_E = 0.08181919104281579  # GRS80 first eccentricity
+_LCC2272_E_HALF = 0.040909595521407896
+_LCC2272_N = 0.6487931516193333  # cone constant n
+_LCC2272_AF = 12336392.186729575  # a * F
+_LCC2272_RHO0 = 7615193.758064943  # a * F * t(phi0)^n
+_LCC2272_N_RAD = 0.011323576660148145  # n * pi/180
+_LCC2272_LON0 = -77.75
+_LCC2272_FE_FT = 1968500.0
+
+
+def reproject_4326_to_3857(lon: Column, lat: Column) -> tuple[Column, Column]:
+    """Forward spherical (Web) Mercator: meters east/north of (0, 0)."""
+    x = lon * F.lit(_WEBMERC_X)
+    y = F.lit(_WEBMERC_R) * F.log(F.tan(F.lit(_PI_4) + lat * F.lit(_RAD_2)))
+    return x, y
+
+
+def reproject_4326_to_2272(lon: Column, lat: Column) -> tuple[Column, Column]:
+    """Forward LCC to NAD83 / Pennsylvania South, in US survey feet.
+
+    Accurate to the datum-shift-free ellipsoidal projection (NAD83 and
+    WGS84 lon/lat are treated as equal, the standard GIS convention for
+    sub-meter-irrelevant work — the reference's pyproj Transformer with
+    ``always_xy=True`` does the same for these CRSs)."""
+    esin = F.lit(_LCC2272_E) * F.sin(lat * F.lit(_RAD))
+    t = F.tan(F.lit(_PI_4) - lat * F.lit(_RAD_2)) / F.pow(
+        (F.lit(1.0) - esin) / (F.lit(1.0) + esin), F.lit(_LCC2272_E_HALF)
+    )
+    rho = F.lit(_LCC2272_AF) * F.pow(t, F.lit(_LCC2272_N))
+    theta = (lon - F.lit(_LCC2272_LON0)) * F.lit(_LCC2272_N_RAD)
+    easting = rho * F.sin(theta) * F.lit(_M_TO_FTUS) + F.lit(_LCC2272_FE_FT)
+    northing = (F.lit(_LCC2272_RHO0) - rho * F.cos(theta)) * F.lit(_M_TO_FTUS)
+    return easting, northing
+
+
+def reproject_3857_to_4326(x: Column, y: Column) -> tuple[Column, Column]:
+    """Inverse spherical Mercator: meters -> degrees.  Exact inverse of
+    :func:`reproject_4326_to_3857` up to float rounding (roundtrip
+    verified < 1e-9 degrees in tests).  The LCC (2272) inverse needs a
+    fixed-point iteration for the isometric latitude and is not
+    implemented — at the reference's surface only the forward direction
+    is ever used (publishing to a projected layer)."""
+    lon = x / F.lit(_WEBMERC_X)
+    lat = (F.atan(F.exp(y / F.lit(_WEBMERC_R))) * F.lit(2.0) - F.lit(_PI_4 * 2)) / F.lit(_RAD)
+    return lon, lat

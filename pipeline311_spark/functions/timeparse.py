@@ -62,6 +62,32 @@ def to_local_string(col: Column | str, tz: str = PIPELINE_TZ, fmt: str = "yyyy-M
     return F.date_format(F.from_utc_timestamp(c, tz), "yyyy-MM-dd HH:mm:ss")
 
 
+def to_local_string_with_offset(col: Column | str, tz: str = PIPELINE_TZ) -> Column:
+    """Local wall time WITH the zone offset — the faithful twin of the
+    reference's ``to_char(..., 'YYYY-MM-DD HH24:MI:SS TZH:TZM')``
+    (sync-db2.py:58): '2024-07-15 08:00:00 -04:00'.
+
+    The per-row offset is derived from the engine's own conversion
+    (``from_utc_timestamp(c, tz)`` shifts the instant by exactly the
+    zone offset, so the epoch difference IS the offset), which makes it
+    DST-correct per row and — unlike the offset-less
+    :func:`to_local_string` — unambiguous across the fall-back hour:
+    the two UTC instants that both read 01:30 local render with -04:00
+    vs -05:00."""
+    c = F.col(col) if isinstance(col, str) else col
+    local = F.from_utc_timestamp(c, tz)
+    off = local.cast("long") - c.cast("long")
+    a = F.abs(off)
+    return F.concat(
+        F.date_format(local, "yyyy-MM-dd HH:mm:ss"),
+        F.lit(" "),
+        F.when(off < 0, F.lit("-")).otherwise(F.lit("+")),
+        F.lpad((a / 3600).cast("int").cast("string"), 2, "0"),
+        F.lit(":"),
+        F.lpad(((a % 3600) / 60).cast("int").cast("string"), 2, "0"),
+    )
+
+
 def utc_string_relocalize(col: Column | str, tz: str = PIPELINE_TZ) -> Column:
     """SURVEY P15 (sync-db2-ago.py:164-169, fixing its module-level
     strptime bug, SURVEY §2.9.3): if a datetime *string* carries a

@@ -9,9 +9,10 @@ engine emits only the rep↔rep bridge edge; connected components stay
 identical because every member is already wired to its rep by the
 always-emitted intra-group pairs.
 
-Covers the n-gram expansion kernel (dedup._expand_cross) AND proves
-the DuckDB oracle twin mirrors the cap bit-for-bit on a corpus where
-it actually fires — the normal sf testdata never
+Covers both expansion kernels (dedup._expand_cross and
+similarity.embedding_near_dup_pairs inline) AND proves the DuckDB
+oracle twin mirrors the cap bit-for-bit on a corpus where it actually
+fires — the normal sf testdata never
 triggers it.
 """
 
@@ -92,3 +93,17 @@ def test_ngram_oracle_twin_mirrors_cap(spark):
     ora = con.execute(_NGRAM_JACCARD_SQL).fetchall()
     ora_set = {(a, b, i, sa, sb, round(j, 9)) for a, b, i, sa, sb, j in ora}
     assert eng_set == ora_set
+
+
+def test_embedding_bridge_past_cap(spark):
+    from pipeline311_spark.ext.similarity import embedding_near_dup_pairs
+
+    n = 250
+    v1 = [1.0, 2.0, -0.5, 3.0]
+    v2 = [x * 1.01 for x in v1]  # cosine(v1, v2) = 1.0, distinct value
+    rows = [(i, v1) for i in range(n)] + [(n + i, v2) for i in range(n)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    pairs = embedding_near_dup_pairs(df, "vec_id", "embedding", threshold=0.9, dim=4)
+    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+    expected = _intra_pairs(n, 0) | _intra_pairs(n, n) | {(0, n)}
+    assert got == expected

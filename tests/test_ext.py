@@ -11,8 +11,15 @@ from pipeline311_spark.ext.dedup import (
     minhash_dedup_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
+    simhash,
+    simhash_near_pairs,
 )
-from pipeline311_spark.ext.multimodal import documents_as_media, media_manifest
+from pipeline311_spark.ext.multimodal import (
+    decode_image_features,
+    documents_as_media,
+    frame_sample,
+    media_manifest,
+)
 from pipeline311_spark.ext.similarity import brute_force_topk
 from pipeline311_spark.ext.textstats import (
     lang_pred_from_scores,
@@ -106,6 +113,15 @@ def test_lsh_hot_bucket_capped(spark):
     assert (100, 101) in {(r["doc_a"], r["doc_b"]) for r in pairs}  # small bucket survives
 
 
+def test_simhash_identical_and_near(docs):
+    sig = simhash(docs, "doc_id", "text")
+    pairs = simhash_near_pairs(sig, max_hamming=6)
+    rows = {r["doc"]: r["simhash"] for r in sig.collect()}
+    assert rows[0] == rows[3]
+    got = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in pairs.collect()}
+    assert got[(0, 3)] == 0
+
+
 VECS = [
     (0, [1.0, 0.0, 0.0]),
     (1, [0.9, 0.1, 0.0]),
@@ -128,6 +144,22 @@ def test_brute_force_topk_ordering(vecs):
     assert res[0]["cos_sim"] <= 1.0 + 1e-12
 
 
+def test_lsh_bucket_requires_dim_and_runs_no_job(spark, vecs):
+    from pipeline311_spark.ext.similarity import lsh_bucket
+
+    with pytest.raises(ValueError, match="dim is required"):
+        lsh_bucket(vecs, "vec_id", "embedding", n_planes=4)
+    # plan construction with dim given must not trigger a Spark job
+    sc = spark.sparkContext
+    sc.setJobGroup("lsh-plan-audit", "plan construction only")
+    try:
+        _plan = lsh_bucket(vecs, "vec_id", "embedding", n_planes=4, dim=3)
+        jobs = sc.statusTracker().getJobIdsForGroup("lsh-plan-audit")
+    finally:
+        sc.setJobGroup("", "")
+    assert list(jobs) == []
+
+
 def test_textstats_basics(docs):
     # language ID in the staged form text_lang_id runs: lowered tokens
     # once, then the per-language scores, then the argmax
@@ -144,10 +176,38 @@ def test_textstats_basics(docs):
     assert all(0.0 <= r["q"] <= 1.0 for r in out)
 
 
-def test_multimodal_manifest(docs):
+def test_multimodal_manifest_and_decode(docs):
     media = documents_as_media(docs)
     man = {r["media_id"]: r for r in media_manifest(media).collect()}
     assert man[0]["byte_len"] == len(DOCS[0][1].encode())
+    feats = {r["media_id"]: r for r in decode_image_features(media).collect()}
+    assert feats[0]["byte_len"] == man[0]["byte_len"]
+    assert len(feats[0]["features"]) == 8
+    assert all(0 <= f <= 1 for f in feats[0]["features"])
+    # deterministic: same payload -> same features
+    again = {r["media_id"]: r for r in decode_image_features(media).collect()}
+    assert feats[0]["features"] == again[0]["features"]
+
+
+def test_frame_sample_shapes(docs):
+    media = documents_as_media(docs)
+    frames = frame_sample(media, every_bytes=16, max_frames=3).collect()
+    by_doc = {}
+    for r in frames:
+        by_doc.setdefault(r["media_id"], []).append(r)
+    assert all(len(v) <= 3 for v in by_doc.values())
+    assert all(len(bytes(r["frame"])) <= 16 for r in frames)
+
+
+def test_decode_real_codec_degrades_non_png_to_null_features(docs):
+    """r6: fake=False is REAL now (stdlib PNG codec) — document text
+    bytes are not PNGs, so every row degrades to NULL features while
+    byte_len/sha survive (the quarantine contract; see
+    tests/test_codecs.py for actual-PNG decoding)."""
+    out = decode_image_features(documents_as_media(docs), fake=False).collect()
+    assert len(out) == len(DOCS)
+    assert all(r["features"] is None for r in out)
+    assert all(r["byte_len"] >= 0 and len(r["sha256"]) == 64 for r in out)
 
 
 def test_connected_components_clusters(spark):
@@ -187,6 +247,41 @@ def test_connected_components_long_chain_converges(spark):
     assert {r["component"] for r in cc} == {0}
 
 
+def test_semantic_dedup_keep_rules(spark):
+    from pipeline311_spark.ext.similarity import semantic_dedup_keep
+
+    # two well-separated clusters; in-cluster ids 0/1/2 are near-identical
+    # (drop 1 and 2, keep 0), id 3 is same-cluster but dissimilar (kept)
+    corpus = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0, 0.0]),
+            (1, [0.999, 0.01, 0.0]),
+            (2, [0.998, 0.02, 0.0]),
+            (3, [0.6, 0.0, 0.8]),       # x-cluster, but far from 0/1/2
+            (10, [0.0, 1.0, 0.0]),
+            (11, [0.0, 0.999, 0.01]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(100, [1.0, 0.0, 0.0]), (200, [0.0, 1.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    kept = {
+        (r["vec_id"], r["centroid_id"])
+        for r in semantic_dedup_keep(corpus, cents, threshold=0.95).collect()
+    }
+    assert kept == {(0, 100), (3, 100), (10, 200)}
+
+    # oversized-cluster exemption: with max_cluster below the x-cluster
+    # size, that cluster is kept WHOLE (no pruning), the other still prunes
+    kept2 = {
+        r["vec_id"]
+        for r in semantic_dedup_keep(corpus, cents, threshold=0.95, max_cluster=3).collect()
+    }
+    assert kept2 == {0, 1, 2, 3, 10}
+
+
 def test_degenerate_identical_corpus_star_pairs(spark):
     """The ultimate hot bucket: EVERY doc identical.  Since the r5
     content collapse, the fuzzy generators no longer drop these pairs
@@ -201,6 +296,8 @@ def test_degenerate_identical_corpus_star_pairs(spark):
         exact_dup_groups,
         minhash_dedup_pairs,
         ngram_jaccard_pairs,
+        simhash,
+        simhash_near_pairs,
     )
 
     d = spark.range(500).select(
@@ -216,6 +313,8 @@ def test_degenerate_identical_corpus_star_pairs(spark):
     assert {r["doc_b"] for r in mh} == set(range(1, 500))
     ng = ngram_jaccard_pairs(d, "doc_id", "text", n=5, threshold=0.2, max_df=50).collect()
     assert len(ng) == 499 and all(r["doc_a"] == 0 and r["jaccard"] == 1.0 for r in ng)
+    sh = simhash_near_pairs(simhash(d, "doc_id", "text")).collect()
+    assert len(sh) == 499 and all(r["doc_a"] == 0 and r["hamming"] == 0 for r in sh)
 
 
 def test_identical_group_clique_and_cross_recall(spark):
@@ -290,24 +389,27 @@ def test_connected_components_releases_round_checkpoints(spark):
     from pipeline311_spark.ext.cache import cache_scope, release_local_checkpoint
     from pipeline311_spark.ext.graph import connected_components
 
-    jvm_cached = lambda: spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    # The JVM holds persisted RDDs by weak reference, so leftovers of
+    # earlier tests can drop out at any GC: count only the RDDs this
+    # test persists, by id.
+    base = set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+    jvm_cached = lambda: len(set(spark.sparkContext._jsc.getPersistentRDDs().keys()) - base)
     # a 6-node chain forces several propagation rounds
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)] + [(10, 11)], "doc_a long, doc_b long"
     )
-    base = jvm_cached()
     cc = connected_components(edges, "doc_a", "doc_b")
     got = {r["node"]: r["component"] for r in cc.collect()}
     assert got == {**{i: 1 for i in range(1, 7)}, 10: 10, 11: 10}
     # intermediate rounds released in-loop: only the final labels remain
-    assert jvm_cached() == base + 1
+    assert jvm_cached() == 1
     release_local_checkpoint(cc)
-    assert jvm_cached() == base
+    assert jvm_cached() == 0
 
     with cache_scope():
         n = connected_components(edges, "doc_a", "doc_b").count()
         assert n == 8
-    assert jvm_cached() == base  # scope reclaimed the final checkpoint
+    assert jvm_cached() == 0  # scope reclaimed the final checkpoint
 
 
 def test_jvm_memo_keyed_on_gateway(spark, monkeypatch):
@@ -338,12 +440,17 @@ def test_jvm_memo_keyed_on_gateway(spark, monkeypatch):
 
 
 def test_band_math_rejects_non_divisible(spark):
-    """bands that don't divide k would silently produce zero-width
-    band keys (one global bucket, size-gated to nothing) — the band
-    builder must fail loudly instead."""
+    """bands that don't divide k/bits would silently produce zero-width
+    band keys (one global bucket, size-gated to nothing) — both band
+    builders must fail loudly instead."""
     import pytest as _pytest
 
-    from pipeline311_spark.ext.dedup import lsh_candidate_pairs, minhash_signatures
+    from pipeline311_spark.ext.dedup import (
+        lsh_candidate_pairs,
+        minhash_signatures,
+        simhash,
+        simhash_near_pairs,
+    )
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string"
@@ -353,6 +460,9 @@ def test_band_math_rejects_non_divisible(spark):
         lsh_candidate_pairs(sig, k=8, bands=3)
     with _pytest.raises(ValueError, match="bands must divide k"):
         lsh_candidate_pairs(sig, k=8, bands=16)
+    ssig = simhash(docs, "doc_id", "text")
+    with _pytest.raises(ValueError, match="bands must divide bits"):
+        simhash_near_pairs(ssig, bands=7)
 
 
 def test_dedup_family_handles_null_and_empty_text(spark):
@@ -365,6 +475,8 @@ def test_dedup_family_handles_null_and_empty_text(spark):
         exact_dup_groups,
         minhash_dedup_pairs,
         ngram_jaccard_pairs,
+        simhash,
+        simhash_near_pairs,
     )
 
     docs = spark.createDataFrame(
@@ -381,6 +493,8 @@ def test_dedup_family_handles_null_and_empty_text(spark):
     assert {(r["doc_a"], r["doc_b"]) for r in mh} == {(4, 5)}
     nj = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.3).collect()
     assert {(r["doc_a"], r["doc_b"]) for r in nj} == {(4, 5)}
+    sp = simhash_near_pairs(simhash(docs, "doc_id", "text"), max_hamming=3).collect()
+    assert {(r["doc_a"], r["doc_b"]) for r in sp} == {(4, 5)}
     exact_dup_groups(docs, "doc_id", "text").collect()  # must not raise
     # and the fingerprints behind it: 4/5 collide, NULL text -> NULL fp
     fp = {
@@ -395,8 +509,12 @@ def test_dedup_family_handles_null_and_empty_text(spark):
 def test_zero_vectors_never_crash_similarity(spark):
     """A zero embedding (failed encode / padding row) must not kill
     the job under ANSI DIVIDE_BY_ZERO: its cosine is NULL (undefined),
-    so it ranks below every real neighbor."""
-    from pipeline311_spark.ext.similarity import brute_force_topk
+    so it ranks below every real neighbor and never pairs."""
+    from pipeline311_spark.ext.similarity import (
+        brute_force_topk,
+        embedding_near_dup_pairs,
+        semantic_dedup_keep,
+    )
 
     rows = [(1, [0.0, 0.0, 0.0]), (2, [1.0, 2.0, 3.0]), (3, [1.0, 2.0, 3.0])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
@@ -404,6 +522,13 @@ def test_zero_vectors_never_crash_similarity(spark):
 
     top = brute_force_topk(df, q, k=2).collect()
     assert sorted(r["neighbor_id"] for r in top) == [2, 3]  # zero vector outranked
+
+    pairs = embedding_near_dup_pairs(df, threshold=0.9, n_planes=2, dim=3).collect()
+    assert sorted((r["id_a"], r["id_b"]) for r in pairs) == [(2, 3)]
+
+    cents = spark.createDataFrame([(0, [1.0, 0.0, 0.0])], "vec_id long, embedding array<double>")
+    kept = semantic_dedup_keep(df, cents, threshold=0.95).collect()
+    assert {r["vec_id"] for r in kept} >= {1, 2}  # no crash; zero vec survives
 
 
 def test_connected_components_raises_on_nonconvergence(spark):

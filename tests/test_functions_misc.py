@@ -10,7 +10,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from pipeline311_spark.functions.geo import esri_point_feature, parse_point_ewkt
+from pipeline311_spark.functions.geo import esri_point_feature, parse_point_ewkt, reproject_identity
 from pipeline311_spark.functions.timeparse import to_local_string, utc_string_relocalize
 from pipeline311_spark.operators.backfill import window_bounds
 from pipeline311_spark.sources.validate import assert_field_set_equality, SchemaMismatch
@@ -62,6 +62,34 @@ def test_parse_point_roundtrip(spark):
     assert (row["p"]["x"], row["p"]["y"], row["p"]["srid"]) == (1.5, -2.25, 4326)
 
 
+def test_reproject_identity_guard():
+    # unsupported CRS pairs still refuse loudly
+    with pytest.raises(NotImplementedError):
+        reproject_identity(None, None, 4326, 26918)
+
+
+def test_reproject_real_crs(spark):
+    """Forward 3857 + 2272 sanity against independently known values:
+    Philadelphia City Hall (-75.1635, 39.9527) is ~(2,693,500 E,
+    236,200 N) ftUS in PA South and ~(-8,367,163, 4,859,071) m in Web
+    Mercator; determinism: two evaluations are bit-identical."""
+    from pipeline311_spark.functions.geo import (
+        reproject_4326_to_2272,
+        reproject_4326_to_3857,
+    )
+
+    df = spark.createDataFrame([(-75.1635, 39.9527)], "lon double, lat double")
+    x, y = reproject_4326_to_3857(F.col("lon"), F.col("lat"))
+    e, n = reproject_4326_to_2272(F.col("lon"), F.col("lat"))
+    [r1] = df.select(x.alias("x"), y.alias("y"), e.alias("e"), n.alias("n")).collect()
+    assert abs(r1["x"] - -8367162.5) < 1.0
+    assert abs(r1["y"] - 4859071.2) < 1.0
+    assert abs(r1["e"] - 2693535.6) < 5.0  # sub-5ft of the zone's published grid
+    assert abs(r1["n"] - 236245.3) < 5.0
+    [r2] = df.select(x.alias("x"), y.alias("y"), e.alias("e"), n.alias("n")).collect()
+    assert (r1["x"], r1["y"], r1["e"], r1["n"]) == (r2["x"], r2["y"], r2["e"], r2["n"])
+
+
 def test_window_bounds_rollover():
     # the December rollover the reference computes by hand (sync-db2.py:122-125)
     assert window_bounds(2023, 12) == (dt.datetime(2023, 12, 1), dt.datetime(2024, 1, 1))
@@ -75,3 +103,81 @@ def test_field_set_equality(spark):
     assert_field_set_equality(a, b, exclude={"objectid", "extra"})
     with pytest.raises(SchemaMismatch):
         assert_field_set_equality(a, b)
+
+
+def test_parse_wkt_rings_drops_holes(spark):
+    from pipeline311_spark.functions.geo import (
+        esri_polygon_geometry_json,
+        esri_polyline_geometry_json,
+        parse_wkt_path,
+        parse_wkt_rings,
+    )
+    from pyspark.sql import functions as F
+
+    rows = [
+        ("POLYGON ((0.5 0.5, 2.5 0.5, 0.5 2.5, 0.5 0.5), (1.5 1.5, 1.75 1.5, 1.5 1.75, 1.5 1.5))",),
+        ("MULTIPOLYGON (((0.5 0.5, 1.5 0.5, 0.5 1.5, 0.5 0.5), (0.75 0.75, 1.25 0.75, 0.75 1.25, 0.75 0.75)), ((3.5 0.5, 4.5 0.5, 3.5 1.5, 3.5 0.5)))",),
+        ("POLYGON EMPTY",),
+        (None,),
+        ("LINESTRING (0.5 0.5, 1.5 1.5)",),
+    ]
+    df = spark.createDataFrame(rows, "wkt string")
+    got = df.select(
+        parse_wkt_rings("wkt").alias("rings"), parse_wkt_path("wkt").alias("path")
+    ).collect()
+    # holes dropped: one exterior ring of 4 pts
+    assert [len(r) for r in got[0]["rings"]] == [4]
+    assert got[0]["rings"][0][0] == [0.5, 0.5]
+    # multipolygon: two exterior rings, holes dropped
+    assert [len(r) for r in got[1]["rings"]] == [4, 4]
+    assert got[1]["rings"][1][0] == [3.5, 0.5]
+    assert got[2]["rings"] == [] and got[3]["rings"] == []
+    assert got[4]["path"] == [[0.5, 0.5], [1.5, 1.5]] and got[4]["rings"] == []
+    # empty conventions per layer type (sync-db2-ago.py:177-205)
+    j = df.select(
+        esri_polygon_geometry_json("wkt").alias("pg"),
+        esri_polyline_geometry_json("wkt").alias("pl"),
+    ).collect()
+    assert j[2]["pg"] == '{"rings":[],"spatial_reference":{"wkid":4326}}'
+    assert j[3]["pl"] == '{"paths":[],"spatial_reference":{"wkid":4326}}'
+    assert j[4]["pl"].startswith('{"paths":[[[0.5,0.5],[1.5,1.5]]]')
+
+
+def test_to_local_string_with_offset_dst(spark):
+    from pipeline311_spark.functions.timeparse import to_local_string_with_offset
+
+    df = spark.createDataFrame(
+        [
+            (dt.datetime(2024, 3, 10, 6, 59),),  # 01:59 EST
+            (dt.datetime(2024, 3, 10, 7, 0),),   # 03:00 EDT (spring-forward gap)
+            (dt.datetime(2024, 11, 3, 5, 30),),  # 01:30 EDT (first pass)
+            (dt.datetime(2024, 11, 3, 6, 30),),  # 01:30 EST (second pass)
+        ],
+        "t timestamp",
+    )
+    out = [r[0] for r in df.select(to_local_string_with_offset("t")).collect()]
+    assert out == [
+        "2024-03-10 01:59:00 -05:00",
+        "2024-03-10 03:00:00 -04:00",
+        # the ambiguous fall-back hour is disambiguated by the offset
+        "2024-11-03 01:30:00 -04:00",
+        "2024-11-03 01:30:00 -05:00",
+    ]
+
+
+def test_reproject_mercator_roundtrip(spark):
+    from pipeline311_spark.functions.geo import (
+        reproject_3857_to_4326,
+        reproject_4326_to_3857,
+    )
+
+    df = spark.createDataFrame(
+        [(-75.1635, 39.9527), (0.001, -0.001), (179.9, 84.9), (-179.9, -84.9)],
+        "lon double, lat double",
+    )
+    x, y = reproject_4326_to_3857(F.col("lon"), F.col("lat"))
+    lon2, lat2 = reproject_3857_to_4326(x, y)
+    rows = df.select(
+        (F.abs(lon2 - F.col("lon"))).alias("dlon"), (F.abs(lat2 - F.col("lat"))).alias("dlat")
+    ).collect()
+    assert all(r["dlon"] < 1e-9 and r["dlat"] < 1e-9 for r in rows)

@@ -222,6 +222,44 @@ def test_minhash_pairs_sound_and_ident_complete(spark, base, picks):
     ),
     picks=st.lists(st.integers(min_value=0, max_value=4), min_size=2, max_size=12),
 )
+def test_simhash_pairs_sound_and_ident_complete(spark, base, picks):
+    """Same independent contract for SimHash: reported hamming must be
+    the true popcount of the XOR of the docs' signatures (read back
+    from the signature table), every identical-signature pair must be
+    present (hamming 0 — the collapse guarantee), no duplicates."""
+    from pipeline311_spark.ext.dedup import simhash, simhash_near_pairs
+
+    docs = [(i, base[p % len(base)]) for i, p in enumerate(picks)]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    sig = simhash(df, "doc_id", "text")
+    sigs = {r["doc"]: r["simhash"] for r in sig.collect()}
+    got = simhash_near_pairs(sig, max_hamming=3).collect()
+
+    seen = set()
+    for r in got:
+        a, b = r["doc_a"], r["doc_b"]
+        assert a < b and (a, b) not in seen
+        seen.add((a, b))
+        assert r["sig_a"] == sigs[a] and r["sig_b"] == sigs[b]
+        true_h = bin(sigs[a] ^ sigs[b]).count("1")
+        assert r["hamming"] == true_h and true_h <= 3
+
+    ids = sorted(sigs)
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            if sigs[a] == sigs[b]:
+                assert (a, b) in seen, f"identical-signature pair {(a, b)} missing"
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    base=st.lists(
+        st.lists(st.sampled_from(_WORDS), min_size=3, max_size=10).map(" ".join),
+        min_size=1,
+        max_size=5,
+    ),
+    picks=st.lists(st.integers(min_value=0, max_value=4), min_size=2, max_size=12),
+)
 def test_ngram_jaccard_pairs_equal_brute_force(spark, base, picks):
     """The n-gram path is EXHAUSTIVE when every gram's doc frequency is
     under max_df (always true for these tiny corpora): any pair with
@@ -282,6 +320,114 @@ def test_connected_components_equal_union_find(spark, edges):
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     want = {n: find(n) for n in parent}
+    assert got == want
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    seed=st.integers(min_value=0, max_value=2**31 - 1),
+    n_base=st.integers(min_value=1, max_value=5),
+    picks=st.lists(st.integers(min_value=0, max_value=4), min_size=2, max_size=10),
+)
+def test_embedding_near_dup_sound_and_ident_complete(spark, seed, n_base, picks):
+    """Independent cosine ground truth for the embedding near-dup path:
+    every reported pair's Python-computed cosine matches and clears the
+    threshold; every pair of byte-identical vectors is reported (the
+    collapse guarantee); no duplicate pairs.  Cross-bucket recall is
+    probabilistic and not asserted."""
+    import math
+    import random
+
+    from pipeline311_spark.ext.similarity import embedding_near_dup_pairs
+
+    rng = random.Random(seed)
+    bases = [[rng.uniform(-1, 1) for _ in range(6)] for _ in range(n_base)]
+    rows = [(i, bases[p % n_base]) for i, p in enumerate(picks)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    got = embedding_near_dup_pairs(df, threshold=0.95, n_planes=4, dim=6).collect()
+    vecs = dict(rows)
+
+    def cos(u, v):
+        d = sum(a * b for a, b in zip(u, v))
+        return d / (math.sqrt(sum(a * a for a in u)) * math.sqrt(sum(b * b for b in v)))
+
+    seen = set()
+    for r in got:
+        a, b = r["id_a"], r["id_b"]
+        assert a < b and (a, b) not in seen
+        seen.add((a, b))
+        want = cos(vecs[a], vecs[b])
+        assert abs(r["cos_sim"] - want) < 1e-6 and want >= 0.95 - 1e-6
+    ids = sorted(vecs)
+    for i, a in enumerate(ids):
+        for b in ids[i + 1 :]:
+            if vecs[a] == vecs[b]:
+                assert (a, b) in seen, f"identical-vector pair {(a, b)} missing"
+
+
+def _py_cos(u, v):
+    import math
+
+    d = 0.0
+    for a, b in zip(u, v):
+        d += a * b
+    nu = 0.0
+    for a in u:
+        nu += a * a
+    nv = 0.0
+    for b in v:
+        nv += b * b
+    return d / (math.sqrt(nu) * math.sqrt(nv))
+
+
+@settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    seed=st.integers(min_value=0, max_value=2**31 - 1),
+    picks=st.lists(st.integers(min_value=0, max_value=5), min_size=2, max_size=12),
+    max_cluster=st.sampled_from([3, 10_000]),
+)
+def test_semantic_dedup_keep_equals_python(spark, seed, picks, max_cluster):
+    """Exact Python re-implementation of the SemDeDup keep rule:
+    nearest-centroid assignment (max cosine, centroid-id tie-break,
+    left-to-right float folds match the engine's), drop any doc with a
+    lower-id >=threshold neighbor in its cluster, exempt oversized
+    clusters.  Both the kept id set and the assigned centroids must
+    match bit-exactly."""
+    import random
+
+    from pipeline311_spark.ext.similarity import semantic_dedup_keep
+
+    rng = random.Random(seed)
+    bases = [[rng.uniform(-1, 1) for _ in range(5)] for _ in range(6)]
+    rows = [(i, bases[p % 6]) for i, p in enumerate(picks)]
+    cents = [(j, [rng.uniform(-1, 1) for _ in range(5)]) for j in range(3)]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cdf = spark.createDataFrame(cents, "vec_id long, embedding array<double>")
+    got = {
+        (r["vec_id"], r["centroid_id"])
+        for r in semantic_dedup_keep(
+            corpus, cdf, threshold=0.9, max_cluster=max_cluster
+        ).collect()
+    }
+
+    assign = {
+        i: max(cents, key=lambda c: (_py_cos(v, c[1]), -c[0]))[0] for i, v in rows
+    }
+    clusters = {}
+    for i, _ in rows:
+        clusters.setdefault(assign[i], []).append(i)
+    want = set()
+    vecs = dict(rows)
+    for cid, members in clusters.items():
+        if len(members) > max_cluster:
+            want.update((i, cid) for i in members)
+            continue
+        for i in members:
+            dropped = any(
+                j < i and _py_cos(vecs[j], vecs[i]) >= 0.9 for j in members
+            )
+            if not dropped:
+                want.add((i, cid))
     assert got == want
 
 
@@ -377,6 +523,32 @@ def test_chunk_token_windows_equals_python(spark, docs, size, stride):
             chunk = toks[start : start + size]
             want[(doc_id, ci)] = (len(chunk), " ".join(chunk))
     assert got == want
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    pts=st.lists(
+        st.tuples(st.integers(min_value=0, max_value=65535), st.integers(min_value=0, max_value=65535)),
+        min_size=1,
+        max_size=20,
+    )
+)
+def test_zorder_key_equals_python_interleave(spark, pts):
+    """Morton code ground truth: bit i of x at position 2i, bit i of y
+    at 2i+1, over the full 16-bit range."""
+    from pipeline311_spark.operators.layout import zorder_key
+
+    df = spark.createDataFrame(pts, "x long, y long")
+    got = [r["z"] for r in df.select(zorder_key(F.col("x"), F.col("y")).alias("z")).collect()]
+
+    def morton(x, y):
+        z = 0
+        for i in range(16):
+            z |= ((x >> i) & 1) << (2 * i)
+            z |= ((y >> i) & 1) << (2 * i + 1)
+        return z
+
+    assert got == [morton(x, y) for x, y in pts]
 
 
 @settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
@@ -668,3 +840,117 @@ def test_merge_partitioned_hostile_partition_types(spark, tmp_path_factory, batc
     expect = {dirname(cv) for _, cv in state.values()}
     have = {d for d in os.listdir(path) if d.startswith("pc=")}
     assert have == expect, f"partition dirs {have} != surviving {expect}"
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=10**6),  # unique id
+            st.integers(min_value=0, max_value=2),      # source
+            st.integers(min_value=0, max_value=40),     # tokens
+        ),
+        min_size=1,
+        max_size=30,
+        unique_by=lambda r: r[0],
+    ),
+    n_buckets=st.sampled_from([1, 3, 16]),
+)
+def test_running_sum_two_phase_equals_python_cumsum(spark, rows, n_buckets):
+    """The id-ordered two-phase running sum (the flagship packing's
+    dominant-source escape hatch) equals the brute-force per-source
+    cumulative sum in id order — including sparse/clustered id ranges
+    that leave most range buckets empty."""
+    from pipeline311_spark.ext.sampling import running_sum_two_phase
+
+    df = spark.createDataFrame(rows, "doc_id long, src int, n_tok long")
+    got = {
+        r["doc_id"]: r["cum"]
+        for r in running_sum_two_phase(
+            df, "src", "doc_id", "n_tok", out_col="cum", n_buckets=n_buckets
+        ).collect()
+    }
+    want = {}
+    by_src = {}
+    for i, s, n in rows:
+        by_src.setdefault(s, []).append((i, n))
+    for members in by_src.values():
+        members.sort()
+        cum = 0
+        for i, n in members:
+            cum += n
+            want[i] = cum
+    assert got == want
+
+
+def test_running_sum_two_phase_empty_frame(spark):
+    from pipeline311_spark.ext.sampling import running_sum_two_phase
+
+    df = spark.createDataFrame([], "doc_id long, src int, n_tok long")
+    out = running_sum_two_phase(df, "src", "doc_id", "n_tok", out_col="cum")
+    assert out.columns == ["doc_id", "src", "n_tok", "cum"]
+    assert out.count() == 0
+
+
+def test_running_sum_two_phase_null_ids_match_window_nulls_first(spark):
+    """NULL order ids must flow like the window twin (NULLS FIRST),
+    not silently vanish through a NULL-keyed equi-join (review r8)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from pipeline311_spark.ext.sampling import running_sum_two_phase
+
+    rows = [(None, 0, 5), (10, 0, 3), (20, 0, 7), (None, 1, 2), (4, 1, 1)]
+    df = spark.createDataFrame(rows, "doc_id long, src int, n_tok long")
+    got = {
+        (r["src"], r["doc_id"]): r["cum"]
+        for r in running_sum_two_phase(
+            df, "src", "doc_id", "n_tok", out_col="cum", n_buckets=4
+        ).collect()
+    }
+    w = (
+        Window.partitionBy("src")
+        .orderBy("doc_id")  # Spark default: NULLS FIRST ascending
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    want = {
+        (r["src"], r["doc_id"]): r["cum"]
+        for r in df.withColumn("cum", F.sum("n_tok").over(w)).collect()
+    }
+    assert got == want and len(got) == len(rows)
+
+
+def test_running_sum_two_phase_null_partition_matches_window(spark):
+    """A NULL partition VALUE is its own partition in the window twin;
+    the two-phase offsets join must be null-safe on part_col or those
+    rows silently vanish from both phases (ADVICE r8)."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from pipeline311_spark.ext.sampling import running_sum_two_phase
+
+    rows = [
+        (1, None, 5),
+        (2, None, 3),
+        (3, "a", 7),
+        (4, "a", 2),
+        (5, None, 1),
+        (6, "b", 4),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, src string, n_tok long")
+    got = {
+        r["doc_id"]: r["cum"]
+        for r in running_sum_two_phase(
+            df, "src", "doc_id", "n_tok", out_col="cum", n_buckets=3
+        ).collect()
+    }
+    w = (
+        Window.partitionBy("src")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    want = {
+        r["doc_id"]: r["cum"]
+        for r in df.withColumn("cum", F.sum("n_tok").over(w)).collect()
+    }
+    assert got == want and len(got) == len(rows)

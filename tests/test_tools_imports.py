@@ -193,6 +193,32 @@ UNREACHED_OK = {
     "plans.curation3.bm25_scored_frame": "query-local BM25 reference for the stored index's serve",
     "ext.ann_store.load_ann_index": "reads a stored IVF-PQ index back for the store tests",
     "ext.cache.cache_scope": "releases the operators' persisted intermediates (README)",
+    # library operators with no registry query, kept with the tests that
+    # pin them; a query that needs one makes its entry redundant
+    "ext.codecs": "stdlib PNG/WAV codecs under the multimodal decode operators",
+    "ext.multimodal.decode_image_features": "image decode operator (tests/test_codecs.py)",
+    "ext.multimodal.audio_pcm_window_features": "WAV window operator (tests/test_codecs.py)",
+    "ext.multimodal.resize_png": "PNG resize operator (tests/test_codecs.py)",
+    "ext.multimodal.frame_sample": "byte-window frame sampler (tests/test_ext.py)",
+    "ext.dedup.simhash": "SimHash signatures (tests/test_ext.py, tests/test_properties.py)",
+    "ext.dedup.simhash_near_pairs": "SimHash band join (tests/test_ext.py, tests/test_properties.py)",
+    "ext.similarity.lsh_bucket": "LSH partition key of the layout tests (tests/test_layout.py)",
+    "ext.similarity.ivf_assign": "IVF cell key of the layout tests (tests/test_layout.py)",
+    "ext.similarity.embedding_near_dup_pairs": "embedding near-dup pairs (tests/test_cross_cap.py)",
+    "ext.similarity.semantic_dedup_keep": "SemDeDup keeper (tests/test_ext.py, tests/test_properties.py)",
+    "ext.sampling.running_sum_two_phase": "two-phase running sum (tests/test_properties.py)",
+    "functions.geo.esri_polygon_geometry_json": "AGO polygon layer encoding (tests/test_functions_misc.py)",
+    "functions.geo.esri_polyline_geometry_json": "AGO polyline layer encoding (tests/test_functions_misc.py)",
+    "functions.geo.esri_multipoint_geometry_json": "AGO multipoint layer encoding (tests/test_geo.py)",
+    "functions.geo.reproject_identity": "refuses unsupported CRS pairs (tests/test_functions_misc.py)",
+    "functions.geo.reproject_4326_to_3857": "Web Mercator projection (tests/test_functions_misc.py)",
+    "functions.geo.reproject_4326_to_2272": "PA South projection (tests/test_functions_misc.py)",
+    "functions.geo.reproject_3857_to_4326": "Web Mercator inverse (tests/test_functions_misc.py)",
+    "functions.timeparse.to_local_string_with_offset": "offset-stamped local time (tests/test_functions_misc.py)",
+    "operators.bloom": "Bloom anti-join (tests/test_bloom.py)",
+    "operators.bucketing": "bucketed shuffle-free join (tests/test_bucketing.py)",
+    "operators.layout": "z-order layout and small-file compaction (tests/test_layout.py)",
+    "streaming.stateful": "stateful streaming running totals (tests/test_stateful_streaming.py)",
 }
 
 
