@@ -2,7 +2,7 @@
 pipeline needs, designed shuffle-first for 100 TB.
 
 * dedup.py      exact, MinHash+LSH and n-gram Jaccard near-dup pairs,
-                and the stored gram log
+                and the stored gram log (one gram-hash array per doc)
 * similarity.py cosine / squared-L2 kernels and brute-force top-k
 * retrieval.py, ann_store.py  stored BM25 and IVF-PQ indexes
 * textstats.py  language-ID, quality scoring, token counting,

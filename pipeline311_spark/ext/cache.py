@@ -1,7 +1,7 @@
 """Cache lifecycle for persisted intermediates.
 
 The dedup/similarity operators persist small intermediates (candidate
-sets, signature/group tables, gram tables) that the RETURNED DataFrame
+sets, signature/group tables, gram arrays) that the RETURNED DataFrame
 still reads lazily — so the operator itself can never unpersist them.
 Historically reclaim was documented as ``spark.catalog.clearCache()``;
 that is fine for a batch job that exits, but leak-by-default in a

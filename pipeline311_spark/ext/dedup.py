@@ -1,5 +1,11 @@
-"""Deduplication operators (north star): exact, n-gram Jaccard,
-MinHash+LSH (with the stored gram log it serves from) and SimHash.
+"""Deduplication operators (north star): exact, n-gram Jaccard and
+MinHash+LSH (with the stored gram log it serves from).
+
+Gram form: every fuzzy operator starts from one per-document array of
+distinct word n-gram hashes, folded map-side from the text
+(:func:`_row_gram_arrays`).  The stored gram log holds the same arrays,
+one row per document, so the in-memory and stored MinHash paths read
+one form.
 
 Scale design (the part that matters at 100 TB):
 
@@ -33,7 +39,6 @@ from pipeline311_spark.ext.hashing import (
     affine,
     ensure_parallelism,
     hash_params,
-    portable_hash64,
 )
 from pipeline311_spark.ext.textstats import fingerprint, normalize_text, tokens
 
@@ -70,12 +75,12 @@ FP_PARAMS = hash_params(2, seed=97)
 PROBE_DISTINCT_ENDPOINTS = 1_000_000
 
 
-def _probe_doc_ids(cand: DataFrame, n_pairs: int, alias: str = "doc") -> DataFrame:
-    """Candidate-pair endpoint ids destined for a broadcast semi-join:
-    exchange-free when small, distinct'd past PROBE_DISTINCT_ENDPOINTS
-    (``n_pairs`` is the already-materialized candidate count, so the
-    gate costs nothing)."""
-    docs = cand.select(F.explode(F.array("doc_a", "doc_b")).alias(alias))
+def _probe_doc_ids(cand: DataFrame, n_pairs: int) -> DataFrame:
+    """Candidate-pair endpoint ids (``doc``) destined for a broadcast
+    semi-join: exchange-free when small, distinct'd past
+    PROBE_DISTINCT_ENDPOINTS (``n_pairs`` is the already-materialized
+    candidate count, so the gate costs nothing)."""
+    docs = cand.select(F.explode(F.array("doc_a", "doc_b")).alias("doc"))
     if 2 * n_pairs > PROBE_DISTINCT_ENDPOINTS:
         docs = docs.distinct()
     return docs
@@ -120,9 +125,9 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Near-dup pairs by exact Jaccard over word n-gram shingle sets.
 
-    Plan: per-row distinct gram HASHES (the zero-shuffle fold of
-    :func:`_gram_hash_table` — shingle strings are never materialized,
-    so the self-join shuffles 8-byte longs instead of ~n-word strings;
+    Plan: per-row distinct gram HASHES (:func:`_row_gram_arrays`,
+    exploded — shingle strings are never materialized, so the
+    self-join shuffles 8-byte longs instead of ~n-word strings;
     Jaccard over 60-bit gram hashes equals string Jaccard up to md5
     collisions, ~2^-60 per pair) → drop grams with doc-frequency >
     max_df (blowup guard; per-doc-distinct grams make ``count(*)`` the
@@ -159,12 +164,6 @@ def ngram_jaccard_pairs(
     ``max_group`` bounds identical-group pair OUTPUT: clique up to the
     cap, star beyond (see ``IDENT_MAX_GROUP``).
     """
-    toks = tokens(normalize_text(text_col))
-    per = (
-        ensure_parallelism(df.select(F.col(id_col).alias("doc"), toks.alias("tk")))
-        .withColumn("hs", _token_hash_expr())
-        .filter(F.size("tk") >= n)
-    )
     # Persisting rs is load-bearing twice over: (1) every consumer
     # (gram rows, sizes, expansion, ident) tokenizes once instead of
     # once each; (2) the cache boundary stops Catalyst from hoisting
@@ -172,9 +171,9 @@ def ngram_jaccard_pairs(
     # without it the optimizer rewrites Generate to carry the whole
     # garr array into every exploded gram row and evaluate the stats
     # per gram row (measured 18 s vs 0.3 s on a 20k-doc corpus).
-    # Footprint ≈ the gram table, the same class as the MinHash
-    # gram-array cache; reclaim via cache_scope/clearCache.
-    rs = persist_tracked(_row_stats(per, n))
+    # Footprint ≈ the MinHash gram-array cache plus three longs per
+    # doc; reclaim via cache_scope/clearCache.
+    rs = persist_tracked(_row_stats(_row_gram_arrays(df, id_col, text_col, n)))
     groups = persist_tracked(_with_groups(rs.select("doc", "sz", "fp1", "fp2")))
     sh = rs.select("doc", "sz", "fp1", "fp2", F.explode("garr").alias("g"))
     wsz = Window.partitionBy("g")
@@ -204,12 +203,10 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
     )
     expanded = _expand_cross(
-        cross, groups, ["inter", "sz_a", "sz_b", "jaccard"],
-        swap_cols=(("sz_a", "sz_b"),), gn_cols=("gn_a", "gn_b"),
+        cross, groups, ["inter", "sz_a", "sz_b", "jaccard"], ("gn_a", "gn_b"),
+        swap_cols=(("sz_a", "sz_b"),),
     )
-    ident = _ident_member_pairs(
-        groups, max_group, carry=("sz",), group_key=("sz", "fp1", "fp2")
-    ).select(
+    ident = _ident_member_pairs(groups, max_group, carry=("sz",)).select(
         "doc_a", "doc_b",
         F.col("sz").alias("inter"), F.col("sz").alias("sz_a"), F.col("sz").alias("sz_b"),
         F.lit(1.0).alias("jaccard"),
@@ -228,64 +225,33 @@ def ngram_jaccard_pairs(
 GRAM_BASE = 31
 
 
-def _gram_hash_table(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    distinct: bool = False,
-    extra: tuple[str, ...] = (),
-) -> DataFrame:
-    """(doc, g) rows: one row per word n-gram, ``g`` its 64-bit-safe
-    hash — WITHOUT ever materializing n-gram strings.  With
-    ``distinct=True`` the gram array is deduped per row (map-side
-    ``array_distinct``, still zero shuffles) — the set formulation
-    exact-Jaccard needs.
+def _row_gram_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(doc, garr): each doc's DISTINCT word n-gram hashes as one array,
+    folded per row WITHOUT ever materializing n-gram strings — the one
+    gram form every fuzzy operator and the stored gram log read.
 
     Shape is fully map-side — ZERO shuffles.  Each row hashes its own
     tokens once into an array (md5 → 60-bit int, evaluated per element
     inside ``transform``), then a second ``transform`` over gram start
     positions folds n consecutive token hashes with integer arithmetic
-    (``element_at`` is O(1) on the materialized hash array), and a
-    single ``explode`` emits the (doc, g) rows.
+    (``element_at`` is O(1) on the materialized hash array), and
+    ``array_distinct`` makes the result a set.  Consumers that need
+    (doc, g) rows (the signature groupBy, the shingle bucket join)
+    explode it in the same stage.
 
     This replaced a posexplode + ``lead()``-window formulation: the
     window needed a hash repartition on ``doc`` — a full shuffle of the
-    corpus text plus a per-partition sort of the *exploded* token rows.
-    Per-element interpreted md5 costs slightly more CPU than codegen'd
-    md5 after explode, but removing the corpus shuffle wins at every
-    scale (measured 0.43 s vs 0.59 s at sf0.1/local[32]; at 100 TB the
-    removed shuffle is the whole ballgame — gram generation becomes a
-    pure scan-side map, and the only shuffle left in MinHash is the
-    signature groupBy, which map-side partial aggregation collapses to
-    k longs per doc before the exchange).
-
-    Duplicate n-grams within a doc are kept: MIN aggregation is
-    multiset-insensitive, so signatures match the set formulation.
-    """
-    toks = tokens(normalize_text(text_col))
-    passthrough = [F.col(c) for c in extra]
-    compact = ensure_parallelism(
-        df.select(F.col(id_col).alias("doc"), toks.alias("tk"), *passthrough)
-    )
-    per = compact.withColumn("hs", _token_hash_expr()).filter(F.size("tk") >= n)
-    return per.select("doc", *extra, F.explode(_gram_fold_expr(n, distinct)).alias("g"))
-
-
-def _row_gram_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """(doc, garr): the per-doc DISTINCT gram-hash set as a map-side
-    ARRAY — :func:`_gram_hash_table` without the explode, ZERO shuffles.
-
-    This is the verify-side twin of the gram table: exact-Jaccard needs
-    one gram SET per candidate doc, and building it here per row costs
-    a scan-side fold, where rebuilding it from exploded (doc, g) rows
-    costs a ``collect_set`` aggregation exchange (measured ~1 wave of
-    the bench verify tail, r7).  Persisted in array form it is also the
-    cheaper cache: one row per doc instead of one per gram."""
+    corpus text plus a per-partition sort of the *exploded* token rows
+    (measured 0.43 s vs 0.59 s at sf0.1/local[32]; at 100 TB the
+    removed shuffle is the whole ballgame).  Kept as an array, a gram
+    set needs no ``collect_set`` exchange to rebuild for the
+    exact-Jaccard verify, and a persisted or stored copy is one row per
+    doc instead of one per gram.  Docs with fewer than n tokens are
+    dropped."""
     toks = tokens(normalize_text(text_col))
     compact = ensure_parallelism(df.select(F.col(id_col).alias("doc"), toks.alias("tk")))
     per = compact.withColumn("hs", _token_hash_expr()).filter(F.size("tk") >= n)
-    return per.select("doc", _gram_fold_expr(n, True).alias("garr"))
+    return per.select("doc", _gram_fold_expr(n).alias("garr"))
 
 
 @jvm_memo(maxsize=4)
@@ -301,8 +267,9 @@ def _token_hash_expr() -> Column:
 
 
 @jvm_memo(maxsize=8)
-def _gram_fold_expr(n: int, distinct: bool) -> Column:
-    """Memoized n-gram fold over the fixed ``hs``/``tk`` intermediates."""
+def _gram_fold_expr(n: int) -> Column:
+    """Memoized distinct n-gram fold over the fixed ``hs``/``tk``
+    intermediates."""
     from pipeline311_spark.ext.hashing import MOD
 
     def _fold(i: Column) -> Column:
@@ -311,16 +278,7 @@ def _gram_fold_expr(n: int, distinct: bool) -> Column:
             g = (g * F.lit(GRAM_BASE) + F.element_at(F.col("hs"), i + 1 + j)) % F.lit(MOD)
         return g
 
-    grams = F.transform(F.sequence(F.lit(0), F.size("tk") - n), _fold)
-    return F.array_distinct(grams) if distinct else grams
-
-
-def _signatures_from_grams(gh: DataFrame, k: int, seed: int) -> DataFrame:
-    """One groupBy with k ``min`` aggregates over a (doc, g) gram table —
-    map-side partial aggregation shrinks the shuffle to k longs per doc
-    (the only shuffle in signature computation; gram rows themselves
-    never cross the network)."""
-    return gh.groupBy("doc").agg(*_minhash_aggs(k, seed))
+    return F.array_distinct(F.transform(F.sequence(F.lit(0), F.size("tk") - n), _fold))
 
 
 @jvm_memo(maxsize=8)
@@ -373,15 +331,14 @@ def _stat_aggs() -> tuple[Column, ...]:
     )
 
 
-def _row_stats(per: DataFrame, n: int) -> DataFrame:
-    """Map-side (doc, sz, fp1, fp2, garr): the distinct-gram array plus
-    its content-identity stats, computed per row with ZERO shuffles —
-    one gram-fold pass and one combined two-fingerprint fold.  The
-    projections are staged so Catalyst does not inline (and so
-    re-evaluate) the expensive array expressions (CollapseProject only
-    inlines aliases that are cheap or referenced once)."""
+def _row_stats(arrays: DataFrame) -> DataFrame:
+    """Map-side (doc, sz, fp1, fp2, garr) from (doc, garr) gram arrays:
+    the content-identity stats computed per row with ZERO shuffles —
+    one combined two-fingerprint fold.  The projections are staged so
+    Catalyst does not inline (and so re-evaluate) the expensive array
+    expressions (CollapseProject only inlines aliases that are cheap or
+    referenced once)."""
     (a1, b1), (a2, b2) = FP_PARAMS
-    g1 = per.select("doc", _gram_fold_expr(n, True).alias("garr"))
     acc0 = F.struct(F.lit(0).cast("long").alias("f1"), F.lit(0).cast("long").alias("f2"))
     fps = F.aggregate(
         "garr",
@@ -391,49 +348,45 @@ def _row_stats(per: DataFrame, n: int) -> DataFrame:
             a["f2"].bitwiseXOR(x * F.lit(a2) + F.lit(b2)).alias("f2"),
         ),
     )
-    g2 = g1.select("doc", F.size("garr").cast("long").alias("sz"), fps.alias("__fps"), "garr")
+    g2 = arrays.select("doc", F.size("garr").cast("long").alias("sz"), fps.alias("__fps"), "garr")
     return g2.select(
         "doc", "sz",
         F.col("__fps.f1").alias("fp1"), F.col("__fps.f2").alias("fp2"), "garr",
     )
 
 
+# The content-identity key (module note above).
+CONTENT_KEY = ("sz", "fp1", "fp2")
+
+
 def _with_groups(stats: DataFrame) -> DataFrame:
     """Attach rep (min doc id) and gn (group size) over the
-    (sz, fp1, fp2) content key — one narrow shuffle of doc-cardinality
-    rows (4 longs each), never gram rows."""
-    w = Window.partitionBy("sz", "fp1", "fp2")
+    CONTENT_KEY — one narrow shuffle of doc-cardinality rows (4 longs
+    each), never gram rows."""
+    w = Window.partitionBy(*CONTENT_KEY)
     return stats.withColumn("rep", F.min("doc").over(w)).withColumn("gn", F.count("*").over(w))
 
 
 def _ident_member_pairs(
-    groups: DataFrame,
-    max_group: int,
-    carry: tuple[str, ...] = (),
-    group_key: tuple[str, ...] = (),
+    groups: DataFrame, max_group: int, carry: tuple[str, ...] = ()
 ) -> DataFrame:
     """(doc_a, doc_b, *carry) member pairs inside identical-content
-    groups: clique for gn <= max_group via the bucket-collect shape
-    (the gn gate runs BEFORE collect_set so the aggregation buffer
-    never holds more than max_group ids), star rep↔member beyond (pure
-    row filter, no shuffle at all).  ``carry`` columns are
-    group-constant (any member's value serves).
+    groups (a :func:`_with_groups` table): clique for gn <= max_group
+    via the bucket-collect shape (the gn gate runs BEFORE collect_set
+    so the aggregation buffer never holds more than max_group ids),
+    star rep↔member beyond (pure row filter, no shuffle at all).
+    ``carry`` names CONTENT_KEY columns to keep on each pair.
 
-    ``group_key``: the content-key columns the caller's group window
-    partitioned by (e.g. ``("sz", "fp1", "fp2")``).  Grouping by the
-    SAME key lets Catalyst see the window's hash partitioning already
-    satisfies the aggregation's distribution — the clique groupBy then
-    runs with ZERO additional exchange (grouping by ``rep`` — the
-    per-group min doc — is equivalent output-wise but forces a fresh
-    shuffle).  Empty means no such key is known; fall back to ``rep``."""
-    key = list(group_key) or ["rep"]
+    The clique groups by the SAME CONTENT_KEY the group window
+    partitioned by, so Catalyst sees the window's hash partitioning
+    already satisfies the aggregation's distribution — the clique
+    groupBy runs with ZERO additional exchange (grouping by ``rep`` —
+    the per-group min doc — is equivalent output-wise but forces a
+    fresh shuffle)."""
     small = groups.filter((F.col("gn") <= max_group) & (F.col("gn") >= 2))
     clique = (
-        small.groupBy(*key)
-        .agg(
-            F.sort_array(F.collect_set("doc")).alias("docs"),
-            *[F.first(c).alias(c) for c in carry if c not in key],
-        )
+        small.groupBy(*CONTENT_KEY)
+        .agg(F.sort_array(F.collect_set("doc")).alias("docs"))
         .select(F.explode(_bucket_pairs_expr()).alias("p"), *carry)
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"), *carry)
     )
@@ -447,9 +400,8 @@ def _expand_cross(
     cross: DataFrame,
     groups: DataFrame,
     value_cols: list[str],
+    gn_cols: tuple[str, str],
     swap_cols: tuple[tuple[str, str], ...] = (),
-    cross_cap: int = CROSS_MAX_PAIRS,
-    gn_cols: tuple[str, str] | None = None,
 ) -> DataFrame:
     """Expand verified rep↔rep pairs to member↔member pairs: two narrow
     joins against the (doc, rep) membership table (the verified pair
@@ -459,20 +411,20 @@ def _expand_cross(
     least/greatest member swap so they stay attributed to the right
     doc.
 
-    Cross-group cap (``cross_cap``, see ``CROSS_MAX_PAIRS``): the gate
-    runs on the pair's group SIZES, known BEFORE the exploding
-    membership joins — a pair whose bipartite product exceeds the cap
-    emits its single rep↔rep bridge row and never touches the member
-    tables, so the blowup is prevented at plan level, not filtered
-    after the fact.  Mirrored 1:1 by every DuckDB oracle twin.
+    Cross-group cap (``CROSS_MAX_PAIRS``): the gate runs on the pair's
+    group SIZES, known BEFORE the exploding membership joins — a pair
+    whose bipartite product exceeds the cap emits its single rep↔rep
+    bridge row and never touches the member tables, so the blowup is
+    prevented at plan level, not filtered after the fact.  Mirrored 1:1
+    by every DuckDB oracle twin.
 
-    ``gn_cols`` names the pair's group-size columns when the caller
-    already carried them onto ``cross`` (through the banding shuffle —
+    ``gn_cols`` names the pair's group-size columns, which every caller
+    carries onto ``cross`` (through the banding shuffle —
     ``lsh_candidate_pairs(carry=("gn",))`` — or an existing sizes
-    join): the gate is then a pure row filter with ZERO added stages.
-    Without it the sizes are joined in from ``groups`` (two AQE stage
-    materializations — measured ~1 s of stage-wave overhead per run at
-    bench scale, which is why every hot caller carries instead).
+    join): the gate is then a pure row filter with ZERO added stages,
+    where joining the sizes in from ``groups`` costs two AQE stage
+    materializations (~1 s of stage-wave overhead per run at bench
+    scale).
 
     Join side sizing: only members of MULTI-doc groups (gn >= 2) can
     differ from their rep, so the joins run LEFT against that subset
@@ -480,21 +432,15 @@ def _expand_cross(
     is then the dup-group membership — proportional to duplicated
     content, not the corpus — instead of the full doc-cardinality
     membership table."""
-    if gn_cols is not None:
-        ca_, cb_ = gn_cols
-        sized = cross.withColumn("__gna", F.col(ca_)).withColumn("__gnb", F.col(cb_))
-    else:
-        gsz = groups.filter(F.col("doc") == F.col("rep")).select("rep", "gn")
-        sized = cross.join(
-            gsz.select(F.col("rep").alias("doc_a"), F.col("gn").alias("__gna")), "doc_a"
-        ).join(gsz.select(F.col("rep").alias("doc_b"), F.col("gn").alias("__gnb")), "doc_b")
+    ca_, cb_ = gn_cols
+    sized = cross.withColumn("__gna", F.col(ca_)).withColumn("__gnb", F.col(cb_))
     # The cap rides the membership JOIN CONDITION: a pair past the cap
     # matches nothing, the left join keeps it once with NULL members,
     # and the coalesce below yields the rep↔rep bridge row.  One plan,
     # no filter-split + union — a union would duplicate the (expensive)
     # verify subtree into both arms and re-run it (measured ~1 s of
     # re-executed stages per pair query at bench scale).
-    small = F.col("__gna") * F.col("__gnb") <= F.lit(cross_cap)
+    small = F.col("__gna") * F.col("__gnb") <= F.lit(CROSS_MAX_PAIRS)
     mem = groups.filter(F.col("gn") >= 2).select("doc", "rep")
     a = mem.select(F.col("rep").alias("__ra"), F.col("doc").alias("__ma"))
     b = mem.select(F.col("rep").alias("__rb"), F.col("doc").alias("__mb"))
@@ -521,15 +467,17 @@ def minhash_signatures(
 ) -> DataFrame:
     """k-permutation MinHash signature per doc.
 
-    Gram hashes come from the map-side per-row fold
-    (:func:`_gram_hash_table`), then one groupBy with k ``min``
-    aggregates (see :func:`_signatures_from_grams`).
-    A fully per-row ``array_min(transform(...))`` formulation would
-    avoid even that shuffle but re-evaluates interpreted lambdas k
-    times per gram — measured 60% slower.  Docs with fewer than n
-    tokens are dropped.
+    The map-side gram arrays (:func:`_row_gram_arrays`), exploded, feed
+    one groupBy with k ``min`` aggregates — map-side partial
+    aggregation shrinks the shuffle to k longs per doc (gram rows
+    themselves never cross the network).  A fully per-row
+    ``array_min(transform(...))`` formulation would avoid even that
+    shuffle but re-evaluates interpreted lambdas k times per gram —
+    measured 60% slower.  Docs with fewer than n tokens are dropped.
     """
-    return _signatures_from_grams(_gram_hash_table(df, id_col, text_col, n), k, seed)
+    arrays = _row_gram_arrays(df, id_col, text_col, n)
+    grams = arrays.select("doc", F.explode("garr").alias("g"))
+    return grams.groupBy("doc").agg(*_minhash_aggs(k, seed))
 
 
 def lsh_candidate_pairs(
@@ -673,8 +621,8 @@ def minhash_dedup_pairs(
     persisted and feeds BOTH the signature aggregation (via a map-side
     explode) and the verify (arrays semi-joined directly — no
     collect_set exchange).  The cluster must be able to cache ~1× the
-    corpus across memory+local disk; beyond that, store the gram table
-    once per corpus version and start from
+    corpus across memory+local disk; beyond that, store the gram arrays
+    once per corpus version (the gram log) and start from
     :func:`minhash_pairs_from_grams` (SCALE.md).
 
     Verify shape (see :func:`_jaccard_verify`): Jaccard over 60-bit
@@ -695,13 +643,13 @@ def minhash_dedup_pairs(
     (which now gates on distinct-content counts) and the exact-Jaccard
     verify only ever runs on pairs of DISTINCT gram sets.
 
-    Cache lifecycle: the gram table, the signature/group table, and
+    Cache lifecycle: the gram arrays, the signature/group table, and
     the candidate set stay persisted because the RETURNED DataFrame
     still reads them lazily.  Wrap the call and
     the consuming action in :func:`pipeline311_spark.ext.cache.cache_scope`
     for deterministic reclaim; without a scope, reclaim remains
     ``spark.catalog.clearCache()``.  In a long-lived service, prefer
-    materializing the gram table to storage once per corpus version
+    materializing the gram arrays to storage once per corpus version
     (see SCALE.md) instead of executor cache."""
     # Persist the ARRAY form (one row per doc): the signature
     # aggregation reads it through a map-side explode, and the verify
@@ -710,45 +658,37 @@ def minhash_dedup_pairs(
     # the bench verify tail).
     arrays = persist_tracked(_row_gram_arrays(df, id_col, text_col, n))
     return minhash_pairs_from_grams(
-        arrays.select("doc", F.explode("garr").alias("g")),
-        k=k, bands=bands, threshold=threshold, seed=seed, persist=False,
-        max_bucket=max_bucket, max_group=max_group, gram_arrays=arrays,
+        arrays, k=k, bands=bands, threshold=threshold, seed=seed,
+        max_bucket=max_bucket, max_group=max_group,
     )
 
 
 def minhash_pairs_from_grams(
-    gh: DataFrame,
+    arrays: DataFrame,
     k: int = 16,
     bands: int = 4,
     threshold: float = 0.5,
     seed: int = 42,
-    persist: bool = True,
     max_bucket: int = 200,
     max_group: int = IDENT_MAX_GROUP,
-    gram_arrays: DataFrame | None = None,
 ) -> DataFrame:
-    """MinHash-LSH near-dup pairs from a PREBUILT (doc, g) gram table —
-    the stored-corpus-version path (SCALE.md): tokenize/hash once per
-    corpus version, write the gram table to storage, and every
+    """MinHash-LSH near-dup pairs from PREBUILT (doc, garr) gram arrays
+    (the :func:`_row_gram_arrays` form) — the stored-corpus-version path
+    (SCALE.md): tokenize/hash once per corpus version, write the arrays
+    to storage (the gram log, :func:`load_gram_log`), and every
     dedup/contamination run after that starts here, paying only the
-    signature aggregation.  ``persist=False`` when ``gh`` is already
-    storage-backed (a parquet read) — the verify branch then re-scans
-    the store instead of caching.
+    signature aggregation.  ``arrays`` is read twice — exploded map-side
+    into the signature groupBy, and semi-joined to the candidate docs
+    for the verify, which needs no ``collect_set`` exchange because the
+    sets are already arrays.  A storage-backed ``arrays`` is re-scanned
+    for the verify; :func:`minhash_dedup_pairs` persists its own.
 
-    Contract: ``gh`` rows are per-doc DISTINCT (the
-    ``_gram_hash_table(distinct=True)`` shape, and the stored-table
-    format) — signature MINs are multiset-insensitive but the content
-    stats that ride the same aggregation are not.
-
-    ``gram_arrays``: optional (doc, garr) ARRAY-form twin of ``gh``
-    (:func:`_row_gram_arrays`).  When provided (what
-    :func:`minhash_dedup_pairs` persists), the verify semi-joins the arrays directly instead of
-    rebuilding sets from exploded rows with a ``collect_set``
-    exchange."""
-    if persist:
-        gh = persist_tracked(gh)
+    Contract: each ``garr`` is DISTINCT — signature MINs are
+    multiset-insensitive but the content stats that ride the same
+    aggregation are not."""
+    grams = arrays.select("doc", F.explode("garr").alias("g"))
     sigg = persist_tracked(
-        _with_groups(gh.groupBy("doc").agg(*_minhash_aggs(k, seed), *_stat_aggs()))
+        _with_groups(grams.groupBy("doc").agg(*_minhash_aggs(k, seed), *_stat_aggs()))
     )
     reps = sigg.filter(F.col("doc") == F.col("rep"))
     cand = persist_tracked(
@@ -758,31 +698,13 @@ def minhash_pairs_from_grams(
     )
     n_pairs = cand.count()
     cand_docs = _probe_doc_ids(cand, n_pairs)
-    if gram_arrays is not None:
-        doc_sets = gram_arrays.join(F.broadcast(cand_docs), "doc", "left_semi").select(
-            "doc", F.col("garr").alias("sset")
-        )
-    else:
-        doc_sets = _sets_from_grams(
-            gh.join(F.broadcast(cand_docs), "doc", "left_semi")
-        )
-    cross = _jaccard_verify(cand.distinct(), doc_sets, threshold)
-    return _expand_cross(
-        cross, sigg, ["jaccard"], gn_cols=("gn_a", "gn_b")
-    ).unionByName(
-        _ident_member_pairs(
-            sigg, max_group, group_key=("sz", "fp1", "fp2")
-        ).withColumn("jaccard", F.lit(1.0))
+    doc_sets = arrays.join(F.broadcast(cand_docs), "doc", "left_semi").select(
+        "doc", F.col("garr").alias("sset")
     )
-
-
-def _sets_from_grams(cand_grams: DataFrame) -> DataFrame:
-    """(doc, sset) from EXPLODED (doc, g) gram rows — one ``collect_set``
-    aggregation.  Only for gram tables whose array form is not
-    available (the stored-corpus paths, where (doc, g) parquet is the
-    on-disk contract); callers with source text build the sets map-side
-    via :func:`_row_gram_arrays` instead and skip this exchange."""
-    return cand_grams.groupBy("doc").agg(F.collect_set("g").alias("sset"))
+    cross = _jaccard_verify(cand.distinct(), doc_sets, threshold)
+    return _expand_cross(cross, sigg, ["jaccard"], ("gn_a", "gn_b")).unionByName(
+        _ident_member_pairs(sigg, max_group).withColumn("jaccard", F.lit(1.0))
+    )
 
 
 def _jaccard_verify(
@@ -794,9 +716,8 @@ def _jaccard_verify(
     (doc, sset) gram-SET table already restricted to candidate docs:
     each pair checked row-wise with ``array_intersect`` — two joins
     total, no per-(pair × shared shingle) row explosion and no per-pair
-    aggregation shuffle.  ``doc_sets`` comes map-side from
-    :func:`_row_gram_arrays` when source text is at hand, or from
-    :func:`_sets_from_grams` over a stored exploded gram table.
+    aggregation shuffle.  ``doc_sets`` are :func:`_row_gram_arrays`
+    arrays, built map-side or read from the gram log.
 
     Size-ratio pre-gate (r5): Jaccard is bounded above by
     min(|A|,|B|) / max(|A|,|B|), so pairs failing that ratio against
@@ -848,11 +769,11 @@ def _jaccard_verify(
 
 
 # ---------------------------------------------------------------------------
-# The stored gram table as a tombstoned row log (the ext/artifact.py
-# lifecycle).  Rows are per-(doc, gram) and batch doc ids are disjoint,
-# so the union of batch partitions IS the merge — signatures, banding
-# and verify all run FROM the folded log exactly as they run from a
-# batch-written store (minhash_pairs_from_grams).
+# The stored gram arrays as a tombstoned row log (the ext/artifact.py
+# lifecycle).  Rows are one (doc, garr) per document and batch doc ids
+# are disjoint, so the union of batch partitions IS the merge —
+# signatures, banding and verify all run FROM the folded log exactly as
+# they run from in-memory arrays (minhash_pairs_from_grams).
 # ---------------------------------------------------------------------------
 
 
@@ -861,7 +782,7 @@ _GRAM_LOG = RowLog(
     T.StructType(
         [
             T.StructField("doc", T.LongType()),
-            T.StructField("g", T.LongType()),
+            T.StructField("garr", T.ArrayType(T.LongType())),
             T.StructField("batch_id", T.LongType()),
         ]
     ),
@@ -878,10 +799,10 @@ def gram_log_append_batch(
     n: int = 5,
     validate_fresh_ids: bool = False,
 ) -> None:
-    """Append one micro-batch's per-doc DISTINCT gram rows (the stored-
-    table contract of :func:`minhash_pairs_from_grams`) — the
+    """Append one micro-batch's per-doc DISTINCT gram arrays (the input
+    contract of :func:`minhash_pairs_from_grams`) — the
     ``foreachBatch`` body, behind the shared append guard.  A replayed
-    post-fold batch would recreate gram rows the base already holds:
+    post-fold batch would recreate doc rows the base already holds:
     MIN-idempotent for signatures, but inflating set-size denominators
     downstream.  ``validate_fresh_ids`` refuses a re-appended
     tombstoned doc id."""
@@ -891,7 +812,7 @@ def gram_log_append_batch(
     ):
         append_rows(
             store_dir, _GRAM_LOG, batch_id,
-            _gram_hash_table(batch_df, id_col, text_col, n, distinct=True),
+            _row_gram_arrays(batch_df, id_col, text_col, n),
         )
 
 
@@ -900,13 +821,14 @@ def gram_log_delete_batch(
 ) -> None:
     """Tombstone one batch of DELETED doc ids — the index-layer mirror
     of the reference's table-layer reconciliation
-    (delete-removed-tickets.py:138-169).  Gram rows are row-disjoint
-    per doc, so deletion needs no stat folding."""
+    (delete-removed-tickets.py:138-169).  Each doc is one row, so
+    deletion needs no stat folding."""
     delete_rows(store_dir, _GRAM_LOG, ids.select(F.col(id_col).alias("doc")), batch_id)
 
 
 def load_gram_log(spark, store_dir: str) -> DataFrame:
-    """The (doc, g) gram table: every batch, tombstoned docs removed."""
+    """The (doc, garr) gram arrays: every batch, tombstoned docs
+    removed."""
     return load_rows(spark, store_dir, _GRAM_LOG)
 
 
@@ -914,161 +836,3 @@ def gram_log_compact(spark, store_dir: str) -> None:
     """Fold the log to its ``batch_id = -1`` base, tombstoned docs
     physically dropped (ext/artifact.py ``compact_log``)."""
     compact_log(spark, store_dir, _GRAM_LOG)
-
-
-# 60 bits = the full entropy of portable_hash64 (md5-derived), and with
-# 4 bands it gives 15-bit band keys (32k buckets per band).  The
-# amplified-corpus probe (tools/scale_amplify.py) caught the old 32-bit
-# default SATURATING: 8-bit band keys → 256 buckets, bucket occupancy
-# grows linearly with corpus size, and within-bucket pair generation
-# quadratically — 4.2M "near" pairs at 80k docs, mostly band-collision
-# false positives.  Wider keys keep occupancy (and pair volume) linear.
-SIMHASH_BITS = 60
-
-
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS) -> DataFrame:
-    """Per-doc SimHash: token hashes vote ±1 per bit; the sign vector is
-    the signature.  Token hashes are the 60-bit md5-based
-    ``portable_hash64`` (codegen'd; every signature bit carries real
-    entropy).
-
-    Shape: explode tokens, hash each ONCE (codegen'd), then one
-    groupBy with ``bits`` codegen'd ``sum`` aggregates.  Map-side
-    partial aggregation collapses each doc to one 33-long row before
-    the shuffle, so the exchange moves signatures, not token rows.
-    The earlier row-wise formulation (``transform`` + 32 ``aggregate``
-    lambdas over the hash array) avoided the shuffle but re-evaluated
-    interpreted higher-order lambdas per bit — measured ~20% slower
-    at sf0.1 despite zero exchanges.  Integer addition is commutative,
-    so both formulations are bit-identical (verified exceptAll == 0)."""
-    th = ensure_parallelism(df.select(id_col, text_col)).select(
-        F.col(id_col).alias("doc"),
-        F.explode(tokens(normalize_text(text_col))).alias("tok"),
-    ).select("doc", portable_hash64(F.col("tok")).alias("h"))
-    aggs, sig = _simhash_exprs(bits)
-    votes = th.groupBy("doc").agg(*aggs)
-    return votes.select("doc", sig.cast("long").alias("simhash"))
-
-
-@jvm_memo(maxsize=8)
-def _simhash_exprs(bits: int) -> tuple[tuple[Column, ...], Column]:
-    """Memoized per-bit vote aggregates + signature assembly (~0.5 s of
-    py4j-bound driver time to build `bits` agg trees; immutable
-    unresolved expressions over fixed intermediate names)."""
-    aggs = tuple(
-        F.sum(F.shiftright("h", i).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"b{i}")
-        for i in range(bits)
-    )
-    sig = sum(
-        (F.when(F.col(f"b{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0)) for i in range(bits)),
-        start=F.lit(0),
-    )
-    return aggs, sig
-
-
-def simhash_near_pairs(
-    sig: DataFrame,
-    bits: int = SIMHASH_BITS,
-    bands: int = 4,
-    max_hamming: int = 3,
-    max_bucket: int | None = 200,
-    max_group: int = IDENT_MAX_GROUP,
-) -> DataFrame:
-    """Hamming-near pairs via band join (a pair within ``max_hamming``
-    of ``bands`` bands must agree on ≥1 band when max_hamming < bands),
-    verified with an exact popcount.
-
-    Signature-level collapse (r5): hamming distance depends ONLY on the
-    signatures, so docs sharing a signature are collapsed to one
-    representative (min doc id) before banding — EXACT, no fingerprint
-    involved.  Same-signature groups emit their hamming-0 pairs by
-    expansion (clique up to ``max_group``, star beyond — see
-    ``IDENT_MAX_GROUP``), so a degenerate signature shared by millions
-    of boilerplate docs — the strongest duplicates in the corpus, and
-    the pairs the r4 ``max_bucket`` gate silently dropped — is always
-    reported, while the band self-join only ever sees distinct
-    signatures.
-
-    ``max_bucket`` drops band buckets with more than the cap's worth of
-    DISTINCT signatures before the self-join — the same spill-safe
-    window gate as :func:`lsh_candidate_pairs`.  A dropped bucket costs
-    recall only for cross-signature pairs whose OTHER agreeing bands
-    are also oversaturated; with ``bits``/``bands`` sized so keys don't
-    saturate (see SIMHASH_BITS note) the cap never triggers on healthy
-    data."""
-    w = Window.partitionBy("simhash")
-    # Persisted (tracked): the signature aggregation beneath feeds four
-    # branches of the returned plan (reps→band join, both expansion
-    # sides, identical-group pairs) — without the pin each branch could
-    # re-run the per-bit vote aggregation over the corpus (exchange
-    # reuse across union arms is not guaranteed under AQE).
-    groups = persist_tracked(
-        sig.select("doc", "simhash")
-        .withColumn("rep", F.min("doc").over(w))
-        .withColumn("gn", F.count("*").over(w))
-    )
-    # gn rides the banding so the expansion cap needs no sizes join
-    reps = groups.filter(F.col("doc") == F.col("rep")).select("doc", "simhash", "gn")
-    if bands < 1 or bits % bands:
-        # zero-width bands would key every signature to mask 0 — one
-        # global bucket, then the size gate drops everything (silent)
-        raise ValueError(f"bands must divide bits (got bits={bits}, bands={bands})")
-    width = bits // bands
-    mask = (1 << width) - 1
-    banded = reps.select(
-        "doc",
-        "simhash",
-        "gn",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(bi).alias("band"),
-                    F.shiftright(F.col("simhash"), bi * width).bitwiseAND(F.lit(mask)).alias("key"),
-                )
-                for bi in range(bands)
-            ])
-        ).alias("bk"),
-    ).select(
-        "doc", "simhash", "gn", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    wsz = Window.partitionBy("band", "key")
-    if max_bucket is not None:
-        banded = banded.withColumn("n", F.count("*").over(wsz)).filter(
-            F.col("n") <= max_bucket
-        ).drop("n")
-    a, b = banded.alias("a"), banded.alias("b")
-    cross = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-            F.col("a.gn").alias("gn_a"),
-            F.col("b.gn").alias("gn_b"),
-        )
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    # Expansion: rep↔rep pairs back to member↔member, sig columns
-    # following the least/greatest member swap — the shared kernel
-    # (:func:`_expand_cross`, same join-side sizing argument; gn rode
-    # the band join, so the cap is a pure row filter).
-    expanded = _expand_cross(
-        cross, groups, ["sig_a", "sig_b", "hamming"],
-        swap_cols=(("sig_a", "sig_b"),), gn_cols=("gn_a", "gn_b"),
-    )
-    ident = _ident_member_pairs(
-        groups, max_group, carry=("simhash",), group_key=("simhash",)
-    ).select(
-        "doc_a", "doc_b",
-        F.col("simhash").alias("sig_a"), F.col("simhash").alias("sig_b"),
-        F.lit(0).cast("integer").alias("hamming"),
-    )
-    return expanded.withColumn("hamming", F.col("hamming").cast("integer")).unionByName(ident)

@@ -4,7 +4,7 @@ The r7 BM25 query recomputed tf/df/avgdl from raw text on every run —
 fine for a one-shot query, wrong at corpus scale where retrieval is a
 serving workload: the index must be a per-corpus-version ARTIFACT,
 built once, stored, and incrementally maintained, exactly like the
-stored gram table the MinHash family uses (ext/dedup.py,
+stored gram log the MinHash family uses (ext/dedup.py,
 ``minhash_pairs_from_grams``).
 
 Index contract (three tables, all parquet-friendly):

@@ -229,7 +229,7 @@ def embedding_near_dup_pairs(
     pick ``n_planes ≈ log2(corpus / desired_occupancy)`` (the signature
     is just n_planes sign bits; more planes cost one extra dot each).
     ``max_bucket`` is the backstop, the same spill-safe window gate as
-    the MinHash/SimHash band joins — but since the r5 content collapse
+    the MinHash band join — but since the r5 content collapse
     it gates on DISTINCT vectors: byte-identical vectors (the classic
     degenerate bucket — millions of copies of one embedding) are
     collapsed to a representative before bucketing and their pairs

@@ -19,9 +19,6 @@ per-batch update cost is one batch pass.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import functions as F
 
@@ -30,7 +27,7 @@ from pipeline311_spark.ext.ann_store import (
     ann_codes_append_batch,
     ann_index_build,
 )
-from pipeline311_spark.plans.common import emb_table, materialize
+from pipeline311_spark.plans.common import emb_table, materialize, scratch_dir
 from pipeline311_spark.plans.curation4 import _PQ_K, _PQ_M, _PQ_SUBDIM, _pq_sqdist_sql
 from pipeline311_spark.plans.registry import register
 
@@ -181,15 +178,12 @@ def _query_vecs(e):
     covers=("ext:similarity", "ext:quantize", "ext:layout", "K2", "O4"),
 )
 def q_ivfpq_from_store(spark, sf_dir):
-    out = os.path.join(tempfile.gettempdir(), f"p311_ivfpq_{uuid.uuid4().hex[:12]}")
-    try:
+    with scratch_dir("ivfpq") as out:
         e = emb_table(spark, sf_dir)
         ann_index_build(spark, e, out, n_cells=_ANN_CELLS, pq_k=_PQ_K)
         return ann_adc_topk_from_store(
             spark, out, _query_vecs(e), k=_ANN_K, nprobe=_ANN_NPROBE
         ).transform(materialize)  # materialize before the cleanup
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @register(
@@ -216,9 +210,8 @@ def q_stream_ann_index_maintain(spark, sf_dir):
     from pipeline311_spark.session import prep_session
 
     prep_session(spark)  # streaming bypasses table(): pin tz/conf here
-    out = os.path.join(tempfile.gettempdir(), f"p311_ivfpqs_{uuid.uuid4().hex[:12]}")
-    src, idx, ckpt = (os.path.join(out, s) for s in ("src", "index", "ckpt"))
-    try:
+    with scratch_dir("ivfpqs") as out:
+        src, idx, ckpt = (os.path.join(out, s) for s in ("src", "index", "ckpt"))
         e = emb_table(spark, sf_dir)
         v = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         # the quantizer build and the stream-source write are
@@ -252,8 +245,6 @@ def q_stream_ann_index_maintain(spark, sf_dir):
         return ann_adc_topk_from_store(
             spark, idx, _query_vecs(e), k=_ANN_K, nprobe=_ANN_NPROBE
         ).transform(materialize)  # materialize before the cleanup
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 # One ORACLE-EXACT Lloyd step of the coarse-cell trainer (VERDICT r10

@@ -19,6 +19,13 @@ order-insensitive value-hash matches the DuckDB oracle bit-for-bit):
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import uuid
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,6 +71,19 @@ def materialize(df: DataFrame) -> DataFrame:
     if _PLAN_CAPTURE is not None:
         _PLAN_CAPTURE.append(formatted_plan(df))
     return df.localCheckpoint(eager=True)
+
+
+@contextmanager
+def scratch_dir(tag: str) -> Iterator[str]:
+    """A fresh ``p311_<tag>_<uuid>`` path under the system temp dir for
+    one store query's files (not created; the writer makes it), removed
+    on exit.  A frame that still reads the files must be
+    :func:`materialize`'d before the block ends."""
+    path = os.path.join(tempfile.gettempdir(), f"p311_{tag}_{uuid.uuid4().hex[:12]}")
+    try:
+        yield path
+    finally:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def emb_table(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,15 +25,12 @@
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import functions as F
 
 from pipeline311_spark.ext.hashing import portable_hash64, portable_hash64_sql
 from pipeline311_spark.ext.textstats import token_count, tokens
-from pipeline311_spark.plans.common import materialize, table
+from pipeline311_spark.plans.common import materialize, scratch_dir, table
 from pipeline311_spark.plans.registry import register
 
 # ---------------------------------------------------------------------------
@@ -423,18 +420,10 @@ def q_retrieval_hybrid_rrf(spark, sf_dir):
     index — the serve plan touches postings + corpus-stats artifacts,
     never the corpus text (plan-shape asserted in
     tests/test_retrieval_store.py over :func:`hybrid_rrf_frame`)."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    out = os.path.join(tempfile.gettempdir(), f"p311_bm25h_{uuid.uuid4().hex[:12]}")
-    try:
+    with scratch_dir("bm25h") as out:
         return hybrid_rrf_frame(spark, sf_dir, out).transform(
             materialize
         )  # materialize before the store cleanup
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 def hybrid_rrf_build(spark, sf_dir, out):

@@ -19,7 +19,7 @@ from pipeline311_spark.ext.textstats import (
     quality_features,
     quality_score,
 )
-from pipeline311_spark.plans.common import materialize, table
+from pipeline311_spark.plans.common import materialize, scratch_dir, table
 from pipeline311_spark.plans.registry import register
 
 # ---------------------------------------------------------------------------
@@ -214,7 +214,8 @@ def _minhash_pairs_cte(corpus_where: str = "", corpus_sql: str | None = None) ->
         for bi in range(_MH_BANDS)
     )
     # gram hash: fold of _MH_N consecutive token hashes, mirroring
-    # ext/dedup.py _gram_hash_table exactly (acc*GRAM_BASE + next) % MOD
+    # ext/dedup.py _gram_fold_expr exactly (acc*GRAM_BASE + next) % MOD;
+    # gsets is the _row_gram_arrays set (the stored gram log's garr)
     gram = "th[i]"
     for j in range(1, _MH_N):
         gram = f"(({gram}) * {GRAM_BASE} + th[i+{j}]) % {MOD}"
@@ -425,7 +426,7 @@ def q_stream_minhash_maintain(spark, sf_dir):
     job (VERDICT r8 item 6 — the BM25 delta-log cycle applied to the
     MinHash artifact): the corpus arrives as a file stream (3 files,
     one micro-batch each), every micro-batch appends its per-doc
-    DISTINCT gram rows through ``foreachBatch`` →
+    DISTINCT gram arrays through ``foreachBatch`` →
     :func:`pipeline311_spark.ext.dedup.gram_log_append_batch` (replays
     overwrite their own batch_id partition — idempotent), the log is
     COMPACTED to its batch_id=-1 base (the crash-recoverable swap,
@@ -434,9 +435,6 @@ def q_stream_minhash_maintain(spark, sf_dir):
     a corpus streamed in three batches, appended, and compacted must
     yield exactly the pairs a one-shot run yields."""
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from pipeline311_spark.ext.dedup import (
         gram_log_append_batch,
@@ -447,9 +445,8 @@ def q_stream_minhash_maintain(spark, sf_dir):
     from pipeline311_spark.session import prep_session
 
     prep_session(spark)  # streaming bypasses table(): pin tz/conf here
-    out = os.path.join(tempfile.gettempdir(), f"p311_mhs_{uuid.uuid4().hex[:12]}")
-    src, store, ckpt = (os.path.join(out, s) for s in ("src", "store", "ckpt"))
-    try:
+    with scratch_dir("mhs") as out:
+        src, store, ckpt = (os.path.join(out, s) for s in ("src", "store", "ckpt"))
         d = table(spark, sf_dir, "documents").select("doc_id", "text")
         d.repartition(3).write.mode("overwrite").parquet(src)
         stream = spark.readStream.schema(d.schema).option(
@@ -470,7 +467,4 @@ def q_stream_minhash_maintain(spark, sf_dir):
         return minhash_pairs_from_grams(
             load_gram_log(spark, store),
             k=_MH_K, bands=_MH_BANDS, threshold=_MH_THRESHOLD, seed=_MH_SEED,
-            persist=False,
         ).transform(materialize)  # materialize before the cleanup
-    finally:
-        shutil.rmtree(out, ignore_errors=True)

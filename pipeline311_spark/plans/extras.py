@@ -5,13 +5,10 @@ encoding (P2/P18), count probes (A4/A5/A7), truncate+reload (K9).
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from pipeline311_spark.plans.common import dsum, table
+from pipeline311_spark.plans.common import dsum, materialize, scratch_dir, table
 from pipeline311_spark.plans.registry import register
 from pipeline311_spark.sinks.writers import overwrite_reload, write_csv
 from pipeline311_spark.sources.readers import read_csv
@@ -83,17 +80,9 @@ FROM documents GROUP BY lang
 
 @register("s9_csv_roundtrip", _CSV_SQL, covers=("K1", "S9", "K2"))
 def q_csv_roundtrip(spark, sf_dir):
-    import uuid
-
     from pyspark.sql import types as T
 
     d = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    # unique per run: concurrent gates on the same sf must not share a sink
-    out = os.path.join(
-        tempfile.gettempdir(),
-        f"p311_csv_{os.path.basename(sf_dir)}_{uuid.uuid4().hex[:12]}",
-    )
-    write_csv(d, out)
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -101,10 +90,13 @@ def q_csv_roundtrip(spark, sf_dir):
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    back = read_csv(spark, out, schema)
-    return back.groupBy("lang").agg(
-        F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars")
-    )
+    # unique per run: concurrent gates on the same sf must not share a sink
+    with scratch_dir("csv") as out:
+        write_csv(d, out)
+        back = read_csv(spark, out, schema)
+        return back.groupBy("lang").agg(
+            F.count("*").alias("n_docs"), F.sum("n_chars").alias("total_chars")
+        ).transform(materialize)  # materialize before the cleanup
 
 
 # ---------------------------------------------------------------------------
@@ -120,13 +112,13 @@ FROM part
 
 @register("k9_truncate_reload", _K9_SQL, covers=("K9", "K10"))
 def q_truncate_reload(spark, sf_dir):
-    import uuid
-
     p = table(spark, sf_dir, "part")
-    out = os.path.join(tempfile.gettempdir(), f"p311_seed_{uuid.uuid4().hex[:12]}")
-    overwrite_reload(p, out)
-    back = spark.read.parquet(out)
-    return back.agg(F.count("*").alias("n_parts"), dsum("p_retailprice").alias("total_price"))
+    with scratch_dir("seed") as out:
+        overwrite_reload(p, out)
+        back = spark.read.parquet(out)
+        return back.agg(
+            F.count("*").alias("n_parts"), dsum("p_retailprice").alias("total_price")
+        ).transform(materialize)  # materialize before the cleanup
 
 
 # ---------------------------------------------------------------------------

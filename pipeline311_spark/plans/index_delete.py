@@ -15,7 +15,7 @@ rebuild.
 * ``text_bm25_delete_maintain`` — the full log lifecycle: two append
   batches, the delete batch, then compaction physically drops the
   deleted postings before the serve.
-* ``dedup_minhash_delete_maintain`` — gram rows are row-disjoint per
+* ``dedup_minhash_delete_maintain`` — the gram log holds one row per
   doc: a tombstone log anti-joined at read, dropped at compaction; the
   LSH pipeline then runs from the folded store.
 * ``sim_ivfpq_delete_store`` — same tombstone shape for the ANN codes
@@ -39,9 +39,6 @@ folds it to zero.  Nothing rescans the corpus.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import functions as F
 
@@ -60,7 +57,7 @@ from pipeline311_spark.plans.ann_store_q import (
     _query_vecs,
 )
 from pipeline311_spark.ext.artifact import run_jobs
-from pipeline311_spark.plans.common import emb_table, materialize, table
+from pipeline311_spark.plans.common import emb_table, materialize, scratch_dir, table
 from pipeline311_spark.plans.curation3 import _bm25_sql
 from pipeline311_spark.plans.extensions import (
     _MH_BANDS,
@@ -101,16 +98,13 @@ def q_bm25_delete_merge(spark, sf_dir):
     (tombstones anti-joined, negative deltas summed at read time —
     ``text_bm25_delete_maintain`` covers the compacted form):
     indistinguishable from a fresh build over the remaining docs."""
-    out = os.path.join(tempfile.gettempdir(), f"p311_bm25d_{uuid.uuid4().hex[:12]}")
-    try:
+    with scratch_dir("bm25d") as out:
         d = table(spark, sf_dir, "documents")
         bm25_index_append_batch(d, 0, out)
         bm25_index_delete_batch(d.filter(_is_deleted()), 0, out)
         return _drop_score(
             bm25_topk(load_bm25_index(spark, out), _query_frame(spark), k=_BM25_TOPK)
         ).transform(materialize)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @register(
@@ -125,8 +119,7 @@ def q_bm25_delete_maintain(spark, sf_dir):
     delete stream can never clobber the append stream's), compaction
     physically drops the deleted postings, and the serve reads the
     folded log."""
-    out = os.path.join(tempfile.gettempdir(), f"p311_bm25dl_{uuid.uuid4().hex[:12]}")
-    try:
+    with scratch_dir("bm25dl") as out:
         d = table(spark, sf_dir, "documents").select("doc_id", "text")
         # the two backfill batches are independent (disjoint ids,
         # disjoint batch dirs, per-batch intent markers) — overlap them
@@ -140,8 +133,6 @@ def q_bm25_delete_maintain(spark, sf_dir):
         return _drop_score(
             bm25_topk(load_bm25_index(spark, out), _query_frame(spark), k=_BM25_TOPK)
         ).transform(materialize)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @register(
@@ -163,11 +154,10 @@ def q_stream_bm25_delete_maintain(spark, sf_dir):
     from pipeline311_spark.session import prep_session
 
     prep_session(spark)  # streaming bypasses table(): pin tz/conf here
-    out = os.path.join(tempfile.gettempdir(), f"p311_bm25ds_{uuid.uuid4().hex[:12]}")
-    src_add, src_del, idx, ck_add, ck_del = (
-        os.path.join(out, s) for s in ("add", "del", "index", "ck_add", "ck_del")
-    )
-    try:
+    with scratch_dir("bm25ds") as out:
+        src_add, src_del, idx, ck_add, ck_del = (
+            os.path.join(out, s) for s in ("add", "del", "index", "ck_add", "ck_del")
+        )
         d = table(spark, sf_dir, "documents").select("doc_id", "text")
         d.repartition(2).write.mode("overwrite").parquet(src_add)
         stream = spark.readStream.schema(d.schema).option(
@@ -204,8 +194,6 @@ def q_stream_bm25_delete_maintain(spark, sf_dir):
         return _drop_score(
             bm25_topk(load_bm25_index(spark, idx), _query_frame(spark), k=_BM25_TOPK)
         ).transform(materialize)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @register(
@@ -215,8 +203,8 @@ def q_stream_bm25_delete_maintain(spark, sf_dir):
 )
 def q_minhash_delete_maintain(spark, sf_dir):
     """Gram-store deletion: append the corpus in two batches, tombstone
-    the delete batch's doc ids (no stat folding — gram rows are
-    row-disjoint per doc), compact (physically dropping them), and run
+    the delete batch's doc ids (no stat folding — the log holds one
+    gram-array row per doc), compact (physically dropping them), and run
     the whole LSH pipeline from the folded store.  Must equal a
     one-shot run over the remaining docs."""
     from pipeline311_spark.ext.dedup import (
@@ -227,8 +215,7 @@ def q_minhash_delete_maintain(spark, sf_dir):
         minhash_pairs_from_grams,
     )
 
-    out = os.path.join(tempfile.gettempdir(), f"p311_mhd_{uuid.uuid4().hex[:12]}")
-    try:
+    with scratch_dir("mhd") as out:
         d = table(spark, sf_dir, "documents").select("doc_id", "text")
         # overlapped backfill (guide §2.6; artifact round-12 corollary)
         run_jobs(
@@ -244,10 +231,7 @@ def q_minhash_delete_maintain(spark, sf_dir):
         return minhash_pairs_from_grams(
             load_gram_log(spark, out),
             k=_MH_K, bands=_MH_BANDS, threshold=_MH_THRESHOLD, seed=_MH_SEED,
-            persist=False,
         ).transform(materialize)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @register(
@@ -272,8 +256,7 @@ def q_ivfpq_delete_store(spark, sf_dir):
     )
     from pipeline311_spark.plans.curation4 import _PQ_K
 
-    out = os.path.join(tempfile.gettempdir(), f"p311_ivfpqd_{uuid.uuid4().hex[:12]}")
-    try:
+    with scratch_dir("ivfpqd") as out:
         e = emb_table(spark, sf_dir)
         v = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         ann_quantizer_build(spark, v, out, n_cells=_ANN_CELLS, pq_k=_PQ_K)
@@ -289,5 +272,3 @@ def q_ivfpq_delete_store(spark, sf_dir):
         return ann_adc_topk_from_store(
             spark, out, _query_vecs(e), k=_ANN_K, nprobe=_ANN_NPROBE
         ).transform(materialize)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)

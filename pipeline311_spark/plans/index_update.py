@@ -40,11 +40,6 @@ to zero.  Nothing rescans the corpus.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import functions as F
 
 from pipeline311_spark.ext.retrieval import (
@@ -62,7 +57,7 @@ from pipeline311_spark.plans.ann_store_q import (
     _query_vecs,
 )
 from pipeline311_spark.ext.artifact import run_jobs
-from pipeline311_spark.plans.common import emb_table, materialize, table
+from pipeline311_spark.plans.common import emb_table, materialize, scratch_dir, table
 from pipeline311_spark.plans.curation3 import _bm25_sql
 from pipeline311_spark.plans.extensions import (
     _MH_BANDS,
@@ -123,8 +118,7 @@ def q_bm25_update_maintain(spark, sf_dir):
     text (negative df/n_docs/sum_dl deltas), revised editions appended
     under new ids (fresh-id-guarded), compacted, served.  Must equal a
     fresh build over the post-update corpus."""
-    out = os.path.join(tempfile.gettempdir(), f"p311_bm25u_{uuid.uuid4().hex[:12]}")
-    try:
+    with scratch_dir("bm25u") as out:
         d = table(spark, sf_dir, "documents").select("doc_id", "text")
         # the two backfill batches are independent (disjoint ids,
         # disjoint batch dirs, per-batch intent markers) — overlap them
@@ -142,8 +136,6 @@ def q_bm25_update_maintain(spark, sf_dir):
         return _drop_score(
             bm25_topk(load_bm25_index(spark, out), _query_frame(spark), k=_BM25_TOPK)
         ).transform(materialize)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @register(
@@ -152,7 +144,7 @@ def q_bm25_update_maintain(spark, sf_dir):
     covers=("ext:dedup", "ext:gram-update", "J1", "K8"),
 )
 def q_minhash_update_maintain(spark, sf_dir):
-    """Gram-store document update: the changed docs' old gram rows are
+    """Gram-store document update: the changed docs' old gram arrays are
     tombstoned and physically dropped at compaction, their revised
     editions' grams appended under new ids, and the whole LSH pipeline
     runs from the folded store.  Must equal a one-shot run over the
@@ -165,8 +157,7 @@ def q_minhash_update_maintain(spark, sf_dir):
         minhash_pairs_from_grams,
     )
 
-    out = os.path.join(tempfile.gettempdir(), f"p311_mhu_{uuid.uuid4().hex[:12]}")
-    try:
+    with scratch_dir("mhu") as out:
         d = table(spark, sf_dir, "documents").select("doc_id", "text")
         # overlapped backfill (guide §2.6; artifact round-12 corollary)
         run_jobs(
@@ -187,10 +178,7 @@ def q_minhash_update_maintain(spark, sf_dir):
         return minhash_pairs_from_grams(
             load_gram_log(spark, out),
             k=_MH_K, bands=_MH_BANDS, threshold=_MH_THRESHOLD, seed=_MH_SEED,
-            persist=False,
         ).transform(materialize)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 @register(
@@ -217,8 +205,7 @@ def q_ivfpq_update_store(spark, sf_dir):
     )
     from pipeline311_spark.plans.curation4 import _PQ_K
 
-    out = os.path.join(tempfile.gettempdir(), f"p311_ivfpqu_{uuid.uuid4().hex[:12]}")
-    try:
+    with scratch_dir("ivfpqu") as out:
         e = emb_table(spark, sf_dir)
         v = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
         ann_quantizer_build(spark, v, out, n_cells=_ANN_CELLS, pq_k=_PQ_K)
@@ -238,5 +225,3 @@ def q_ivfpq_update_store(spark, sf_dir):
         return ann_adc_topk_from_store(
             spark, out, _query_vecs(e), k=_ANN_K, nprobe=_ANN_NPROBE
         ).transform(materialize)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)

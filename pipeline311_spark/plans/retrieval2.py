@@ -36,9 +36,6 @@ batch tokenize + |vocabulary|-scale stat merges.  Fusion operates on
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import functions as F
 
@@ -50,7 +47,7 @@ from pipeline311_spark.ext.retrieval import (
     load_bm25_index,
     rrf_fuse,
 )
-from pipeline311_spark.plans.common import emb_table, materialize, table
+from pipeline311_spark.plans.common import emb_table, materialize, scratch_dir, table
 from pipeline311_spark.plans.curation3 import (
     _BM25_QUERIES,
     _BM25_TOPK,
@@ -79,14 +76,11 @@ def _drop_score(df):
     covers=("ext:retrieval", "ext:text", "ext:export", "K2", "O4"),
 )
 def q_bm25_from_store(spark, sf_dir):
-    out = os.path.join(tempfile.gettempdir(), f"p311_bm25_{uuid.uuid4().hex[:12]}")
-    try:
+    with scratch_dir("bm25") as out:
         bm25_index_append_batch(table(spark, sf_dir, "documents"), 0, out)
         return _drop_score(
             bm25_topk(load_bm25_index(spark, out), _query_frame(spark), k=_BM25_TOPK)
         ).transform(materialize)  # materialize before the cleanup below
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 # The base/batch split for the incremental path: a hash-free modulus on
@@ -102,17 +96,14 @@ _INCR_BATCH_RESIDUE = 3
     covers=("ext:retrieval", "ext:text", "T1", "K2"),
 )
 def q_bm25_incr_store(spark, sf_dir):
-    out = os.path.join(tempfile.gettempdir(), f"p311_bm25i_{uuid.uuid4().hex[:12]}")
     is_batch = F.col("doc_id") % _INCR_BATCH_MOD == _INCR_BATCH_RESIDUE
-    try:
+    with scratch_dir("bm25i") as out:
         d = table(spark, sf_dir, "documents")
         bm25_index_append_batch(d.filter(~is_batch), 0, out)
         bm25_index_append_batch(d.filter(is_batch), 1, out)
         return _drop_score(
             bm25_topk(load_bm25_index(spark, out), _query_frame(spark), k=_BM25_TOPK)
         ).transform(materialize)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -174,8 +165,7 @@ def q_bm25_partitioned_store(spark, sf_dir):
         _postings_from_base,
     )
 
-    out = os.path.join(tempfile.gettempdir(), f"p311_bm25p_{uuid.uuid4().hex[:12]}")
-    try:
+    with scratch_dir("bm25p") as out:
         d = table(spark, sf_dir, "documents")
         # one tokenize pass for both artifact writes (round 11)
         base = _bm25_token_base(d, "doc_id", "text").persist(
@@ -216,8 +206,6 @@ def q_bm25_partitioned_store(spark, sf_dir):
         return _drop_score(
             bm25_topk(index, _query_frame(spark), k=_BM25_TOPK)
         ).transform(materialize)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -262,11 +250,10 @@ def _stream_maintained_topk(spark, sf_dir, compact: bool):
     from pipeline311_spark.session import prep_session
 
     prep_session(spark)  # streaming bypasses table(): pin tz/conf here
-    out = os.path.join(tempfile.gettempdir(), f"p311_bm25s_{uuid.uuid4().hex[:12]}")
-    src = os.path.join(out, "src")
-    idx = os.path.join(out, "index")
-    ckpt = os.path.join(out, "ckpt")
-    try:
+    with scratch_dir("bm25s") as out:
+        src = os.path.join(out, "src")
+        idx = os.path.join(out, "index")
+        ckpt = os.path.join(out, "ckpt")
         d = table(spark, sf_dir, "documents").select("doc_id", "text")
         d.repartition(3).write.mode("overwrite").parquet(src)
         stream = spark.readStream.schema(d.schema).option(
@@ -288,8 +275,6 @@ def _stream_maintained_topk(spark, sf_dir, compact: bool):
         return _drop_score(
             bm25_topk(load_bm25_index(spark, idx), _query_frame(spark), k=_BM25_TOPK)
         ).transform(materialize)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -370,8 +355,7 @@ WHERE rn <= {_BM25_TOPK}
 def q_retrieval_rrf_recency(spark, sf_dir):
     from pipeline311_spark.ext.similarity import brute_force_topk
 
-    out = os.path.join(tempfile.gettempdir(), f"p311_bm25r_{uuid.uuid4().hex[:12]}")
-    try:
+    with scratch_dir("bm25r") as out:
         bm25_index_append_batch(table(spark, sf_dir, "documents"), 0, out)
         lex = (
             bm25_topk(load_bm25_index(spark, out), _query_frame(spark), k=_BM25_TOPK)
@@ -410,5 +394,3 @@ def q_retrieval_rrf_recency(spark, sf_dir):
         return rrf_fuse(
             [("lex", lex), ("dense", dense), ("rec", rec)], k=_BM25_TOPK, c=_RRF_C
         ).transform(materialize)  # materialize before the store cleanup
-    finally:
-        shutil.rmtree(out, ignore_errors=True)

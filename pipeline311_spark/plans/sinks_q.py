@@ -21,12 +21,11 @@ K3-at-scale companion: see :mod:`pipeline311_spark.operators.merge`
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import functions as F
 
-from pipeline311_spark.plans.common import table
+from pipeline311_spark.plans.common import materialize, scratch_dir, table
 from pipeline311_spark.plans.registry import register
 from pipeline311_spark.sinks.writers import batched_foreach_writer
 
@@ -39,38 +38,11 @@ SELECT n_nationkey, n_name, n_regionkey FROM nation
 def q_batched_writer_roundtrip(spark, sf_dir):
     from pyspark.sql import types as T
 
-    out = os.path.join(
-        tempfile.gettempdir(), f"p311_k5_{uuid.uuid4().hex[:12]}"
-    )
-    os.makedirs(out, exist_ok=True)
     n = (
         table(spark, sf_dir, "nation")
         .select("n_nationkey", "n_name", "n_regionkey")
         .repartition(4)  # several partitions -> several writer instances
     )
-
-    def send(rows):
-        # Executor-side sink: first attempt of every batch fails (marker
-        # file tracks attempts), so each flush exercises retry+backoff.
-        import json
-
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        payload = sorted((r["n_nationkey"], r["n_name"], r["n_regionkey"]) for r in rows)
-        seq = min(k for k, _, _ in payload)  # stable batch id: same rows -> same id
-        marker = os.path.join(out, f".try_{pid}_{seq}")
-        if not os.path.exists(marker):
-            with open(marker, "w"):
-                pass
-            raise RuntimeError("transient sink error (deliberate first-attempt failure)")
-        with open(os.path.join(out, f"batch_{pid}_{seq}.jsonl"), "w") as f:
-            for key, name, region in payload:
-                f.write(json.dumps({"n_nationkey": key, "n_name": name, "n_regionkey": region}) + "\n")
-
-    batched_foreach_writer(n, send, batch_size=3, max_tries=3, backoff_s=0.01)
-
     schema = T.StructType(
         [
             T.StructField("n_nationkey", T.LongType()),
@@ -78,15 +50,41 @@ def q_batched_writer_roundtrip(spark, sf_dir):
             T.StructField("n_regionkey", T.LongType()),
         ]
     )
-    import glob
+    with scratch_dir("k5") as out:
+        os.makedirs(out)
 
-    if not glob.glob(os.path.join(out, "batch_*.jsonl")):
-        # empty increment -> no batches flushed; the roundtrip result is
-        # an empty table with the declared schema, not a read error
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).json(os.path.join(out, "batch_*.jsonl")).select(
-        "n_nationkey", "n_name", F.col("n_regionkey")
-    )
+        def send(rows):
+            # Executor-side sink: first attempt of every batch fails (marker
+            # file tracks attempts), so each flush exercises retry+backoff.
+            import json
+
+            from pyspark import TaskContext
+
+            ctx = TaskContext.get()
+            pid = ctx.partitionId() if ctx is not None else 0
+            payload = sorted((r["n_nationkey"], r["n_name"], r["n_regionkey"]) for r in rows)
+            seq = min(k for k, _, _ in payload)  # stable batch id: same rows -> same id
+            marker = os.path.join(out, f".try_{pid}_{seq}")
+            if not os.path.exists(marker):
+                with open(marker, "w"):
+                    pass
+                raise RuntimeError("transient sink error (deliberate first-attempt failure)")
+            with open(os.path.join(out, f"batch_{pid}_{seq}.jsonl"), "w") as f:
+                for key, name, region in payload:
+                    row = {"n_nationkey": key, "n_name": name, "n_regionkey": region}
+                    f.write(json.dumps(row) + "\n")
+
+        batched_foreach_writer(n, send, batch_size=3, max_tries=3, backoff_s=0.01)
+
+        import glob
+
+        if not glob.glob(os.path.join(out, "batch_*.jsonl")):
+            # empty increment -> no batches flushed; the roundtrip result is
+            # an empty table with the declared schema, not a read error
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).json(os.path.join(out, "batch_*.jsonl")).select(
+            "n_nationkey", "n_name", F.col("n_regionkey")
+        ).transform(materialize)  # materialize before the cleanup
 
 
 # ---------------------------------------------------------------------------
@@ -117,37 +115,37 @@ def q_observe_throttled(spark, sf_dir):
 
     from pipeline311_spark.operators.telemetry import observed
 
-    out = os.path.join(tempfile.gettempdir(), f"p311_t5t6_{uuid.uuid4().hex[:12]}")
-    os.makedirs(out, exist_ok=True)
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey").repartition(2)
     n, obs = observed(
         n, f"t5_progress_{uuid.uuid4().hex[:8]}", extra={"total_region": F.sum("n_regionkey")}
     )
     n.count()  # SQL action: streams rows through the observe node once
+    with scratch_dir("t5t6") as out:
+        os.makedirs(out)
 
-    def send(rows):
-        from pyspark import TaskContext
+        def send(rows):
+            from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        payload = sorted((r["n_nationkey"], r["n_regionkey"]) for r in rows)
-        with open(os.path.join(out, f"batch_{pid}_{payload[0][0]}.jsonl"), "w") as f:
-            for key, region in payload:
-                f.write(json.dumps({"k": key, "r": region}) + "\n")
+            ctx = TaskContext.get()
+            pid = ctx.partitionId() if ctx is not None else 0
+            payload = sorted((r["n_nationkey"], r["n_regionkey"]) for r in rows)
+            with open(os.path.join(out, f"batch_{pid}_{payload[0][0]}.jsonl"), "w") as f:
+                for key, region in payload:
+                    f.write(json.dumps({"k": key, "r": region}) + "\n")
 
-    # throttle_s > 0: every successful flush takes the politeness pause
-    # (T6) — per executor slot; cap partitions to bound the global rate.
-    batched_foreach_writer(n, send, batch_size=10, throttle_s=0.02)
+        # throttle_s > 0: every successful flush takes the politeness pause
+        # (T6) — per executor slot; cap partitions to bound the global rate.
+        batched_foreach_writer(n, send, batch_size=10, throttle_s=0.02)
 
-    import glob
+        import glob
 
-    m = obs.get  # populated by the writer's action
-    landed = (
-        spark.read.json(os.path.join(out, "batch_*.jsonl")).count()
-        if glob.glob(os.path.join(out, "batch_*.jsonl"))
-        else 0  # empty increment: nothing flushed
-    )
-    return spark.createDataFrame(
-        [(int(m["n_rows"]), int(m["total_region"] or 0), int(landed))],
-        "n_rows_observed long, total_region_observed long, n_rows_landed long",
-    )
+        m = obs.get  # populated by the writer's action
+        landed = (
+            spark.read.json(os.path.join(out, "batch_*.jsonl")).count()
+            if glob.glob(os.path.join(out, "batch_*.jsonl"))
+            else 0  # empty increment: nothing flushed
+        )
+        return spark.createDataFrame(
+            [(int(m["n_rows"]), int(m["total_region"] or 0), int(landed))],
+            "n_rows_observed long, total_region_observed long, n_rows_landed long",
+        )

@@ -88,10 +88,10 @@ def test_minhash_gram_path_shuffle_budget(spark, sf_dir):
     is ensure_parallelism's local round-robin — never a hashpartitioning
     of the corpus on doc), and the full signature pipeline carries
     exactly ONE hash exchange (the groupBy partial-agg of k longs/doc)."""
-    from pipeline311_spark.ext.dedup import _gram_hash_table, minhash_signatures
+    from pipeline311_spark.ext.dedup import _row_gram_arrays, minhash_signatures
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    gram_plan = explain_str(_gram_hash_table(docs, "doc_id", "text", 5))
+    gram_plan = explain_str(_row_gram_arrays(docs, "doc_id", "text", 5))
     assert "hashpartitioning" not in gram_plan
     sig_plan = explain_str(minhash_signatures(docs, "doc_id", "text", k=8, n=5))
     # exactly one hash exchange, and it carries the doc key (formatted
@@ -107,7 +107,6 @@ _SINGLE_PARTITION_OK = {
     "a1_max_watermark",
     "a3_coalesced_watermark",
     "f3_f4_watermark_boundary",
-    "k9_truncate_reload",
     "o2_desc_scan_order",
     "q17_below_part_average",
     "t2_backfill_window",

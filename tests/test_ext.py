@@ -11,8 +11,6 @@ from pipeline311_spark.ext.dedup import (
     minhash_dedup_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
-    simhash,
-    simhash_near_pairs,
 )
 from pipeline311_spark.ext.multimodal import (
     decode_image_features,
@@ -111,15 +109,6 @@ def test_lsh_hot_bucket_capped(spark):
     flat = {d for r in pairs for d in (r["doc_a"], r["doc_b"])}
     assert not (flat & set(range(30)))  # hot bucket fully suppressed
     assert (100, 101) in {(r["doc_a"], r["doc_b"]) for r in pairs}  # small bucket survives
-
-
-def test_simhash_identical_and_near(docs):
-    sig = simhash(docs, "doc_id", "text")
-    pairs = simhash_near_pairs(sig, max_hamming=6)
-    rows = {r["doc"]: r["simhash"] for r in sig.collect()}
-    assert rows[0] == rows[3]
-    got = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in pairs.collect()}
-    assert got[(0, 3)] == 0
 
 
 VECS = [
@@ -296,8 +285,6 @@ def test_degenerate_identical_corpus_star_pairs(spark):
         exact_dup_groups,
         minhash_dedup_pairs,
         ngram_jaccard_pairs,
-        simhash,
-        simhash_near_pairs,
     )
 
     d = spark.range(500).select(
@@ -313,8 +300,6 @@ def test_degenerate_identical_corpus_star_pairs(spark):
     assert {r["doc_b"] for r in mh} == set(range(1, 500))
     ng = ngram_jaccard_pairs(d, "doc_id", "text", n=5, threshold=0.2, max_df=50).collect()
     assert len(ng) == 499 and all(r["doc_a"] == 0 and r["jaccard"] == 1.0 for r in ng)
-    sh = simhash_near_pairs(simhash(d, "doc_id", "text")).collect()
-    assert len(sh) == 499 and all(r["doc_a"] == 0 and r["hamming"] == 0 for r in sh)
 
 
 def test_identical_group_clique_and_cross_recall(spark):
@@ -440,16 +425,14 @@ def test_jvm_memo_keyed_on_gateway(spark, monkeypatch):
 
 
 def test_band_math_rejects_non_divisible(spark):
-    """bands that don't divide k/bits would silently produce zero-width
-    band keys (one global bucket, size-gated to nothing) — both band
-    builders must fail loudly instead."""
+    """bands that don't divide k would silently produce zero-width
+    band keys (one global bucket, size-gated to nothing) — the band
+    builder must fail loudly instead."""
     import pytest as _pytest
 
     from pipeline311_spark.ext.dedup import (
         lsh_candidate_pairs,
         minhash_signatures,
-        simhash,
-        simhash_near_pairs,
     )
 
     docs = spark.createDataFrame(
@@ -460,9 +443,6 @@ def test_band_math_rejects_non_divisible(spark):
         lsh_candidate_pairs(sig, k=8, bands=3)
     with _pytest.raises(ValueError, match="bands must divide k"):
         lsh_candidate_pairs(sig, k=8, bands=16)
-    ssig = simhash(docs, "doc_id", "text")
-    with _pytest.raises(ValueError, match="bands must divide bits"):
-        simhash_near_pairs(ssig, bands=7)
 
 
 def test_dedup_family_handles_null_and_empty_text(spark):
@@ -475,8 +455,6 @@ def test_dedup_family_handles_null_and_empty_text(spark):
         exact_dup_groups,
         minhash_dedup_pairs,
         ngram_jaccard_pairs,
-        simhash,
-        simhash_near_pairs,
     )
 
     docs = spark.createDataFrame(
@@ -493,8 +471,6 @@ def test_dedup_family_handles_null_and_empty_text(spark):
     assert {(r["doc_a"], r["doc_b"]) for r in mh} == {(4, 5)}
     nj = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.3).collect()
     assert {(r["doc_a"], r["doc_b"]) for r in nj} == {(4, 5)}
-    sp = simhash_near_pairs(simhash(docs, "doc_id", "text"), max_hamming=3).collect()
-    assert {(r["doc_a"], r["doc_b"]) for r in sp} == {(4, 5)}
     exact_dup_groups(docs, "doc_id", "text").collect()  # must not raise
     # and the fingerprints behind it: 4/5 collide, NULL text -> NULL fp
     fp = {

@@ -1,8 +1,9 @@
-"""Streaming maintenance of the stored MinHash gram table
+"""Streaming maintenance of the stored MinHash gram log
 (ext/dedup.py gram_log_*, ext/artifact.py) — the operational
 properties the oracle twin can't see: replay idempotence, compaction
-value-preservation + fresh-checkpoint safety, and the crashed-swap
-refusal/recovery contract shared with the BM25 log."""
+value-preservation + fresh-checkpoint safety, the crashed-swap
+refusal/recovery contract shared with the BM25 log, and the stored
+serve path (one gram array per doc, no set rebuild)."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pipeline311_spark.ext.dedup import (
-    _gram_hash_table,
+    _row_gram_arrays,
     gram_log_append_batch,
     gram_log_compact,
     load_gram_log,
@@ -30,6 +31,10 @@ C = [(20, "a b c d e f g")]
 
 def _snap(spark, store):
     return sorted(map(tuple, load_gram_log(spark, store).collect()))
+
+
+def _snap_arrays(docs):
+    return sorted(map(tuple, _row_gram_arrays(docs, "doc_id", "text", 5).collect()))
 
 
 def test_append_is_idempotent_under_replay(spark, tmp_path):
@@ -57,14 +62,7 @@ def test_compact_preserves_content_and_fresh_batches_append(spark, tmp_path):
     # a fresh-checkpoint stream restarts numbering at 0 — must append,
     # never overwrite the base
     gram_log_append_batch(_docs(spark, C), 0, store, n=5)
-    want = sorted(
-        map(
-            tuple,
-            _gram_hash_table(
-                _docs(spark, A + B + C), "doc_id", "text", 5, distinct=True
-            ).collect(),
-        )
-    )
+    want = _snap_arrays(_docs(spark, A + B + C))
     assert _snap(spark, store) == want
 
 
@@ -83,7 +81,7 @@ def test_mid_swap_refusal_and_recovery(spark, tmp_path):
 
 def test_empty_store_loads_empty_with_stable_schema(spark, tmp_path):
     out = load_gram_log(spark, str(tmp_path / "never_written"))
-    assert out.columns == ["doc", "g"]
+    assert out.columns == ["doc", "garr"]
     assert out.count() == 0
 
 
@@ -115,14 +113,7 @@ def test_append_into_crashed_swap_window_recovers_first(spark, tmp_path):
 
     gram_log_append_batch(_docs(spark, C), 2, store, n=5)  # must recover
 
-    want = sorted(
-        map(
-            tuple,
-            _gram_hash_table(
-                _docs(spark, A + B + C), "doc_id", "text", 5, distinct=True
-            ).collect(),
-        )
-    )
+    want = _snap_arrays(_docs(spark, A + B + C))
     assert _snap(spark, store) == want
     gram_log_compact(spark, store)  # and compaction stays lossless
     assert _snap(spark, store) == want
@@ -151,3 +142,34 @@ def test_concurrent_backfill_batches_equal_sequential(spark, tmp_path):
     # and the folded state agrees too
     gram_log_compact(spark, conc)
     assert _snap(spark, conc) == _snap(spark, seq)
+
+
+def test_stored_path_equals_in_memory_without_set_rebuild(spark, sf_dir, tmp_path):
+    """The stored serve path: a gram log appended in two batches and
+    compacted holds one array row per doc, and
+    ``minhash_pairs_from_grams`` over it yields exactly the pairs
+    ``minhash_dedup_pairs`` finds from the text.  Its plan never
+    rebuilds gram sets with a ``collect_set(g)`` exchange — the verify
+    reads the stored arrays (the bucket ``collect_set`` over doc ids
+    stays)."""
+    from pipeline311_spark.ext.dedup import minhash_dedup_pairs, minhash_pairs_from_grams
+    from pipeline311_spark.plans.common import formatted_plan
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    store = str(tmp_path / "store")
+    for i in range(2):
+        gram_log_append_batch(docs.filter(F.col("doc_id") % 2 == i), i, store, n=5)
+    gram_log_compact(spark, store)
+    log = load_gram_log(spark, store)
+    assert log.count() == log.select("doc").distinct().count()
+
+    kw = dict(k=16, bands=4, threshold=0.5)
+    stored = minhash_pairs_from_grams(log, **kw)
+    want = minhash_dedup_pairs(docs, "doc_id", "text", n=5, **kw)
+    key = ("doc_a", "doc_b", "jaccard")
+    got_pairs = sorted(tuple(r[c] for c in key) for r in stored.collect())
+    assert got_pairs
+    assert got_pairs == sorted(tuple(r[c] for c in key) for r in want.collect())
+    plan = formatted_plan(stored)
+    assert "collect_set(g" not in plan
+    assert "collect_set(" in plan

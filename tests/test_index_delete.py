@@ -119,7 +119,7 @@ def test_bm25_delete_batch_uses_negative_keyspace(spark, tmp_path):
 
 def test_gram_log_delete_compact_drop_and_replay(spark, tmp_path):
     from pipeline311_spark.ext.dedup import (
-        _gram_hash_table,
+        _row_gram_arrays,
         gram_log_append_batch,
         gram_log_compact,
         gram_log_delete_batch,
@@ -132,7 +132,7 @@ def test_gram_log_delete_compact_drop_and_replay(spark, tmp_path):
         gram_log_append_batch(d.filter(F.col("doc_id") % 2 == i), i, store)
     gram_log_delete_batch(d.filter(_is_del()).select("doc_id"), 0, store)
 
-    want = _snap(_gram_hash_table(d.filter(~_is_del()), "doc_id", "text", 5, distinct=True))
+    want = _snap(_row_gram_arrays(d.filter(~_is_del()), "doc_id", "text", 5))
     assert _snap(load_gram_log(spark, store)) == want
 
     gram_log_delete_batch(d.filter(_is_del()).select("doc_id"), 0, store)  # replay

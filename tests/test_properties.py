@@ -222,44 +222,6 @@ def test_minhash_pairs_sound_and_ident_complete(spark, base, picks):
     ),
     picks=st.lists(st.integers(min_value=0, max_value=4), min_size=2, max_size=12),
 )
-def test_simhash_pairs_sound_and_ident_complete(spark, base, picks):
-    """Same independent contract for SimHash: reported hamming must be
-    the true popcount of the XOR of the docs' signatures (read back
-    from the signature table), every identical-signature pair must be
-    present (hamming 0 — the collapse guarantee), no duplicates."""
-    from pipeline311_spark.ext.dedup import simhash, simhash_near_pairs
-
-    docs = [(i, base[p % len(base)]) for i, p in enumerate(picks)]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    sig = simhash(df, "doc_id", "text")
-    sigs = {r["doc"]: r["simhash"] for r in sig.collect()}
-    got = simhash_near_pairs(sig, max_hamming=3).collect()
-
-    seen = set()
-    for r in got:
-        a, b = r["doc_a"], r["doc_b"]
-        assert a < b and (a, b) not in seen
-        seen.add((a, b))
-        assert r["sig_a"] == sigs[a] and r["sig_b"] == sigs[b]
-        true_h = bin(sigs[a] ^ sigs[b]).count("1")
-        assert r["hamming"] == true_h and true_h <= 3
-
-    ids = sorted(sigs)
-    for i, a in enumerate(ids):
-        for b in ids[i + 1 :]:
-            if sigs[a] == sigs[b]:
-                assert (a, b) in seen, f"identical-signature pair {(a, b)} missing"
-
-
-@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    base=st.lists(
-        st.lists(st.sampled_from(_WORDS), min_size=3, max_size=10).map(" ".join),
-        min_size=1,
-        max_size=5,
-    ),
-    picks=st.lists(st.integers(min_value=0, max_value=4), min_size=2, max_size=12),
-)
 def test_ngram_jaccard_pairs_equal_brute_force(spark, base, picks):
     """The n-gram path is EXHAUSTIVE when every gram's doc frequency is
     under max_df (always true for these tiny corpora): any pair with

@@ -107,10 +107,13 @@ def test_rrf_fuse_rejects_duplicate_ranker_names(spark):
 
 def test_store_queries_do_not_leak_tmp_dirs(spark):
     """Same hygiene contract as the stored-gram queries (r7): each run
-    mints a uuid dir, checkpoints eagerly, and rmtree's in a finally."""
+    mints a uuid dir (plans/common.scratch_dir), materializes its
+    result, and removes the dir on the way out — the BM25 stores and
+    the sink/scan round trips (CSV, overwrite-reload, batched writer,
+    throttled sink, Derby)."""
     from pipeline311_spark.plans import REGISTRY
 
-    pat = os.path.join(tempfile.gettempdir(), "p311_bm25*")
+    pat = os.path.join(tempfile.gettempdir(), "p311_*")
     before = set(glob.glob(pat))
     for name in (
         "text_bm25_from_store",
@@ -119,6 +122,11 @@ def test_store_queries_do_not_leak_tmp_dirs(spark):
         "text_bm25_partitioned_store",
         "stream_bm25_index_maintain",
         "stream_bm25_compacted",
+        "k9_truncate_reload",
+        "s9_csv_roundtrip",
+        "k5_batched_writer_roundtrip",
+        "t5_t6_observe_throttled_sink",
+        "s4_jdbc_scan",
     ):
         rows = REGISTRY[name].fn(spark, SF).collect()
         assert rows, name

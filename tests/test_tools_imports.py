@@ -200,8 +200,6 @@ UNREACHED_OK = {
     "ext.multimodal.audio_pcm_window_features": "WAV window operator (tests/test_codecs.py)",
     "ext.multimodal.resize_png": "PNG resize operator (tests/test_codecs.py)",
     "ext.multimodal.frame_sample": "byte-window frame sampler (tests/test_ext.py)",
-    "ext.dedup.simhash": "SimHash signatures (tests/test_ext.py, tests/test_properties.py)",
-    "ext.dedup.simhash_near_pairs": "SimHash band join (tests/test_ext.py, tests/test_properties.py)",
     "ext.similarity.lsh_bucket": "LSH partition key of the layout tests (tests/test_layout.py)",
     "ext.similarity.ivf_assign": "IVF cell key of the layout tests (tests/test_layout.py)",
     "ext.similarity.embedding_near_dup_pairs": "embedding near-dup pairs (tests/test_cross_cap.py)",
