@@ -460,9 +460,10 @@ def probe_cells_py(
 ) -> dict[int, list[int]]:
     """Each query's ``nprobe`` nearest coarse cells, computed DRIVER
     side from the collected (metadata-scale) centroids — what makes the
-    codes read STATICALLY partition-pruned (the ``_term_bucket_py``
-    move, plans/retrieval2.py).  Order: (squared L2, cell id) — the
-    exact ROW_NUMBER order of the oracle twin."""
+    codes read STATICALLY partition-pruned: the probed cells are plan
+    literals, so their ``pcell`` predicate lands in the scan's
+    PartitionFilters.  Order: (squared L2, cell id) — the exact
+    ROW_NUMBER order of the oracle twin."""
     return {
         qid: [c for _, c in sorted((sqdist_py(qv, cv), c) for c, cv in cents.items())[:nprobe]]
         for qid, qv in qvecs.items()

@@ -12,10 +12,9 @@ Index contract (three tables, all parquet-friendly):
 * **postings** ``(term, doc_id, tf, dl)`` — one row per (doc, distinct
   term); ``tf`` is the occurrence count, ``dl`` the doc's token length
   DENORMALIZED onto every posting (the classic posting-with-doclen
-  layout) so scoring never joins a doc-length table.  At 100 TB the
-  postings are written partitioned/bucketed by ``term`` — a query
-  touches only its vocabulary's partitions (partition-pruned read),
-  never the corpus.
+  layout) so scoring never joins a doc-length table.  The postings
+  are clustered by ``term``: each file holds its own terms, sorted by
+  ``(term, doc_id)``, so a term's postings sit in one file.
 * **term_stats** ``(term, df)`` — document frequency per term;
   |vocabulary| rows.
 * **corpus_stats** ``(n_docs, sum_dl)`` — ONE row.  ``sum_dl`` (not
@@ -35,8 +34,10 @@ folds (:func:`bm25_index_delete_batch`: a doc-id tombstone log plus
 NEGATIVE stat deltas), and :func:`bm25_index_compact` folds the log to
 one base.  The folded index is REQUIRED to be row-identical to a
 one-batch build over the live corpus; the registry queries
-``text_bm25_incr_store`` and ``text_bm25_delete_merge`` prove it under
-the oracle gate (same DuckDB twin as the from-scratch query).
+``text_bm25_delete_merge`` (uncompacted fold) and
+``text_bm25_delete_maintain`` (two append batches, a delete, a
+compaction) prove it under the oracle gate (the DuckDB twin is a fresh
+build over the remaining docs).
 
 Scoring (:func:`bm25_score_topk`) keeps the r7 cross-engine
 discipline: per-term contributions are folded in SORTED TERM ORDER so
@@ -240,9 +241,9 @@ def bm25_topk(
 ) -> DataFrame:
     """Serve BM25 top-k from the STORED index: the corpus is never
     touched — the postings join against the broadcast query vocabulary
-    is the scan (partition-pruned when postings are stored partitioned
-    by term), term_stats restricts to the same vocabulary, and the
-    one-row corpus_stats rides along.  ``queries``: (query_id, term)."""
+    is the scan (every posting row is read), term_stats restricts to
+    the same vocabulary, and the one-row corpus_stats rides along.
+    ``queries``: (query_id, term)."""
     q = F.broadcast(queries.select("query_id", "term"))
     hits = index.postings.join(q, "term").select(
         "query_id", "term", "doc_id", "tf", "dl"

@@ -359,8 +359,8 @@ def semantic_dedup_keep(
     scan (measured 2.7 s → 1.5 s at sf0.1).  The cache is
     corpus-sized (id + vector + cluster); at a scale where that is
     unaffordable, write the assignment out partitioned by
-    ``centroid_id`` once (the IVF layout sim_lsh_partitioned_probe
-    demonstrates) and run the pruning from the store."""
+    ``centroid_id`` once (the cell-partitioned layout of the IVF-PQ
+    store, ext/ann_store.py) and run the pruning from the store."""
     assigned = ivf_assign(corpus, centroids, id_col, vec_col)  # id, v, nv, centroid_id
     wsz = Window.partitionBy("centroid_id")
     from pipeline311_spark.ext.cache import persist_tracked

@@ -50,6 +50,18 @@ _BM25_QUERIES: tuple[tuple[int, str], ...] = (
 )
 
 
+def _query_frame(spark):
+    from pipeline311_spark.ext.hashing import meta_df
+
+    return meta_df(spark, list(_BM25_QUERIES), "query_id long, term string")
+
+
+def _drop_score(df):
+    # ranks + integer stats only: the ln-based double is dropped before
+    # the oracle hash (the 1-ulp ln hazard in the module docstring)
+    return df.select("query_id", "rank", "doc_id", "tf_sum", "dl")
+
+
 def _bm25_sql(corpus_pred: str = "", corpus_sql: str | None = None) -> str:
     """``corpus_pred`` (e.g. ``" AND doc_id % 9 != 4"``) restricts the
     indexed corpus — the delete-maintenance twins are the FULL build
@@ -108,16 +120,12 @@ def bm25_scored_frame(spark, sf_dir):
     Query-local path: the corpus is tokenized per run but filtered to
     the query VOCABULARY before any shuffle — right for one-shot
     queries.  The serving path builds the stored index instead
-    (ext/retrieval.py; text_bm25_from_store) and shares this scoring
+    (ext/retrieval.py; text_bm25_delete_merge) and shares this scoring
     kernel (:func:`pipeline311_spark.ext.retrieval.bm25_score_topk`)."""
     from pipeline311_spark.ext.retrieval import bm25_score_topk
 
     d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    from pipeline311_spark.ext.hashing import meta_df
-
-    q = F.broadcast(
-        meta_df(spark, list(_BM25_QUERIES), "query_id long, term string")
-    )
+    q = F.broadcast(_query_frame(spark))
     # corpus pass 1: map-side partial aggregate, one stats row back
     stats = d.select(token_count("text").cast("long").alias("dl")).agg(
         F.count("*").alias("n_docs"),
@@ -466,7 +474,6 @@ def hybrid_rrf_serve(spark, sf_dir, out, index):
     from pipeline311_spark.ext.retrieval import bm25_topk, rrf_fuse
     from pipeline311_spark.plans.ann_store_q import _ANN_NPROBE
     from pipeline311_spark.plans.common import emb_table
-    from pipeline311_spark.plans.retrieval2 import _query_frame
 
     lex = (
         bm25_topk(index, _query_frame(spark), k=_BM25_TOPK)

@@ -58,7 +58,12 @@ from pipeline311_spark.plans.ann_store_q import (
 )
 from pipeline311_spark.ext.artifact import run_jobs
 from pipeline311_spark.plans.common import emb_table, materialize, scratch_dir, table
-from pipeline311_spark.plans.curation3 import _bm25_sql
+from pipeline311_spark.plans.curation3 import (
+    _BM25_TOPK,
+    _bm25_sql,
+    _drop_score,
+    _query_frame,
+)
 from pipeline311_spark.plans.extensions import (
     _MH_BANDS,
     _MH_K,
@@ -68,11 +73,6 @@ from pipeline311_spark.plans.extensions import (
     _minhash_pairs_sql,
 )
 from pipeline311_spark.plans.registry import register
-from pipeline311_spark.plans.retrieval2 import (
-    _BM25_TOPK,
-    _drop_score,
-    _query_frame,
-)
 
 # the delete batch: a deterministic modulus slice, the incremental-
 # split convention (oracle-free — the oracle sees only the remaining

@@ -104,7 +104,6 @@ from pipeline311_spark.plans import sinks_q  # noqa: E402,F401
 from pipeline311_spark.plans import curation  # noqa: E402,F401
 from pipeline311_spark.plans import curation3  # noqa: E402,F401
 from pipeline311_spark.plans import curation4  # noqa: E402,F401
-from pipeline311_spark.plans import retrieval2  # noqa: E402,F401
 from pipeline311_spark.plans import ann_store_q  # noqa: E402,F401
 from pipeline311_spark.plans import index_delete  # noqa: E402,F401
 from pipeline311_spark.plans import index_update  # noqa: E402,F401

@@ -9,9 +9,8 @@ DataFrame stays distributed, and batch size/retry policy are parameters
 (reference defaults preserved).
 
 **One parquet writer.**  Every table the package persists — the
-bronze MERGE, the first-batch and unpartitioned rewrites, the Z-order
-and compaction rewrites, bucketed tables, and every row, sum and
-tombstone log of the stored indexes — is written through
+bronze MERGE, the first-batch and unpartitioned rewrites, and every
+row, sum and tombstone log of the stored indexes — is written through
 :func:`parquet_writer`; no other module outside ``plans/`` reads
 ``DataFrame.write`` (``tests/test_tools_imports.py`` enforces it).
 

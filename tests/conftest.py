@@ -27,6 +27,28 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope="session", autouse=True)
+def private_tempdir(tmp_path_factory):
+    """Point the ``tempfile`` default at a fresh directory for the
+    session, so the store queries' scratch dirs
+    (``plans/common.scratch_dir`` reads ``tempfile.gettempdir()`` per
+    call) land where no other process writes, and the leak checks that
+    glob it see only this suite's dirs.  pytest's own ``tmp_path`` root
+    is fixed first, under the system temp dir as usual."""
+    import shutil
+    import tempfile
+
+    tmp_path_factory.getbasetemp()
+    prior = tempfile.tempdir
+    path = tempfile.mkdtemp(prefix="graft_tests_")
+    tempfile.tempdir = path
+    try:
+        yield path
+    finally:
+        tempfile.tempdir = prior
+        shutil.rmtree(path, ignore_errors=True)
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -95,8 +95,7 @@ def test_rebuild_replaces_appended_batches_and_tombstones(spark, tmp_path):
 def test_serve_read_is_partition_pruned_to_probed_cells(spark, tmp_path):
     """The scale contract of the store: the codes scan carries the
     probed cells as PartitionFilters (a directory-list read across
-    every batch dir of the log), never a post-scan data filter — the
-    text_bm25_partitioned_store assertion, vector edition."""
+    every batch dir of the log), never a post-scan data filter."""
     import io
     from contextlib import redirect_stdout
 

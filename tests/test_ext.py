@@ -149,6 +149,72 @@ def test_lsh_bucket_requires_dim_and_runs_no_job(spark, vecs):
     assert list(jobs) == []
 
 
+def test_lsh_partitioned_corpus_prunes_probe_reads(spark, sf_dir, tmp_path):
+    """The ANN scale layout: corpus written partitionBy(bucket) must
+    give partition-PRUNED probe reads — a literal bucket predicate
+    lands in the scan's PartitionFilters (directory pruning), never a
+    post-scan filter over all files.  Also guards the 'b' prefix:
+    bit-string partition values survive read-back verbatim."""
+    import io
+    from contextlib import redirect_stdout
+
+    from pipeline311_spark.ext.similarity import lsh_bucket
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    cb = (
+        lsh_bucket(e, "vec_id", "embedding", n_planes=4, seed=7, dim=64)
+        .withColumn("pkey", F.concat(F.lit("b"), F.col("bucket")))
+        .drop("bucket")
+    )
+    out = str(tmp_path / "annprune")
+    cb.write.mode("overwrite").partitionBy("pkey").parquet(out)
+    back = spark.read.parquet(out)
+
+    # partition values survive verbatim (leading zeros intact)
+    vals = {r["pkey"] for r in back.select("pkey").distinct().collect()}
+    assert vals == {("b" + r["bucket"]) for r in
+                    lsh_bucket(e, "vec_id", "embedding", n_planes=4, seed=7, dim=64)
+                    .select("bucket").distinct().collect()}
+    assert all(len(v) == 5 and v.startswith("b") for v in vals)
+
+    probe = back.filter(F.col("pkey") == sorted(vals)[0])
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        probe.explain("formatted")
+    plan = buf.getvalue()
+    assert "PartitionFilters: [isnotnull(pkey" in plan
+    # the predicate must NOT degrade to a data Filter node after the scan
+    assert "Filter (" not in plan
+
+
+def test_ivf_partitioned_cells_prune_probe_reads(spark, sf_dir, tmp_path):
+    """Same contract for the IVF store layout: cell assignment written
+    partitionBy(cell) must give partition-pruned probe reads."""
+    import io
+    from contextlib import redirect_stdout
+
+    from pipeline311_spark.ext.similarity import ivf_assign
+
+    e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
+        F.col("embedding").isNotNull()
+    )
+    cells = (
+        ivf_assign(e, e.filter(F.col("vec_id") < 8))
+        .withColumn("pkey", F.concat(F.lit("c"), F.col("centroid_id").cast("string")))
+        .drop("centroid_id")
+    )
+    out = str(tmp_path / "ivfprune")
+    cells.write.mode("overwrite").partitionBy("pkey").parquet(out)
+    back = spark.read.parquet(out)
+    probe = back.filter(F.col("pkey") == "c0")
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        probe.explain("formatted")
+    plan = buf.getvalue()
+    assert "PartitionFilters: [isnotnull(pkey" in plan
+    assert "Filter (" not in plan
+
+
 def test_textstats_basics(docs):
     # language ID in the staged form text_lang_id runs: lowered tokens
     # once, then the per-language scores, then the argmax

@@ -487,32 +487,6 @@ def test_chunk_token_windows_equals_python(spark, docs, size, stride):
     assert got == want
 
 
-@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    pts=st.lists(
-        st.tuples(st.integers(min_value=0, max_value=65535), st.integers(min_value=0, max_value=65535)),
-        min_size=1,
-        max_size=20,
-    )
-)
-def test_zorder_key_equals_python_interleave(spark, pts):
-    """Morton code ground truth: bit i of x at position 2i, bit i of y
-    at 2i+1, over the full 16-bit range."""
-    from pipeline311_spark.operators.layout import zorder_key
-
-    df = spark.createDataFrame(pts, "x long, y long")
-    got = [r["z"] for r in df.select(zorder_key(F.col("x"), F.col("y")).alias("z")).collect()]
-
-    def morton(x, y):
-        z = 0
-        for i in range(16):
-            z |= ((x >> i) & 1) << (2 * i)
-            z |= ((y >> i) & 1) << (2 * i + 1)
-        return z
-
-    assert got == [morton(x, y) for x, y in pts]
-
-
 @settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     events=st.lists(

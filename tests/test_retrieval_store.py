@@ -1,5 +1,6 @@
 """Stored BM25 index + N-ranker RRF (ext/retrieval.py,
-plans/retrieval2.py) — the properties the oracle twins can't see:
+plans/curation3.py, plans/index_delete.py) — the properties the oracle
+twins can't see:
 multi-batch log fold ≡ fresh one-batch build on the ARTIFACTS
 themselves (the oracle only compares final top-k), fixed-order fusion
 math, and temp-store hygiene."""
@@ -116,12 +117,10 @@ def test_store_queries_do_not_leak_tmp_dirs(spark):
     pat = os.path.join(tempfile.gettempdir(), "p311_*")
     before = set(glob.glob(pat))
     for name in (
-        "text_bm25_from_store",
-        "text_bm25_incr_store",
-        "retrieval_rrf_recency",
-        "text_bm25_partitioned_store",
-        "stream_bm25_index_maintain",
-        "stream_bm25_compacted",
+        "text_bm25_delete_merge",
+        "text_bm25_delete_maintain",
+        "stream_bm25_delete_maintain",
+        "retrieval_hybrid_rrf",
         "k9_truncate_reload",
         "s9_csv_roundtrip",
         "k5_batched_writer_roundtrip",
@@ -132,45 +131,6 @@ def test_store_queries_do_not_leak_tmp_dirs(spark):
         assert rows, name
     after = set(glob.glob(pat))
     assert after == before, f"leaked temp dirs: {sorted(after - before)}"
-
-
-def test_bm25_partitioned_postings_prune_vocabulary_reads(spark, tmp_path):
-    """The retrieval scale layout: postings written partitionBy(term
-    bucket) must give partition-PRUNED vocabulary reads — the driver-
-    computed bucket isin lands in the scan's PartitionFilters, never a
-    post-scan data filter.  Also pins the driver-side bucket twin to
-    the Column-side hash (same md5 path)."""
-    import io
-    from contextlib import redirect_stdout
-
-    from pyspark.sql import functions as F
-
-    from pipeline311_spark.ext.retrieval import bm25_batch_artifacts
-    from pipeline311_spark.plans.retrieval2 import (
-        _term_bucket_col,
-        _term_bucket_py,
-    )
-
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    postings, _, _, release = bm25_batch_artifacts(d, persist_postings=False)
-    postings = postings.withColumn("tb", _term_bucket_col())
-
-    # driver twin == Column twin on the real vocabulary
-    got = {r["term"]: r["tb"] for r in postings.select("term", "tb").distinct().collect()}
-    assert got and all(_term_bucket_py(t) == b for t, b in got.items())
-
-    out = str(tmp_path / "postings")
-    postings.write.mode("overwrite").partitionBy("tb").parquet(out)
-    release()
-    back = spark.read.schema(postings.schema).parquet(out)
-    probe = back.filter(F.col("tb").isin(sorted(set(got.values()))[:2]))
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        probe.explain("formatted")
-    plan = buf.getvalue()
-    # IN-list predicates carry no isnotnull prefix, unlike equality
-    assert "PartitionFilters: [tb" in plan and " IN (t" in plan
-    assert "Filter (" not in plan
 
 
 def test_bm25_batch_append_is_idempotent_under_replay(spark, tmp_path):

@@ -7,12 +7,14 @@ Spark session starts.
   launches the script.
 * The stored-index log lifecycle keeps one owner, ``ext/artifact.py``.
 * Persisted tables have one parquet writer, ``sinks/writers.py``.
-* Every top-level package def is reached from a judged surface.
+* Every top-level package def is reached from a judged surface, and
+  every allowlist entry is needed.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 import glob
 import importlib
 import importlib.util
@@ -192,6 +194,7 @@ UNREACHED_OK = {
     "plans.registry.DRIVER_SAMPLE": "oracle-sample size tests/test_entry.py checks the head against",
     "plans.curation3.bm25_scored_frame": "query-local BM25 reference for the stored index's serve",
     "ext.ann_store.load_ann_index": "reads a stored IVF-PQ index back for the store tests",
+    "ext.similarity.brute_force_topk": "exact top-k reference (tools/recall_probe.py, tests/test_ext.py)",
     "ext.cache.cache_scope": "releases the operators' persisted intermediates (README)",
     # library operators with no registry query, kept with the tests that
     # pin them; a query that needs one makes its entry redundant
@@ -200,8 +203,6 @@ UNREACHED_OK = {
     "ext.multimodal.audio_pcm_window_features": "WAV window operator (tests/test_codecs.py)",
     "ext.multimodal.resize_png": "PNG resize operator (tests/test_codecs.py)",
     "ext.multimodal.frame_sample": "byte-window frame sampler (tests/test_ext.py)",
-    "ext.similarity.lsh_bucket": "LSH partition key of the layout tests (tests/test_layout.py)",
-    "ext.similarity.ivf_assign": "IVF cell key of the layout tests (tests/test_layout.py)",
     "ext.similarity.embedding_near_dup_pairs": "embedding near-dup pairs (tests/test_cross_cap.py)",
     "ext.similarity.semantic_dedup_keep": "SemDeDup keeper (tests/test_ext.py, tests/test_properties.py)",
     "ext.sampling.running_sum_two_phase": "two-phase running sum (tests/test_properties.py)",
@@ -209,13 +210,8 @@ UNREACHED_OK = {
     "functions.geo.esri_polyline_geometry_json": "AGO polyline layer encoding (tests/test_functions_misc.py)",
     "functions.geo.esri_multipoint_geometry_json": "AGO multipoint layer encoding (tests/test_geo.py)",
     "functions.geo.reproject_identity": "refuses unsupported CRS pairs (tests/test_functions_misc.py)",
-    "functions.geo.reproject_4326_to_3857": "Web Mercator projection (tests/test_functions_misc.py)",
-    "functions.geo.reproject_4326_to_2272": "PA South projection (tests/test_functions_misc.py)",
-    "functions.geo.reproject_3857_to_4326": "Web Mercator inverse (tests/test_functions_misc.py)",
     "functions.timeparse.to_local_string_with_offset": "offset-stamped local time (tests/test_functions_misc.py)",
     "operators.bloom": "Bloom anti-join (tests/test_bloom.py)",
-    "operators.bucketing": "bucketed shuffle-free join (tests/test_bucketing.py)",
-    "operators.layout": "z-order layout and small-file compaction (tests/test_layout.py)",
     "streaming.stateful": "stateful streaming running totals (tests/test_stateful_streaming.py)",
 }
 
@@ -256,8 +252,8 @@ def _registered(stmt):
     )
 
 
-def _allowlisted(qual):
-    return any(qual == k or qual.startswith(k + ".") for k in UNREACHED_OK)
+def _covers(key, qual):
+    return qual == key or qual.startswith(key + ".")
 
 
 def _private(name):
@@ -276,37 +272,49 @@ def _private_imports(tree):
     }
 
 
-def unreached_defs():
-    """``module.name`` of every top-level package def outside the fixpoint
-    of name references from the roots: the registered queries, the
-    module-level code, every name ``perfbench/*.py`` and
-    ``__spark_entry__.py`` use, and the ``UNREACHED_OK`` defs.
-
-    A public name reaches every def of that name in the package; an
-    underscore name only the def in the referring module or the one it
-    imports it from.  Imports alone reach nothing (a re-export in an
-    ``__init__`` is not a use); tests and tools are not roots."""
-    defs = {}  # name -> [(module, qualified, stmt)]
-    imports = {}  # module -> {private name: source module}
-    todo, reached = [], set()
+@functools.cache
+def _def_index():
+    """The scan's inputs, parsed once: ``defs`` maps each top-level
+    name to its ``(module, qualified name, names it references,
+    registered)``, ``imports`` each module to its private imports, and
+    ``roots`` are the references of module-level code,
+    ``perfbench/*.py`` and ``__spark_entry__.py``."""
+    defs, imports, roots = {}, {}, []
     for mod, tree in _package_modules():
         imports[mod] = _private_imports(tree)
         for stmt in tree.body:
             names = _defined(stmt)
             if not names:
                 if not isinstance(stmt, (ast.Import, ast.ImportFrom)):
-                    todo += [(mod, n) for n in _names(stmt)]
+                    roots += [(mod, n) for n in _names(stmt)]
                 continue
+            refs = frozenset(_names(stmt))
             for n in names:
-                qual = f"{mod}.{n}"
-                defs.setdefault(n, []).append((mod, qual, stmt))
-                if _registered(stmt) or _allowlisted(qual):
-                    todo += [(mod, r) for r in _names(stmt)]
-                    reached.add(qual)
+                defs.setdefault(n, []).append((mod, f"{mod}.{n}", refs, _registered(stmt)))
     for path in glob.glob(os.path.join(REPO, "perfbench", "*.py")) + [
         os.path.join(REPO, "__spark_entry__.py")
     ]:
-        todo += [(None, n) for n in _names(_tree(path))]
+        roots += [(None, n) for n in _names(_tree(path))]
+    return defs, imports, roots
+
+
+def unreached_defs(allow=UNREACHED_OK):
+    """``module.name`` of every top-level package def outside the fixpoint
+    of name references from the roots: the registered queries, the
+    module-level code, every name ``perfbench/*.py`` and
+    ``__spark_entry__.py`` use, and the defs ``allow`` names.
+
+    A public name reaches every def of that name in the package; an
+    underscore name only the def in the referring module or the one it
+    imports it from.  Imports alone reach nothing (a re-export in an
+    ``__init__`` is not a use); tests and tools are not roots."""
+    defs, imports, roots = _def_index()
+    todo, reached = list(roots), set()
+    for ds in defs.values():
+        for mod, qual, refs, registered in ds:
+            if registered or any(_covers(k, qual) for k in allow):
+                todo += [(mod, r) for r in refs]
+                reached.add(qual)
     seen = set()
     while todo:
         ref = todo.pop()
@@ -314,26 +322,33 @@ def unreached_defs():
             continue
         seen.add(ref)
         src, name = ref
-        for mod, qual, stmt in defs.get(name, ()):
+        for mod, qual, refs, _ in defs.get(name, ()):
             if src is not None and _private(name) and mod not in (
                 src, imports[src].get(name)
             ):
                 continue
             if qual not in reached:
                 reached.add(qual)
-                todo += [(mod, r) for r in _names(stmt)]
-    return sorted(q for ds in defs.values() for _, q, _ in ds if q not in reached)
+                todo += [(mod, r) for r in refs]
+    return sorted(q for ds in defs.values() for _, q, _, _ in ds if q not in reached)
 
 
 def test_every_package_def_is_reached():
     """A def that no judged query, benchmark op or entry point reaches is
-    dead weight: delete it with the query that last called it."""
-    quals = {
-        f"{mod}.{n}" for mod, tree in _package_modules() for s in tree.body for n in _defined(s)
-    }
-    stale = sorted(
-        k for k in UNREACHED_OK if not any(q == k or q.startswith(k + ".") for q in quals)
-    )
+    dead weight: delete it with the query that last called it.  An
+    allowlist entry whose defs are reached without it keeps nothing
+    alive: drop it."""
+    quals = {q for ds in _def_index()[0].values() for _, q, _, _ in ds}
+    stale = sorted(k for k in UNREACHED_OK if not any(_covers(k, q) for q in quals))
     assert not stale, f"allowlist entries naming no package def: {stale}"
     dead = unreached_defs()
     assert not dead, dead
+    redundant = sorted(
+        k
+        for k in UNREACHED_OK
+        if not any(
+            _covers(k, q)
+            for q in unreached_defs({o: r for o, r in UNREACHED_OK.items() if o != k})
+        )
+    )
+    assert not redundant, f"allowlist entries whose defs are reached without them: {redundant}"

@@ -88,11 +88,11 @@ STATIC = {
     "ext:similarity": ("ext/similarity.py brute-force cosine / squared-L2 top-k; stored IVF-PQ serve (ext/ann_store.py)", "tests/test_ext.py, tests/test_ann_store.py"),
     "ext:text": ("ext/textstats.py (lang-id, quality, tokens, fingerprint)", "tests/test_ext.py"),
     "ext:multimodal": ("ext/multimodal.py (binary payloads, metadata manifest)", "tests/test_ext.py"),
-    "ext:layout": ("cell-partitioned IVF-PQ codes and term-bucketed BM25 postings: partition-pruned serve reads (ext/ann_store.py, plans/retrieval2.py)", "tests/test_ann_store.py, tests/test_retrieval_store.py"),
+    "ext:layout": ("cell-partitioned IVF-PQ codes: partition-pruned serve reads (ext/ann_store.py); term-clustered BM25 postings (ext/artifact.py RowLog.cluster_by)", "tests/test_ann_store.py, tests/test_ext.py (LSH/IVF partition pruning), tests/test_retrieval_store.py (clustered postings)"),
     "ext:graph": ("ext/graph.py (iterative min-label connected components; dup clusters)", "tests/test_properties.py (vs union-find)"),
     "ext:versioning": ("plans/curation4.py (corpus snapshot diff)", "tests/test_curation4.py"),
     "ext:quantize": ("ext/ann_store.py residual PQ codes + ADC serve", "tests/test_ann_store.py"),
-    "ext:retrieval": ("stored BM25 index: term-clustered postings (sorted by term, doc_id)/df/stats artifacts, incremental merge, vocabulary-pruned serve (ext/retrieval.py, plans/retrieval2.py); dense top-k; N-ranker RRF fusion (rrf_fuse)", "tests/test_retrieval_store.py (incl. the clustered layout), tests/test_curation3.py"),
+    "ext:retrieval": ("stored BM25 index: term-clustered postings (sorted by term, doc_id)/df/stats artifacts, incremental merge, vocabulary-join serve (ext/retrieval.py, plans/curation3.py, plans/index_delete.py, plans/index_update.py); dense top-k; N-ranker RRF fusion (rrf_fuse)", "tests/test_retrieval_store.py (incl. the clustered layout), tests/test_curation3.py"),
     "ext:export": ("deterministic hash-shard assignment in the flagship pipeline (plans/curation3.py); snapshot diff (plans/curation4.py)", "oracle gate (curation_full_pipeline, corpus_version_diff)"),
     "ext:sampling": ("ext/sampling.py hash buckets (deterministic sample)", "oracle gate (curation_full_pipeline)"),
     "ext:ann-log": ("ANN codes as a batch_id delta log: foreachBatch append, compaction, pruned log serve (ext/ann_store.py)", "tests/test_ann_store.py"),
