@@ -673,9 +673,8 @@ def ann_codes_compact(spark: SparkSession, out: str, m: int = ANN_M) -> None:
 # ---------------------------------------------------------------------------
 # Trained PQ codebook: k-means (Lloyd) per subspace with EXACT decimal
 # means.  The seed-centroid convention above keeps the DuckDB twins
-# bit-exact; training breaks SQL-expressibility, so its consumer query
-# is rows-only-gated and carries its own measured recall AUDIT instead
-# (the SCALE.md "trained centroids need the audit-based gate" note).
+# bit-exact; multi-step training is not SQL-expressible, so the oracle
+# gates one exact-decimal Lloyd step (sim_ann_cells_train_step).
 # Determinism across runs/parallelism is still required
 # (tools/check_determinism.py): a naive float mean depends on
 # aggregation order, so per-dim sums are folded in DECIMAL (exact,

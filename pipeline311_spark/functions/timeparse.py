@@ -46,19 +46,13 @@ def lenient_timestamp(col: Column | str) -> Column:
     return F.coalesce(*[F.try_to_timestamp(c, F.lit(fmt)) for fmt in _FORMATS])
 
 
-def to_local_string(col: Column | str, tz: str = PIPELINE_TZ, fmt: str = "yyyy-MM-dd HH:mm:ss XXX") -> Column:
-    """Format an instant as local wall time with offset — the engine twin
-    of ``to_char(..., 'YYYY-MM-DD HH24:MI:SS TZH:TZM')`` (SURVEY P16;
-    sync-db2.py:58, sync-db2-ago.py:480-485)."""
+def to_local_string(col: Column | str, tz: str = PIPELINE_TZ) -> Column:
+    """Format an instant as local wall time in ``tz``,
+    'yyyy-MM-dd HH:mm:ss', without the zone offset (SURVEY P16;
+    sync-db2.py:58, sync-db2-ago.py:480-485).  The two instants of the
+    fall-back hour read the same; :func:`to_local_string_with_offset`
+    is the form that appends the offset."""
     c = F.col(col) if isinstance(col, str) else col
-    # date_format renders in the session tz; convert_timezone gives the
-    # wall-clock in tz while the trailing offset must come from tz too —
-    # do it in one step by temporarily shifting: format the shifted naive
-    # time, then append the zone offset computed per-row is not builtin,
-    # so we format in the session tz only when session tz == tz.  The
-    # robust route: produce ISO string in target zone via date_format
-    # over timestamp converted with from_utc_timestamp (wall clock), and
-    # note DST offset is implicit in the wall clock.
     return F.date_format(F.from_utc_timestamp(c, tz), "yyyy-MM-dd HH:mm:ss")
 
 

@@ -247,19 +247,13 @@ def q_stream_ann_index_maintain(spark, sf_dir):
         ).transform(materialize)  # materialize before the cleanup
 
 
-# One ORACLE-EXACT Lloyd step of the coarse-cell trainer (VERDICT r10
-# item 1): the driver's set-cover sample must carry the ext:ann-train
-# tag, and until round 11 its only carrier was the rows-only audit
-# below — so every CORRECTNESS_r{N} recorded one structural
-# `err: no_oracle`.  A SINGLE training step IS SQL-re-derivable: seeds
-# are the n_cells lowest-id vectors, every vector joins its nearest seed
-# (exact double sqdist, ties to the lowest cell — the shared
-# pq_code_col argmin), and the new centroid is the exact-decimal mean
-# (round-6 → decimal(28,6) sum → ONE double division; see
-# pq_train_codebook's ``exact_decimals`` mode).  Registered BEFORE the
-# audit with the same covers set, so the greedy cover always picks
-# this oracled carrier and the rows-only audit stays registered for
-# measured-recall depth without riding the driver sample.
+# One ORACLE-EXACT Lloyd step of the coarse-cell trainer: the driver's
+# set-cover sample must carry the ext:ann-train tag.  A SINGLE training
+# step IS SQL-re-derivable: seeds are the n_cells lowest-id vectors,
+# every vector joins its nearest seed (exact double sqdist, ties to the
+# lowest cell — the shared pq_code_col argmin), and the new centroid is
+# the exact-decimal mean (round-6 → decimal(28,6) sum → ONE double
+# division; see pq_train_codebook's ``exact_decimals`` mode).
 _TRAIN_STEP_DECIMALS = 6
 
 
@@ -297,10 +291,8 @@ FROM seeddims sd LEFT JOIN means m ON m.cell = sd.cell AND m.dim = sd.dim
 @register(
     "sim_ann_cells_train_step",
     _cells_train_step_sql(),
-    # the SAME covers set as the audit below + earlier registration:
-    # at every greedy-cover state this query's new-tag count equals the
-    # audit's, and ties break to registration order — so the oracled
-    # carrier is ALWAYS the one sampled (tests/test_entry.py pins it)
+    # the only ext:ann-train carrier, so the driver sample always holds
+    # it (tests/test_entry.py pins it)
     covers=("ext:similarity", "ext:quantize", "ext:ann-train", "A-class"),
 )
 def q_ann_cells_train_step(spark, sf_dir):

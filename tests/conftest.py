@@ -81,8 +81,7 @@ def sweep_map(fn, items, workers: int | None = None):
     is safe for registry queries: every tmp store is uuid-named, every
     memory-sink queryName is uuid-unique, and the only runtime confs
     query paths set are fixed idempotent values (prep_session pins the
-    same conf every call; the state-store provider toggle is used by
-    tests only, never inside a registry query).
+    same conf every call).
 
     ``fn`` should CATCH per-item failures and return them as data when
     the test wants the full failure list (the sweeps' reporting

@@ -84,8 +84,6 @@ def test_oracle_types_canon_safe(sf_dir):
         )
     offenders = {}
     for name, spec in sorted(REGISTRY.items()):
-        if spec.oracle is None:
-            continue
         rel = con.sql(spec.oracle)  # lazy: binds + types, does not execute
         bad = [
             (c, str(t))

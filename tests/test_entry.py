@@ -31,11 +31,8 @@ def test_registry_contract(spark):
     qs = mod.queries()
     oracles = mod.oracle_sql()
     assert len(qs) >= 40
-    # every oracle key has a query
-    assert set(oracles) <= set(qs)
-    # oracle coverage: every registered query carries an oracle
-    missing = set(qs) - set(oracles)
-    assert not missing, missing
+    # one oracle per query, keyed alike
+    assert set(oracles) == set(qs), set(qs) ^ set(oracles)
 
 
 @pytest.mark.parametrize("name", ["q01_pricing_summary", "k3_upsert_merge", "dedup_exact_groups"])
@@ -66,7 +63,7 @@ def test_driver_sample_spans_every_covers_tag():
     from pipeline311_spark import plans
 
     assert list(plans.queries()) == order
-    # every driver-sampled query must be HASH-checkable
-    unoracled_head = [n for n in head if REGISTRY[n].oracle is None]
-    assert unoracled_head == [], f"rows-only queries in driver sample: {unoracled_head}"
+    # every registered query must be HASH-checkable
+    unoracled = [n for n, spec in REGISTRY.items() if not spec.oracle]
+    assert unoracled == [], f"queries without an oracle: {unoracled}"
     assert "sim_ann_cells_train_step" in head

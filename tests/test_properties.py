@@ -776,117 +776,3 @@ def test_merge_partitioned_hostile_partition_types(spark, tmp_path_factory, batc
     expect = {dirname(cv) for _, cv in state.values()}
     have = {d for d in os.listdir(path) if d.startswith("pc=")}
     assert have == expect, f"partition dirs {have} != surviving {expect}"
-
-
-@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=10**6),  # unique id
-            st.integers(min_value=0, max_value=2),      # source
-            st.integers(min_value=0, max_value=40),     # tokens
-        ),
-        min_size=1,
-        max_size=30,
-        unique_by=lambda r: r[0],
-    ),
-    n_buckets=st.sampled_from([1, 3, 16]),
-)
-def test_running_sum_two_phase_equals_python_cumsum(spark, rows, n_buckets):
-    """The id-ordered two-phase running sum (the flagship packing's
-    dominant-source escape hatch) equals the brute-force per-source
-    cumulative sum in id order — including sparse/clustered id ranges
-    that leave most range buckets empty."""
-    from pipeline311_spark.ext.sampling import running_sum_two_phase
-
-    df = spark.createDataFrame(rows, "doc_id long, src int, n_tok long")
-    got = {
-        r["doc_id"]: r["cum"]
-        for r in running_sum_two_phase(
-            df, "src", "doc_id", "n_tok", out_col="cum", n_buckets=n_buckets
-        ).collect()
-    }
-    want = {}
-    by_src = {}
-    for i, s, n in rows:
-        by_src.setdefault(s, []).append((i, n))
-    for members in by_src.values():
-        members.sort()
-        cum = 0
-        for i, n in members:
-            cum += n
-            want[i] = cum
-    assert got == want
-
-
-def test_running_sum_two_phase_empty_frame(spark):
-    from pipeline311_spark.ext.sampling import running_sum_two_phase
-
-    df = spark.createDataFrame([], "doc_id long, src int, n_tok long")
-    out = running_sum_two_phase(df, "src", "doc_id", "n_tok", out_col="cum")
-    assert out.columns == ["doc_id", "src", "n_tok", "cum"]
-    assert out.count() == 0
-
-
-def test_running_sum_two_phase_null_ids_match_window_nulls_first(spark):
-    """NULL order ids must flow like the window twin (NULLS FIRST),
-    not silently vanish through a NULL-keyed equi-join (review r8)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from pipeline311_spark.ext.sampling import running_sum_two_phase
-
-    rows = [(None, 0, 5), (10, 0, 3), (20, 0, 7), (None, 1, 2), (4, 1, 1)]
-    df = spark.createDataFrame(rows, "doc_id long, src int, n_tok long")
-    got = {
-        (r["src"], r["doc_id"]): r["cum"]
-        for r in running_sum_two_phase(
-            df, "src", "doc_id", "n_tok", out_col="cum", n_buckets=4
-        ).collect()
-    }
-    w = (
-        Window.partitionBy("src")
-        .orderBy("doc_id")  # Spark default: NULLS FIRST ascending
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    want = {
-        (r["src"], r["doc_id"]): r["cum"]
-        for r in df.withColumn("cum", F.sum("n_tok").over(w)).collect()
-    }
-    assert got == want and len(got) == len(rows)
-
-
-def test_running_sum_two_phase_null_partition_matches_window(spark):
-    """A NULL partition VALUE is its own partition in the window twin;
-    the two-phase offsets join must be null-safe on part_col or those
-    rows silently vanish from both phases (ADVICE r8)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from pipeline311_spark.ext.sampling import running_sum_two_phase
-
-    rows = [
-        (1, None, 5),
-        (2, None, 3),
-        (3, "a", 7),
-        (4, "a", 2),
-        (5, None, 1),
-        (6, "b", 4),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, src string, n_tok long")
-    got = {
-        r["doc_id"]: r["cum"]
-        for r in running_sum_two_phase(
-            df, "src", "doc_id", "n_tok", out_col="cum", n_buckets=3
-        ).collect()
-    }
-    w = (
-        Window.partitionBy("src")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    want = {
-        r["doc_id"]: r["cum"]
-        for r in df.withColumn("cum", F.sum("n_tok").over(w)).collect()
-    }
-    assert got == want and len(got) == len(rows)

