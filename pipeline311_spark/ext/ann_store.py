@@ -673,8 +673,8 @@ def ann_codes_compact(spark: SparkSession, out: str, m: int = ANN_M) -> None:
 # ---------------------------------------------------------------------------
 # Trained PQ codebook: k-means (Lloyd) per subspace with EXACT decimal
 # means.  The seed-centroid convention above keeps the DuckDB twins
-# bit-exact; multi-step training is not SQL-expressible, so the oracle
-# gates one exact-decimal Lloyd step (sim_ann_cells_train_step).
+# bit-exact; training is one Lloyd step, which the oracle gates in its
+# exact-decimal form (sim_ann_cells_train_step).
 # Determinism across runs/parallelism is still required
 # (tools/check_determinism.py): a naive float mean depends on
 # aggregation order, so per-dim sums are folded in DECIMAL (exact,
@@ -687,20 +687,18 @@ def ann_cells_train(
     v: DataFrame,
     n_cells: int,
     dim: int,
-    iters: int = 2,
     exact_decimals: int | None = None,
 ) -> dict[int, list[float]]:
-    """Lloyd-train the IVF coarse cells (VERDICT r9 item 4: seed cells
-    leave cell balance untrained — a hot cell defeats nprobe pruning).
-    This IS :func:`pq_train_codebook` with ONE subspace spanning the
-    full dimension: same lowest-id seed convention, same exact-decimal
-    means (cross-run deterministic), same single-pass-per-iteration
-    shape.  Multi-iteration training breaks SQL-expressibility — but a
-    SINGLE Lloyd step in ``exact_decimals`` mode IS oracle-exact, and the
+    """One Lloyd step of the IVF coarse cells (VERDICT r9 item 4: seed
+    cells leave cell balance untrained — a hot cell defeats nprobe
+    pruning).  This IS :func:`pq_train_codebook` with ONE subspace
+    spanning the full dimension: same lowest-id seed convention, same
+    exact-decimal means (cross-run deterministic), same single corpus
+    pass.  One step in ``exact_decimals`` mode is oracle-exact, and the
     registry gates it bit-for-bit against DuckDB
     (sim_ann_cells_train_step, VERDICT r10 item 1)."""
     return pq_train_codebook(
-        v, pq_k=n_cells, m=1, subdim=dim, iters=iters, exact_decimals=exact_decimals
+        v, pq_k=n_cells, m=1, subdim=dim, exact_decimals=exact_decimals
     )
 
 
@@ -709,17 +707,14 @@ def pq_train_codebook(
     pq_k: int,
     m: int = ANN_M,
     subdim: int = ANN_SUBDIM,
-    iters: int = 2,
     exact_decimals: int | None = None,
 ) -> dict[int, list[float]]:
-    """Lloyd-train the PQ codebook from the ``pq_k``-lowest-id seeds.
-    Per iteration: one corpus pass assigns every subvector to its
-    nearest entry (the shared :func:`pq_code_col` argmin), one
-    aggregate computes exact per-(subspace, entry, dim) decimal means
-    (m·k·subdim rows — metadata-scale, ONE collect per iteration), and
-    empty entries keep their previous value.  Scale: iterations are
-    O(corpus) passes with a metadata-sized shuffle, the standard
-    distributed-k-means shape.
+    """One Lloyd step of the PQ codebook from the ``pq_k``-lowest-id
+    seeds: one corpus pass assigns every subvector to its nearest seed
+    (the shared :func:`pq_code_col` argmin), one aggregate computes
+    exact per-(subspace, entry, dim) decimal means (m·k·subdim rows —
+    metadata-scale, ONE collect), and empty entries keep their seed
+    value.  Scale: one O(corpus) pass with a metadata-sized shuffle.
 
     Seeds are the ``pq_k`` LOWEST ids via orderBy+limit (review r10:
     the old ``vec_id < pq_k`` filter silently trained nothing on a
@@ -734,70 +729,67 @@ def pq_train_codebook(
     disagree in the 15th place.  With ``exact_decimals=d`` set, values
     are rounded to ``d`` decimals FIRST and summed as decimal(28,d) —
     both engines sum identical exact decimals and the only double op is
-    one division of bit-identical operands — so a one-step training
-    query can carry a bit-exact DuckDB twin (sim_ann_cells_train_step)."""
+    one division of bit-identical operands — so the step can carry a
+    bit-exact DuckDB twin (sim_ann_cells_train_step)."""
     cbook = {
         r["vec_id"]: [float(x) for x in r["v"]]
         for r in v.orderBy("vec_id").limit(pq_k).collect()
     }
     if not cbook:
         return cbook
-    for _ in range(iters):
-        # ONE corpus pass per iteration (review r9: a union of m
-        # per-subspace branches re-scanned and re-encoded the corpus m
-        # times — Spark does not share a scan across union branches):
-        # all m (j, cid, subvector) assignments ride one struct array,
-        # exploded map-side
-        coded = v.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("j"),
-                            pq_code_col(j, cbook, subdim).alias("cid"),
-                            F.slice("v", j * subdim + 1, subdim).alias("sub"),
-                        )
-                        for j in range(m)
-                    ]
-                )
-            ).alias("x")
-        )
-        parts = coded.select(
-            F.col("x.j").alias("j"),
-            F.col("x.cid").alias("cid"),
-            F.posexplode("x.sub").alias("d", "val"),
-        )
-        if exact_decimals is None:
-            mean_expr = (
-                F.sum(F.col("val").cast("decimal(38,15)")) / F.count("*")
-            ).cast("double")
-        else:
-            # oracle-exact fold: round → exact decimal sum → ONE double
-            # division (cast the sum to double BEFORE dividing — a
-            # decimal division has engine-specific result scale,
-            # whereas double/int division of identical operands is one
-            # unique IEEE result on both engines)
-            mean_expr = (
-                F.sum(
-                    F.round("val", exact_decimals).cast(
-                        f"decimal(28,{exact_decimals})"
+    # ONE corpus pass (review r9: a union of m per-subspace branches
+    # re-scanned and re-encoded the corpus m times — Spark does not
+    # share a scan across union branches): all m (j, cid, subvector)
+    # assignments ride one struct array, exploded map-side
+    coded = v.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(j).alias("j"),
+                        pq_code_col(j, cbook, subdim).alias("cid"),
+                        F.slice("v", j * subdim + 1, subdim).alias("sub"),
                     )
-                ).cast("double")
-                / F.count("*")
-            ).cast("double")
-        stats = parts.groupBy("j", "cid", "d").agg(mean_expr.alias("mean"))
-        new_cbook = {c: list(vec) for c, vec in cbook.items()}
-        for r in stats.collect():  # m*k*subdim rows — metadata-scale
-            if r["mean"] is None:
-                # a component outside the decimal type's range or an
-                # overflowed sum casts to NULL and would otherwise be
-                # silently dropped from the mean (ADVICE r9)
-                bound = "1e23" if exact_decimals is None else f"1e{28 - exact_decimals}"
-                raise ValueError(
-                    "pq_train_codebook: exact-decimal mean overflowed for "
-                    f"(subspace={r['j']}, centroid={r['cid']}, dim={r['d']}) "
-                    f"— embedding components must satisfy |v| < {bound}"
+                    for j in range(m)
+                ]
+            )
+        ).alias("x")
+    )
+    parts = coded.select(
+        F.col("x.j").alias("j"),
+        F.col("x.cid").alias("cid"),
+        F.posexplode("x.sub").alias("d", "val"),
+    )
+    if exact_decimals is None:
+        mean_expr = (
+            F.sum(F.col("val").cast("decimal(38,15)")) / F.count("*")
+        ).cast("double")
+    else:
+        # oracle-exact fold: round → exact decimal sum → ONE double
+        # division (cast the sum to double BEFORE dividing — a
+        # decimal division has engine-specific result scale,
+        # whereas double/int division of identical operands is one
+        # unique IEEE result on both engines)
+        mean_expr = (
+            F.sum(
+                F.round("val", exact_decimals).cast(
+                    f"decimal(28,{exact_decimals})"
                 )
-            new_cbook[r["cid"]][r["j"] * subdim + r["d"]] = float(r["mean"])
-        cbook = new_cbook
-    return cbook
+            ).cast("double")
+            / F.count("*")
+        ).cast("double")
+    stats = parts.groupBy("j", "cid", "d").agg(mean_expr.alias("mean"))
+    new_cbook = {c: list(vec) for c, vec in cbook.items()}
+    for r in stats.collect():  # m*k*subdim rows — metadata-scale
+        if r["mean"] is None:
+            # a component outside the decimal type's range or an
+            # overflowed sum casts to NULL and would otherwise be
+            # silently dropped from the mean (ADVICE r9)
+            bound = "1e23" if exact_decimals is None else f"1e{28 - exact_decimals}"
+            raise ValueError(
+                "pq_train_codebook: exact-decimal mean overflowed for "
+                f"(subspace={r['j']}, centroid={r['cid']}, dim={r['d']}) "
+                f"— embedding components must satisfy |v| < {bound}"
+            )
+        new_cbook[r["cid"]][r["j"] * subdim + r["d"]] = float(r["mean"])
+    return new_cbook

@@ -3,7 +3,7 @@ stored form of the BM25 index (ext/retrieval.py), the MinHash gram
 table (ext/dedup.py) and the IVF-PQ codes (ext/ann_store.py).  This
 module is the only code that knows how such a log is appended,
 deleted, loaded and compacted; a family describes its log as a
-:class:`RowLog` (and BM25 its stat sums as :class:`SumLog`\\ s) and
+:class:`RowLog` (and BM25 its corpus sums as a :class:`SumLog`) and
 calls :func:`admit_append` / :func:`append_rows`, :func:`delete_rows`,
 :func:`load_rows` / :func:`load_sum` and :func:`compact_log`.
 
@@ -95,11 +95,12 @@ narrows the blast radius if it is violated, by keeping deleted ids
 deleted.  Tombstone volume is |deleted ids|, metadata-scale next to
 the log it guards.
 
-**BM25 extension — sum-logs** (:class:`SumLog`): ``term_stats`` and
-``corpus_stats`` are per-batch stat DELTAS beside the postings row log,
-folded by summation.  They ride the same append intent and the same
-compaction (recovered, recorded, folded and swapped with the row log);
-a delete writes NEGATIVE deltas into them at a caller-chosen key
+**BM25 extension — a sum-log** (:class:`SumLog`): ``corpus_stats``
+holds per-batch ``(n_docs, sum_dl)`` DELTAS beside the postings row
+log, folded by summation (per-term df is not stored: it is the count
+of a term's live postings).  It rides the same append intent and the
+same compaction (recovered, recorded, folded and swapped with the row
+log); a delete writes a NEGATIVE delta into it at a caller-chosen key
 (``sums_batch_id``).  BM25 alone guards that key against a post-fold
 replay (ext/retrieval.py), since only stat deltas can double-subtract.
 """
@@ -452,7 +453,7 @@ def assert_fresh_ids(batch: DataFrame, path: str, id_field: str) -> None:
     """Opt-in guard for the ids-never-reused contract: re-appending a
     previously deleted id is silently inconsistent — the retained
     tombstone masks the row forever, and for BM25 the append's positive
-    stat deltas still count it, skewing n_docs/avgdl/idf with no error.
+    stat deltas still count it, skewing n_docs/avgdl with no error.
     One semi-join of the batch's ids against the tombstone log at
     ``path``; raises on the first hit with examples.  It costs one
     batch-side job, so appenders take it as the ``validate_fresh_ids``

@@ -7,7 +7,7 @@ built once, stored, and incrementally maintained, exactly like the
 stored gram log the MinHash family uses (ext/dedup.py,
 ``minhash_pairs_from_grams``).
 
-Index contract (three tables, all parquet-friendly):
+Index contract (two tables, both parquet):
 
 * **postings** ``(term, doc_id, tf, dl)`` — one row per (doc, distinct
   term); ``tf`` is the occurrence count, ``dl`` the doc's token length
@@ -15,29 +15,33 @@ Index contract (three tables, all parquet-friendly):
   layout) so scoring never joins a doc-length table.  The postings
   are clustered by ``term``: each file holds its own terms, sorted by
   ``(term, doc_id)``, so a term's postings sit in one file.
-* **term_stats** ``(term, df)`` — document frequency per term;
-  |vocabulary| rows.
 * **corpus_stats** ``(n_docs, sum_dl)`` — ONE row.  ``sum_dl`` (not
   avgdl) is stored because sums are combinable: an incremental batch
-  merges by addition, no re-scan.
+  merges by addition, no re-scan.  It cannot be derived from the
+  postings: zero-token docs count toward ``n_docs`` and leave none.
+
+Document frequency is not stored: a term's ``df`` is the number of its
+live postings, so the serve counts it from the postings the query
+matched (the DuckDB twin's ``df_t`` counts it the same way,
+plans/curation3._bm25_sql).
 
 Incremental maintenance: the ONE stored form is an append-only log
 partitioned by batch id (the ext/artifact.py lifecycle: postings are
-its tombstoned row log, the two stats its sum-logs) — a build is
+its tombstoned row log, ``corpus_stats`` its sum-log) — a build is
 batch 0 (:func:`bm25_index_append_batch`), and every later batch
 writes only its own deltas, built from the batch alone.
-:func:`load_bm25_index` folds the log: postings by union, ``term_stats``
-by per-term ``df`` addition and ``corpus_stats`` by element addition —
-valid because batch doc ids are disjoint (the same disjointness
-contract as the gram log's).  Deletes ride the same
-folds (:func:`bm25_index_delete_batch`: a doc-id tombstone log plus
-NEGATIVE stat deltas), and :func:`bm25_index_compact` folds the log to
-one base.  The folded index is REQUIRED to be row-identical to a
-one-batch build over the live corpus; the registry queries
-``text_bm25_delete_merge`` (uncompacted fold) and
-``text_bm25_delete_maintain`` (two append batches, a delete, a
-compaction) prove it under the oracle gate (the DuckDB twin is a fresh
-build over the remaining docs).
+:func:`load_bm25_index` folds the log into a serving snapshot:
+postings by union minus tombstones, ``corpus_stats`` by element
+addition into two driver ints — valid because batch doc ids are
+disjoint (the same disjointness contract as the gram log's).  Deletes
+ride the same folds (:func:`bm25_index_delete_batch`: a doc-id
+tombstone log plus a NEGATIVE ``corpus_stats`` delta), and
+:func:`bm25_index_compact` folds the log to one base.  The folded
+index is REQUIRED to be row-identical to a one-batch build over the
+live corpus; the registry queries ``text_bm25_delete_merge``
+(uncompacted fold) and ``text_bm25_delete_maintain`` (two append
+batches, a delete, a compaction) prove it under the oracle gate (the
+DuckDB twin is a fresh build over the remaining docs).
 
 Scoring (:func:`bm25_score_topk`) keeps the r7 cross-engine
 discipline: per-term contributions are folded in SORTED TERM ORDER so
@@ -79,6 +83,7 @@ from pipeline311_spark.ext.artifact import (
     tombstone_dir,
     tombstone_schema,
 )
+from pipeline311_spark.ext.hashing import meta_df
 from pipeline311_spark.ext.textstats import tokens
 
 BM25_K1 = 1.2
@@ -86,12 +91,12 @@ BM25_B = 0.75
 
 
 class Bm25Index(NamedTuple):
-    """The stored-index triple.  Each member is a DataFrame view of the
-    folded artifact log (:func:`load_bm25_index`)."""
+    """A serving snapshot of the stored index (:func:`load_bm25_index`):
+    the live postings view and the folded corpus sums as driver ints."""
 
     postings: DataFrame  # term, doc_id, tf, dl
-    term_stats: DataFrame  # term, df
-    corpus_stats: DataFrame  # n_docs, sum_dl
+    n_docs: int
+    sum_dl: int
 
 
 def _bm25_token_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -129,86 +134,82 @@ def _corpus_stats_from_base(base: DataFrame) -> DataFrame:
 
 
 def bm25_batch_artifacts(
-    batch_df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    persist_postings: bool = True,
+    batch_df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ):
-    """The index-delta triple for ONE batch from ONE tokenize pass
-    (guide §1.2: the per-artifact builders each re-tokenized the batch,
-    so the append/delete ``foreachBatch`` bodies paid three corpus
-    passes per micro-batch — tokenize is the dominant per-batch cost at
-    scale).  The token base (and, when ``persist_postings``, the
-    postings) are persisted MEMORY_AND_DISK — batch-bounded, spillable;
-    the caller MUST materialize every frame it uses before calling the
-    returned ``release()``.
+    """The index deltas for ONE batch from ONE tokenize pass (guide
+    §1.2: tokenize is the dominant per-batch cost at scale).  The token
+    base feeds both deltas, so it is persisted MEMORY_AND_DISK —
+    batch-bounded, spillable; the caller MUST materialize every frame
+    it uses before calling the returned ``release()``.
 
-    Returns ``(postings, term_stats, corpus_stats, release)``.
-    ``corpus_stats`` (n_docs, sum_dl) comes from the base, not the
-    postings: zero-token docs count toward n_docs but produce no
-    posting rows.  Stored as SUMS so batches fold by addition.
+    Returns ``(postings, corpus_stats, release)``.  ``corpus_stats``
+    (n_docs, sum_dl) comes from the base, not the postings: zero-token
+    docs count toward n_docs but produce no posting rows.  Stored as
+    SUMS so batches fold by addition.
     """
     from pyspark.storagelevel import StorageLevel
 
     base = _bm25_token_base(batch_df, id_col, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    postings = _postings_from_base(base)
-    if persist_postings:
-        postings = postings.persist(StorageLevel.MEMORY_AND_DISK)
-
-    def release() -> None:
-        if persist_postings:
-            postings.unpersist(False)
-        base.unpersist(False)
-
-    return postings, bm25_term_stats(postings), _corpus_stats_from_base(base), release
-
-
-def bm25_term_stats(postings: DataFrame) -> DataFrame:
-    """(term, df) from postings — postings are per-(doc, term) distinct
-    by construction, so ``df`` is a plain map-side-combined count."""
-    return postings.groupBy("term").agg(F.count("*").cast("long").alias("df"))
+    return (
+        _postings_from_base(base),
+        _corpus_stats_from_base(base),
+        lambda: base.unpersist(False),
+    )
 
 
 def bm25_score_topk(
     hits: DataFrame,
-    term_df: DataFrame,
-    stats: DataFrame,
+    n_docs: int,
+    sum_dl: int,
     k: int = 10,
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
-    """Top-k BM25 scoring over matched postings — the SHARED kernel of
-    the query-local path (plans/curation3.bm25_scored_frame, which
+    """Top-k BM25 scoring over matched postings — the ONE kernel of the
+    query-local path (plans/curation3.bm25_scored_frame, which
     aggregates ``hits`` from raw text filtered to the query vocabulary)
     and the stored-index path (:func:`bm25_topk`, which reads them from
     the postings table).
 
-    Inputs: ``hits`` (query_id, term, doc_id, tf, dl); ``term_df``
-    (query_id, term, df) — dimension-scale, broadcast; ``stats`` one
-    row (n_docs, avgdl).  Output: (query_id, rank, doc_id, bm25,
-    tf_sum, dl) — ``bm25`` is ``round(score, 6)``; oracle-hashed
-    callers must drop it (module note).
+    Inputs: ``hits`` (query_id, term, doc_id, tf, dl), one row per
+    (query, term, matching doc); the corpus sums ``n_docs`` and
+    ``sum_dl`` as driver values, planned as literals.  Output:
+    (query_id, rank, doc_id, bm25, tf_sum, dl) — ``bm25`` is
+    ``round(score, 6)``; oracle-hashed callers must drop it (module
+    note).  An empty corpus (``n_docs == 0``, also an all-deleted
+    index) has no avgdl and nothing to score: it serves an empty frame
+    with the same schema.
 
-    Determinism: contributions fold in sorted term order; rank ties
-    break by doc_id.  Scale: everything after ``hits`` operates on
-    matched-posting cardinality; the only shuffle is the per-(query,
-    doc) fold aggregation plus the bounded top-k window."""
+    Shape: ONE exchange — the hits are hash-partitioned on
+    ``query_id``, and that partitioning serves the per-(query, term)
+    ``df`` count window, the (query, doc) fold and the rank window with
+    no further shuffle.  A query's scored docs already meet in one
+    task at the rank window, so partitioning its hits there adds no
+    new skew class.  Determinism: contributions fold in sorted term
+    order; rank ties break by doc_id."""
+    if n_docs == 0:
+        return meta_df(
+            hits.sparkSession,
+            [],
+            "query_id long, rank long, doc_id long, bm25 double, tf_sum long, dl long",
+        )
+    avgdl = float(sum_dl) / n_docs
     contrib = (
-        hits.join(F.broadcast(term_df), ["query_id", "term"])
-        .crossJoin(F.broadcast(stats))
+        hits.repartition("query_id")
+        .withColumn("df", F.count("*").over(Window.partitionBy("query_id", "term")))
         .withColumn(
             "c",
             F.log(
                 F.lit(1.0)
-                + ((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
+                + ((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
             )
             * (F.col("tf") * F.lit(k1 + 1.0))
             / (
                 F.col("tf")
                 + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+                * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
             ),
         )
     )
@@ -239,33 +240,27 @@ def bm25_topk(
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
-    """Serve BM25 top-k from the STORED index: the corpus is never
-    touched — the postings join against the broadcast query vocabulary
-    is the scan (every posting row is read), term_stats restricts to
-    the same vocabulary, and the one-row corpus_stats rides along.
-    ``queries``: (query_id, term)."""
+    """Serve BM25 top-k from a STORED index snapshot: the corpus is
+    never touched — the postings join against the broadcast query
+    vocabulary is the scan, and the corpus sums ride as literals.
+    ``queries``: (query_id, term), one row per distinct pair."""
     q = F.broadcast(queries.select("query_id", "term"))
     hits = index.postings.join(q, "term").select(
         "query_id", "term", "doc_id", "tf", "dl"
     )
-    term_df = q.join(index.term_stats, "term").select("query_id", "term", "df")
-    stats = index.corpus_stats.select(
-        "n_docs",
-        (F.col("sum_dl").cast("double") / F.col("n_docs")).alias("avgdl"),
-    )
-    return bm25_score_topk(hits, term_df, stats, k=k, k1=k1, b=b)
+    return bm25_score_topk(hits, index.n_docs, index.sum_dl, k=k, k1=k1, b=b)
 
 
 # ---------------------------------------------------------------------------
-# Index maintenance: the postings row log plus two stat sum-logs
+# Index maintenance: the postings row log plus the corpus-stats sum-log
 # ---------------------------------------------------------------------------
 #
 # The lifecycle (append guard, tombstone delete, load, compaction) is
 # ext/artifact.py's; this module knows only the BM25 artifacts: postings
 # are the tombstoned row log, clustered by term (each file holds its
 # own terms, sorted by (term, doc_id): the inverted-file layout), and
-# the per-batch term-df rows and one-row corpus stats are sum-logs
-# folded by addition (deletes ride them as NEGATIVE deltas).
+# the one-row corpus stats are a sum-log folded by addition (deletes
+# ride it as NEGATIVE deltas).
 
 _POSTINGS = RowLog(
     "postings",
@@ -283,16 +278,6 @@ _POSTINGS = RowLog(
 )
 
 
-def _fold_term_stats(log: DataFrame) -> DataFrame:
-    # terms netted to df <= 0 by deletes drop out: a fresh build over
-    # the remaining corpus has no zero rows
-    return (
-        log.groupBy("term")
-        .agg(F.sum("df").cast("long").alias("df"))
-        .filter(F.col("df") > 0)
-    )
-
-
 def _fold_corpus_stats(log: DataFrame) -> DataFrame:
     return log.agg(
         F.sum("n_docs").cast("long").alias("n_docs"),
@@ -300,17 +285,6 @@ def _fold_corpus_stats(log: DataFrame) -> DataFrame:
     )
 
 
-_TERM_STATS = SumLog(
-    "term_stats",
-    T.StructType(
-        [
-            T.StructField("term", T.StringType()),
-            T.StructField("df", T.LongType()),
-            T.StructField("batch_id", T.LongType()),
-        ]
-    ),
-    _fold_term_stats,
-)
 _CORPUS_STATS = SumLog(
     "corpus_stats",
     T.StructType(
@@ -322,7 +296,7 @@ _CORPUS_STATS = SumLog(
     ),
     _fold_corpus_stats,
 )
-_SUMS = (_TERM_STATS, _CORPUS_STATS)
+_SUMS = (_CORPUS_STATS,)
 
 
 def bm25_index_append_batch(
@@ -352,17 +326,16 @@ def bm25_index_append_batch(
         validate_fresh_ids, _SUMS,
     ):
         return
-    # ONE tokenize pass for all three artifacts; the three concurrent
-    # writes share the persisted caches, whose fill BlockManager
+    # ONE tokenize pass for both artifacts; the two concurrent writes
+    # share the persisted token base, whose fill BlockManager
     # serializes under the block write lock, so it runs once while the
-    # three per-write driver costs overlap
-    postings, term_stats, corpus_stats, release = bm25_batch_artifacts(
+    # two per-write driver costs overlap
+    postings, corpus_stats, release = bm25_batch_artifacts(
         batch_df, id_col, text_col
     )
     try:
         append_rows(
-            index_dir, _POSTINGS, batch_id, postings,
-            ((_TERM_STATS, term_stats), (_CORPUS_STATS, corpus_stats)),
+            index_dir, _POSTINGS, batch_id, postings, ((_CORPUS_STATS, corpus_stats),)
         )
     finally:
         release()
@@ -378,13 +351,14 @@ def bm25_index_delete_batch(
     """The delete-side ``foreachBatch`` body (the reference's own
     delete-reconciliation lifecycle, delete-removed-tickets.py, at the
     index layer).  ``batch_df`` carries the removed docs EXACTLY as
-    indexed (same text): the negative deltas are recomputed from it,
-    which is the only way n_docs can account for zero-token docs that
-    left no posting rows.  Ids must not repeat across delete batches
-    (a double-delete would double-subtract).
+    indexed (same text): the negative ``corpus_stats`` delta is
+    recomputed from it, which is the only way n_docs can account for
+    zero-token docs that left no posting rows (df needs no delta: the
+    serve counts it from the live postings).  Ids must not repeat
+    across delete batches (a double-delete would double-subtract).
 
     The doc ids go to the postings tombstone log; the NEGATIVE
-    ``term_stats`` / ``corpus_stats`` deltas go to batch id
+    ``corpus_stats`` delta goes to batch id
     ``-(batch_id + 2)``, the negative key-space, because a delete
     stream checkpoints independently of the append stream: its
     numbering restarts at 0 and a raw id would overwrite the append
@@ -409,53 +383,51 @@ def bm25_index_delete_batch(
         index_dir, neg_bid, batch_id, ids, own, who="bm25_index_delete_batch"
     ):
         return
-    # ONE tokenize pass for both negative deltas; the postings frame has
-    # a single consumer (term_stats), so only the token base persists
-    _removed_postings, term_stats, corpus_stats, release = bm25_batch_artifacts(
-        batch_df, id_col, text_col, persist_postings=False
-    )
-    try:
-        delete_rows(
-            index_dir,
-            _POSTINGS,
-            ids,
-            batch_id,
+    removed = _corpus_stats_from_base(_bm25_token_base(batch_df, id_col, text_col))
+    delete_rows(
+        index_dir,
+        _POSTINGS,
+        ids,
+        batch_id,
+        (
             (
-                (_TERM_STATS, term_stats.withColumn("df", (-F.col("df")).cast("long"))),
-                (
-                    _CORPUS_STATS,
-                    corpus_stats.select(
-                        (-F.col("n_docs")).cast("long").alias("n_docs"),
-                        (-F.col("sum_dl")).cast("long").alias("sum_dl"),
-                    ),
+                _CORPUS_STATS,
+                removed.select(
+                    (-F.col("n_docs")).cast("long").alias("n_docs"),
+                    (-F.col("sum_dl")).cast("long").alias("sum_dl"),
                 ),
             ),
-            sums_batch_id=neg_bid,
-        )
-    finally:
-        release()
+        ),
+        sums_batch_id=neg_bid,
+    )
 
 
 def bm25_index_compact(spark: SparkSession, index_dir: str) -> None:
     """Fold the log — postings with deleted docs physically dropped, and
-    both sum-logs — to ``batch_id = -1`` bases
+    the corpus-stats sum-log — to ``batch_id = -1`` bases
     (:func:`~pipeline311_spark.ext.artifact.compact_log`).  Serving is
     unchanged: each fold is value-preserving, so even a crash between
-    the per-artifact swaps (postings compacted, term_stats still
-    log-form) serves the same values."""
+    the two swaps (postings compacted, corpus_stats still log-form)
+    serves the same values."""
     compact_log(spark, index_dir, _POSTINGS, _SUMS)
 
 
 def load_bm25_index(spark: SparkSession, index_dir: str) -> Bm25Index:
-    """Fold the log back into the serving triple: postings minus
-    tombstoned docs, per-term df and corpus sums netting the delete
-    batches' negative deltas.  Explicit schemas: an index that never
-    saw a batch has no part files to infer from."""
-    return Bm25Index(
-        postings=load_rows(spark, index_dir, _POSTINGS),
-        term_stats=load_sum(spark, index_dir, _TERM_STATS),
-        corpus_stats=load_sum(spark, index_dir, _CORPUS_STATS),
-    )
+    """Fold the log into a serving snapshot: the postings view minus
+    tombstoned docs, and the corpus sums netting the delete batches'
+    negative deltas, folded ONCE (one collect) into driver ints that
+    every later ``bm25_topk`` batch plans as literals.  Explicit
+    schemas: an index that never saw a batch has no part files to
+    infer from (it loads as ``n_docs == 0``).
+
+    Snapshot contract: the postings view is bound to the file listing
+    made here, and the sums are values, so an append, delete or
+    compaction after the load is invisible to this snapshot — reload
+    after maintaining the index.  A log mid-compaction-swap refuses
+    here, loudly."""
+    postings = load_rows(spark, index_dir, _POSTINGS)
+    stats = load_sum(spark, index_dir, _CORPUS_STATS).collect()[0]
+    return Bm25Index(postings, stats["n_docs"] or 0, stats["sum_dl"] or 0)
 
 
 # ---------------------------------------------------------------------------

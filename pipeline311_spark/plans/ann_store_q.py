@@ -296,7 +296,7 @@ FROM seeddims sd LEFT JOIN means m ON m.cell = sd.cell AND m.dim = sd.dim
     covers=("ext:similarity", "ext:quantize", "ext:ann-train", "A-class"),
 )
 def q_ann_cells_train_step(spark, sf_dir):
-    """ONE Lloyd iteration of :func:`ann_cells_train` in its
+    """The one Lloyd step of :func:`ann_cells_train` in its
     oracle-exact fold, emitted as (cell, dim, centroid) rows — the
     bit-exact gate over the REAL trainer's assignment pass, empty-cell
     carry-through, and mean fold.  Distributed shape is the trainer's
@@ -309,9 +309,7 @@ def q_ann_cells_train_step(spark, sf_dir):
     v = e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     first = v.select(F.size("v").alias("d")).take(1)
     dim = int(first[0]["d"]) if first else _PQ_M * _PQ_SUBDIM
-    cents = ann_cells_train(
-        v, _ANN_CELLS, dim, iters=1, exact_decimals=_TRAIN_STEP_DECIMALS
-    )
+    cents = ann_cells_train(v, _ANN_CELLS, dim, exact_decimals=_TRAIN_STEP_DECIMALS)
     rows = [
         (int(c), i, float(x))
         for c, vec in sorted(cents.items())

@@ -126,15 +126,18 @@ def bm25_scored_frame(spark, sf_dir):
 
     d = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     q = F.broadcast(_query_frame(spark))
-    # corpus pass 1: map-side partial aggregate, one stats row back
+    # corpus pass 1: map-side partial aggregate, one stats row back to
+    # the driver — the kernel plans the corpus sums as literals
     stats = d.select(token_count("text").cast("long").alias("dl")).agg(
-        F.count("*").alias("n_docs"),
-        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-    )
+        F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
+    ).collect()[0]
     # corpus pass 2 (the last): token explode with the per-doc length
     # riding each row, filtered to the query vocabulary BEFORE the
     # groupBy — the shuffle carries matched tokens only, never the
-    # corpus stream, and scoring needs no separate doc-length join
+    # corpus stream, and scoring needs no separate doc-length join.
+    # The kernel counts df from these hits and hash-partitions them on
+    # query_id; a query's scored docs already meet in one task at its
+    # rank window, so that partitioning adds no new skew class
     toks = (
         d.select("doc_id", tokens("text").alias("tk"))
         .select(
@@ -144,32 +147,18 @@ def bm25_scored_frame(spark, sf_dir):
         )
         .select("doc_id", "dl", F.lower("tok").alias("tok"))
     )
-    from pipeline311_spark.ext.cache import persist_tracked
-
-    # persisted: df/idf AND scoring read hits, and without the persist
-    # the scan→explode→vocab-join→groupBy subtree executes once per
-    # consumer (VERDICT r7; Spark did NOT reuse the exchange — r7
-    # PLANS.md showed reused=0 here).  A window over (query_id, term)
-    # would avoid the persist but is a straggler by construction: the
-    # partition for a high-df query term holds one row per MATCHING
-    # DOC, corpus-scale for a stopword-like term.  The persist costs a
-    # constant extra stage wave locally (~0.5 s at sf0.1) and saves a
-    # corpus scan at any scale.
-    hits = persist_tracked(
+    hits = (
         toks.join(q, toks["tok"] == q["term"])
         .groupBy("query_id", "term", "doc_id", "dl")
         .agg(F.count("*").cast("long").alias("tf"))
     )
-    # the df table is ≤ |queries × terms| rows: map-side-combined
-    # groupBy (no skew — partials are per-task tiny), broadcast back
-    df_t = hits.groupBy("query_id", "term").agg(F.count("*").cast("long").alias("df"))
     # shared scoring kernel (sorted-term fold, round(score,6) ranking,
     # doc-id tiebreak) — one definition for this path and the stored-
     # index path, so the oracle gates both identically
     return bm25_score_topk(
         hits.select("query_id", "term", "doc_id", "tf", "dl"),
-        df_t,
-        stats,
+        stats["n_docs"],
+        stats["sum_dl"] or 0,
         k=_BM25_TOPK,
         k1=_BM25_K1,
         b=_BM25_B,
@@ -441,7 +430,7 @@ def hybrid_rrf_build(spark, sf_dir, out):
     share a directory.  Split from the serve phase (VERDICT r10 item
     4) so the amortizable per-corpus-version index build can be timed
     separately from the serving cost — the r10 hybrid headline was ~80%
-    this build.  Returns the folded BM25 index triple."""
+    this build.  Returns the BM25 index snapshot."""
     from pipeline311_spark.ext.ann_store import ann_index_build
     from pipeline311_spark.ext.artifact import run_jobs
     from pipeline311_spark.ext.retrieval import bm25_index_append_batch, load_bm25_index
@@ -463,7 +452,7 @@ def hybrid_rrf_build(spark, sf_dir, out):
 
 
 def hybrid_rrf_serve(spark, sf_dir, out, index):
-    """SERVE phase: lexical ranks from the stored BM25 triple, dense
+    """SERVE phase: lexical ranks from the stored BM25 snapshot, dense
     ranks from the stored residual-IVF-PQ index, fused — the plan
     touches neither corpus text nor corpus floats beyond the bounded
     query-vector collect (plan-asserted in

@@ -145,7 +145,7 @@ def q_stream_bm25_delete_maintain(spark, sf_dir):
     REAL: an append stream (own checkpoint) builds the index from
     micro-batches, then a SEPARATE delete stream (own checkpoint, its
     micro-batch numbering restarting at 0) tombstones the removed docs
-    and writes their negative stat deltas through ``foreachBatch`` →
+    and writes their negative corpus-stats delta through ``foreachBatch`` →
     :func:`bm25_index_delete_batch` — the negative batch-id key-space
     is what keeps its batch 0 from dynamically overwriting the append
     stream's batch 0.  Compaction folds and physically drops; the serve

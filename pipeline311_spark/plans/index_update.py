@@ -115,7 +115,7 @@ def _revised_docs(changed):
 )
 def q_bm25_update_maintain(spark, sf_dir):
     """BM25 document update: old ids tombstoned with their indexed
-    text (negative df/n_docs/sum_dl deltas), revised editions appended
+    text (a negative n_docs/sum_dl delta), revised editions appended
     under new ids (fresh-id-guarded), compacted, served.  Must equal a
     fresh build over the post-update corpus."""
     with scratch_dir("bm25u") as out:

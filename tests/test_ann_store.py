@@ -249,7 +249,7 @@ def test_pq_train_codebook_exact_means_and_empty_cluster_retention(spark):
         (4, [0.9, 0.8, 10.9, 10.8]),
     ]
     v = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    got = pq_train_codebook(v, pq_k=2, m=2, subdim=2, iters=1)
+    got = pq_train_codebook(v, pq_k=2, m=2, subdim=2)
     assert set(got) == {0, 1}
 
     # python twin of one Lloyd step over the same seed assignment
@@ -275,12 +275,12 @@ def test_pq_train_codebook_exact_means_and_empty_cluster_retention(spark):
         [(0, [0.0, 0.0, 0.0, 0.0]), (1, [100.0, 100.0, 100.0, 100.0]), (2, [0.1, 0.1, 0.1, 0.1])],
         "vec_id long, v array<double>",
     )
-    got2 = pq_train_codebook(v2, pq_k=2, m=2, subdim=2, iters=1)
+    got2 = pq_train_codebook(v2, pq_k=2, m=2, subdim=2)
     # cluster 1 only wins itself; cluster 0 absorbs vec 0 and 2
     assert got2[1] == [100.0, 100.0, 100.0, 100.0]
 
     # determinism across invocations
-    assert pq_train_codebook(v, pq_k=2, m=2, subdim=2, iters=1) == got
+    assert pq_train_codebook(v, pq_k=2, m=2, subdim=2) == got
 
 
 def test_codes_log_crashed_swap_refusal_recovery_and_append_window(spark, tmp_path):

@@ -121,10 +121,7 @@ def test_folded_delete_batch_replay_is_skipped(spark, tmp_path):
 
     def snap():
         ix = load_bm25_index(spark, out)
-        return (
-            sorted(map(tuple, ix.term_stats.collect())),
-            sorted(map(tuple, ix.corpus_stats.collect())),
-        )
+        return sorted(map(tuple, ix.postings.collect())), ix.n_docs, ix.sum_dl
 
     before = snap()
     with pytest.warns(UserWarning, match="already folded"):
@@ -133,8 +130,7 @@ def test_folded_delete_batch_replay_is_skipped(spark, tmp_path):
     # a genuinely NEW delete batch (fresh id) still applies
     more = d.filter(F.col("doc_id") % 9 == 5)
     bm25_index_delete_batch(more, 1, out)
-    after = load_bm25_index(spark, out).corpus_stats.collect()[0]
-    assert after["n_docs"] < before[1][0][0]
+    assert load_bm25_index(spark, out).n_docs < before[1]
 
 
 def test_folded_append_batch_replay_is_skipped(spark, tmp_path):
@@ -153,10 +149,7 @@ def test_folded_append_batch_replay_is_skipped(spark, tmp_path):
 
     def snap():
         ix = load_bm25_index(spark, out)
-        return (
-            sorted(map(tuple, ix.postings.collect())),
-            sorted(map(tuple, ix.corpus_stats.collect())),
-        )
+        return sorted(map(tuple, ix.postings.collect())), ix.n_docs, ix.sum_dl
 
     before = snap()
     with pytest.warns(UserWarning, match="already folded"):
@@ -166,8 +159,7 @@ def test_folded_append_batch_replay_is_skipped(spark, tmp_path):
     # the documented post-compaction fresh-checkpoint workflow
     fresh = d.filter((F.col("doc_id") >= 500) & (F.col("doc_id") < 600))
     bm25_index_append_batch(fresh, 0, out)
-    after = load_bm25_index(spark, out).corpus_stats.collect()[0]
-    assert after["n_docs"] == before[1][0][0] + fresh.filter(
+    assert load_bm25_index(spark, out).n_docs == before[1] + fresh.filter(
         F.col("text").isNotNull()
     ).count()
 
@@ -229,21 +221,22 @@ def test_folded_all_deleted_append_replay_still_skipped(spark, tmp_path):
     bm25_index_append_batch(b, 1, out)
     bm25_index_delete_batch(a, 0, out)  # delete EVERY doc of batch 0
     bm25_index_compact(spark, out)
-    before = sorted(map(tuple, load_bm25_index(spark, out).corpus_stats.collect()))
+    def sums():
+        ix = load_bm25_index(spark, out)
+        return ix.n_docs, ix.sum_dl
+
+    before = sums()
     with pytest.warns(UserWarning, match="already folded"):
         bm25_index_append_batch(a, 0, out)  # the post-fold replay
-    assert (
-        sorted(map(tuple, load_bm25_index(spark, out).corpus_stats.collect()))
-        == before
-    )
+    assert sums() == before
 
 
 def test_partial_first_attempt_heals_on_replay(spark, tmp_path, fresh_bm25):
     """Review r11 second wave: a FRESH stream recycling a folded batch
     id that crashed mid-multi-artifact write must not see its own
     partial first attempt as a replay — the healing replay rewrites
-    the batch (completing term_stats/corpus_stats) and clears the
-    intent marker."""
+    the batch (completing corpus_stats) and clears the intent
+    marker."""
     from pyspark.sql import functions as SF
 
     from pipeline311_spark.ext.retrieval import bm25_batch_artifacts
@@ -257,7 +250,7 @@ def test_partial_first_attempt_heals_on_replay(spark, tmp_path, fresh_bm25):
     fresh = d.filter((F.col("doc_id") >= 200) & (F.col("doc_id") < 260))
     # simulate the crashed first attempt of the recycled batch 0:
     # postings written, stats not, intent marker left behind
-    postings, _, _, release = bm25_batch_artifacts(fresh, persist_postings=False)
+    postings, _, release = bm25_batch_artifacts(fresh)
     (
         postings.withColumn("batch_id", SF.lit(0).cast("long"))
         .write.mode("overwrite")
@@ -275,9 +268,7 @@ def test_partial_first_attempt_heals_on_replay(spark, tmp_path, fresh_bm25):
     assert not os.path.exists(marker)
     want = fresh_bm25(base.unionByName(fresh))
     got = load_bm25_index(spark, out)
-    assert sorted(map(tuple, got.corpus_stats.collect())) == sorted(
-        map(tuple, want.corpus_stats.collect())
-    )
+    assert (got.n_docs, got.sum_dl) == (want.n_docs, want.sum_dl)
     assert sorted(map(tuple, got.postings.collect())) == sorted(
         map(tuple, want.postings.collect())
     )
@@ -318,16 +309,10 @@ def test_delete_replay_skips_when_compaction_crashes_after_tombstone_fold(
 
     def stats():
         ix = load_bm25_index(spark, out)
-        return (
-            sorted(map(tuple, ix.term_stats.collect())),
-            sorted(map(tuple, ix.corpus_stats.collect())),
-        )
+        return sorted(map(tuple, ix.postings.collect())), ix.n_docs, ix.sum_dl
 
     want = fresh_bm25(d.join(deleted.select("doc_id"), "doc_id", "left_anti"))
-    expected = (
-        sorted(map(tuple, want.term_stats.collect())),
-        sorted(map(tuple, want.corpus_stats.collect())),
-    )
+    expected = sorted(map(tuple, want.postings.collect())), want.n_docs, want.sum_dl
     assert stats() == expected  # half-compacted state serves correctly
     with pytest.warns(UserWarning, match="already folded"):
         bm25_index_delete_batch(deleted, 0, out)  # the replay — skipped

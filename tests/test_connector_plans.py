@@ -110,10 +110,6 @@ _SINGLE_PARTITION_OK = {
     "o2_desc_scan_order",
     "q17_below_part_average",
     "t2_backfill_window",
-    # the BM25 ranker's corpus-stats scalar (N docs + avg doc length,
-    # one row) broadcast into the scoring join — the broadcast-watermark
-    # shape; the fusion itself is bounded-top-k per query
-    "retrieval_hybrid_rrf",
 }
 
 

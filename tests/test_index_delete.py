@@ -37,11 +37,7 @@ def _snap(df):
 
 
 def _index_snaps(index):
-    return (
-        _snap(index.postings),
-        _snap(index.term_stats),
-        _snap(index.corpus_stats),
-    )
+    return _snap(index.postings), index.n_docs, index.sum_dl
 
 
 def _is_del():
@@ -51,8 +47,8 @@ def _is_del():
 
 def test_bm25_delete_dual_equals_fresh_build_artifacts(spark, tmp_path, fresh_bm25):
     """full build + merge-by-subtraction, served from the UNCOMPACTED
-    fold == a fresh append of the remaining corpus, on all three
-    artifacts (values, not just served ranks) — including n_docs
+    fold == a fresh append of the remaining corpus, on the postings and
+    the corpus sums (values, not just served ranks) — including n_docs
     seeing zero-token deleted docs."""
     d = _docs(spark)
     idx = str(tmp_path / "idx")
@@ -100,10 +96,10 @@ def test_bm25_delete_log_replay_compaction_and_physical_drop(spark, tmp_path, fr
 
 
 def test_bm25_delete_batch_uses_negative_keyspace(spark, tmp_path):
-    """Delete batch n lands at batch_id -(n+2): an independent delete
-    stream restarting its numbering at 0 can never dynamically
-    overwrite an append partition (same ids) or the compaction base
-    (-1)."""
+    """Delete batch n lands its corpus-stats delta at batch_id -(n+2):
+    an independent delete stream restarting its numbering at 0 can
+    never dynamically overwrite an append partition (same ids) or the
+    compaction base (-1)."""
     d = _docs(spark)
     idx = str(tmp_path / "idx")
     for i in range(2):
@@ -111,7 +107,7 @@ def test_bm25_delete_batch_uses_negative_keyspace(spark, tmp_path):
     bm25_index_delete_batch(d.filter(_is_del()), 0, idx)
     bids = {
         r["batch_id"]
-        for r in spark.read.parquet(os.path.join(idx, "term_stats"))
+        for r in spark.read.parquet(os.path.join(idx, "corpus_stats"))
         .select("batch_id").distinct().collect()
     }
     assert bids == {0, 1, -2}

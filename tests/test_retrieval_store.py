@@ -20,6 +20,7 @@ from pipeline311_spark.ext.retrieval import (
     load_bm25_index,
     rrf_fuse,
 )
+from pipeline311_spark.plans.curation3 import _query_frame
 
 SF = "/root/testdata/sf0.001"
 
@@ -28,8 +29,14 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _index_snap(index):
+    """The comparable form of an index snapshot: sorted postings rows
+    and the two corpus sums."""
+    return sorted(map(tuple, index.postings.collect())), index.n_docs, index.sum_dl
+
+
 def test_incremental_update_equals_fresh_build(spark, tmp_path, fresh_bm25):
-    """The index triple folded from two disjoint append batches is
+    """The index folded from two disjoint append batches is
     row-identical to one append of the union — the contract that makes
     the stored index maintainable without corpus re-tokenization."""
     base = _docs(
@@ -41,17 +48,11 @@ def test_incremental_update_equals_fresh_build(spark, tmp_path, fresh_bm25):
     bm25_index_append_batch(base, 0, idx)
     bm25_index_append_batch(batch, 1, idx)
     merged = load_bm25_index(spark, idx)
-    fresh = fresh_bm25(base.unionByName(batch))
-
-    for got, want in zip(merged, fresh):
-        g = sorted(map(tuple, got.collect()))
-        w = sorted(map(tuple, want.collect()))
-        assert g == w
+    assert _index_snap(merged) == _index_snap(fresh_bm25(base.unionByName(batch)))
 
     # the ''-text doc carries dl=0 into corpus stats but produces no
     # postings; the NULL doc is absent everywhere
-    stats = dict(zip(("n_docs", "sum_dl"), merged.corpus_stats.collect()[0]))
-    assert stats == {"n_docs": 5, "sum_dl": 10}
+    assert (merged.n_docs, merged.sum_dl) == (5, 10)
 
 
 def test_bm25_topk_from_index_matches_query_local_path(spark, fresh_bm25):
@@ -148,18 +149,10 @@ def test_bm25_batch_append_is_idempotent_under_replay(spark, tmp_path):
     bm25_index_append_batch(b0, 0, idx)
     bm25_index_append_batch(b1, 1, idx)
 
-    def snapshot():
-        ix = load_bm25_index(spark, idx)
-        return (
-            sorted(map(tuple, ix.postings.collect())),
-            sorted(map(tuple, ix.term_stats.collect())),
-            ix.corpus_stats.collect()[0].asDict(),
-        )
-
-    before = snapshot()
+    before = _index_snap(load_bm25_index(spark, idx))
     bm25_index_append_batch(b1, 1, idx)  # replay
-    assert snapshot() == before
-    assert before[2] == {"n_docs": 3, "sum_dl": 5}
+    assert _index_snap(load_bm25_index(spark, idx)) == before
+    assert before[1:] == (3, 5)
 
 
 def test_rrf_fuse_rejects_empty_rankings(spark):
@@ -194,21 +187,14 @@ def test_bm25_stream_checkpoint_resume_processes_only_new_files(spark, tmp_path,
 
     a.coalesce(1).write.mode("append").parquet(src)
     run_stream()
-    first = load_bm25_index(spark, idx).corpus_stats.collect()[0]
-    assert first["n_docs"] == 2
+    assert load_bm25_index(spark, idx).n_docs == 2
 
     b.coalesce(1).write.mode("append").parquet(src)
     run_stream()  # restart: same checkpoint, only the new file folds in
 
-    ix = load_bm25_index(spark, idx)
-    fresh = fresh_bm25(a.unionByName(b))
-    assert sorted(map(tuple, ix.postings.collect())) == sorted(
-        map(tuple, fresh.postings.collect())
+    assert _index_snap(load_bm25_index(spark, idx)) == _index_snap(
+        fresh_bm25(a.unionByName(b))
     )
-    assert sorted(map(tuple, ix.term_stats.collect())) == sorted(
-        map(tuple, fresh.term_stats.collect())
-    )
-    assert ix.corpus_stats.collect() == fresh.corpus_stats.collect()
     # batch ids advanced (1 per restart batch) — nothing was replayed
     bids = {
         r["batch_id"]
@@ -234,17 +220,9 @@ def test_bm25_index_compact_preserves_serve_and_survives_new_batches(
     bm25_index_append_batch(a, 0, idx)
     bm25_index_append_batch(b, 1, idx)
 
-    def snap():
-        ix = load_bm25_index(spark, idx)
-        return (
-            sorted(map(tuple, ix.postings.collect())),
-            sorted(map(tuple, ix.term_stats.collect())),
-            ix.corpus_stats.collect()[0].asDict(),
-        )
-
-    before = snap()
+    before = _index_snap(load_bm25_index(spark, idx))
     bm25_index_compact(spark, idx)
-    assert snap() == before
+    assert _index_snap(load_bm25_index(spark, idx)) == before
     # the log physically folded to the single base partition
     bids = {
         r["batch_id"]
@@ -255,22 +233,17 @@ def test_bm25_index_compact_preserves_serve_and_survives_new_batches(
     # a fresh-checkpoint stream restarts numbering at 0 — must append,
     # never overwrite the base
     bm25_index_append_batch(c, 0, idx)
-    fresh = fresh_bm25(a.unionByName(b).unionByName(c))
-    ix = load_bm25_index(spark, idx)
-    assert sorted(map(tuple, ix.postings.collect())) == sorted(
-        map(tuple, fresh.postings.collect())
-    )
-    assert ix.corpus_stats.collect() == fresh.corpus_stats.collect()
+    want = _index_snap(fresh_bm25(a.unionByName(b).unionByName(c)))
+    assert _index_snap(load_bm25_index(spark, idx)) == want
 
-    # crashed-swap window: live dir renamed away, .old holds the data
-    p = os.path.join(idx, "term_stats")
+    # crashed-swap window: live dir renamed away, .old holds the data;
+    # the load folds the corpus stats, so it is the load that refuses
+    p = os.path.join(idx, "corpus_stats")
     os.rename(p, p + ".compact.old")
     with pytest.raises(RuntimeError, match="mid-compaction-swap"):
-        load_bm25_index(spark, idx).term_stats.collect()
+        load_bm25_index(spark, idx)
     bm25_index_compact(spark, idx)  # recovers, then re-folds
-    assert sorted(map(tuple, load_bm25_index(spark, idx).term_stats.collect())) == sorted(
-        map(tuple, fresh.term_stats.collect())
-    )
+    assert _index_snap(load_bm25_index(spark, idx)) == want
 
 
 def test_compact_crash_between_renames_recovers_end_to_end(spark, tmp_path, monkeypatch):
@@ -303,7 +276,7 @@ def test_compact_crash_between_renames_recovers_end_to_end(spark, tmp_path, monk
     def dying_rename(src, dst):
         # swap order per artifact: (live -> .old) then (staging ->
         # live); die entering the SECOND rename of the POSTINGS
-        # artifact specifically — the three artifact swaps run
+        # artifact specifically — the artifact swaps run
         # concurrently from driver threads since round 11, so a global
         # rename call count no longer lands in a deterministic window,
         # but the per-artifact two-rename sequence is unchanged
@@ -317,8 +290,8 @@ def test_compact_crash_between_renames_recovers_end_to_end(spark, tmp_path, monk
     monkeypatch.setattr(retrieval_mod.os, "rename", real_rename)
 
     # the crash window: the postings artifact mid-swap (the concurrent
-    # term_stats/corpus_stats swaps ran to completion — run_jobs
-    # finishes every thunk before re-raising)
+    # corpus_stats swap ran to completion — run_jobs finishes every
+    # thunk before re-raising)
     assert os.path.isdir(os.path.join(idx, "postings.compact.old"))
     assert not os.path.isdir(os.path.join(idx, "postings"))
     with pytest.raises(RuntimeError, match="mid-compaction-swap"):
@@ -327,9 +300,7 @@ def test_compact_crash_between_renames_recovers_end_to_end(spark, tmp_path, monk
     bm25_index_compact(spark, idx)  # the documented recovery re-invoke
 
     got = load_bm25_index(spark, idx)
-    want = load_bm25_index(spark, control)
-    for g, w in zip(got, want):
-        assert sorted(map(tuple, g.collect())) == sorted(map(tuple, w.collect()))
+    assert _index_snap(got) == _index_snap(load_bm25_index(spark, control))
     assert not glob.glob(os.path.join(idx, "*.compact.*"))
 
 
@@ -356,12 +327,9 @@ def test_compact_stale_old_dir_does_not_wedge_next_compaction(spark, tmp_path, f
     bm25_index_append_batch(b, 1, idx)
     bm25_index_compact(spark, idx)  # must not raise
 
-    fresh = fresh_bm25(a.unionByName(b))
-    got = load_bm25_index(spark, idx)
-    assert sorted(map(tuple, got.postings.collect())) == sorted(
-        map(tuple, fresh.postings.collect())
+    assert _index_snap(load_bm25_index(spark, idx)) == _index_snap(
+        fresh_bm25(a.unionByName(b))
     )
-    assert got.corpus_stats.collect() == fresh.corpus_stats.collect()
     assert not glob.glob(os.path.join(idx, "*.compact.*"))
 
 
@@ -399,10 +367,10 @@ def test_hybrid_rrf_serve_plan_reads_store_not_corpus_text(spark, tmp_path):
     plan = buf.getvalue()
     # store artifacts by schema signature (location strings are
     # truncated under the default maxMetadataStringLength): the
-    # postings relation (term, doc_id, tf, dl), the one-row
-    # corpus-stats relation (n_docs, sum_dl), and the ANN codes
-    # relation (vec_id, code0..)
-    assert "Relation [term#" in plan and "Relation [n_docs#" in plan
+    # postings relation (term, doc_id, tf, dl) and the ANN codes
+    # relation (vec_id, code0..); the corpus stats are folded at load
+    # and ride as literals
+    assert "Relation [term#" in plan and "Relation [n_docs#" not in plan
     assert "code0#" in plan
     assert "documents.parquet" not in plan and "Relation [doc_id#" not in plan
     # the tokenize subtree's signature projections
@@ -410,6 +378,75 @@ def test_hybrid_rrf_serve_plan_reads_store_not_corpus_text(spark, tmp_path):
     # the dense serve reads M small ints per vector, never the floats
     assert "embedding#" not in plan
     assert fused.count() > 0
+    # the lexical ranker of the same store: one exchange, postings only
+    index = load_bm25_index(spark, str(tmp_path / "store" / "bm25"))
+    _assert_one_exchange_over_postings(bm25_topk(index, _query_frame(spark)))
+
+
+def _final_plan(df):
+    """The executed physical plan after an action (the final adaptive
+    plan; its initial-plan half is cut off so nothing counts twice)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def _assert_one_exchange_over_postings(served):
+    """The stored serve's shape: exactly one shuffle exchange (the hits
+    hash-partitioned on query_id), no broadcast nested-loop join, and
+    one parquet relation, the postings."""
+    import re
+
+    plan = _final_plan(served)
+    shuffles = re.findall(r"(?m)^[\s:+\-|]*Exchange ", plan)
+    assert len(shuffles) == 1, plan
+    assert "hashpartitioning(query_id#" in plan, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
+    scans = re.findall(r"FileScan parquet \[([^\]]*)\]", plan)
+    assert len(scans) == 1 and scans[0].startswith("term#"), plan
+
+
+def test_bm25_topk_serve_plan_is_one_exchange_over_postings(spark, fresh_bm25):
+    """A stored serve batch costs one shuffle: df is counted from the
+    matched postings in the same query_id partitioning that the
+    per-doc fold and the rank window use, and the corpus stats are
+    literals, so no stats relation is scanned or cross-joined."""
+    from pipeline311_spark.plans.curation3 import _BM25_TOPK
+
+    index = fresh_bm25(_docs(spark, [(1, "spark merge join"), (2, "merge vector")]))
+    served = bm25_topk(index, _query_frame(spark), k=_BM25_TOPK)
+    _assert_one_exchange_over_postings(served)
+    assert served.count() > 0
+
+
+def test_bm25_topk_on_an_empty_corpus_serves_nothing(spark, tmp_path, fresh_bm25):
+    """n_docs == 0 has no avgdl: a never-appended index, an index whose
+    every doc is deleted (uncompacted: the corpus-stats log nets to
+    zero rather than being empty) and the same index compacted all
+    serve an empty frame with the serve schema instead of dividing by
+    zero."""
+    from pipeline311_spark.ext.retrieval import (
+        bm25_index_compact,
+        bm25_index_delete_batch,
+    )
+
+    q = _query_frame(spark)
+    want = bm25_topk(fresh_bm25(_docs(spark, [(1, "spark merge")])), q).dtypes
+    never = str(tmp_path / "never")
+    idx = str(tmp_path / "idx")
+    both = _docs(spark, [(1, "spark merge"), (2, "merge vector")])
+    bm25_index_append_batch(both, 0, idx)
+    bm25_index_delete_batch(both, 0, idx)
+    for served in (
+        bm25_topk(load_bm25_index(spark, never), q),
+        bm25_topk(load_bm25_index(spark, idx), q),
+    ):
+        assert served.dtypes == want
+        assert served.collect() == []
+    bm25_index_compact(spark, idx)
+    served = bm25_topk(load_bm25_index(spark, idx), q)
+    assert served.dtypes == want
+    assert served.collect() == []
 
 
 def _assert_postings_term_clustered(idx):

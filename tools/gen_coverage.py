@@ -92,13 +92,13 @@ STATIC = {
     "ext:graph": ("ext/graph.py (iterative min-label connected components; dup clusters)", "tests/test_properties.py (vs union-find)"),
     "ext:versioning": ("plans/curation4.py (corpus snapshot diff)", "tests/test_curation4.py"),
     "ext:quantize": ("ext/ann_store.py residual PQ codes + ADC serve", "tests/test_ann_store.py"),
-    "ext:retrieval": ("stored BM25 index: term-clustered postings (sorted by term, doc_id)/df/stats artifacts, incremental merge, vocabulary-join serve (ext/retrieval.py, plans/curation3.py, plans/index_delete.py, plans/index_update.py); dense top-k; N-ranker RRF fusion (rrf_fuse)", "tests/test_retrieval_store.py (incl. the clustered layout), tests/test_curation3.py"),
+    "ext:retrieval": ("stored BM25 index: term-clustered postings (sorted by term, doc_id) + corpus-stats sum-log, incremental merge, vocabulary-join serve counting df from the matched postings in one shuffle (ext/retrieval.py, plans/curation3.py, plans/index_delete.py, plans/index_update.py); dense top-k; N-ranker RRF fusion (rrf_fuse)", "tests/test_retrieval_store.py (incl. the clustered layout), tests/test_curation3.py"),
     "ext:export": ("deterministic hash-shard assignment in the flagship pipeline (plans/curation3.py); snapshot diff (plans/curation4.py)", "oracle gate (curation_full_pipeline, corpus_version_diff)"),
     "ext:sampling": ("ext/sampling.py hash buckets (deterministic sample)", "oracle gate (curation_full_pipeline)"),
     "ext:ann-log": ("ANN codes as a batch_id delta log: foreachBatch append, compaction, pruned log serve (ext/ann_store.py)", "tests/test_ann_store.py"),
     "ext:gram-log": ("MinHash gram table delta log: append/compact/serve cycle (ext/dedup.py)", "tests/test_gram_log.py"),
-    "ext:bm25-delete": ("BM25 merge-by-subtraction uncompacted log delete (ext/retrieval.bm25_index_delete_batch)", "tests/test_index_delete.py"),
-    "ext:bm25-delete-log": ("BM25 log-form deletion: tombstones + negative stat deltas in the negative batch-id key-space (bm25_index_delete_batch)", "tests/test_index_delete.py"),
+    "ext:bm25-delete": ("BM25 uncompacted log delete: tombstoned postings + corpus sums net of a negative delta (ext/retrieval.bm25_index_delete_batch)", "tests/test_index_delete.py"),
+    "ext:bm25-delete-log": ("BM25 log-form deletion: tombstones + a negative corpus-stats delta in the negative batch-id key-space (bm25_index_delete_batch)", "tests/test_index_delete.py"),
     "ext:gram-delete": ("gram-log tombstone deletion + compaction drop (ext/dedup.gram_log_delete_batch)", "tests/test_index_delete.py"),
     "ext:ann-delete": ("ANN codes-log tombstone deletion + compaction drop (ext/ann_store.ann_codes_delete_batch)", "tests/test_index_delete.py"),
     "ext:ann-train": ("one exact-decimal Lloyd step of the coarse cells (ext/ann_store.py ann_cells_train / pq_train_codebook)", "tests/test_ann_store.py; oracle gate (sim_ann_cells_train_step)"),
