@@ -71,7 +71,7 @@ from pipeline311_spark.ext.artifact import (
     load_rows,
     run_jobs,
 )
-from pipeline311_spark.ext.hashing import meta_df
+from pipeline311_spark.ext.hashing import _dlit, meta_df
 from pipeline311_spark.ext.similarity import as_double, ensure_parallelism, sqdist
 from pipeline311_spark.sinks.writers import write_parquet
 
@@ -162,20 +162,6 @@ def pq_codes(
     )
 
 
-def _dlit(x: float) -> str:
-    """Exact SQL double literal: ``repr`` is the shortest string that
-    round-trips in IEEE binary64, and Spark's parser reads ``...D``
-    literals with Java's correctly-rounded ``parseDouble`` — so the
-    parsed double is BIT-IDENTICAL to the Python float (verified for
-    subnormals, -0.0, and 17-significant-digit values).  Literal trees
-    are built as ONE SQL string per expression because constructing
-    them Column-by-Column costs a py4j round trip per ``F.lit`` —
-    ~1.5 s per encode projection at k=4/m=4, measured (round-11 guide
-    §1/§7.3: driver-side plan construction was the dominant cost of
-    the stored-ANN build and serve)."""
-    return repr(float(x)) + "D"
-
-
 def _sqdist_sql(sub_expr: str, vals: Sequence[float]) -> str:
     """SQL twin of :func:`pipeline311_spark.ext.similarity.sqdist`
     against a literal vector — the identical prepend-0.0 left fold
@@ -192,16 +178,15 @@ def pq_code_col(j: int, codebook: dict[int, list[float]], subdim: int, v_col: st
     """The PQ encode expression for subspace ``j``: argmin by
     (subspace squared L2, centroid id) via struct sort — struct
     comparison is field-order lexicographic, so distances are compared,
-    never emitted.  THE single home of this fold-order-sensitive
-    expression (review r9): plans/curation4's query-local PQ encode and
-    the stored-index encode both call it, so tie-breaking and fold
-    order can never diverge between their shared oracles.  Built as
-    one ``F.expr`` string (:func:`_dlit`): the same Catalyst operators
-    (slice → zip_with → aggregate → named_struct → array_sort) on the
-    same literals, ~150x cheaper to construct than the per-``F.lit``
-    Column form (py4j round trips), results bit-identical — verified
-    row-for-row against the old builder and by the unchanged oracle
-    twins."""
+    never emitted.  Its callers are the stored-index encode
+    (:func:`pq_codes`) and the assignment pass of
+    :func:`pq_train_codebook`; the DuckDB twins rank the same
+    per-subspace distance (``_pq_sqdist_sql``, plans/curation4.py), so
+    tie-breaking and fold order are pinned by the oracle gate.  Built
+    as one ``F.expr`` string (:func:`~pipeline311_spark.ext.hashing._dlit`
+    literals): slice → zip_with → aggregate → named_struct →
+    array_sort, about 150x cheaper to construct than a per-``F.lit``
+    Column tree."""
     cands = []
     for c in sorted(codebook):
         sub = f"slice({v_col}, {j * subdim + 1}, {subdim})"

@@ -17,11 +17,18 @@ Scale design (the part that matters at 100 TB):
   a declared parameter, not a silent truncation.
 * Everything is built from exploding arrays + groupBy + joins: pure
   shuffle work that AQE can re-plan, no driver-side state.
+
+Plans are built as Spark SQL text (``selectExpr``, string ``filter``,
+``F.expr`` wrapped once per expression, SQL window and lambda syntax):
+no ``F.col`` call or ``Column`` method runs, so building a plan runs no
+PySpark call-site capture (ext/hashing.py module note).  The expression
+builders (``_*_expr``, ``_minhash_aggs``, ``_stat_aggs``) return text;
+the DuckDB oracle twins in plans/extensions.py mirror them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -35,7 +42,8 @@ from pipeline311_spark.ext.artifact import (
 )
 from pipeline311_spark.ext.cache import persist_tracked
 from pipeline311_spark.ext.hashing import (
-    jvm_memo,
+    MOD,
+    _dlit,
     affine,
     ensure_parallelism,
     hash_params,
@@ -65,8 +73,8 @@ FP_PARAMS = hash_params(2, seed=97)
 # Endpoint-row bound above which the candidate-doc probe set pays one
 # small distinct exchange before being broadcast.  Below it, duplicate
 # build rows are cheaper than the exchange — broadcast semi-joins
-# tolerate them (r7).  Above it (duplicate-heavy corpus with raised
-# bucket caps — ADVICE r7), 2·|pairs| endpoints can exceed the
+# tolerate them.  Above it (duplicate-heavy corpus with raised
+# bucket caps), 2·|pairs| endpoints can exceed the
 # |distinct candidate docs| bound by orders of magnitude and push the
 # driver-collected broadcast past its memory envelope, so the distinct
 # restores the bound.  1M longs ≈ 8 MB pre-dedup — comfortably inside
@@ -80,7 +88,7 @@ def _probe_doc_ids(cand: DataFrame, n_pairs: int) -> DataFrame:
     semi-join: exchange-free when small, distinct'd past
     PROBE_DISTINCT_ENDPOINTS (``n_pairs`` is the already-materialized
     candidate count, so the gate costs nothing)."""
-    docs = cand.select(F.explode(F.array("doc_a", "doc_b")).alias("doc"))
+    docs = cand.selectExpr("explode(array(doc_a, doc_b)) AS doc")
     if 2 * n_pairs > PROBE_DISTINCT_ENDPOINTS:
         docs = docs.distinct()
     return docs
@@ -93,19 +101,21 @@ def _probe_doc_ids(cand: DataFrame, n_pairs: int) -> DataFrame:
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Keep one doc (lowest id) per normalized-text fingerprint.
     Hash-groupBy: one shuffle on the fingerprint."""
-    fp = ensure_parallelism(df).withColumn("__fp", fingerprint(text_col))
-    w = Window.partitionBy("__fp").orderBy(F.col(id_col))
-    return fp.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__fp", "__rn")
+    fp = ensure_parallelism(df).withColumn("__fp", F.expr(fingerprint(text_col)))
+    rn = f"row_number() OVER (PARTITION BY __fp ORDER BY {id_col})"
+    return fp.withColumn("__rn", F.expr(rn)).filter("__rn = 1").drop("__fp", "__rn")
 
 
-def exact_dup_groups(df: DataFrame, id_col: str, text_col: str, key: Column | None = None) -> DataFrame:
-    """Fingerprint groups with >1 member (the audit view of exact_dedup)."""
+def exact_dup_groups(df: DataFrame, id_col: str, text_col: str, key: str | None = None) -> DataFrame:
+    """Fingerprint groups with >1 member (the audit view of exact_dedup).
+    ``key`` is the grouping key as SQL text (default: the
+    :func:`~pipeline311_spark.ext.textstats.fingerprint` of the text)."""
     k = key if key is not None else fingerprint(text_col)
     return (
-        ensure_parallelism(df.select(id_col, text_col)).select(F.col(id_col), k.alias("fp"))
+        ensure_parallelism(df.select(id_col, text_col)).selectExpr(id_col, f"{k} AS fp")
         .groupBy("fp")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keeper_id"))
-        .filter(F.col("n_docs") > 1)
+        .agg(F.expr("count(*) AS n_docs"), F.expr(f"min({id_col}) AS keeper_id"))
+        .filter("n_docs > 1")
     )
 
 
@@ -147,7 +157,7 @@ def ngram_jaccard_pairs(
     exactly as before; measured 2.18 s → 1.61 s at sf0.1/local[32],
     identical output (exceptAll == 0 both ways).
 
-    Content-identity collapse (r5, see the module-level note): content
+    Content-identity collapse (see the module-level note): content
     stats ride each gram row from the map-side fold, and the first
     reduction after the single ``repartition("g")`` exchange collapses
     each (gram, content-group) to the group's representative (min doc
@@ -175,41 +185,39 @@ def ngram_jaccard_pairs(
     # doc; reclaim via cache_scope/clearCache.
     rs = persist_tracked(_row_stats(_row_gram_arrays(df, id_col, text_col, n)))
     groups = persist_tracked(_with_groups(rs.select("doc", "sz", "fp1", "fp2")))
-    sh = rs.select("doc", "sz", "fp1", "fp2", F.explode("garr").alias("g"))
-    wsz = Window.partitionBy("g")
+    sh = rs.selectExpr("doc", "sz", "fp1", "fp2", "explode(garr) AS g")
     buckets = (
         sh.repartition("g")
         .groupBy("g", "sz", "fp1", "fp2")
-        .agg(F.min("doc").alias("doc"))
-        .withColumn("df_", F.count("*").over(wsz))
-        .filter((F.col("df_") >= 2) & (F.col("df_") <= max_df))
+        .agg(F.expr("min(doc) AS doc"))
+        .withColumn("df_", F.expr("count(*) OVER (PARTITION BY g)"))
+        .filter(f"df_ >= 2 AND df_ <= {max_df}")
         .groupBy("g")
-        .agg(F.sort_array(F.collect_set("doc")).alias("docs"))
+        .agg(F.expr("sort_array(collect_set(doc)) AS docs"))
     )
     inter = (
-        buckets.select(F.explode(_bucket_pairs_expr()).alias("p"))
-        .groupBy(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .agg(F.count("*").alias("inter"))
+        buckets.selectExpr(f"explode({_bucket_pairs_expr()}) AS p")
+        .groupBy(F.expr("p.doc_a AS doc_a"), F.expr("p.doc_b AS doc_b"))
+        .agg(F.expr("count(*) AS inter"))
     )
     # group size rides the SAME sizes join the Jaccard needs anyway —
     # the expansion cap then costs zero extra stages (gn_cols)
-    rsizes = groups.filter(F.col("doc") == F.col("rep")).select("doc", "sz", "gn")
+    rsizes = groups.filter("doc = rep").select("doc", "sz", "gn")
     ra = rsizes.toDF("doc_a", "sz_a", "gn_a")
     rb = rsizes.toDF("doc_b", "sz_b", "gn_b")
     cross = (
         inter.join(ra, "doc_a")
         .join(rb, "doc_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
+        .withColumn("jaccard", F.expr("inter / (sz_a + sz_b - inter)"))
+        .filter(f"jaccard >= {_dlit(threshold)}")
     )
     expanded = _expand_cross(
         cross, groups, ["inter", "sz_a", "sz_b", "jaccard"], ("gn_a", "gn_b"),
         swap_cols=(("sz_a", "sz_b"),),
     )
-    ident = _ident_member_pairs(groups, max_group, carry=("sz",)).select(
-        "doc_a", "doc_b",
-        F.col("sz").alias("inter"), F.col("sz").alias("sz_a"), F.col("sz").alias("sz_b"),
-        F.lit(1.0).alias("jaccard"),
+    ident = _ident_member_pairs(groups, max_group, carry=("sz",)).selectExpr(
+        "doc_a", "doc_b", "sz AS inter", "sz AS sz_a", "sz AS sz_b",
+        f"{_dlit(1.0)} AS jaccard",
     )
     return expanded.unionByName(ident)
 
@@ -249,44 +257,35 @@ def _row_gram_arrays(df: DataFrame, id_col: str, text_col: str, n: int) -> DataF
     doc instead of one per gram.  Docs with fewer than n tokens are
     dropped."""
     toks = tokens(normalize_text(text_col))
-    compact = ensure_parallelism(df.select(F.col(id_col).alias("doc"), toks.alias("tk")))
-    per = compact.withColumn("hs", _token_hash_expr()).filter(F.size("tk") >= n)
-    return per.select("doc", _gram_fold_expr(n).alias("garr"))
+    compact = ensure_parallelism(df.selectExpr(f"{id_col} AS doc", f"{toks} AS tk"))
+    per = compact.withColumn("hs", F.expr(_token_hash_expr())).filter(f"size(tk) >= {n}")
+    return per.select("doc", F.expr(f"{_gram_fold_expr(n)} AS garr"))
 
 
-@jvm_memo(maxsize=4)
-def _token_hash_expr() -> Column:
-    """Memoized per-token hash array over the fixed ``tk`` intermediate
-    (expression construction is py4j-bound driver time; the tree is an
-    immutable unresolved Column, reusable across plans)."""
-    from pipeline311_spark.ext.hashing import MOD
-
-    return F.transform(
-        "tk", lambda tok: F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long") % MOD
+def _token_hash_expr() -> str:
+    """Per-token hash array over the ``tk`` intermediate: each token's
+    :func:`~pipeline311_spark.ext.hashing.portable_hash64` mod MOD."""
+    return (
+        "transform(tk, tok -> "
+        f"CAST(conv(substring(md5(tok), 1, 15), 16, 10) AS BIGINT) % {MOD})"
     )
 
 
-@jvm_memo(maxsize=8)
-def _gram_fold_expr(n: int) -> Column:
-    """Memoized distinct n-gram fold over the fixed ``hs``/``tk``
-    intermediates."""
-    from pipeline311_spark.ext.hashing import MOD
-
-    def _fold(i: Column) -> Column:
-        g = F.element_at(F.col("hs"), i + 1)
-        for j in range(1, n):
-            g = (g * F.lit(GRAM_BASE) + F.element_at(F.col("hs"), i + 1 + j)) % F.lit(MOD)
-        return g
-
-    return F.array_distinct(F.transform(F.sequence(F.lit(0), F.size("tk") - n), _fold))
+def _gram_fold_expr(n: int) -> str:
+    """Distinct n-gram fold over the ``hs``/``tk`` intermediates: gram
+    ``i`` folds token hashes ``i..i+n-1`` as ``(acc * GRAM_BASE + next)
+    % MOD``."""
+    g = "element_at(hs, i + 1)"
+    for j in range(1, n):
+        g = f"(({g} * {GRAM_BASE} + element_at(hs, i + 1 + {j})) % {MOD})"
+    return f"array_distinct(transform(sequence(0, size(tk) - {n}), i -> {g}))"
 
 
-@jvm_memo(maxsize=8)
-def _minhash_aggs(k: int, seed: int) -> tuple[Column, ...]:
-    """Memoized k min-affine aggregates over the fixed ``g`` column."""
-    params = hash_params(k, seed)
+def _minhash_aggs(k: int, seed: int) -> tuple[str, ...]:
+    """The k min-affine aggregates ``mh0..mh{k-1}`` over the ``g``
+    column."""
     return tuple(
-        F.min(affine(F.col("g"), a, b)).alias(f"mh{i}") for i, (a, b) in enumerate(params)
+        f"min({affine('g', a, b)}) AS mh{i}" for i, (a, b) in enumerate(hash_params(k, seed))
     )
 
 
@@ -298,7 +297,7 @@ def _minhash_aggs(k: int, seed: int) -> tuple[Column, ...]:
 # spot at corpus scale: web corpora carry 20-40% exact duplicates, and
 # every member of a dup group lands in the same LSH buckets with the
 # same signature.  Left alone they either saturate the ``max_bucket``
-# gate — the r4 semantics, where the strongest duplicates in the corpus
+# gate — where the strongest duplicates in the corpus
 # were exactly the pairs silently dropped — or quadratic-blow candidate
 # generation and the exact-Jaccard verify (the ×64 amplified-corpus
 # asymptote, SCALE.md).  Every fuzzy generator therefore collapses the
@@ -319,15 +318,15 @@ def _minhash_aggs(k: int, seed: int) -> tuple[Column, ...]:
 # DuckDB oracle twins group by the exact sorted gram list instead, so
 # a fingerprint collision would surface as an oracle mismatch.
 
-def _stat_aggs() -> tuple[Column, ...]:
+def _stat_aggs() -> tuple[str, ...]:
     """Content-identity stat aggregates over per-doc-DISTINCT (doc, g)
     rows — all map-side combinable, so they ride an existing groupBy
     ("doc") exchange (e.g. the signature aggregation) for free."""
     (a1, b1), (a2, b2) = FP_PARAMS
     return (
-        F.count("*").alias("sz"),
-        F.bit_xor(F.col("g") * F.lit(a1) + F.lit(b1)).alias("fp1"),
-        F.bit_xor(F.col("g") * F.lit(a2) + F.lit(b2)).alias("fp2"),
+        "count(*) AS sz",
+        f"bit_xor(g * {a1} + {b1}) AS fp1",
+        f"bit_xor(g * {a2} + {b2}) AS fp2",
     )
 
 
@@ -339,20 +338,14 @@ def _row_stats(arrays: DataFrame) -> DataFrame:
     expressions (CollapseProject only inlines aliases that are cheap or
     referenced once)."""
     (a1, b1), (a2, b2) = FP_PARAMS
-    acc0 = F.struct(F.lit(0).cast("long").alias("f1"), F.lit(0).cast("long").alias("f2"))
-    fps = F.aggregate(
-        "garr",
-        acc0,
-        lambda a, x: F.struct(
-            a["f1"].bitwiseXOR(x * F.lit(a1) + F.lit(b1)).alias("f1"),
-            a["f2"].bitwiseXOR(x * F.lit(a2) + F.lit(b2)).alias("f2"),
-        ),
+    fps = (
+        "aggregate(garr, "
+        "named_struct('f1', CAST(0 AS BIGINT), 'f2', CAST(0 AS BIGINT)), "
+        f"(a, x) -> named_struct('f1', a.f1 ^ (x * {a1} + {b1}), "
+        f"'f2', a.f2 ^ (x * {a2} + {b2})))"
     )
-    g2 = arrays.select("doc", F.size("garr").cast("long").alias("sz"), fps.alias("__fps"), "garr")
-    return g2.select(
-        "doc", "sz",
-        F.col("__fps.f1").alias("fp1"), F.col("__fps.f2").alias("fp2"), "garr",
-    )
+    g2 = arrays.selectExpr("doc", "CAST(size(garr) AS BIGINT) AS sz", f"{fps} AS __fps", "garr")
+    return g2.selectExpr("doc", "sz", "__fps.f1 AS fp1", "__fps.f2 AS fp2", "garr")
 
 
 # The content-identity key (module note above).
@@ -363,8 +356,10 @@ def _with_groups(stats: DataFrame) -> DataFrame:
     """Attach rep (min doc id) and gn (group size) over the
     CONTENT_KEY — one narrow shuffle of doc-cardinality rows (4 longs
     each), never gram rows."""
-    w = Window.partitionBy(*CONTENT_KEY)
-    return stats.withColumn("rep", F.min("doc").over(w)).withColumn("gn", F.count("*").over(w))
+    w = f"OVER (PARTITION BY {', '.join(CONTENT_KEY)})"
+    return stats.withColumn("rep", F.expr(f"min(doc) {w}")).withColumn(
+        "gn", F.expr(f"count(*) {w}")
+    )
 
 
 def _ident_member_pairs(
@@ -383,15 +378,15 @@ def _ident_member_pairs(
     groupBy runs with ZERO additional exchange (grouping by ``rep`` —
     the per-group min doc — is equivalent output-wise but forces a
     fresh shuffle)."""
-    small = groups.filter((F.col("gn") <= max_group) & (F.col("gn") >= 2))
+    small = groups.filter(f"gn <= {max_group} AND gn >= 2")
     clique = (
         small.groupBy(*CONTENT_KEY)
-        .agg(F.sort_array(F.collect_set("doc")).alias("docs"))
-        .select(F.explode(_bucket_pairs_expr()).alias("p"), *carry)
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"), *carry)
+        .agg(F.expr("sort_array(collect_set(doc)) AS docs"))
+        .selectExpr(f"explode({_bucket_pairs_expr()}) AS p", *carry)
+        .selectExpr("p.doc_a AS doc_a", "p.doc_b AS doc_b", *carry)
     )
-    star = groups.filter((F.col("gn") > max_group) & (F.col("doc") != F.col("rep"))).select(
-        F.col("rep").alias("doc_a"), F.col("doc").alias("doc_b"), *carry
+    star = groups.filter(f"gn > {max_group} AND doc != rep").selectExpr(
+        "rep AS doc_a", "doc AS doc_b", *carry
     )
     return clique.unionByName(star)
 
@@ -433,31 +428,31 @@ def _expand_cross(
     content, not the corpus — instead of the full doc-cardinality
     membership table."""
     ca_, cb_ = gn_cols
-    sized = cross.withColumn("__gna", F.col(ca_)).withColumn("__gnb", F.col(cb_))
+    sized = cross.withColumn("__gna", F.expr(ca_)).withColumn("__gnb", F.expr(cb_))
     # The cap rides the membership JOIN CONDITION: a pair past the cap
     # matches nothing, the left join keeps it once with NULL members,
     # and the coalesce below yields the rep↔rep bridge row.  One plan,
     # no filter-split + union — a union would duplicate the (expensive)
     # verify subtree into both arms and re-run it (measured ~1 s of
     # re-executed stages per pair query at bench scale).
-    small = F.col("__gna") * F.col("__gnb") <= F.lit(CROSS_MAX_PAIRS)
-    mem = groups.filter(F.col("gn") >= 2).select("doc", "rep")
-    a = mem.select(F.col("rep").alias("__ra"), F.col("doc").alias("__ma"))
-    b = mem.select(F.col("rep").alias("__rb"), F.col("doc").alias("__mb"))
-    ma = F.coalesce("__ma", "doc_a")
-    mb = F.coalesce("__mb", "doc_b")
-    swap = ma < mb
-    exprs = {c: F.col(c) for c in value_cols}
+    small = f"__gna * __gnb <= {CROSS_MAX_PAIRS}"
+    mem = groups.filter("gn >= 2").select("doc", "rep")
+    a = mem.selectExpr("rep AS __ra", "doc AS __ma")
+    b = mem.selectExpr("rep AS __rb", "doc AS __mb")
+    ma = "coalesce(__ma, doc_a)"
+    mb = "coalesce(__mb, doc_b)"
+    swap = f"{ma} < {mb}"
+    exprs = {c: c for c in value_cols}
     for ca, cb in swap_cols:
-        exprs[ca] = F.when(swap, F.col(ca)).otherwise(F.col(cb))
-        exprs[cb] = F.when(swap, F.col(cb)).otherwise(F.col(ca))
+        exprs[ca] = f"CASE WHEN {swap} THEN {ca} ELSE {cb} END"
+        exprs[cb] = f"CASE WHEN {swap} THEN {cb} ELSE {ca} END"
     return (
-        sized.join(a, (F.col("doc_a") == F.col("__ra")) & small, "left")
-        .join(b, (F.col("doc_b") == F.col("__rb")) & small, "left")
-        .select(
-            F.least(ma, mb).alias("doc_a"),
-            F.greatest(ma, mb).alias("doc_b"),
-            *[exprs[c].alias(c) for c in value_cols],
+        sized.join(a, F.expr(f"doc_a = __ra AND {small}"), "left")
+        .join(b, F.expr(f"doc_b = __rb AND {small}"), "left")
+        .selectExpr(
+            f"least({ma}, {mb}) AS doc_a",
+            f"greatest({ma}, {mb}) AS doc_b",
+            *[f"{exprs[c]} AS {c}" for c in value_cols],
         )
     )
 
@@ -476,8 +471,8 @@ def minhash_signatures(
     measured 60% slower.  Docs with fewer than n tokens are dropped.
     """
     arrays = _row_gram_arrays(df, id_col, text_col, n)
-    grams = arrays.select("doc", F.explode("garr").alias("g"))
-    return grams.groupBy("doc").agg(*_minhash_aggs(k, seed))
+    grams = arrays.selectExpr("doc", "explode(garr) AS g")
+    return grams.groupBy("doc").agg(*map(F.expr, _minhash_aggs(k, seed)))
 
 
 def lsh_candidate_pairs(
@@ -517,35 +512,32 @@ def lsh_candidate_pairs(
     — a few extra bytes per banded row instead of post-hoc join stages
     against a doc-cardinality table.
     """
-    banded = sig.select(
-        "doc", *carry, F.explode(_band_expr(k, bands)).alias("bk")
-    ).select("doc", *carry, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    banded = sig.selectExpr(
+        "doc", *carry, f"explode({_band_expr(k, bands)}) AS bk"
+    ).selectExpr("doc", *carry, "bk.band AS band", "bk.key AS key")
     # Size-gate FIRST (spill-safe window count), collect membership only
     # for surviving buckets: a hot bucket never reaches collect_set.
     # One row per (doc, band) → count == distinct docs in the bucket.
-    wsz = Window.partitionBy("band", "key")
-    gate = (F.col("n") >= 2) if max_bucket is None else (
-        (F.col("n") >= 2) & (F.col("n") <= max_bucket)
-    )
-    member = F.struct("doc", *carry) if carry else F.col("doc")
+    gate = "n >= 2" if max_bucket is None else f"n >= 2 AND n <= {max_bucket}"
+    member = f"struct({', '.join(('doc', *carry))})" if carry else "doc"
     buckets = (
-        banded.withColumn("n", F.count("*").over(wsz))
+        banded.withColumn("n", F.expr("count(*) OVER (PARTITION BY band, key)"))
         .filter(gate)
         .groupBy("band", "key")
         # sort_array on structs orders by the leading field (doc) —
         # same pair order as the plain-doc form
-        .agg(F.sort_array(F.collect_set(member)).alias("docs"))
+        .agg(F.expr(f"sort_array(collect_set({member})) AS docs"))
     )
     pair_cols = ["doc_a", "doc_b"] + [f"{c}_{s}" for c in carry for s in ("a", "b")]
-    out = buckets.select(F.explode(_bucket_pairs_expr(carry)).alias("p")).select(
-        *[F.col(f"p.{c}").alias(c) for c in pair_cols]
+    out = buckets.selectExpr(f"explode({_bucket_pairs_expr(carry)}) AS p").selectExpr(
+        *[f"p.{c} AS {c}" for c in pair_cols]
     )
     return out.distinct() if distinct_pairs else out
 
 
-@jvm_memo(maxsize=8)
-def _band_expr(k: int, bands: int) -> Column:
-    """Memoized band/key struct array over the fixed ``mh*`` columns."""
+def _band_expr(k: int, bands: int) -> str:
+    """The band/key struct array over the ``mh*`` columns: band ``bi``'s
+    key is its ``k // bands`` signature slots joined with ``_``."""
     if bands < 1 or k % bands:
         # bands > k would make rows = 0 → every band key the empty
         # string → the whole corpus in one bucket per band (silently
@@ -553,49 +545,34 @@ def _band_expr(k: int, bands: int) -> Column:
         # bands * rows == k; fail loudly instead.
         raise ValueError(f"bands must divide k (got k={k}, bands={bands})")
     rows = k // bands
-    return F.array(*[
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.concat_ws("_", *[F.col(f"mh{bi * rows + r}") for r in range(rows)]).alias("key"),
-        )
+    structs = (
+        f"named_struct('band', {bi}, 'key', concat_ws('_', "
+        + ", ".join(f"mh{bi * rows + r}" for r in range(rows))
+        + "))"
         for bi in range(bands)
-    ])
+    )
+    return f"array({', '.join(structs)})"
 
 
-@jvm_memo(maxsize=4)
-def _bucket_pairs_expr(carry: tuple[str, ...] = ()) -> Column:
-    """Memoized all-ordered-pairs (i < j) generator over the fixed
-    ``docs`` bucket-membership array, generated array-side.
+def _bucket_pairs_expr(carry: tuple[str, ...] = ()) -> str:
+    """All-ordered-pairs (i < j) generator over the ``docs``
+    bucket-membership array, generated array-side.
 
     With ``carry`` (e.g. ``("gn",)``) the array elements are structs
     ``(doc, *carry)`` and each pair emits ``doc_a, doc_b`` plus
     ``<c>_a, <c>_b`` for every carried field — how per-doc values
     (group sizes for the cross-expansion cap) ride the banding shuffle
     instead of paying join stages later."""
-    docs = F.col("docs")
     if not carry:
-        return F.flatten(
-            F.transform(
-                docs,
-                lambda x, i: F.transform(
-                    F.slice(docs, i + 2, F.greatest(F.size(docs) - i - 1, F.lit(0))),
-                    lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                ),
-            )
-        )
-    return F.flatten(
-        F.transform(
-            docs,
-            lambda x, i: F.transform(
-                F.slice(docs, i + 2, F.greatest(F.size(docs) - i - 1, F.lit(0))),
-                lambda y: F.struct(
-                    x["doc"].alias("doc_a"),
-                    y["doc"].alias("doc_b"),
-                    *[x[c].alias(f"{c}_a") for c in carry],
-                    *[y[c].alias(f"{c}_b") for c in carry],
-                ),
-            ),
-        )
+        pair = "named_struct('doc_a', x, 'doc_b', y)"
+    else:
+        fields = [("doc_a", "x.doc"), ("doc_b", "y.doc")]
+        fields += [(f"{c}_a", f"x.{c}") for c in carry]
+        fields += [(f"{c}_b", f"y.{c}") for c in carry]
+        pair = "named_struct(" + ", ".join(f"'{n}', {v}" for n, v in fields) + ")"
+    return (
+        "flatten(transform(docs, (x, i) -> transform("
+        f"slice(docs, i + 2, greatest(size(docs) - i - 1, 0)), y -> {pair})))"
     )
 
 
@@ -635,7 +612,7 @@ def minhash_dedup_pairs(
     deduped once, on the tiny persisted candidate set, instead of
     paying an extra exchange over all banded rows.
 
-    Content-identity collapse (r5, module-level note): stats ride the
+    Content-identity collapse (module-level note): stats ride the
     signature aggregation for free, banding sees one representative per
     distinct gram set, identical-group pairs are emitted by expansion
     (never banded, never verified), and verified rep pairs expand back
@@ -654,7 +631,7 @@ def minhash_dedup_pairs(
     # Persist the ARRAY form (one row per doc): the signature
     # aggregation reads it through a map-side explode, and the verify
     # semi-joins the arrays directly — no collect_set exchange to
-    # rebuild sets the scan already produced (r7; measured ~0.5 s off
+    # rebuild sets the scan already produced (measured ~0.5 s off
     # the bench verify tail).
     arrays = persist_tracked(_row_gram_arrays(df, id_col, text_col, n))
     return minhash_pairs_from_grams(
@@ -686,11 +663,10 @@ def minhash_pairs_from_grams(
     Contract: each ``garr`` is DISTINCT — signature MINs are
     multiset-insensitive but the content stats that ride the same
     aggregation are not."""
-    grams = arrays.select("doc", F.explode("garr").alias("g"))
-    sigg = persist_tracked(
-        _with_groups(grams.groupBy("doc").agg(*_minhash_aggs(k, seed), *_stat_aggs()))
-    )
-    reps = sigg.filter(F.col("doc") == F.col("rep"))
+    grams = arrays.selectExpr("doc", "explode(garr) AS g")
+    aggs = map(F.expr, (*_minhash_aggs(k, seed), *_stat_aggs()))
+    sigg = persist_tracked(_with_groups(grams.groupBy("doc").agg(*aggs)))
+    reps = sigg.filter("doc = rep")
     cand = persist_tracked(
         lsh_candidate_pairs(
             reps, k, bands, max_bucket=max_bucket, distinct_pairs=False, carry=("gn",)
@@ -698,12 +674,12 @@ def minhash_pairs_from_grams(
     )
     n_pairs = cand.count()
     cand_docs = _probe_doc_ids(cand, n_pairs)
-    doc_sets = arrays.join(F.broadcast(cand_docs), "doc", "left_semi").select(
-        "doc", F.col("garr").alias("sset")
+    doc_sets = arrays.join(F.broadcast(cand_docs), "doc", "left_semi").selectExpr(
+        "doc", "garr AS sset"
     )
     cross = _jaccard_verify(cand.distinct(), doc_sets, threshold)
     return _expand_cross(cross, sigg, ["jaccard"], ("gn_a", "gn_b")).unionByName(
-        _ident_member_pairs(sigg, max_group).withColumn("jaccard", F.lit(1.0))
+        _ident_member_pairs(sigg, max_group).withColumn("jaccard", F.expr(_dlit(1.0)))
     )
 
 
@@ -719,7 +695,7 @@ def _jaccard_verify(
     aggregation shuffle.  ``doc_sets`` are :func:`_row_gram_arrays`
     arrays, built map-side or read from the gram log.
 
-    Size-ratio pre-gate (r5): Jaccard is bounded above by
+    Size-ratio pre-gate: Jaccard is bounded above by
     min(|A|,|B|) / max(|A|,|B|), so pairs failing that ratio against
     ``threshold`` are dropped BEFORE their ``array_intersect`` is ever
     evaluated: the gate filter references only the (already joined)
@@ -735,35 +711,34 @@ def _jaccard_verify(
 
     ``size(sset)`` over the distinct-gram set IS the distinct-gram
     count the signature aggregation provides."""
-    a = doc_sets.select(F.col("doc").alias("doc_a"), F.col("sset").alias("set_a"))
-    b = doc_sets.select(F.col("doc").alias("doc_b"), F.col("sset").alias("set_b"))
+    a = doc_sets.selectExpr("doc AS doc_a", "sset AS set_a")
+    b = doc_sets.selectExpr("doc AS doc_b", "sset AS set_b")
     extra = [c for c in cand.columns if c not in ("doc_a", "doc_b")]
+    t = _dlit(threshold)
     return (
         cand.select("doc_a", "doc_b", *extra)
         .join(a, "doc_a")
         .join(b, "doc_b")
-        .select(
+        .selectExpr(
             "doc_a",
             "doc_b",
             *extra,
             "set_a",
             "set_b",
-            F.size("set_a").alias("sz_a"),
-            F.size("set_b").alias("sz_b"),
+            "size(set_a) AS sz_a",
+            "size(set_b) AS sz_b",
         )
-        .filter(F.least("sz_a", "sz_b") / F.greatest("sz_a", "sz_b") >= F.lit(threshold))
-        .select(
+        .filter(f"least(sz_a, sz_b) / greatest(sz_a, sz_b) >= {t}")
+        .selectExpr(
             "doc_a",
             "doc_b",
             *extra,
-            F.size(F.array_intersect("set_a", "set_b")).alias("inter"),
+            "size(array_intersect(set_a, set_b)) AS inter",
             "sz_a",
             "sz_b",
         )
-        .withColumn(
-            "jaccard", F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-        )
-        .filter(F.col("jaccard") >= threshold)
+        .withColumn("jaccard", F.expr("inter / (sz_a + sz_b - inter)"))
+        .filter(f"jaccard >= {t}")
         .select("doc_a", "doc_b", *extra, "jaccard")
     )
 
@@ -806,7 +781,7 @@ def gram_log_append_batch(
     MIN-idempotent for signatures, but inflating set-size denominators
     downstream.  ``validate_fresh_ids`` refuses a re-appended
     tombstoned doc id."""
-    ids = batch_df.select(F.col(id_col).alias("doc"))
+    ids = batch_df.selectExpr(f"{id_col} AS doc")
     if admit_append(
         store_dir, _GRAM_LOG, ids, batch_id, "gram_log_append_batch", validate_fresh_ids
     ):
@@ -823,7 +798,7 @@ def gram_log_delete_batch(
     of the reference's table-layer reconciliation
     (delete-removed-tickets.py:138-169).  Each doc is one row, so
     deletion needs no stat folding."""
-    delete_rows(store_dir, _GRAM_LOG, ids.select(F.col(id_col).alias("doc")), batch_id)
+    delete_rows(store_dir, _GRAM_LOG, ids.selectExpr(f"{id_col} AS doc"), batch_id)
 
 
 def load_gram_log(spark, store_dir: str) -> DataFrame:

@@ -1,19 +1,26 @@
-"""Portable deterministic hashing used by dedup / similarity.
+"""Portable deterministic hashing used by dedup / similarity, and the
+exact double literal every SQL-text plan builder uses.
 
 ``portable_hash`` is the first 60 bits of md5, reduced mod a prime.
 md5 exists as a codegen'd builtin on BOTH engines (Spark ``md5`` /
 DuckDB ``md5``, identical lowercase-hex output on UTF-8 bytes), so the
 Spark side is pure JVM whole-stage-codegen — ``conv(substring(md5(x),
 1, 15), 16, 10)`` — while the DuckDB oracle reproduces it bit-exactly
-with a 15-step hex-digit fold (oracle-side cost is irrelevant).
-
-This replaced a character-fold polynomial hash (``aggregate(split(
-...))``): interpreted higher-order lambdas are not whole-stage-codegen'd
-and the char-fold was 27% of the whole round-1 bench (VERDICT.md perf
-section).  Same portability, ~10x cheaper on the Spark side.
+with a 15-step hex-digit fold (oracle-side cost is irrelevant).  A
+character-fold polynomial hash (``aggregate(split(...))``) would be as
+portable but runs as an interpreted lambda, outside whole-stage
+codegen, at about ten times the Spark-side cost.
 
 (Spark's native ``xxhash64`` is faster still but not reproducible in
 DuckDB; swap it in via ``fast=True`` when oracle parity is not needed.)
+
+SQL-text builders: :func:`affine` returns Spark SQL text, and
+:func:`_dlit` writes a double literal that parses back bit-identical.
+In PySpark classic every ``F.col`` call and ``Column`` method captures
+the Python call site for DataFrame debugging (a stack walk plus about
+ten py4j round trips; the first capture imports IPython), while one
+``F.expr`` string costs three round trips however large it is — so the
+curation plans are written as SQL text and wrapped once.
 """
 
 from __future__ import annotations
@@ -55,7 +62,7 @@ def _gateway_epoch() -> int:
 
 def jvm_memo(maxsize: int = 8):
     """``lru_cache`` for memoized Column-tree builders, additionally
-    keyed on the ACTIVE py4j gateway's epoch (ADVICE r4): a classic-mode
+    keyed on the ACTIVE py4j gateway's epoch: a classic-mode
     Column pins a py4j JVM object handle, so a cache that outlives a
     gateway shutdown/relaunch (embedding hosts, harnesses calling
     ``SparkContext._gateway.shutdown``) would serve dead handles until
@@ -157,10 +164,21 @@ def portable_hash_sql(expr: str) -> str:
     return f"({portable_hash64_sql(expr)} % {MOD})"
 
 
-def affine(h: Column, a: int, b: int) -> Column:
-    """One universal-hash family member ``(a*h + b) mod MOD`` — the
-    MinHash permutation."""
-    return (h * F.lit(a) + F.lit(b)) % F.lit(MOD)
+def affine(h: str, a: int, b: int) -> str:
+    """One universal-hash family member ``(a*h + b) mod MOD`` over the
+    SQL expression ``h`` — the MinHash permutation, as SQL text.  The
+    DuckDB twins spell the same ``(g * a + b) % MOD``."""
+    return f"(({h} * {a} + {b}) % {MOD})"
+
+
+def _dlit(x: float) -> str:
+    """Exact SQL double literal: ``repr`` is the shortest string that
+    round-trips in IEEE binary64, and Spark's parser reads ``...D``
+    literals with Java's correctly-rounded ``parseDouble``, so the
+    parsed double is BIT-IDENTICAL to the Python float (subnormals,
+    -0.0 and 17-significant-digit values included; tier-1 checks them).
+    A bare ``0.4`` would parse as DECIMAL, not DOUBLE."""
+    return repr(float(x)) + "D"
 
 
 def hash_params(k: int, seed: int = 42) -> list[tuple[int, int]]:

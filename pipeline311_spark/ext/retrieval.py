@@ -1,11 +1,11 @@
 """Lexical retrieval as a STORED index (BM25) plus rank fusion.
 
-The r7 BM25 query recomputed tf/df/avgdl from raw text on every run —
-fine for a one-shot query, wrong at corpus scale where retrieval is a
-serving workload: the index must be a per-corpus-version ARTIFACT,
-built once, stored, and incrementally maintained, exactly like the
-stored gram log the MinHash family uses (ext/dedup.py,
-``minhash_pairs_from_grams``).
+Recomputing tf/df/avgdl from raw text on every run (the query-local
+path, plans/curation3.bm25_scored_frame) is fine for a one-shot query
+and wrong at corpus scale, where retrieval is a serving workload: the
+index is a per-corpus-version ARTIFACT, built once, stored, and
+incrementally maintained, like the stored gram log the MinHash family
+uses (ext/dedup.py, ``minhash_pairs_from_grams``).
 
 Index contract (two tables, both parquet):
 
@@ -43,16 +43,23 @@ live corpus; the registry queries ``text_bm25_delete_merge``
 batches, a delete, a compaction) prove it under the oracle gate (the
 DuckDB twin is a fresh build over the remaining docs).
 
-Scoring (:func:`bm25_score_topk`) keeps the r7 cross-engine
+Scoring (:func:`bm25_score_topk`) keeps the cross-engine
 discipline: per-term contributions are folded in SORTED TERM ORDER so
 the floating sum is order-identical everywhere, ranks are compared on
 ``round(score, 6)`` with a doc-id tiebreak, and callers drop the
 ln-based double before any oracle hash (DuckDB ``ln`` vs JVM
 ``Math.log`` can differ by 1 ulp — plans/curation3.py).
 
+The index build and serve plans are Spark SQL text (``selectExpr``,
+string ``filter``, ``F.expr`` wrapped once per expression, SQL window
+and lambda syntax; doubles through
+:func:`~pipeline311_spark.ext.hashing._dlit`): no ``F.col`` call or
+``Column`` method runs on them, so building a plan runs no PySpark
+call-site capture (ext/hashing.py module note).
+
 Rank fusion (:func:`rrf_fuse`): reciprocal-rank fusion over a VARIABLE
-set of rankers (r7 shipped the lexical+dense pair hardcoded; production
-fusion takes N lists — lexical, dense, recency, click models...).  The
+set of rankers (production fusion takes N lists — lexical, dense,
+recency, click models...).  The
 fused score is Σ 1/(C + rank_i) summed in FIXED RANKER ORDER (one
 pivoted column per ranker, an expression-tree sum — not an aggregation
 over rows, whose order Spark does not define), so the double is
@@ -83,7 +90,7 @@ from pipeline311_spark.ext.artifact import (
     tombstone_dir,
     tombstone_schema,
 )
-from pipeline311_spark.ext.hashing import meta_df
+from pipeline311_spark.ext.hashing import _dlit, meta_df
 from pipeline311_spark.ext.textstats import tokens
 
 BM25_K1 = 1.2
@@ -104,9 +111,9 @@ def _bm25_token_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     derive from (``dl = size(tokens(text))``; NULL text absent from
     the index — the engine-wide failed-decode convention)."""
     return (
-        df.filter(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("doc_id"), tokens(text_col).alias("tk"))
-        .select("doc_id", F.size("tk").cast("long").alias("dl"), "tk")
+        df.filter(f"{text_col} IS NOT NULL")
+        .selectExpr(f"{id_col} AS doc_id", f"{tokens(text_col)} AS tk")
+        .selectExpr("doc_id", "CAST(size(tk) AS BIGINT) AS dl", "tk")
     )
 
 
@@ -116,10 +123,10 @@ def _postings_from_base(base: DataFrame) -> DataFrame:
     partials, not the raw token stream (zero-token docs vanish at the
     explode)."""
     return (
-        base.select("doc_id", "dl", F.explode("tk").alias("tok"))
-        .select("doc_id", "dl", F.lower("tok").alias("term"))
+        base.selectExpr("doc_id", "dl", "explode(tk) AS tok")
+        .selectExpr("doc_id", "dl", "lower(tok) AS term")
         .groupBy("term", "doc_id", "dl")
-        .agg(F.count("*").cast("long").alias("tf"))
+        .agg(F.expr("CAST(count(*) AS BIGINT) AS tf"))
         .select("term", "doc_id", "tf", "dl")
     )
 
@@ -128,8 +135,8 @@ def _corpus_stats_from_base(base: DataFrame) -> DataFrame:
     """(n_docs, sum_dl) from a token base — counts every non-NULL-text
     doc (including zero-token docs, which produce no postings)."""
     return base.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.sum("dl").cast("long").alias("sum_dl"),
+        F.expr("CAST(count(*) AS BIGINT) AS n_docs"),
+        F.expr("CAST(sum(dl) AS BIGINT) AS sum_dl"),
     )
 
 
@@ -196,39 +203,30 @@ def bm25_score_topk(
             "query_id long, rank long, doc_id long, bm25 double, tf_sum long, dl long",
         )
     avgdl = float(sum_dl) / n_docs
+    half = _dlit(0.5)
+    idf = f"ln({_dlit(1.0)} + (({n_docs} - df + {half}) / (df + {half})))"
+    norm = f"({_dlit(1.0 - b)} + {_dlit(b)} * dl / {_dlit(avgdl)})"
     contrib = (
         hits.repartition("query_id")
-        .withColumn("df", F.count("*").over(Window.partitionBy("query_id", "term")))
+        .withColumn("df", F.expr("count(*) OVER (PARTITION BY query_id, term)"))
         .withColumn(
             "c",
-            F.log(
-                F.lit(1.0)
-                + ((F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            )
-            * (F.col("tf") * F.lit(k1 + 1.0))
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.lit(avgdl))
-            ),
+            F.expr(f"{idf} * (tf * {_dlit(k1 + 1.0)}) / (tf + {_dlit(k1)} * {norm})"),
         )
     )
     scored = contrib.groupBy("query_id", "doc_id").agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "c"))),
-            F.lit(0.0),
-            lambda a, s: a + s["c"],
-        ).alias("score"),
-        F.sum("tf").cast("long").alias("tf_sum"),
-        F.min("dl").cast("long").alias("dl"),
+        F.expr(
+            "aggregate(array_sort(collect_list(struct(term, c))), "
+            f"{_dlit(0.0)}, (a, s) -> a + s.c) AS score"
+        ),
+        F.expr("CAST(sum(tf) AS BIGINT) AS tf_sum"),
+        F.expr("CAST(min(dl) AS BIGINT) AS dl"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("score", 6).desc(), F.col("doc_id")
-    )
+    rank = "row_number() OVER (PARTITION BY query_id ORDER BY round(score, 6) DESC, doc_id)"
     return (
-        scored.withColumn("bm25", F.round("score", 6))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
+        scored.withColumn("bm25", F.expr("round(score, 6)"))
+        .withColumn("rank", F.expr(f"CAST({rank} AS BIGINT)"))
+        .filter(f"`rank` <= {k}")
         .select("query_id", "rank", "doc_id", "bm25", "tf_sum", "dl")
     )
 
@@ -280,8 +278,8 @@ _POSTINGS = RowLog(
 
 def _fold_corpus_stats(log: DataFrame) -> DataFrame:
     return log.agg(
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.sum("sum_dl").cast("long").alias("sum_dl"),
+        F.expr("CAST(sum(n_docs) AS BIGINT) AS n_docs"),
+        F.expr("CAST(sum(sum_dl) AS BIGINT) AS sum_dl"),
     )
 
 
@@ -320,7 +318,7 @@ def bm25_index_append_batch(
     Residual window of the post-fold replay guard: a replayed batch of
     ONLY zero-token docs leaves neither postings nor tombstones to
     probe, and double-counts n_docs; real batches carry tokens."""
-    ids = batch_df.select(F.col(id_col).alias("doc_id"))
+    ids = batch_df.selectExpr(f"{id_col} AS doc_id")
     if not admit_append(
         index_dir, _POSTINGS, ids, batch_id, "bm25_index_append_batch",
         validate_fresh_ids, _SUMS,
@@ -374,7 +372,7 @@ def bm25_index_delete_batch(
     ids and proceeds."""
     recover_family(index_dir, _POSTINGS, _SUMS)
     neg_bid = -(int(batch_id) + 2)
-    ids = batch_df.select(F.col(id_col).alias("doc_id"))
+    ids = batch_df.selectExpr(f"{id_col} AS doc_id")
     own = (
         tombstone_dir(os.path.join(index_dir, _POSTINGS.sub)),
         tombstone_schema("doc_id"),
@@ -392,9 +390,9 @@ def bm25_index_delete_batch(
         (
             (
                 _CORPUS_STATS,
-                removed.select(
-                    (-F.col("n_docs")).cast("long").alias("n_docs"),
-                    (-F.col("sum_dl")).cast("long").alias("sum_dl"),
+                removed.selectExpr(
+                    "CAST(-n_docs AS BIGINT) AS n_docs",
+                    "CAST(-sum_dl AS BIGINT) AS sum_dl",
                 ),
             ),
         ),
@@ -478,7 +476,6 @@ def rrf_fuse(
     # (query_id, doc_id) pairs (every top-k producer in this repo emits
     # row_number ranks), but if a caller ever passes duplicates the
     # pivot must keep the doc's BEST rank, not silently its worst
-    # (ADVICE r8)
     pivoted = tagged.groupBy("query_id", "doc_id").agg(
         *[
             F.min(F.when(F.col("__ranker") == i, F.col("__r")))

@@ -1,16 +1,24 @@
-"""Text analysis operators over a document table (north star).
+"""Text analysis operators over a document table (north star):
+language ID, quality scoring, token counting, fingerprinting.
 
-All pure Column expressions (JVM-side, whole-stage codegen) — language
-ID, quality scoring, token counting, fingerprinting.  Heuristics are
-deliberately simple and *portable* (the DuckDB oracle reproduces them),
-which is exactly what you want at 100 TB: a cheap first-pass filter
-before any model-based scoring.
+Contract: every expression builder here takes Spark SQL text (a column
+name or any SQL expression) and returns Spark SQL text; a caller that
+needs a ``Column`` wraps the result once with ``F.expr`` (or passes it
+to ``selectExpr`` / a string ``filter``).  No builder calls ``F.col`` or
+a ``Column`` method, so building a plan runs no PySpark call-site
+capture (ext/hashing.py module note).  Double literals go through
+:func:`~pipeline311_spark.ext.hashing._dlit`.  The expressions are
+JVM-side and whole-stage codegen'd apart from the array lambdas.
+
+Heuristics are deliberately simple and *portable*: the DuckDB oracle
+twins (plans/extensions.py ``_tok_array_sql``, ``_quality_score_sql``,
+``_lang_hits_sql``) reproduce them, which is what a cheap first-pass
+filter before any model-based scoring needs at 100 TB.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from pipeline311_spark.ext.hashing import _dlit
 
 # Tiny distinctive-stopword lists per language for the n-gram/stopword
 # language-ID heuristic.  Order matters: ties break by list order.
@@ -25,108 +33,111 @@ LANG_MARKERS: dict[str, list[str]] = {
 PUNCT_CLASS = r"[.,!?;:]"
 
 
-def ws_trim(col: Column | str) -> Column:
-    """Trim ALL leading/trailing whitespace.  ``F.trim`` strips spaces
-    only, so tab/newline-padded text slipped past the empty guard and
-    ``split`` emitted phantom '' tokens (tokens('\\t') was 2 — caught
-    by the Python ground-truth property test, with the DuckDB oracle
-    mirroring the same wrong answer via SQL ``trim``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, r"^\s+|\s+$", "")
+def _str_array(items: list[str]) -> str:
+    return "array(" + ", ".join(f"'{m}'" for m in items) + ")"
 
 
-def tokens(col: Column | str) -> Column:
+def ws_trim(expr: str) -> str:
+    """Trim ALL leading/trailing whitespace.  SQL ``trim`` strips spaces
+    only, so tab/newline-padded text would slip past the empty guard
+    and ``split`` would emit phantom '' tokens (``tokens('\\t')`` would
+    be 2; the Python ground-truth property test pins this)."""
+    return f"regexp_replace({expr}, r'^\\s+|\\s+$', '')"
+
+
+def tokens(expr: str) -> str:
     """Whitespace tokenization of trimmed text; ''/whitespace-only ->
-    empty array."""
-    c = F.col(col) if isinstance(col, str) else col
-    t = ws_trim(c)
-    return F.when(t == "", F.array().cast("array<string>")).otherwise(F.split(t, r"\s+"))
+    empty array, NULL -> NULL."""
+    t = ws_trim(expr)
+    return (
+        f"CASE WHEN {t} = '' THEN CAST(array() AS ARRAY<STRING>) "
+        f"ELSE split({t}, r'\\s+') END"
+    )
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
+def token_count(expr: str) -> str:
+    return f"size({tokens(expr)})"
 
 
-def marker_hits(col: Column | str, markers: list[str]) -> Column:
-    toks = tokens(col)
-    arr = F.array([F.lit(m) for m in markers])
-    return F.size(F.filter(toks, lambda t: F.array_contains(arr, F.lower(t))))
+def marker_hits(expr: str, markers: list[str]) -> str:
+    """How many tokens of ``expr`` are (case-insensitively) in ``markers``."""
+    return (
+        f"size(filter({tokens(expr)}, "
+        f"t -> array_contains({_str_array(markers)}, lower(t))))"
+    )
 
 
-def lang_scores_on_tokens(toks_lower: Column) -> dict[str, Column]:
+def lang_scores_on_tokens(toks_lower: str) -> dict[str, str]:
     """Per-language marker-hit counts over an ALREADY-lowered token
-    array column (evaluate ``transform(tokens(c), lower)`` once in a
-    prior select so the tokenization isn't re-inlined per language)."""
+    array expression (evaluate ``transform(tokens(c), x -> lower(x))``
+    once in a prior select so the tokenization isn't re-inlined per
+    language)."""
     return {
-        lang: F.size(
-            F.filter(
-                toks_lower,
-                lambda t: F.array_contains(F.array([F.lit(m) for m in ms]), t),
-            )
-        )
+        lang: f"size(filter({toks_lower}, t -> array_contains({_str_array(ms)}, t)))"
         for lang, ms in LANG_MARKERS.items()
     }
 
 
-def lang_pred_from_scores(scores: dict[str, Column], min_hits: int = 1) -> Column:
-    """Argmax over per-language score columns (first-listed wins ties);
-    fewer than ``min_hits`` total -> 'und'."""
+def lang_pred_from_scores(scores: dict[str, str], min_hits: int = 1) -> str:
+    """Argmax over per-language score expressions (first-listed wins
+    ties); fewer than ``min_hits`` total -> 'und'."""
     langs = list(scores)
-    best = F.greatest(*[scores[lg] for lg in langs]) if len(langs) > 1 else scores[langs[0]]
-    pred = F.lit("und")
+    best = f"greatest({', '.join(scores[lg] for lg in langs)})" if len(langs) > 1 else scores[langs[0]]
+    pred = "'und'"
     for lg in reversed(langs):
-        pred = F.when(scores[lg] == best, F.lit(lg)).otherwise(pred)
-    return F.when(best >= min_hits, pred).otherwise(F.lit("und"))
+        pred = f"CASE WHEN {scores[lg]} = {best} THEN '{lg}' ELSE {pred} END"
+    return f"CASE WHEN {best} >= {min_hits} THEN {pred} ELSE 'und' END"
 
 
-def punct_count(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c) - F.length(F.regexp_replace(c, PUNCT_CLASS, ""))
+def punct_count(expr: str) -> str:
+    return f"(length({expr}) - length(regexp_replace({expr}, r'{PUNCT_CLASS}', '')))"
 
 
-def quality_features(col: Column | str) -> dict[str, Column]:
+def quality_features(expr: str) -> dict[str, str]:
     """The standard cheap quality signals: length, token stats,
     punctuation ratio, lexical diversity (uniq/total tokens), stopword
-    ratio.  Deterministic integer/double arithmetic only."""
-    c = F.col(col) if isinstance(col, str) else col
-    toks = tokens(c)
-    n_tok = F.size(toks).cast("double")
-    n_chars = F.length(c).cast("double")
-    uniq = F.size(F.array_distinct(F.transform(toks, F.lower))).cast("double")
-    stop = marker_hits(c, LANG_MARKERS["en"]).cast("double")
+    ratio.  Deterministic integer/double arithmetic only; every value
+    is a DOUBLE."""
+    toks = tokens(expr)
+    n_tok = f"CAST(size({toks}) AS DOUBLE)"
+    n_chars = f"CAST(length({expr}) AS DOUBLE)"
+    uniq = f"CAST(size(array_distinct(transform({toks}, x -> lower(x)))) AS DOUBLE)"
+    stop = f"CAST({marker_hits(expr, LANG_MARKERS['en'])} AS DOUBLE)"
+    zero = _dlit(0.0)
     return {
         "n_chars": n_chars,
         "n_tokens": n_tok,
-        "mean_token_len": F.when(n_tok > 0, (n_chars - (n_tok - 1)) / n_tok).otherwise(F.lit(0.0)),
-        "punct_ratio": F.when(n_chars > 0, punct_count(c).cast("double") / n_chars).otherwise(F.lit(0.0)),
-        "lexical_diversity": F.when(n_tok > 0, uniq / n_tok).otherwise(F.lit(0.0)),
-        "stopword_ratio": F.when(n_tok > 0, stop / n_tok).otherwise(F.lit(0.0)),
+        "mean_token_len": f"CASE WHEN {n_tok} > 0 THEN ({n_chars} - ({n_tok} - 1)) / {n_tok} ELSE {zero} END",
+        "punct_ratio": f"CASE WHEN {n_chars} > 0 THEN CAST({punct_count(expr)} AS DOUBLE) / {n_chars} ELSE {zero} END",
+        "lexical_diversity": f"CASE WHEN {n_tok} > 0 THEN {uniq} / {n_tok} ELSE {zero} END",
+        "stopword_ratio": f"CASE WHEN {n_tok} > 0 THEN {stop} / {n_tok} ELSE {zero} END",
     }
 
 
-def quality_score(col: Column | str) -> Column:
+def quality_score(expr: str) -> str:
     """Composite in [0,1]: rewards mid-length docs with diverse tokens
-    and some (but not excessive) stopwords/punctuation."""
-    f = quality_features(col)
-    len_score = F.least(f["n_tokens"] / F.lit(64.0), F.lit(1.0))
+    and some (but not excessive) stopwords/punctuation.  DuckDB twin:
+    plans/extensions.py ``_quality_score_sql``."""
+    f = quality_features(expr)
+    one = _dlit(1.0)
+    len_score = f"least({f['n_tokens']} / {_dlit(64.0)}, {one})"
     return (
-        F.lit(0.4) * len_score
-        + F.lit(0.3) * f["lexical_diversity"]
-        + F.lit(0.2) * F.least(f["stopword_ratio"] * 4, F.lit(1.0))
-        + F.lit(0.1) * (F.lit(1.0) - F.least(f["punct_ratio"] * 10, F.lit(1.0)))
+        f"({_dlit(0.4)} * {len_score}"
+        f" + {_dlit(0.3)} * {f['lexical_diversity']}"
+        f" + {_dlit(0.2)} * least({f['stopword_ratio']} * 4, {one})"
+        f" + {_dlit(0.1)} * ({one} - least({f['punct_ratio']} * 10, {one})))"
     )
 
 
-def normalize_text(col: Column | str) -> Column:
+def normalize_text(expr: str) -> str:
     """Fingerprint normalization: lowercase, collapse whitespace, trim."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+    return f"trim(regexp_replace(lower({expr}), r'\\s+', ' '))"
 
 
-def fingerprint(col: Column | str) -> Column:
+def fingerprint(expr: str) -> str:
     """Document fingerprint = md5 of normalized text.  Identical docs
     (modulo case/whitespace) collide — the exact-dedup key."""
-    return F.md5(normalize_text(col))
+    return f"md5({normalize_text(expr)})"
 
 
 def chunk_token_windows(
@@ -151,23 +162,22 @@ def chunk_token_windows(
     """
     from pyspark.sql import functions as F
 
-    toks = tokens(F.col(text_col))
     base = (
-        df.select(F.col(id_col), *[F.col(c) for c in carry], toks.alias("__toks"))
-        .withColumn("__n", F.size("__toks"))
-        .filter(F.col("__n") > 0)
+        df.selectExpr(id_col, *carry, f"{tokens(text_col)} AS __toks")
+        .withColumn("__n", F.expr("size(__toks)"))
+        .filter("__n > 0")
     )
-    starts = F.sequence(F.lit(0), F.col("__n") - 1, F.lit(stride))
     return (
-        base.select(
-            id_col, *carry, "__toks", "__n", F.posexplode(starts).alias("chunk_idx", "__start")
+        base.selectExpr(
+            id_col, *carry, "__toks", "__n",
+            f"posexplode(sequence(0, __n - 1, {int(stride)})) AS (chunk_idx, __start)",
         )
-        .withColumn("__chunk", F.slice("__toks", F.col("__start") + 1, size))
-        .select(
+        .withColumn("__chunk", F.expr(f"slice(__toks, __start + 1, {int(size)})"))
+        .selectExpr(
             id_col,
             *carry,
-            F.col("chunk_idx").cast("long"),
-            F.size("__chunk").cast("long").alias("n_chunk_tokens"),
-            F.array_join("__chunk", " ").alias("chunk_text"),
+            "CAST(chunk_idx AS BIGINT) AS chunk_idx",
+            "CAST(size(__chunk) AS BIGINT) AS n_chunk_tokens",
+            "array_join(__chunk, ' ') AS chunk_text",
         )
     )

@@ -80,7 +80,7 @@ FROM s
 )
 def q_curation_end_to_end(spark, sf_dir):
     d = table(spark, sf_dir, "documents").filter(F.col("lang").isin(*_CUR_LANGS))
-    kept = d.filter(quality_score("text") >= _CUR_MIN_QUALITY)
+    kept = d.filter(F.expr(quality_score("text")) >= _CUR_MIN_QUALITY)
     deduped = exact_dedup(kept, "doc_id", "text")
     chunks = chunk_token_windows(
         deduped, "doc_id", "text", size=_CHUNK, stride=_STRIDE, carry=("lang",)

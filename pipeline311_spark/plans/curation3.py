@@ -128,7 +128,7 @@ def bm25_scored_frame(spark, sf_dir):
     q = F.broadcast(_query_frame(spark))
     # corpus pass 1: map-side partial aggregate, one stats row back to
     # the driver — the kernel plans the corpus sums as literals
-    stats = d.select(token_count("text").cast("long").alias("dl")).agg(
+    stats = d.selectExpr(f"CAST({token_count('text')} AS BIGINT) AS dl").agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
     ).collect()[0]
     # corpus pass 2 (the last): token explode with the per-doc length
@@ -139,7 +139,7 @@ def bm25_scored_frame(spark, sf_dir):
     # query_id; a query's scored docs already meet in one task at its
     # rank window, so that partitioning adds no new skew class
     toks = (
-        d.select("doc_id", tokens("text").alias("tk"))
+        d.selectExpr("doc_id", f"{tokens('text')} AS tk")
         .select(
             "doc_id",
             F.size("tk").cast("long").alias("dl"),
@@ -288,7 +288,7 @@ def _full_pipeline_frame(spark, sf_dir):
     base = d.filter(
         F.col("lang").isin(*_FP_LANGS) & (F.col("source") != _FP_EVAL_SRC)
     )
-    kept = base.filter(quality_score("text") >= _FP_MIN_QS)
+    kept = base.filter(F.expr(quality_score("text")) >= _FP_MIN_QS)
     deduped = exact_dedup(kept, "doc_id", "text")
     # decontamination: eval grams broadcast into a map-side join over
     # the (scan-side) training gram stream — that side is bounded by

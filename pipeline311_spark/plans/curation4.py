@@ -71,15 +71,13 @@ FROM v_old o FULL OUTER JOIN v_new n ON o.doc_id = n.doc_id
 def q_version_diff(spark, sf_dir):
     base = table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     v_old = base.filter(F.col("doc_id") % _VD_ADD_MOD != _VD_ADD_RES).select(
-        "doc_id", fingerprint("text").alias("fp_old")
+        "doc_id", F.expr(fingerprint("text")).alias("fp_old")
     )
-    revised = F.col("doc_id") % _VD_CHG_MOD == _VD_CHG_RES
+    revised = f"doc_id % {_VD_CHG_MOD} = {_VD_CHG_RES}"
     v_new = base.filter(F.col("doc_id") % _VD_REM_MOD != _VD_REM_RES).select(
         "doc_id",
-        fingerprint(
-            F.when(revised, F.concat(F.col("text"), F.lit(_VD_REV))).otherwise(
-                F.col("text")
-            )
+        F.expr(
+            fingerprint(f"CASE WHEN {revised} THEN concat(text, '{_VD_REV}') ELSE text END")
         ).alias("fp_new"),
     )
     # ONE co-partitioned full-outer join on doc_id; fingerprints are

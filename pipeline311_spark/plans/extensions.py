@@ -165,8 +165,7 @@ FROM documents GROUP BY 1 HAVING COUNT(*) > 1
 @register("dedup_exact_groups", _EXACT_SQL, covers=("ext:dedup", "A6"))
 def q_exact_groups(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
-    key = fingerprint(F.substring("text", 1, 80))
-    return exact_dup_groups(d, "doc_id", "text", key=key)
+    return exact_dup_groups(d, "doc_id", "text", key=fingerprint("substring(text, 1, 80)"))
 
 
 # -- MinHash + LSH ----------------------------------------------------------
@@ -317,14 +316,14 @@ def q_lang_id(spark, sf_dir):
     # argmax over score ATTRIBUTES — CollapseProject cannot re-inline
     # non-cheap exprs referenced more than once, so none are duplicated
     # (vs 2L+ tokenizations per row in the single-Column form).
-    toks = d.select("lang", F.transform(tokens("text"), F.lower).alias("__tl"))
-    score_cols = lang_scores_on_tokens(F.col("__tl"))
-    scored = toks.select(
-        "lang", *[c.alias(f"__s_{lg}") for lg, c in score_cols.items()]
+    toks = d.selectExpr("lang", f"transform({tokens('text')}, x -> lower(x)) AS __tl")
+    score_cols = lang_scores_on_tokens("__tl")
+    scored = toks.selectExpr(
+        "lang", *[f"{c} AS __s_{lg}" for lg, c in score_cols.items()]
     )
-    pred = lang_pred_from_scores({lg: F.col(f"__s_{lg}") for lg in score_cols})
-    return scored.groupBy("lang", pred.alias("predicted_lang")).agg(
-        F.count("*").alias("n_docs")
+    pred = lang_pred_from_scores({lg: f"__s_{lg}" for lg in score_cols})
+    return scored.groupBy("lang", F.expr(f"{pred} AS predicted_lang")).agg(
+        F.expr("count(*) AS n_docs")
     )
 
 
@@ -380,15 +379,13 @@ FROM f
 def q_quality(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     feats = quality_features("text")
-    return d.select(
+    return d.selectExpr(
         "doc_id",
-        feats["n_chars"].alias("n_chars"),
-        feats["n_tokens"].alias("n_tokens"),
-        feats["mean_token_len"].alias("mean_token_len"),
-        feats["punct_ratio"].alias("punct_ratio"),
-        feats["lexical_diversity"].alias("lexical_diversity"),
-        feats["stopword_ratio"].alias("stopword_ratio"),
-        quality_score("text").alias("quality_score"),
+        *[f"{feats[c]} AS {c}" for c in (
+            "n_chars", "n_tokens", "mean_token_len", "punct_ratio",
+            "lexical_diversity", "stopword_ratio",
+        )],
+        f"{quality_score('text')} AS quality_score",
     )
 
 

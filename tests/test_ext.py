@@ -218,13 +218,13 @@ def test_ivf_partitioned_cells_prune_probe_reads(spark, sf_dir, tmp_path):
 def test_textstats_basics(docs):
     # language ID in the staged form text_lang_id runs: lowered tokens
     # once, then the per-language scores, then the argmax
-    staged = docs.select(
-        "doc_id", "text", F.transform(tokens("text"), F.lower).alias("__tl")
+    staged = docs.selectExpr(
+        "doc_id", "text", f"transform({tokens('text')}, x -> lower(x)) AS __tl"
     )
-    out = staged.select(
-        token_count("text").alias("n"),
-        lang_pred_from_scores(lang_scores_on_tokens(F.col("__tl"))).alias("lang"),
-        quality_score("text").alias("q"),
+    out = staged.selectExpr(
+        f"{token_count('text')} AS n",
+        f"{lang_pred_from_scores(lang_scores_on_tokens('__tl'))} AS lang",
+        f"{quality_score('text')} AS q",
     ).collect()
     assert all(r["n"] > 5 for r in out)
     assert out[0]["lang"] == "en"  # 'the' markers

@@ -613,18 +613,20 @@ def test_text_feature_kernels_equal_python(spark, texts):
 
     rows = list(enumerate(texts))
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    staged = df.select("doc_id", "text", F.transform(tokens("text"), F.lower).alias("__tl"))
+    staged = df.selectExpr(
+        "doc_id", "text", f"transform({tokens('text')}, x -> lower(x)) AS __tl"
+    )
     feats = quality_features("text")
     got = {
         r["doc_id"]: r
-        for r in staged.select(
+        for r in staged.selectExpr(
             "doc_id",
-            token_count("text").alias("tc"),
-            lang_pred_from_scores(lang_scores_on_tokens(F.col("__tl"))).alias("lang"),
-            fingerprint("text").alias("fp"),
-            feats["mean_token_len"].alias("mtl"),
-            feats["lexical_diversity"].alias("ld"),
-            feats["stopword_ratio"].alias("sr"),
+            f"{token_count('text')} AS tc",
+            f"{lang_pred_from_scores(lang_scores_on_tokens('__tl'))} AS lang",
+            f"{fingerprint('text')} AS fp",
+            f"{feats['mean_token_len']} AS mtl",
+            f"{feats['lexical_diversity']} AS ld",
+            f"{feats['stopword_ratio']} AS sr",
         ).collect()
     }
 

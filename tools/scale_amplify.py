@@ -130,9 +130,9 @@ def main() -> None:
     def lang_guess(d):
         """Language ID in text_lang_id's staged form: lowered tokens
         once, then the per-language scores, then the argmax."""
-        toks = d.select(F.transform(tokens("text"), F.lower).alias("__tl"))
-        return toks.select(
-            lang_pred_from_scores(lang_scores_on_tokens(F.col("__tl"))).alias("lang_guess")
+        toks = d.selectExpr(f"transform({tokens('text')}, x -> lower(x)) AS __tl")
+        return toks.selectExpr(
+            f"{lang_pred_from_scores(lang_scores_on_tokens('__tl'))} AS lang_guess"
         )
 
     base = tempfile.mkdtemp(prefix="p311_amplify_")
