@@ -14,12 +14,38 @@ row, sum and tombstone log of the stored indexes — is written through
 :func:`parquet_writer`; no other module outside ``plans/`` reads
 ``DataFrame.write`` (``tests/test_tools_imports.py`` enforces it).
 
-* **Codec.**  :data:`PARQUET_CODEC` (zstd) is a module constant, not a
-  parameter or a session conf: a conf would only reach the sessions
-  that set it, and the benchmark and ``__spark_entry__.py`` callers
-  bring their own.  Against Spark's default snappy, zstd cuts the
-  persisted bytes by a fifth to a quarter (SCALE.md, "Storage codec"),
-  and Spark, DuckDB and pyarrow all read it.
+* **Format.**  Every file is parquet with the same layout, fixed by
+  module constants rather than parameters or package confs: a conf
+  would only reach the sessions that set it, and the benchmark and
+  ``__spark_entry__.py`` callers bring their own.
+
+  - *Codec.*  :data:`PARQUET_CODEC` (zstd).  Against Spark's default
+    snappy it cuts the persisted bytes by a fifth to a quarter
+    (SCALE.md, "Storage codec").
+  - *Page version.*  :data:`PARQUET_WRITER_VERSION` (``v2``) data
+    pages: INT64 columns that leave the dictionary (unique keys,
+    timestamps) encode as ``DELTA_BINARY_PACKED``, strings as
+    ``DELTA_BYTE_ARRAY``, and dictionaries as ``RLE_DICTIONARY``.
+  - *Timestamp type.*  :data:`PARQUET_TIMESTAMP_TYPE`
+    (``TIMESTAMP_MICROS``): timestamps are physical INT64 with logical
+    type ``TIMESTAMP(MICROS)``, not Spark's default INT96, so they are
+    smaller and carry footer min/max statistics, which row-group
+    skipping on the ``updated_datetime`` watermark needs.  It cannot
+    be a write option: Spark's ``ParquetUtils.prepareWrite`` overwrites
+    the Hadoop key from the session's ``SQLConf``, so
+    ``.option("spark.sql.parquet.outputTimestampType", ...)`` still
+    writes INT96.  :func:`parquet_writer` therefore sets the session
+    conf itself, a constant and idempotent ``conf.set`` like the
+    ``nanosAsLong`` pin in ``sources/readers.load_table``.  It is
+    never restored after the write: ``ext/artifact.run_jobs`` writes
+    from pool threads, and a set-and-restore would race and make a
+    file's physical type depend on timing.
+
+  Spark, DuckDB 1.0 and pyarrow all read the files.  Spark reads a
+  table that mixes INT96 files written before this layout with INT64
+  ones as one column of identical values; DuckDB reads INT64
+  ``TIMESTAMP(MICROS)`` as ``TIMESTAMP WITH TIME ZONE`` (README,
+  "Storage format").
 * **Overwrite contract.**  The writer sets no save mode and no
   ``partitionOverwriteMode``; each call site keeps its own.  A
   partitioned ``overwrite`` follows the session's
@@ -39,13 +65,23 @@ from pyspark.sql import DataFrame, DataFrameWriter, Row
 
 #: Compression codec of every parquet file the package persists.
 PARQUET_CODEC = "zstd"
+#: Parquet data-page version of every file the package persists.
+PARQUET_WRITER_VERSION = "v2"
+#: Physical type of every timestamp column the package persists.
+PARQUET_TIMESTAMP_TYPE = "TIMESTAMP_MICROS"
 
 
 def parquet_writer(df: DataFrame) -> DataFrameWriter:
-    """The package's one parquet writer for ``df``: format and codec
-    set, save mode and partitioning left to the caller (see the module
-    docstring's overwrite contract)."""
-    return df.write.format("parquet").option("compression", PARQUET_CODEC)
+    """The package's one parquet writer for ``df``: format, codec, page
+    version and timestamp type set (the last on ``df``'s session, see
+    the module docstring), save mode and partitioning left to the
+    caller (see the overwrite contract)."""
+    df.sparkSession.conf.set("spark.sql.parquet.outputTimestampType", PARQUET_TIMESTAMP_TYPE)
+    return (
+        df.write.format("parquet")
+        .option("compression", PARQUET_CODEC)
+        .option("parquet.writer.version", PARQUET_WRITER_VERSION)
+    )
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:

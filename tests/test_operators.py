@@ -15,7 +15,7 @@ from pipeline311_spark.operators.merge import (
     merge_with_surrogate,
     upsert,
 )
-from pipeline311_spark.operators.reconcile import reconcile_deletes
+from pipeline311_spark.operators.reconcile import deleted_keys, reconcile_deletes
 from pipeline311_spark.sources.validate import (
     SchemaMismatch,
     assert_single_row_per_key,
@@ -117,6 +117,49 @@ def test_reconcile_deletes(spark):
     # prior tombstone for pk=2 replaced by freshly archived row; pk=9 kept
     trows = [(r["pk"], r["val"]) for r in state["tombstones"].collect()]
     assert sorted(trows) == [(2, "b"), (9, "z")]
+
+    # a source that repeats a live id and holds an id we never had, and
+    # an ``ours`` that repeats the dead id: same rows, no duplicates
+    noisy = spark.createDataFrame([(1,), (3,), (1,), (7,), (1,)], "pk long")
+    state = reconcile_deletes(raw, viewer, tombstones, noisy, "pk")
+    assert [r["pk"] for r in state["deleted"].collect()] == [2]
+    assert sorted((r["pk"], r["val"]) for r in state["tombstones"].collect()) == [(2, "b"), (9, "z")]
+    doubled = raw.unionByName(spark.createDataFrame([(2, "b")], "pk long, val string"))
+    assert [r["pk"] for r in deleted_keys(doubled, noisy, "pk").collect()] == [2]
+
+
+def test_reconcile_tombstones_write_one_file_per_sync(spark, tmp_path):
+    """Written with the package writer, a sync's archived rows are one
+    file; with prior tombstones, no file is empty."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from pipeline311_spark.sinks import writers
+
+    schema = "pk long, val string"
+    # a scan-partitioned ``raw`` whose dead ids sit in several partitions
+    raw = spark.createDataFrame([(k, f"v{k}") for k in range(40)], schema).repartition(4, "pk")
+    source = spark.createDataFrame([(k,) for k in range(40) if k % 5], "pk long")
+    archived = sorted((k, f"v{k}") for k in range(40) if k % 5 == 0)
+
+    def sync(prior_rows, name):
+        prior_path = str(tmp_path / f"{name}_prior")
+        writers.write_parquet(spark.createDataFrame(prior_rows, schema), prior_path)
+        state = reconcile_deletes(raw, raw, spark.read.parquet(prior_path), source, "pk")
+        out = str(tmp_path / name)
+        writers.write_parquet(state["tombstones"], out)
+        files = sorted(glob.glob(f"{out}/*.parquet"))
+        return [pq.ParquetFile(f).read().to_pylist() for f in files]
+
+    # first sync: the prior tombstones are one empty file
+    (only,) = sync([], "first")
+    assert sorted((r["pk"], r["val"]) for r in only) == archived
+
+    prior = [(100 + k, f"t{k}") for k in range(6)] + [(5, "stale")]
+    files = sync(prior, "later")
+    assert all(files), [len(f) for f in files]
+    assert sorted((r["pk"], r["val"]) for f in files for r in f) == sorted(archived + prior[:-1])
 
 
 def test_validate_and_guards(spark):
