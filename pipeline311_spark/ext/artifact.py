@@ -21,13 +21,17 @@ the BM25 postings set it, to ``term``).  Every row-log write — an
 appended batch and the compacted base alike (:func:`_write_rows`) —
 then hash-repartitions its rows on that key and sorts each task by
 ``(key, id)``.  Each file of a batch dir holds its own set of keys,
-in order, so the term dictionary and footer are written once instead
-of once per hash partition, and row-group min/max stats can skip by
-term.  The write has to do it: the rows are usually a persisted
-frame, and Spark runs a cached plan without AQE, so its shuffle
-partitions reach the writer as they are; only a write-time exchange
-coalesces them (AQE merges small hash buckets, so a small batch is
-one file).
+in order, so a term's postings sit in one file rather than one per
+hash partition, and row-group min/max stats can skip by term.  The
+write has to do it: the rows are usually a persisted frame, and Spark
+runs a cached plan without AQE, so its shuffle partitions reach the
+writer as they are; only a write-time exchange coalesces them (AQE
+merges small hash buckets, so a small batch is one file).  The sort
+columns are written without a dictionary (``sorted_by``,
+``sinks/writers.py``): sorted, ``term`` front-codes
+(``DELTA_BYTE_ARRAY``) and ``doc_id`` d-gaps (``DELTA_BINARY_PACKED``),
+which makes the benchmark's postings file about a fifth smaller than
+with dictionary pages.
 
 * **Append** (:func:`admit_append`, then :func:`append_rows`).  The
   guard runs, in order: crash-swap recovery of every log dir
@@ -144,8 +148,8 @@ class SumLog(NamedTuple):
 
 def run_jobs(*thunks: Callable[[], None]) -> None:
     """Run INDEPENDENT Spark actions concurrently from driver threads
-    (guide §2.6: actions are sequential only because driver code calls
-    them sequentially; overlapping them lets the next job's tasks
+    (actions are sequential only because driver code calls them
+    sequentially; overlapping them lets the next job's tasks
     back-fill executors freed by the current job's stragglers, and —
     the dominant effect for this engine's metadata-scale artifact
     writes — overlaps their fixed per-action driver cost: plan
@@ -158,8 +162,8 @@ def run_jobs(*thunks: Callable[[], None]) -> None:
     under a block write lock (one job's task computes, the others
     block then read the cached block), so the fill happens exactly
     once while the jobs' fixed per-action costs overlap (measured
-    1.15 s -> 0.87 s for the BM25 append triple at sf0.1, round 11 —
-    the first cut sequenced the filler out of caution).  Exceptions:
+    1.15 s -> 0.87 s for the BM25 append triple at sf0.1; sequencing
+    the filler first is not needed).  Exceptions:
     every thunk runs to completion, then the first failure re-raises —
     so a surrounding :func:`write_intent` keeps its marker exactly
     when some write did not commit cleanly."""
@@ -185,24 +189,30 @@ def run_jobs(*thunks: Callable[[], None]) -> None:
 
 
 def write_batch_partition(
-    df: DataFrame, path: str, batch_id: int, partition_by: tuple[str, ...] = ()
+    df: DataFrame,
+    path: str,
+    batch_id: int,
+    partition_by: tuple[str, ...] = (),
+    sorted_by: tuple[str, ...] = (),
 ) -> None:
     """Write one batch's rows straight into their Hive-style partition
     directory (``path/batch_id=<n>``, plain ``overwrite``) instead of a
     dynamic-partition-overwrite ``partitionBy`` write of a constant
-    ``batch_id`` column (round 11, guide §6/§7.3: the dynamic committer
-    stages, enumerates and moves partition dirs per write — pure
-    commit-protocol overhead when the partition value is a literal the
-    caller already knows; measured ~0.1 s of the ~0.45 s wall of a
-    one-partition artifact write at sf0.1, and at scale it is driver-
-    side work that grows with partition count).
+    ``batch_id`` column (the dynamic committer stages, enumerates and
+    moves partition dirs per write — pure commit-protocol overhead when
+    the partition value is a literal the caller already knows; measured
+    ~0.1 s of the ~0.45 s wall of a one-partition artifact write at
+    sf0.1, and at scale it is driver-side work that grows with
+    partition count).
 
     Read-back identical: :func:`read_log`'s explicit schema fills
     ``batch_id`` from the directory name (the column must NOT be in
     ``df``), and nested ``partition_by`` levels are laid out exactly as
     ``partitionBy("batch_id", *partition_by)`` would.  An all-empty
     batch leaves an empty ``batch_id=<n>`` dir, which reads as zero
-    rows.
+    rows.  ``sorted_by`` names the columns each task's rows are sorted
+    by; they are written without a dictionary
+    (:func:`~pipeline311_spark.sinks.writers.write_parquet`).
 
     Crash window: plain ``overwrite`` deletes the existing
     ``batch_id=<n>`` dir at job start, so a crash mid-replay leaves the
@@ -216,7 +226,10 @@ def write_batch_partition(
             "directory name provides it at read time"
         )
     write_parquet(
-        df, os.path.join(path, f"batch_id={int(batch_id)}"), partition_by=list(partition_by)
+        df,
+        os.path.join(path, f"batch_id={int(batch_id)}"),
+        partition_by=list(partition_by),
+        sorted_by=sorted_by,
     )
 
 
@@ -501,7 +514,6 @@ def compact_swap(path: str, write_staging: Callable[[str], None]) -> None:
     if os.path.isdir(path):
         # stale .old from a crash after a previous swap's live rename:
         # live is authoritative, renaming onto a non-empty dir raises
-        # (ADVICE r8)
         shutil.rmtree(old, ignore_errors=True)
         os.rename(path, old)
     os.rename(staging, path)
@@ -545,12 +557,15 @@ def _write_rows(rows: DataFrame, path: str, batch_id: int, log: RowLog) -> None:
     a clustered log is hash-repartitioned on ``cluster_by`` and sorted
     within each task by ``(*partition_by, *cluster_by, id_field)``
     (module note; the partition columns lead so the writer's own
-    per-partition sort is already satisfied)."""
+    per-partition sort is already satisfied), and the file columns of
+    that sort are written without a dictionary."""
+    sorted_by: tuple[str, ...] = ()
     if log.cluster_by:
+        sorted_by = (*log.cluster_by, log.id_field)
         rows = rows.repartition(*log.cluster_by).sortWithinPartitions(
-            *log.partition_by, *log.cluster_by, log.id_field
+            *log.partition_by, *sorted_by
         )
-    write_batch_partition(rows, path, batch_id, log.partition_by)
+    write_batch_partition(rows, path, batch_id, log.partition_by, sorted_by)
 
 
 def _sum_writes(

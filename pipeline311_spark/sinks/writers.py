@@ -40,6 +40,18 @@ row, sum and tombstone log of the stored indexes — is written through
     never restored after the write: ``ext/artifact.run_jobs`` writes
     from pool threads, and a set-and-restore would race and make a
     file's physical type depend on timing.
+  - *Sorted columns.*  The columns a caller says each task's rows are
+    sorted by (``write_parquet(sorted_by=...)``; today the BM25
+    postings' ``(term, doc_id)``, from ``ext/artifact._write_rows``)
+    are written without a dictionary, so the v2 pages front-code a
+    sorted string column (``DELTA_BYTE_ARRAY``) and d-gap a sorted
+    integer column (``DELTA_BINARY_PACKED``).  On the benchmark's
+    postings file that is about a fifth fewer bytes than
+    ``RLE_DICTIONARY`` (SCALE.md, "Postings encoding").  It is not a
+    knob: it states how the rows are laid out, which only the code
+    that sorted them knows, and every other column keeps the default
+    (a dictionary that falls back to a delta encoding when it does not
+    pay).
 
   Spark, DuckDB 1.0 and pyarrow all read the files.  Spark reads a
   table that mixes INT96 files written before this layout with INT64
@@ -59,7 +71,7 @@ row, sum and tombstone log of the stored indexes — is written through
 from __future__ import annotations
 
 import time
-from typing import Callable, Iterable
+from typing import Callable, Iterable, Sequence
 
 from pyspark.sql import DataFrame, DataFrameWriter, Row
 
@@ -84,8 +96,20 @@ def parquet_writer(df: DataFrame) -> DataFrameWriter:
     )
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
+def write_parquet(
+    df: DataFrame,
+    path: str,
+    mode: str = "overwrite",
+    partition_by: list[str] | None = None,
+    sorted_by: Sequence[str] = (),
+) -> None:
+    """Write ``df`` to ``path`` through :func:`parquet_writer`.
+    ``sorted_by`` names the columns each task's rows are sorted by (a
+    fact about ``df``, see "Sorted columns" in the module note); they
+    are written without a dictionary."""
     w = parquet_writer(df).mode(mode)
+    for col in sorted_by:
+        w = w.option(f"parquet.enable.dictionary#{col}", "false")
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.save(path)

@@ -1,8 +1,8 @@
 """Every persisted table is written by the one parquet writer
 (``sinks/writers.py``) in its format (codec, v2 data pages, INT64
-``TIMESTAMP(MICROS)`` timestamps), and what it writes reads back the
-same in DuckDB as in Spark, also in a warehouse whose older files hold
-INT96 timestamps."""
+``TIMESTAMP(MICROS)`` timestamps, no dictionary on the columns a file
+is sorted by), and what it writes reads back the same in DuckDB as in
+Spark, also in a warehouse whose older files hold INT96 timestamps."""
 
 from __future__ import annotations
 
@@ -124,7 +124,8 @@ def _timestamp_layouts(root, ts_cols):
 def test_storage_contract_int64_micros_timestamps_and_v2_pages(spark, tmp_path):
     """Bronze (first batch and partitioned MERGE) and the BM25 logs:
     every timestamp column is INT64 ``TIMESTAMP(MICROS)`` with min/max
-    statistics, and the data pages are v2."""
+    statistics, the data pages are v2, and each postings column has
+    exactly its encodings (:data:`POSTINGS_ENCODINGS`)."""
     from pyspark.sql.types import TimestampType
 
     from pipeline311_spark.ext.retrieval import bm25_index_append_batch
@@ -160,7 +161,8 @@ def test_storage_contract_int64_micros_timestamps_and_v2_pages(spark, tmp_path):
     idx = str(tmp_path / "bm25")
     docs = spark.createDataFrame([(i, f"spark merge join w{i % 7}") for i in range(40)], "doc_id long, text string")
     bm25_index_append_batch(docs, 0, idx)
-    chunks = _chunks(idx)
+    assert _postings_encodings(idx) == {"batch_id=0": POSTINGS_ENCODINGS}
+    chunks = [c for c in _chunks(idx) if "/postings/" not in c[0]]
     assert chunks
     for f, col, chunk, _ in chunks:
         # v1 pages write dictionaries as PLAIN_DICTIONARY and fall back to
@@ -168,6 +170,92 @@ def test_storage_contract_int64_micros_timestamps_and_v2_pages(spark, tmp_path):
         assert "PLAIN_DICTIONARY" not in chunk.encodings, (f, col, chunk.encodings)
         assert set(chunk.encodings) & {"RLE_DICTIONARY", "DELTA_BINARY_PACKED", "DELTA_BYTE_ARRAY"}, (
             f, col, chunk.encodings)
+
+
+#: The encodings of every postings column chunk: the two columns each
+#: file is sorted by are written without a dictionary, so ``term`` is
+#: front-coded and ``doc_id`` d-gapped; ``tf`` and ``dl`` keep the
+#: dictionary (its page is ``PLAIN``).
+POSTINGS_ENCODINGS = {
+    "term": {"DELTA_BYTE_ARRAY"},
+    "doc_id": {"DELTA_BINARY_PACKED"},
+    "tf": {"PLAIN", "RLE_DICTIONARY"},
+    "dl": {"PLAIN", "RLE_DICTIONARY"},
+}
+
+
+def _postings_encodings(idx):
+    """{batch dir: {column: set of encodings}} over every postings file
+    of the BM25 index at ``idx``; a column whose chunks disagree maps
+    to the union, so it fails an exact comparison."""
+    out = {}
+    for f, col, chunk, _ in _chunks(os.path.join(idx, "postings")):
+        out.setdefault(os.path.basename(os.path.dirname(f)), {}).setdefault(col, set()).update(
+            chunk.encodings)
+    return out
+
+
+def test_compacted_bm25_base_keeps_postings_encodings_and_rows(spark, tmp_path):
+    """Compacting a two-batch BM25 index with one delete writes a
+    ``-1`` base in the same postings layout, serves the same rows and
+    top-k as before, and pyarrow and DuckDB read the base's postings
+    as Spark serves them."""
+    import duckdb
+
+    from pipeline311_spark.ext.retrieval import (
+        bm25_index_append_batch,
+        bm25_index_compact,
+        bm25_index_delete_batch,
+        bm25_topk,
+        load_bm25_index,
+    )
+
+    docs = "doc_id long, text string"
+    words = ["spark", "merge", "join", "vector", "customer", "ledger", "watermark"]
+    first = [(i, " ".join(words[j % 7] for j in range(i, i + 1 + i % 5))) for i in range(30)]
+    second = [(100 + i, f"{words[i % 7]} merge t{i % 4}") for i in range(20)]
+    idx = str(tmp_path / "bm25")
+    bm25_index_append_batch(spark.createDataFrame(first, docs), 0, idx)
+    bm25_index_append_batch(spark.createDataFrame(second, docs), 1, idx)
+    bm25_index_delete_batch(spark.createDataFrame([r for r in first if r[0] % 6 == 0], docs), 0, idx)
+
+    queries = spark.createDataFrame(
+        [(q, t) for q, terms in enumerate([["spark", "merge"], ["vector"], ["t1", "ledger"]]) for t in terms],
+        "query_id long, term string",
+    )
+
+    def serve():
+        index = load_bm25_index(spark, idx)
+        return (
+            sorted(map(tuple, index.postings.collect())),
+            index.n_docs,
+            index.sum_dl,
+            sorted(map(tuple, bm25_topk(index, queries, k=5).collect())),
+        )
+
+    before = serve()
+    assert _postings_encodings(idx) == {"batch_id=0": POSTINGS_ENCODINGS, "batch_id=1": POSTINGS_ENCODINGS}
+    bm25_index_compact(spark, idx)
+    assert serve() == before
+    assert _postings_encodings(idx) == {"batch_id=-1": POSTINGS_ENCODINGS}
+
+    postings = before[0]
+    assert postings and not {r[1] for r in postings} & {r[0] for r in first if r[0] % 6 == 0}
+    base = os.path.join(idx, "postings", "batch_id=-1")
+    files = sorted(glob.glob(os.path.join(base, "*.parquet")))
+    cols = ["term", "doc_id", "tf", "dl"]
+    got_arrow = sorted(
+        row for f in files for row in zip(*pq.read_table(f, columns=cols).to_pydict().values())
+    )
+    assert got_arrow == postings
+    con = duckdb.connect()
+    try:
+        got_duck = sorted(
+            con.execute(f"SELECT {', '.join(cols)} FROM read_parquet('{base}/*.parquet')").fetchall()
+        )
+    finally:
+        con.close()
+    assert got_duck == postings
 
 
 def test_merge_into_int96_warehouse_keeps_values(spark, tmp_path):
